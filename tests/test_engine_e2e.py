@@ -159,3 +159,33 @@ def test_shuffle_parts_byte_invariant(spark, feats):
     got = {(r["zoom"], r["x"], r["y"]): (r["tile_md5"], bytes(r["tile"]))
            for r in packed.collect()}
     assert got == base
+
+
+def test_fused_encode_matches_two_shuffle(spark, feats):
+    """build_tiles takes the one-shuffle encode_assemble_fused whenever
+    minzoom > salt_zoom_max. On salt-free (z >= 5) pieces it must give
+    exactly the tiles of the salted two-shuffle path,
+    assemble_tiles(encode_layers(pieces))."""
+    from pyspark.sql import functions as F
+    from tileigi_spark.engine import (_prop_columns, assemble_tiles,
+                                      cover_metatiles, encode_assemble_fused,
+                                      encode_layers, geometry_stage,
+                                      with_bbox)
+
+    src = with_bbox(feats)
+    per_layer, prop_types = [], {}
+    for order, (layer_id, buffer) in enumerate((("base", 2), ("tight", 0))):
+        pieces = geometry_stage(cover_metatiles(src, [5, 6], buffer),
+                                layer_id, buffer, 14)
+        per_layer.append(pieces.withColumn("layer", F.lit(layer_id))
+                         .withColumn("layer_order", F.lit(order)))
+        prop_types[layer_id] = dict(_prop_columns(feats))
+    pieces = per_layer[0].unionByName(per_layer[1])
+
+    def tiles(df):
+        return sorted((r["zoom"], r["x"], r["y"], r["tile_md5"])
+                      for r in df.collect())
+
+    fused = tiles(encode_assemble_fused(pieces, prop_types))
+    assert fused and {z for z, _, _, _ in fused} == {5, 6}
+    assert fused == tiles(assemble_tiles(encode_layers(pieces, prop_types)))

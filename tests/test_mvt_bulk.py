@@ -1,17 +1,20 @@
-"""Byte parity of the vectorized point-feature framer vs the per-row
-LayerEncoder path (the partial-encode hot loop). The bulk path must
-produce bit-identical layer messages — including key/value table order —
-because golden-tile fixtures and the 1-vs-13-partition determinism
-contract pin exact bytes."""
+"""Byte parity of the bulk encode tiers vs the per-row LayerEncoder path
+(the partial-encode hot loop): the vectorized point-feature framer, and
+the many-groups-at-once group encoder over both bulk framers (points,
+and boxes / quads / short lines through the ragged framer). The bulk
+paths must produce bit-identical layer messages — including key/value
+table order — because golden-tile fixtures and the 1-vs-13-partition
+determinism contract pin exact bytes."""
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql.types import (BooleanType, DoubleType, FloatType, LongType,
                                StringType)
 
-from tileigi_spark.engine import _bulk_point_tags, _mvt_value
-from tileigi_spark.geom import mvt
+from tileigi_spark.engine import (_bulk_encode_groups, _bulk_point_tags,
+                                  _mvt_value)
+from tileigi_spark.geom import mvt, ringbulk
+from tileigi_spark.geom.wkb import geom_to_wkb
 
 
 def perrow_encoder(rows, ptypes):
@@ -32,19 +35,26 @@ def bulk_encoder(rows, ptypes):
                                    use_na_sentinel=True)
         cols.append((p, t, codes, np.asarray(uniq)))
     tags = _bulk_point_tags(enc, cols)
-    framed = mvt.bulk_frame_point_features(xs, ys, tags)
-    assert framed is not None
+    res = mvt.bulk_frame_point_features(xs, ys, tags)
+    assert res is not None
+    framed, rowlen = res
     enc.add_framed_features(framed)
-    return enc
+    return enc, rowlen
 
 
 def assert_parity(rows, ptypes):
     a = perrow_encoder(rows, ptypes)
-    b = bulk_encoder(rows, ptypes)
+    b, rowlen = bulk_encoder(rows, ptypes)
     assert a.keys == b.keys
     assert a.values == b.values
     assert b"".join(a.features) == b"".join(b.features)
     assert a.to_bytes() == b.to_bytes()
+    # per-feature frame lengths slice the stream exactly as the per-row
+    # frames fell out (the group-splitting contract of both framers)
+    cum = np.concatenate(([0], np.cumsum(rowlen)))
+    assert len(rowlen) == len(a.features)
+    for i, f in enumerate(a.features):
+        assert b.features[0][cum[i]:cum[i + 1]] == f
 
 
 def test_single_string_prop():
@@ -126,21 +136,25 @@ def groups_perrow(groups, prop, ptype):
     return parts
 
 
-def groups_bulk(groups, prop, ptype):
-    from tileigi_spark.engine import _bulk_encode_point_groups
-    xs = np.array([r[0] for g in groups for r in g], dtype=np.int64)
-    ys = np.array([r[1] for g in groups for r in g], dtype=np.int64)
+def encode_groups(groups, values, prop, ptype, framer, args):
+    """_bulk_encode_groups over `groups` (lists of rows) whose per-row
+    property values are `values` (flat, in row order)."""
     if prop is None:
         codes = uniq = None
     else:
-        codes, uniq = pd.factorize(
-            pd.Series([r[2] for g in groups for r in g]),
-            use_na_sentinel=True)
+        codes, uniq = pd.factorize(pd.Series(values), use_na_sentinel=True)
         uniq = np.asarray(uniq)
     seg_starts = np.cumsum([0] + [len(g) for g in groups[:-1]]) \
         .astype(np.int64)
-    return _bulk_encode_point_groups("l", prop, ptype, xs, ys, codes,
-                                     uniq, seg_starts)
+    return _bulk_encode_groups("l", prop, ptype, framer, args, codes,
+                               uniq, seg_starts)
+
+
+def groups_bulk(groups, prop, ptype):
+    xs = np.array([r[0] for g in groups for r in g], dtype=np.int64)
+    ys = np.array([r[1] for g in groups for r in g], dtype=np.int64)
+    return encode_groups(groups, [r[2] for g in groups for r in g], prop,
+                         ptype, mvt.bulk_frame_point_features, (xs, ys))
 
 
 def assert_groups_parity(groups, prop, ptype):
@@ -190,13 +204,12 @@ def test_group_batch_randomized():
 
 def test_width_overflow_falls_back():
     # zigzag >= 2^21 exceeds the 3-byte budget -> framer refuses
-    enc = mvt.LayerEncoder("l")
     xs = np.array([1 << 21], dtype=np.int64)
     ys = np.array([0], dtype=np.int64)
     assert mvt.bulk_frame_point_features(xs, ys, []) is None
 
 
-# ------------------------------------------------- ring4 polygon framer
+# ------------------------------- boxes and quads via the ragged framer
 
 def _rand_ring(rng):
     x0, x1 = sorted(int(v) for v in rng.integers(-64, 4161, 2))
@@ -222,23 +235,23 @@ def ring_groups_perrow(groups, prop, ptype):
     return parts
 
 
-def ring_groups_bulk(groups, prop, ptype):
-    from tileigi_spark.engine import _bulk_encode_point_groups
-    X = np.array([[p[0] for p in r[0]] for g in groups for r in g],
-                 dtype=np.int64)
-    Y = np.array([[p[1] for p in r[0]] for g in groups for r in g],
-                 dtype=np.int64)
-    if prop is None:
-        codes = uniq = None
+def ragged_groups_bulk(groups, prop, ptype, geom_type):
+    """Rows (pts, value) built as WKB (closed rings for Polygon), parsed
+    by ringbulk and framed by the ragged framer — the walk's path for
+    boxes and short lines."""
+    flat = [r for g in groups for r in g]
+    geoms = np.empty(len(flat), dtype=object)
+    if geom_type == "Polygon":
+        geoms[:] = [geom_to_wkb(("Polygon", [pts + [pts[0]]]))
+                    for pts, _ in flat]
+        parsed, gtype = ringbulk.parse_poly_family(geoms), 3
     else:
-        codes, uniq = pd.factorize(
-            pd.Series([r[1] for g in groups for r in g]),
-            use_na_sentinel=True)
-        uniq = np.asarray(uniq)
-    seg_starts = np.cumsum([0] + [len(g) for g in groups[:-1]]) \
-        .astype(np.int64)
-    return _bulk_encode_point_groups("l", prop, ptype, X, Y, codes,
-                                     uniq, seg_starts, kind="ring4")
+        geoms[:] = [geom_to_wkb(("LineString", pts)) for pts, _ in flat]
+        parsed, gtype = ringbulk.parse_line_family(geoms), 2
+    assert parsed is not None
+    return encode_groups(groups, [r[1] for r in flat], prop, ptype,
+                         ringbulk.bulk_frame_ragged_features,
+                         (*parsed, gtype))
 
 
 def test_ring4_group_batch_parity():
@@ -252,17 +265,17 @@ def test_ring4_group_batch_parity():
             groups.append([
                 (_rand_ring(rng), vals[int(rng.integers(0, len(vals)))])
                 for _ in range(k)])
-        assert ring_groups_bulk(groups, "kind", StringType()) == \
+        assert ragged_groups_bulk(groups, "kind", StringType(),
+                                  "Polygon") == \
             ring_groups_perrow(groups, "kind", StringType())
     # no-prop variant
     groups = [[(_rand_ring(rng), None) for _ in range(5)] for _ in range(6)]
-    assert ring_groups_bulk(groups, None, None) == \
+    assert ragged_groups_bulk(groups, None, None, "Polygon") == \
         ring_groups_perrow(groups, None, None)
 
 
 def test_ring5_wkb_detector():
     from tileigi_spark.engine import _is_ring5_polygon_wkb
-    from tileigi_spark.geom.wkb import geom_to_wkb
 
     ring = [(0, 0), (10, 0), (10, 7), (0, 7), (0, 0)]
     assert _is_ring5_polygon_wkb(geom_to_wkb(("Polygon", [ring])))
@@ -278,7 +291,7 @@ def test_ring5_wkb_detector():
     assert not _is_ring5_polygon_wkb(geom_to_wkb(("Point", (1, 2))))
 
 
-# --------------------------------------------------- line framer
+# ------------------------------- short lines via the ragged framer
 
 def _rand_line(rng):
     k = int(rng.choice([2, 2, 2, 3, 3, 4]))
@@ -297,31 +310,6 @@ def line_groups_perrow(groups, prop, ptype):
     return parts
 
 
-def line_groups_bulk(groups, prop, ptype):
-    from tileigi_spark.engine import _bulk_encode_point_groups
-    flat = [r for g in groups for r in g]
-    n = len(flat)
-    X = np.zeros((n, 4), dtype=np.int64)
-    Y = np.zeros((n, 4), dtype=np.int64)
-    K = np.zeros(n, dtype=np.int64)
-    for i, (pts, _) in enumerate(flat):
-        K[i] = len(pts)
-        for j, (x, y) in enumerate(pts):
-            X[i, j] = x
-            Y[i, j] = y
-    if prop is None:
-        codes = uniq = None
-    else:
-        codes, uniq = pd.factorize(pd.Series([r[1] for r in flat]),
-                                   use_na_sentinel=True)
-        uniq = np.asarray(uniq)
-    seg_starts = np.cumsum([0] + [len(g) for g in groups[:-1]]) \
-        .astype(np.int64)
-    return _bulk_encode_point_groups("l", prop, ptype, X, Y, codes,
-                                     uniq, seg_starts, kind="line",
-                                     counts=K)
-
-
 def test_line_group_batch_parity():
     from pyspark.sql.types import StringType
     rng = np.random.default_rng(13)
@@ -333,17 +321,17 @@ def test_line_group_batch_parity():
             groups.append([
                 (_rand_line(rng), vals[int(rng.integers(0, len(vals)))])
                 for _ in range(k)])
-        assert line_groups_bulk(groups, "kind", StringType()) == \
+        assert ragged_groups_bulk(groups, "kind", StringType(),
+                                  "LineString") == \
             line_groups_perrow(groups, "kind", StringType())
     groups = [[(_rand_line(rng), None) for _ in range(5)]
               for _ in range(6)]
-    assert line_groups_bulk(groups, None, None) == \
+    assert ragged_groups_bulk(groups, None, None, "LineString") == \
         line_groups_perrow(groups, None, None)
 
 
 def test_short_line_wkb_detector():
     from tileigi_spark.engine import _is_short_line_wkb
-    from tileigi_spark.geom.wkb import geom_to_wkb
 
     assert _is_short_line_wkb(geom_to_wkb(("LineString", [(0, 0), (5, 7)])))
     assert _is_short_line_wkb(

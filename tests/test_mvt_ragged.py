@@ -341,3 +341,112 @@ def test_encode_layers_ragged_end_to_end(spark):
                 props["rank"] = int(rank)
             enc.add_feature(geom, props)
         assert got1[key] == enc.to_bytes(), f"bytes differ for {key}"
+
+
+# --------------------------------------- walk-level fallback to per-row
+
+def _star(cx, cy, k):
+    """Closed k-vertex star ring with alternating radii: every delta is
+    a 2-byte varint, so k = 4400 frames a feature body >= 2^14 bytes,
+    past the ragged framer's width bound."""
+    pts = [(cx + int((1900 if j % 2 else 200) * np.cos(2 * np.pi * j / k)),
+            cy + int((1900 if j % 2 else 200) * np.sin(2 * np.pi * j / k)))
+           for j in range(k)]
+    return pts + [pts[0]]
+
+
+def _walk_and_expected(groups):
+    """Run _make_encode_run over one Arrow batch of `groups` (one tile
+    each: lists of (wkb, lang)) and build the per-row LayerEncoder
+    parts the walk must reproduce."""
+    from tileigi_spark.engine import _make_encode_run
+
+    rows = [(7, 100 + t, 200, fid, w, lang)
+            for t, g in enumerate(groups)
+            for fid, (w, lang) in enumerate(g)]
+    pdf = pd.DataFrame(rows, columns=["zoom", "x", "y", "feature_id",
+                                      "geom", "lang"])
+    pdf["salt"] = 0
+    pdf["layer_order"] = 0
+    pdf["layer"] = "l"
+    run = _make_encode_run({"l": {"lang": StringType()}}, ["lang"])
+    got = {}
+    for out in run(iter([pdf])):
+        for r in out.itertuples():
+            key = (r.zoom, r.x, r.y)
+            assert key not in got, "unexpected split partial"
+            got[key] = bytes(r.part)
+    expected = {}
+    for t, g in enumerate(groups):
+        enc = mvt.LayerEncoder("l")
+        for w, lang in g:
+            props = {} if lang is None else {"lang": lang}
+            enc.add_feature(_int_geom(wkb_to_geom(w)), props)
+        expected[(7, 100 + t, 200)] = enc.to_bytes()
+    return got, expected
+
+
+def _spy_ragged(monkeypatch):
+    """Record (features framed, refused) for every ragged framer call."""
+    from tileigi_spark.geom import ringbulk
+
+    calls = []
+    real = ringbulk.bulk_frame_ragged_features
+
+    def spy(xs, ys, ring_off, feat_off, gtype, prop_tags):
+        res = real(xs, ys, ring_off, feat_off, gtype, prop_tags)
+        calls.append((len(feat_off) - 1, res is None))
+        return res
+
+    monkeypatch.setattr(ringbulk, "bulk_frame_ragged_features", spy)
+    return calls
+
+
+def _poly_group(seed, big=False):
+    rng = np.random.default_rng(seed)
+    g = [(wkb_polygon([ring(int(rng.integers(100, 4000)),
+                            int(rng.integers(100, 4000)),
+                            int(rng.integers(5, 90)),
+                            int(rng.integers(3, 12)))]),
+          ["en", "de", None][i % 3]) for i in range(9)]
+    if big:
+        g[4] = (wkb_polygon([_star(2000, 2000, 4400)]), "big")
+    return g
+
+
+def test_oversized_body_is_refused_by_the_framer():
+    # precondition of the two walk tests below: the star alone is
+    # refused, a group without it is framed
+    geoms = np.empty(1, dtype=object)
+    geoms[:] = [wkb_polygon([_star(2000, 2000, 4400)])]
+    assert bulk_frame_ragged_features(*parse_poly_family(geoms), 3,
+                                      []) is None
+    small = np.empty(9, dtype=object)
+    small[:] = [w for w, _ in _poly_group(1)]
+    assert bulk_frame_ragged_features(*parse_poly_family(small), 3,
+                                      []) is not None
+
+
+def test_walk_falls_back_per_segment(monkeypatch):
+    """Fewer than 3 groups in the batch: each run of >= 8 polygons goes
+    to the ragged framer on its own; the run holding the oversized
+    polygon is refused and must be encoded per-row, byte-identical."""
+    calls = _spy_ragged(monkeypatch)
+    got, expected = _walk_and_expected([_poly_group(1, big=True),
+                                        _poly_group(2)])
+    assert calls == [(9, True), (9, False)]
+    assert got == expected
+
+
+def test_walk_falls_back_batch_wide(monkeypatch):
+    """>= 3 groups: the batch-wide pass frames the complete middle
+    groups in one call; the oversized polygon in a middle group makes it
+    refuse, and the walk must drop to per-segment framing (and per-row
+    for that group) with bytes identical to a per-row walk."""
+    calls = _spy_ragged(monkeypatch)
+    got, expected = _walk_and_expected([_poly_group(1),
+                                        _poly_group(2, big=True),
+                                        _poly_group(3), _poly_group(4)])
+    assert calls == [(18, True), (9, False), (9, True), (9, False),
+                     (9, False)]
+    assert got == expected

@@ -387,7 +387,9 @@ _LINE_HEADERS = {41: bytes([1, 2, 0, 0, 0, 2, 0, 0, 0]),
 
 def _is_short_line_wkb(w) -> bool:
     """Single LineString WKB with 2-4 points (41/57/73 bytes) — the
-    shape of ~94% of clipped polyline pieces."""
+    shape of ~94% of clipped polyline pieces. A classifier only: the
+    encode walk frames these with the ragged line framer like any other
+    linestring; the offline kernel probes use it to bucket pieces."""
     if w is None:
         return False
     h = _LINE_HEADERS.get(len(w))
@@ -398,14 +400,23 @@ def _is_ring5_geom_wkb(w) -> bool:
     """_is_ring5_polygon_wkb, or its MultiPolygon-of-one twin (102
     bytes — what make_valid emits for repaired-winding rects). Both
     produce the identical MVT command stream (MVT has one POLYGON type;
-    a single-member MultiPolygon frames exactly like the Polygon), so
-    the bulk encoder accepts either."""
+    a single-member MultiPolygon frames exactly like the Polygon). A
+    classifier only: the encode walk frames these boxes with the ragged
+    polygon framer like any other polygon; the offline kernel probes use
+    it to bucket pieces."""
     if w is None:
         return False
     if len(w) == 93:
         return w[:13] == _RING5_HEADER and w[13:29] == w[77:93]
     return (len(w) == 102 and w[:22] == _RING5_MULTI_HEADER
             and w[22:38] == w[86:102])
+
+
+# Python-bound stages (the narrow geometry pass and the encode/assemble
+# exchanges) run ~2 tasks per core: each mapInPandas task carries tens
+# of ms of fixed Arrow/worker cost, and 2/core keeps the straggler tail
+# at half a wave (see _python_stage_parts for the measurements).
+_TASKS_PER_CORE = 2
 
 
 # cache-resident slice size for the rect lane, same lever as the ragged
@@ -554,12 +565,8 @@ def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
     # no shuffle — and a no-op when the scan already has fewer splits;
     # larger inputs get proportionally larger (not more) tasks, which
     # is the right direction for a Python-bound stage.
-    try:
-        cores = covered.sparkSession.sparkContext.defaultParallelism
-        per_core = float(os.environ.get("TILEIGI_GEOM_PARTS_PER_CORE", "2"))
-        covered = covered.coalesce(max(1, int(cores * per_core)))
-    except Exception:
-        pass
+    cores = covered.sparkSession.sparkContext.defaultParallelism
+    covered = covered.coalesce(max(1, cores * _TASKS_PER_CORE))
     props = _prop_columns(covered,
                           exclude=("way", "feature_id", "zoom", "mtx", "mty",
                                    "xmin", "ymin", "xmax", "ymax"))
@@ -635,8 +642,8 @@ def _bulk_point_tags(enc, cols):
 
     cols: list of (prop_name, spark_type, codes int64, uniques) from a
     per-batch pd.factorize, sliced to the run. Returns prop_tags for
-    mvt.bulk_frame_point_features (columns with no valid value omitted,
-    matching the per-row path which never visits them).
+    either bulk framer (columns with no valid value omitted, matching
+    the per-row path which never visits them).
     """
     pend = []
     for j, (p, t, codes, uniques) in enumerate(cols):
@@ -662,55 +669,43 @@ def _bulk_point_tags(enc, cols):
     return prop_tags
 
 
-def _bulk_encode_point_groups(layer_name, prop, ptype, xs, ys,
-                              codes, uniques, seg_starts, kind="point",
-                              counts=None):
+def _bulk_encode_groups(layer_name, prop, ptype, framer, args,
+                        codes, uniques, seg_starts):
     """Encode MANY complete single-shape groups of one layer in one
-    vectorized pass (zero or one property column). kind="point": xs/ys
-    are int64 coord vectors; kind="ring4": xs/ys are (n, 4) int64 ring
-    corner matrices (closed 5-point polygons, closing point dropped);
-    kind="line": xs/ys are (n, 4) padded point matrices with counts
-    (n,) in [2, 4]. Returns the list of finished layer-message bytes,
-    one per group (seg_starts order), or None when a varint-width bound
-    is exceeded (caller falls back).
+    vectorized pass (zero or one property column). framer(*args,
+    prop_tags) is one of the two bulk framers —
+    mvt.bulk_frame_point_features with args (xs, ys), or
+    ringbulk.bulk_frame_ragged_features with args (xs, ys, ring_off,
+    feat_off, gtype) — and returns (stream, per-feature frame lengths)
+    or None. Returns the list of finished layer-message bytes, one per
+    group (seg_starts order), or None when the framer refuses (caller
+    falls back).
 
     Per-group LayerEncoder work is ~100µs of interpreter/numpy-call
     overhead; at z10 the bench has 650k groups of ~16 features, so the
     per-group constant dominates the encode stage. This path computes
     group-local value-table ranks for the whole batch with one
-    unique/lexsort, frames every feature through the shared byte-matrix
-    writer, then assembles each group's message from slices — O(rows)
-    vectorized + O(groups) cheap joins. Bytes are identical to the
-    per-row LayerEncoder output (pinned by tests/test_mvt_bulk.py and
-    the golden-tile fixtures).
+    unique/lexsort, frames every feature in one framer call, then
+    assembles each group's message from slices — O(rows) vectorized +
+    O(groups) cheap joins. Bytes are identical to the per-row
+    LayerEncoder output (pinned by tests/test_mvt_bulk.py and the
+    golden-tile fixtures).
 
-    xs, ys: int64 tile-local coords for all rows of all groups.
     codes/uniques: pd.factorize of the property column over these rows
     (codes -1 = NULL), or None when the layer has no property column.
     seg_starts: int64 array of group start offsets (first element 0).
-
-    kind="genpoly"/"genline": xs is the (xs, ys, ring_off, feat_off)
-    tuple from geom.ringbulk's parsers (ys unused); rows are whole
-    polygon/linestring features of arbitrary shape, framed by the
-    ragged writer which also returns exact per-feature frame lengths.
     """
-    n = (len(xs[3]) - 1) if kind in ("genpoly", "genline") else len(xs)
-    nseg = len(seg_starts)
-    seg_ends = np.append(seg_starts[1:], n)
-    gid = np.zeros(n, dtype=np.int64)
-    gid[seg_starts[1:]] = 1
-    gid = np.cumsum(gid)
-
     header = (mvt._tag(15, 0) + mvt._varint(2)
               + mvt._len_delim(1, layer_name.encode("utf-8")))
     extbytes = mvt._tag(5, 0) + mvt._varint(4096)
+    prop_tags = []
+    valtabs = {}    # group -> key + value tables, only for tagged groups
 
-    if codes is None:
-        prop_tags = []
-        has_valid = np.zeros(nseg, dtype=bool)
-        valtabs = {}
-        keybytes = b""
-    else:
+    if codes is not None:
+        n = len(codes)
+        gid = np.zeros(n, dtype=np.int64)
+        gid[seg_starts[1:]] = 1
+        gid = np.cumsum(gid)
         keybytes = mvt._len_delim(3, prop.encode("utf-8"))
         K = max(len(uniques), 1)
         valid = codes >= 0
@@ -735,12 +730,9 @@ def _bulk_encode_point_groups(layer_name, prop, ptype, xs, ys,
         vi = np.zeros(n, dtype=np.int64)
         vi[idx] = ranks[inv]
         prop_tags = [(0, vi, valid)]
-        has_valid = np.zeros(nseg, dtype=bool)
-        has_valid[gid[idx]] = True
         # per-group value tables, in first-appearance order
         vbytes = [None] * len(uniques)
         pair_codes_sorted = (u_pairs % K)[order]
-        valtabs = {}
         bounds = np.append(grp_start, len(order))
         for i in range(len(grp_start)):
             g = int(sorted_g[grp_start[i]])
@@ -752,85 +744,16 @@ def _bulk_encode_point_groups(layer_name, prop, ptype, xs, ys,
                         4, mvt._encode_value(_mvt_value(uniques[c], ptype)))
                     vbytes[c] = b
                 chunks.append(b)
-            valtabs[g] = b"".join(chunks)
+            valtabs[g] = keybytes + b"".join(chunks)
 
-    def _assemble(stream, cum):
-        # one group-message assembly for every kind: frame slices by
-        # byte offset, per-group value table only when a tag is present
-        parts = []
-        for g in range(nseg):
-            seg = stream[cum[seg_starts[g]]:cum[seg_ends[g]]]
-            if codes is not None and has_valid[g]:
-                parts.append(header + seg + keybytes + valtabs[g]
-                             + extbytes)
-            else:
-                parts.append(header + seg + extbytes)
-        return parts
-
-    if kind in ("genpoly", "genline"):
-        res = ringbulk.bulk_frame_ragged_features(
-            *xs, 3 if kind == "genpoly" else 2, prop_tags)
-        if res is None:
-            return None
-        stream, rowlen = res
-        return _assemble(stream,
-                         np.concatenate(([0], np.cumsum(rowlen))))
-    if kind == "point":
-        stream = mvt.bulk_frame_point_features(xs, ys, prop_tags)
-    elif kind == "line":
-        stream = mvt.bulk_frame_line_features(xs, ys, counts, prop_tags)
-    else:
-        stream = mvt.bulk_frame_ring4_polygon_features(xs, ys, prop_tags)
-    if stream is None:
+    res = framer(*args, prop_tags)
+    if res is None:
         return None
-    # per-row frame lengths -> group byte offsets
-    # recompute widths the same way the framer did (cheap, avoids a
-    # second return value): frame = 1 + fnb + body
-    if kind == "point":
-        zzx = ((xs << 1) ^ (xs >> 63)).astype(np.uint64)
-        zzy = ((ys << 1) ^ (ys >> 63)).astype(np.uint64)
-        xnb = (1 + (zzx >= 0x80).astype(np.int64)
-               + (zzx >= 0x4000).astype(np.int64))
-        ynb = (1 + (zzy >= 0x80).astype(np.int64)
-               + (zzy >= 0x4000).astype(np.int64))
-        geom_len = 1 + xnb + ynb
-    else:
-        dX = np.empty((n, 4), dtype=np.int64)
-        dY = np.empty((n, 4), dtype=np.int64)
-        dX[:, 0] = xs[:, 0]
-        dX[:, 1:] = xs[:, 1:] - xs[:, :-1]
-        dY[:, 0] = ys[:, 0]
-        dY[:, 1:] = ys[:, 1:] - ys[:, :-1]
-        zz = np.empty((n, 8), dtype=np.int64)
-        zz[:, 0::2] = (dX << 1) ^ (dX >> 63)
-        zz[:, 1::2] = (dY << 1) ^ (dY >> 63)
-        if kind == "line":
-            uzz = np.repeat(
-                np.arange(4)[None, :] < counts[:, None], 2, axis=1)
-            zz = np.where(uzz, zz, 0)
-        zz = zz.astype(np.uint64)
-        dnb = (1 + (zz >= 0x80).astype(np.int64)
-               + (zz >= 0x4000).astype(np.int64))
-        if kind == "line":
-            dnb = np.where(uzz, dnb, 0)
-            geom_len = 2 + dnb.sum(axis=1)
-        else:
-            geom_len = 3 + dnb.sum(axis=1)
-    pair_len = np.zeros(n, dtype=np.int64)
-    for _, vi_a, valid_a in prop_tags:
-        vnb = (1 + (vi_a >= 0x80).astype(np.int64)
-               + (vi_a >= 0x4000).astype(np.int64))
-        pair_len += valid_a * (1 + vnb)
-    has_tags = pair_len > 0
-    body_len = has_tags * (2 + pair_len) + 2 + 2 + geom_len
-    fnb = 1 + (body_len >= 0x80).astype(np.int64)
-    rowlen = 1 + fnb + body_len
+    stream, rowlen = res
     cum = np.concatenate(([0], np.cumsum(rowlen)))
-    if cum[-1] != len(stream):
-        # width recomputation drifted from the framer — never slice a
-        # misaligned stream; per-row path is always correct
-        return None
-    return _assemble(stream, cum)
+    cuts = cum[np.append(seg_starts, len(rowlen))].tolist()
+    return [header + stream[cuts[g]:cuts[g + 1]] + valtabs.get(g, b"")
+            + extbytes for g in range(len(seg_starts))]
 
 
 def _mvt_value(v, t):
@@ -885,15 +808,8 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
             pvals = {p: pdf[p].values for p in all_props if p in pdf}
             pt_ok = np.fromiter((_is_simple_point_wkb(g) for g in geoms),
                                 dtype=bool, count=n)
-            rp_ok = np.fromiter(
-                (_is_ring5_geom_wkb(g) for g in geoms),
-                dtype=bool, count=n)
-            ln_ok = np.fromiter(
-                (_is_short_line_wkb(g) for g in geoms),
-                dtype=bool, count=n)
-            # family masks for the ragged bulk framer (any polygon /
-            # any linestring WKB — the general tier below the three
-            # fixed-width fast shapes)
+            # family masks for the ragged framer: any polygon / any
+            # linestring WKB (boxes and short lines included)
             fam = np.fromiter(
                 ((g[1] if (g is not None and len(g) >= 9 and g[0] == 1
                            and g[2] == 0 and g[3] == 0 and g[4] == 0)
@@ -903,9 +819,7 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
             # per-batch value dictionaries for the vectorized paths
             fact = ({p: pd.factorize(pdf[p], use_na_sentinel=True)
                      for p in pvals}
-                    if (pt_ok.any() or rp_ok.any() or ln_ok.any()
-                        or gp_ok.any() or gl_ok.any())
-                    else {})
+                    if pt_ok.any() or gp_ok.any() or gl_ok.any() else {})
 
             chg = np.empty(n, dtype=bool)
             chg[0] = True
@@ -917,58 +831,28 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
             starts = np.flatnonzero(chg)
             ends = np.append(starts[1:], n)
 
-            def point_coords(s, e):
-                buf = np.frombuffer(b"".join(geoms[s:e]),
-                                    dtype=np.uint8).reshape(-1, 21)
-                px = (buf[:, 5:13].copy().view(np.float64)
-                      .ravel().astype(np.int64))
-                py = (buf[:, 13:21].copy().view(np.float64)
-                      .ravel().astype(np.int64))
-                return px, py
-
-            def ring4_coords(s, e):
-                # single-ring 5-point polygons (93 B) or their
-                # MultiPolygon-of-one twins (102 B, ring at offset 22):
-                # closing point dropped -> (m, 4) corner matrices
-                g = geoms[s:e]
-                m = e - s
-                lens = np.fromiter((len(v) for v in g), np.int64, m)
-                X = np.empty((m, 4), dtype=np.int64)
-                Y = np.empty((m, 4), dtype=np.int64)
-                for ln, off in ((93, 13), (102, 22)):
-                    sel = np.flatnonzero(lens == ln)
-                    if not len(sel):
-                        continue
-                    buf = np.frombuffer(
-                        b"".join(g[i] for i in sel),
-                        dtype=np.uint8).reshape(-1, ln)
-                    pts = (buf[:, off:off + 80].copy().view("<f8")
-                           .reshape(-1, 5, 2).astype(np.int64))
-                    X[sel] = pts[:, :4, 0]
-                    Y[sel] = pts[:, :4, 1]
-                return X, Y
-
-            def line_coords(s, e):
-                # 2-4 point LineStrings (41/57/73 B): padded (m, 4)
-                # point matrices + per-row counts
-                g = geoms[s:e]
-                m = e - s
-                lens = np.fromiter((len(v) for v in g), np.int64, m)
-                X = np.zeros((m, 4), dtype=np.int64)
-                Y = np.zeros((m, 4), dtype=np.int64)
-                K = (lens - 9) // 16
-                for k in (2, 3, 4):
-                    sel = np.flatnonzero(K == k)
-                    if not len(sel):
-                        continue
-                    buf = np.frombuffer(
-                        b"".join(g[i] for i in sel),
-                        dtype=np.uint8).reshape(-1, 9 + 16 * k)
-                    pts = (buf[:, 9:].copy().view("<f8")
-                           .reshape(-1, k, 2).astype(np.int64))
-                    X[sel, :k] = pts[:, :, 0]
-                    Y[sel, :k] = pts[:, :, 1]
-                return X, Y, K
+            def bulk_shape(s, e):
+                """The one shape dispatch for rows [s, e): (framer,
+                args) for framer(*args, prop_tags) when every row is a
+                simple point or every row is in one ragged family,
+                else None (per-row walk)."""
+                if bool(pt_ok[s:e].all()):
+                    buf = np.frombuffer(b"".join(geoms[s:e]),
+                                        dtype=np.uint8).reshape(-1, 21)
+                    px = (buf[:, 5:13].copy().view(np.float64)
+                          .ravel().astype(np.int64))
+                    py = (buf[:, 13:21].copy().view(np.float64)
+                          .ravel().astype(np.int64))
+                    return mvt.bulk_frame_point_features, (px, py)
+                if bool(gp_ok[s:e].all()):
+                    parsed, gtype = ringbulk.parse_poly_family(geoms[s:e]), 3
+                elif bool(gl_ok[s:e].all()):
+                    parsed, gtype = ringbulk.parse_line_family(geoms[s:e]), 2
+                else:
+                    return None
+                if parsed is None:
+                    return None
+                return ringbulk.bulk_frame_ragged_features, (*parsed, gtype)
 
             def handle_segment(s, e):
                 nonlocal cur_key, enc
@@ -980,42 +864,18 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
                     cur_key = key
                     enc = mvt.LayerEncoder(layer)
                 ptypes = prop_types.get(layer, {})
-                framed = None
-                if e - s >= 8:
-                    # vectorized single-shape run: decode coords as one
-                    # matrix, intern values in per-row visit order, frame
-                    # via the byte-matrix path (falls back on width
-                    # overflow); the ragged tier catches every polygon /
-                    # linestring the fixed-width shapes don't
-                    coords = ragged = None
-                    if bool(pt_ok[s:e].all()):
-                        coords, framer = (point_coords(s, e),
-                                          mvt.bulk_frame_point_features)
-                    elif bool(rp_ok[s:e].all()):
-                        coords, framer = (
-                            ring4_coords(s, e),
-                            mvt.bulk_frame_ring4_polygon_features)
-                    elif bool(ln_ok[s:e].all()):
-                        coords, framer = (line_coords(s, e),
-                                          mvt.bulk_frame_line_features)
-                    elif bool(gp_ok[s:e].all()):
-                        ragged = (ringbulk.parse_poly_family(geoms[s:e]), 3)
-                    elif bool(gl_ok[s:e].all()):
-                        ragged = (ringbulk.parse_line_family(geoms[s:e]), 2)
-                    if coords is not None or (ragged is not None
-                                              and ragged[0] is not None):
-                        seg_cols = [(p, t, fact[p][0][s:e], fact[p][1])
-                                    for p, t in ptypes.items() if p in fact]
-                        prop_tags = _bulk_point_tags(enc, seg_cols)
-                        if ragged is not None:
-                            res = ringbulk.bulk_frame_ragged_features(
-                                *ragged[0], ragged[1], prop_tags)
-                            framed = res[0] if res is not None else None
-                        else:
-                            framed = framer(*coords, prop_tags)
-                if framed is not None:
-                    enc.add_framed_features(framed)
-                    return
+                # vectorized single-shape run: intern values in per-row
+                # visit order, then frame the whole run in one call
+                # (the framer refuses on width overflow -> per-row)
+                shape = bulk_shape(s, e) if e - s >= 8 else None
+                if shape is not None:
+                    framer, args = shape
+                    seg_cols = [(p, t, fact[p][0][s:e], fact[p][1])
+                                for p, t in ptypes.items() if p in fact]
+                    res = framer(*args, _bulk_point_tags(enc, seg_cols))
+                    if res is not None:
+                        enc.add_framed_features(res[0])
+                        return
                 for i in range(s, e):
                     geom = _int_geom(wkb_to_geom(bytes(geoms[i])))
                     properties = {p: _mvt_value(pvals[p][i], t)
@@ -1025,80 +885,51 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
             # batch-wide fast path: every COMPLETE group in this batch
             # (all but the first and last, which may continue across
             # batch/encoder boundaries) encoded in one vectorized pass
-            # when they are all-point rows of one <=1-property layer —
+            # when they are single-shape rows of one <=1-property layer —
             # the per-group constant, not per-feature work, dominates at
             # high zooms (650k groups of ~16 features in the bench)
-            done_fast = False
+            parts = None
             if len(starts) >= 3:
                 m0, m1 = int(ends[0]), int(starts[-1])
-                mid_kind = None
-                if bool(pt_ok[m0:m1].all()):
-                    mid_kind = "point"
-                elif bool(rp_ok[m0:m1].all()):
-                    mid_kind = "ring4"
-                elif bool(ln_ok[m0:m1].all()):
-                    mid_kind = "line"
-                elif bool(gp_ok[m0:m1].all()):
-                    mid_kind = "genpoly"
-                elif bool(gl_ok[m0:m1].all()):
-                    mid_kind = "genline"
-                mid_ok = (mid_kind is not None
-                          and bool((ly_codes[m0:m1]
-                                    == ly_codes[m0]).all()))
-                ptl = None
-                if mid_ok:
-                    layer = ly_uniq[ly_codes[m0]]
-                    ptl = [(p, t)
-                           for p, t in prop_types.get(layer, {}).items()
-                           if p in fact]
-                    mid_ok = len(ptl) <= 1
-                if mid_ok:
-                    kcounts = None
-                    py = None
-                    if mid_kind == "point":
-                        px, py = point_coords(m0, m1)
-                    elif mid_kind == "ring4":
-                        px, py = ring4_coords(m0, m1)
-                    elif mid_kind == "line":
-                        px, py, kcounts = line_coords(m0, m1)
-                    elif mid_kind == "genpoly":
-                        px = ringbulk.parse_poly_family(geoms[m0:m1])
-                    else:
-                        px = ringbulk.parse_line_family(geoms[m0:m1])
+                layer = ly_uniq[ly_codes[m0]]
+                ptl = [(p, t)
+                       for p, t in prop_types.get(layer, {}).items()
+                       if p in fact]
+                shape = (bulk_shape(m0, m1)
+                         if (len(ptl) <= 1 and bool(
+                             (ly_codes[m0:m1] == ly_codes[m0]).all()))
+                         else None)
+                if shape is not None:
                     if ptl:
                         p, t = ptl[0]
                         codes, uniq = fact[p][0][m0:m1], fact[p][1]
                     else:
                         p = t = codes = uniq = None
-                    seg_starts = (starts[1:-1] - m0).astype(np.int64)
-                    parts = (None if px is None else
-                             _bulk_encode_point_groups(
-                                 layer, p, t, px, py, codes, uniq,
-                                 seg_starts, kind=mid_kind,
-                                 counts=kcounts))
-                    if parts is not None:
-                        handle_segment(int(starts[0]), m0)
-                        flush()
-                        cur_key = None
-                        enc = None
-                        mids = starts[1:-1]
-                        out["zoom"].extend(zs[mids].tolist())
-                        out["x"].extend(txs[mids].tolist())
-                        out["y"].extend(tys[mids].tolist())
-                        out["salt"].extend(ss[mids].tolist())
-                        out["layer_order"].extend(lo[mids].tolist())
-                        out["layer"].extend([layer] * len(mids))
-                        out["part"].extend(parts)
-                        # bulk extend can add ~1 row/group at high zooms:
-                        # drain here so peak buffering stays near the
-                        # 2000-row bound rather than maxRecordsPerBatch
-                        if len(out["zoom"]) >= 2000:
-                            yield pd.DataFrame(out)
-                            for v in out.values():
-                                v.clear()
-                        handle_segment(m1, n)
-                        done_fast = True
-            if not done_fast:
+                    parts = _bulk_encode_groups(
+                        layer, p, t, *shape, codes, uniq,
+                        (starts[1:-1] - m0).astype(np.int64))
+            if parts is not None:
+                handle_segment(int(starts[0]), m0)
+                flush()
+                cur_key = None
+                enc = None
+                mids = starts[1:-1]
+                out["zoom"].extend(zs[mids].tolist())
+                out["x"].extend(txs[mids].tolist())
+                out["y"].extend(tys[mids].tolist())
+                out["salt"].extend(ss[mids].tolist())
+                out["layer_order"].extend(lo[mids].tolist())
+                out["layer"].extend([layer] * len(mids))
+                out["part"].extend(parts)
+                # bulk extend can add ~1 row/group at high zooms:
+                # drain here so peak buffering stays near the
+                # 2000-row bound rather than maxRecordsPerBatch
+                if len(out["zoom"]) >= 2000:
+                    yield pd.DataFrame(out)
+                    for v in out.values():
+                        v.clear()
+                handle_segment(m1, n)
+            else:
                 for s, e in zip(starts.tolist(), ends.tolist()):
                     handle_segment(s, e)
                     if len(out["zoom"]) >= 2000:
@@ -1131,13 +962,15 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
     pieces: unioned per-layer outputs of geometry_stage with layer_id /
     layer_order columns. prop_types: layer_id -> {col -> Spark type}.
 
-    shuffle_parts: explicit partition count for the exchange. The encode
-    walk is Python-bound, so wave packing dominates wall time: with
-    partitions ~= cores, one straggler task idles every other core
-    (measured 5.3/8 cores busy at 14 tasks); at ~4-8x cores the tail is
-    1/8 of a wave (7.8/8 busy). AQE's parallelismFirst coalescing
-    actively re-creates the coarse case, so callers that know their
-    core count should pass cores*8 (bench.py does); None keeps the
+    Complete single-shape runs are framed in bulk — simple points by
+    mvt.bulk_frame_point_features, any polygon- or linestring-family
+    run by ringbulk.bulk_frame_ragged_features — and everything else
+    by the per-row LayerEncoder walk (_make_encode_run).
+
+    shuffle_parts: explicit partition count for the exchange, used as
+    given. The encode walk is Python-bound and each task pays a fixed
+    Arrow/worker cost, so build_tiles clamps its hint to ~2 tasks/core
+    (_python_stage_parts) before passing it here. None keeps the
     spark.sql.shuffle.partitions + AQE behavior.
     """
     salt_col = (F.when(F.col("zoom") <= F.lit(salt_zoom_max),
@@ -1257,8 +1090,11 @@ def assemble_tiles(partials: DataFrame, compress: bool = True,
     """A2: merge salted partials per layer and zip layer messages into
     per-tile MVT tiles + gzip + md5 (content-address for O12 dedup,
     fileio.rs:136-148). One shuffle: repartition (zoom,x,y) + sorted
-    mapInPandas walk. shuffle_parts: see encode_layers — same
-    Python-bound wave-packing argument."""
+    mapInPandas walk. shuffle_parts: explicit partition count, used as
+    given (build_tiles passes the same ~2 tasks/core clamp as for
+    encode_layers); None keeps the AQE behavior. Salt-free pyramids
+    (minzoom > salt_zoom_max) skip this shuffle: build_tiles calls
+    encode_assemble_fused instead."""
     if shuffle_parts is None:
         ordered = partials.repartition("zoom", "x", "y")
     else:
@@ -1355,16 +1191,12 @@ def _python_stage_parts(spark: SparkSession,
     and now overshoots. ~2 tasks/core keeps the tail at half a wave while
     per-task kernel time stays well above the fixed cost at larger scale
     factors (tiles/task grows with data; the constant does not).
-    TILEIGI_ENCODE_PARTS_PER_CORE overrides the factor; None stays None
-    (spark.sql.shuffle.partitions + AQE coalescing decide)."""
+    None stays None (spark.sql.shuffle.partitions + AQE coalescing
+    decide)."""
     if shuffle_parts is None:
         return None
-    try:
-        cores = spark.sparkContext.defaultParallelism
-    except Exception:
-        return shuffle_parts
-    per_core = float(os.environ.get("TILEIGI_ENCODE_PARTS_PER_CORE", "2"))
-    return max(1, min(shuffle_parts, int(cores * per_core)))
+    cores = spark.sparkContext.defaultParallelism
+    return max(1, min(shuffle_parts, cores * _TASKS_PER_CORE))
 
 
 def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
@@ -1403,8 +1235,7 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     # the extra branch cost more than the saved exchange (4.22 s vs
     # 4.01 s best-of-3 on the z0-10 leg), so mixed ranges keep the
     # two-shuffle salted path.
-    fuse = (os.environ.get("TILEIGI_FUSE", "1") != "0"
-            and minzoom > salt_zoom_max)
+    fuse = minzoom > salt_zoom_max
     per_layer = []
     prop_types: dict[str, dict] = {}
 

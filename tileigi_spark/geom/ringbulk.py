@@ -1,17 +1,16 @@
-"""Ragged bulk MVT framing for arbitrary polygon / linestring features.
+"""Ragged bulk MVT framing for polygon- and linestring-family features.
 
-The fixed-width bulk framers in geom/mvt.py cover the three dominant
-piece shapes (single points, 4-corner rings, 2-4 point lines) with a
-byte-matrix writer whose width is known up front. Everything else —
-irregular rings, rings with holes, MultiPolygons, long polylines — fell
-back to the per-row LayerEncoder walk (~50-100µs of interpreter work
-per feature), which is the remaining hot cost of polygon-dense
-workloads (reference diet: lib.rs:559-728 renders arbitrary admin /
-landuse rings).
+The encode walk (engine._make_encode_run) frames complete runs of
+pieces through one of two bulk framers: single points go to
+mvt.bulk_frame_point_features, and EVERY polygon-family (Polygon,
+MultiPolygon) or linestring-family (LineString, MultiLineString) run
+comes here — clipped boxes and 2-4 point road pieces as well as
+irregular rings, rings with holes, MultiPolygons and long polylines.
+Anything else (mixed shapes, width overflow) takes the per-row
+LayerEncoder walk (~50-100µs of interpreter work per feature).
 
-This module removes that fallback for the whole polygon and linestring
-families with a RAGGED formulation: all features' emit-order vertices
-live in one flat (xs, ys) pair plus two offset arrays
+Features are held in a RAGGED formulation: all features' emit-order
+vertices live in one flat (xs, ys) pair plus two offset arrays
 
     ring_off : (nr + 1,) vertex offsets per ring
     feat_off : (n + 1,)  ring offsets per feature
@@ -22,8 +21,8 @@ final byte stream is assembled with one ragged scatter instead of a
 Python loop. Byte output is pinned identical to the per-row path
 (mvt._geometry_commands semantics: per-ring closing-vertex drop,
 degenerate rings skipped, the delta cursor carrying across rings and
-polygons within a feature) by tests/test_mvt_ragged.py and the golden
-tile fixtures.
+polygons within a feature) by tests/test_mvt_ragged.py,
+tests/test_mvt_bulk.py and the golden tile fixtures.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ import struct
 
 import numpy as np
 
-from .mvt import _varint3_parts
+from .mvt import _tag_field, _varint3_parts
 
 _U32 = np.array([1, 1 << 8, 1 << 16, 1 << 24], dtype=np.int64)
 
@@ -307,7 +306,7 @@ def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
 
     xs, ys: flat int64 emit-order vertices. ring_off: (nr + 1,) vertex
     offsets per ring. feat_off: (n + 1,) ring offsets per feature.
-    prop_tags: as in mvt.bulk_frame_point_features.
+    prop_tags: as in mvt._tag_field.
 
     Returns (stream_bytes, per_feature_frame_lengths) — byte-identical
     to concatenating ``_len_delim(2, encode_feature(...))`` per row —
@@ -316,9 +315,10 @@ def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
     n = len(feat_off) - 1
     nr = len(ring_off) - 1
     npts = len(xs)
-    P = len(prop_tags)
-    if P > 31:
+    tags = _tag_field(prop_tags, n)
+    if tags is None:
         return None
+    T, U, tag_len = tags
     k = np.diff(ring_off)
     if nr and int(k.min()) < 2:
         return None  # LineTo command rides on the second vertex slot
@@ -381,27 +381,15 @@ def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
     pcs = _cumsum0(pb)
     gl = pcs[fpt_off[1:]] - pcs[fpt_off[:-1]]
 
-    vparts = []
-    for ki, vi, valid in prop_tags:
-        if ki >= 128:
-            return None
-        vi = np.where(valid, vi, 0).astype(np.uint64)
-        if n and int(vi.max()) >= (1 << 21):
-            return None
-        vparts.append(_varint3_parts(vi))
-    pair_len = np.zeros(n, dtype=np.int64)
-    for (_, _, valid), (_, _, _, vnb) in zip(prop_tags, vparts):
-        pair_len += valid * (1 + vnb)
-    has_tags = pair_len > 0
-
     glnb = 1 + (gl >= 0x80).astype(np.int64)
-    body_len = has_tags * (2 + pair_len) + 2 + 1 + glnb + gl
+    body_len = tag_len + 2 + 1 + glnb + gl
     if n and int(body_len.max()) >= (1 << 14):
         return None
     fb0, fb1, _, fnb = _varint3_parts(body_len.astype(np.uint64))
     gb0, gb1, _, _ = _varint3_parts(gl.astype(np.uint64))
 
-    Wp = 10 + 4 * P
+    c = 3 + T.shape[1]
+    Wp = c + 5
     Mp = np.zeros((n, Wp), dtype=np.uint8)
     Bp = np.zeros((n, Wp), dtype=bool)
     Mp[:, 0] = 0x12                     # frame: field 2, wire 2
@@ -410,21 +398,8 @@ def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
     Bp[:, 1] = True
     Mp[:, 2] = fb1
     Bp[:, 2] = fnb > 1
-    Mp[:, 3] = 0x12                     # tags: field 2, wire 2
-    Bp[:, 3] = has_tags
-    Mp[:, 4] = pair_len.astype(np.uint8)
-    Bp[:, 4] = has_tags
-    c = 5
-    for (ki, _, valid), (vb0, vb1, vb2, vnb) in zip(prop_tags, vparts):
-        Mp[:, c] = ki
-        Bp[:, c] = valid
-        Mp[:, c + 1] = vb0
-        Bp[:, c + 1] = valid
-        Mp[:, c + 2] = vb1
-        Bp[:, c + 2] = valid & (vnb > 1)
-        Mp[:, c + 3] = vb2
-        Bp[:, c + 3] = valid & (vnb > 2)
-        c += 4
+    Mp[:, 3:c] = T
+    Bp[:, 3:c] = U
     Mp[:, c] = 0x18                     # type: field 3, wire 0
     Bp[:, c] = True
     Mp[:, c + 1] = gtype
