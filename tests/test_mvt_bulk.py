@@ -14,7 +14,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, FloatType, LongType,
 from tileigi_spark.engine import (_bulk_encode_groups, _bulk_point_tags,
                                   _mvt_value)
 from tileigi_spark.geom import mvt, ringbulk
-from tileigi_spark.geom.wkb import geom_to_wkb
+from tileigi_spark.geom.wkb import geom_to_wkb, read_ragged
 
 
 def perrow_encoder(rows, ptypes):
@@ -236,22 +236,22 @@ def ring_groups_perrow(groups, prop, ptype):
 
 
 def ragged_groups_bulk(groups, prop, ptype, geom_type):
-    """Rows (pts, value) built as WKB (closed rings for Polygon), parsed
-    by ringbulk and framed by the ragged framer — the walk's path for
-    boxes and short lines."""
+    """Rows (pts, value) built as WKB (closed rings for Polygon), read
+    by wkb.read_ragged, shaped by ringbulk.mvt_rings and framed by the
+    ragged framer — the walk's path for boxes and short lines."""
     flat = [r for g in groups for r in g]
     geoms = np.empty(len(flat), dtype=object)
     if geom_type == "Polygon":
         geoms[:] = [geom_to_wkb(("Polygon", [pts + [pts[0]]]))
                     for pts, _ in flat]
-        parsed, gtype = ringbulk.parse_poly_family(geoms), 3
     else:
         geoms[:] = [geom_to_wkb(("LineString", pts)) for pts, _ in flat]
-        parsed, gtype = ringbulk.parse_line_family(geoms), 2
-    assert parsed is not None
+    rag = ringbulk.mvt_rings(read_ragged(geoms))
+    gtype = 3 if geom_type == "Polygon" else 2
+    assert (rag.code == gtype).all()
     return encode_groups(groups, [r[1] for r in flat], prop, ptype,
                          ringbulk.bulk_frame_ragged_features,
-                         (*parsed, gtype))
+                         (*rag.rows(0, len(flat)), gtype))
 
 
 def test_ring4_group_batch_parity():

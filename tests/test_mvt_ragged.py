@@ -13,10 +13,8 @@ from pyspark.sql.types import LongType, StringType
 
 from tileigi_spark.engine import _bulk_point_tags, _int_geom, _mvt_value
 from tileigi_spark.geom import mvt
-from tileigi_spark.geom.ringbulk import (bulk_frame_ragged_features,
-                                         parse_line_family,
-                                         parse_poly_family)
-from tileigi_spark.geom.wkb import wkb_to_geom
+from tileigi_spark.geom.ringbulk import bulk_frame_ragged_features, mvt_rings
+from tileigi_spark.geom.wkb import read_ragged, wkb_to_geom
 
 
 def wkb_ring(pts):
@@ -47,6 +45,18 @@ def wkb_multilinestring(lines):
                                   for x, y in p) for p in lines))
 
 
+def parse_run(geoms):
+    """The encode walk's read of one run: wkb.read_ragged, the ring
+    rules of ringbulk.mvt_rings, then the run as ragged framer arguments
+    when all rows share a polygon or linestring family (None = per-row
+    path)."""
+    rag = mvt_rings(read_ragged(geoms))
+    gtype = int(rag.code[0])
+    if gtype not in (2, 3) or not (rag.code == gtype).all():
+        return None
+    return (*rag.rows(0, len(geoms)), gtype)
+
+
 def perrow(wkbs, props_list, ptypes):
     enc = mvt.LayerEncoder("l")
     frames = []
@@ -70,14 +80,10 @@ def bulk(wkbs, props_list, ptypes, family):
     tags = _bulk_point_tags(enc, cols)
     geoms = np.empty(len(wkbs), dtype=object)
     geoms[:] = wkbs
-    if family == "poly":
-        parsed = parse_poly_family(geoms)
-        gtype = 3
-    else:
-        parsed = parse_line_family(geoms)
-        gtype = 2
+    parsed = parse_run(geoms)
     assert parsed is not None
-    res = bulk_frame_ragged_features(*parsed, gtype, tags)
+    assert parsed[-1] == (3 if family == "poly" else 2)
+    res = bulk_frame_ragged_features(*parsed, tags)
     assert res is not None
     framed, rowlen = res
     enc.add_framed_features(framed)
@@ -186,13 +192,13 @@ def test_parser_rejects_mixed_or_malformed():
     geoms = np.empty(2, dtype=object)
     geoms[:] = [wkb_polygon([ring(0, 0, 5, 4)]),
                 wkb_linestring([(0, 0), (1, 1)])]
-    assert parse_poly_family(geoms) is None
+    assert parse_run(geoms) is None
     geoms2 = np.empty(1, dtype=object)
     geoms2[:] = [wkb_polygon([ring(0, 0, 5, 4)])[:-8]]  # truncated
-    assert parse_poly_family(geoms2) is None
+    assert parse_run(geoms2) is None
     one_pt = np.empty(1, dtype=object)
     one_pt[:] = [wkb_linestring([(3, 3)])]
-    assert parse_line_family(one_pt) is None
+    assert parse_run(one_pt) is None
 
 
 def test_width_overflow_returns_none():
@@ -202,9 +208,9 @@ def test_width_overflow_returns_none():
                           (0, 5), (0, 0)]])]
     geoms = np.empty(1, dtype=object)
     geoms[:] = wkbs
-    parsed = parse_poly_family(geoms)
+    parsed = parse_run(geoms)
     assert parsed is not None
-    assert bulk_frame_ragged_features(*parsed, 3, []) is None
+    assert bulk_frame_ragged_features(*parsed, []) is None
 
 
 def test_randomized_poly_parity():
@@ -419,12 +425,10 @@ def test_oversized_body_is_refused_by_the_framer():
     # refused, a group without it is framed
     geoms = np.empty(1, dtype=object)
     geoms[:] = [wkb_polygon([_star(2000, 2000, 4400)])]
-    assert bulk_frame_ragged_features(*parse_poly_family(geoms), 3,
-                                      []) is None
+    assert bulk_frame_ragged_features(*parse_run(geoms), []) is None
     small = np.empty(9, dtype=object)
     small[:] = [w for w, _ in _poly_group(1)]
-    assert bulk_frame_ragged_features(*parse_poly_family(small), 3,
-                                      []) is not None
+    assert bulk_frame_ragged_features(*parse_run(small), []) is not None
 
 
 def test_walk_falls_back_per_segment(monkeypatch):

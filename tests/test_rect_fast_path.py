@@ -211,7 +211,7 @@ def test_non_rect_ring5_goes_to_leftover():
 
 def test_rect_chunked_equals_whole(monkeypatch):
     """_rects_fast_path slices oversized batches into _RECT_CHUNK rows
-    (cache-resident temporaries, tools/ab_rect_chunk.py). Unlike the
+    (cache-resident temporaries). Unlike the
     ragged lane's set-equality contract, the rect lane promises
     ORDER-IDENTICAL output — downstream MVT bytes depend on feature
     order within a tile — so compare frames row-for-row, and leftover

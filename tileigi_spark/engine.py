@@ -23,7 +23,6 @@ amortizes per-tile overhead across whole Arrow batches.
 from __future__ import annotations
 
 import hashlib
-import os
 from typing import Optional
 
 import numpy as np
@@ -37,7 +36,7 @@ from pyspark.sql.types import (
 from .config import Layers
 from .mercator import (MERC_MAX, bbox_metatile_range, bbox_tile_range,
                        cover_slack)
-from .geom.wkb import wkb_to_geom, geom_to_wkb
+from .geom.wkb import _cumsum0, wkb_to_geom, geom_to_wkb, read_ragged
 from .geom import mvt, ringbulk
 
 WORLD = 2.0 * MERC_MAX
@@ -64,30 +63,31 @@ from .geom.remap import shift_geom as _shift_geom  # noqa: E402
 
 
 def _bbox_arrays(ways):
-    """Per-row bbox arrays from a WKB column (numpy fast path for simple
-    2-D points, recursive decode otherwise; NaN = undecodable)."""
-    import numpy as np
-
-    n = len(ways)
-    out = {k: np.full(n, np.nan) for k in ("xmin", "ymin", "xmax", "ymax")}
-    # vectorized path for simple 2-D points (dominant for geotagged
-    # pages): bbox == the point itself
-    simple = np.fromiter((_is_simple_point_wkb(w) for w in ways),
-                         dtype=bool, count=n)
-    if simple.any():
-        buf = np.frombuffer(
-            b"".join(w for w, s in zip(ways, simple) if s),
-            dtype=np.uint8).reshape(-1, 21)
-        xs = buf[:, 5:13].copy().view(np.float64).ravel()
-        ys = buf[:, 13:21].copy().view(np.float64).ravel()
-        idx = np.nonzero(simple)[0]
-        out["xmin"][idx] = xs; out["xmax"][idx] = xs
-        out["ymin"][idx] = ys; out["ymax"][idx] = ys
-    for i, w in enumerate(ways):
-        if simple[i] or w is None:
+    """Per-row bbox arrays from a WKB column (NaN = undecodable). Rows
+    wkb.read_ragged reads take min/max from its vertex arrays; the rows
+    it refuses (big-endian, EWKB, MultiPoint, malformed) are decoded by
+    wkb_to_geom. Both follow Python's min/max: a NaN first coordinate
+    gives NaN, later NaNs are skipped."""
+    ways = list(ways)
+    rag = read_ragged(ways)
+    out = {k: np.full(len(ways), np.nan)
+           for k in ("xmin", "ymin", "xmax", "ymax")}
+    read = rag.code != 0
+    if read.any():
+        # every read row has >= 1 vertex: its span starts the segment
+        start = rag.ring_off[rag.row_off[:-1][read]]
+        for vals, lo, hi in ((rag.xs, "xmin", "xmax"),
+                             (rag.ys, "ymin", "ymax")):
+            nan_first = np.isnan(vals[start])
+            for key, red in ((lo, np.fmin), (hi, np.fmax)):
+                r = red.reduceat(vals, start)
+                r[nan_first] = np.nan
+                out[key][read] = r
+    for i in np.flatnonzero(~read).tolist():
+        if ways[i] is None:
             continue
         try:
-            g = wkb_to_geom(bytes(w))
+            g = wkb_to_geom(bytes(ways[i]))
         except ValueError:
             continue
         xs, ys = [], []
@@ -420,9 +420,10 @@ _TASKS_PER_CORE = 2
 
 
 # cache-resident slice size for the rect lane, same lever as the ragged
-# lane's _CHUNK_FEATURES (geom/batch.py): measured on this host
-# (tools/ab_rect_chunk.py), the whole-batch rect kernel loses ~1.3x at
-# the 20k Arrow cap to temporaries spilling out of cache. The points
+# lane's _CHUNK_FEATURES (geom/batch.py): measured offline, the
+# whole-batch rect kernel loses ~1.3x at the 20k Arrow cap to
+# temporaries spilling out of cache (perfbench's traced run reports the
+# rect lane as engine.geometry.rect.us_per_feature). The points
 # lane is deliberately NOT chunked — its working set is ~4x smaller and
 # per-call constants dominate (chunking measured SLOWER there).
 _RECT_CHUNK = 4096
@@ -806,20 +807,13 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
             ly_codes, ly_uniq = pd.factorize(pdf["layer"])
             geoms = pdf["geom"].values
             pvals = {p: pdf[p].values for p in all_props if p in pdf}
-            pt_ok = np.fromiter((_is_simple_point_wkb(g) for g in geoms),
-                                dtype=bool, count=n)
-            # family masks for the ragged framer: any polygon / any
-            # linestring WKB (boxes and short lines included)
-            fam = np.fromiter(
-                ((g[1] if (g is not None and len(g) >= 9 and g[0] == 1
-                           and g[2] == 0 and g[3] == 0 and g[4] == 0)
-                  else 0) for g in geoms), dtype=np.uint8, count=n)
-            gp_ok = (fam == 3) | (fam == 6)
-            gl_ok = (fam == 2) | (fam == 5)
+            rag = ringbulk.mvt_rings(read_ragged(geoms))
+            # rows [s, e) share one geometry type iff gchg[s] == gchg[e-1]
+            gchg = _cumsum0(rag.code[1:] != rag.code[:-1])
             # per-batch value dictionaries for the vectorized paths
             fact = ({p: pd.factorize(pdf[p], use_na_sentinel=True)
                      for p in pvals}
-                    if pt_ok.any() or gp_ok.any() or gl_ok.any() else {})
+                    if rag.code.any() else {})
 
             chg = np.empty(n, dtype=bool)
             chg[0] = True
@@ -833,26 +827,17 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
 
             def bulk_shape(s, e):
                 """The one shape dispatch for rows [s, e): (framer,
-                args) for framer(*args, prop_tags) when every row is a
-                simple point or every row is in one ragged family,
-                else None (per-row walk)."""
-                if bool(pt_ok[s:e].all()):
-                    buf = np.frombuffer(b"".join(geoms[s:e]),
-                                        dtype=np.uint8).reshape(-1, 21)
-                    px = (buf[:, 5:13].copy().view(np.float64)
-                          .ravel().astype(np.int64))
-                    py = (buf[:, 13:21].copy().view(np.float64)
-                          .ravel().astype(np.int64))
-                    return mvt.bulk_frame_point_features, (px, py)
-                if bool(gp_ok[s:e].all()):
-                    parsed, gtype = ringbulk.parse_poly_family(geoms[s:e]), 3
-                elif bool(gl_ok[s:e].all()):
-                    parsed, gtype = ringbulk.parse_line_family(geoms[s:e]), 2
-                else:
+                args) for framer(*args, prop_tags) when every row has
+                the same MVT geometry type in rag, else None (per-row
+                walk)."""
+                gtype = int(rag.code[s])
+                if not gtype or gchg[s] != gchg[e - 1]:
                     return None
-                if parsed is None:
-                    return None
-                return ringbulk.bulk_frame_ragged_features, (*parsed, gtype)
+                xs, ys, ring_off, feat_off = rag.rows(s, e)
+                if gtype == 1:   # one vertex per point row
+                    return mvt.bulk_frame_point_features, (xs, ys)
+                return ringbulk.bulk_frame_ragged_features, (
+                    xs, ys, ring_off, feat_off, gtype)
 
             def handle_segment(s, e):
                 nonlocal cur_key, enc
@@ -1287,21 +1272,13 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                 # (pinned by test_template_zoom_grouping).
                 import re as _re
 
-                group_ok = os.environ.get("TILEIGI_SQL_ZOOM_GROUP",
-                                          "1") != "0"
                 grouped: dict[str, tuple] = {}
                 order_keys = []
                 for z in zs:
                     src_z = spark.sql(substitute_sql_tokens(layer_sql, z))
-                    key = f"__z{z}"
-                    if group_ok:
-                        try:
-                            key = _re.sub(
-                                r"#\d+", "#",
-                                str(src_z._jdf.queryExecution()
-                                    .optimizedPlan()))
-                        except Exception:
-                            pass
+                    key = _re.sub(r"#\d+", "#",
+                                  str(src_z._jdf.queryExecution()
+                                      .optimizedPlan()))
                     if key not in grouped:
                         grouped[key] = (src_z, [])
                         order_keys.append(key)

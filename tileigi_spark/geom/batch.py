@@ -8,6 +8,11 @@ across a whole Arrow batch with numpy on flat ("ragged") coordinate
 arrays + ring offsets, dropping to the authoritative scalar kernels ONLY
 for the features a stage would actually change:
 
+* parse — wkb.read_ragged, the one vectorized WKB reader the encode
+  walk and with_bbox share, reads the batch once. Its LineString/
+  Polygon-family rows enter the lane (_lane_state); Points and the rows
+  it refuses (big-endian, EWKB, MultiPoint, malformed, zero-point
+  members, zero-member features) take the full scalar loop.
 * remap + consecutive-duplicate collapse + ring/line rules — fully
   vectorized, exact (dedup by immediate-predecessor mask is provably
   identical to the sequential collapse in remap._remap_linestring: in a
@@ -66,8 +71,7 @@ import struct
 import numpy as np
 
 from ..mercator import MERC_MAX
-from .ringbulk import _cumsum0
-from .wkb import wkb_to_geom, geom_to_wkb
+from .wkb import _cumsum0, wkb_to_geom, geom_to_wkb, read_ragged
 from .remap import remap_geometry, shift_geom as _shift
 from .simplify import remove_unneeded_points, simplify, \
     remove_duplicate_points
@@ -84,132 +88,31 @@ WORLD = 2.0 * MERC_MAX
 _COORD_LIMIT = 1 << 26
 
 _LINE, _POLY = 1, 2  # role codes per feature type
-_ROLE = {2: _LINE, 3: _POLY, 5: _LINE, 6: _POLY}
+# WKB type code -> role (0 = not in the lane: Point, MultiPoint, refused)
+_ROLE = np.array([0, 0, _LINE, _POLY, 0, _LINE, _POLY], dtype=np.int8)
 
 
 # --------------------------------------------------------------- parsing
 
-def _parse_rows(ways):
-    """Parse little-endian 2-D WKB rows into ragged arrays.
-
-    Returns (state dict or None, scalar_rows) where scalar_rows lists
-    row indices that must take the full scalar loop (big-endian, EWKB
-    flags, Point/MultiPoint, malformed, zero-point members)."""
-    ring_feat, ring_int, ring_n, ring_src = [], [], [], []
-    role = {}
-    scalar_rows = []
-    bufparts = []
-    base = 0
-
-    for i, w in enumerate(ways):
-        try:
-            b = bytes(w)
-        except TypeError:
-            scalar_rows.append(i)
-            continue
-        n = len(b)
-        if n < 9 or b[0] != 1 or b[2] != 0 or b[3] != 0 or b[4] != 0:
-            scalar_rows.append(i)
-            continue
-        t = b[1]
-        ok = True
-        rings_here = []
-        if t == 2:
-            (cnt,) = struct.unpack_from("<I", b, 5)
-            ok = 9 + 16 * cnt == n and cnt > 0
-            if ok:
-                rings_here.append((False, cnt, 9))
-        elif t == 3:
-            (nr,) = struct.unpack_from("<I", b, 5)
-            pos = 9
-            ok = nr > 0
-            for r in range(nr if ok else 0):
-                if pos + 4 > n:
-                    ok = False
-                    break
-                (cnt,) = struct.unpack_from("<I", b, pos)
-                pos += 4
-                if cnt == 0 or pos + 16 * cnt > n:
-                    ok = False
-                    break
-                rings_here.append((r > 0, cnt, pos))
-                pos += 16 * cnt
-            ok = ok and pos == n
-        elif t in (5, 6):
-            (nm,) = struct.unpack_from("<I", b, 5)
-            pos = 9
-            ok = nm > 0
-            for _m in range(nm if ok else 0):
-                if pos + 9 > n or b[pos] != 1 \
-                        or b[pos + 1] != (2 if t == 5 else 3) \
-                        or b[pos + 2] or b[pos + 3] or b[pos + 4]:
-                    ok = False
-                    break
-                if t == 5:
-                    (cnt,) = struct.unpack_from("<I", b, pos + 5)
-                    pos += 9
-                    if cnt == 0 or pos + 16 * cnt > n:
-                        ok = False
-                        break
-                    rings_here.append((False, cnt, pos))
-                    pos += 16 * cnt
-                else:
-                    (nr,) = struct.unpack_from("<I", b, pos + 5)
-                    pos += 9
-                    if nr == 0:
-                        ok = False
-                        break
-                    for r in range(nr):
-                        if pos + 4 > n:
-                            ok = False
-                            break
-                        (cnt,) = struct.unpack_from("<I", b, pos)
-                        pos += 4
-                        if cnt == 0 or pos + 16 * cnt > n:
-                            ok = False
-                            break
-                        rings_here.append((r > 0, cnt, pos))
-                        pos += 16 * cnt
-                    if not ok:
-                        break
-            ok = ok and pos == n
-        else:
-            ok = False
-
-        if not ok:
-            scalar_rows.append(i)
-            continue
-        role[i] = _ROLE[t]
-        for is_int, cnt, cpos in rings_here:
-            ring_feat.append(i)
-            ring_int.append(is_int)
-            ring_n.append(cnt)
-            ring_src.append(base + cpos)
-        bufparts.append(b)
-        base += n
-
-    if not ring_feat:
-        return None, scalar_rows
-
-    big = np.frombuffer(b"".join(bufparts), dtype=np.uint8)
-    ring_n = np.asarray(ring_n, dtype=np.int64)
-    ring_src = np.asarray(ring_src, dtype=np.int64)
-    npts = int(ring_n.sum())
-    off = _cumsum0(ring_n)
-    within = np.arange(npts, dtype=np.int64) - np.repeat(off[:-1], ring_n)
-    pt_byte = np.repeat(ring_src, ring_n) + within * 16
-    raw = big[pt_byte[:, None] + np.arange(16)]
-    xy = raw.view("<f8").reshape(-1, 2)
-
-    st = {
-        "px": np.ascontiguousarray(xy[:, 0]),
-        "py": np.ascontiguousarray(xy[:, 1]),
-        "off": off,
-        "ring_feat": np.asarray(ring_feat, dtype=np.int64),
-        "ring_int": np.asarray(ring_int, dtype=bool),
+def _lane_state(rag):
+    """Ragged state for the vector lane from a wkb.read_ragged batch:
+    its line- and polygon-family rows (role per row, 0 = not in the
+    lane). Read Point rows are dropped here; like refused rows they take
+    the scalar loop."""
+    role = _ROLE[rag.code]
+    ring_feat = np.repeat(np.arange(len(role), dtype=np.int64),
+                          np.diff(rag.row_off))
+    k = np.diff(rag.ring_off)
+    lane = role[ring_feat] != 0
+    pts = np.repeat(lane, k)
+    return {
+        "px": rag.xs[pts],
+        "py": rag.ys[pts],
+        "off": _cumsum0(k[lane]),
+        "ring_feat": ring_feat[lane],
+        "ring_int": rag.ring_int[lane],
         "role": role,
     }
-    return st, scalar_rows
 
 
 # ------------------------------------------------------------ ring utils
@@ -918,11 +821,11 @@ def process_general(pdf, prop_names, buffer_units, metatile_scale,
             return None
         return pd.DataFrame(rows, columns=cols)
 
-    st, scalar_rows = _parse_rows(a_way)
-    for i in scalar_rows:
+    st = _lane_state(read_ragged(a_way))
+    for i in np.flatnonzero(st["role"] == 0).tolist():
         emit_scalar_row(i)
 
-    if st is not None:
+    if len(st["ring_feat"]):
         _vector_lane(st, len(a_zoom), size_mt, x0t, y0t, minx, maxx,
                      miny, maxy, extent_f, extent_i, do_simp,
                      buffer_units, epsilon, emit, emit_scalar_row,
@@ -936,9 +839,7 @@ def process_general(pdf, prop_names, buffer_units, metatile_scale,
 def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
                  extent_f, extent_i, do_simp, buffer_units, epsilon,
                  emit, emit_scalar_row, emit_many):
-    role_arr = np.zeros(F, dtype=np.int8)
-    for f, r in st["role"].items():
-        role_arr[f] = r
+    role_arr = st["role"]
 
     off = st["off"]
     ring_feat = st["ring_feat"]

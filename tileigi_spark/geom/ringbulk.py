@@ -18,7 +18,10 @@ vertices live in one flat (xs, ys) pair plus two offset arrays
 so every per-vertex quantity (zigzag delta, varint width) and every
 per-ring quantity (LineTo count) vectorizes across the batch, and the
 final byte stream is assembled with one ragged scatter instead of a
-Python loop. Byte output is pinned identical to the per-row path
+Python loop. The walk reads each Arrow batch once with wkb.read_ragged
+(the WKB reader the geometry lane and with_bbox share); mvt_rings
+applies the MVT ring rules to the whole batch, so a run is a slice.
+Byte output is pinned identical to the per-row path
 (mvt._geometry_commands semantics: per-ring closing-vertex drop,
 degenerate rings skipped, the delta cursor carrying across rings and
 polygons within a feature) by tests/test_mvt_ragged.py,
@@ -27,276 +30,52 @@ tests/test_mvt_bulk.py and the golden tile fixtures.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from .mvt import _tag_field, _varint3_parts
-
-_U32 = np.array([1, 1 << 8, 1 << 16, 1 << 24], dtype=np.int64)
-
-
-def _cumsum0(a):
-    out = np.empty(len(a) + 1, dtype=np.int64)
-    out[0] = 0
-    np.cumsum(a, out=out[1:])
-    return out
+from .wkb import Ragged, _cumsum0
 
 
-def _read_u32(buf, pos):
-    """Vectorized little-endian uint32 gather at byte positions `pos`."""
-    return buf[pos[:, None] + np.arange(4)].astype(np.int64) @ _U32
+# WKB type code -> MVT geometry type (Point, LineString and Polygon
+# families; 0 = MultiPoint or refused)
+_GTYPE = np.array([0, 1, 2, 3, 0, 2, 3], dtype=np.uint8)
 
 
-def _walk_poly(b):
-    """Header walk of one Polygon/MultiPolygon WKB: returns a list of
-    (point_byte_offset, closed_point_count) rings in emit order, or
-    None when the buffer is malformed."""
-    ln = len(b)
-    if ln < 9 or b[0] != 1:
-        return None
-    typ = b[1]
-    if b[2] or b[3] or b[4]:
-        return None
-    rings = []
+def mvt_rings(rag):
+    """A wkb.read_ragged batch shaped for the bulk framers once for all
+    its rows, so any run of rows is then a slice (Ragged.rows): code
+    becomes the MVT geometry type (1 point, 2 linestring family, 3
+    polygon family, 0 = per-row path), the vertices are cast to int64
+    and mvt._geometry_commands' ring rules are applied.
 
-    def poly_at(p):
-        if p + 9 > ln or b[p] != 1 or b[p + 1] != 3 or b[p + 2] or \
-                b[p + 3] or b[p + 4]:
-            return None
-        (nr,) = struct.unpack_from("<I", b, p + 5)
-        p += 9
-        for _ in range(nr):
-            if p + 4 > ln:
-                return None
-            (k,) = struct.unpack_from("<I", b, p)
-            p += 4
-            if p + 16 * k > ln:
-                return None
-            rings.append((p, k))
-            p += 16 * k
-        return p
-
-    if typ == 3:
-        if poly_at(0) != ln:
-            return None
-    elif typ == 6:
-        (npolys,) = struct.unpack_from("<I", b, 5)
-        p = 9
-        for _ in range(npolys):
-            p = poly_at(p)
-            if p is None:
-                return None
-        if p != ln:
-            return None
-    else:
-        return None
-    return rings
-
-
-def _walk_line(b):
-    """Header walk of one LineString/MultiLineString WKB (same contract
-    as _walk_poly)."""
-    ln = len(b)
-    if ln < 9 or b[0] != 1:
-        return None
-    typ = b[1]
-    if b[2] or b[3] or b[4]:
-        return None
-    lines = []
-    if typ == 2:
-        (k,) = struct.unpack_from("<I", b, 5)
-        if 9 + 16 * k != ln:
-            return None
-        lines.append((9, k))
-    elif typ == 5:
-        (nl,) = struct.unpack_from("<I", b, 5)
-        p = 9
-        for _ in range(nl):
-            if p + 9 > ln or b[p] != 1 or b[p + 1] != 2 or b[p + 2] or \
-                    b[p + 3] or b[p + 4]:
-                return None
-            (k,) = struct.unpack_from("<I", b, p + 5)
-            p += 9
-            if p + 16 * k > ln:
-                return None
-            lines.append((p, k))
-            p += 16 * k
-        if p != ln:
-            return None
-    else:
-        return None
-    return lines
-
-
-def _extract_points(buf, base, k):
-    """Gather (sum(k), 2) float64 vertices from the concatenated WKB
-    buffer. base: absolute byte offset of each ring's first coordinate;
-    k: closed point count per ring."""
-    tot = int(k.sum())
-    if tot == 0:
-        return (np.zeros(0, np.int64), np.zeros(0, np.int64))
-    intra = np.arange(tot, dtype=np.int64) - np.repeat(_cumsum0(k)[:-1], k)
-    ptb = np.repeat(base, k) + intra * 16
-    raw = buf[ptb[:, None] + np.arange(16)].copy()
-    pts = raw.view("<f8").reshape(tot, 2)
-    return pts[:, 0].astype(np.int64), pts[:, 1].astype(np.int64)
-
-
-def parse_poly_family(geoms):
-    """Parse a run of Polygon/MultiPolygon WKBs into ragged arrays for
-    bulk_frame_ragged_features, applying mvt._geometry_commands' ring
-    rules (drop the closing vertex when first == last, skip rings left
-    with < 3 vertices). Returns (xs, ys, ring_off, feat_off) or None
-    when any row is not a well-formed polygon-family WKB (caller falls
-    back to the per-row path)."""
-    n = len(geoms)
-    try:
-        lens = np.fromiter((len(g) for g in geoms), np.int64, n)
-    except TypeError:
-        return None
-    if n == 0 or int(lens.min()) < 9:
-        return None
-    foff = _cumsum0(lens)
-    buf = np.frombuffer(b"".join(bytes(g) for g in geoms), np.uint8)
-
-    order_ok = buf[foff[:-1]] == 1
-    typ = buf[foff[:-1] + 1]
-    hi0 = (buf[foff[:-1] + 2] | buf[foff[:-1] + 3] | buf[foff[:-1] + 4]) == 0
-    if not bool((order_ok & hi0 & ((typ == 3) | (typ == 6))).all()):
-        return None
-
-    # fast structural patterns, fully vectorized: single-ring Polygon
-    # and the MultiPolygon-of-one-single-ring twin that make_valid emits
-    is_p = typ == 3
-    nring0 = np.zeros(n, dtype=np.int64)
-    nring0[is_p] = _read_u32(buf, foff[:-1][is_p] + 5)
-    simple_p = is_p & (nring0 == 1) & (lens >= 13)
-    k_sp = np.zeros(n, dtype=np.int64)
-    k_sp[simple_p] = _read_u32(buf, foff[:-1][simple_p] + 9)
-    simple_p &= lens == 13 + 16 * k_sp
-
-    is_m = typ == 6
-    cand_m = np.flatnonzero(is_m & (lens >= 22))
-    simple_m = np.zeros(n, dtype=bool)
-    if len(cand_m):
-        f = foff[:-1][cand_m]
-        ok = ((_read_u32(buf, f + 5) == 1) & (buf[f + 9] == 1)
-              & (buf[f + 10] == 3)
-              & ((buf[f + 11] | buf[f + 12] | buf[f + 13]) == 0)
-              & (_read_u32(buf, f + 14) == 1))
-        km = _read_u32(buf, f + 18)
-        ok &= lens[cand_m] == 22 + 16 * km
-        simple_m[cand_m[ok]] = True
-        k_sp[cand_m[ok]] = km[ok]
-
-    simple = simple_p | simple_m
-    slow = np.flatnonzero(~simple)
-    slow_rings = {}
-    for i in slow.tolist():
-        r = _walk_poly(bytes(geoms[i]))
-        if r is None:
-            return None
-        slow_rings[i] = r
-
-    nrings = np.ones(n, dtype=np.int64)
-    for i, r in slow_rings.items():
-        nrings[i] = len(r)
-    feat_off = _cumsum0(nrings)
-    nr = int(feat_off[-1])
-    base = np.empty(nr, dtype=np.int64)
-    k = np.empty(nr, dtype=np.int64)
-    sidx = feat_off[:-1][simple]
-    base[sidx] = (foff[:-1][simple]
-                  + np.where(simple_m[simple], 22, 13))
-    k[sidx] = k_sp[simple]
-    for i, r in slow_rings.items():
-        o = feat_off[i]
-        for j, (pb, kk) in enumerate(r):
-            base[o + j] = foff[i] + pb
-            k[o + j] = kk
-    if nr and int(k.min()) < 1:
-        # rings declaring zero points: structurally legal WKB but the
-        # vectorized first/last compare can't index them — per-row path
-        return None
-
-    xs, ys = _extract_points(buf, base, k)
-    poff = _cumsum0(k)
-    first = poff[:-1]
-    last = poff[1:] - 1
-    closed = (xs[first] == xs[last]) & (ys[first] == ys[last]) & (k >= 2)
-    keep_k = k - closed.astype(np.int64)
-    ring_valid = keep_k >= 3
-    keep_k = np.where(ring_valid, keep_k, 0)
+    Polygon-family rows: drop a ring's closing vertex when first ==
+    last, then skip rings left with < 3 vertices (compared after the int
+    cast, as the per-row path compares). Line-family rows are kept
+    verbatim, but a row holding a line of < 2 points gets code 0 (its
+    rings stay; no run containing it is framed): the LineTo command
+    byte rides on the second vertex slot in the ragged writer. Points
+    keep their one vertex."""
+    xs = rag.xs.astype(np.int64)
+    ys = rag.ys.astype(np.int64)
+    code = _GTYPE[rag.code]
+    ring_off, row_off = rag.ring_off, rag.row_off
+    k = np.diff(ring_off)
+    ring_row = np.repeat(np.arange(len(code)), np.diff(row_off))
+    poly = code[ring_row] == 3
+    code[ring_row[(code[ring_row] == 2) & (k < 2)]] = 0
+    first = ring_off[:-1]
+    last = ring_off[1:] - 1
+    closed = poly & (xs[first] == xs[last]) & (ys[first] == ys[last]) \
+        & (k >= 2)
+    keep_k = k - closed
+    ring_valid = ~poly | (keep_k >= 3)
     keep = np.ones(len(xs), dtype=bool)
     keep[last[closed]] = False
     keep &= np.repeat(ring_valid, k)
-    xs = xs[keep]
-    ys = ys[keep]
-
-    # compact invalid rings away, preserving feature ring spans (cumsum
+    # compact skipped rings away, preserving row ring spans (cumsum
     # indexing, not reduceat — reduceat misbehaves on empty spans)
-    ring_off = _cumsum0(keep_k[ring_valid])
-    rc = _cumsum0(ring_valid.astype(np.int64))
-    feat_ring_off = rc[feat_off]
-    return xs, ys, ring_off, feat_ring_off
-
-
-def parse_line_family(geoms):
-    """Parse a run of LineString/MultiLineString WKBs into ragged arrays
-    (no closing-vertex rules — mvt._geometry_commands emits lines
-    verbatim). Returns (xs, ys, ring_off, feat_off) or None. Lines with
-    < 2 points bail to the per-row path (the LineTo command byte rides
-    on the second vertex slot in the ragged writer)."""
-    n = len(geoms)
-    try:
-        lens = np.fromiter((len(g) for g in geoms), np.int64, n)
-    except TypeError:
-        return None
-    if n == 0 or int(lens.min()) < 9:
-        return None
-    foff = _cumsum0(lens)
-    buf = np.frombuffer(b"".join(bytes(g) for g in geoms), np.uint8)
-
-    order_ok = buf[foff[:-1]] == 1
-    typ = buf[foff[:-1] + 1]
-    hi0 = (buf[foff[:-1] + 2] | buf[foff[:-1] + 3] | buf[foff[:-1] + 4]) == 0
-    if not bool((order_ok & hi0 & ((typ == 2) | (typ == 5))).all()):
-        return None
-
-    is_l = typ == 2
-    k_sl = np.zeros(n, dtype=np.int64)
-    k_sl[is_l] = _read_u32(buf, foff[:-1][is_l] + 5)
-    simple = is_l & (lens == 9 + 16 * k_sl)
-
-    slow = np.flatnonzero(~simple)
-    slow_lines = {}
-    for i in slow.tolist():
-        r = _walk_line(bytes(geoms[i]))
-        if r is None:
-            return None
-        slow_lines[i] = r
-
-    nlines = np.ones(n, dtype=np.int64)
-    for i, r in slow_lines.items():
-        nlines[i] = len(r)
-    feat_off = _cumsum0(nlines)
-    nr = int(feat_off[-1])
-    base = np.empty(nr, dtype=np.int64)
-    k = np.empty(nr, dtype=np.int64)
-    sidx = feat_off[:-1][simple]
-    base[sidx] = foff[:-1][simple] + 9
-    k[sidx] = k_sl[simple]
-    for i, r in slow_lines.items():
-        o = feat_off[i]
-        for j, (pb, kk) in enumerate(r):
-            base[o + j] = foff[i] + pb
-            k[o + j] = kk
-    if nr and int(k.min()) < 2:
-        return None
-
-    xs, ys = _extract_points(buf, base, k)
-    return xs, ys, _cumsum0(k), feat_off
+    return Ragged(code, xs[keep], ys[keep], _cumsum0(keep_k[ring_valid]),
+                  rag.ring_int[ring_valid], _cumsum0(ring_valid)[row_off])
 
 
 def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,

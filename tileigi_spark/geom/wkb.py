@@ -4,11 +4,25 @@ Supports the same geometry set the reference consumes from PostGIS
 `ST_AsBinary` (lib.rs:568-580): Point, LineString, Polygon, MultiPoint,
 MultiLineString, MultiPolygon. Decode failures raise ValueError; callers
 drop the row silently, matching the reference (lib.rs:572-579).
+
+Two readers share the format:
+
+* wkb_to_geom — the scalar reference: one row -> geometry tuple, any
+  byte order, EWKB SRID accepted.
+* read_ragged — the vectorized reader the engine's batch paths use (the
+  ragged geometry lane, the encode walk, with_bbox): a whole column ->
+  flat float64 vertex arrays with ring and row offsets. It reads only
+  little-endian 2-D ISO Point/LineString/Polygon/MultiLineString/
+  MultiPolygon rows of exact length and refuses everything else (code
+  0), so every caller keeps wkb_to_geom as its fallback for those rows.
 """
 
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
+
+import numpy as np
 
 _TYPES = {
     1: "Point",
@@ -108,9 +122,187 @@ class _Reader:
 
 def wkb_to_geom(buf: bytes):
     """bytes -> geometry tuple. Raises ValueError on malformed input."""
-    r = _Reader(bytes(buf))
-    g = r.read()
-    return g
+    return _Reader(bytes(buf)).read()
+
+
+def _cumsum0(a):
+    out = np.empty(len(a) + 1, dtype=np.int64)
+    out[0] = 0
+    np.cumsum(a, out=out[1:])
+    return out
+
+
+class Ragged(NamedTuple):
+    """A WKB column as ragged arrays (see read_ragged).
+
+    code     : (n,) uint8 WKB type code per row, 0 = refused
+    xs, ys   : flat float64 vertices, rows and rings in order
+    ring_off : (nr + 1,) vertex offsets per ring
+    ring_int : (nr,) True for a polygon's interior rings
+    row_off  : (n + 1,) ring offsets per row (refused rows have none)
+    """
+    code: np.ndarray
+    xs: np.ndarray
+    ys: np.ndarray
+    ring_off: np.ndarray
+    ring_int: np.ndarray
+    row_off: np.ndarray
+
+    def rows(self, s, e):
+        """Rows [s, e) as (xs, ys, ring_off, row_off), offsets rebased
+        to the slice (views of xs/ys, no copy)."""
+        r0, r1 = self.row_off[s], self.row_off[e]
+        v0, v1 = self.ring_off[r0], self.ring_off[r1]
+        return (self.xs[v0:v1], self.ys[v0:v1],
+                self.ring_off[r0:r1 + 1] - v0, self.row_off[s:e + 1] - r0)
+
+
+def _walk(buf, p, end, typ):
+    """Header walk of one LineString/Polygon/MultiLineString/
+    MultiPolygon row at buf[p:end] (byte order and type already
+    checked): [(interior, point count, coordinate byte offset)] per
+    ring, or None when the row is malformed, has trailing bytes or a
+    zero-count ring or member."""
+    rings = []
+
+    def count(p):   # 0 when truncated: refused like a zero count
+        return struct.unpack_from("<I", buf, p)[0] if p + 4 <= end else 0
+
+    def ring(p, interior):
+        k = count(p)
+        if not k or p + 4 + 16 * k > end:
+            return None
+        rings.append((interior, k, p + 4))
+        return p + 4 + 16 * k
+
+    def polygon(p):
+        nr = count(p)
+        p += 4
+        for r in range(nr):
+            p = ring(p, r > 0)
+            if p is None:
+                return None
+        return p if nr else None
+
+    p += 5
+    if typ == 2:
+        p = ring(p, False)
+    elif typ == 3:
+        p = polygon(p)
+    else:
+        nm = count(p)
+        p += 4
+        member = 2 if typ == 5 else 3
+        for _ in range(nm):
+            if (p + 5 > end or buf[p] != 1 or buf[p + 1] != member
+                    or buf[p + 2] or buf[p + 3] or buf[p + 4]):
+                return None
+            p = ring(p + 5, False) if typ == 5 else polygon(p + 5)
+            if p is None:
+                return None
+        if not nm:
+            return None
+    return rings if p == end else None
+
+
+def read_ragged(ways) -> Ragged:
+    """Read a column of WKB rows (bytes-like or None) into one Ragged.
+
+    Rows read: little-endian, 2-D, ISO type codes 1/2/3/5/6, every ring
+    and member non-empty, no trailing bytes; their coordinates equal
+    wkb_to_geom's. A Point is one ring of one vertex, a MultiLineString
+    one ring per member. Every other row (big-endian, EWKB or Z/M codes,
+    MultiPoint, malformed, None) gets code 0 and no rings.
+
+    The common single-ring shapes (Point, LineString, one-ring Polygon
+    and the MultiPolygon-of-one twin make_valid emits) are recognized
+    from their headers in numpy; the rest take one struct walk per row
+    (_walk)."""
+    n = len(ways)
+    try:
+        buf = b"".join(ways)
+    except TypeError:
+        ways = [w if isinstance(w, (bytes, bytearray, memoryview)) else b""
+                for w in ways]
+        buf = b"".join(ways)
+    lens = np.fromiter(map(len, ways), np.int64, n)
+    foff = _cumsum0(lens)
+    f = foff[:-1]
+    b = np.frombuffer(buf, np.uint8)
+    # element i of these views is the value stored at byte offset i
+    u32 = np.ndarray((max(len(buf) - 3, 0),), "<u4", buf, strides=(1,))
+    f64 = np.ndarray((max(len(buf) - 7, 0),), "<f8", buf, strides=(1,))
+
+    def u32_at(pos):
+        return u32[pos].astype(np.int64)
+
+    # every probe below stays inside its row: headers are read only on
+    # rows long enough to hold them
+    typ = np.zeros(n, np.uint8)
+    c = np.flatnonzero(lens >= 9)
+    fc = f[c]
+    tc = b[fc + 1]
+    ok = ((b[fc] == 1) & ((b[fc + 2] | b[fc + 3] | b[fc + 4]) == 0)
+          & (tc >= 1) & (tc <= 6) & (tc != 4)
+          & ((tc != 1) | (lens[c] == 21)))
+    typ[c[ok]] = tc[ok]
+    # single-ring fast patterns: (rows, count of their one ring, byte
+    # offset of its first coordinate)
+    k = np.zeros(n, np.int64)
+    head = np.zeros(n, np.int64)
+    fast = typ == 1
+    k[fast] = 1
+    head[fast] = 5
+    for t, h in ((2, 9), (3, 13), (6, 22)):
+        c = np.flatnonzero((typ == t) & (lens >= h))
+        fc = f[c]
+        kc = u32_at(fc + h - 4)
+        ok = (kc >= 1) & (lens[c] == h + 16 * kc)
+        if t == 3:
+            ok &= u32_at(fc + 5) == 1
+        elif t == 6:
+            ok &= ((u32_at(fc + 5) == 1) & (b[fc + 9] == 1)
+                   & (b[fc + 10] == 3)
+                   & ((b[fc + 11] | b[fc + 12] | b[fc + 13]) == 0)
+                   & (u32_at(fc + 14) == 1))
+        c = c[ok]
+        fast[c] = True
+        k[c] = kc[ok]
+        head[c] = h
+
+    nrings = fast.astype(np.int64)
+    walked = []
+    for i in np.flatnonzero((typ != 0) & ~fast).tolist():
+        rings = _walk(buf, int(f[i]), int(foff[i + 1]), int(typ[i]))
+        if rings is None:
+            typ[i] = 0
+        else:
+            nrings[i] = len(rings)
+            walked.extend(rings)
+
+    row_off = _cumsum0(nrings)
+    nr = int(row_off[-1])
+    ring_k = np.empty(nr, np.int64)
+    ring_at = np.empty(nr, np.int64)
+    ring_int = np.zeros(nr, bool)
+    at = row_off[:-1][fast]
+    ring_k[at] = k[fast]
+    ring_at[at] = f[fast] + head[fast]
+    if walked:
+        slow = (typ != 0) & ~fast
+        m = nrings[slow]
+        at = (np.repeat(row_off[:-1][slow] - _cumsum0(m)[:-1], m)
+              + np.arange(len(walked)))
+        w_int, w_k, w_at = zip(*walked)
+        ring_int[at] = w_int
+        ring_k[at] = w_k
+        ring_at[at] = w_at
+
+    ring_off = _cumsum0(ring_k)
+    tot = int(ring_off[-1])
+    at = (np.repeat(ring_at - 16 * ring_off[:-1], ring_k)
+          + 16 * np.arange(tot, dtype=np.int64))
+    return Ragged(typ, f64[at], f64[at + 8], ring_off, ring_int, row_off)
 
 
 def _w_coords(out, pts):

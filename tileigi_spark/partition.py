@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import math
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -50,6 +49,10 @@ from .mercator import MERC_MAX, bbox_tile_range, cover_slack
 WORLD = 2.0 * MERC_MAX
 META_FILE = "_tileigi_cells.json"
 _HELPER_COLS = ("cell_x", "cell_y", "cell_x0", "cell_y0")
+# read_cell_partitioned lists a read rectangle's cell directories
+# itself only up to this many cells; larger rectangles read the root
+# and prune on the partition columns
+_CELL_READ_DIR_CAP = 256
 
 
 def cell_slack(cell_zoom: int, buffer_px: int) -> float:
@@ -292,9 +295,8 @@ def read_cell_partitioned(spark: SparkSession, path: str,
                                    meta.get("buffer_px", 2))
     n = 1 << meta["cell_zoom"]
     rect_cells = (rx1 - rx0 + 1) * (ry1 - ry0 + 1)
-    dir_cap = int(os.environ.get("TILEIGI_CELL_READ_DIR_CAP", "256"))
     df = None
-    if rect_cells < n * n and rect_cells <= dir_cap:
+    if rect_cells < n * n and rect_cells <= _CELL_READ_DIR_CAP:
         dirs = _rect_cell_dirs(spark, path, rx0, ry0, rx1, ry1)
         if dirs:
             df = (spark.read.option("basePath", path).parquet(*dirs))

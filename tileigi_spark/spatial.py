@@ -6,6 +6,8 @@ the (much smaller) candidate set, Arrow-batched.
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -17,6 +19,7 @@ from .index import cell_col, cell_xy_cols, bbox_cover_cells, disk_cells
 from .mercator import MERC_MAX
 
 WORLD = 2.0 * MERC_MAX
+_log = logging.getLogger(__name__)
 
 
 def _point_in_rings(px, py, rings) -> bool:
@@ -374,15 +377,7 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
     are deleted scheme-aware, the final `out` dir lives until the caller
     finishes consuming the returned (lazy) DataFrame.
     """
-    import os
-    import sys
     import time as _time
-
-    verbose = os.environ.get("TILEIGI_KNN_DEBUG") == "1"
-
-    def _dbg(msg):
-        if verbose:
-            print(f"knn_join: {msg}", file=sys.stderr, flush=True)
 
     if index_zoom is None:
         import math
@@ -447,8 +442,8 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
             round_dirs.append(f"{work}/round_{radius}")
             ranked.write.mode("overwrite").parquet(f"{work}/round_{radius}")
             rr = spark.read.parquet(f"{work}/round_{radius}")
-            _dbg(f"radius={radius} n_rem={n_rem} round-write "
-                 f"{_time.time() - t0:.1f}s")
+            _log.debug("knn_join: radius=%d n_rem=%d round-write %.1fs",
+                       radius, n_rem, _time.time() - t0)
             # queries fully satisfied AND whose k-th neighbor is provably
             # inside the ring (distance <= radius*cell_span) are final
             span = (2.0 * 20037508.342789244) / n
@@ -467,7 +462,7 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
             done_q = finished.select(query_id).distinct()
             n_done = done_q.count()
             if n_done >= n_rem:
-                _dbg(f"radius={radius} all {n_rem} done")
+                _log.debug("knn_join: radius=%d all %d done", radius, n_rem)
                 break
             nxt = remaining.join(F.broadcast(done_q), on=query_id,
                                  how="left_anti")
@@ -475,8 +470,8 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
             nxt.write.mode("overwrite").parquet(f"{work}/rem_{radius}")
             remaining = spark.read.parquet(f"{work}/rem_{radius}")
             n_rem -= n_done
-            _dbg(f"radius={radius} bookkeeping {_time.time() - t0:.1f}s"
-                 f" next_rem={n_rem}")
+            _log.debug("knn_join: radius=%d bookkeeping %.1fs next_rem=%d",
+                       radius, _time.time() - t0, n_rem)
             # x4 growth clamped at the grid size: each extra round
             # quadruples the guaranteed-safe disk (stragglers converge in
             # O(log4 n) candidate scans), and the clamp guarantees the

@@ -273,7 +273,7 @@ streams. The engine's vectorized numpy stages (remap, byte-matrix
 WKB/MVT assembly) stream flat arrays, so before round 5's
 cache-resident chunking the measured pipeline efficiency sat BETWEEN
 the two ceilings; per-core CPU inflation from 2 to 8 threads
-(executorCpuTime per unit work, tools/profile_pyramid.py) is the
+(executorCpuTime per unit work, perfbench's spark.executor_cpu_s) is the
 direct signature. (Round-5 update: after chunking, the engine's own
 kernels measure 0.80-1.0 as independent processes at both spans — the
 residual local-mode gap is the shared single-JVM layer; see the

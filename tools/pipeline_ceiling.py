@@ -13,8 +13,9 @@ the ceilings":
    kernel) as INDEPENDENT processes at 2 and 8 workers — no Spark, no
    JVM, pure machine behavior of this exact code;
 2. combine their per-kernel efficiencies with the pipeline's stage-time
-   weights (from tools/profile_pyramid.py: scan+geometry / partial
-   encode / assemble) into a harmonic prediction
+   weights (from a traced perfbench run's spark.executor_cpu_s and
+   engine.geometry.s / engine.encode.s / engine.assemble.s:
+   scan+geometry / partial encode / assemble) into a harmonic prediction
        eff_pred = 1 / sum_i(w_i / e_i)
    (each stage's 8-proc time inflates by 1/e_i, so the pipeline's
    total inflates by the weighted harmonic mean);
@@ -218,7 +219,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--weights", default="0.45,0.35,0.20",
                     help="pipeline busy-time fractions geometry,encode,"
-                         "assemble (from tools/profile_pyramid.py)")
+                         "assemble (from a traced perfbench run)")
     ap.add_argument("--measured", type=float, default=None,
                     help="engine-measured 2->8 efficiency to compare")
     ap.add_argument("--procs", default="2,8")
