@@ -96,6 +96,23 @@ def test_crash_between_write_and_mark_is_safe(spark, tmp_path):
     assert not glob.glob(str(tmp_path / "crash" / "staging_z*"))
 
 
+def test_tilestore_absent_vs_corrupt_table(spark, tmp_path):
+    """A missing or empty table reads as absent (None); a corrupt
+    checkpoint file raises instead of passing for "nothing done", which
+    would make a resume silently re-render everything."""
+    from tileigi_spark.io import TileStore
+
+    store = TileStore(str(tmp_path / "store"))
+    assert store.done_keys(spark) is None        # no directory
+    assert store.read_tiles(spark) is None
+    os.makedirs(tmp_path / "store" / "checkpoint")
+    assert store.done_keys(spark) is None        # empty directory
+    (tmp_path / "store" / "checkpoint" / "part-0.parquet").write_bytes(
+        b"not a parquet file")
+    with pytest.raises(Exception, match="part-0.parquet"):
+        store.done_keys(spark)
+
+
 def test_mbtiles_export(spark, tmp_path):
     from tileigi_spark.io import export_mbtiles
 

@@ -1,10 +1,8 @@
-"""Parity test: the vectorized point fast path in geometry_stage must be
-row-for-row identical to the recursive slow path, including tile-border
+"""Parity test: the vectorized points kernel of the geometry stage must be
+row-for-row identical to the scalar chain, including tile-border
 duplication and buffered fan-out."""
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from tileigi_spark import engine as eng
 from tileigi_spark.geom.wkb import geom_to_wkb
@@ -40,26 +38,31 @@ def _mk_points(spark):
 
 @pytest.mark.parametrize("buffer_px", [0, 2])
 def test_fast_slow_parity(spark, buffer_px, monkeypatch):
+    """Fast side: geometry_stage through Spark (the router's points
+    kernel). Slow side: the same covered rows through process_general
+    with SPARK_GRAFT_FORCE_SCALAR_GEOM=1 set in this process, i.e. the
+    scalar chain for every row."""
+    import tileigi_spark.geom.batch as B
+
     feats = _mk_points(spark)
     zooms = [0, 3, 5]
+    covered = eng.cover_metatiles(eng.with_bbox(feats), zooms, buffer_px)
 
-    def build(force_slow):
-        if force_slow:
-            monkeypatch.setattr(eng, "_is_simple_point_wkb",
-                                lambda w: False)
-        else:
-            monkeypatch.undo()
-        covered = eng.cover_metatiles(eng.with_bbox(feats), zooms, buffer_px)
-        pieces = eng.geometry_stage(covered, "l", buffer_px,
-                                    global_maxzoom=14)
-        out = sorted(
-            (r["zoom"], r["x"], r["y"], r["feature_id"], bytes(r["geom"]),
-             r["name"])
-            for r in pieces.collect())
-        return out
+    pieces = eng.geometry_stage(covered, "l", buffer_px, global_maxzoom=14)
+    fast = sorted(
+        (r["zoom"], r["x"], r["y"], r["feature_id"], bytes(r["geom"]),
+         r["name"])
+        for r in pieces.collect())
 
-    fast = build(False)
-    slow = build(True)
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_SCALAR_GEOM", "1")
+    monkeypatch.setattr(B, "_points_lane", None)  # must not be reached
+    pdf = covered.drop("xmin", "ymin", "xmax", "ymax").toPandas()
+    slow_df = B.process_general(pdf, ["name"], buffer_px * 16, 8, 14, 8)
+    slow = sorted(
+        (int(r.zoom), int(r.x), int(r.y), int(r.feature_id), bytes(r.geom),
+         r.name)
+        for r in slow_df.itertuples(index=False))
+
     assert len(fast) > 0
     assert fast == slow
 

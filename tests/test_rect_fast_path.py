@@ -8,7 +8,8 @@ import numpy as np
 import pandas as pd
 
 from tileigi_spark.engine import (MERC_MAX, WORLD, _is_ring5_polygon_wkb,
-                                  _rects_fast_path, _shift_geom)
+                                  _rects_fast_path)
+from tileigi_spark.geom.remap import shift_geom as _shift_geom
 from tileigi_spark.geom.clip import clip_geometry_to_tiles, clip_to_bbox
 from tileigi_spark.geom.simplify import remove_unneeded_points, simplify
 from tileigi_spark.geom.validity import (ensure_polygon_orientation,
@@ -210,13 +211,14 @@ def test_non_rect_ring5_goes_to_leftover():
 
 
 def test_rect_chunked_equals_whole(monkeypatch):
-    """_rects_fast_path slices oversized batches into _RECT_CHUNK rows
-    (cache-resident temporaries). Unlike the
+    """The rect lane runs oversized batches in _CHUNK_FEATURES-row
+    chunks (cache-resident temporaries). Unlike the
     ragged lane's set-equality contract, the rect lane promises
     ORDER-IDENTICAL output — downstream MVT bytes depend on feature
     order within a tile — so compare frames row-for-row, and leftover
     index-for-index, against a whole-batch pass."""
     import tileigi_spark.engine as E
+    import tileigi_spark.geom.batch as B
 
     rng = np.random.default_rng(99)
     rows = []
@@ -245,9 +247,9 @@ def test_rect_chunked_equals_whole(monkeypatch):
     pdf = pd.DataFrame(
         rows, columns=["way", "zoom", "mtx", "mty", "feature_id", "kind"])
 
-    monkeypatch.setattr(E, "_RECT_CHUNK", 10 ** 9)
+    monkeypatch.setattr(B, "_CHUNK_FEATURES", 10 ** 9)
     fw, lw = E._rects_fast_path(pdf, ["kind"], 32, 8, 14)
-    monkeypatch.setattr(E, "_RECT_CHUNK", 23)
+    monkeypatch.setattr(B, "_CHUNK_FEATURES", 23)
     fc, lc = E._rects_fast_path(pdf, ["kind"], 32, 8, 14)
 
     assert len(fw) == len(fc)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from tileigi_spark.fixtures import admin_polygons_df, make_admin_polygons
 from tileigi_spark.spatial import point_in_polygon_join, knn_join, \
     point_in_polygon
-from tileigi_spark.geom.wkb import wkb_to_geom
+from tileigi_spark.geom.wkb import geom_to_wkb, wkb_to_geom
 from tileigi_spark.mercator import MERC_MAX
 
 
@@ -185,3 +185,47 @@ def test_pip_streamed_fallback_matches_broadcast(spark):
     fp = {(r["pid"], r["admin_id"]) for r in fast.collect()}
     sp = {(r["pid"], r["admin_id"]) for r in slow.collect()}
     assert fp == sp and len(fp) > 20
+
+
+def _pip_table(spark, quad=False):
+    """Boxes of both windings, one as a MultiPolygon-of-one; with
+    quad=True one box becomes a non-axis quad."""
+    rows = []
+    for i in range(12):
+        x0 = -MERC_MAX * 0.8 + (i % 4) * MERC_MAX * 0.4
+        y0 = -MERC_MAX * 0.6 + (i // 4) * MERC_MAX * 0.4
+        x1, y1 = x0 + MERC_MAX * 0.3, y0 + MERC_MAX * 0.35
+        ring = [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
+        if i % 2:
+            ring = ring[::-1]
+        geom = ("Polygon", [ring])
+        if i == 5:
+            geom = ("MultiPolygon", [[ring]])
+        if quad and i == 6:
+            geom = ("Polygon", [[(x0, y0), (x1, y0 + MERC_MAX * 0.1),
+                                 (x1, y1), (x0, y1), (x0, y0)]])
+        rows.append((100 + i, geom_to_wkb(geom)))
+    return spark.createDataFrame(rows, "area_id long, way binary"), rows
+
+
+def _pip_check(spark, quad):
+    points, prows = _point_grid(spark, 400)
+    polys, rows = _pip_table(spark, quad)
+    got = point_in_polygon_join(points, polys, index_zoom=5)
+    pairs = {(r["pid"], r["area_id"]) for r in got.collect()}
+    expected = {(pid, aid) for pid, mx, my in prows for aid, w in rows
+                if point_in_polygon(mx, my, wkb_to_geom(w))}
+    assert pairs == expected and len(expected) > 20
+    return got._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pip_all_rects_refine_in_the_jvm(spark):
+    """Every polygon an axis rect (both windings, a MultiPolygon-of-one):
+    the refine is a JVM comparison, no Python eval node in the plan."""
+    plan = _pip_check(spark, quad=False)
+    assert "EvalPython" not in plan
+
+
+def test_pip_non_axis_quad_takes_the_exact_refine(spark):
+    plan = _pip_check(spark, quad=True)
+    assert "EvalPython" in plan

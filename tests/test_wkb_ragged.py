@@ -241,7 +241,8 @@ def test_bbox_arrays_match_per_row_decode():
     ]
     order = rng.permutation(len(ways))
     ways = [ways[i] for i in order]
-    got = engine._bbox_arrays(pd.Series(ways, dtype=object))
+    col = pd.Series(ways, dtype=object)
+    got = engine._bbox_arrays(col, read_ragged(col))
     want = old_bbox(ways)
     for k in want:
         np.testing.assert_array_equal(got[k], want[k], err_msg=k)

@@ -6,7 +6,8 @@ Spark-first re-expression of the reference lifecycle (lib.rs:464-736):
   features ──(bbox cover explode = J1, no shuffle)──▶ (zoom, metatile) rows
       │ one mapInPandas pass: remap → dedup/spikes → exact-int RDP →
       │ buffered clip → quadtree tile split (J3) → make_valid → winding →
-      │ per-tile shift (G2-G16); vectorized numpy fast path for points
+      │ per-tile shift (G2-G16); geom.batch.process_general routes each
+      │ row to the points, axis-rect, ragged or scalar lane
       ▼
   repartition(z,x,y,salt) + sortWithinPartitions + mapInPandas
       — partial MVT layer encode (A1; salt breaks z0-z4 hot tiles, O13)
@@ -36,7 +37,7 @@ from pyspark.sql.types import (
 from .config import Layers
 from .mercator import (MERC_MAX, bbox_metatile_range, bbox_tile_range,
                        cover_slack)
-from .geom.wkb import _cumsum0, wkb_to_geom, geom_to_wkb, read_ragged
+from .geom.wkb import _cumsum0, wkb_to_geom, read_ragged
 from .geom import mvt, ringbulk
 
 WORLD = 2.0 * MERC_MAX
@@ -57,19 +58,13 @@ def _prop_columns(df: DataFrame, exclude=("way", "feature_id")):
     return out
 
 
-# per-tile shift (G12): one shared definition in geom.remap, used by
-# the scalar pipeline here, the axis-rect fast path, and the batch lane
-from .geom.remap import shift_geom as _shift_geom  # noqa: E402
-
-
-def _bbox_arrays(ways):
-    """Per-row bbox arrays from a WKB column (NaN = undecodable). Rows
-    wkb.read_ragged reads take min/max from its vertex arrays; the rows
-    it refuses (big-endian, EWKB, MultiPoint, malformed) are decoded by
-    wkb_to_geom. Both follow Python's min/max: a NaN first coordinate
-    gives NaN, later NaNs are skipped."""
+def _bbox_arrays(ways, rag):
+    """Per-row bbox arrays of a WKB column (NaN = undecodable) that
+    wkb.read_ragged read as `rag`. Rows it read take min/max from its
+    vertex arrays; the rows it refuses (big-endian, EWKB, MultiPoint,
+    malformed) are decoded by wkb_to_geom. Both follow Python's min/max:
+    a NaN first coordinate gives NaN, later NaNs are skipped."""
     ways = list(ways)
-    rag = read_ragged(ways)
     out = {k: np.full(len(ways), np.nan)
            for k in ("xmin", "ymin", "xmax", "ymax")}
     read = rag.code != 0
@@ -117,7 +112,7 @@ def with_bbox(features_df: DataFrame, way_col: str = "way") -> DataFrame:
 
     def run(iterator):
         for pdf in iterator:
-            bb = _bbox_arrays(pdf[way_col])
+            bb = _bbox_arrays(pdf[way_col], read_ragged(pdf[way_col]))
             keep = ~np.isnan(bb["xmin"])
             out = pdf.assign(**bb)
             if not keep.all():
@@ -258,112 +253,21 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
 
 def _points_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
                       metatile_scale: int):
-    """Vectorized numpy pipeline for simple WKB points (the dominant case
-    for geotagged web pages). Exactly equivalent to the recursive path:
-    remap (round half away from zero), clip to the buffered bbox, and the
-    quadtree slice collapses to the closed interval
-    [t*4096 - buffer, (t+1)*4096 + buffer] per tile t (verified by the
-    fast/slow parity test). Returns an output-piece DataFrame or None.
+    """The points lane on its own, for the benchmark probes and tools
+    that time it: pdf rows are simple points, which process_general
+    routes to its points kernel. Returns the pieces frame or None."""
+    from .geom.batch import process_general
 
-    The fan-out=1 case (point interior to one tile — overwhelmingly
-    common) is assembled entirely from numpy arrays, including the WKB
-    bytes as one byte matrix (same pattern as extract.geotag_pages);
-    only points within buffer distance of a tile edge drop to the
-    per-row loop."""
-    import numpy as np
-
-    ways = pdf["way"]
-    n_rows = len(pdf)
-    buf = np.frombuffer(b"".join(ways), dtype=np.uint8).reshape(n_rows, 21)
-    xs = buf[:, 5:13].copy().view(np.float64).ravel()
-    ys = buf[:, 13:21].copy().view(np.float64).ravel()
-
-    zooms = pdf["zoom"].to_numpy(np.int64)
-    mtx = pdf["mtx"].to_numpy(np.int64)
-    mty = pdf["mty"].to_numpy(np.int64)
-    size_mt = np.minimum(metatile_scale, 1 << zooms)
-    x0t = mtx * size_mt
-    y0t = mty * size_mt
-    nz = (1 << zooms).astype(np.float64)
-    minx = x0t / nz * WORLD - MERC_MAX
-    maxx = (x0t + size_mt) / nz * WORLD - MERC_MAX
-    maxy = MERC_MAX - y0t / nz * WORLD
-    miny = MERC_MAX - (y0t + size_mt) / nz * WORLD
-    extent = 4096.0 * size_mt
-
-    vx = ((xs - minx) / (maxx - minx)) * extent
-    vy = ((maxy - ys) / (maxy - miny)) * extent
-    # f64::round — half away from zero
-    u = np.where(vx >= 0, np.floor(vx + 0.5), np.ceil(vx - 0.5)).astype(np.int64)
-    v = np.where(vy >= 0, np.floor(vy + 0.5), np.ceil(vy - 0.5)).astype(np.int64)
-
-    ext_i = extent.astype(np.int64)
-    keep = ((u >= -buffer_units) & (u <= ext_i + buffer_units) &
-            (v >= -buffer_units) & (v <= ext_i + buffer_units))
-    if not keep.any():
-        return None
-
-    idx = np.nonzero(keep)[0]
-    u, v = u[idx], v[idx]
-    size_mt, x0t, y0t = size_mt[idx], x0t[idx], y0t[idx]
-    zoom_k = zooms[idx]
-    fid = pdf["feature_id"].to_numpy(np.int64)[idx]
-
-    tx_lo = np.maximum(-(-(u - buffer_units) // 4096) - 1, 0)
-    tx_hi = np.minimum((u + buffer_units) // 4096, size_mt - 1)
-    ty_lo = np.maximum(-(-(v - buffer_units) // 4096) - 1, 0)
-    ty_hi = np.minimum((v + buffer_units) // 4096, size_mt - 1)
-
-    prop_vals = {p: pdf[p].to_numpy()[idx] for p in prop_names}
-    cols = ["zoom", "x", "y", "feature_id", "geom"] + prop_names
-    frames = []
-
-    fan1 = (tx_hi == tx_lo) & (ty_hi == ty_lo)
-    s = np.nonzero(fan1)[0]
-    if len(s):
-        tx, ty = tx_lo[s], ty_lo[s]
-        gx = (u[s] - tx * 4096).astype("<f8")
-        gy = (v[s] - ty * 4096).astype("<f8")
-        m = len(s)
-        wb = np.empty((m, 21), dtype=np.uint8)
-        wb[:, 0] = 1   # little-endian
-        wb[:, 1] = 1   # wkbPoint
-        wb[:, 2:5] = 0
-        wb[:, 5:13] = gx.view(np.uint8).reshape(-1, 8)
-        wb[:, 13:21] = gy.view(np.uint8).reshape(-1, 8)
-        raw = wb.tobytes()
-        d = {"zoom": zoom_k[s], "x": x0t[s] + tx, "y": y0t[s] + ty,
-             "feature_id": fid[s],
-             "geom": pd.Series([raw[i * 21:(i + 1) * 21] for i in range(m)],
-                               dtype=object)}
-        for p in prop_names:
-            d[p] = prop_vals[p][s]
-        frames.append(pd.DataFrame(d, columns=cols))
-
-    multi = np.nonzero(~fan1)[0]
-    if len(multi):
-        rows = {k: [] for k in cols}
-        for j in multi:
-            for tx in range(tx_lo[j], tx_hi[j] + 1):
-                for ty in range(ty_lo[j], ty_hi[j] + 1):
-                    rows["zoom"].append(int(zoom_k[j]))
-                    rows["x"].append(int(x0t[j] + tx))
-                    rows["y"].append(int(y0t[j] + ty))
-                    rows["feature_id"].append(int(fid[j]))
-                    rows["geom"].append(geom_to_wkb(
-                        ("Point", (int(u[j]) - tx * 4096,
-                                   int(v[j]) - ty * 4096))))
-                    for p in prop_names:
-                        rows[p].append(prop_vals[p][j])
-        frames.append(pd.DataFrame(rows, columns=cols))
-
-    if not frames:
-        return None
-    return frames[0] if len(frames) == 1 else \
-        pd.concat(frames, ignore_index=True)
+    return process_general(pdf, prop_names, buffer_units, metatile_scale,
+                           0, 8)
 
 
 def _is_simple_point_wkb(w) -> bool:
+    """One row's test for the router's points route (the rows
+    wkb.read_ragged reads as code 1). The geometry stage never calls it:
+    it exists for the benchmark probes, which classify rows one at a
+    time, where a one-row read_ragged would cost ~160 us; tests/
+    test_geom_router.py pins it to the reader."""
     return (w is not None and len(w) == 21 and w[0] == 1
             and w[1] == 1 and w[2] == 0 and w[3] == 0 and w[4] == 0)
 
@@ -375,7 +279,10 @@ _RING5_MULTI_HEADER = bytes([1, 6, 0, 0, 0, 1, 0, 0, 0]) + _RING5_HEADER
 def _is_ring5_polygon_wkb(w) -> bool:
     """Single-ring 5-point closed polygon WKB (93 bytes) — the shape of
     every clipped box/rectangle piece. Closure check compares the first
-    and last point bytes directly."""
+    and last point bytes directly. One row's test for the candidates of
+    the router's rect route (geom.batch.axis_rect_rows adds the axis
+    test), kept for the benchmark probes and pinned to the router like
+    _is_simple_point_wkb."""
     return (w is not None and len(w) == 93
             and w[:13] == _RING5_HEADER and w[13:29] == w[77:93])
 
@@ -419,128 +326,19 @@ def _is_ring5_geom_wkb(w) -> bool:
 _TASKS_PER_CORE = 2
 
 
-# cache-resident slice size for the rect lane, same lever as the ragged
-# lane's _CHUNK_FEATURES (geom/batch.py): measured offline, the
-# whole-batch rect kernel loses ~1.3x at the 20k Arrow cap to
-# temporaries spilling out of cache (perfbench's traced run reports the
-# rect lane as engine.geometry.rect.us_per_feature). The points
-# lane is deliberately NOT chunked — its working set is ~4x smaller and
-# per-call constants dominate (chunking measured SLOWER there).
-_RECT_CHUNK = 4096
-
-
 def _rects_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
                      metatile_scale: int, global_maxzoom: int):
-    """Vectorized pipeline for axis-aligned rectangle polygons (the
-    closed-form twin of the scalar remap→simplify→clip→slice→make_valid
-    chain — see geom/rectfast.py for the derivation). pdf rows are
-    candidates whose WKB passed the ring5 header check; rows that are
-    not axis-aligned rects are returned for the scalar loop.
+    """The rect lane on its own, for the benchmark probes and tests that
+    time or pin it: the rows of pdf that process_general routes to its
+    rect kernel (geom.batch.axis_rect_rows) are run through it; the
+    others are handed back. Returns (frame_or_None, leftover_pdf)."""
+    from .geom.batch import axis_rect_rows, process_general
 
-    Oversized batches are processed in _RECT_CHUNK-row slices; slice
-    order preserves row order, so output rows (and therefore downstream
-    MVT bytes) are identical to a whole-batch pass.
-
-    Returns (frame_or_None, leftover_pdf)."""
-    import numpy as np
-
-    from .geom.rectfast import rect_pieces, rings_wkb
-
-    if len(pdf) > _RECT_CHUNK:
-        frames, lefts = [], []
-        for s in range(0, len(pdf), _RECT_CHUNK):
-            f, lo = _rects_fast_path(pdf.iloc[s:s + _RECT_CHUNK],
-                                     prop_names, buffer_units,
-                                     metatile_scale, global_maxzoom)
-            if f is not None:
-                frames.append(f)
-            if len(lo):
-                lefts.append(lo)
-        frame = (pd.concat(frames, ignore_index=True) if len(frames) > 1
-                 else frames[0] if frames else None)
-        leftover = (pd.concat(lefts) if len(lefts) > 1
-                    else lefts[0] if lefts else pdf.iloc[0:0])
-        return frame, leftover
-
-    n_rows = len(pdf)
-    buf = np.frombuffer(b"".join(pdf["way"]), dtype=np.uint8) \
-        .reshape(n_rows, 93)
-    pts = buf[:, 13:93].copy().view("<f8").reshape(n_rows, 5, 2)
-    x = pts[:, :4, 0]
-    y = pts[:, :4, 1]
-    # exactly-one-coord edges with alternating axes => proper axis rect
-    # with 4 distinct corners (closure already verified byte-wise)
-    xn = np.roll(x, -1, axis=1)
-    yn = np.roll(y, -1, axis=1)
-    dx = x != xn
-    dy = y != yn
-    one = dx ^ dy
-    alt = (dx[:, :3] != dx[:, 1:]).all(axis=1)
-    is_rect = one.all(axis=1) & alt
-
-    rects = pdf[is_rect]
-    leftover = pdf[~is_rect]
-    if not len(rects):
-        return None, leftover
-    ridx = np.flatnonzero(is_rect)
-    x, y = x[ridx], y[ridx]
-
-    zooms = rects["zoom"].to_numpy(np.int64)
-    mtx = rects["mtx"].to_numpy(np.int64)
-    mty = rects["mty"].to_numpy(np.int64)
-    size_mt = np.minimum(metatile_scale, 1 << zooms)
-    x0t = mtx * size_mt
-    y0t = mty * size_mt
-    nz = (1 << zooms).astype(np.float64)
-    minx = x0t / nz * WORLD - MERC_MAX
-    maxx = (x0t + size_mt) / nz * WORLD - MERC_MAX
-    maxy = MERC_MAX - y0t / nz * WORLD
-    miny = MERC_MAX - (y0t + size_mt) / nz * WORLD
-    extent = 4096.0 * size_mt
-
-    # remap each ring point (round half away from zero), y flipped
-    vx = ((x - minx[:, None]) / (maxx - minx)[:, None]) * extent[:, None]
-    vy = ((maxy[:, None] - y) / (maxy - miny)[:, None]) * extent[:, None]
-    u = np.where(vx >= 0, np.floor(vx + 0.5), np.ceil(vx - 0.5)) \
-        .astype(np.int64)
-    v = np.where(vy >= 0, np.floor(vy + 0.5), np.ceil(vy - 0.5)) \
-        .astype(np.int64)
-
-    # rect bounds + ring state in tile space; degenerate axes collapse
-    # to duplicate points -> ring shorter than 4 -> dropped (remap
-    # semantics)
-    rx0, rx1 = u.min(axis=1), u.max(axis=1)
-    ry0, ry1 = v.min(axis=1), v.max(axis=1)
-    ok = (rx0 < rx1) & (ry0 < ry1)
-
-    # corner index of each remapped ring point in the canonical cycle
-    # C0=(x0,y0) C1=(x1,y0) C2=(x1,y1) C3=(x0,y1)
-    cidx = np.where(v == ry0[:, None],
-                    np.where(u == rx0[:, None], 0, 1),
-                    np.where(u == rx0[:, None], 3, 2))
-    start = cidx[:, 0]
-    fwd = ((cidx[:, 1] - cidx[:, 0]) % 4) == 1
-    state = (start << 1) | fwd.astype(np.int64)
-
-    k = np.flatnonzero(ok)
-    if not len(k):
-        return None, leftover
-    (pf, ptx, pty, px0, py0, px1, py1, out_state, as_multi) = rect_pieces(
-        rx0[k], ry0[k], rx1[k], ry1[k], state[k], zooms[k], size_mt[k],
-        x0t[k], y0t[k], buffer_units, global_maxzoom)
-    if not len(pf):
-        return None, leftover
-    src = k[pf]  # row index into rects
-
-    geoms = rings_wkb(px0, py0, px1, py1, out_state, as_multi)
-    d = {"zoom": zooms[src],
-         "x": x0t[src] + ptx, "y": y0t[src] + pty,
-         "feature_id": rects["feature_id"].to_numpy(np.int64)[src],
-         "geom": pd.Series(geoms, dtype=object)}
-    for p in prop_names:
-        d[p] = rects[p].to_numpy()[src]
-    cols = ["zoom", "x", "y", "feature_id", "geom"] + prop_names
-    return pd.DataFrame(d, columns=cols), leftover
+    rect = np.zeros(len(pdf), dtype=bool)
+    rect[axis_rect_rows(read_ragged(pdf["way"].values))[0]] = True
+    return (process_general(pdf[rect], prop_names, buffer_units,
+                            metatile_scale, global_maxzoom, 8),
+            pdf[~rect])
 
 
 def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
@@ -580,45 +378,13 @@ def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
     buffer_units = buffer_px * 16  # lib.rs:508
 
     def run(iterator):
-        for pdf in iterator:
-            frames = []
-            is_pt = pdf["way"].map(_is_simple_point_wkb)
-            pts = pdf[is_pt.values]
-            if len(pts):
-                f = _points_fast_path(pts, prop_names, buffer_units,
-                                      metatile_scale)
-                if f is not None:
-                    frames.append(f)
-            pdf = pdf[~is_pt.values]
-            # the rect fast path's simplify wipe tiering (rectfast.py)
-            # is derived for eps2 = 64; with any other epsilon the
-            # candidates take the scalar branch, which honors it
-            if len(pdf) and epsilon == 8:
-                is_r5 = pdf["way"].map(_is_ring5_polygon_wkb)
-                cands = pdf[is_r5.values]
-                if len(cands):
-                    f, leftover = _rects_fast_path(
-                        cands, prop_names, buffer_units, metatile_scale,
-                        global_maxzoom)
-                    if f is not None:
-                        frames.append(f)
-                    pdf = pd.concat([pdf[~is_r5.values], leftover]) \
-                        if len(leftover) else pdf[~is_r5.values]
-            # general shapes: ragged segment-batched numpy lane with
-            # per-stage scalar fallback (geom/batch.py); the historic
-            # per-row loop lives on as batch._scalar_chain for the
-            # features a stage would actually change
-            if len(pdf):
-                from .geom.batch import process_general
+        from .geom.batch import process_general
 
-                f = process_general(pdf, prop_names, buffer_units,
-                                    metatile_scale, global_maxzoom,
-                                    epsilon)
-                if f is not None:
-                    frames.append(f)
-            if frames:
-                yield (frames[0] if len(frames) == 1 else
-                       pd.concat(frames, ignore_index=True))
+        for pdf in iterator:
+            f = process_general(pdf, prop_names, buffer_units,
+                                metatile_scale, global_maxzoom, epsilon)
+            if f is not None:
+                yield f
 
     return covered.mapInPandas(run, schema=out_schema)
 

@@ -1,18 +1,25 @@
-"""Ragged segment-batched twin of the scalar geometry stage.
+"""The geometry stage's router and its vector lanes.
 
-The scalar branch of engine.geometry_stage runs every non-point,
-non-axis-rect feature through per-row Python kernels (remap -> dedup/
-despike -> exact-int RDP -> buffered clip -> quadtree slice -> make_valid
--> winding -> shift; lib.rs:559-728). This module vectorizes that chain
-across a whole Arrow batch with numpy on flat ("ragged") coordinate
-arrays + ring offsets, dropping to the authoritative scalar kernels ONLY
-for the features a stage would actually change:
+The scalar chain (_scalar_chain) runs one feature at a time through the
+ported per-row kernels (remap -> dedup/despike -> exact-int RDP ->
+buffered clip -> quadtree slice -> make_valid -> winding -> shift;
+lib.rs:559-728). process_general, the only entry of
+engine.geometry_stage, reads each Arrow batch once with wkb.read_ragged
+(the reader the encode walk and with_bbox share), computes its metatile
+frame once (remap.metatile_frame) and routes each row from the reader's
+arrays: simple points to the points kernel (_points_lane), axis rects
+to the rect kernel (rectfast.rect_lane), other line/polygon rows to the
+ragged lane below, and the rows the reader refuses to the scalar chain.
+Every lane hands back (row, tile x, tile y, WKB) per piece, and
+_Pieces.frame gathers the output columns once.
 
-* parse — wkb.read_ragged, the one vectorized WKB reader the encode
-  walk and with_bbox share, reads the batch once. Its LineString/
-  Polygon-family rows enter the lane (_lane_state); Points and the rows
-  it refuses (big-endian, EWKB, MultiPoint, malformed, zero-point
-  members, zero-member features) take the full scalar loop.
+The ragged lane vectorizes the chain across a batch with numpy on flat
+("ragged") coordinate arrays + ring offsets, dropping to the
+authoritative scalar kernels ONLY for the features a stage would
+actually change:
+
+* parse — _lane_state gathers the lane's rows from the batch's one
+  read_ragged result.
 * remap + consecutive-duplicate collapse + ring/line rules — fully
   vectorized, exact (dedup by immediate-predecessor mask is provably
   identical to the sequential collapse in remap._remap_linestring: in a
@@ -34,9 +41,9 @@ for the features a stage would actually change:
   dropped (both exact); a bbox that straddles a border falls back to
   the scalar border walk ("most features pass clip untouched",
   clip/mod.rs:186-210).
-* quadtree slice (G11/J3) — per-feature tile-window fan from the bbox
+* quadtree slice (G11/J3) — per-feature tile window from the bbox
   ([t*4096-buf, (t+1)*4096+buf] per tile t, the closed-interval
-  collapse the points fast path already uses): fan 1x1 => the recursive
+  collapse the points kernel uses, _tile_window): fan 1x1 => the recursive
   slice provably emits exactly one uncut piece (at every bisection the
   geometry is wholly inside one branch's keep half-space and wholly
   outside the other's), so the piece IS the geometry; fan > 1 falls
@@ -59,8 +66,9 @@ not MultiPolygon-of-1. Hence a line feature's final type depends only on
 its final member count (lines never die at RDP), while a polygon feature
 is MultiPolygon iff it still had >= 2 polygons after despike.
 
-tests/test_geom_batch.py pins the batch lane against the scalar lane on
-randomized geometry (parity is the correctness contract).
+tests/test_geom_batch.py pins the ragged lane against the scalar chain
+on randomized geometry, tests/test_geom_router.py the whole router on a
+mixed batch (parity is the correctness contract).
 """
 
 from __future__ import annotations
@@ -69,18 +77,19 @@ import os
 import struct
 
 import numpy as np
+import pandas as pd
 
-from ..mercator import MERC_MAX
-from .wkb import _cumsum0, wkb_to_geom, geom_to_wkb, read_ragged
-from .remap import remap_geometry, shift_geom as _shift
+from .wkb import _cumsum0, _ranges, wkb_to_geom, geom_to_wkb, \
+    read_ragged
+from .remap import remap_geometry, shift_geom as _shift, metatile_frame, \
+    remap_arrays, round_half_away
+from .rectfast import axis_rect, rect_lane, tile_pairs, wkb_rows
 from .simplify import remove_unneeded_points, simplify, \
     remove_duplicate_points
 from .clip import clip_to_bbox, clip_geometry_to_tiles, \
     _clip_ring_to_border, _clip_linestring_to_border, \
     XMIN, XMAX, YMIN, YMAX
 from .validity import make_valid, is_valid, ensure_polygon_orientation
-
-WORLD = 2.0 * MERC_MAX
 
 # beyond this magnitude the int64 products in the despike/validity
 # screens could overflow; such features (world-spanning geometry deep in
@@ -94,24 +103,21 @@ _ROLE = np.array([0, 0, _LINE, _POLY, 0, _LINE, _POLY], dtype=np.int8)
 
 # --------------------------------------------------------------- parsing
 
-def _lane_state(rag):
-    """Ragged state for the vector lane from a wkb.read_ragged batch:
-    its line- and polygon-family rows (role per row, 0 = not in the
-    lane). Read Point rows are dropped here; like refused rows they take
-    the scalar loop."""
-    role = _ROLE[rag.code]
-    ring_feat = np.repeat(np.arange(len(role), dtype=np.int64),
-                          np.diff(rag.row_off))
-    k = np.diff(rag.ring_off)
-    lane = role[ring_feat] != 0
-    pts = np.repeat(lane, k)
+def _lane_state(rag, rows):
+    """Ragged state for the vector lane: rows `rows` (line- and
+    polygon-family rows of a wkb.read_ragged batch) gathered into flat
+    vertex arrays, their rings tagged with the batch row index."""
+    nr = rag.row_off[rows + 1] - rag.row_off[rows]
+    ring = _ranges(rag.row_off[rows], nr)
+    k = rag.ring_off[ring + 1] - rag.ring_off[ring]
+    pt = _ranges(rag.ring_off[ring], k)
     return {
-        "px": rag.xs[pts],
-        "py": rag.ys[pts],
-        "off": _cumsum0(k[lane]),
-        "ring_feat": ring_feat[lane],
-        "ring_int": rag.ring_int[lane],
-        "role": role,
+        "px": rag.xs[pt],
+        "py": rag.ys[pt],
+        "off": _cumsum0(k),
+        "ring_feat": np.repeat(rows, nr),
+        "ring_int": rag.ring_int[ring],
+        "role": _ROLE[rag.code],
     }
 
 
@@ -161,12 +167,13 @@ def _feat_ring_range(ring_feat, f):
     return range(r0, r1)
 
 
-def _materialize(st, f, multi):
-    """Rebuild feature f's geometry tuple from ragged state with the
-    type the scalar chain would carry at this stage."""
-    sel = _feat_ring_range(st["ring_feat"], f)
+def _materialize(st, owner, i, is_line, multi):
+    """Rebuild ring owner i's geometry tuple (a feature of the lane
+    state, owner = ring_feat, or a piece of a piece state, owner =
+    ring_piece) with the type the scalar chain would carry."""
+    sel = _feat_ring_range(owner, i)
     u, v, off = st["u"], st["v"], st["off"]
-    if st["role"][f] == _LINE:
+    if is_line:
         lines = [_ring_tuples(u, v, int(off[r]), int(off[r + 1]))
                  for r in sel]
         if len(lines) == 1 and not multi:
@@ -182,6 +189,15 @@ def _materialize(st, f, multi):
     if len(polys) == 1 and not multi:
         return ("Polygon", polys[0])
     return ("MultiPolygon", polys)
+
+
+def _with_exteriors(ring_ok, ring_int):
+    """ring_ok where an interior ring also dies with its exterior (the
+    polygon's ring 0, the last exterior before it)."""
+    if not len(ring_ok):
+        return ring_ok
+    ext = ~ring_int
+    return ring_ok & (ext | ring_ok[ext][np.cumsum(ext) - 1])
 
 
 # ----------------------------------------------------------- scalar lane
@@ -713,133 +729,183 @@ def _materialize_boxed(st, f, ring_bbs):
     return is_line, members
 
 
-# ------------------------------------------------------------- main lane
+# ---------------------------------------------------------------- router
 
+# rows per rect/ragged lane call: the lanes' temporaries scale with the
+# chunk, and keeping them cache-resident measured 1.5x faster on a
+# 40k-feature concave batch and ~1.3x on 20k boxes (identical output)
 _CHUNK_FEATURES = 4096
 
 
 def process_general(pdf, prop_names, buffer_units, metatile_scale,
                     global_maxzoom, epsilon):
-    """Batch twin of the scalar branch of engine.geometry_stage.
+    """The geometry stage (G2-G16) for one Arrow batch — the only call
+    engine.geometry_stage makes.
 
-    pdf: pandas frame with zoom/mtx/mty/feature_id/way + props (already
-    excludes simple points and axis rects). Returns a pieces DataFrame
-    (zoom, x, y, feature_id, geom, props...) or None. Output row order
-    is arbitrary (the encode shuffle sorts by feature_id).
+    pdf: pandas frame with zoom/mtx/mty/feature_id/way + props. The
+    batch is read once by wkb.read_ragged, its metatile frame computed
+    once, and each row routed from the reader's arrays:
 
-    Large Arrow batches are processed in ~4k-feature chunks: the
-    ragged lane's temporaries scale with the chunk's total vertex
-    count, and keeping them cache-resident measures 1.5x faster than
-    one pass over a 40k-feature concave batch (identical output; the
-    per-(feature,tile) piece is unique, so chunk order is immaterial
-    under the encode exchange's canonical sort)."""
-    import pandas as pd
+    * code 1 (Point) -> the points kernel (_points_lane);
+    * a one-ring Polygon of 5 vertices, first and last bit-identical,
+      edges axis-parallel with alternating axes (axis_rect_rows), when
+      epsilon == 8 -> the rect kernel (rectfast.rect_lane, whose
+      simplify wipe is derived for eps2 = 64);
+    * every other line/polygon-family row -> the ragged lane
+      (_vector_lane);
+    * rows the reader refuses (code 0: big-endian, EWKB, MultiPoint,
+      malformed) -> the scalar chain.
 
-    if len(pdf) > _CHUNK_FEATURES:
-        parts = []
-        for s in range(0, len(pdf), _CHUNK_FEATURES):
-            out = process_general(pdf.iloc[s:s + _CHUNK_FEATURES],
-                                  prop_names, buffer_units,
-                                  metatile_scale, global_maxzoom,
-                                  epsilon)
-            if out is not None:
-                parts.append(out)
-        if not parts:
-            return None
-        return pd.concat(parts, ignore_index=True)
+    SPARK_GRAFT_FORCE_SCALAR_GEOM=1 sends every row to the scalar chain,
+    the reference the lanes are pinned against. The rect and ragged
+    lanes run in _CHUNK_FEATURES-row chunks; the points lane runs
+    whole-batch (chunking it at 4096 measured 0.79 -> 1.06 us/row).
 
-    cols = ["zoom", "x", "y", "feature_id", "geom"] + prop_names
-    rows = {k: [] for k in cols}
+    Returns a pieces DataFrame (zoom, x, y, feature_id, geom, props...)
+    or None. Output row order is arbitrary: every piece is a unique
+    (feature, tile) and the encode shuffle sorts by feature_id."""
+    way = pdf["way"].values
+    fr = metatile_frame(pdf["zoom"].to_numpy(np.int64),
+                        pdf["mtx"].to_numpy(np.int64),
+                        pdf["mty"].to_numpy(np.int64), metatile_scale)
+    do_simp = fr.zoom < global_maxzoom
+    out = _Pieces()
 
-    a_zoom = pdf["zoom"].to_numpy(np.int64)
-    a_mtx = pdf["mtx"].to_numpy(np.int64)
-    a_mty = pdf["mty"].to_numpy(np.int64)
-    a_fid = pdf["feature_id"].to_numpy(np.int64)
-    a_way = pdf["way"].values
-    a_props = [(p, pdf[p].values) for p in prop_names]
-
-    size_mt = np.minimum(metatile_scale, 1 << a_zoom)
-    x0t = a_mtx * size_mt
-    y0t = a_mty * size_mt
-    nz = (1 << a_zoom).astype(np.float64)
-    minx = x0t / nz * WORLD - MERC_MAX
-    maxx = (x0t + size_mt) / nz * WORLD - MERC_MAX
-    maxy = MERC_MAX - y0t / nz * WORLD
-    miny = MERC_MAX - (y0t + size_mt) / nz * WORLD
-    extent_f = 4096.0 * size_mt
-    extent_i = (4096 * size_mt).astype(np.int64)
-    do_simp = a_zoom < global_maxzoom
-
-    def emit(i, pieces):
-        for tx, ty, piece in pieces:
-            rows["zoom"].append(int(a_zoom[i]))
-            rows["x"].append(int(tx))
-            rows["y"].append(int(ty))
-            rows["feature_id"].append(int(a_fid[i]))
-            rows["geom"].append(piece if isinstance(piece, bytes)
-                                else geom_to_wkb(piece))
-            for p, vals in a_props:
-                rows[p].append(vals[i])
-
-    def emit_many(fidx, txs, tys, wkbs):
-        """Columnar emit for the clean-piece stream: fidx/txs/tys are
-        int64 arrays, wkbs a list of bytes (one per piece)."""
-        rows["zoom"].extend(a_zoom[fidx].tolist())
-        rows["x"].extend(txs.tolist())
-        rows["y"].extend(tys.tolist())
-        rows["feature_id"].extend(a_fid[fidx].tolist())
-        rows["geom"].extend(wkbs)
-        for p, vals in a_props:
-            rows[p].extend(vals[fidx].tolist()
-                           if hasattr(vals[fidx], "tolist")
-                           else list(vals[fidx]))
-
-    def emit_scalar_row(i):
-        """Full scalar pipeline for row i (the historic loop body)."""
+    def scalar_row(i):
         try:
-            geom = wkb_to_geom(bytes(a_way[i]))
+            geom = wkb_to_geom(bytes(way[i]))
         except (ValueError, TypeError):
             # None/undecodable never reaches here from the engine
             # (with_bbox drops those rows); dropped for robustness
             return
-        geom = remap_geometry(geom, float(minx[i]), float(maxx[i]),
-                              float(miny[i]), float(maxy[i]),
-                              float(extent_f[i]))
-        if geom is None:
-            return
-        emit(i, _scalar_chain(
-            geom, "unneeded", int(size_mt[i]), int(x0t[i]), int(y0t[i]),
-            int(extent_i[i]), buffer_units, bool(do_simp[i]), epsilon))
+        geom = remap_geometry(geom, float(fr.minx[i]), float(fr.maxx[i]),
+                              float(fr.miny[i]), float(fr.maxy[i]),
+                              float(fr.extent[i]))
+        if geom is not None:
+            out.chain(i, _scalar_chain(
+                geom, "unneeded", int(fr.size_mt[i]), int(fr.x0t[i]),
+                int(fr.y0t[i]), int(fr.extent[i]), buffer_units,
+                bool(do_simp[i]), epsilon))
 
     if os.environ.get("SPARK_GRAFT_FORCE_SCALAR_GEOM") == "1":
-        # measurement/debug switch: route every feature through the
-        # historic per-row chain (used to report the scalar/batched
-        # ratio in BENCH/BASELINE.md)
-        for i in range(len(a_way)):
-            emit_scalar_row(i)
-        if not rows["zoom"]:
+        for i in range(len(way)):
+            scalar_row(i)
+        return out.frame(pdf, prop_names)
+
+    rag = read_ragged(way)
+    pts = np.flatnonzero(rag.code == 1)
+    if len(pts):
+        at = rag.ring_off[rag.row_off[pts]]
+        out.add(*_points_lane(fr, pts, rag.xs[at], rag.ys[at],
+                              buffer_units))
+    ragged = _ROLE[rag.code] != 0
+    if epsilon == 8:
+        rects, x, y = axis_rect_rows(rag)
+        ragged[rects] = False
+        for s in range(0, len(rects), _CHUNK_FEATURES):
+            c = slice(s, s + _CHUNK_FEATURES)
+            out.add(*rect_lane(fr, rects[c], x[c], y[c], buffer_units,
+                               global_maxzoom))
+    for i in np.flatnonzero(rag.code == 0).tolist():
+        scalar_row(i)
+    rows = np.flatnonzero(ragged)
+    for s in range(0, len(rows), _CHUNK_FEATURES):
+        _vector_lane(_lane_state(rag, rows[s:s + _CHUNK_FEATURES]), fr,
+                     do_simp, buffer_units, epsilon, out, scalar_row)
+    return out.frame(pdf, prop_names)
+
+
+def axis_rect_rows(rag, codes=(3,)):
+    """Rows of a wkb.read_ragged batch with a code in `codes` and one
+    ring of 5 vertices whose first and last vertex are bit-identical and
+    whose edges are axis-parallel with alternating axes
+    (rectfast.axis_rect). Returns (rows, x, y), the 4 corners of each in
+    ring order as (n, 4) arrays."""
+    rows = np.flatnonzero(np.isin(rag.code, codes)
+                          & (np.diff(rag.row_off) == 1))
+    r = rag.row_off[rows]
+    five = rag.ring_off[r + 1] - rag.ring_off[r] == 5
+    rows = rows[five]
+    at = rag.ring_off[r[five]][:, None] + np.arange(5)
+    x, y = rag.xs[at], rag.ys[at]
+    xb, yb = x.view(np.uint64), y.view(np.uint64)
+    ok = ((xb[:, 0] == xb[:, 4]) & (yb[:, 0] == yb[:, 4])
+          & axis_rect(x[:, :4], y[:, :4]))
+    return rows[ok], x[ok, :4], y[ok, :4]
+
+
+def _tile_window(lo, hi, buf, size_mt):
+    """Inclusive range of a metatile's tiles t whose closed buffered
+    interval [t*4096 - buf, (t+1)*4096 + buf] meets [lo, hi] (tile
+    units, one axis) — the quadtree slice's keep test for a geometry
+    that no cut changes."""
+    return (np.maximum(-(-(lo - buf) // 4096) - 1, 0),
+            np.minimum((hi + buf) // 4096, size_mt - 1))
+
+
+def _points_lane(fr, rows, xs, ys, buf):
+    """The points kernel: simple points xs/ys of batch rows `rows`.
+    Remap, clip to the buffered metatile, and the quadtree slice
+    collapses to the closed interval per tile (_tile_window), so a
+    point on a tile border goes to every tile it touches. Returns
+    (row, tile x, tile y, WKB list)."""
+    vx, vy = remap_arrays(fr, rows, xs, ys)
+    u, v = round_half_away(vx), round_half_away(vy)
+    hi = fr.extent[rows] + buf
+    keep = (u >= -buf) & (u <= hi) & (v >= -buf) & (v <= hi)
+    rows, u, v = rows[keep], u[keep], v[keep]
+    sm = fr.size_mt[rows]
+    rep, tx, ty = tile_pairs(*_tile_window(u, u, buf, sm),
+                             *_tile_window(v, v, buf, sm))
+    rows = rows[rep]
+    wb = np.empty((len(rep), 21), dtype=np.uint8)
+    wb[:, :5] = (1, 1, 0, 0, 0)  # little-endian Point
+    for col, c in ((5, u[rep] - tx * 4096), (13, v[rep] - ty * 4096)):
+        wb[:, col:col + 8] = c.astype("<f8").view(np.uint8).reshape(-1, 8)
+    return rows, fr.x0t[rows] + tx, fr.y0t[rows] + ty, wkb_rows(wb)
+
+
+class _Pieces:
+    """What every lane hands back, per piece: the batch row it came
+    from, its absolute tile x/y and its WKB."""
+
+    def __init__(self):
+        self.row, self.x, self.y, self.geom = [], [], [], []
+
+    def add(self, row, x, y, geoms):
+        self.row.append(np.asarray(row, np.int64))
+        self.x.append(np.asarray(x, np.int64))
+        self.y.append(np.asarray(y, np.int64))
+        self.geom.extend(geoms)
+
+    def chain(self, i, pieces):
+        """The scalar chain's [(tx, ty, geometry tuple)] for row i."""
+        if pieces:
+            tx, ty, geoms = zip(*pieces)
+            self.add(np.full(len(pieces), i), tx, ty,
+                     [geom_to_wkb(g) for g in geoms])
+
+    def frame(self, pdf, prop_names):
+        """The output frame: every column gathered once by row."""
+        if not self.geom:
             return None
-        return pd.DataFrame(rows, columns=cols)
-
-    st = _lane_state(read_ragged(a_way))
-    for i in np.flatnonzero(st["role"] == 0).tolist():
-        emit_scalar_row(i)
-
-    if len(st["ring_feat"]):
-        _vector_lane(st, len(a_zoom), size_mt, x0t, y0t, minx, maxx,
-                     miny, maxy, extent_f, extent_i, do_simp,
-                     buffer_units, epsilon, emit, emit_scalar_row,
-                     emit_many)
-
-    if not rows["zoom"]:
-        return None
-    return pd.DataFrame(rows, columns=cols)
+        row = np.concatenate(self.row)
+        d = {"zoom": pdf["zoom"].to_numpy(np.int64)[row],
+             "x": np.concatenate(self.x), "y": np.concatenate(self.y),
+             "feature_id": pdf["feature_id"].to_numpy(np.int64)[row],
+             "geom": pd.Series(self.geom, dtype=object)}
+        for p in prop_names:
+            d[p] = pdf[p].to_numpy()[row]
+        return pd.DataFrame(d, columns=list(d))
 
 
-def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
-                 extent_f, extent_i, do_simp, buffer_units, epsilon,
-                 emit, emit_scalar_row, emit_many):
+def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
+    """The ragged lane over one chunk's lane state: pieces go to `out`,
+    features a stage would change take the scalar kernels from that
+    stage on (scalar_row(i) runs row i's whole scalar chain)."""
     role_arr = st["role"]
+    F = len(fr.zoom)
+    size_mt, x0t, y0t, extent_i = fr.size_mt, fr.x0t, fr.y0t, fr.extent
 
     off = st["off"]
     ring_feat = st["ring_feat"]
@@ -847,20 +913,13 @@ def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
 
     # ---- remap (vectorized, exact twin of remap_geometry coords) ----
     fpt = np.repeat(ring_feat, sizes)
-    denx = maxx - minx
-    deny = maxy - miny
-    vx = ((st["px"] - minx[fpt]) / denx[fpt]) * extent_f[fpt]
-    vy = ((maxy[fpt] - st["py"]) / deny[fpt]) * extent_f[fpt]
+    vx, vy = remap_arrays(fr, fpt, st["px"], st["py"])
 
     finite = (np.isfinite(vx) & np.isfinite(vy)
               & (np.abs(vx) < _COORD_LIMIT) & (np.abs(vy) < _COORD_LIMIT))
     bad_feats = set(fpt[~finite].tolist()) if not finite.all() else set()
-    vx = np.where(finite, vx, 0.0)
-    vy = np.where(finite, vy, 0.0)
-    u = np.where(vx >= 0, np.floor(vx + 0.5),
-                 np.ceil(vx - 0.5)).astype(np.int64)
-    v = np.where(vy >= 0, np.floor(vy + 0.5),
-                 np.ceil(vy - 0.5)).astype(np.int64)
+    u = round_half_away(np.where(finite, vx, 0.0))
+    v = round_half_away(np.where(finite, vy, 0.0))
     st["u"], st["v"] = u, v
 
     # consecutive-duplicate collapse (== remap's sequential collapse)
@@ -883,16 +942,9 @@ def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
         guard = np.isin(ring_feat, np.fromiter(bad_feats, np.int64))
         ring_ok = ring_ok & ~guard
 
-    poly_gid = np.cumsum(~st["ring_int"]) - 1
-    ext_alive = ring_ok[~st["ring_int"]] if (~st["ring_int"]).any() \
-        else np.zeros(0, bool)
-    poly_ok = ext_alive[poly_gid] if len(ext_alive) else \
-        np.zeros(len(ring_feat), bool)
-    ring_alive = ring_ok & np.where(st["ring_int"], poly_ok, True)
-
-    st = _drop(st, ring_alive, keeppt)
+    st = _drop(st, _with_exteriors(ring_ok, st["ring_int"]), keeppt)
     for f in sorted(bad_feats):
-        emit_scalar_row(int(f))
+        scalar_row(int(f))
 
     ring_feat = st["ring_feat"]
     if len(ring_feat) == 0:
@@ -913,8 +965,9 @@ def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
     spike_feats = np.unique(ring_feat[spike])
     for f in spike_feats.tolist():
         if alive_f[f]:
-            geom = _materialize(st, f, bool(multi_f[f]))
-            emit(f, _scalar_chain(
+            geom = _materialize(st, st["ring_feat"], f,
+                                role_arr[f] == _LINE, bool(multi_f[f]))
+            out.chain(f, _scalar_chain(
                 geom, "unneeded", int(size_mt[f]), int(x0t[f]),
                 int(y0t[f]), int(extent_i[f]), buffer_units,
                 bool(do_simp[f]), epsilon))
@@ -952,13 +1005,7 @@ def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
             keeppt[s:e] = km
             # endpoints always kept => closure preserved for rings
             ring_ok[r] = cnt >= 2 if is_line_r[r] else cnt >= 4
-        poly_gid = np.cumsum(~st["ring_int"]) - 1
-        ext_alive = ring_ok[~st["ring_int"]] if (~st["ring_int"]).any() \
-            else np.zeros(0, bool)
-        poly_ok = ext_alive[poly_gid] if len(ext_alive) else \
-            np.zeros(len(ring_feat), bool)
-        ring_alive = ring_ok & np.where(st["ring_int"], poly_ok, True)
-        st = _drop(st, ring_alive, keeppt)
+        st = _drop(st, _with_exteriors(ring_ok, st["ring_int"]), keeppt)
         ring_feat = st["ring_feat"]
         # refresh feature aliveness (NO multi re-collapse at RDP)
         is_line_r = role_arr[ring_feat] == _LINE
@@ -980,30 +1027,18 @@ def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
     vmax = np.maximum.reduceat(v, starts)
 
     buf = buffer_units
-    single = {}
-    fb_clip, fb_slice = [], []
-    for k in range(len(feat_ids)):
-        f = int(feat_ids[k])
-        if not alive_f[f]:
-            continue
-        lo = -buf
-        hi = int(extent_i[f]) + buf
-        if umax[k] < lo or umin[k] > hi or vmax[k] < lo or vmin[k] > hi:
-            alive_f[f] = False  # fully clipped away (exact)
-            continue
-        if not (umin[k] >= lo and umax[k] <= hi
-                and vmin[k] >= lo and vmax[k] <= hi):
-            fb_clip.append(f)
-            continue
-        sm = int(size_mt[f])
-        txl = max(-(-(int(umin[k]) - buf) // 4096) - 1, 0)
-        txh = min((int(umax[k]) + buf) // 4096, sm - 1)
-        tyl = max(-(-(int(vmin[k]) - buf) // 4096) - 1, 0)
-        tyh = min((int(vmax[k]) + buf) // 4096, sm - 1)
-        if txl == txh and tyl == tyh:
-            single[f] = (txl, tyl)
-        else:
-            fb_slice.append(f)
+    hi = extent_i[feat_ids] + buf
+    live = alive_f[feat_ids]
+    gone = (umax < -buf) | (umin > hi) | (vmax < -buf) | (vmin > hi)
+    inside = (umin >= -buf) & (umax <= hi) & (vmin >= -buf) & (vmax <= hi)
+    alive_f[feat_ids[live & gone]] = False  # fully clipped away (exact)
+    sm = size_mt[feat_ids]
+    txl, txh = _tile_window(umin, umax, buf, sm)
+    tyl, tyh = _tile_window(vmin, vmax, buf, sm)
+    one = (txl == txh) & (tyl == tyh)
+    single = live & inside & one
+    fb_clip = feat_ids[live & ~gone & ~inside].tolist()
+    fb_slice = feat_ids[live & inside & ~one].tolist()
 
     # fallback clip/slice: boxed twins of the scalar machinery (bbox
     # shortcuts, O(1) per untouched ring per cut); per-piece validity
@@ -1044,29 +1079,28 @@ def _vector_lane(st, F, size_mt, x0t, y0t, minx, maxx, miny, maxy,
             alive_f[f] = False
             slice_feature(f, is_line, members)
 
-    if single:
+    if single.any():
         st = _drop(st, alive_f[ring_feat])
         ring_feat = st["ring_feat"]
-        if len(ring_feat):
-            feat_ids2 = np.unique(ring_feat)
-            ps = {
-                "u": st["u"], "v": st["v"], "off": st["off"],
-                "ring_int": st["ring_int"],
-                "ring_piece": np.searchsorted(feat_ids2, ring_feat),
-                "p_feat": feat_ids2,
-                "p_txa": np.array([x0t[f] + single[int(f)][0]
-                                   for f in feat_ids2], dtype=np.int64),
-                "p_tya": np.array([y0t[f] + single[int(f)][1]
-                                   for f in feat_ids2], dtype=np.int64),
-                "p_line": role_arr[feat_ids2] == _LINE,
-                "p_multi": multi_f[feat_ids2],
-            }
-            _validate_emit(ps, x0t, y0t, size_mt, extent_i,
-                           buffer_units, epsilon, emit, emit_many)
+        tile_x = np.zeros(F, np.int64)
+        tile_y = np.zeros(F, np.int64)
+        tile_x[feat_ids] = x0t[feat_ids] + txl
+        tile_y[feat_ids] = y0t[feat_ids] + tyl
+        feat_ids2 = np.unique(ring_feat)
+        ps = {
+            "u": st["u"], "v": st["v"], "off": st["off"],
+            "ring_int": st["ring_int"],
+            "ring_piece": np.searchsorted(feat_ids2, ring_feat),
+            "p_feat": feat_ids2,
+            "p_txa": tile_x[feat_ids2],
+            "p_tya": tile_y[feat_ids2],
+            "p_line": role_arr[feat_ids2] == _LINE,
+            "p_multi": multi_f[feat_ids2],
+        }
+        _validate_emit(ps, fr, buffer_units, epsilon, out)
     if pieces_extra:
-        ps = _ingest_pieces(pieces_extra)
-        _validate_emit(ps, x0t, y0t, size_mt, extent_i,
-                       buffer_units, epsilon, emit, emit_many)
+        _validate_emit(_ingest_pieces(pieces_extra), fr, buffer_units,
+                       epsilon, out)
 
 
 def _ingest_pieces(pieces):
@@ -1117,31 +1151,7 @@ def _ingest_pieces(pieces):
     }
 
 
-def _materialize_piece(ps, pi):
-    """Rebuild piece pi's geometry tuple with its carry type (the type
-    the scalar chain would hand to make_valid)."""
-    sel = _feat_ring_range(ps["ring_piece"], pi)
-    u, v, off = ps["u"], ps["v"], ps["off"]
-    if ps["p_line"][pi]:
-        lines = [_ring_tuples(u, v, int(off[r]), int(off[r + 1]))
-                 for r in sel]
-        if len(lines) == 1 and not ps["p_multi"][pi]:
-            return ("LineString", lines[0])
-        return ("MultiLineString", lines)
-    polys = []
-    for r in sel:
-        ring = _ring_tuples(u, v, int(off[r]), int(off[r + 1]))
-        if not ps["ring_int"][r]:
-            polys.append([ring])
-        else:
-            polys[-1].append(ring)
-    if len(polys) == 1 and not ps["p_multi"][pi]:
-        return ("Polygon", polys[0])
-    return ("MultiPolygon", polys)
-
-
-def _validate_emit(ps, x0t, y0t, size_mt, extent_i, buffer_units,
-                   epsilon, emit, emit_many):
+def _validate_emit(ps, fr, buffer_units, epsilon, out):
     """Batched make_valid/is_valid/orientation certificate over a piece
     state; certificate-clean pieces are emitted directly (make_valid is
     provably the identity up to the Multi-of-1 collapse), flagged pieces
@@ -1216,10 +1226,11 @@ def _validate_emit(ps, x0t, y0t, size_mt, extent_i, buffer_units,
 
     for pi in np.flatnonzero(piece_bad).tolist():
         f = int(ps["p_feat"][pi])
-        geom = _materialize_piece(ps, pi)
-        emit(f, _scalar_chain(
-            geom, "valid", int(size_mt[f]), int(x0t[f]), int(y0t[f]),
-            int(extent_i[f]), buffer_units, False, epsilon,
+        geom = _materialize(ps, ps["ring_piece"], pi, ps["p_line"][pi],
+                            ps["p_multi"][pi])
+        out.chain(f, _scalar_chain(
+            geom, "valid", int(fr.size_mt[f]), int(fr.x0t[f]),
+            int(fr.y0t[f]), int(fr.extent[f]), buffer_units, False, epsilon,
             txy=(int(ps["p_txa"][pi]), int(ps["p_tya"][pi]))))
 
     good = ~piece_bad
@@ -1228,8 +1239,8 @@ def _validate_emit(ps, x0t, y0t, size_mt, extent_i, buffer_units,
     # shift + encode the clean pieces (vectorized coords)
     fpt_piece = np.repeat(ring_piece, sizes)
     f_of_piece = ps["p_feat"]
-    xsh = (ps["p_txa"] - x0t[f_of_piece]) * 4096
-    ysh = (ps["p_tya"] - y0t[f_of_piece]) * 4096
+    xsh = (ps["p_txa"] - fr.x0t[f_of_piece]) * 4096
+    ysh = (ps["p_tya"] - fr.y0t[f_of_piece]) * 4096
     uvf = np.empty((len(u), 2), dtype="<f8")
     uvf[:, 0] = u - xsh[fpt_piece]
     uvf[:, 1] = v - ysh[fpt_piece]
@@ -1259,5 +1270,5 @@ def _validate_emit(ps, x0t, y0t, size_mt, extent_i, buffer_units,
             [raw[boff[r]:boff[r + 1]] for r in range(r0, r1)],
             ring_int_l[r0:r1]))
     sel = pids[goodk]
-    emit_many(ps["p_feat"][sel], ps["p_txa"][sel], ps["p_tya"][sel],
+    out.add(ps["p_feat"][sel], ps["p_txa"][sel], ps["p_tya"][sel],
               wkbs)

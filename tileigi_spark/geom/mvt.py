@@ -198,7 +198,7 @@ def bulk_frame_point_features(xs, ys, prop_tags):
     Strategy: write every potential byte of every frame into an
     (n, W) uint8 matrix with a parallel used-byte mask; masked row-major
     flattening emits the whole stream in one pass. This is the encode
-    analog of the geometry stage's _points_fast_path — the per-row
+    analog of the geometry stage's points kernel — the per-row
     encoder costs ~20µs/feature, almost all interpreter overhead.
     """
     import numpy as np

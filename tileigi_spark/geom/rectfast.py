@@ -28,9 +28,12 @@ box-layer workloads — every stage has a closed form:
   itself property-pinned against the dissolve repair).
 
 Everything runs as numpy array ops over (feature, tile) pairs; the
-output WKB is assembled as byte matrices. Byte parity with the scalar
-path is pinned by tests/test_rect_fast_path.py over randomized
-rects/zooms/buffers and by the golden-tile fixtures.
+output WKB is assembled as byte matrices. rect_lane is the kernel's
+entry: the geometry router (geom/batch.process_general) hands it the
+corner arrays of the rows axis_rect accepts, already read by
+wkb.read_ragged. Byte parity with the scalar path is pinned by
+tests/test_rect_fast_path.py over randomized rects/zooms/buffers, by
+tests/test_geom_router.py and by the golden-tile fixtures.
 """
 
 from __future__ import annotations
@@ -38,6 +41,8 @@ from __future__ import annotations
 import numpy as np
 
 from .clip import XMAX, XMIN, YMAX, YMIN, _clip_ring_to_border
+from .remap import remap_arrays, round_half_away
+from .wkb import _ranges
 
 # canonical corner cycle of a rect (x0,y0,x1,y1), tile space (y down):
 #   C0=(x0,y0) C1=(x1,y0) C2=(x1,y1) C3=(x0,y1)
@@ -125,8 +130,8 @@ def rect_pieces(x0, y0, x1, y1, state, zooms, size_mt, x0t, y0t,
     n = len(x0)
     # epsilon 8, squared — O5 skips simplify at maxzoom. The overflow
     # tiering below is derived for this value; callers with a different
-    # epsilon must take the scalar branch (engine.geometry_stage gates
-    # the fast path on epsilon == 8)
+    # epsilon must take another lane (geom/batch.process_general routes
+    # rects here only when epsilon == 8)
     eps2 = 64
 
     # simplify: identity or dropped (see module docstring). The exact
@@ -174,7 +179,6 @@ def rect_pieces(x0, y0, x1, y1, state, zooms, size_mt, x0t, y0t,
         return (np.zeros(0, np.int64),) * 9
     s, lx, hx, ly, hy = s[idx], lx[idx], hx[idx], ly[idx], hy[idx]
     size_mt, x0t, y0t = size_mt[idx], x0t[idx], y0t[idx]
-    zooms = zooms[idx]
 
     # tile fan-out: tile t STRICTLY overlaps iff t*4096 - buf < hi and
     # (t+1)*4096 + buf > lo (zero-width touches produce degenerate
@@ -187,30 +191,7 @@ def rect_pieces(x0, y0, x1, y1, state, zooms, size_mt, x0t, y0t,
     ty_hi = np.minimum(_div_floor(hy + buffer_units - 1, 4096),
                        size_mt - 1)
 
-    fanx = np.maximum(tx_hi - tx_lo + 1, 0)
-    fany = np.maximum(ty_hi - ty_lo + 1, 0)
-    fan = fanx * fany
-    ok = fan > 0
-    if not ok.all():
-        keep_idx = np.flatnonzero(ok)
-        idx = idx[keep_idx]
-        s, lx, hx, ly, hy = (s[keep_idx], lx[keep_idx], hx[keep_idx],
-                             ly[keep_idx], hy[keep_idx])
-        size_mt, x0t, y0t = (size_mt[keep_idx], x0t[keep_idx],
-                             y0t[keep_idx])
-        zooms = zooms[keep_idx]
-        tx_lo, tx_hi = tx_lo[keep_idx], tx_hi[keep_idx]
-        ty_lo, ty_hi = ty_lo[keep_idx], ty_hi[keep_idx]
-        fanx, fany = fanx[keep_idx], fany[keep_idx]
-        fan = fan[keep_idx]
-
-    # expand to (feature, tile) pairs
-    rep = np.repeat(np.arange(len(idx)), fan)
-    # per-pair local tile offsets
-    off = np.arange(len(rep)) - np.repeat(
-        np.concatenate(([0], np.cumsum(fan)[:-1])), fan)
-    ptx = tx_lo[rep] + off // fany[rep]
-    pty = ty_lo[rep] + off % fany[rep]
+    rep, ptx, pty = tile_pairs(tx_lo, tx_hi, ty_lo, ty_hi)
 
     ps = s[rep]
     plx, phx = lx[rep], hx[rep]
@@ -289,6 +270,26 @@ def _div_ceil(a, b):
     return -np.floor_divide(-a, b)
 
 
+def tile_pairs(tx_lo, tx_hi, ty_lo, ty_hi):
+    """Every tile of each row's inclusive window, x-major, as (row,
+    tx, ty) arrays; an empty window yields no pairs."""
+    fany = np.maximum(ty_hi - ty_lo + 1, 0)
+    fan = np.maximum(tx_hi - tx_lo + 1, 0) * fany
+    rep = np.repeat(np.arange(len(fan)), fan)
+    k = _ranges(np.zeros(len(fan), np.int64), fan)
+    return rep, tx_lo[rep] + k // fany[rep], ty_lo[rep] + k % fany[rep]
+
+
+def wkb_rows(mat):
+    """The rows of a uint8 byte matrix as a list of bytes objects."""
+    raw, w = mat.tobytes(), mat.shape[1]
+    return [raw[i:i + w] for i in range(0, len(raw), w)]
+
+
+_RING5_HEAD = np.array([1, 3, 0, 0, 0, 1, 0, 0, 0, 5, 0, 0, 0], np.uint8)
+_MULTI_HEAD = np.array([1, 6, 0, 0, 0, 1, 0, 0, 0], np.uint8)
+
+
 def rings_wkb(px0, py0, px1, py1, state, as_multi):
     """Assemble WKB bytes per piece: 93-byte Polygon or 102-byte
     MultiPolygon-of-one, ring per the canonical cycle state, closed.
@@ -308,28 +309,59 @@ def rings_wkb(px0, py0, px1, py1, state, as_multi):
     pts[:, :4, 1] = ry
     pts[:, 4, 0] = rx[:, 0]
     pts[:, 4, 1] = ry[:, 0]
-    ring_bytes = pts.reshape(n, 10).view(np.uint8)        # (n, 80)
 
     poly = np.empty((n, 93), dtype=np.uint8)
-    poly[:, 0] = 1
-    poly[:, 1:5] = np.array([3, 0, 0, 0], dtype=np.uint8)
-    poly[:, 5:9] = np.array([1, 0, 0, 0], dtype=np.uint8)
-    poly[:, 9:13] = np.array([5, 0, 0, 0], dtype=np.uint8)
-    poly[:, 13:93] = ring_bytes
-
+    poly[:, :13] = _RING5_HEAD
+    poly[:, 13:93] = pts.reshape(n, 10).view(np.uint8)
+    sp, mp = np.flatnonzero(~as_multi), np.flatnonzero(as_multi)
+    multi = np.empty((len(mp), 102), dtype=np.uint8)
+    multi[:, :9] = _MULTI_HEAD
+    multi[:, 9:] = poly[mp]
     out = [None] * n
-    multi_head = np.array([1, 6, 0, 0, 0, 1, 0, 0, 0], dtype=np.uint8)
-    mp = np.flatnonzero(as_multi)
-    sp = np.flatnonzero(~as_multi)
-    if len(sp):
-        raw = poly[sp].tobytes()
-        for j, i in enumerate(sp):
-            out[i] = raw[j * 93:(j + 1) * 93]
-    if len(mp):
-        buf = np.empty((len(mp), 102), dtype=np.uint8)
-        buf[:, :9] = multi_head
-        buf[:, 9:] = poly[mp]
-        raw = buf.tobytes()
-        for j, i in enumerate(mp):
-            out[i] = raw[j * 102:(j + 1) * 102]
+    for idx, mat in ((sp, poly[sp]), (mp, multi)):
+        for i, w in zip(idx.tolist(), wkb_rows(mat)):
+            out[i] = w
     return out
+
+
+def axis_rect(x, y):
+    """(n, 4) ring vertices without the closing one -> True where every
+    edge moves exactly one coordinate and the axes alternate: a proper
+    axis rect with 4 distinct corners (NaN never passes)."""
+    dx = x != np.roll(x, -1, axis=1)
+    dy = y != np.roll(y, -1, axis=1)
+    return (dx ^ dy).all(axis=1) & (dx[:, :3] != dx[:, 1:]).all(axis=1)
+
+
+def rect_lane(fr, rows, x, y, buffer_units, global_maxzoom):
+    """The rect kernel: rows `rows` of metatile frame fr are axis rects
+    with EPSG:3857 corners x, y (n, 4), in ring order. Remaps the
+    corners, derives each rect's bounds and ring state, and returns its
+    pieces as (row, tile x, tile y, WKB list)."""
+    f = np.repeat(rows, 4)
+    vx, vy = remap_arrays(fr, f, x.ravel(), y.ravel())
+    u = round_half_away(vx).reshape(-1, 4)
+    v = round_half_away(vy).reshape(-1, 4)
+
+    # rect bounds + ring state in tile space; degenerate axes collapse
+    # to duplicate points -> ring shorter than 4 -> dropped (remap
+    # semantics)
+    rx0, rx1 = u.min(axis=1), u.max(axis=1)
+    ry0, ry1 = v.min(axis=1), v.max(axis=1)
+    k = np.flatnonzero((rx0 < rx1) & (ry0 < ry1))
+
+    # corner index of each remapped ring point in the canonical cycle
+    # C0=(x0,y0) C1=(x1,y0) C2=(x1,y1) C3=(x0,y1)
+    cidx = np.where(v == ry0[:, None],
+                    np.where(u == rx0[:, None], 0, 1),
+                    np.where(u == rx0[:, None], 3, 2))
+    fwd = ((cidx[:, 1] - cidx[:, 0]) % 4) == 1
+    state = (cidx[:, 0] << 1) | fwd.astype(np.int64)
+
+    g = rows[k]
+    (pf, ptx, pty, px0, py0, px1, py1, out_state, as_multi) = rect_pieces(
+        rx0[k], ry0[k], rx1[k], ry1[k], state[k], fr.zoom[g],
+        fr.size_mt[g], fr.x0t[g], fr.y0t[g], buffer_units, global_maxzoom)
+    src = g[pf]
+    return (src, fr.x0t[src] + ptx, fr.y0t[src] + pty,
+            rings_wkb(px0, py0, px1, py1, out_state, as_multi))

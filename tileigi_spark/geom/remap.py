@@ -16,6 +16,58 @@ Semantics match the reference's `remap_geometry` (lib.rs:739-868):
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
+
+import numpy as np
+
+from ..mercator import MERC_MAX
+
+WORLD = 2.0 * MERC_MAX
+
+
+class Frame(NamedTuple):
+    """Per-row metatile frame of a (zoom, mtx, mty) batch: metatile size
+    in tiles, top-left tile, 3857 bounds and tile-space extent
+    (lib.rs:464-540). Every geometry lane remaps against these arrays."""
+    zoom: np.ndarray
+    size_mt: np.ndarray
+    x0t: np.ndarray
+    y0t: np.ndarray
+    minx: np.ndarray
+    maxx: np.ndarray
+    miny: np.ndarray
+    maxy: np.ndarray
+    extent: np.ndarray  # int64, 4096 * size_mt
+
+
+def metatile_frame(zoom, mtx, mty, metatile_scale: int) -> Frame:
+    zoom = np.asarray(zoom, np.int64)
+    size_mt = np.minimum(metatile_scale, 1 << zoom)
+    x0t = np.asarray(mtx, np.int64) * size_mt
+    y0t = np.asarray(mty, np.int64) * size_mt
+    nz = (1 << zoom).astype(np.float64)
+    return Frame(zoom, size_mt, x0t, y0t,
+                 x0t / nz * WORLD - MERC_MAX,
+                 (x0t + size_mt) / nz * WORLD - MERC_MAX,
+                 MERC_MAX - (y0t + size_mt) / nz * WORLD,
+                 MERC_MAX - y0t / nz * WORLD,
+                 4096 * size_mt)
+
+
+def remap_arrays(fr: Frame, f, xs, ys):
+    """remap_geometry's affine map for vertices xs/ys of rows f, before
+    rounding (tile-space floats, y flipped); same operation order as
+    _remap_xy, so round_half_away of the result equals it exactly."""
+    ext = fr.extent[f].astype(np.float64)
+    vx = ((xs - fr.minx[f]) / (fr.maxx - fr.minx)[f]) * ext
+    vy = ((fr.maxy[f] - ys) / (fr.maxy - fr.miny)[f]) * ext
+    return vx, vy
+
+
+def round_half_away(v) -> np.ndarray:
+    """_round_half_away over a float array, as int64."""
+    return np.where(v >= 0, np.floor(v + 0.5),
+                    np.ceil(v - 0.5)).astype(np.int64)
 
 
 def _round_half_away(v: float) -> int:
@@ -104,9 +156,8 @@ def _remap_polygon_rings(rings, minx, maxx, miny, maxy, size):
 
 def shift_geom(geom, xoff, yoff):
     """Shift tile-local coordinates by (-xoff, -yoff) — the per-tile
-    origin move after the quadtree slice (G12, lib.rs:688-696). One
-    definition shared by the scalar pipeline (engine.geometry_stage),
-    the axis-rect fast path, and the ragged batch lane."""
+    origin move after the quadtree slice (G12, lib.rs:688-696), on
+    geometry tuples: the scalar chain's (geom/batch._scalar_chain)."""
     typ, data = geom
     if typ == "Point":
         return (typ, (data[0] - xoff, data[1] - yoff))

@@ -33,7 +33,3 @@ def wrap_i32(v: int) -> int:
     """Wrap an arbitrary int to i32 two's complement (Rust `as i32`)."""
     v &= 0xFFFFFFFF
     return v - 0x100000000 if v >= 0x80000000 else v
-
-
-def ring_closed(ring) -> bool:
-    return len(ring) >= 2 and ring[0] == ring[-1]

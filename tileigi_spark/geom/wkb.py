@@ -132,6 +132,12 @@ def _cumsum0(a):
     return out
 
 
+def _ranges(start, count):
+    """The index ranges [start[i], start[i] + count[i]) concatenated."""
+    off = _cumsum0(count)
+    return np.repeat(start - off[:-1], count) + np.arange(off[-1])
+
+
 class Ragged(NamedTuple):
     """A WKB column as ragged arrays (see read_ragged).
 
@@ -291,8 +297,7 @@ def read_ragged(ways) -> Ragged:
     if walked:
         slow = (typ != 0) & ~fast
         m = nrings[slow]
-        at = (np.repeat(row_off[:-1][slow] - _cumsum0(m)[:-1], m)
-              + np.arange(len(walked)))
+        at = _ranges(row_off[:-1][slow], m)
         w_int, w_k, w_at = zip(*walked)
         ring_int[at] = w_int
         ring_k[at] = w_k

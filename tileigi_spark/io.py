@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -44,8 +45,14 @@ class TileStore:
         path = os.path.join(self.base, name)
         try:
             return spark.read.parquet(path)
-        except Exception:
-            return None
+        except AnalysisException as e:
+            # an absent table: no directory yet, or an empty one; a
+            # corrupt file must fail the read, not pass for "absent" (a
+            # resume would silently re-render everything)
+            if e.getCondition() in ("PATH_NOT_FOUND",
+                                    "UNABLE_TO_INFER_SCHEMA"):
+                return None
+            raise
 
     def write_tiles(self, tiles: DataFrame, dedup: bool = True):
         """tiles: (zoom,x,y,tile,tile_md5)."""

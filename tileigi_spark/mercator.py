@@ -1,15 +1,15 @@
-"""Web-Mercator / slippy-tile math, metatiles, scale denominators.
+"""Web-Mercator / slippy-tile math, bbox tile ranges, scale denominators.
 
 Replaces the reference's slippy_map_tiles dependency + lib.rs helpers:
-scale_denominator_for_zoom (lib.rs:149-175), buffer/pixel math
-(lib.rs:507-540), x_to_lon/y_to_lat (lib.rs:870-887). All pure functions;
-numpy-vectorized variants provided for Arrow UDF batches (G22).
+scale_denominator_for_zoom (lib.rs:149-175), x_to_lon/y_to_lat
+(lib.rs:870-887), and the clip-buffer slack of the feature prefilter
+(cover_slack; 1 px of buffer = 16 tile units, lib.rs:508). All pure
+functions.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
 import numpy as np
 
@@ -44,32 +44,6 @@ def merc_to_lonlat(x, y):
     lon = np.asarray(x, dtype=np.float64) * 180.0 / MERC_MAX
     lat = np.degrees(2.0 * np.arctan(np.exp(np.asarray(y) * np.pi / MERC_MAX)) - np.pi / 2.0)
     return lon, lat
-
-
-def lonlat_to_tile(lon, lat, zoom):
-    """Slippy formula (vectorized): x = floor((lon+180)/360*2^z),
-    y = floor((1 - asinh(tan lat)/pi)/2 * 2^z), clamped to [0, 2^z-1]."""
-    n = 1 << zoom
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    xt = np.floor((lon + 180.0) / 360.0 * n)
-    lat_rad = np.radians(lat)
-    yt = np.floor((1.0 - np.arcsinh(np.tan(lat_rad)) / np.pi) / 2.0 * n)
-    xt = np.clip(xt, 0, n - 1).astype(np.int64)
-    yt = np.clip(yt, 0, n - 1).astype(np.int64)
-    return xt, yt
-
-
-def tile_bounds_merc(zoom: int, x: int, y: int, span: int = 1):
-    """3857 bbox of `span` x `span` tiles whose top-left tile is (x, y).
-    Returns (minx, miny, maxx, maxy); y axis: tile row 0 is north."""
-    n = 1 << zoom
-    world = 2.0 * MERC_MAX
-    minx = x / n * world - MERC_MAX
-    maxx = (x + span) / n * world - MERC_MAX
-    maxy = MERC_MAX - y / n * world
-    miny = MERC_MAX - (y + span) / n * world
-    return (minx, miny, maxx, maxy)
 
 
 def x_to_lon(x, extent: float) -> float:
@@ -143,65 +117,6 @@ def bbox_metatile_range(bbox_merc, zoom: int,
     x0, y0, x1, y1 = bbox_tile_range(bbox_merc, zoom)
     size = min(scale, 1 << zoom)
     return (x0 // size, y0 // size, x1 // size, y1 // size)
-
-
-# --------------------------------------------------------------- metatiles
-
-@dataclass(frozen=True)
-class Metatile:
-    """scale x scale block of tiles; effective size shrinks at low zooms
-    (1 metatile covers the world when 2^zoom <= scale)."""
-    zoom: int
-    x: int  # tile coords of top-left tile, multiple of size
-    y: int
-    scale: int = 8
-
-    @property
-    def size(self) -> int:
-        return min(self.scale, 1 << self.zoom)
-
-    def tiles(self):
-        s = self.size
-        return [(self.zoom, self.x + i, self.y + j)
-                for i in range(s) for j in range(s)]
-
-    def bounds_merc(self):
-        return tile_bounds_merc(self.zoom, self.x, self.y, self.size)
-
-
-def metatiles_for_zoom(zoom: int, scale: int = 8):
-    """Enumerate all metatiles of one zoom (lib.rs:186-220 equivalent)."""
-    size = min(scale, 1 << zoom)
-    n = 1 << zoom
-    for x in range(0, n, size):
-        for y in range(0, n, size):
-            yield Metatile(zoom, x, y, scale)
-
-
-def num_metatiles_for_zoom(zoom: int, scale: int = 8) -> int:
-    log2_scale = scale.bit_length() - 1
-    if log2_scale >= zoom:
-        return 1
-    return 4 ** (zoom - log2_scale)
-
-
-def buffer_math(metatile: Metatile, buffer_pixels: int):
-    """lib.rs:507-540. One config 'pixel' of buffer = 16 tile units
-    (4096/256). Returns (buffered_bbox_3857, buffer_tile_units,
-    pixel_width, pixel_height, extent)."""
-    buffer = buffer_pixels * 16
-    canvas_size = 256.0 * metatile.size
-    minx, miny, maxx, maxy = metatile.bounds_merc()
-    tile_width = maxx - minx
-    tile_height = maxy - miny
-    buffer_width = (tile_width / canvas_size) * buffer
-    buffer_height = (tile_height / canvas_size) * buffer
-    bbox = (minx - buffer_width, miny - buffer_height,
-            maxx + buffer_width, maxy + buffer_height)
-    pixel_width = np.float32(tile_width / canvas_size)
-    pixel_height = np.float32(tile_height / canvas_size)
-    extent = 4096.0 * metatile.size
-    return bbox, buffer, float(pixel_width), float(pixel_height), extent
 
 
 def cover_slack(zoom: int, buffer_px: int) -> float:

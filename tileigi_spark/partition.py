@@ -63,13 +63,6 @@ def cell_slack(cell_zoom: int, buffer_px: int) -> float:
     return cover_slack(cell_zoom, buffer_px)
 
 
-def cell_bbox_merc(cell_x: int, cell_y: int, cell_zoom: int) -> tuple:
-    """(minx, miny, maxx, maxy) mercator bounds of one cell."""
-    span = WORLD / (1 << cell_zoom)
-    return (-MERC_MAX + cell_x * span, MERC_MAX - (cell_y + 1) * span,
-            -MERC_MAX + (cell_x + 1) * span, MERC_MAX - cell_y * span)
-
-
 def read_rect(bbox_merc: Optional[tuple], cell_zoom: int,
               minzoom: Optional[int] = None,
               buffer_px: int = 2) -> tuple:

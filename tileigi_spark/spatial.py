@@ -7,14 +7,16 @@ the (much smaller) candidate set, Arrow-batched.
 from __future__ import annotations
 
 import logging
+import math
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import BooleanType
 
-from .engine import with_bbox, _collect_coords
-from .geom.wkb import wkb_to_geom
+from .engine import with_bbox, _bbox_arrays
+from .geom.batch import axis_rect_rows
+from .geom.wkb import read_ragged, wkb_to_geom
 from .index import cell_col, cell_xy_cols, bbox_cover_cells, disk_cells
 from .mercator import MERC_MAX
 
@@ -114,35 +116,6 @@ def _pip_refine(px: pd.Series, py: pd.Series, way: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def _axis_rect_bounds(geom):
-    """(x0, y0, x1, y1) when `geom` is a single closed 5-point
-    axis-aligned rectangle ring (each edge changes exactly one
-    coordinate, axes alternating), else None. For such rings the
-    even-odd crossing test is EXACTLY the pure-comparison test
-    ((y0>py) != (y1>py)) and ((x0>px) != (x1>px)) — see the caller —
-    which lets the refine run JVM-side."""
-    typ, data = geom
-    if typ == "MultiPolygon" and len(data) == 1:
-        typ, data = "Polygon", data[0]
-    if typ != "Polygon" or len(data) != 1:
-        return None
-    ring = data[0]
-    if len(ring) != 5 or ring[0] != ring[4]:
-        return None
-    moves = []
-    for i in range(4):
-        dx = ring[i + 1][0] != ring[i][0]
-        dy = ring[i + 1][1] != ring[i][1]
-        if dx == dy:  # diagonal or degenerate edge
-            return None
-        moves.append(dx)
-    if moves[0] == moves[1] or moves[1] == moves[2] or moves[2] == moves[3]:
-        return None
-    xs = [p[0] for p in ring[:4]]
-    ys = [p[1] for p in ring[:4]]
-    return (min(xs), min(ys), max(xs), max(ys))
-
-
 def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
                           index_zoom: int = 7,
                           px_col: str = "mx", py_col: str = "my",
@@ -174,44 +147,38 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     spark = points.sparkSession
     poly_cols = [c for c in polygons.columns if c != "way"]
 
+    # one read of the collected WKB: bboxes from its vertex arrays, and
+    # rect-ness from the geometry router's axis-rect predicate on
+    # one-ring Polygon / MultiPolygon-of-one rows (rows it refuses are
+    # not rects and take the exact Python refine)
+    ways = [None if r["way"] is None else bytes(r["way"]) for r in rows]
+    rag = read_ragged(ways)
+    bb = _bbox_arrays(ways, rag)
+    rects, rx, ry = axis_rect_rows(rag, (3, 6))
+    rect_of = dict(zip(rects.tolist(), zip(
+        rx.min(axis=1).tolist(), ry.min(axis=1).tolist(),
+        rx.max(axis=1).tolist(), ry.max(axis=1).tolist())))
+
     n = 1 << index_zoom
     span = WORLD / n
-    import math
+    # exact mirror of bbox_cover_cells / cell_col arithmetic
+    cx0, cx1 = ((bb[k] + MERC_MAX) / span for k in ("xmin", "xmax"))
+    cy0, cy1 = ((MERC_MAX - bb[k]) / span for k in ("ymax", "ymin"))
 
     def clamp(c):
-        return min(n - 1, max(0, c))
+        return min(n - 1, max(0, math.floor(c)))
 
     cell_rows = []
     attr_rows = []
     wkb_by_pid = {}
-    rect_by_pid = {}
-    for pid, r in enumerate(rows):
-        w = r["way"]
-        if w is None:
-            continue
-        try:
-            g = wkb_to_geom(bytes(w))
-        except ValueError:
-            continue
-        xs, ys = [], []
-        _collect_coords(g, xs, ys)
-        if not xs:
-            continue
-        wkb_by_pid[pid] = bytes(w)
-        rect = _axis_rect_bounds(g)
-        if rect is not None:
-            rect_by_pid[pid] = rect
-        attr_rows.append((pid, *[r[c] for c in poly_cols]))
-        # exact mirror of bbox_cover_cells / cell_col arithmetic
-        cx0 = clamp(math.floor((min(xs) + MERC_MAX) / span))
-        cx1 = clamp(math.floor((max(xs) + MERC_MAX) / span))
-        cy0 = clamp(math.floor((MERC_MAX - max(ys)) / span))
-        cy1 = clamp(math.floor((MERC_MAX - min(ys)) / span))
-        for cx in range(cx0, cx1 + 1):
-            for cy in range(cy0, cy1 + 1):
+    for pid in np.flatnonzero(~np.isnan(bb["xmin"])).tolist():
+        wkb_by_pid[pid] = ways[pid]
+        attr_rows.append((pid, *[rows[pid][c] for c in poly_cols]))
+        for cx in range(clamp(cx0[pid]), clamp(cx1[pid]) + 1):
+            for cy in range(clamp(cy0[pid]), clamp(cy1[pid]) + 1):
                 cell_rows.append((cx * (1 << 32) + cy, pid))
 
-    if len(rect_by_pid) == len(wkb_by_pid):
+    if all(pid in rect_of for pid in wkb_by_pid):
         # Every polygon is a single axis-aligned rectangle ring (the
         # admin-box / tile-bounds norm): the even-odd refine collapses to
         # a pure-JVM half-open interval test and the whole join runs as
@@ -226,7 +193,7 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
                                        StructType)
 
         attr_by_pid = {a[0]: a[1:] for a in attr_rows}
-        rect_rows = [(cell, *rect_by_pid[pid], *attr_by_pid[pid])
+        rect_rows = [(cell, *rect_of[pid], *attr_by_pid[pid])
                      for cell, pid in cell_rows]
         schema = StructType(
             [StructField("cell", LongType(), False)]

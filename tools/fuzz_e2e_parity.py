@@ -4,16 +4,19 @@ The unit-level fuzz (tests/test_geom_batch.py) pins the geometry stage
 batch-vs-scalar on random shapes; the golden tests pin fixed inputs at
 two partitionings. This probe binds the whole pipeline together on the
 fuzz diet: for each seed it feeds the same random mixed geometry set
-(make_rand_geom's twelve shape classes) through `build_tiles` z0-z6 and
-asserts the full {(zoom,x,y): tile_md5} map is IDENTICAL across
+(make_rand_geom's twelve shape classes, plus axis boxes of both windings
+and simple points for the router's rect and points kernels) through
+`build_tiles` z0-z6 and asserts the full {(zoom,x,y): tile_md5} map is
+IDENTICAL across
 
   * two input partitionings (1 vs 13 parts, same session) — proves the
     salted assembly / partial-merge order-independence on arbitrary
     shapes, not just the golden fixtures;
-  * the batch lane vs SPARK_GRAFT_FORCE_SCALAR_GEOM=1 (child process —
-    the flag is read in the Python workers, whose env is fixed at JVM
-    start) — proves lane parity through encode+assemble, not just at
-    the geometry-stage rows.
+  * the router's vector lanes vs SPARK_GRAFT_FORCE_SCALAR_GEOM=1, which
+    sends every row (points and rects included) to the scalar chain
+    (child process — the flag is read in the Python workers, whose env
+    is fixed at JVM start) — proves lane parity through encode+assemble,
+    not just at the geometry-stage rows.
 
 Usage: python tools/fuzz_e2e_parity.py [--seeds 8] [--n 400]
        [--maxzoom 6]. Prints one PASS/FAIL line per seed and a summary;
@@ -46,6 +49,7 @@ def _load_gen():
 def rows_for_seed(seed: int, n: int):
     m = _load_gen()
     from tileigi_spark.geom.wkb import geom_to_wkb
+    from tileigi_spark.mercator import MERC_MAX
 
     rng = random.Random(1_000_000 + seed)
     rand_geom = m.make_rand_geom(rng)
@@ -54,6 +58,23 @@ def rows_for_seed(seed: int, n: int):
         g = rand_geom()
         if g is None:
             continue
+        rows.append((i, bytearray(geom_to_wkb(g)), f"t{i % 7}"))
+    # boxes and points on their own stream, so the diet above stays the
+    # one tests/test_geom_batch.py fuzzes
+    box_rng = random.Random(2_000_000 + seed)
+    for i in range(n, n + n // 4):
+        cx = box_rng.uniform(-MERC_MAX, MERC_MAX)
+        cy = box_rng.uniform(-MERC_MAX, MERC_MAX)
+        if i % 2:
+            g = ("Point", (cx, cy))
+        else:
+            w, h = (10 ** box_rng.uniform(2, 7) for _ in range(2))
+            ps = [(cx, cy), (cx + w, cy), (cx + w, cy + h), (cx, cy + h)]
+            if box_rng.random() < 0.5:
+                ps = ps[::-1]
+            k = box_rng.randrange(4)
+            ps = ps[k:] + ps[:k]
+            g = ("Polygon", [ps + [ps[0]]])
         rows.append((i, bytearray(geom_to_wkb(g)), f"t{i % 7}"))
     return rows
 
