@@ -113,6 +113,195 @@ def test_tilestore_absent_vs_corrupt_table(spark, tmp_path):
         store.done_keys(spark)
 
 
+# -------------------------------------------------- resume loop (S11, A3)
+
+TILES_DDL = "zoom int, x long, y long, tile binary, tile_md5 string"
+# the metrics table's schema as earlier stores wrote it (createDataFrame)
+METRICS_DDL = ("run_id string, stage string, zoom int, rows long, "
+               "secs double, extra string")
+
+
+def _pyramid_tiles(spark):
+    """1, 2 and 4 tiles at z0, z1 and z2, each with its own blob."""
+    rows = [(z, x, 0, f"t{z}/{x}".encode(), f"m{z}/{x}")
+            for z in range(3) for x in range(1 << z)]
+    return spark.createDataFrame(rows, TILES_DDL)
+
+
+def _anti_build(tiles):
+    def build(zoom, done):
+        df = tiles.filter(F.col("zoom") == zoom)
+        if done is not None:
+            df = df.join(done, on=["zoom", "x", "y"], how="left_anti")
+        return df
+    return build
+
+
+def _files(root, table):
+    base = os.path.join(root, table)
+    return sorted(os.path.relpath(os.path.join(d, f), base)
+                  for d, _, names in os.walk(base) for f in names)
+
+
+def _metrics(spark, root, run_id):
+    return spark.read.parquet(os.path.join(root, "metrics")).filter(
+        F.col("run_id") == run_id).collect()
+
+
+def test_resume_of_a_finished_store_commits_nothing(spark, tmp_path):
+    """Every zoom already done: the resume renders each batch once and
+    does nothing else — no staging read-back, tile write or checkpoint
+    mark, and the map/images/checkpoint files stay as they were. Each
+    zoom still gets its metrics row (rows = 0), all in one append."""
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    root = str(tmp_path / "finished")
+    store = TileStore(root)
+    build = _anti_build(_pyramid_tiles(spark))
+    run_pyramid_with_checkpoint(spark, store, build, [0, 1, 2],
+                                run_id="first")
+    tables = ("map", "images", "checkpoint")
+    before = {t: _files(root, t) for t in tables}
+    assert all(before.values())
+
+    calls = []
+
+    def spy(name):
+        real = getattr(store, name)
+
+        def wrapped(*args):
+            calls.append((name, args))
+            return real(*args)
+        setattr(store, name, wrapped)
+
+    for name in ("read_staging", "write_tiles", "mark_done",
+                 "append_metrics"):
+        spy(name)
+    run_pyramid_with_checkpoint(spark, store, build, [0, 1, 2],
+                                run_id="resume")
+
+    assert [name for name, _ in calls] == ["append_metrics"]
+    assert len(calls[0][1][-1]) == 3      # one append of three rows
+    assert {t: _files(root, t) for t in tables} == before
+    assert sorted((r.zoom, r.rows) for r in
+                  _metrics(spark, root, "resume")) == [(0, 0), (1, 0), (2, 0)]
+    assert not [p for p in os.listdir(root) if p.startswith("staging_z")]
+
+
+def test_mixed_resume_metrics_match_the_map(spark, tmp_path):
+    """A store holding z0 and the even columns of z2, with the metrics
+    row its earlier writer (createDataFrame, nullable columns) left:
+    the resume writes z1 and the odd half of z2, its metrics rows count
+    exactly what it added per zoom, the schema is unchanged, and the
+    rows of both writers sum to the map's row count per zoom."""
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    root = str(tmp_path / "mixed")
+    store = TileStore(root)
+    tiles = _pyramid_tiles(spark)
+    base = tiles.filter((F.col("zoom") == 0) | (
+        (F.col("zoom") == 2) & (F.pmod(F.col("x"), F.lit(2)) == 0)))
+    store.write_tiles(base)
+    store.mark_done(base)
+    parent_rows = spark.createDataFrame(
+        [("base", "pyramid", 0, 1, 0.5, "{}"),
+         ("base", "pyramid", 2, 2, 0.5, "{}")], METRICS_DDL)
+    parent_rows.write.parquet(os.path.join(root, "metrics"))
+
+    run_pyramid_with_checkpoint(spark, store, _anti_build(tiles),
+                                [0, 1, 2], run_id="resume")
+
+    metrics = spark.read.parquet(os.path.join(root, "metrics"))
+    assert metrics.schema == parent_rows.schema
+    assert {r.zoom: r.rows for r in _metrics(spark, root, "resume")} == \
+        {0: 0, 1: 2, 2: 2}
+    per_zoom = {r.zoom: r["sum(rows)"]
+                for r in metrics.groupBy("zoom").sum("rows").collect()}
+    in_map = {r.zoom: r["count"] for r in spark.read.parquet(
+        os.path.join(root, "map")).groupBy("zoom").count().collect()}
+    assert per_zoom == in_map == {0: 1, 1: 2, 2: 4}
+    assert store.read_tiles(spark).count() == 7
+
+
+def test_resume_loop_empty_build_and_failing_build(spark, tmp_path):
+    """A build_fn returning the empty tiles frame (no layer covers the
+    zoom) completes and commits nothing; a build_fn that raises at a
+    later zoom propagates the error, and the zooms committed before it
+    keep their checkpoint keys and metrics rows (the empty z1's row
+    rode with z2's commit)."""
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    empty = spark.createDataFrame([], TILES_DDL)
+    root = str(tmp_path / "edge")
+    store = TileStore(root)
+    run_pyramid_with_checkpoint(spark, store, lambda z, done: empty,
+                                [0, 1], run_id="empty")
+    assert sorted(os.listdir(root)) == ["metrics"]
+    assert sorted((r.zoom, r.rows) for r in
+                  _metrics(spark, root, "empty")) == [(0, 0), (1, 0)]
+
+    tiles = _anti_build(_pyramid_tiles(spark))
+
+    def build(zoom, done):
+        if zoom == 1:
+            return empty
+        if zoom == 3:
+            raise RuntimeError("source vanished at z3")
+        return tiles(zoom, done)
+
+    with pytest.raises(RuntimeError, match="vanished at z3"):
+        run_pyramid_with_checkpoint(spark, store, build, [0, 1, 2, 3],
+                                    run_id="crash")
+    assert sorted(tuple(r) for r in store.done_keys(spark).collect()) == \
+        [(0, 0, 0)] + [(2, x, 0) for x in range(4)]
+    assert sorted((r.zoom, r.rows) for r in
+                  _metrics(spark, root, "crash")) == [(0, 1), (1, 0), (2, 4)]
+    assert spark.sparkContext.getLocalProperty(
+        "spark.job.description") is None
+
+
+def test_resume_loop_job_descriptions_and_tiles_per_s(spark, tmp_path):
+    """Every job the loop runs is named after its step in the status
+    store, the description is cleared afterwards, and each metrics row
+    carries its batch's tiles_per_s."""
+    import json
+
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out, it = {}, status.jobsList(None).iterator()
+        while it.hasNext():
+            j = it.next()
+            d = j.description()
+            out[j.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    seen = set(jobs())
+    root = str(tmp_path / "obs")
+    run_pyramid_with_checkpoint(spark, TileStore(root),
+                                _anti_build(_pyramid_tiles(spark)), [0, 1],
+                                run_id="obs")
+    loop_jobs = {k: d for k, d in jobs().items() if k not in seen}
+    spark.range(3).count()
+    after = {k: d for k, d in jobs().items()
+             if k not in seen and k not in loop_jobs}
+
+    assert {f"pyramid z{z}: {step}" for z in (0, 1)
+            for step in ("render+stage", "commit", "metrics")} \
+        <= set(loop_jobs.values())
+    assert all(d and d.startswith("pyramid") for d in loop_jobs.values()), \
+        loop_jobs
+    assert after and set(after.values()) == {None}
+
+    for r in _metrics(spark, root, "obs"):
+        tps = json.loads(r.extra)["tiles_per_s"]
+        assert r.rows > 0 and tps == pytest.approx(r.rows / r.secs)
+
+
 def test_mbtiles_export(spark, tmp_path):
     from tileigi_spark.io import export_mbtiles
 

@@ -338,3 +338,77 @@ def test_append_with_mismatched_grid_rejected(spark, tmp_path):
                            mode="append")
     assert spark.read.parquet(path).count() == 2 * before
     assert layout_meta(spark, path)["cell_zoom"] == CZ
+
+
+def test_append_onto_corrupt_sidecar_raises(spark, tmp_path):
+    """Only a missing sidecar means "new table"; one that exists but
+    cannot be parsed must fail the append instead of letting it write a
+    second grid under a sidecar that describes neither."""
+    import json
+
+    from tileigi_spark.partition import META_FILE
+
+    path = tmp_path / "t"
+    feats = with_bbox(features_df(spark, 8))
+    write_cell_partitioned(feats, str(path), cell_zoom=CZ, buffer_px=2)
+    before = spark.read.parquet(str(path)).count()
+    (path / META_FILE).write_text("{not json")
+    (path / f".{META_FILE}.crc").unlink(missing_ok=True)
+    with pytest.raises(json.JSONDecodeError):
+        write_cell_partitioned(feats, str(path), cell_zoom=CZ + 1,
+                               buffer_px=2, mode="append")
+    assert spark.read.parquet(str(path)).count() == before
+
+
+def test_cell_listing_failure_falls_back_to_root_read(spark, table,
+                                                       monkeypatch, caplog):
+    """A failed FS listing of the read rectangle's cell directories logs
+    a named fallback and reads the root with the partition filters:
+    same rows as the listed read. Any other error propagates."""
+    import logging
+
+    import tileigi_spark.partition as partition
+
+    path, _ = table
+    rect = (-MERC_MAX + 2.0 * SPAN, -MERC_MAX + 2.0 * SPAN,
+            -MERC_MAX + 3.5 * SPAN, -MERC_MAX + 3.5 * SPAN)
+
+    def ids():
+        return sorted(r.feature_id for r in read_cell_partitioned(
+            spark, path, bbox_merc=rect).select("feature_id").collect())
+
+    listed = ids()
+    assert listed
+    real_fs = partition._fs
+
+    class ListingFails:
+        """Delegates to the real FS; listStatus lists a missing path, so
+        it raises the FS's own FileNotFoundException."""
+
+        def __init__(self, fs, missing):
+            self._fs, self._missing = fs, missing
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def listStatus(self, _path):
+            return self._fs.listStatus(self._missing)
+
+    def fs_with(cls):
+        def _fs(spark, p, child=None):
+            fs, hpath = real_fs(spark, p, child)
+            return cls(fs, real_fs(spark, p, "no-such-cell")[1]), hpath
+        return _fs
+
+    monkeypatch.setattr(partition, "_fs", fs_with(ListingFails))
+    with caplog.at_level(logging.WARNING, logger="tileigi_spark.partition"):
+        assert ids() == listed
+    assert "cell listing failed: falling back to the root read" in caplog.text
+
+    class Broken(ListingFails):
+        def listStatus(self, _path):
+            raise RuntimeError("not a listing failure")
+
+    monkeypatch.setattr(partition, "_fs", fs_with(Broken))
+    with pytest.raises(RuntimeError, match="not a listing failure"):
+        ids()

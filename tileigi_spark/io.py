@@ -7,15 +7,27 @@ semantics. The checkpoint protocol is storage-agnostic: finished tile keys
 are appended after each zoom-batch commit and anti-joined on restart — a
 distributed version of the reference's does_metatile_exist file probe
 (fileio.rs:62-66).
+
+A zoom batch with nothing left to write costs one Spark job, the render
+that writes its staging table: the batch's row count is observed on that
+write, so an empty batch reads nothing back and commits nothing, and
+its metrics row waits to be appended with the next commit's row (or at
+the end of the loop) as one JVM-built append.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+# the TileStore `metrics` table's columns, in order
+_METRICS_SCHEMA = (("run_id", "string"), ("stage", "string"),
+                   ("zoom", "int"), ("rows", "long"), ("secs", "double"),
+                   ("extra", "string"))
 
 
 class TileStore:
@@ -82,13 +94,18 @@ class TileStore:
 
     # --------------------------------------------------------- staging
 
-    def write_staging(self, tiles: DataFrame, zoom: int):
+    def write_staging(self, tiles: DataFrame, zoom: int) -> int:
         """Materialize one zoom batch exactly once (single pass over the
-        expensive build plan). Replaces the old tiles.cache(): gigabytes
-        of gzipped tile bytes do not belong in executor storage memory at
-        scale — they belong on disk, where the two derive scans (map keys
-        + deduped images) read them back columnar."""
-        self._write(tiles, f"staging_z{zoom}", mode="overwrite")
+        expensive build plan) and return its row count, observed on that
+        same write, so no second job counts it. Replaces the old
+        tiles.cache(): gigabytes of gzipped tile bytes do not belong in
+        executor storage memory at scale — they belong on disk, where
+        the two derive scans (map keys + deduped images) read them back
+        columnar."""
+        obs = Observation()
+        self._write(tiles.observe(obs, F.count(F.lit(1)).alias("rows")),
+                    f"staging_z{zoom}", mode="overwrite")
+        return int(obs.get["rows"])
 
     def read_staging(self, spark: SparkSession, zoom: int) -> DataFrame | None:
         return self._read(spark, f"staging_z{zoom}")
@@ -122,16 +139,21 @@ class TileStore:
 
     def append_metrics(self, spark: SparkSession, rows: list[dict]):
         """Per-stage lineage/metrics rows (A3): run_id, stage, zoom batch,
-        row counts, wall seconds."""
+        row counts, wall seconds, JSON extras. The rows are literals of a
+        one-row range, so the append is one JVM task with no Python
+        worker round trip."""
         if not rows:
             return
-        df = spark.createDataFrame(
-            [(r.get("run_id", ""), r.get("stage", ""), int(r.get("zoom", -1)),
-              int(r.get("rows", 0)), float(r.get("secs", 0.0)),
-              json.dumps(r.get("extra", {})))
-             for r in rows],
-            "run_id string, stage string, zoom int, rows long, secs double, "
-            "extra string")
+        defaults = {"run_id": "", "stage": "", "zoom": -1, "rows": 0,
+                    "secs": 0.0, "extra": {}}
+        structs = []
+        for r in rows:
+            vals = {**defaults, **r}
+            vals["extra"] = json.dumps(vals["extra"])
+            structs.append(F.struct(*[F.lit(vals[c]).cast(t).alias(c)
+                                      for c, t in _METRICS_SCHEMA]))
+        df = spark.range(1, numPartitions=1).select(
+            F.inline(F.array(*structs)))
         self._write(df, "metrics")
 
 
@@ -139,32 +161,58 @@ def run_pyramid_with_checkpoint(spark: SparkSession, store: TileStore,
                                 build_fn, zooms: list[int],
                                 run_id: str = "run") -> None:
     """Resumable driver loop: per zoom-batch, anti-join finished keys,
-    build, stage the batch to storage in ONE pass, then derive the map/
-    images writes and the checkpoint keys FROM the staged table (never
-    from a re-execution or an executor-memory cache of tile bytes). The
-    checkpoint append is last, so a crash anywhere re-renders at most one
-    batch; duplicate rows from the crash window are collapsed by
-    read_tiles (content-addressed tiles make any copy correct)."""
-    import time
+    build, stage the batch to storage in ONE pass (which also counts
+    it), then derive the map/images writes and the checkpoint keys FROM
+    the staged table (never from a re-execution or an executor-memory
+    cache of tile bytes). The checkpoint append is last, so a crash
+    anywhere re-renders at most one batch; duplicate rows from the crash
+    window are collapsed by read_tiles (content-addressed tiles make any
+    copy correct).
 
-    done = store.done_keys(spark)
-    for zoom in zooms:
-        t0 = time.time()
-        tiles = build_fn(zoom, done)
-        if tiles is None:
-            continue
-        store.write_staging(tiles, zoom)
-        staged = store.read_staging(spark, zoom)
-        n = 0 if staged is None else staged.count()
-        if n:
-            store.write_tiles(staged)
-            store.mark_done(staged.select("zoom", "x", "y"))
-        store.append_metrics(spark, [{
-            "run_id": run_id, "stage": "pyramid", "zoom": zoom,
-            "rows": n, "secs": time.time() - t0,
-        }])
-        store.drop_staging(zoom, spark)
+    A batch whose staging write counted no rows commits nothing: no
+    staging read-back, tile write, checkpoint mark or `done` re-read.
+    Its metrics row is held and appended together with the next
+    commit's row, or at the end of the loop. A crash can therefore only
+    lose the rows of batches that checkpointed nothing, and the resume
+    renders those batches again and records them then.
+
+    Each step runs under a job description (`pyramid z{zoom}: render+
+    stage`, `... commit`, `... metrics`), and each metrics row's `extra`
+    carries the batch's `tiles_per_s`; the caller's job description is
+    restored afterwards."""
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    held: list[dict] = []
+    try:
+        sc.setJobDescription("pyramid: read checkpoint")
         done = store.done_keys(spark)
+        for zoom in zooms:
+            t0 = time.time()
+            sc.setJobDescription(f"pyramid z{zoom}: render+stage")
+            tiles = build_fn(zoom, done)
+            if tiles is None:
+                continue
+            n = store.write_staging(tiles, zoom)
+            if n:
+                sc.setJobDescription(f"pyramid z{zoom}: commit")
+                staged = store.read_staging(spark, zoom)
+                store.write_tiles(staged)
+                store.mark_done(staged)
+                done = store.done_keys(spark)
+            secs = time.time() - t0
+            held.append({"run_id": run_id, "stage": "pyramid",
+                         "zoom": zoom, "rows": n, "secs": secs,
+                         "extra": {"tiles_per_s": n / secs if secs else 0.0}})
+            if n:
+                sc.setJobDescription(f"pyramid z{zoom}: metrics")
+                store.append_metrics(spark, held)
+                held = []
+            store.drop_staging(zoom, spark)
+        if held:
+            sc.setJobDescription(f"pyramid z{held[-1]['zoom']}: metrics")
+            store.append_metrics(spark, held)
+    finally:
+        sc.setJobDescription(caller_desc)
 
 
 # ------------------------------------------------------------- exporters

@@ -39,12 +39,16 @@ the scale path named in SURVEY.md §6 / README "Scale design".
 from __future__ import annotations
 
 import json
+import logging
 import math
 from typing import Optional
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .mercator import MERC_MAX, bbox_tile_range, cover_slack
+
+_log = logging.getLogger(__name__)
 
 WORLD = 2.0 * MERC_MAX
 META_FILE = "_tileigi_cells.json"
@@ -135,11 +139,12 @@ def write_cell_partitioned(df: DataFrame, path: str, cell_zoom: int = 6,
         # appending under a different grid would mix two layouts in one
         # table while the sidecar describes only the new one — the
         # survivor rule and read_rect would then prune/duplicate the
-        # OLD rows against the wrong grid with no error
-        try:
-            prev = layout_meta(df.sparkSession, path)
-        except Exception:
-            prev = None  # no existing table: append == create
+        # OLD rows against the wrong grid with no error. Only a missing
+        # sidecar means a new table (append == create); one that cannot
+        # be read or parsed fails the append.
+        spark = df.sparkSession
+        prev = (layout_meta(spark, path)
+                if is_cell_partitioned(spark, path) else None)
         if prev is not None and (prev.get("cell_zoom") != cell_zoom
                                  or prev.get("buffer_px") != buffer_px):
             raise ValueError(
@@ -192,18 +197,18 @@ def write_cell_partitioned(df: DataFrame, path: str, cell_zoom: int = 6,
                  "version": 1})
 
 
-def _meta_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path, META_FILE)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
+def _fs(spark: SparkSession, path: str, child: Optional[str] = None):
+    """(Hadoop FileSystem, Path) for `path` (or its `child`)."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    hpath = Path(path) if child is None else Path(path, child)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
     # Hadoop FS, not a driver-local open(): the table path may be HDFS/
     # object storage on a real cluster (the sidecar must live WITH the
     # partitioned directories it describes).
-    fs, hpath = _meta_path(spark, path)
+    fs, hpath = _fs(spark, path, META_FILE)
     out = fs.create(hpath, True)
     try:
         out.write(bytearray(json.dumps(meta).encode("utf-8")))
@@ -212,7 +217,7 @@ def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
 
 
 def layout_meta(spark: SparkSession, path: str) -> dict:
-    fs, hpath = _meta_path(spark, path)
+    fs, hpath = _fs(spark, path, META_FILE)
     inp = fs.open(hpath)
     try:
         raw = bytes(spark._jvm.org.apache.commons.io.IOUtils
@@ -227,7 +232,7 @@ def is_cell_partitioned(spark: SparkSession, path: str) -> bool:
     # (bad scheme, auth, transient object-store failure) must PROPAGATE —
     # swallowing it would route a cell-partitioned table to the raw
     # parquet read, which double-counts every boundary-duplicated copy
-    fs, hpath = _meta_path(spark, path)
+    fs, hpath = _fs(spark, path, META_FILE)
     return bool(fs.exists(hpath))
 
 
@@ -235,12 +240,10 @@ def _rect_cell_dirs(spark: SparkSession, path: str,
                     rx0: int, ry0: int, rx1: int, ry1: int):
     """Leaf partition directories inside the read rectangle, found by
     listing ONLY the rectangle's cell_x branches (1 + |x-range| FS list
-    calls), never the rest of the table. None when the listing fails —
-    the caller falls back to the root read."""
+    calls), never the rest of the table. None when the FS listing fails
+    (logged) — the caller falls back to the root read."""
+    fs, root = _fs(spark, path)
     try:
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
         dirs = []
         for st in fs.listStatus(root):
             name = st.getPath().getName()
@@ -263,7 +266,9 @@ def _rect_cell_dirs(spark: SparkSession, path: str,
                 if ry0 <= cy <= ry1:
                     dirs.append(f"{path}/{name}/{sname}")
         return dirs
-    except Exception:
+    except Py4JJavaError as e:
+        _log.warning("cell listing failed: falling back to the root read "
+                     "of %s (%s)", path, e.java_exception)
         return None
 
 
