@@ -5,13 +5,15 @@ contract as test_mvt_bulk.py — bit-identical layer messages, including
 key/value table order — because golden tiles and the 1-vs-13-partition
 determinism contract pin exact bytes."""
 
+import logging
 import struct
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql.types import LongType, StringType
 
-from tileigi_spark.engine import _bulk_point_tags, _int_geom, _mvt_value
+from tileigi_spark.engine import _int_geom, _make_encode_run, _mvt_value
 from tileigi_spark.geom import mvt
 from tileigi_spark.geom.ringbulk import bulk_frame_ragged_features, mvt_rings
 from tileigi_spark.geom.wkb import read_ragged, wkb_to_geom
@@ -54,7 +56,7 @@ def parse_run(geoms):
     gtype = int(rag.code[0])
     if gtype not in (2, 3) or not (rag.code == gtype).all():
         return None
-    return (*rag.rows(0, len(geoms)), gtype)
+    return (*rag.take(np.arange(len(geoms))), gtype)
 
 
 def perrow(wkbs, props_list, ptypes):
@@ -69,36 +71,33 @@ def perrow(wkbs, props_list, ptypes):
     return enc, frames
 
 
-def bulk(wkbs, props_list, ptypes, family):
-    enc = mvt.LayerEncoder("l")
-    cols = []
-    for p, t in ptypes:
-        codes, uniq = pd.factorize(pd.Series([pr.get(p)
-                                              for pr in props_list]),
-                                   use_na_sentinel=True)
-        cols.append((p, t, codes, np.asarray(uniq)))
-    tags = _bulk_point_tags(enc, cols)
+def walk_one_run(wkbs, props_list, ptypes):
+    """The partial the encode walk makes of one run of these rows."""
+    pdf = pd.DataFrame({"zoom": 9, "x": 1, "y": 2, "salt": 0,
+                        "layer_order": 0, "layer": "l",
+                        "feature_id": np.arange(len(wkbs)),
+                        "geom": list(wkbs)})
+    for p, _ in ptypes:
+        pdf[p] = pd.Series([pr.get(p) for pr in props_list], dtype=object)
+    run = _make_encode_run({"l": dict(ptypes)}, [p for p, _ in ptypes])
+    (part,) = [bytes(b) for out in run(iter([pdf])) for b in out["part"]]
+    return part
+
+
+def assert_parity(wkbs, props_list, ptypes, family):
+    a, _ = perrow(wkbs, props_list, ptypes)
+    assert walk_one_run(wkbs, props_list, ptypes) == a.to_bytes()
+    # the framer's own contract, untagged: per-row bytes, and per-feature
+    # frame lengths that slice the stream exactly as the per-row frames
+    # fell out (what the walk scatters back into row order)
+    _, frames = perrow(wkbs, [{}] * len(wkbs), [])
     geoms = np.empty(len(wkbs), dtype=object)
     geoms[:] = wkbs
     parsed = parse_run(geoms)
     assert parsed is not None
     assert parsed[-1] == (3 if family == "poly" else 2)
-    res = bulk_frame_ragged_features(*parsed, tags)
-    assert res is not None
-    framed, rowlen = res
-    enc.add_framed_features(framed)
-    return enc, framed, rowlen
-
-
-def assert_parity(wkbs, props_list, ptypes, family):
-    a, frames = perrow(wkbs, props_list, ptypes)
-    b, framed, rowlen = bulk(wkbs, props_list, ptypes, family)
-    assert a.keys == b.keys
-    assert a.values == b.values
-    assert b"".join(a.features) == framed
-    assert a.to_bytes() == b.to_bytes()
-    # per-feature frame lengths must slice the stream exactly as the
-    # per-row frames fell out (the group-splitting contract)
+    framed, rowlen = bulk_frame_ragged_features(*parsed, [])
+    assert framed == b"".join(frames)
     cum = np.concatenate(([0], np.cumsum(rowlen)))
     assert cum[-1] == len(framed)
     for i, f in enumerate(frames):
@@ -365,8 +364,6 @@ def _walk_and_expected(groups):
     """Run _make_encode_run over one Arrow batch of `groups` (one tile
     each: lists of (wkb, lang)) and build the per-row LayerEncoder
     parts the walk must reproduce."""
-    from tileigi_spark.engine import _make_encode_run
-
     rows = [(7, 100 + t, 200, fid, w, lang)
             for t, g in enumerate(groups)
             for fid, (w, lang) in enumerate(g)]
@@ -431,26 +428,22 @@ def test_oversized_body_is_refused_by_the_framer():
     assert bulk_frame_ragged_features(*parse_run(small), []) is not None
 
 
-def test_walk_falls_back_per_segment(monkeypatch):
-    """Fewer than 3 groups in the batch: each run of >= 8 polygons goes
-    to the ragged framer on its own; the run holding the oversized
-    polygon is refused and must be encoded per-row, byte-identical."""
+@pytest.mark.parametrize("groups,big", [(2, 0), (4, 1)],
+                         ids=["two_tiles", "four_tiles"])
+def test_oversized_row_is_the_only_row_encoded_alone(monkeypatch, caplog,
+                                                     groups, big):
+    """The star polygon is screened out by its vertex count before the
+    ragged framer call, so the framer frames every other polygon (one
+    call per frame: the batch's complete runs, then its held-back last
+    run) and only the star is encoded on its own, byte-identical to a
+    per-row walk."""
     calls = _spy_ragged(monkeypatch)
-    got, expected = _walk_and_expected([_poly_group(1, big=True),
-                                        _poly_group(2)])
-    assert calls == [(9, True), (9, False)]
-    assert got == expected
-
-
-def test_walk_falls_back_batch_wide(monkeypatch):
-    """>= 3 groups: the batch-wide pass frames the complete middle
-    groups in one call; the oversized polygon in a middle group makes it
-    refuse, and the walk must drop to per-segment framing (and per-row
-    for that group) with bytes identical to a per-row walk."""
-    calls = _spy_ragged(monkeypatch)
-    got, expected = _walk_and_expected([_poly_group(1),
-                                        _poly_group(2, big=True),
-                                        _poly_group(3), _poly_group(4)])
-    assert calls == [(18, True), (9, False), (9, True), (9, False),
-                     (9, False)]
+    with caplog.at_level(logging.WARNING, logger="tileigi_spark.engine"):
+        got, expected = _walk_and_expected(
+            [_poly_group(1 + g, big=g == big) for g in range(groups)])
+    assert calls == [(9 * (groups - 1) - (big < groups - 1), False),
+                     (9 - (big == groups - 1), False)]
+    rec, = caplog.records
+    assert rec.getMessage().startswith("encode fallback: 1 of ")
+    assert rec.getMessage().endswith("framer width bound: 1)")
     assert got == expected

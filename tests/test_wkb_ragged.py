@@ -62,7 +62,7 @@ def rings_of(geom):
 def assert_row(rag, i, geom):
     typ = geom[0]
     assert rag.code[i] == CODES[typ]
-    xs, ys, ring_off, row_off = rag.rows(i, i + 1)
+    xs, ys, ring_off, row_off = rag.take([i])
     want = rings_of(geom)
     assert len(row_off) == 2 and row_off[1] == len(want)
     r0 = rag.row_off[i]
@@ -287,11 +287,14 @@ def _walk_rows():
 
 
 def test_encode_walk_reads_each_batch_once(monkeypatch):
+    """One read_ragged per frame and every row read exactly once: the
+    walk holds each batch's open trailing run back and reads it with
+    the next batch's complete runs."""
     calls = []
     real = engine.read_ragged
 
     def spy(geoms):
-        calls.append(len(geoms))
+        calls.append(list(geoms))
         return real(geoms)
 
     monkeypatch.setattr(engine, "read_ragged", spy)
@@ -301,8 +304,7 @@ def test_encode_walk_reads_each_batch_once(monkeypatch):
               "pts": {"rank": LongType()},
               "mixed": {"lang": StringType()}}
     run = engine._make_encode_run(ptypes, ["lang", "rank"])
-    # three Arrow batches; cuts fall inside segments, so encoders
-    # continue across batch boundaries
+    # three Arrow batches; cuts fall inside runs
     cuts = [0, 101, 230, len(pdf)]
     batches = [pdf.iloc[a:b].reset_index(drop=True)
                for a, b in zip(cuts, cuts[1:])]
@@ -312,7 +314,12 @@ def test_encode_walk_reads_each_batch_once(monkeypatch):
             key = (r.zoom, r.x, r.y, r.layer)
             assert key not in got, "unexpected split partial"
             got[key] = bytes(r.part)
-    assert calls == [b - a for a, b in zip(cuts, cuts[1:])]
+    # each frame ends where the run holding a batch's last row starts;
+    # the last run is read on its own at the end of the stream
+    starts = np.flatnonzero(engine._run_starts(pdf, engine._ENCODE_KEYS))
+    ends = [int(starts[starts < c][-1]) for c in cuts[1:]] + [len(pdf)]
+    assert [len(c) for c in calls] == np.diff([0] + ends).tolist()
+    assert [g for c in calls for g in c] == pdf["geom"].tolist()
 
     expected = {}
     for (z, x, y, layer), g in pdf.groupby(["zoom", "x", "y", "layer"],

@@ -24,6 +24,7 @@ amortizes per-tile overhead across whole Arrow batches.
 from __future__ import annotations
 
 import hashlib
+import logging
 from typing import Optional
 
 import numpy as np
@@ -37,10 +38,12 @@ from pyspark.sql.types import (
 from .config import Layers
 from .mercator import (MERC_MAX, bbox_metatile_range, bbox_tile_range,
                        cover_slack)
-from .geom.wkb import _cumsum0, wkb_to_geom, read_ragged
+from .geom.wkb import _cumsum0, _ranges, wkb_to_geom, read_ragged
 from .geom import mvt, ringbulk
 
 WORLD = 2.0 * MERC_MAX
+
+_log = logging.getLogger(__name__)
 
 # property columns: Spark type -> MVT conversion (lib.rs:653-684); columns
 # of any other type are dropped, like the reference drops unknown/bytea
@@ -402,129 +405,9 @@ def _int_geom(geom):
                   for rings in data])
 
 
-def _bulk_point_tags(enc, cols):
-    """Intern a point-run's property values into `enc` in the exact
-    (row, column) first-appearance order the per-row path would use, so
-    the vectorized framer's bytes match per-row output bit-for-bit.
-
-    cols: list of (prop_name, spark_type, codes int64, uniques) from a
-    per-batch pd.factorize, sliced to the run. Returns prop_tags for
-    either bulk framer (columns with no valid value omitted, matching
-    the per-row path which never visits them).
-    """
-    pend = []
-    for j, (p, t, codes, uniques) in enumerate(cols):
-        u, first = np.unique(codes, return_index=True)
-        for f, cu in zip(first.tolist(), u.tolist()):
-            if cu >= 0:
-                pend.append((f, j, cu))
-    pend.sort()
-    luts = [np.zeros(max(len(c[3]), 1), dtype=np.int64) for c in cols]
-    kis = [None] * len(cols)
-    for f, j, cu in pend:
-        p, t, codes, uniques = cols[j]
-        if kis[j] is None:
-            kis[j] = enc.intern_key(p)
-        luts[j][cu] = enc.intern_value(_mvt_value(uniques[cu], t))
-    prop_tags = []
-    for j, (p, t, codes, uniques) in enumerate(cols):
-        if kis[j] is None:
-            continue
-        valid = codes >= 0
-        vi = luts[j][np.where(valid, codes, 0)]
-        prop_tags.append((kis[j], vi, valid))
-    return prop_tags
-
-
-def _bulk_encode_groups(layer_name, prop, ptype, framer, args,
-                        codes, uniques, seg_starts):
-    """Encode MANY complete single-shape groups of one layer in one
-    vectorized pass (zero or one property column). framer(*args,
-    prop_tags) is one of the two bulk framers —
-    mvt.bulk_frame_point_features with args (xs, ys), or
-    ringbulk.bulk_frame_ragged_features with args (xs, ys, ring_off,
-    feat_off, gtype) — and returns (stream, per-feature frame lengths)
-    or None. Returns the list of finished layer-message bytes, one per
-    group (seg_starts order), or None when the framer refuses (caller
-    falls back).
-
-    Per-group LayerEncoder work is ~100µs of interpreter/numpy-call
-    overhead; at z10 the bench has 650k groups of ~16 features, so the
-    per-group constant dominates the encode stage. This path computes
-    group-local value-table ranks for the whole batch with one
-    unique/lexsort, frames every feature in one framer call, then
-    assembles each group's message from slices — O(rows) vectorized +
-    O(groups) cheap joins. Bytes are identical to the per-row
-    LayerEncoder output (pinned by tests/test_mvt_bulk.py and the
-    golden-tile fixtures).
-
-    codes/uniques: pd.factorize of the property column over these rows
-    (codes -1 = NULL), or None when the layer has no property column.
-    seg_starts: int64 array of group start offsets (first element 0).
-    """
-    header = (mvt._tag(15, 0) + mvt._varint(2)
-              + mvt._len_delim(1, layer_name.encode("utf-8")))
-    extbytes = mvt._tag(5, 0) + mvt._varint(4096)
-    prop_tags = []
-    valtabs = {}    # group -> key + value tables, only for tagged groups
-
-    if codes is not None:
-        n = len(codes)
-        gid = np.zeros(n, dtype=np.int64)
-        gid[seg_starts[1:]] = 1
-        gid = np.cumsum(gid)
-        keybytes = mvt._len_delim(3, prop.encode("utf-8"))
-        K = max(len(uniques), 1)
-        valid = codes >= 0
-        idx = np.flatnonzero(valid)
-        pairs = gid[idx] * K + codes[idx]
-        u_pairs, first_pos = np.unique(pairs, return_index=True)
-        inv = np.searchsorted(u_pairs, pairs)
-        g_of_pair = u_pairs // K
-        order = np.lexsort((first_pos, g_of_pair))
-        sorted_g = g_of_pair[order]
-        if len(order):
-            grp_start = np.flatnonzero(
-                np.concatenate(([True], sorted_g[1:] != sorted_g[:-1])))
-            reps = np.diff(np.append(grp_start, len(order)))
-            rank_seq = (np.arange(len(order))
-                        - np.repeat(grp_start, reps))
-        else:
-            grp_start = np.zeros(0, dtype=np.int64)
-            rank_seq = np.zeros(0, dtype=np.int64)
-        ranks = np.empty(len(u_pairs), dtype=np.int64)
-        ranks[order] = rank_seq
-        vi = np.zeros(n, dtype=np.int64)
-        vi[idx] = ranks[inv]
-        prop_tags = [(0, vi, valid)]
-        # per-group value tables, in first-appearance order
-        vbytes = [None] * len(uniques)
-        pair_codes_sorted = (u_pairs % K)[order]
-        bounds = np.append(grp_start, len(order))
-        for i in range(len(grp_start)):
-            g = int(sorted_g[grp_start[i]])
-            chunks = []
-            for c in pair_codes_sorted[bounds[i]:bounds[i + 1]].tolist():
-                b = vbytes[c]
-                if b is None:
-                    b = mvt._len_delim(
-                        4, mvt._encode_value(_mvt_value(uniques[c], ptype)))
-                    vbytes[c] = b
-                chunks.append(b)
-            valtabs[g] = keybytes + b"".join(chunks)
-
-    res = framer(*args, prop_tags)
-    if res is None:
-        return None
-    stream, rowlen = res
-    cum = np.concatenate(([0], np.cumsum(rowlen)))
-    cuts = cum[np.append(seg_starts, len(rowlen))].tolist()
-    return [header + stream[cuts[g]:cuts[g + 1]] + valtabs.get(g, b"")
-            + extbytes for g in range(len(seg_starts))]
-
-
 def _mvt_value(v, t):
-    if v is None or (isinstance(v, float) and pd.isna(v)):
+    # NaN is NULL for every float column, np.float32 (FloatType) included
+    if v is None or (isinstance(v, (float, np.floating)) and v != v):
         return None
     if isinstance(t, FloatType):
         return ("f32", float(v))
@@ -540,162 +423,232 @@ def _mvt_value(v, t):
 _PARTIAL_SCHEMA = ("zoom int, x long, y long, salt int, layer_order int, "
                    "layer string, part binary")
 
+# a partial layer message covers one run of equal encode keys; a tile
+# one run of equal tile keys
+_ENCODE_KEYS = ("zoom", "x", "y", "salt", "layer_order", "layer")
+_TILE_KEYS = ("zoom", "x", "y")
+
+
+def _run_starts(pdf, keys):
+    """True on every row of pdf that starts a run of equal `keys`."""
+    chg = np.zeros(len(pdf), dtype=bool)
+    chg[:1] = True
+    for k in keys:
+        v = pdf[k].values
+        chg[1:] |= v[1:] != v[:-1]
+    return chg
+
+
+def _walk_runs(iterator, keys, frame_fn):
+    """Drive a sorted-stream walk that only ever handles complete runs.
+
+    Each Arrow batch's open trailing run of equal `keys` is held back
+    until a later batch (or the end of the stream) closes it, so every
+    frame handed to frame_fn holds whole runs; a run spanning many
+    batches is kept as a list of pieces and concatenated once, when it
+    closes. frame_fn(frame) returns a dict of output column lists, the
+    first key column among them; the walk yields them as DataFrames of
+    >= 2000 rows and the rest at the end."""
+    def frames():
+        held = []
+        for pdf in iterator:
+            if not len(pdf):
+                continue
+            tail = int(np.flatnonzero(_run_starts(pdf, keys))[-1])
+            if not tail and held and all(held[-1][k].values[-1]
+                                         == pdf[k].values[0] for k in keys):
+                held.append(pdf)
+                continue
+            frame = held + [pdf.iloc[:tail]] if tail else held
+            held = [pdf.iloc[tail:]]
+            if frame:
+                yield frame
+        if held:
+            yield held
+
+    out = {}
+    for parts in frames():
+        for k, v in frame_fn(parts[0] if len(parts) == 1 else pd.concat(
+                parts, ignore_index=True)).items():
+            out.setdefault(k, []).extend(v)
+        if len(out[keys[0]]) >= 2000:
+            yield pd.DataFrame(out)
+            out = {}
+    if out:
+        yield pd.DataFrame(out)
+
+
+def _factorize(col):
+    """pd.factorize of a property column (code -1 = NULL). Float columns
+    are factorized by bit pattern so -0.0 and 0.0 keep their own bytes:
+    LayerEncoder interns them as one value but writes the sign it met
+    first in the run."""
+    v = col.values
+    if v.dtype.kind != "f":
+        return pd.factorize(v)
+    codes, uniq = pd.factorize(v.view(f"i{v.itemsize}"))
+    codes[np.isnan(v)] = -1
+    return codes, uniq.view(v.dtype)
+
+
+def _intern(run, ids, width, item_bytes, items, nruns):
+    """Intern `ids` per run in first-appearance order, as LayerEncoder's
+    intern_key/intern_value do; entries come in appearance order, so
+    runs are contiguous. Returns each entry's index in its run's table,
+    and every run's table — item_bytes of the `items` of the entries
+    that introduced its ids — as one blob with nruns + 1 byte cuts."""
+    u, first, inv = np.unique(run * width + ids, return_index=True,
+                              return_inverse=True)
+    intro = np.sort(first)
+    rank = np.empty(len(u), dtype=np.int64)
+    rank[np.argsort(first)] = (np.arange(len(u))
+                               - np.searchsorted(run[intro], run[intro]))
+    chunks = [item_bytes[i] for i in items[intro].tolist()]
+    off = _cumsum0(np.fromiter(map(len, chunks), np.int64, len(chunks)))
+    cut = off[np.searchsorted(run[intro], np.arange(nruns + 1))]
+    return rank[inv], (b"".join(chunks), cut.tolist())
+
+
+def _intern_tags(pdf, rid, nruns, ly_codes, layer_props):
+    """Tag indices of every row, interned per run exactly as a
+    LayerEncoder fed the run's rows in order would intern them.
+
+    Slot j of a row holds its layer's j-th property (layer_props order).
+    Keys are property names; a value's identity is (type name, value)
+    across all columns, so 1, True, f32 1.5 and double 1.5 stay apart
+    while a string two columns share is one table entry.
+
+    Returns (ki, vi, valid, keys, values): (n, P) key and value index
+    matrices with their mask (False on NULL and absent slots), and each
+    run's key and value table bytes as (blob, cuts) from _intern."""
+    n = len(pdf)
+    P = max(map(len, layer_props), default=0)
+    kid = np.full((n, P), -1, dtype=np.int64)   # key id
+    cid = np.full((n, P), -1, dtype=np.int64)   # value id (identity)
+    fid = np.full((n, P), -1, dtype=np.int64)   # value id (bytes)
+    key_ids, val_ids, val_bytes, cols = {}, {}, [], {}
+    for lay, props in enumerate(layer_props):
+        rows = np.flatnonzero(ly_codes == lay)
+        for j, (p, t) in enumerate(props):
+            if (p, t) not in cols:
+                codes, uniq = _factorize(pdf[p])
+                vals = [_mvt_value(u, t) for u in uniq]
+                cols[(p, t)] = codes, len(val_bytes), np.array(
+                    [-1 if v is None else val_ids.setdefault(
+                        (type(v).__name__, v), len(val_ids))
+                     for v in vals], dtype=np.int64)
+                val_bytes.extend(
+                    None if v is None
+                    else mvt._len_delim(4, mvt._encode_value(v))
+                    for v in vals)
+            codes, base, lut = cols[(p, t)]
+            c = codes[rows]
+            r, c = rows[c >= 0], c[c >= 0]
+            kid[r, j] = key_ids.setdefault(p, len(key_ids))
+            cid[r, j] = lut[c]
+            fid[r, j] = base + c
+    valid = cid >= 0
+    cells = np.flatnonzero(valid)            # (row, column) order
+    run = rid[cells // max(P, 1)]
+    kid = kid.ravel()[cells]
+    ki = np.zeros(n * P, dtype=np.int64)
+    vi = np.zeros(n * P, dtype=np.int64)
+    ki[cells], keys = _intern(
+        run, kid, len(key_ids), [mvt._len_delim(3, k.encode("utf-8"))
+                                 for k in key_ids], kid, nruns)
+    vi[cells], values = _intern(run, cid.ravel()[cells], len(val_ids),
+                                val_bytes, fid.ravel()[cells], nruns)
+    return ki.reshape(n, P), vi.reshape(n, P), valid, keys, values
+
+
+def _frame_rows(geoms, ki, vi, valid):
+    """Every row's framed field-2 feature message, in row order: one
+    point framer call for the frame's points, one ragged framer call per
+    line or polygon family, and encode_feature for the rows the framers
+    cannot take — MultiPoint or unread WKB (code 0), and rows whose
+    vertex and ring counts could pass the framers' 2^14-byte feature
+    body bound. Returns (stream, (n + 1,) row byte offsets)."""
+    n, P = valid.shape
+    rag = ringbulk.mvt_rings(read_ragged(geoms))
+    nr = np.diff(rag.row_off)
+    unread = rag.code == 0
+    wide = ~unread & (6 * np.diff(rag.ring_off[rag.row_off]) + 5 * nr
+                      + 4 * P + 7 >= 1 << 14)
+    length = np.zeros(n, dtype=np.int64)
+    framed = []
+    for gtype in (1, 2, 3):
+        rows = np.flatnonzero((rag.code == gtype) & ~wide)
+        if not len(rows):
+            continue
+        xs, ys, ring_off, feat_off = rag.take(rows)
+        tags = [(ki[rows, j], vi[rows, j], valid[rows, j])
+                for j in range(P)]
+        res = (mvt.bulk_frame_point_features(xs, ys, tags) if gtype == 1
+               else ringbulk.bulk_frame_ragged_features(
+                   xs, ys, ring_off, feat_off, gtype, tags))
+        if res is None:
+            wide[rows] = True
+        else:
+            length[rows] = res[1]
+            framed.append((rows, res[0]))
+    single = np.flatnonzero(unread | wide)
+    for i in single.tolist():
+        tags = [t for j in np.flatnonzero(valid[i]).tolist()
+                for t in (int(ki[i, j]), int(vi[i, j]))]
+        f = mvt._len_delim(2, mvt.encode_feature(
+            _int_geom(wkb_to_geom(bytes(geoms[i]))), tags))
+        length[i] = len(f)
+        framed.append(([i], f))
+    if len(single):
+        _log.warning("encode fallback: %d of %d rows encoded one at a "
+                     "time (unread WKB, code 0: %d; framer width "
+                     "bound: %d)", len(single), n, int(unread.sum()),
+                     int(wide.sum()))
+    off = _cumsum0(length)
+    out = np.empty(int(off[-1]), dtype=np.uint8)
+    for rows, stream in framed:
+        out[_ranges(off[rows], length[rows])] = np.frombuffer(stream,
+                                                              np.uint8)
+    return out.tobytes(), off
+
 
 def _make_encode_run(prop_types: dict[str, dict], all_props):
     """The sorted-stream partial-layer encode walk as a reusable
     mapInPandas function (shared by the salted two-shuffle path and the
     fused salt-free path — the walk itself is salt-agnostic: salt is
-    just one more run-break column, constant 0 in the fused stream)."""
+    just one more run-break column, constant 0 in the fused stream).
 
-    def run(iterator):
-        cur_key = None
-        enc = None
-        out = {k: [] for k in ("zoom", "x", "y", "salt", "layer_order",
-                               "layer", "part")}
+    The walk only handles complete runs (_walk_runs), so it carries no
+    encoder state across Arrow batches: it frames each frame's rows
+    once, interns the tags of every run at once and cuts one partial
+    layer message per (tile, salt, layer) run out of the stream by
+    offsets."""
+    props = set(all_props)
+    ext = mvt._tag(5, 0) + mvt._varint(4096)
 
-        def flush():
-            if cur_key is None:
-                return
-            z, x, y, salt, order, layer = cur_key
-            out["zoom"].append(z); out["x"].append(x); out["y"].append(y)
-            out["salt"].append(salt); out["layer_order"].append(order)
-            out["layer"].append(layer); out["part"].append(enc.to_bytes())
+    def encode(pdf):
+        chg = _run_starts(pdf, _ENCODE_KEYS)
+        starts = np.flatnonzero(chg)
+        ly_codes, ly_uniq = pd.factorize(pdf["layer"])
+        layer_props = [[(p, t) for p, t in prop_types.get(layer, {}).items()
+                        if p in props and p in pdf] for layer in ly_uniq]
+        ki, vi, valid, (kblob, kcut), (vblob, vcut) = _intern_tags(
+            pdf, np.cumsum(chg) - 1, len(starts), ly_codes, layer_props)
+        stream, off = _frame_rows(pdf["geom"].values, ki, vi, valid)
+        heads = [mvt._tag(15, 0) + mvt._varint(2)
+                 + mvt._len_delim(1, layer.encode("utf-8"))
+                 for layer in ly_uniq]
+        cut = off[np.append(starts, len(pdf))].tolist()
+        lay = ly_codes[starts]
+        out = {k: pdf[k].values[starts].tolist() for k in _ENCODE_KEYS[:-1]}
+        out["layer"] = ly_uniq[lay].tolist()
+        out["part"] = [b"".join((heads[l], stream[cut[r]:cut[r + 1]],
+                                 kblob[kcut[r]:kcut[r + 1]],
+                                 vblob[vcut[r]:vcut[r + 1]], ext))
+                       for r, l in enumerate(lay.tolist())]
+        return out
 
-        for pdf in iterator:
-            n = len(pdf)
-            if n == 0:
-                continue
-            zs = pdf["zoom"].values.astype(np.int64)
-            txs = pdf["x"].values.astype(np.int64)
-            tys = pdf["y"].values.astype(np.int64)
-            ss = pdf["salt"].values.astype(np.int64)
-            lo = pdf["layer_order"].values.astype(np.int64)
-            ly_codes, ly_uniq = pd.factorize(pdf["layer"])
-            geoms = pdf["geom"].values
-            pvals = {p: pdf[p].values for p in all_props if p in pdf}
-            rag = ringbulk.mvt_rings(read_ragged(geoms))
-            # rows [s, e) share one geometry type iff gchg[s] == gchg[e-1]
-            gchg = _cumsum0(rag.code[1:] != rag.code[:-1])
-            # per-batch value dictionaries for the vectorized paths
-            fact = ({p: pd.factorize(pdf[p], use_na_sentinel=True)
-                     for p in pvals}
-                    if rag.code.any() else {})
-
-            chg = np.empty(n, dtype=bool)
-            chg[0] = True
-            if n > 1:
-                chg[1:] = ((zs[1:] != zs[:-1]) | (txs[1:] != txs[:-1])
-                           | (tys[1:] != tys[:-1]) | (ss[1:] != ss[:-1])
-                           | (lo[1:] != lo[:-1])
-                           | (ly_codes[1:] != ly_codes[:-1]))
-            starts = np.flatnonzero(chg)
-            ends = np.append(starts[1:], n)
-
-            def bulk_shape(s, e):
-                """The one shape dispatch for rows [s, e): (framer,
-                args) for framer(*args, prop_tags) when every row has
-                the same MVT geometry type in rag, else None (per-row
-                walk)."""
-                gtype = int(rag.code[s])
-                if not gtype or gchg[s] != gchg[e - 1]:
-                    return None
-                xs, ys, ring_off, feat_off = rag.rows(s, e)
-                if gtype == 1:   # one vertex per point row
-                    return mvt.bulk_frame_point_features, (xs, ys)
-                return ringbulk.bulk_frame_ragged_features, (
-                    xs, ys, ring_off, feat_off, gtype)
-
-            def handle_segment(s, e):
-                nonlocal cur_key, enc
-                layer = ly_uniq[ly_codes[s]]
-                key = (int(zs[s]), int(txs[s]), int(tys[s]),
-                       int(ss[s]), int(lo[s]), layer)
-                if key != cur_key:
-                    flush()
-                    cur_key = key
-                    enc = mvt.LayerEncoder(layer)
-                ptypes = prop_types.get(layer, {})
-                # vectorized single-shape run: intern values in per-row
-                # visit order, then frame the whole run in one call
-                # (the framer refuses on width overflow -> per-row)
-                shape = bulk_shape(s, e) if e - s >= 8 else None
-                if shape is not None:
-                    framer, args = shape
-                    seg_cols = [(p, t, fact[p][0][s:e], fact[p][1])
-                                for p, t in ptypes.items() if p in fact]
-                    res = framer(*args, _bulk_point_tags(enc, seg_cols))
-                    if res is not None:
-                        enc.add_framed_features(res[0])
-                        return
-                for i in range(s, e):
-                    geom = _int_geom(wkb_to_geom(bytes(geoms[i])))
-                    properties = {p: _mvt_value(pvals[p][i], t)
-                                  for p, t in ptypes.items() if p in pvals}
-                    enc.add_feature(geom, properties)
-
-            # batch-wide fast path: every COMPLETE group in this batch
-            # (all but the first and last, which may continue across
-            # batch/encoder boundaries) encoded in one vectorized pass
-            # when they are single-shape rows of one <=1-property layer —
-            # the per-group constant, not per-feature work, dominates at
-            # high zooms (650k groups of ~16 features in the bench)
-            parts = None
-            if len(starts) >= 3:
-                m0, m1 = int(ends[0]), int(starts[-1])
-                layer = ly_uniq[ly_codes[m0]]
-                ptl = [(p, t)
-                       for p, t in prop_types.get(layer, {}).items()
-                       if p in fact]
-                shape = (bulk_shape(m0, m1)
-                         if (len(ptl) <= 1 and bool(
-                             (ly_codes[m0:m1] == ly_codes[m0]).all()))
-                         else None)
-                if shape is not None:
-                    if ptl:
-                        p, t = ptl[0]
-                        codes, uniq = fact[p][0][m0:m1], fact[p][1]
-                    else:
-                        p = t = codes = uniq = None
-                    parts = _bulk_encode_groups(
-                        layer, p, t, *shape, codes, uniq,
-                        (starts[1:-1] - m0).astype(np.int64))
-            if parts is not None:
-                handle_segment(int(starts[0]), m0)
-                flush()
-                cur_key = None
-                enc = None
-                mids = starts[1:-1]
-                out["zoom"].extend(zs[mids].tolist())
-                out["x"].extend(txs[mids].tolist())
-                out["y"].extend(tys[mids].tolist())
-                out["salt"].extend(ss[mids].tolist())
-                out["layer_order"].extend(lo[mids].tolist())
-                out["layer"].extend([layer] * len(mids))
-                out["part"].extend(parts)
-                # bulk extend can add ~1 row/group at high zooms:
-                # drain here so peak buffering stays near the
-                # 2000-row bound rather than maxRecordsPerBatch
-                if len(out["zoom"]) >= 2000:
-                    yield pd.DataFrame(out)
-                    for v in out.values():
-                        v.clear()
-                handle_segment(m1, n)
-            else:
-                for s, e in zip(starts.tolist(), ends.tolist()):
-                    handle_segment(s, e)
-                    if len(out["zoom"]) >= 2000:
-                        yield pd.DataFrame(out)
-                        for v in out.values():
-                            v.clear()
-            if len(out["zoom"]) >= 2000:
-                yield pd.DataFrame(out)
-                for v in out.values():
-                    v.clear()
-        flush()
-        if out["zoom"]:
-            yield pd.DataFrame(out)
-
-    return run
+    return lambda iterator: _walk_runs(iterator, _ENCODE_KEYS, encode)
 
 
 def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
@@ -713,10 +666,12 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
     pieces: unioned per-layer outputs of geometry_stage with layer_id /
     layer_order columns. prop_types: layer_id -> {col -> Spark type}.
 
-    Complete single-shape runs are framed in bulk — simple points by
-    mvt.bulk_frame_point_features, any polygon- or linestring-family
-    run by ringbulk.bulk_frame_ragged_features — and everything else
-    by the per-row LayerEncoder walk (_make_encode_run).
+    The walk (_make_encode_run) frames each Arrow batch's complete runs
+    at once, for every layer, property set and shape: points with
+    mvt.bulk_frame_point_features, polygon- and linestring-family rows
+    with ringbulk.bulk_frame_ragged_features, and only the rows the
+    framers cannot take (MultiPoint or unread WKB, width bounds) one at
+    a time with mvt.encode_feature, logging each such frame.
 
     shuffle_parts: explicit partition count for the exchange, used as
     given. The encode walk is Python-bound and each task pays a fixed
@@ -748,92 +703,30 @@ _TILE_SCHEMA = "zoom int, x long, y long, tile binary, tile_md5 string"
 def _make_assemble_run(compress: bool = True):
     """The sorted-partials tile-assembly walk (merge + gzip + md5) as a
     reusable mapInPandas function — shared by the shuffled assemble and
-    the fused path, where the encode output is already tile-contiguous."""
+    the fused path, where the encode output is already tile-contiguous.
+    Like the encode walk it only handles complete runs (_walk_runs):
+    each frame of whole tiles merges every (layer_order, layer) run's
+    partials and zips each tile's layers, with no tile state carried
+    across Arrow batches."""
 
-    def run(iterator):
-        cur_tile = None
-        cur_layer = None
-        layer_parts = []   # partials of current layer
-        layer_bytes = []   # finished layer messages of current tile
-        out = {k: [] for k in ("zoom", "x", "y", "tile", "tile_md5")}
+    def assemble(pdf):
+        tchg = _run_starts(pdf, _TILE_KEYS)
+        lstarts = np.flatnonzero(tchg | _run_starts(pdf, ("layer_order",
+                                                          "layer")))
+        parts = pdf["part"].tolist()
+        cut = np.append(lstarts, len(pdf)).tolist()
+        layers = [mvt.merge_partial_layers(parts[s:e])
+                  for s, e in zip(cut, cut[1:])]
+        tcut = np.append(np.flatnonzero(tchg[lstarts]),
+                         len(layers)).tolist()
+        tiles = [mvt.encode_tile(layers[a:b], compress=compress)
+                 for a, b in zip(tcut, tcut[1:])]
+        out = {k: pdf[k].values[tchg].tolist() for k in _TILE_KEYS}
+        out["tile"] = tiles
+        out["tile_md5"] = [hashlib.md5(t).hexdigest() for t in tiles]
+        return out
 
-        def flush_layer():
-            nonlocal layer_parts
-            if layer_parts:
-                layer_bytes.append(mvt.merge_partial_layers(layer_parts))
-                layer_parts = []
-
-        def flush_tile():
-            nonlocal layer_bytes
-            flush_layer()
-            if cur_tile is None:
-                return
-            tile = mvt.encode_tile(layer_bytes, compress=compress)
-            out["zoom"].append(cur_tile[0])
-            out["x"].append(cur_tile[1])
-            out["y"].append(cur_tile[2])
-            out["tile"].append(tile)
-            out["tile_md5"].append(hashlib.md5(tile).hexdigest())
-            layer_bytes = []
-
-        for pdf in iterator:
-            n = len(pdf)
-            if n == 0:
-                continue
-            zs = pdf["zoom"].values
-            xs = pdf["x"].values
-            ys = pdf["y"].values
-            lo = pdf["layer_order"].values
-            ly = pdf["layer"].values
-            parts = pdf["part"].values
-            # single-partial fast path: a sorted run of exactly one row
-            # per tile (the high-zoom norm) needs no merge and no
-            # per-row state walk — merge_partial_layers of one partial
-            # is the identity, so the tile is gzip(frame(part)) direct.
-            # Runs touching the batch edges may continue the previous/
-            # next Arrow batch's tile and take the stateful walk.
-            chg = np.ones(n, dtype=bool)
-            if n > 1:
-                chg[1:] = ((zs[1:] != zs[:-1]) | (xs[1:] != xs[:-1])
-                           | (ys[1:] != ys[:-1]))
-            starts = np.flatnonzero(chg)
-            ends = np.append(starts[1:], n)
-            nruns = len(starts)
-            for k in range(nruns):
-                s, e = int(starts[k]), int(ends[k])
-                if 0 < k < nruns - 1 and e - s == 1:
-                    flush_tile()
-                    cur_tile = None
-                    cur_layer = None
-                    tile = mvt.encode_tile([bytes(parts[s])],
-                                           compress=compress)
-                    out["zoom"].append(int(zs[s]))
-                    out["x"].append(int(xs[s]))
-                    out["y"].append(int(ys[s]))
-                    out["tile"].append(tile)
-                    out["tile_md5"].append(
-                        hashlib.md5(tile).hexdigest())
-                else:
-                    for i in range(s, e):
-                        tile_key = (int(zs[i]), int(xs[i]), int(ys[i]))
-                        layer_key = (int(lo[i]), ly[i])
-                        if tile_key != cur_tile:
-                            flush_tile()
-                            cur_tile = tile_key
-                            cur_layer = None
-                        if layer_key != cur_layer:
-                            flush_layer()
-                            cur_layer = layer_key
-                        layer_parts.append(bytes(parts[i]))
-                if len(out["zoom"]) >= 2000:
-                    yield pd.DataFrame(out)
-                    for v in out.values():
-                        v.clear()
-        flush_tile()
-        if out["zoom"]:
-            yield pd.DataFrame(out)
-
-    return run
+    return lambda iterator: _walk_runs(iterator, _TILE_KEYS, assemble)
 
 
 def assemble_tiles(partials: DataFrame, compress: bool = True,

@@ -135,27 +135,29 @@ def _tag_field(prop_tags, n):
     """The tags field (field 2) of n bulk-framed features, shared by both
     bulk framers (this module's point framer and ringbulk's ragged one).
 
-    prop_tags: list of (ki, vi_array int64, valid_mask bool) in the key
-    order the per-row path visits; indices must already be interned.
+    prop_tags: one (ki, vi, valid) triple of (n,) arrays per property
+    slot, in the order the per-row path visits a row's properties: key
+    and value indices (already interned) and the mask of rows that have
+    a value in the slot.
 
     Returns (T, U, tag_len): an (n, 2 + 4P) uint8 byte matrix with its
     used-byte mask — [0x12][payload length][key, value x3] per property,
     all unused on rows without a valid value — and each row's byte
-    length of the field (0 on untagged rows). None when a width bound is exceeded (> 31 properties, key
-    index >= 128, value index >= 2^21): the caller falls back to
-    per-row."""
+    length of the field (0 on untagged rows). None when a width bound
+    is exceeded (> 31 properties, key index >= 128, value index
+    >= 2^21): the caller falls back to per-row."""
     import numpy as np
 
     P = len(prop_tags)
     if P > 31:
         return None  # tags-payload 1-byte varint bound (4P < 128)
-    vparts = []
+    kparts, vparts = [], []
     for ki, vi, valid in prop_tags:
-        if ki >= 128:
-            return None
+        ki = np.where(valid, ki, 0)
         vi = np.where(valid, vi, 0).astype(np.uint64)
-        if n and int(vi.max()) >= (1 << 21):
+        if n and (int(ki.max()) >= 128 or int(vi.max()) >= (1 << 21)):
             return None
+        kparts.append(ki.astype(np.uint8))
         vparts.append(_varint3_parts(vi))
     pair_len = np.zeros(n, dtype=np.int64)
     for (_, _, valid), (_, _, _, vnb) in zip(prop_tags, vparts):
@@ -169,7 +171,8 @@ def _tag_field(prop_tags, n):
     T[:, 1] = pair_len.astype(np.uint8)
     U[:, 1] = has_tags
     c = 2
-    for (ki, _, valid), (vb0, vb1, vb2, vnb) in zip(prop_tags, vparts):
+    for ki, (_, _, valid), (vb0, vb1, vb2, vnb) in zip(kparts, prop_tags,
+                                                      vparts):
         T[:, c] = ki                    # key index varint (< 128: 1 byte)
         U[:, c] = valid
         T[:, c + 1] = vb0
@@ -276,11 +279,10 @@ class LayerEncoder:
     """Incremental layer builder with interned keys/values
     (first-appearance order, deterministic given feature order).
 
-    Features are stored pre-framed (field-2 length-delimited), so the
-    two bulk framers (bulk_frame_point_features here and
-    ringbulk.bulk_frame_ragged_features for polygons and lines) can
-    append a whole framed stream in one call (add_framed_features) with
-    bytes identical to per-row add_feature."""
+    The per-row reference for the engine's encode walk
+    (engine._make_encode_run), which frames whole Arrow batches with the
+    bulk framers and must produce the bytes this class does for every
+    run (tests/test_mvt_bulk.py, tests/test_mvt_ragged.py)."""
 
     def __init__(self, name: str, extent: int = 4096):
         self.name = name
@@ -289,7 +291,7 @@ class LayerEncoder:
         self._key_idx = {}
         self.values = []
         self._val_idx = {}
-        self.features = []  # framed field-2 messages (possibly batched)
+        self.features = []  # framed field-2 messages
 
     def intern_key(self, k) -> int:
         ki = self._key_idx.get(k)
@@ -315,12 +317,6 @@ class LayerEncoder:
                 continue  # NULL properties omitted (lib.rs:656,680)
             tags.extend((self.intern_key(k), self.intern_value(v)))
         self.features.append(_len_delim(2, encode_feature(geom, tags)))
-
-    def add_framed_features(self, framed: bytes):
-        """Append an already-framed stream of field-2 feature messages
-        (a bulk framer's output). Tag indices inside must have been interned
-        through intern_key/intern_value of THIS encoder."""
-        self.features.append(framed)
 
     def to_bytes(self) -> bytes:
         body = _tag(15, 0) + _varint(2)  # version

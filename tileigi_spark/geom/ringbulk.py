@@ -1,13 +1,14 @@
 """Ragged bulk MVT framing for polygon- and linestring-family features.
 
-The encode walk (engine._make_encode_run) frames complete runs of
-pieces through one of two bulk framers: single points go to
+The encode walk (engine._make_encode_run) frames each Arrow batch's
+complete runs at once: its single points go to
 mvt.bulk_frame_point_features, and EVERY polygon-family (Polygon,
-MultiPolygon) or linestring-family (LineString, MultiLineString) run
-comes here — clipped boxes and 2-4 point road pieces as well as
-irregular rings, rings with holes, MultiPolygons and long polylines.
-Anything else (mixed shapes, width overflow) takes the per-row
-LayerEncoder walk (~50-100µs of interpreter work per feature).
+MultiPolygon) or linestring-family (LineString, MultiLineString) row
+comes here, one call per family — clipped boxes and 2-4 point road
+pieces as well as irregular rings, rings with holes, MultiPolygons and
+long polylines, of any layer and property set. Only rows the framers
+cannot take (MultiPoint or unread WKB, rows past a width bound) are
+encoded one at a time with mvt.encode_feature.
 
 Features are held in a RAGGED formulation: all features' emit-order
 vertices live in one flat (xs, ys) pair plus two offset arrays
@@ -18,9 +19,10 @@ vertices live in one flat (xs, ys) pair plus two offset arrays
 so every per-vertex quantity (zigzag delta, varint width) and every
 per-ring quantity (LineTo count) vectorizes across the batch, and the
 final byte stream is assembled with one ragged scatter instead of a
-Python loop. The walk reads each Arrow batch once with wkb.read_ragged
+Python loop. The walk reads each frame once with wkb.read_ragged
 (the WKB reader the geometry lane and with_bbox share); mvt_rings
-applies the MVT ring rules to the whole batch, so a run is a slice.
+applies the MVT ring rules to the whole frame, so a family's rows are
+one gather (Ragged.take).
 Byte output is pinned identical to the per-row path
 (mvt._geometry_commands semantics: per-ring closing-vertex drop,
 degenerate rings skipped, the delta cursor carrying across rings and
@@ -43,16 +45,16 @@ _GTYPE = np.array([0, 1, 2, 3, 0, 2, 3], dtype=np.uint8)
 
 def mvt_rings(rag):
     """A wkb.read_ragged batch shaped for the bulk framers once for all
-    its rows, so any run of rows is then a slice (Ragged.rows): code
+    its rows, so any set of rows is then one gather (Ragged.take): code
     becomes the MVT geometry type (1 point, 2 linestring family, 3
-    polygon family, 0 = per-row path), the vertices are cast to int64
+    polygon family, 0 = encoded on its own), the vertices are cast to int64
     and mvt._geometry_commands' ring rules are applied.
 
     Polygon-family rows: drop a ring's closing vertex when first ==
     last, then skip rings left with < 3 vertices (compared after the int
     cast, as the per-row path compares). Line-family rows are kept
     verbatim, but a row holding a line of < 2 points gets code 0 (its
-    rings stay; no run containing it is framed): the LineTo command
+    rings stay; the row is encoded on its own): the LineTo command
     byte rides on the second vertex slot in the ragged writer. Points
     keep their one vertex."""
     xs = rag.xs.astype(np.int64)

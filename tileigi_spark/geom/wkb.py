@@ -154,13 +154,14 @@ class Ragged(NamedTuple):
     ring_int: np.ndarray
     row_off: np.ndarray
 
-    def rows(self, s, e):
-        """Rows [s, e) as (xs, ys, ring_off, row_off), offsets rebased
-        to the slice (views of xs/ys, no copy)."""
-        r0, r1 = self.row_off[s], self.row_off[e]
-        v0, v1 = self.ring_off[r0], self.ring_off[r1]
-        return (self.xs[v0:v1], self.ys[v0:v1],
-                self.ring_off[r0:r1 + 1] - v0, self.row_off[s:e + 1] - r0)
+    def take(self, rows):
+        """The given rows (ascending row numbers) as (xs, ys, ring_off,
+        row_off), offsets rebased to the selection."""
+        nr = np.diff(self.row_off)[rows]
+        rings = _ranges(self.row_off[rows], nr)
+        k = np.diff(self.ring_off)[rings]
+        v = _ranges(self.ring_off[rings], k)
+        return self.xs[v], self.ys[v], _cumsum0(k), _cumsum0(nr)
 
 
 def _walk(buf, p, end, typ):

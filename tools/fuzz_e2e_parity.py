@@ -12,6 +12,10 @@ IDENTICAL across
   * two input partitionings (1 vs 13 parts, same session) — proves the
     salted assembly / partial-merge order-independence on arbitrary
     shapes, not just the golden fixtures;
+  * the 13-part build rerun with spark.sql.execution.arrow.
+    maxRecordsPerBatch = 7, so Arrow batch cuts fall inside the encode
+    walk's (tile, salt, layer) runs and the assemble walk's tiles —
+    proves the walks' bytes do not depend on where batches end;
   * the router's vector lanes vs SPARK_GRAFT_FORCE_SCALAR_GEOM=1, which
     sends every row (points and rects included) to the scalar chain
     (child process — the flag is read in the Python workers, whose env
@@ -34,6 +38,7 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
@@ -145,6 +150,11 @@ def main():
         cfg = _cfg_for_seed(seed)
         a = tile_map(spark, rows, 1, args.maxzoom, **cfg)
         b = tile_map(spark, rows, 13, args.maxzoom, **cfg)
+        spark.conf.set(BATCH_CONF, "7")
+        try:
+            d = tile_map(spark, rows, 13, args.maxzoom, **cfg)
+        finally:
+            spark.conf.unset(BATCH_CONF)
         env = dict(os.environ, SPARK_GRAFT_FORCE_SCALAR_GEOM="1",
                    PYTHONPATH=REPO)
         out = subprocess.run(
@@ -157,19 +167,21 @@ def main():
             if line.startswith("TILEMAP "):
                 c = {tuple(int(v) for v in k.split("/")): h
                      for k, h in json.loads(line[8:]).items()}
-        ok = a == b == c
+        ok = a == b == c == d
         if not ok:
             fails += 1
-            diffs = {k for k in set(a) | set(b) | set(c or {})
-                     if not (a.get(k) == b.get(k) == (c or {}).get(k))}
-            print(f"FAIL seed={seed} tiles={len(a)}/{len(b)}/"
+            diffs = {k for k in set(a) | set(b) | set(d) | set(c or {})
+                     if not (a.get(k) == b.get(k) == d.get(k)
+                             == (c or {}).get(k))}
+            print(f"FAIL seed={seed} tiles={len(a)}/{len(b)}/{len(d)}/"
                   f"{len(c) if c else 'child-err'} first_diffs="
                   f"{sorted(diffs)[:5]}")
             if c is None:
                 print(out.stderr[-800:])
         else:
             print(f"PASS seed={seed} tiles={len(a)} cfg={cfg} "
-                  f"(1-part == 13-part == forced-scalar child)")
+                  f"(1-part == 13-part == 7-row batches == forced-scalar "
+                  f"child)")
     print(f"e2e parity: {args.seeds - fails}/{args.seeds} seeds clean")
     spark.stop()
     sys.exit(1 if fails else 0)
