@@ -229,3 +229,54 @@ def test_pip_all_rects_refine_in_the_jvm(spark):
 def test_pip_non_axis_quad_takes_the_exact_refine(spark):
     plan = _pip_check(spark, quad=True)
     assert "EvalPython" in plan
+
+
+def test_knn_staging_cleanup_failure_logs_a_named_fallback(spark, tmp_path,
+                                                           caplog):
+    """_fs_delete is best effort: a round directory the FileSystem API
+    cannot delete (here: a scheme with no FileSystem) is logged and left,
+    not raised; a deletable one is removed."""
+    import logging
+
+    from tileigi_spark.spatial import _fs_delete
+
+    gone = tmp_path / "rem_1"
+    gone.mkdir()
+    (gone / "part-0.parquet").write_bytes(b"x")
+    with caplog.at_level(logging.WARNING, logger="tileigi_spark.spatial"):
+        _fs_delete(spark, str(gone))
+        assert not caplog.records
+        _fs_delete(spark, "no-such-scheme://host/knn/rem_1")
+    assert not gone.exists()
+    rec, = caplog.records
+    assert rec.getMessage().startswith(
+        "knn staging cleanup failed: no-such-scheme://host/knn/rem_1")
+
+
+def test_row_count_without_plan_stats_logs_and_counts(spark, caplog):
+    """_approx_row_count falls back to a counting job, with a named log
+    line, when the plan statistics cannot be read over py4j."""
+    import logging
+
+    from py4j.protocol import Py4JError
+
+    from tileigi_spark.spatial import _approx_row_count
+
+    df = spark.range(37)
+
+    class NoPlanStats:
+        """df with a JVM handle whose queryExecution() fails."""
+
+        class _jdf:
+            @staticmethod
+            def queryExecution():
+                raise Py4JError("no plan statistics")
+
+        count = staticmethod(df.count)
+
+    with caplog.at_level(logging.WARNING, logger="tileigi_spark.spatial"):
+        assert _approx_row_count(df) == 37
+        assert not caplog.records
+        assert _approx_row_count(NoPlanStats()) == 37
+    rec, = caplog.records
+    assert rec.getMessage().startswith("row-count stats unavailable: counting")

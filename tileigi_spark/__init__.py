@@ -16,3 +16,10 @@ Re-implements the capabilities of amandasaurus/tileigi (reference at
 """
 
 __version__ = "0.1.0"
+
+from . import zipguard as _zipguard
+
+# Every Spark Python worker that runs an engine function imports this
+# package, so from then on its tasks skip re-reading pyspark.zip's
+# directory (see zipguard).
+_zipguard.install()

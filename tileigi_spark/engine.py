@@ -323,9 +323,9 @@ def _is_ring5_geom_wkb(w) -> bool:
 
 
 # Python-bound stages (the narrow geometry pass and the encode/assemble
-# exchanges) run ~2 tasks per core: each mapInPandas task carries tens
-# of ms of fixed Arrow/worker cost, and 2/core keeps the straggler tail
-# at half a wave (see _python_stage_parts for the measurements).
+# exchanges) run ~2 tasks per core: each mapInPandas task carries ~55 ms
+# of fixed worker/Arrow cost, and 2/core keeps the straggler tail at
+# half a wave (see _python_stage_parts for the measurements).
 _TASKS_PER_CORE = 2
 
 
@@ -360,10 +360,10 @@ def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
     covered = covered.drop("xmin", "ymin", "xmax", "ymax")
     # Cap this narrow stage's task count: a multi-layer / multi-zoom
     # union of scan branches over small-file sources otherwise plans
-    # hundreds of micro-tasks, and each mapInPandas task carries tens of
-    # ms of fixed Arrow/worker cost plus the numpy lanes' per-call
-    # setup (measured: the 3-layer bench leg ran this stage as 256
-    # tasks, 118 core-s, most of it fixed cost). coalesce is narrow —
+    # hundreds of micro-tasks, and each mapInPandas task carries ~55 ms
+    # of fixed worker/Arrow cost plus the numpy lanes' per-call setup
+    # (measured: the 3-layer bench leg ran this stage as 256 tasks,
+    # 118 core-s, most of it fixed cost). coalesce is narrow —
     # no shuffle — and a no-op when the scan already has fewer splits;
     # larger inputs get proportionally larger (not more) tasks, which
     # is the right direction for a Python-bound stage.
@@ -761,11 +761,12 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
     rows leave the encode mapInPandas already tile-contiguous in the
     canonical order the assembly walk needs. The second exchange + sort
     of the two-shuffle path exists only to regroup SALTED partials; here
-    it is the identity, so the assembly walk runs narrow, in-stage, right
-    after the encode (guide §2.4: remove shuffles outright). Bytes are
-    identical to the salted path's: one partial per layer merges as the
-    identity, and the per-tile feature order (layer_order, feature_id)
-    is unchanged."""
+    it is the identity, so the assembly walk runs on the encode walk's
+    output frames in the same Python pass (one mapInPandas, one worker
+    per task, no partials round trip through the JVM; guide §2.4:
+    remove shuffles outright). Bytes are identical to the salted path's:
+    one partial per layer merges as the identity, and the per-tile
+    feature order (layer_order, feature_id) is unchanged."""
     salted = pieces.withColumn("salt", F.lit(0))
     if shuffle_parts is None:
         ordered = salted.repartition("zoom", "x", "y")
@@ -774,10 +775,10 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
     ordered = ordered.sortWithinPartitions("zoom", "x", "y",
                                            "layer_order", "feature_id")
     all_props = sorted({p for d in prop_types.values() for p in d})
-    partials = ordered.mapInPandas(_make_encode_run(prop_types, all_props),
-                                   schema=_PARTIAL_SCHEMA)
-    return partials.mapInPandas(_make_assemble_run(compress),
-                                schema=_TILE_SCHEMA)
+    encode = _make_encode_run(prop_types, all_props)
+    assemble = _make_assemble_run(compress)
+    return ordered.mapInPandas(lambda it: assemble(encode(it)),
+                               schema=_TILE_SCHEMA)
 
 
 def empty_tile_bytes(layers: Layers, zoom: int, compress: bool = True) -> bytes:
@@ -827,15 +828,16 @@ def tile_driver(spark: SparkSession, zoom: int,
 def _python_stage_parts(spark: SparkSession,
                         shuffle_parts: Optional[int]) -> Optional[int]:
     """Clamp a caller's exchange-width hint for the Python-bound encode/
-    assemble stages. Measured at 32 cores on the z0-10 bench leg: each
-    mapInPandas task carries ~25-40 ms of fixed cost (Arrow stream setup,
-    worker round-trip), so 256 partitions of micro-tasks lose ~1-2 s/leg
-    to pure task overhead vs 64 (5.3 s vs 6.4 s warm; 12.7 s at 512) —
-    the round-5 "more waves" tuning predates the vectorized group encode
-    and now overshoots. ~2 tasks/core keeps the tail at half a wave while
-    per-task kernel time stays well above the fixed cost at larger scale
-    factors (tiles/task grows with data; the constant does not).
-    None stays None (spark.sql.shuffle.partitions + AQE coalescing
+    assemble stages. Each mapInPandas task carries a fixed cost: ~55 ms
+    (perfbench spark.task_fixed_ms, 4 cores, Python 3.11), most of it
+    the worker waiting on the JVM. It was 200-290 ms until the package
+    stopped the workers re-reading pyspark.zip's directory on every
+    task (zipguard). At 32 cores on the z0-10 bench leg, 256 partitions
+    of micro-tasks lost ~1-2 s/leg to task overhead vs 64 (5.3 s vs
+    6.4 s warm; 12.7 s at 512). ~2 tasks/core keeps the tail at half a
+    wave while per-task kernel time stays well above the fixed cost at
+    larger scale factors (tiles/task grows with data; the constant does
+    not). None stays None (spark.sql.shuffle.partitions + AQE coalescing
     decide)."""
     if shuffle_parts is None:
         return None

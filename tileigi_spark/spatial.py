@@ -11,6 +11,7 @@ import math
 
 import pandas as pd
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import BooleanType
 
@@ -272,8 +273,10 @@ def _fs_delete(spark, path: str):
         hpath = jvm.org.apache.hadoop.fs.Path(path)
         fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
         fs.delete(hpath, True)
-    except Exception:
-        pass  # best-effort staging cleanup
+    except Py4JError as e:
+        # best effort: a leftover round directory costs space, not rows
+        _log.warning("knn staging cleanup failed: %s left behind (%s)",
+                     path, getattr(e, "java_exception", e))
 
 
 def knn_work_dir(spark, work_dir: str | None) -> str:
@@ -308,8 +311,9 @@ def _approx_row_count(df: DataFrame) -> int:
         rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
         if rc.isDefined():
             return int(str(rc.get()))
-    except Exception:
-        pass
+    except Py4JError as e:
+        _log.warning("row-count stats unavailable: counting (%s)",
+                     getattr(e, "java_exception", e))
     return df.count()
 
 
