@@ -1052,3 +1052,129 @@ def test_minhash_seed_diversity(spark):
             f"SELECT xxhash64({s}, '{g}') AS h").collect()[0]["h"]
             for g in grams]
         assert sig[s] == min(vals)
+
+
+# ------------------------------------------------- named fallbacks (item 3)
+
+def test_config_falls_back_to_toml_only_for_non_yaml(tmp_path, caplog):
+    """layers_from_file reads TOML only when the file is not tm2source
+    YAML (a parse error or a non-mapping document), with a named log
+    line; a YAML config with a broken layer entry raises instead of
+    being re-read as TOML."""
+    import logging
+
+    from tileigi_spark.config import layers_from_file
+
+    toml = tmp_path / "c.toml"
+    toml.write_text('[[providers]]\nname = "pg"\n  [[providers.layers]]\n'
+                    '  name = "roads"\n  tablename = "roads_src"\n'
+                    '[[maps]]\nname = "m"\n  [[maps.layers]]\n'
+                    '  provider_layer = "pg.roads"\n')
+    with caplog.at_level(logging.INFO, logger="tileigi_spark.config"):
+        layers = layers_from_file(str(toml))
+    assert layers.layers[0].source == "roads_src"
+    rec, = caplog.records
+    assert rec.getMessage().startswith(f"config fallback: {toml} is not "
+                                       "tm2source YAML")
+
+    # one TOML key line parses as a YAML scalar: not a mapping
+    scalar = tmp_path / "s.toml"
+    scalar.write_text('name = "m"\n')
+    assert layers_from_file(str(scalar)).layers == []
+
+    broken = tmp_path / "broken.yml"
+    broken.write_text("Layer:\n  - properties: {minzoom: 0}\n")
+    with pytest.raises(KeyError, match="id"):
+        layers_from_file(str(broken))
+
+
+def test_extract_arrow_failure_falls_back_per_row(monkeypatch, caplog):
+    """An Arrow error in the vectorized extractor sends the batch to the
+    per-row scan with a named log line; the rows come out the same."""
+    import logging
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from tileigi_spark.extract import extract_batch
+
+    texts = pd.Series(["at 48.8566, 2.3522 x", "no coords",
+                       "(10.5,20.25)", "12.5S, 130.9E"])
+    fast = extract_batch(texts)
+
+    def broken(*a, **k):
+        raise pa.ArrowInvalid("regex engine unavailable")
+
+    monkeypatch.setattr(pc, "extract_regex", broken)
+    with caplog.at_level(logging.WARNING, logger="tileigi_spark.extract"):
+        slow = extract_batch(texts)
+    pd.testing.assert_frame_equal(slow, fast)
+    rec, = caplog.records
+    assert rec.getMessage().startswith("extract fallback: Arrow regex path "
+                                       "failed, scanning 4 rows")
+
+
+def test_spread_small_without_plan_stats_logs_and_spreads(spark, caplog):
+    """spread_small widens to defaultParallelism, with a named log line,
+    when the plan size cannot be read over py4j."""
+    import logging
+
+    from py4j.protocol import Py4JError
+
+    from tileigi_spark.dedup import spread_small
+
+    width = spark.sparkContext.defaultParallelism
+    if width < 2:
+        pytest.skip("needs a session with 2 or more cores")
+    df = spark.range(50, numPartitions=1)
+
+    class NoPlanStats:
+        """df with a JVM handle whose queryExecution() fails."""
+
+        class _jdf:
+            @staticmethod
+            def queryExecution():
+                raise Py4JError("no plan statistics")
+
+        def __getattr__(self, name):
+            return getattr(df, name)
+
+    with caplog.at_level(logging.WARNING, logger="tileigi_spark.dedup"):
+        out = spread_small(NoPlanStats())
+    assert out.rdd.getNumPartitions() == width
+    assert out.count() == 50
+    rec, = caplog.records
+    assert rec.getMessage().startswith(
+        f"plan size unavailable: spreading to {width} partitions")
+
+
+def test_pixel_feature_decode_failure_logs_digest_fallback(monkeypatch,
+                                                          caplog):
+    """A decode failure PIL reports (OSError, ValueError) gives no pixel
+    feature, with a named log line; any other error propagates."""
+    import logging
+
+    import tileigi_spark.multimodal as mm
+
+    monkeypatch.setattr(mm, "_pil", lambda: object())
+    for err in (OSError("cannot identify image file"),
+                ValueError("tile cannot extend outside image")):
+        def fail(data, err=err):
+            raise err
+
+        monkeypatch.setattr(mm, "decode_pixels", fail)
+        caplog.clear()
+        with caplog.at_level(logging.WARNING,
+                             logger="tileigi_spark.multimodal"):
+            assert mm.pixel_feature(b"\x89PNG broken") is None
+        rec, = caplog.records
+        assert rec.getMessage().startswith(
+            "pixel fallback: 11-byte image did not decode")
+
+    def bug(data):
+        raise RuntimeError("bug")
+
+    monkeypatch.setattr(mm, "decode_pixels", bug)
+    with pytest.raises(RuntimeError):
+        mm.pixel_feature(b"x")

@@ -15,6 +15,7 @@ Contracts pinned here:
 """
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -412,3 +413,82 @@ def test_cell_listing_failure_falls_back_to_root_read(spark, table,
     monkeypatch.setattr(partition, "_fs", fs_with(Broken))
     with pytest.raises(RuntimeError, match="not a listing failure"):
         ids()
+
+
+# ------------------------------------------------- sidecar schema (v2)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_sidecar_schema_is_the_inferred_schema(spark, table):
+    """The schema the sidecar records is exactly what a read infers, so
+    reads that take it return the same columns and types."""
+    from pyspark.sql.types import StructType
+
+    path, _ = table
+    meta = layout_meta(spark, path)
+    assert meta["version"] == 2
+    assert StructType.fromJson(meta["schema"]) == \
+        spark.read.parquet(path).schema
+
+
+def test_sidecar_without_schema_reads_the_same_rows(spark, table, tmp_path):
+    """A version-1 sidecar (no schema) keeps inferring the schema and
+    reads the same rows as the schema-carrying one."""
+    import json
+    import shutil
+
+    from tileigi_spark.partition import META_FILE
+
+    path, _ = table
+    old = str(tmp_path / "v1")
+    shutil.copytree(path, old)
+    (tmp_path / "v1" / f".{META_FILE}.crc").unlink(missing_ok=True)
+    meta = layout_meta(spark, path)
+    with open(os.path.join(old, META_FILE), "w") as f:
+        json.dump({"cell_zoom": meta["cell_zoom"],
+                   "buffer_px": meta["buffer_px"], "version": 1}, f)
+    rect = (-MERC_MAX + 2.0 * SPAN, -MERC_MAX + 2.0 * SPAN,
+            -MERC_MAX + 3.5 * SPAN, -MERC_MAX + 3.5 * SPAN)
+    for kw in ({}, {"bbox_merc": rect}, {"bbox_merc": rect, "minzoom": 1},
+               {"keep_cells": True}):
+        new_df = read_cell_partitioned(spark, path, **kw)
+        old_df = read_cell_partitioned(spark, old, **kw)
+        assert new_df.schema == old_df.schema
+        assert _rows(new_df) == _rows(old_df)
+    assert _rows(read_cell_shard(spark, path, 3, 4)) == \
+        _rows(read_cell_shard(spark, old, 3, 4))
+
+    # an append onto it keeps it without a schema
+    feats = with_bbox(features_df(spark, 8))
+    write_cell_partitioned(feats, old, cell_zoom=CZ, buffer_px=2,
+                           mode="append")
+    assert "schema" not in layout_meta(spark, old)
+    assert read_cell_partitioned(spark, old).count() == \
+        read_cell_partitioned(spark, path).count() + 8
+
+
+def test_append_with_mismatched_schema_rejected(spark, tmp_path):
+    """An append whose columns differ from the recorded schema fails
+    before writing, like a grid mismatch; the table is unchanged."""
+    path = str(tmp_path / "t")
+    feats = with_bbox(features_df(spark, 8))
+    write_cell_partitioned(feats, path, cell_zoom=CZ, buffer_px=2)
+    before = spark.read.parquet(path).count()
+    for other in (feats.withColumn("extra", F.lit(1)),
+                  feats.drop("nullable_note"),
+                  feats.withColumn("admin_level",
+                                   F.col("admin_level").cast("long"))):
+        with pytest.raises(ValueError, match="append with schema"):
+            write_cell_partitioned(other, path, cell_zoom=CZ, buffer_px=2,
+                                   mode="append")
+    assert spark.read.parquet(path).count() == before
+    # nullability is not a difference: parquet reads every column nullable
+    not_null = feats.withColumn("feature_id",
+                                F.coalesce("feature_id", F.lit(0)))
+    assert not not_null.schema["feature_id"].nullable
+    write_cell_partitioned(not_null, path, cell_zoom=CZ, buffer_px=2,
+                           mode="append")
+    assert spark.read.parquet(path).count() == 2 * before

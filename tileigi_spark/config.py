@@ -8,8 +8,11 @@ caller) plus the same zoom/buffer knobs.
 
 from __future__ import annotations
 
+import logging
 import re
 from dataclasses import dataclass, field
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -112,6 +115,8 @@ def layers_from_yaml(path: str) -> Layers:
 
     with open(path) as f:
         doc = yaml.safe_load(f)
+    if not isinstance(doc, dict):
+        raise yaml.YAMLError(f"not a tm2source mapping: {type(doc).__name__}")
 
     global_minzoom = int(doc.get("minzoom", 0))
     global_maxzoom = int(doc.get("maxzoom", 14))
@@ -178,8 +183,14 @@ def layers_from_toml(path: str) -> Layers:
 
 def layers_from_file(path: str) -> Layers:
     """YAML first, then TOML — the reference's fallback order
-    (input/mod.rs:37-39)."""
+    (input/mod.rs:37-39). Only a file that is not tm2source YAML (a
+    parse error, or a document that is not a mapping) falls back; a
+    YAML config with a bad layer entry raises."""
+    import yaml
+
     try:
         return layers_from_yaml(path)
-    except Exception:
+    except yaml.YAMLError as e:
+        _log.info("config fallback: %s is not tm2source YAML, reading it "
+                  "as Tegola TOML (%s)", path, str(e).splitlines()[0])
         return layers_from_toml(path)

@@ -4,12 +4,17 @@ every stage is a hash-partitioned groupBy/join on bounded keys (band
 buckets, hash prefixes), never an all-pairs product.
 """
 
+import logging
+
 import numpy as np
 import pandas as pd
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .textops import word_ngrams
+
+_log = logging.getLogger(__name__)
 
 
 # ----------------------------------------------------------------- exact
@@ -379,8 +384,9 @@ def spread_small(df: DataFrame, target_bytes: int = 4 << 20) -> DataFrame:
         if 0 < size < (1 << 50):
             target = min(sc.defaultParallelism,
                          max(cur, (size + target_bytes - 1) // target_bytes))
-    except Exception:
-        pass
+    except Py4JError as e:
+        _log.warning("plan size unavailable: spreading to %d partitions "
+                     "(%s)", target, getattr(e, "java_exception", e))
     if target > cur:
         return df.repartition(target)
     return df

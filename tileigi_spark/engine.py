@@ -19,6 +19,14 @@ the cover "join" is arithmetic + explode on the feature side, which
 Catalyst keeps in one stage with the scan (predicate pushdown + column
 pruning intact). Sorted-stream mapInPandas (not per-group applyInPandas)
 amortizes per-tile overhead across whole Arrow batches.
+
+The cover arithmetic, the bbox filters and the per-layer columns are
+built as SQL text (one filter or column per step), the way the reference
+hands PostGIS one parameterized query per batch: each Column operator is
+a py4j round trip, and a resume loop rebuilds this plan once per zoom
+batch. Driver-side float constants enter as exact double literals (_d),
+and AND/OR chains are nested left-deep (_chain), so the optimized plan
+is the one the Column operators built.
 """
 
 from __future__ import annotations
@@ -40,6 +48,7 @@ from .mercator import (MERC_MAX, bbox_metatile_range, bbox_tile_range,
                        cover_slack)
 from .geom.wkb import _cumsum0, _ranges, wkb_to_geom, read_ragged
 from .geom import mvt, ringbulk
+from .sqllit import double as _d, string as _s
 
 WORLD = 2.0 * MERC_MAX
 
@@ -144,18 +153,32 @@ def _collect_coords(geom, xs, ys):
                     xs.append(x); ys.append(y)
 
 
+def _chain(op: str, terms: list[str]) -> str:
+    """SQL terms joined left-deep, ((a op b) op c) ..., the tree the
+    Column operators build; the SQL parser would balance a flat
+    `a op b op c` chain into a different (equivalent) plan."""
+    out = terms[0]
+    for t in terms[1:]:
+        out = f"({out} {op} {t})"
+    return out
+
+
 def _zoom_xy_filter(ranges: dict[int, tuple[int, int, int, int]],
-                    xcol: str, ycol: str):
-    """OR-of-per-zoom inclusive integer ranges — bbox restriction as pure
-    integer comparisons (the ranges are precomputed driver-side, so no
-    float math enters the plan)."""
-    cond = None
-    for z, (x0, y0, x1, y1) in sorted(ranges.items()):
-        c = ((F.col("zoom") == z)
-             & F.col(xcol).between(F.lit(x0), F.lit(x1))
-             & F.col(ycol).between(F.lit(y0), F.lit(y1)))
-        cond = c if cond is None else cond | c
-    return cond
+                    xcol: str, ycol: str) -> str:
+    """OR-of-per-zoom inclusive integer ranges, as SQL text — bbox
+    restriction as pure integer comparisons (the ranges are precomputed
+    driver-side, so no float math enters the plan)."""
+    return _chain("OR", [
+        _chain("AND", [f"(zoom = {z})",
+                       f"(({xcol} >= {x0}) AND ({xcol} <= {x1}))",
+                       f"(({ycol} >= {y0}) AND ({ycol} <= {y1}))"])
+        for z, (x0, y0, x1, y1) in sorted(ranges.items())])
+
+
+def _bbox_overlap(x0: float, y0: float, x1: float, y1: float) -> list[str]:
+    """SQL terms: the feature bbox meets the rectangle [x0, x1] x [y0, y1]."""
+    return [f"(xmax >= {_d(x0)})", f"(xmin <= {_d(x1)})",
+            f"(ymax >= {_d(y0)})", f"(ymin <= {_d(y1)})"]
 
 
 def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
@@ -172,7 +195,11 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
     (MetatilesIterator::new_for_bbox_zoom, lib.rs:186-220): a coarse
     feature-bbox prefilter runs before the zoom explode (pushdown-friendly
     — a planet scan with a city bbox prunes at the source), then the exact
-    integer metatile-range filter after."""
+    integer metatile-range filter after.
+
+    The plan is written as SQL text, one filter or column per step, so
+    building it costs a few py4j calls instead of one per operator; the
+    driver-side float constants enter as exact double literals (_d)."""
     if bbox_merc is not None:
         # In-range tiles are rendered with their FULL extent (the
         # reference iterates the bbox's metatiles and each renders its
@@ -188,20 +215,17 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
         mtx0, mty0, mtx1, mty1 = bbox_metatile_range(bbox_merc, minz,
                                                      metatile_scale)
         span = WORLD * min(metatile_scale, 1 << minz) / float(1 << minz)
-        ax0 = -MERC_MAX + mtx0 * span
-        ax1 = -MERC_MAX + (mtx1 + 1) * span
-        ay0 = MERC_MAX - (mty1 + 1) * span
-        ay1 = MERC_MAX - mty0 * span
         # widest clip-buffer slack across zooms (largest at min zoom)
         slack = cover_slack(minz, buffer_px)
-        feats = feats.filter(
-            (F.col("xmax") >= F.lit(ax0 - slack))
-            & (F.col("xmin") <= F.lit(ax1 + slack))
-            & (F.col("ymax") >= F.lit(ay0 - slack))
-            & (F.col("ymin") <= F.lit(ay1 + slack)))
-    df = feats.withColumn("zoom", F.explode(F.array(*[F.lit(z) for z in zooms])))
+        feats = feats.filter(_chain("AND", _bbox_overlap(
+            -MERC_MAX + mtx0 * span - slack,
+            MERC_MAX - (mty1 + 1) * span - slack,
+            -MERC_MAX + (mtx1 + 1) * span + slack,
+            MERC_MAX - mty0 * span + slack)))
+    df = feats.withColumn("zoom", F.expr(
+        f"explode(array({', '.join(str(z) for z in zooms)}))"))
     if zoom_filter:
-        df = df.filter(F.expr(zoom_filter))
+        df = df.filter(zoom_filter)
     if bbox_merc is not None:
         # Per-zoom aligned-extent prune right after the zoom explode:
         # implied by the exact metatile-range filter below (a feature
@@ -209,44 +233,40 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
         # only cover out-of-range metatiles at z), so this is pure early
         # pruning — it cuts the sequence/explode work for deep zooms
         # where the scan-level filter above had to stay world-wide.
-        cond = None
+        conds = []
         for z in zooms:
             zx0, zy0, zx1, zy1 = bbox_metatile_range(bbox_merc, z,
                                                      metatile_scale)
             span_z = WORLD * min(metatile_scale, 1 << z) / float(1 << z)
             pad_z = cover_slack(z, buffer_px)
-            c = ((F.col("zoom") == z)
-                 & (F.col("xmax") >= F.lit(-MERC_MAX + zx0 * span_z
-                                           - pad_z))
-                 & (F.col("xmin") <= F.lit(-MERC_MAX + (zx1 + 1) * span_z
-                                           + pad_z))
-                 & (F.col("ymax") >= F.lit(MERC_MAX - (zy1 + 1) * span_z
-                                           - pad_z))
-                 & (F.col("ymin") <= F.lit(MERC_MAX - zy0 * span_z
-                                           + pad_z)))
-            cond = c if cond is None else cond | c
-        df = df.filter(cond)
-    two_z_l = F.expr("shiftleft(1L, zoom)")
-    two_z = two_z_l.cast("double")
-    size_mt = F.least(F.lit(metatile_scale).cast("long"), two_z_l)
-    n_axis = (two_z_l / size_mt).cast("long")
-    mt_merc = F.lit(WORLD) * size_mt.cast("double") / two_z
-    tile_merc = F.lit(WORLD) / two_z
+            conds.append(_chain("AND", [f"(zoom = {z})"] + _bbox_overlap(
+                -MERC_MAX + zx0 * span_z - pad_z,
+                MERC_MAX - (zy1 + 1) * span_z - pad_z,
+                -MERC_MAX + (zx1 + 1) * span_z + pad_z,
+                MERC_MAX - zy0 * span_z + pad_z)))
+        df = df.filter(_chain("OR", conds))
+    two_z_l = "shiftleft(1L, zoom)"
+    two_z = f"CAST({two_z_l} AS DOUBLE)"
+    size_mt = f"least(CAST({metatile_scale} AS BIGINT), {two_z_l})"
+    n_axis = f"CAST(({two_z_l} / {size_mt}) AS BIGINT)"
+    mt_merc = f"(({_d(WORLD)} * CAST({size_mt} AS DOUBLE)) / {two_z})"
+    tile_merc = f"({_d(WORLD)} / {two_z})"
     # clip-buffer in mercator units + one tile unit of rounding slack
-    buf_m = tile_merc * F.lit((buffer_px * 16 + 1) / 4096.0)
+    buf_m = f"({tile_merc} * {_d((buffer_px * 16 + 1) / 4096.0)})"
+    merc_max = _d(MERC_MAX)
 
-    def clamp(c):
-        return F.greatest(F.lit(0).cast("long"),
-                          F.least(c.cast("long"), n_axis - 1))
+    def cell(offset: str) -> str:
+        return (f"greatest(CAST(0 AS BIGINT), least(CAST(floor(({offset})"
+                f" / {mt_merc}) AS BIGINT), ({n_axis} - 1)))")
 
-    mx0 = clamp(F.floor((F.col("xmin") - buf_m + F.lit(MERC_MAX)) / mt_merc))
-    mx1 = clamp(F.floor((F.col("xmax") + buf_m + F.lit(MERC_MAX)) / mt_merc))
-    my0 = clamp(F.floor((F.lit(MERC_MAX) - (F.col("ymax") + buf_m)) / mt_merc))
-    my1 = clamp(F.floor((F.lit(MERC_MAX) - (F.col("ymin") - buf_m)) / mt_merc))
+    mx0 = cell(f"(xmin - {buf_m}) + {merc_max}")
+    mx1 = cell(f"(xmax + {buf_m}) + {merc_max}")
+    my0 = cell(f"{merc_max} - (ymax + {buf_m})")
+    my1 = cell(f"{merc_max} - (ymin - {buf_m})")
 
     covered = (df
-               .withColumn("mtx", F.explode(F.sequence(mx0, mx1)))
-               .withColumn("mty", F.explode(F.sequence(my0, my1))))
+               .withColumn("mtx", F.expr(f"explode(sequence({mx0}, {mx1}))"))
+               .withColumn("mty", F.expr(f"explode(sequence({my0}, {my1}))")))
     if bbox_merc is not None:
         ranges = {z: bbox_metatile_range(bbox_merc, z, metatile_scale)
                   for z in zooms}
@@ -979,9 +999,9 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                                  how="left_anti")
         prop_types[layer.id] = dict(_prop_columns(
             src, exclude=("way", "feature_id")))
-        per_layer.append(pieces
-                         .withColumn("layer", F.lit(layer.id))
-                         .withColumn("layer_order", F.lit(order)))
+        per_layer.append(pieces.withColumns(
+            {"layer": F.expr(_s(layer.id)),
+             "layer_order": F.expr(str(order))}))
 
     if not per_layer:
         # no layer covers the requested zoom range: empty result with the

@@ -13,10 +13,13 @@ Supported formats (FIXTURES.md §1):
 
 from __future__ import annotations
 
+import logging
 import re
 
 import numpy as np
 import pandas as pd
+
+_log = logging.getLogger(__name__)
 
 _NUM = r"[+-]?\d{1,3}\.\d{1,6}"
 
@@ -75,9 +78,10 @@ def extract_batch(texts: pd.Series) -> pd.DataFrame:
     first match, so rows whose first mention is out of range — where
     extract_one would keep scanning — drop to the per-row path; the
     Python regex stays authoritative."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
         arr = pa.Array.from_pandas(texts, type=pa.string())
         # re2's \s and \d are ASCII-only while the authoritative Python
         # COORD_RE is Unicode-aware (NBSP separators, Unicode digits).
@@ -89,7 +93,9 @@ def extract_batch(texts: pd.Series) -> pd.DataFrame:
         nonascii_np = np.where(pd.isna(nonascii_np), False,
                                nonascii_np).astype(bool)
         ext = pc.extract_regex(arr, pattern=COORD_RE.pattern)
-    except Exception:
+    except pa.ArrowException as e:
+        _log.warning("extract fallback: Arrow regex path failed, scanning "
+                     "%d rows one at a time (%s)", len(texts), e)
         return _extract_batch_perrow(texts)
 
     # branch selection, float parsing, and span pick all run as arrow

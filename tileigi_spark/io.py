@@ -23,11 +23,19 @@ import time
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from . import sqllit
 
 # the TileStore `metrics` table's columns, in order
 _METRICS_SCHEMA = (("run_id", "string"), ("stage", "string"),
                    ("zoom", "int"), ("rows", "long"), ("secs", "double"),
                    ("extra", "string"))
+# SQL literal of a metrics value, by column type
+_METRICS_LITERAL = {"string": lambda v: sqllit.string(str(v)),
+                    "int": lambda v: str(int(v)),
+                    "long": lambda v: str(int(v)),
+                    "double": sqllit.double}
 
 
 class TileStore:
@@ -39,6 +47,8 @@ class TileStore:
     def __init__(self, base_path: str, use_iceberg: bool = False):
         self.base = base_path
         self.use_iceberg = use_iceberg
+        # zoom -> schema of the staging table write_staging wrote
+        self._staged_schema: dict[int, StructType] = {}
 
     def _write(self, df: DataFrame, name: str, mode: str = "append",
                partition_cols=()):
@@ -51,12 +61,16 @@ class TileStore:
                 w = w.partitionBy(*partition_cols)
             w.parquet(os.path.join(self.base, name))
 
-    def _read(self, spark: SparkSession, name: str) -> DataFrame | None:
+    def _read(self, spark: SparkSession, name: str,
+              schema: StructType | None = None) -> DataFrame | None:
+        """The table, or None when it is absent. A parquet table read
+        with a known `schema` runs no schema-inference job."""
         if self.use_iceberg:
             return spark.table(f"{self.base}.{name}")
         path = os.path.join(self.base, name)
+        reader = spark.read if schema is None else spark.read.schema(schema)
         try:
-            return spark.read.parquet(path)
+            return reader.parquet(path)
         except AnalysisException as e:
             # an absent table: no directory yet, or an empty one; a
             # corrupt file must fail the read, not pass for "absent" (a
@@ -105,16 +119,21 @@ class TileStore:
         obs = Observation()
         self._write(tiles.observe(obs, F.count(F.lit(1)).alias("rows")),
                     f"staging_z{zoom}", mode="overwrite")
+        self._staged_schema[zoom] = tiles.schema
         return int(obs.get["rows"])
 
     def read_staging(self, spark: SparkSession, zoom: int) -> DataFrame | None:
-        return self._read(spark, f"staging_z{zoom}")
+        """The staged batch, read with the schema write_staging wrote
+        it with (no schema-inference job)."""
+        return self._read(spark, f"staging_z{zoom}",
+                          self._staged_schema.get(zoom))
 
     def drop_staging(self, zoom: int, spark: SparkSession | None = None):
         """Reclaim the zoom batch's staging data after commit. On the
         iceberg path the table is DROPped (PURGE reclaims data files);
         without this, staging_z{zoom} tables accumulate one batch of
         gigabytes per zoom per run indefinitely."""
+        self._staged_schema.pop(zoom, None)
         if self.use_iceberg:
             spark = spark or SparkSession.getActiveSession()
             if spark is not None:
@@ -141,7 +160,9 @@ class TileStore:
         """Per-stage lineage/metrics rows (A3): run_id, stage, zoom batch,
         row counts, wall seconds, JSON extras. The rows are literals of a
         one-row range, so the append is one JVM task with no Python
-        worker round trip."""
+        worker round trip; they are written as one SQL expression (a
+        py4j call, not one per value), every string an escaped
+        literal."""
         if not rows:
             return
         defaults = {"run_id": "", "stage": "", "zoom": -1, "rows": 0,
@@ -150,10 +171,11 @@ class TileStore:
         for r in rows:
             vals = {**defaults, **r}
             vals["extra"] = json.dumps(vals["extra"])
-            structs.append(F.struct(*[F.lit(vals[c]).cast(t).alias(c)
-                                      for c, t in _METRICS_SCHEMA]))
-        df = spark.range(1, numPartitions=1).select(
-            F.inline(F.array(*structs)))
+            structs.append("named_struct(" + ", ".join(
+                f"'{c}', CAST({_METRICS_LITERAL[t](vals[c])} AS {t})"
+                for c, t in _METRICS_SCHEMA) + ")")
+        df = spark.range(1, numPartitions=1).selectExpr(
+            f"inline(array({', '.join(structs)}))")
         self._write(df, "metrics")
 
 

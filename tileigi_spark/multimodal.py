@@ -11,12 +11,15 @@ mapInPandas signatures, partitioning) is production-form either way.
 from __future__ import annotations
 
 import hashlib
+import logging
 import struct
 import zlib
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+_log = logging.getLogger(__name__)
 
 IMAGE_META_SCHEMA = ("doc_id long, width int, height int, channels int, "
                      "format string, feature binary")
@@ -113,7 +116,11 @@ def pixel_feature(data: bytes) -> bytes | None:
 
     try:
         px = decode_pixels(data).astype(np.float64)
-    except Exception:
+    except (OSError, ValueError) as e:
+        # PIL raises OSError (UnidentifiedImageError) for bytes it cannot
+        # identify or that end early, ValueError for bad parameters
+        _log.warning("pixel fallback: %d-byte image did not decode, "
+                     "using the content digest (%s)", len(data), e)
         return None
     g = px.mean(axis=2)
     h, w = g.shape

@@ -45,6 +45,7 @@ from typing import Optional
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .mercator import MERC_MAX, bbox_tile_range, cover_slack
 
@@ -53,6 +54,7 @@ _log = logging.getLogger(__name__)
 WORLD = 2.0 * MERC_MAX
 META_FILE = "_tileigi_cells.json"
 _HELPER_COLS = ("cell_x", "cell_y", "cell_x0", "cell_y0")
+_PART_COLS = ("cell_x", "cell_y")
 # read_cell_partitioned lists a read rectangle's cell directories
 # itself only up to this many cells; larger rectangles read the root
 # and prune on the partition columns
@@ -126,7 +128,11 @@ def write_cell_partitioned(df: DataFrame, path: str, cell_zoom: int = 6,
     partitions) before the write so each task touches few cell
     directories — without it an N-task write over C cells can emit up
     to N*C files (the small-file explosion a 1000-executor write of a
-    256-cell grid would otherwise produce)."""
+    256-cell grid would otherwise produce).
+
+    The sidecar records the table's schema for the readers. An append
+    must match it, like it must match the grid; an append onto a sidecar
+    without a schema keeps it without one."""
     clash = [c for c in _HELPER_COLS if c in df.columns]
     if clash:
         raise ValueError(f"input already has layout columns {clash}")
@@ -135,6 +141,7 @@ def write_cell_partitioned(df: DataFrame, path: str, cell_zoom: int = 6,
     if missing:
         raise ValueError(
             f"df lacks bbox columns {missing}; run engine.with_bbox first")
+    prev = None
     if mode == "append":
         # appending under a different grid would mix two layouts in one
         # table while the sidecar describes only the new one — the
@@ -189,12 +196,57 @@ def write_cell_partitioned(df: DataFrame, path: str, cell_zoom: int = 6,
                        F.explode(F.sequence(F.col("cell_y0"),
                                             F.col("_cy1"))))
            .drop("_cx1", "_cy1"))
+    meta = {"cell_zoom": cell_zoom, "buffer_px": buffer_px, "version": 1}
+    if prev is None or "schema" in prev:
+        # the schema a read infers from the table: every column
+        # nullable, the partition columns last (as integers)
+        meta["schema"] = _nullable(StructType(
+            [f for f in out.schema.fields if f.name not in _PART_COLS]
+            + [StructField(c, IntegerType()) for c in _PART_COLS])
+            .jsonValue())
+        meta["version"] = 2
+        if prev is not None and prev["schema"] != meta["schema"]:
+            raise ValueError(
+                f"append with schema {_ddl(meta['schema'])} onto a table "
+                f"written with schema {_ddl(prev['schema'])}; rewrite the "
+                f"table or match its columns")
+    # else: appending onto a layout sidecar without a schema (written
+    # before sidecars recorded one) keeps it without one, so reads go on
+    # inferring the schema from the files
     if cluster_files:
         out = out.repartition(cluster_files, "cell_x", "cell_y")
-    out.write.mode(mode).partitionBy("cell_x", "cell_y").parquet(path)
-    _write_meta(df.sparkSession, path,
-                {"cell_zoom": cell_zoom, "buffer_px": buffer_px,
-                 "version": 1})
+    out.write.mode(mode).partitionBy(*_PART_COLS).parquet(path)
+    _write_meta(df.sparkSession, path, meta)
+
+
+def _nullable(obj):
+    """A schema's JSON form with every field, array element and map
+    value nullable — what a parquet write records (Spark's asNullable).
+    Field metadata is left as it is."""
+    if isinstance(obj, list):
+        return [_nullable(v) for v in obj]
+    if not isinstance(obj, dict):
+        return obj
+    out = {k: (v if k == "metadata" else _nullable(v))
+           for k, v in obj.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in out:
+            out[k] = True
+    return out
+
+
+def _ddl(schema_json: dict) -> str:
+    return StructType.fromJson(schema_json).simpleString()
+
+
+def _reader(spark: SparkSession, meta: dict):
+    """A parquet reader for the layout: with the schema its sidecar
+    records, so the read runs no schema-inference job; sidecars written
+    before the schema was recorded infer it from the files."""
+    reader = spark.read
+    if "schema" in meta:
+        reader = reader.schema(StructType.fromJson(meta["schema"]))
+    return reader
 
 
 def _fs(spark: SparkSession, path: str, child: Optional[str] = None):
@@ -287,7 +339,8 @@ def read_cell_partitioned(spark: SparkSession, path: str,
     listing failure) fall back to the root read, where the BETWEEN
     predicates on the partition columns still prune natively; the
     exactly-once survivor filter is one codegen comparison per row
-    either way."""
+    either way. The read takes its schema from the layout sidecar, so it
+    runs no schema-inference job (sidecars without one infer it)."""
     meta = layout_meta(spark, path)
     rx0, ry0, rx1, ry1 = read_rect(bbox_merc, meta["cell_zoom"], minzoom,
                                    meta.get("buffer_px", 2))
@@ -297,16 +350,14 @@ def read_cell_partitioned(spark: SparkSession, path: str,
     if rect_cells < n * n and rect_cells <= _CELL_READ_DIR_CAP:
         dirs = _rect_cell_dirs(spark, path, rx0, ry0, rx1, ry1)
         if dirs:
-            df = (spark.read.option("basePath", path).parquet(*dirs))
+            df = _reader(spark, meta).option("basePath", path).parquet(*dirs)
     if df is None:
-        df = spark.read.parquet(path)
+        df = _reader(spark, meta).parquet(path)
     df = (df
-          .filter(F.col("cell_x").between(rx0, rx1)
-                  & F.col("cell_y").between(ry0, ry1))
-          .filter((F.col("cell_x")
-                   == F.greatest(F.col("cell_x0"), F.lit(rx0)))
-                  & (F.col("cell_y")
-                     == F.greatest(F.col("cell_y0"), F.lit(ry0)))))
+          .filter(f"((cell_x >= {rx0}) AND (cell_x <= {rx1}))"
+                  f" AND ((cell_y >= {ry0}) AND (cell_y <= {ry1}))")
+          .filter(f"(cell_x = greatest(cell_x0, {rx0}))"
+                  f" AND (cell_y = greatest(cell_y0, {ry0}))"))
     return df if keep_cells else df.drop(*_HELPER_COLS)
 
 
@@ -315,7 +366,8 @@ def read_cell_shard(spark: SparkSession, path: str, cell_x: int,
     """One cell's shard, ALL copies (its own features plus the
     slack-duplicated boundary neighbors) — the executor-local input for
     rendering that cell's own tiles at zoom >= cell_zoom."""
-    df = (spark.read.parquet(path)
-          .filter((F.col("cell_x") == cell_x)
-                  & (F.col("cell_y") == cell_y)))
+    meta = (layout_meta(spark, path) if is_cell_partitioned(spark, path)
+            else {})
+    df = (_reader(spark, meta).parquet(path)
+          .filter(f"(cell_x = {int(cell_x)}) AND (cell_y = {int(cell_y)})"))
     return df if keep_cells else df.drop(*_HELPER_COLS)
