@@ -189,3 +189,25 @@ def test_fused_encode_matches_two_shuffle(spark, feats):
     fused = tiles(encode_assemble_fused(pieces, prop_types))
     assert fused and {z for z, _, _, _ in fused} == {5, 6}
     assert fused == tiles(assemble_tiles(encode_layers(pieces, prop_types)))
+
+
+@pytest.mark.parametrize("name", ["zoom", "mtx", "mty", "x", "y", "geom",
+                                  "salt", "layer", "layer_order"])
+def test_reserved_source_column_fails_by_name(spark, name):
+    """A source or SQL-layer column named like one of the plan's keys
+    would be silently replaced (`layer = 'road'` was written as `base`,
+    `zoom = 99` as 0): build_tiles refuses it by name."""
+    from pyspark.sql import functions as F
+
+    feats = features_df(spark, 6)
+    one = Layers(layers=[Layer(id="base", source="features", minzoom=0,
+                               maxzoom=2, buffer=2)], global_maxzoom=14)
+    with pytest.raises(ValueError, match=rf"source columns \['{name}'\]"):
+        build_tiles(spark, {"features": feats.withColumn(name, F.lit(99))},
+                    one, 0, 0)
+    sql = Layers(layers=[Layer(id="base", source="features", minzoom=0,
+                               maxzoom=2, buffer=2,
+                               sql=f"SELECT *, 'road' AS {name} "
+                                   "FROM features")], global_maxzoom=14)
+    with pytest.raises(ValueError, match=rf"source columns \['{name}'\]"):
+        build_tiles(spark, {"features": feats}, sql, 0, 0)

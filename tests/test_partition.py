@@ -361,58 +361,52 @@ def test_append_onto_corrupt_sidecar_raises(spark, tmp_path):
     assert spark.read.parquet(str(path)).count() == before
 
 
-def test_cell_listing_failure_falls_back_to_root_read(spark, table,
-                                                       monkeypatch, caplog):
-    """A failed FS listing of the read rectangle's cell directories logs
-    a named fallback and reads the root with the partition filters:
-    same rows as the listed read. Any other error propagates."""
-    import logging
+def _v1_copy(spark, path, dest):
+    """A copy of the table whose sidecar is version 1 (no schema)."""
+    import json
+    import shutil
 
-    import tileigi_spark.partition as partition
+    from tileigi_spark.partition import META_FILE
+
+    shutil.copytree(path, dest)
+    (dest / f".{META_FILE}.crc").unlink(missing_ok=True)
+    meta = layout_meta(spark, path)
+    with open(dest / META_FILE, "w") as f:
+        json.dump({"cell_zoom": meta["cell_zoom"],
+                   "buffer_px": meta["buffer_px"], "version": 1}, f)
+    return str(dest)
+
+
+def test_empty_cell_glob_reads_an_empty_frame(spark, table, tmp_path):
+    """A read rectangle without a cell directory matches nothing: with
+    the sidecar's schema it reads as an empty frame that scans no file
+    (it used to list and read the whole table); a version-1 sidecar
+    reads the root instead. Any other read error propagates."""
+    from pyspark.errors import AnalysisException
 
     path, _ = table
-    rect = (-MERC_MAX + 2.0 * SPAN, -MERC_MAX + 2.0 * SPAN,
-            -MERC_MAX + 3.5 * SPAN, -MERC_MAX + 3.5 * SPAN)
+    cx, cy = next((x, y) for x in range(N) for y in range(N)
+                  if not os.path.isdir(f"{path}/cell_x={x}/cell_y={y}"))
+    bbox = (-MERC_MAX + (cx + 0.4) * SPAN, MERC_MAX - (cy + 0.6) * SPAN,
+            -MERC_MAX + (cx + 0.6) * SPAN, MERC_MAX - (cy + 0.4) * SPAN)
+    assert read_rect(bbox, CZ) == (cx, cy, cx, cy)
+    schema = read_cell_partitioned(spark, path).schema
 
-    def ids():
-        return sorted(r.feature_id for r in read_cell_partitioned(
-            spark, path, bbox_merc=rect).select("feature_id").collect())
+    got = read_cell_partitioned(spark, path, bbox_merc=bbox)
+    assert got.schema == schema and got.count() == 0
+    assert "FileScan" not in \
+        got._jdf.queryExecution().executedPlan().toString()
 
-    listed = ids()
-    assert listed
-    real_fs = partition._fs
+    old = _v1_copy(spark, path, tmp_path / "v1")
+    got = read_cell_partitioned(spark, old, bbox_merc=bbox)
+    assert got.schema == schema and got.count() == 0
+    assert "FileScan" in got._jdf.queryExecution().executedPlan().toString()
 
-    class ListingFails:
-        """Delegates to the real FS; listStatus lists a missing path, so
-        it raises the FS's own FileNotFoundException."""
-
-        def __init__(self, fs, missing):
-            self._fs, self._missing = fs, missing
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-        def listStatus(self, _path):
-            return self._fs.listStatus(self._missing)
-
-    def fs_with(cls):
-        def _fs(spark, p, child=None):
-            fs, hpath = real_fs(spark, p, child)
-            return cls(fs, real_fs(spark, p, "no-such-cell")[1]), hpath
-        return _fs
-
-    monkeypatch.setattr(partition, "_fs", fs_with(ListingFails))
-    with caplog.at_level(logging.WARNING, logger="tileigi_spark.partition"):
-        assert ids() == listed
-    assert "cell listing failed: falling back to the root read" in caplog.text
-
-    class Broken(ListingFails):
-        def listStatus(self, _path):
-            raise RuntimeError("not a listing failure")
-
-    monkeypatch.setattr(partition, "_fs", fs_with(Broken))
-    with pytest.raises(RuntimeError, match="not a listing failure"):
-        ids()
+    # a matched cell directory without files: inference fails by name
+    os.makedirs(f"{old}/cell_x={cx}/cell_y={cy}")
+    with pytest.raises(AnalysisException) as e:
+        read_cell_partitioned(spark, old, bbox_merc=bbox)
+    assert e.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
 
 
 # ------------------------------------------------- sidecar schema (v2)
@@ -437,19 +431,8 @@ def test_sidecar_schema_is_the_inferred_schema(spark, table):
 def test_sidecar_without_schema_reads_the_same_rows(spark, table, tmp_path):
     """A version-1 sidecar (no schema) keeps inferring the schema and
     reads the same rows as the schema-carrying one."""
-    import json
-    import shutil
-
-    from tileigi_spark.partition import META_FILE
-
     path, _ = table
-    old = str(tmp_path / "v1")
-    shutil.copytree(path, old)
-    (tmp_path / "v1" / f".{META_FILE}.crc").unlink(missing_ok=True)
-    meta = layout_meta(spark, path)
-    with open(os.path.join(old, META_FILE), "w") as f:
-        json.dump({"cell_zoom": meta["cell_zoom"],
-                   "buffer_px": meta["buffer_px"], "version": 1}, f)
+    old = _v1_copy(spark, path, tmp_path / "v1")
     rect = (-MERC_MAX + 2.0 * SPAN, -MERC_MAX + 2.0 * SPAN,
             -MERC_MAX + 3.5 * SPAN, -MERC_MAX + 3.5 * SPAN)
     for kw in ({}, {"bbox_merc": rect}, {"bbox_merc": rect, "minzoom": 1},

@@ -24,6 +24,16 @@ def _point_grid(spark, n):
     return spark.createDataFrame(rows, "pid long, mx double, my double"), rows
 
 
+def _brute_knn(qrows, crows, k, cand_offset=0):
+    expected = set()
+    for qid, qxv, qyv in qrows:
+        scored = sorted(((qxv - mx) ** 2 + (qyv - my) ** 2, pid + cand_offset)
+                        for pid, mx, my in crows)
+        for rank, (_, cid) in enumerate(scored[:k], start=1):
+            expected.add((qid, cid, rank))
+    return expected
+
+
 class TestPip:
     def test_matches_bruteforce(self, spark):
         points, prows = _point_grid(spark, 300)
@@ -71,15 +81,7 @@ class TestKnn:
         got = knn_join(queries, cands, k=k, index_zoom=4)
         got_pairs = {(r["query_id"], r["cand_id"], r["knn_rank"])
                      for r in got.collect()}
-
-        expected = set()
-        for qid, qxv, qyv in qrows:
-            scored = sorted(
-                ((qxv - mx) ** 2 + (qyv - my) ** 2, pid + 1000)
-                for pid, mx, my in crows)
-            for rank, (_, cid) in enumerate(scored[:k], start=1):
-                expected.add((qid, cid, rank))
-        assert got_pairs == expected
+        assert got_pairs == _brute_knn(qrows, crows, k, cand_offset=1000)
 
 
 def test_latlng_cell_grid(spark):
@@ -149,7 +151,10 @@ def test_knn_straggler_needs_full_grid_pass(spark):
 def test_knn_work_dir_staging(spark, tmp_path):
     """Cluster-safe staging: an explicit work_dir receives the round
     parquet (the driver-local tempfile default is only correct in local
-    mode), and results are identical to the default path."""
+    mode), the query staging is gone once knn_join returns, and results
+    are identical to the default path. A later call into the same
+    work_dir (once the first result is consumed) returns its own rows
+    only."""
     import os
 
     queries, qrows = _point_grid(spark, 10)
@@ -161,17 +166,86 @@ def test_knn_work_dir_staging(spark, tmp_path):
                          F.col("mx").alias("cx"), F.col("my").alias("cy"))
     work = str(tmp_path / "knn_stage")
     got = knn_join(queries, cands, k=2, index_zoom=4, work_dir=work)
+    assert os.path.isdir(os.path.join(work, "round_1"))  # staged where told
+    assert not os.path.exists(os.path.join(work, "queries"))
     got_pairs = {(r["query_id"], r["cand_id"], r["knn_rank"])
                  for r in got.collect()}
-    assert os.path.isdir(os.path.join(work, "out"))  # staged where told
+    assert got_pairs == _brute_knn(qrows, crows, 2, cand_offset=1000)
+    again = knn_join(queries, cands, k=2, index_zoom=4, work_dir=work)
+    again = [(r["query_id"], r["cand_id"], r["knn_rank"])
+             for r in again.collect()]
+    assert len(again) == len(got_pairs) and set(again) == got_pairs
 
-    expected = set()
-    for qid, qxv, qyv in qrows:
-        scored = sorted(((qxv - mx) ** 2 + (qyv - my) ** 2, pid + 1000)
-                        for pid, mx, my in crows)
-        for rank, (_, cid) in enumerate(scored[:2], start=1):
-            expected.add((qid, cid, rank))
-    assert got_pairs == expected
+
+@pytest.mark.parametrize("disk_rows", [4_000_000, 0])
+def test_knn_sparse_rounds_reach_the_full_grid(spark, tmp_path, monkeypatch,
+                                               disk_rows):
+    """Candidates clustered in one corner, queries spread over the world
+    at index_zoom 4 (n=16): queries finish in different rounds (radius
+    1, 4 and the full-grid 16), each round's final rows are returned
+    once. disk_rows=0 sends every round through the shuffle join."""
+    import os
+
+    import tileigi_spark.spatial as spatial
+
+    monkeypatch.setattr(spatial, "_BROADCAST_DISK_ROWS", disk_rows)
+    crows = [(i, -MERC_MAX * 0.95 + (i % 4) * 9000.0,
+              MERC_MAX * 0.95 - (i // 4) * 7000.0) for i in range(12)]
+    qrows = [(q, -MERC_MAX * 0.9 + (q * 7919 % 100) / 100.0 * 1.8 * MERC_MAX,
+              -MERC_MAX * 0.9 + (q * 104729 % 100) / 100.0 * 1.8 * MERC_MAX)
+             for q in range(24)] + [(99, crows[5][1] + 10.0, crows[5][2])]
+    cands = spark.createDataFrame(crows, "cand_id long, cx double, cy double")
+    queries = spark.createDataFrame(qrows,
+                                    "query_id long, qx double, qy double")
+    work = str(tmp_path / "knn")
+    got = knn_join(queries, cands, k=3, index_zoom=4, work_dir=work)
+    rows = got.collect()
+    assert {(r["query_id"], r["cand_id"], r["knn_rank"]) for r in rows} \
+        == _brute_knn(qrows, crows, 3)
+    assert len(rows) == 3 * len(qrows)
+    assert all(os.path.isdir(os.path.join(work, f"round_{r}"))
+               for r in (1, 4, 16))
+
+
+def test_knn_ring_safety_bound(spark):
+    """k candidates inside the radius-1 disk do not finish a query whose
+    k-th is farther than the disk's guaranteed radius: a closer
+    candidate can sit just outside the disk (index_zoom 4, query at the
+    right edge of its cell, the in-disk candidate 1.89 cells away, the
+    outside one 1.06)."""
+    span = 2.0 * MERC_MAX / 16
+    qs = spark.createDataFrame([(1, 0.99 * span, -0.5 * span)],
+                               "query_id long, qx double, qy double")
+    cands = spark.createDataFrame(
+        [(10, -0.9 * span, -0.5 * span), (11, 2.05 * span, -0.5 * span)],
+        "cand_id long, cx double, cy double")
+    got = knn_join(qs, cands, k=1, index_zoom=4).collect()
+    assert [(r["query_id"], r["cand_id"], r["knn_rank"]) for r in got] \
+        == [(1, 11, 1)]
+
+
+def test_knn_large_round_does_not_broadcast_the_disks(spark):
+    """Catalyst sizes an exploded disk by its input rows: a round over
+    the bound must not be planned as a broadcast of the disks."""
+    from tileigi_spark.index import cell_col, cell_xy_cols
+    from tileigi_spark.spatial import _BROADCAST_DISK_ROWS, _disk_join
+
+    cands = spark.createDataFrame([(1, 0.0, 0.0)],
+                                  "cand_id long, cx double, cy double")
+    cands = cands.withColumn("cell", cell_col(F.col("cx"), F.col("cy"), 9))
+    qcx, qcy = cell_xy_cols(F.lit(0.0), F.lit(0.0), 9)
+    queries = spark.range(40).withColumn("_qcx", qcx).withColumn("_qcy", qcy)
+
+    def plan(n_remaining, radius):
+        return _disk_join(cands, queries, n_remaining, radius, 9) \
+            ._jdf.queryExecution().executedPlan().toString()
+
+    small = plan(40, 1)
+    assert "BroadcastHashJoin" in small and "SortMergeJoin" not in small
+    assert 40 * 513 ** 2 > _BROADCAST_DISK_ROWS
+    large = plan(40, 256)
+    assert "SortMergeJoin" in large
+    assert "Broadcast" not in large, large
 
 
 def test_pip_streamed_fallback_matches_broadcast(spark):
@@ -219,16 +293,27 @@ def _pip_check(spark, quad):
     return got._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_points_probe_a_broadcast_cover(plan):
+    """The polygon cover relation is the broadcast build side, the
+    points are never exchanged and no polygon WKB rides the candidate
+    stream."""
+    assert "BroadcastHashJoin" in plan and "BuildRight" in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "way#" not in plan, plan
+
+
 def test_pip_all_rects_refine_in_the_jvm(spark):
     """Every polygon an axis rect (both windings, a MultiPolygon-of-one):
     the refine is a JVM comparison, no Python eval node in the plan."""
     plan = _pip_check(spark, quad=False)
     assert "EvalPython" not in plan
+    _assert_points_probe_a_broadcast_cover(plan)
 
 
 def test_pip_non_axis_quad_takes_the_exact_refine(spark):
     plan = _pip_check(spark, quad=True)
     assert "EvalPython" in plan
+    _assert_points_probe_a_broadcast_cover(plan)
 
 
 def test_knn_staging_cleanup_failure_logs_a_named_fallback(spark, tmp_path,

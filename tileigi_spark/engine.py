@@ -60,6 +60,12 @@ _PROP_TYPES = (StringType, LongType, IntegerType, DoubleType, FloatType,
                BooleanType)
 
 
+# column names of the tile plan's keys and encode input: a source column
+# of one of these names would be silently replaced by the engine's own
+_RESERVED_COLS = ("zoom", "mtx", "mty", "x", "y", "geom", "salt", "layer",
+                  "layer_order")
+
+
 def _prop_columns(df: DataFrame, exclude=("way", "feature_id")):
     out = []
     for f in df.schema.fields:
@@ -984,6 +990,12 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                                          bbox_merc=bbox_merc)
 
         src, covered = _covered_for(layer_zooms)
+        clash = [c for c in src.columns if c in _RESERVED_COLS]
+        if clash:
+            raise ValueError(
+                f"layer {layer.id!r}: source columns {clash} use names the "
+                f"tile plan reserves ({', '.join(_RESERVED_COLS)}); "
+                f"rename them")
         if metatile_keys is not None:
             covered = covered.join(F.broadcast(metatile_keys),
                                    on=["zoom", "mtx", "mty"],

@@ -17,20 +17,14 @@ from .mercator import MERC_MAX
 WORLD = 2.0 * MERC_MAX
 
 
-def cell_col(mx, my, zoom: int):
-    """Cell id column from mercator x/y columns (clamped to the grid)."""
-    n = 1 << zoom
-    span = WORLD / n
-    cx = F.least(F.lit(n - 1).cast("long"),
-                 F.greatest(F.lit(0).cast("long"),
-                            F.floor((mx + F.lit(MERC_MAX)) / F.lit(span))))
-    cy = F.least(F.lit(n - 1).cast("long"),
-                 F.greatest(F.lit(0).cast("long"),
-                            F.floor((F.lit(MERC_MAX) - my) / F.lit(span))))
+def _pack(cx, cy):
+    """cell_id of cell-index columns: (x << 32) | y."""
     return (cx * F.lit(1 << 32) + cy).cast("long")
 
 
 def cell_xy_cols(mx, my, zoom: int):
+    """(x, y) cell-index columns from mercator x/y columns, clamped to
+    the grid."""
     n = 1 << zoom
     span = WORLD / n
     cx = F.least(F.lit(n - 1).cast("long"),
@@ -42,27 +36,24 @@ def cell_xy_cols(mx, my, zoom: int):
     return cx, cy
 
 
+def cell_col(mx, my, zoom: int):
+    """Cell id column from mercator x/y columns (clamped to the grid)."""
+    return _pack(*cell_xy_cols(mx, my, zoom))
+
+
 def bbox_cover_cells(df: DataFrame, zoom: int,
                      xmin="xmin", ymin="ymin", xmax="xmax", ymax="ymax",
                      out="cell") -> DataFrame:
     """Explode each row to every index cell its bbox covers (polygon-side
-    prefilter of J4). Arithmetic + explode, no shuffle."""
-    n = 1 << zoom
-    span = WORLD / n
-
-    def clamp(c):
-        return F.least(F.lit(n - 1).cast("long"),
-                       F.greatest(F.lit(0).cast("long"), c))
-
-    cx0 = clamp(F.floor((F.col(xmin) + F.lit(MERC_MAX)) / F.lit(span)))
-    cx1 = clamp(F.floor((F.col(xmax) + F.lit(MERC_MAX)) / F.lit(span)))
-    cy0 = clamp(F.floor((F.lit(MERC_MAX) - F.col(ymax)) / F.lit(span)))
-    cy1 = clamp(F.floor((F.lit(MERC_MAX) - F.col(ymin)) / F.lit(span)))
+    prefilter of J4): the cells of its top-left and bottom-right corners
+    by cell_xy_cols, and every cell between. Arithmetic + explode, no
+    shuffle."""
+    cx0, cy0 = cell_xy_cols(F.col(xmin), F.col(ymax), zoom)
+    cx1, cy1 = cell_xy_cols(F.col(xmax), F.col(ymin), zoom)
     return (df
             .withColumn("_ccx", F.explode(F.sequence(cx0, cx1)))
             .withColumn("_ccy", F.explode(F.sequence(cy0, cy1)))
-            .withColumn(out, (F.col("_ccx") * F.lit(1 << 32) + F.col("_ccy"))
-                        .cast("long"))
+            .withColumn(out, _pack(F.col("_ccx"), F.col("_ccy")))
             .drop("_ccx", "_ccy"))
 
 
@@ -80,7 +71,7 @@ def latlng_cell_col(lat, lng, zoom: int):
                  F.greatest(F.lit(0).cast("long"),
                             F.floor((F.lit(90.0) - lat)
                                     / F.lit(180.0 / ny))))
-    return (cx * F.lit(1 << 32) + cy).cast("long")
+    return _pack(cx, cy)
 
 
 def h3_cell_col(lat, lng, resolution: int):
@@ -126,5 +117,5 @@ def disk_cells(df: DataFrame, cx_col: str, cy_col: str, radius: int,
             .withColumn("_dy", F.explode(F.sequence(F.lit(-radius),
                                                     F.lit(radius))))
             .filter((nx >= 0) & (nx < n) & (ny >= 0) & (ny < n))
-            .withColumn(out, (nx * F.lit(1 << 32) + ny).cast("long"))
+            .withColumn(out, _pack(nx, ny))
             .drop("_dx", "_dy"))

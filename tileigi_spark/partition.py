@@ -39,26 +39,19 @@ the scale path named in SURVEY.md §6 / README "Scale design".
 from __future__ import annotations
 
 import json
-import logging
 import math
 from typing import Optional
 
-from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .mercator import MERC_MAX, bbox_tile_range, cover_slack
 
-_log = logging.getLogger(__name__)
-
 WORLD = 2.0 * MERC_MAX
 META_FILE = "_tileigi_cells.json"
 _HELPER_COLS = ("cell_x", "cell_y", "cell_x0", "cell_y0")
 _PART_COLS = ("cell_x", "cell_y")
-# read_cell_partitioned lists a read rectangle's cell directories
-# itself only up to this many cells; larger rectangles read the root
-# and prune on the partition columns
-_CELL_READ_DIR_CAP = 256
 
 
 def cell_slack(cell_zoom: int, buffer_px: int) -> float:
@@ -288,55 +281,21 @@ def is_cell_partitioned(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _rect_cell_dirs(spark: SparkSession, path: str,
-                    rx0: int, ry0: int, rx1: int, ry1: int):
-    """Leaf partition directories inside the read rectangle, found by
-    listing ONLY the rectangle's cell_x branches (1 + |x-range| FS list
-    calls), never the rest of the table. None when the FS listing fails
-    (logged) — the caller falls back to the root read."""
-    fs, root = _fs(spark, path)
-    try:
-        dirs = []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("cell_x=")):
-                continue
-            try:
-                cx = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if not (rx0 <= cx <= rx1):
-                continue
-            for sub in fs.listStatus(st.getPath()):
-                sname = sub.getPath().getName()
-                if not (sub.isDirectory() and sname.startswith("cell_y=")):
-                    continue
-                try:
-                    cy = int(sname.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if ry0 <= cy <= ry1:
-                    dirs.append(f"{path}/{name}/{sname}")
-        return dirs
-    except Py4JJavaError as e:
-        _log.warning("cell listing failed: falling back to the root read "
-                     "of %s (%s)", path, e.java_exception)
-        return None
-
-
 def read_cell_partitioned(spark: SparkSession, path: str,
                           bbox_merc: Optional[tuple] = None,
                           minzoom: Optional[int] = None,
                           keep_cells: bool = False) -> DataFrame:
     """Exactly-once feature stream for a rectangular region (or the
     whole table). Directory-level pruning happens BEFORE Spark's file
-    index is built: for a small read rectangle the rectangle's leaf
-    partition directories are enumerated with a handful of FS list
-    calls and handed to the reader under basePath, so the driver never
+    index is built: a read rectangle smaller than the grid hands the
+    reader one Hadoop glob over the rectangle's cell directories
+    (`cell_x={a,…}/cell_y={c,…}`, under basePath), which the JVM expands
+    by listing only the rectangle's cell_x branches, so the driver never
     lists (or caches) the other cells' directories at all — at a
     4^cell_zoom-directory planet table that listing, not the scan, is
-    the fixed cost a dirty-city re-render pays. Large rectangles (or a
-    listing failure) fall back to the root read, where the BETWEEN
+    the fixed cost a dirty-city re-render pays. A rectangle with no cell
+    directory reads as an empty frame (a sidecar without a schema reads
+    the root instead). The whole grid reads the root, where the BETWEEN
     predicates on the partition columns still prune natively; the
     exactly-once survivor filter is one codegen comparison per row
     either way. The read takes its schema from the layout sidecar, so it
@@ -345,12 +304,19 @@ def read_cell_partitioned(spark: SparkSession, path: str,
     rx0, ry0, rx1, ry1 = read_rect(bbox_merc, meta["cell_zoom"], minzoom,
                                    meta.get("buffer_px", 2))
     n = 1 << meta["cell_zoom"]
-    rect_cells = (rx1 - rx0 + 1) * (ry1 - ry0 + 1)
     df = None
-    if rect_cells < n * n and rect_cells <= _CELL_READ_DIR_CAP:
-        dirs = _rect_cell_dirs(spark, path, rx0, ry0, rx1, ry1)
-        if dirs:
-            df = _reader(spark, meta).option("basePath", path).parquet(*dirs)
+    if (rx1 - rx0 + 1) * (ry1 - ry0 + 1) < n * n:
+        xs = ",".join(map(str, range(rx0, rx1 + 1)))
+        ys = ",".join(map(str, range(ry0, ry1 + 1)))
+        try:
+            df = (_reader(spark, meta).option("basePath", path)
+                  .parquet(f"{path}/cell_x={{{xs}}}/cell_y={{{ys}}}"))
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            if "schema" in meta:
+                df = spark.createDataFrame(
+                    [], StructType.fromJson(meta["schema"]))
     if df is None:
         df = _reader(spark, meta).parquet(path)
     df = (df
