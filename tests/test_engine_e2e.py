@@ -211,3 +211,173 @@ def test_reserved_source_column_fails_by_name(spark, name):
                                    "FROM features")], global_maxzoom=14)
     with pytest.raises(ValueError, match=rf"source columns \['{name}'\]"):
         build_tiles(spark, {"features": feats}, sql, 0, 0)
+
+
+@pytest.fixture(scope="module")
+def resume_src(spark, feats):
+    """The fixture with a long property past 2^53, so a done-marker row
+    that turned the column into float64 would change its bytes."""
+    from pyspark.sql import functions as F
+
+    return feats.withColumn("big", F.col("population") + F.lit((1 << 60) + 1))
+
+
+@pytest.fixture(scope="module")
+def full_z0_6(spark, resume_src):
+    tiles = build_tiles(spark, {"features": resume_src}, LAYERS, 0, 6)
+    return {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
+            for r in tiles.collect()}
+
+
+def _cut_polygon_bbox(feats):
+    """A lon/lat bbox whose east edge runs through the middle of the
+    fixture's widest polygon."""
+    from tileigi_spark.geom.wkb import wkb_to_geom
+    from tileigi_spark.mercator import merc_to_lonlat
+
+    best = None
+    for r in feats.select("way").collect():
+        typ, data = wkb_to_geom(bytes(r["way"]))
+        if typ != "Polygon":
+            continue
+        xs = [x for x, _ in data[0]]
+        ys = [y for _, y in data[0]]
+        if best is None or max(xs) - min(xs) > best[2] - best[0]:
+            best = (min(xs), min(ys), max(xs), max(ys))
+    x0, y0, x1, y1 = best
+    lon0, lat0 = merc_to_lonlat(x0, y0)
+    lon1, lat1 = merc_to_lonlat((x0 + x1) / 2, y1)
+    return (float(lon0), float(lat0), float(lon1), float(lat1))
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_resume_and_bbox_match_full_render_minus_tiles(spark, resume_src,
+                                                       full_z0_6, seed):
+    """A render with done_keys and/or bbox is byte-identical to the full
+    render with those tiles taken out. The random done set always holds
+    half of a salted-zoom metatile (z3: one metatile of 8x8 tiles, every
+    salt's partials dropped) and half of a salt-free z6 metatile, plus
+    whole metatiles the render skips (z2's, a z5 one, and the tiles
+    inside the bbox of the z5 metatile its east edge cuts), for a mixed
+    range (z0-z6, partials + assemble) and a salt-free range (z5-z6, one
+    pass); the bbox cuts a polygon in two."""
+    import random
+
+    from tileigi_spark.mercator import bbox_lonlat_to_merc, bbox_tile_range
+
+    bbox = _cut_polygon_bbox(resume_src)
+    ranges = {z: bbox_tile_range(bbox_lonlat_to_merc(bbox), z)
+              for z in range(7)}
+    rng = random.Random(seed)
+    keys = sorted(full_z0_6)
+    z3 = [k for k in keys if k[0] == 3]
+    mt6 = sorted({(x // 8, y // 8) for z, x, y in keys if z == 6})
+    mx, my = rng.choice(mt6)
+    z6 = [k for k in keys if k[0] == 6 and (k[1] // 8, k[2] // 8) == (mx, my)]
+    done = set(rng.sample(z3, len(z3) // 2))
+    done |= set(rng.sample(z6, max(1, len(z6) // 2)))
+    done |= set(rng.sample(keys, len(keys) // 5))
+    # a key nothing renders (an empty tile's) and one outside the zooms
+    done |= {(4, 0, 0), (9, 1, 1)}
+    # whole metatiles, empty tiles included
+    mx5, my5 = rng.choice(sorted({(x // 8, y // 8)
+                                  for z, x, y in keys if z == 5}))
+    done |= {(2, x, y) for x in range(4) for y in range(4)}
+    done |= {(5, 8 * mx5 + i, 8 * my5 + j) for i in range(8) for j in range(8)}
+    src = {"features": resume_src}
+
+    def render(minz, maxz, **kw):
+        return {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
+                for r in build_tiles(spark, src, LAYERS, minz, maxz,
+                                     shuffle_parts=7, **kw).collect()}
+
+    done_df = spark.createDataFrame(sorted(done), "zoom int, x long, y long")
+    assert render(0, 6, done_keys=done_df) == {
+        k: v for k, v in full_z0_6.items() if k not in done}
+    assert render(5, 6, done_keys=done_df) == {
+        k: v for k, v in full_z0_6.items() if k[0] >= 5 and k not in done}
+
+    def in_bbox(k):
+        x0, y0, x1, y1 = ranges[k[0]]
+        return x0 <= k[1] <= x1 and y0 <= k[2] <= y1
+
+    # the bbox render keeps its z6 tiles, and has every z5 tile inside
+    # the bbox of the metatile its east edge cuts done
+    done = {k for k in done if k[0] != 6 or not in_bbox(k)}
+    x0, y0, x1, y1 = ranges[5]
+    done |= {(5, x, y) for x in range(max(x0, x1 // 8 * 8), x1 + 1)
+             for y in range(y0, y1 + 1) if y // 8 == y0 // 8}
+    got = render(0, 6, bbox=bbox, done_keys=spark.createDataFrame(
+        sorted(done), "zoom int, x long, y long"))
+    assert got == {k: v for k, v in full_z0_6.items()
+                   if in_bbox(k) and k not in done}
+    assert any(k[0] == 6 for k in got)
+
+
+def _plan_shape(tiles):
+    """(hash exchanges, MapInPandas nodes, the plan text below the
+    deepest exchange) of a build_tiles result's physical plan."""
+    plan = tiles._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    last = max(i for i, ln in enumerate(lines)
+               if "Exchange hashpartitioning" in ln)
+    return (plan.count("Exchange hashpartitioning"),
+            plan.count("MapInPandas"), "\n".join(lines[last + 1:]))
+
+
+def test_render_plan_shape(spark, feats, tmp_path):
+    """Covered rows are exchanged once, by metatile: below that exchange
+    the plan runs no Python (the sources carry their bbox columns, so
+    with_bbox adds no pass), and one MapInPandas renders. A salt-free
+    range has one hash exchange, with done keys and a bbox too (no
+    anti-join exchange); a mixed range adds assemble_tiles' exchange and
+    MapInPandas."""
+    from tileigi_spark.engine import with_bbox
+
+    path = str(tmp_path / "feats")
+    with_bbox(feats).write.parquet(path)
+    src = {"features": spark.read.parquet(path)}
+    done = spark.read.parquet(path).selectExpr(
+        "6 AS zoom", "feature_id % 64 AS x", "feature_id % 32 AS y")
+
+    n_ex, n_py, below = _plan_shape(build_tiles(
+        spark, src, LAYERS, 5, 6, shuffle_parts=8, done_keys=done,
+        bbox=(-20.0, -62.0, 0.0, -58.0)))
+    assert (n_ex, n_py) == (1, 1)
+    assert "Python" not in below and "MapInPandas" not in below
+    n_ex, n_py, below = _plan_shape(build_tiles(spark, src, LAYERS, 0, 6,
+                                                shuffle_parts=8))
+    assert (n_ex, n_py) == (2, 2)
+    assert "Python" not in below and "MapInPandas" not in below
+
+
+def test_finished_runs_count_each_wanted_tile_once():
+    """A metatile run is skipped only when every tile it could render is
+    done: all size x size tiles of the metatile (size = min(8, 2^zoom)),
+    or those inside the bbox's tile range; duplicate done keys count
+    once, and each salt's run counts its own markers."""
+    import pandas as pd
+
+    from tileigi_spark.engine import _finished_runs
+
+    def marks(tiles, salt=0):
+        return pd.DataFrame(
+            [(z, x // min(8, 1 << z), y // min(8, 1 << z), salt,
+              float(x), float(y)) for z, x, y in tiles],
+            columns=["zoom", "mtx", "mty", "salt", "x", "y"])
+
+    def runs(frame, ranges=None):
+        return sorted(_finished_runs(frame, 8, ranges).tolist())
+
+    z1 = [(1, x, y) for x in range(2) for y in range(2)]
+    assert runs(marks(z1)) == [(1, 0, 0, 0)]
+    assert runs(marks(z1[:3] + z1[:3])) == []
+    z5 = [(5, x, y) for x in range(8, 16) for y in range(16, 24)]
+    both = pd.concat([marks(z5), marks(z5[1:], salt=1)])
+    assert runs(both) == [(5, 1, 2, 0)]
+    # bbox tile range x 10-12, y 20-21 at z5: 6 of the metatile's tiles
+    inside = [(5, x, y) for x in range(10, 13) for y in range(20, 22)]
+    ranges = {5: (10, 20, 12, 21)}
+    assert runs(marks(inside), ranges) == [(5, 1, 2, 0)]
+    assert runs(marks(inside[1:]), ranges) == []
+    assert runs(marks(inside), {5: (9, 20, 12, 21)}) == []

@@ -475,3 +475,52 @@ def test_append_with_mismatched_schema_rejected(spark, tmp_path):
     write_cell_partitioned(not_null, path, cell_zoom=CZ, buffer_px=2,
                            mode="append")
     assert spark.read.parquet(path).count() == 2 * before
+
+
+def test_batch_table_reads_log_no_sink_probe_warning(spark, table,
+                                                     tmp_path):
+    """One-path reads of the package's own tables (a TileStore table, a
+    cell glob) log no `FileStreamSink: Assume no metadata directory`
+    WARN with its FileNotFoundException stack, and keep their meaning:
+    an absent or empty table reads as None, an empty rectangle as an
+    empty frame, a corrupt file still fails; the session's setting of
+    the probe's switch is restored."""
+    from tileigi_spark.io import TileStore
+    from tileigi_spark.partition import _SINK_LOG_IGNORED
+
+    path, _ = table
+    cx, cy = next((x, y) for x in range(N) for y in range(N)
+                  if not os.path.isdir(f"{path}/cell_x={x}/cell_y={y}"))
+    empty_bbox = (-MERC_MAX + (cx + 0.4) * SPAN, MERC_MAX - (cy + 0.6) * SPAN,
+                  -MERC_MAX + (cx + 0.6) * SPAN, MERC_MAX - (cy + 0.4) * SPAN)
+    some_bbox = (-MERC_MAX + 2.0 * SPAN, -MERC_MAX + 2.0 * SPAN,
+                 -MERC_MAX + 3.5 * SPAN, -MERC_MAX + 3.5 * SPAN)
+    store = TileStore(str(tmp_path / "store"))
+
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    log = jvm.java.io.StringWriter()
+    appender = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.createDefaultLayout(), None, log,
+        "read-probe", False, True)
+    appender.start()
+    root = jvm.org.apache.logging.log4j.LogManager.getContext(False) \
+        .getRootLogger()
+    root.addAppender(appender)
+    try:
+        assert store.done_keys(spark) is None            # no directory
+        os.makedirs(tmp_path / "store" / "checkpoint")
+        assert store.done_keys(spark) is None            # empty directory
+        assert read_cell_partitioned(spark, path,
+                                     bbox_merc=empty_bbox).count() == 0
+        assert read_cell_partitioned(spark, path,
+                                     bbox_merc=some_bbox).count() > 0
+        (tmp_path / "store" / "checkpoint" / "part-0.parquet").write_bytes(
+            b"not a parquet file")
+        with pytest.raises(Exception, match="part-0.parquet"):
+            store.done_keys(spark)
+    finally:
+        root.removeAppender(appender)
+        appender.stop()
+    assert "Assume no metadata directory" not in str(log.toString())
+    assert spark.conf.get(_SINK_LOG_IGNORED, None) is None

@@ -11,7 +11,7 @@ Usage:
 Mirrors the reference CLI surface: zoom range, bbox-restricted rendering,
 explicit metatile lists (--tile-list, 'SCALE Z/X/Y' lines,
 bin/tileigi.rs:80-84), destination type, metatile scale, resume
-(--if-not-exists -> checkpoint anti-join), compression toggle.
+(--if-not-exists -> checkpointed tiles left out), compression toggle.
 """
 
 from __future__ import annotations

@@ -1,24 +1,40 @@
 """The tile-pyramid plan builder: DataFrame-native J1/J3 joins, salted
-groupBys, per-feature geometry stages as Arrow-batched UDFs.
+groupBys, per-metatile rendering as one Arrow-batched Python pass.
 
-Spark-first re-expression of the reference lifecycle (lib.rs:464-736):
+Spark-first re-expression of the reference lifecycle (lib.rs:464-736),
+which renders one metatile at a time (lib.rs:543-559: fetch its rows,
+then process, encode and write them):
 
   features ──(bbox cover explode = J1, no shuffle)──▶ (zoom, metatile) rows
-      │ one mapInPandas pass: remap → dedup/spikes → exact-int RDP →
-      │ buffered clip → quadtree tile split (J3) → make_valid → winding →
-      │ per-tile shift (G2-G16); geom.batch.process_general routes each
-      │ row to the points, axis-rect, ragged or scalar lane
+      │ every layer's covered rows, unioned (+ done-tile marker rows)
       ▼
-  repartition(z,x,y,salt) + sortWithinPartitions + mapInPandas
-      — partial MVT layer encode (A1; salt breaks z0-z4 hot tiles, O13)
+  repartition(zoom,mtx,mty,salt) + sortWithinPartitions + mapInPandas:
+      per frame of complete metatile runs, per layer,
+      geom.batch.process_general — remap → dedup/spikes → exact-int RDP
+      → buffered clip → quadtree tile split (J3) → make_valid → winding
+      → per-tile shift (G2-G16) on the points, axis-rect, ragged or
+      scalar lane — then the pieces in canonical order through the
+      partial MVT layer encode (A1; salt breaks z0-z4 hot tiles, O13)
+      and, on salt-free ranges, the tile assembly (A2)
   repartition(z,x,y) + sortWithinPartitions + mapInPandas
-      — merge partials per layer + tile assembly + gzip + md5 (A2)
+      — salted ranges only: merge partials per layer + tile assembly +
+        gzip + md5 (A2, assemble_tiles)
 
-Shuffles: exactly the two repartitions. Everything upstream is narrow —
-the cover "join" is arithmetic + explode on the feature side, which
-Catalyst keeps in one stage with the scan (predicate pushdown + column
-pruning intact). Sorted-stream mapInPandas (not per-group applyInPandas)
-amortizes per-tile overhead across whole Arrow batches.
+Shuffles: one repartition of covered rows, plus assemble_tiles' on a
+range with salted zooms. No piece enters the JVM: a covered row is
+exchanged once, and every tile lies inside exactly one metatile, so the
+task that holds a metatile's rows renders its tiles whole. Everything
+upstream is narrow — the cover "join" is arithmetic + explode on the
+feature side, which Catalyst keeps in one stage with the scan (predicate
+pushdown + column pruning intact; no Python there unless a source lacks
+bbox columns and with_bbox decodes them). Sorted-stream mapInPandas (not
+per-group applyInPandas) amortizes per-tile overhead across whole Arrow
+batches.
+
+geometry_stage, encode_layers and encode_assemble_fused are the same
+steps as separate DataFrame stages over a piece stream. The render does
+not call them; they stay public for the oracles and tools that take
+pieces as a DataFrame.
 
 The cover arithmetic, the bbox filters and the per-layer columns are
 built as SQL text (one filter or column per step), the way the reference
@@ -48,7 +64,7 @@ from .mercator import (MERC_MAX, bbox_metatile_range, bbox_tile_range,
                        cover_slack)
 from .geom.wkb import _cumsum0, _ranges, wkb_to_geom, read_ragged
 from .geom import mvt, ringbulk
-from .sqllit import double as _d, string as _s
+from .sqllit import double as _d
 
 WORLD = 2.0 * MERC_MAX
 
@@ -348,11 +364,15 @@ def _is_ring5_geom_wkb(w) -> bool:
             and w[22:38] == w[86:102])
 
 
-# Python-bound stages (the narrow geometry pass and the encode/assemble
-# exchanges) run ~2 tasks per core: each mapInPandas task carries ~55 ms
-# of fixed worker/Arrow cost, and 2/core keeps the straggler tail at
-# half a wave (see _python_stage_parts for the measurements).
-_TASKS_PER_CORE = 2
+# Python-bound stages (the render pass and the assemble exchange) run one
+# task per core: each mapInPandas task carries ~55 ms of fixed
+# worker/Arrow cost, and with geometry, encode and assembly in one pass
+# a second wave cost more than the straggler tail it saved. perfbench
+# seed 0, 4 cores, trace-0 wall_s medians of 3 interleaved pairs, 2 -> 1
+# tasks/core: geotag_points 8.03 -> 7.58 s, polygons 8.53 -> 8.15 s,
+# rerender_resume 9.71 -> 8.81 s (3/3 pairs each); traced spark.tasks
+# 21 -> 13, 35 -> 27, 128 -> 100.
+_TASKS_PER_CORE = 1
 
 
 def _rects_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
@@ -378,7 +398,14 @@ def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
     Input: (zoom, mtx, mty, way, feature_id, props...).
     Output: (zoom, x, y, feature_id, geom, props...) — one row per
     (feature, tile) piece, geometry in tile-local i32 coords serialized as
-    WKB (exact: |coord| < 2^53)."""
+    WKB (exact: |coord| < 2^53).
+
+    Not on build_tiles' path: the render pass calls process_general per
+    frame of metatile runs inside its one mapInPandas
+    (_make_render_run). This stays the public piece-stream stage for the
+    tile_pieces_z3/poly_pieces_z2 oracles, the tests and tools that
+    take pieces as a DataFrame, and perfbench's tracer, which looks it
+    up by name."""
     # The bbox columns only feed the JVM cover arithmetic upstream; an
     # opaque mapInPandas ships every input column (Spark cannot see which
     # ones the function reads — guide §4 column-pruning point), so drop
@@ -465,37 +492,41 @@ def _run_starts(pdf, keys):
     return chg
 
 
+def _complete_runs(iterator, keys):
+    """The frames of a sorted stream, each holding only complete runs of
+    equal `keys`. Each Arrow batch's open trailing run is held back
+    until a later batch (or the end of the stream) closes it; a run
+    spanning many batches is kept as a list of pieces and concatenated
+    once, when it closes."""
+    def joined(parts):
+        return parts[0] if len(parts) == 1 else pd.concat(parts,
+                                                          ignore_index=True)
+
+    held = []
+    for pdf in iterator:
+        if not len(pdf):
+            continue
+        tail = int(np.flatnonzero(_run_starts(pdf, keys))[-1])
+        if not tail and held and all(held[-1][k].values[-1]
+                                     == pdf[k].values[0] for k in keys):
+            held.append(pdf)
+            continue
+        frame = held + [pdf.iloc[:tail]] if tail else held
+        held = [pdf.iloc[tail:]]
+        if frame:
+            yield joined(frame)
+    if held:
+        yield joined(held)
+
+
 def _walk_runs(iterator, keys, frame_fn):
-    """Drive a sorted-stream walk that only ever handles complete runs.
-
-    Each Arrow batch's open trailing run of equal `keys` is held back
-    until a later batch (or the end of the stream) closes it, so every
-    frame handed to frame_fn holds whole runs; a run spanning many
-    batches is kept as a list of pieces and concatenated once, when it
-    closes. frame_fn(frame) returns a dict of output column lists, the
-    first key column among them; the walk yields them as DataFrames of
-    >= 2000 rows and the rest at the end."""
-    def frames():
-        held = []
-        for pdf in iterator:
-            if not len(pdf):
-                continue
-            tail = int(np.flatnonzero(_run_starts(pdf, keys))[-1])
-            if not tail and held and all(held[-1][k].values[-1]
-                                         == pdf[k].values[0] for k in keys):
-                held.append(pdf)
-                continue
-            frame = held + [pdf.iloc[:tail]] if tail else held
-            held = [pdf.iloc[tail:]]
-            if frame:
-                yield frame
-        if held:
-            yield held
-
+    """Drive a sorted-stream walk that only ever handles complete runs
+    (_complete_runs). frame_fn(frame) returns a dict of output column
+    lists, the first key column among them; the walk yields them as
+    DataFrames of >= 2000 rows and the rest at the end."""
     out = {}
-    for parts in frames():
-        for k, v in frame_fn(parts[0] if len(parts) == 1 else pd.concat(
-                parts, ignore_index=True)).items():
+    for frame in _complete_runs(iterator, keys):
+        for k, v in frame_fn(frame).items():
             out.setdefault(k, []).extend(v)
         if len(out[keys[0]]) >= 2000:
             yield pd.DataFrame(out)
@@ -640,9 +671,9 @@ def _frame_rows(geoms, ki, vi, valid):
 
 def _make_encode_run(prop_types: dict[str, dict], all_props):
     """The sorted-stream partial-layer encode walk as a reusable
-    mapInPandas function (shared by the salted two-shuffle path and the
-    fused salt-free path — the walk itself is salt-agnostic: salt is
-    just one more run-break column, constant 0 in the fused stream).
+    mapInPandas function (shared by the render pass, encode_layers and
+    encode_assemble_fused — the walk itself is salt-agnostic: salt is
+    just one more run-break column, constant 0 on salt-free zooms).
 
     The walk only handles complete runs (_walk_runs), so it carries no
     encoder state across Arrow batches: it frames each frame's rows
@@ -680,7 +711,11 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
 def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
                   salt_zoom_max: int = 4, n_salts: int = 16,
                   shuffle_parts: Optional[int] = None) -> DataFrame:
-    """A1: salted partial layer encode. One shuffle: repartition by
+    """A1 over a piece stream: salted partial layer encode. Not on
+    build_tiles' path, whose render pass runs the same walk
+    (_make_encode_run) on each metatile frame's pieces without an
+    exchange of pieces; kept as the public piece-stream stage (tests,
+    perfbench's tracer look it up by name). One shuffle: repartition by
     (zoom,x,y,salt) + sortWithinPartitions, then a mapInPandas pass that
     walks the sorted stream and encodes one partial MVT layer message per
     contiguous (tile, salt, layer) run — per-group overhead is amortized
@@ -689,7 +724,7 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
     is partitioning-independent, so tile bytes are deterministic at any
     parallelism (O9/O13).
 
-    pieces: unioned per-layer outputs of geometry_stage with layer_id /
+    pieces: unioned per-layer outputs of geometry_stage with layer /
     layer_order columns. prop_types: layer_id -> {col -> Spark type}.
 
     The walk (_make_encode_run) frames each Arrow batch's complete runs
@@ -700,10 +735,9 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
     a time with mvt.encode_feature, logging each such frame.
 
     shuffle_parts: explicit partition count for the exchange, used as
-    given. The encode walk is Python-bound and each task pays a fixed
-    Arrow/worker cost, so build_tiles clamps its hint to ~2 tasks/core
-    (_python_stage_parts) before passing it here. None keeps the
-    spark.sql.shuffle.partitions + AQE behavior.
+    given (callers clamp it with _python_stage_parts: the walk is
+    Python-bound and each task pays a fixed Arrow/worker cost). None
+    keeps the spark.sql.shuffle.partitions + AQE behavior.
     """
     salt_col = (F.when(F.col("zoom") <= F.lit(salt_zoom_max),
                        F.pmod(F.col("feature_id"), F.lit(n_salts))
@@ -729,7 +763,8 @@ _TILE_SCHEMA = "zoom int, x long, y long, tile binary, tile_md5 string"
 def _make_assemble_run(compress: bool = True):
     """The sorted-partials tile-assembly walk (merge + gzip + md5) as a
     reusable mapInPandas function — shared by the shuffled assemble and
-    the fused path, where the encode output is already tile-contiguous.
+    the salt-free render pass (and encode_assemble_fused), where the
+    encode output is already tile-contiguous.
     Like the encode walk it only handles complete runs (_walk_runs):
     each frame of whole tiles merges every (layer_order, layer) run's
     partials and zips each tile's layers, with no tile state carried
@@ -761,10 +796,11 @@ def assemble_tiles(partials: DataFrame, compress: bool = True,
     per-tile MVT tiles + gzip + md5 (content-address for O12 dedup,
     fileio.rs:136-148). One shuffle: repartition (zoom,x,y) + sorted
     mapInPandas walk. shuffle_parts: explicit partition count, used as
-    given (build_tiles passes the same ~2 tasks/core clamp as for
-    encode_layers); None keeps the AQE behavior. Salt-free pyramids
-    (minzoom > salt_zoom_max) skip this shuffle: build_tiles calls
-    encode_assemble_fused instead."""
+    given (build_tiles passes the same _python_stage_parts clamp as for
+    its render exchange); None keeps the AQE behavior. build_tiles calls
+    it on the partials of ranges with salted zooms; salt-free pyramids
+    (minzoom > salt_zoom_max) skip this shuffle: their render pass
+    assembles the tiles itself."""
     if shuffle_parts is None:
         ordered = partials.repartition("zoom", "x", "y")
     else:
@@ -780,6 +816,10 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
                           shuffle_parts: Optional[int] = None) -> DataFrame:
     """A1+A2 in ONE shuffle for salt-free piece streams (every zoom above
     salt_zoom_max — the overwhelming tile majority of a deep pyramid).
+    Not on build_tiles' path, whose render pass runs the same two walks
+    after the geometry in one pass over exchanged covered rows; kept as
+    the public piece-stream stage (tests, perfbench's tracer look it up
+    by name).
 
     With salt constant 0, repartitioning by (zoom, x, y) already lands
     every piece of a tile in one partition, so the partial-layer encode
@@ -805,6 +845,99 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
     assemble = _make_assemble_run(compress)
     return ordered.mapInPandas(lambda it: assemble(encode(it)),
                                schema=_TILE_SCHEMA)
+
+
+# the render exchange's key: every tile lies inside one metatile, and a
+# salt splits a low-zoom metatile's features across tasks
+_METATILE_KEYS = ("zoom", "mtx", "mty", "salt")
+# the canonical piece order inside a tile: the encode walk's input order
+_PIECE_ORDER = ("zoom", "x", "y", "salt", "layer_order", "feature_id")
+
+
+def _finished_runs(marks, metatile_scale: int, tile_ranges):
+    """The (zoom, mtx, mty, salt) runs of done-marker rows `marks` whose
+    every wanted tile is done: all tiles of the metatile, or those inside
+    the zoom's bbox tile range (tile_ranges; markers lie inside it)."""
+    n = (marks.drop_duplicates(list(_METATILE_KEYS + ("x", "y")))
+         .groupby(list(_METATILE_KEYS), sort=False).size())
+    z = n.index.get_level_values("zoom").to_numpy(np.int64)
+    size = np.minimum(metatile_scale, np.left_shift(1, z))
+    x0 = n.index.get_level_values("mtx").to_numpy(np.int64) * size
+    y0 = n.index.get_level_values("mty").to_numpy(np.int64) * size
+    x1, y1 = x0 + size - 1, y0 + size - 1
+    if tile_ranges is not None:
+        r = np.array([tile_ranges[v] for v in z.tolist()],
+                     dtype=np.int64).reshape(-1, 4)
+        x0, y0 = np.maximum(x0, r[:, 0]), np.maximum(y0, r[:, 1])
+        x1, y1 = np.minimum(x1, r[:, 2]), np.minimum(y1, r[:, 3])
+    wanted = np.maximum(x1 - x0 + 1, 0) * np.maximum(y1 - y0 + 1, 0)
+    return n.index[n.to_numpy() >= wanted]
+
+
+def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
+                     metatile_scale: int, global_maxzoom: int, fuse: bool,
+                     compress: bool = True, tile_ranges=None):
+    """The render pass as one mapInPandas function, over covered rows
+    sorted by (zoom, mtx, mty, salt, layer_order, feature_id).
+
+    Each frame of complete metatile runs (_complete_runs) goes through
+    geom.batch.process_general once per layer (layer_specs: (layer_order,
+    layer id, buffer units) per layer), its pieces are stable-sorted into
+    the canonical piece order and fed to the encode walk; with `fuse`
+    (salt-free zooms only) the assemble walk runs on its output in the
+    same pass, otherwise the pass emits partials. `carry` names the
+    columns every piece keeps (salt and the property columns).
+
+    Rows with layer_order -1 are done markers: one per finished (zoom, x,
+    y) tile, keyed by its metatile and salt, so they land in the frame of
+    that tile's run; the tile's pieces are dropped before the encode, and
+    a run whose wanted tiles (_finished_runs) are all done is not
+    rendered at all — a resume's finished zooms cost no geometry."""
+    from .geom.batch import process_general
+
+    names = np.empty(1 + max(o for o, _, _ in layer_specs), dtype=object)
+    for order, layer_id, _ in layer_specs:
+        names[order] = layer_id
+    encode = _make_encode_run(prop_types,
+                              sorted({p for d in prop_types.values()
+                                      for p in d}))
+    assemble = _make_assemble_run(compress) if fuse else None
+
+    def pieces(iterator):
+        for pdf in _complete_runs(iterator, _METATILE_KEYS):
+            lo = pdf["layer_order"].to_numpy()
+            marks = pdf[lo < 0]
+            if len(marks):
+                finished = _finished_runs(marks, metatile_scale, tile_ranges)
+                if len(finished):
+                    lo = np.where(pd.MultiIndex.from_arrays(
+                        [pdf[k].to_numpy(np.int64) for k in _METATILE_KEYS])
+                        .isin(finished), -1, lo)
+            frames = []
+            for order, _, buffer_units in layer_specs:
+                rows = pdf[lo == order]
+                f = (process_general(rows, carry, buffer_units,
+                                     metatile_scale, global_maxzoom, 8)
+                     if len(rows) else None)
+                if f is not None:
+                    frames.append(f.assign(layer_order=order))
+            if not frames:
+                continue
+            f = pd.concat(frames, ignore_index=True)
+            if len(marks):
+                done = pd.MultiIndex.from_arrays(
+                    [marks[k].to_numpy(np.int64) for k in _TILE_KEYS])
+                f = f[~pd.MultiIndex.from_arrays(
+                    [f[k].to_numpy(np.int64) for k in _TILE_KEYS])
+                    .isin(done)]
+            f = f.iloc[np.lexsort([f[k].to_numpy()
+                                   for k in reversed(_PIECE_ORDER)])]
+            if len(f):
+                yield f.assign(layer=names[f["layer_order"].to_numpy()])
+
+    if fuse:
+        return lambda iterator: assemble(encode(pieces(iterator)))
+    return lambda iterator: encode(pieces(iterator))
 
 
 def empty_tile_bytes(layers: Layers, zoom: int, compress: bool = True) -> bytes:
@@ -853,15 +986,15 @@ def tile_driver(spark: SparkSession, zoom: int,
 
 def _python_stage_parts(spark: SparkSession,
                         shuffle_parts: Optional[int]) -> Optional[int]:
-    """Clamp a caller's exchange-width hint for the Python-bound encode/
-    assemble stages. Each mapInPandas task carries a fixed cost: ~55 ms
-    (perfbench spark.task_fixed_ms, 4 cores, Python 3.11), most of it
-    the worker waiting on the JVM. It was 200-290 ms until the package
-    stopped the workers re-reading pyspark.zip's directory on every
-    task (zipguard). At 32 cores on the z0-10 bench leg, 256 partitions
-    of micro-tasks lost ~1-2 s/leg to task overhead vs 64 (5.3 s vs
-    6.4 s warm; 12.7 s at 512). ~2 tasks/core keeps the tail at half a
-    wave while per-task kernel time stays well above the fixed cost at
+    """Clamp a caller's exchange-width hint for the Python-bound render
+    and assemble stages to _TASKS_PER_CORE tasks per core. Each
+    mapInPandas task carries a fixed cost: ~55 ms (perfbench
+    spark.task_fixed_ms, 4 cores, Python 3.11), most of it the worker
+    waiting on the JVM. It was 200-290 ms until the package stopped the
+    workers re-reading pyspark.zip's directory on every task (zipguard).
+    At 32 cores on the z0-10 bench leg, 256 partitions of micro-tasks
+    lost ~1-2 s/leg to task overhead vs 64 (5.3 s vs 6.4 s warm; 12.7 s
+    at 512). Per-task kernel time stays well above the fixed cost at
     larger scale factors (tiles/task grows with data; the constant does
     not). None stays None (spark.sql.shuffle.partitions + AQE coalescing
     decide)."""
@@ -884,11 +1017,15 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
 
     sources: source name -> features DataFrame with `way` (WKB 3857 binary)
     + `feature_id` (stable long) + property columns.
-    done_keys: optional (zoom, x, y) DataFrame of already-written tiles;
-    anti-joined away for checkpoint resume (S11).
+    done_keys: optional (zoom, x, y) DataFrame of already-written tiles,
+    left out for checkpoint resume (S11): each key rides the render
+    exchange as a marker row of its metatile (one per salt at salted
+    zooms), and the render task drops that tile's pieces.
     bbox: optional (minlon, minlat, maxlon, maxlat) restricting generation
     to tiles intersecting it (bin/tileigi.rs:110-126; tighter than the
-    reference's metatile granularity — tiles outside the bbox are absent).
+    reference's metatile granularity — tiles outside the bbox are absent:
+    the cover keeps the bbox's metatiles, a filter on the render output
+    its tiles).
     metatile_keys: optional (zoom, mtx, mty) DataFrame naming exactly the
     metatiles to render (--tile-list re-render-dirty workflows,
     bin/tileigi.rs:80-84); broadcast semi-joined — the list is small.
@@ -900,15 +1037,16 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     tile_ranges = ({z: bbox_tile_range(bbox_merc, z) for z in zooms}
                    if bbox_merc is not None else None)
     # A pyramid whose zooms all sit above salt_zoom_max never salts, so
-    # the whole piece stream can take the single-shuffle fused
-    # encode+assemble (encode_assemble_fused) — the deep-zoom re-render
-    # workflow. Splitting a MIXED range into salted/salt-free buckets was
-    # tried and rejected with numbers: the duplicated scan+cover work of
-    # the extra branch cost more than the saved exchange (4.22 s vs
-    # 4.01 s best-of-3 on the z0-10 leg), so mixed ranges keep the
-    # two-shuffle salted path.
+    # every tile's pieces meet in one render task, which assembles the
+    # tiles too (one exchange) — the deep-zoom re-render workflow.
+    # Splitting a MIXED range into salted/salt-free buckets was tried
+    # and rejected with numbers: the duplicated scan+cover work of the
+    # extra branch cost more than the saved exchange (4.22 s vs 4.01 s
+    # best-of-3 on the z0-10 leg), so mixed ranges emit partials and
+    # keep assemble_tiles' exchange and merge.
     fuse = minzoom > salt_zoom_max
     per_layer = []
+    layer_specs = []
     prop_types: dict[str, dict] = {}
 
     def _prep(src: DataFrame) -> DataFrame:
@@ -1000,41 +1138,66 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
             covered = covered.join(F.broadcast(metatile_keys),
                                    on=["zoom", "mtx", "mty"],
                                    how="left_semi")
-        pieces = geometry_stage(covered, layer.id, layer.buffer,
-                                layers.global_maxzoom, metatile_scale)
-        if tile_ranges is not None:
-            pieces = pieces.filter(_zoom_xy_filter(
-                {z: tile_ranges[z] for z in layer_zooms}, "x", "y"))
-        if done_keys is not None:
-            # resume anti-join (S11); AQE picks broadcast vs shuffle by size
-            pieces = pieces.join(done_keys, on=["zoom", "x", "y"],
-                                 how="left_anti")
         prop_types[layer.id] = dict(_prop_columns(
             src, exclude=("way", "feature_id")))
-        per_layer.append(pieces.withColumns(
-            {"layer": F.expr(_s(layer.id)),
-             "layer_order": F.expr(str(order))}))
+        # only what the render reads crosses the exchange: the bbox
+        # columns fed the cover, other-typed columns are never encoded
+        props = _prop_columns(covered, exclude=(
+            "way", "feature_id", "zoom", "mtx", "mty",
+            "xmin", "ymin", "xmax", "ymax"))
+        per_layer.append(covered.selectExpr(
+            "zoom", "mtx", "mty", "way", "feature_id",
+            *(f"`{p}`" for p, _ in props), f"{order} AS layer_order"))
+        layer_specs.append((order, layer.id, layer.buffer * 16))
 
     if not per_layer:
         # no layer covers the requested zoom range: empty result with the
         # tiles schema (a one-zoom CLI loop must not crash at zooms no
         # layer serves)
-        return spark.createDataFrame(
-            [], "zoom int, x long, y long, tile binary, tile_md5 string")
+        return spark.createDataFrame([], _TILE_SCHEMA)
 
-    all_pieces = per_layer[0]
+    rows = per_layer[0]
     for other in per_layer[1:]:
-        all_pieces = all_pieces.unionByName(other, allowMissingColumns=True)
-
+        rows = rows.unionByName(other, allowMissingColumns=True)
+    cols = _prop_columns(rows, exclude=("way", "zoom", "mtx", "mty",
+                                        "layer_order"))
+    carry = ["salt"] + [p for p, _ in cols if p != "feature_id"]
+    rows = rows.withColumn("salt", F.expr(
+        f"CAST(IF(zoom <= {salt_zoom_max}, pmod(feature_id, {n_salts}),"
+        f" 0) AS INT)"))
+    if done_keys is not None:
+        # one marker row per done tile (inside the bbox) and salt, in its
+        # metatile's run; integer columns get 0, not NULL, so the
+        # render's pandas frames keep them int64
+        ints = [f"CAST(0 AS {t.simpleString()}) AS `{p}`"
+                for p, t in cols if isinstance(t, (LongType, IntegerType))]
+        size = f"least({metatile_scale}L, shiftleft(1L, zoom))"
+        keep = (f"zoom IN ({', '.join(map(str, zooms))})"
+                if tile_ranges is None
+                else _zoom_xy_filter(tile_ranges, "x", "y"))
+        marks = (done_keys.filter(keep)
+                 .selectExpr(
+                     "CAST(zoom AS INT) AS zoom",
+                     f"CAST(x DIV {size} AS BIGINT) AS mtx",
+                     f"CAST(y DIV {size} AS BIGINT) AS mty",
+                     f"explode(IF(zoom <= {salt_zoom_max},"
+                     f" sequence(0, {n_salts - 1}), array(0))) AS salt",
+                     "-1 AS layer_order", "CAST(x AS BIGINT) AS x",
+                     "CAST(y AS BIGINT) AS y", *ints))
+        rows = rows.unionByName(marks, allowMissingColumns=True)
     parts_n = _python_stage_parts(spark, shuffle_parts)
-    if fuse:
-        tiles = encode_assemble_fused(all_pieces, prop_types,
-                                      compress=compress,
-                                      shuffle_parts=parts_n)
-    else:
-        partials = encode_layers(all_pieces, prop_types, salt_zoom_max,
-                                 n_salts, shuffle_parts=parts_n)
-        tiles = assemble_tiles(partials, compress=compress,
+    rows = (rows.repartition(*_METATILE_KEYS) if parts_n is None
+            else rows.repartition(parts_n, *_METATILE_KEYS))
+    rows = rows.sortWithinPartitions(*_METATILE_KEYS, "layer_order",
+                                     "feature_id")
+    tiles = rows.mapInPandas(
+        _make_render_run(layer_specs, carry, prop_types, metatile_scale,
+                         layers.global_maxzoom, fuse, compress, tile_ranges),
+        schema=_TILE_SCHEMA if fuse else _PARTIAL_SCHEMA)
+    if tile_ranges is not None:
+        tiles = tiles.filter(_zoom_xy_filter(tile_ranges, "x", "y"))
+    if not fuse:
+        tiles = assemble_tiles(tiles, compress=compress,
                                shuffle_parts=parts_n)
 
     if include_empty:

@@ -4,7 +4,7 @@ Primary sink is a table written through `TileStore`, which abstracts the
 catalog: in production this is an Iceberg table (`spark.table`/`writeTo`),
 in the sandbox (no Iceberg jars baked in) a parquet path with identical
 semantics. The checkpoint protocol is storage-agnostic: finished tile keys
-are appended after each zoom-batch commit and anti-joined on restart — a
+are appended after each zoom-batch commit and left out on restart — a
 distributed version of the reference's does_metatile_exist file probe
 (fileio.rs:62-66).
 
@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from . import sqllit
+from .partition import read_batch_parquet
 
 # the TileStore `metrics` table's columns, in order
 _METRICS_SCHEMA = (("run_id", "string"), ("stage", "string"),
@@ -70,7 +71,7 @@ class TileStore:
         path = os.path.join(self.base, name)
         reader = spark.read if schema is None else spark.read.schema(schema)
         try:
-            return reader.parquet(path)
+            return read_batch_parquet(spark, reader, path)
         except AnalysisException as e:
             # an absent table: no directory yet, or an empty one; a
             # corrupt file must fail the read, not pass for "absent" (a
@@ -147,7 +148,7 @@ class TileStore:
     # ------------------------------------------------------ checkpointing
 
     def done_keys(self, spark: SparkSession) -> DataFrame | None:
-        """Finished (zoom,x,y) keys for the resume anti-join (S11)."""
+        """Finished (zoom,x,y) keys, which a resume leaves out (S11)."""
         df = self._read(spark, "checkpoint")
         if df is None:
             return None
@@ -182,8 +183,8 @@ class TileStore:
 def run_pyramid_with_checkpoint(spark: SparkSession, store: TileStore,
                                 build_fn, zooms: list[int],
                                 run_id: str = "run") -> None:
-    """Resumable driver loop: per zoom-batch, anti-join finished keys,
-    build, stage the batch to storage in ONE pass (which also counts
+    """Resumable driver loop: per zoom-batch, build without the finished
+    keys, stage the batch to storage in ONE pass (which also counts
     it), then derive the map/images writes and the checkpoint keys FROM
     the staged table (never from a re-execution or an executor-memory
     cache of tile bytes). The checkpoint append is last, so a crash

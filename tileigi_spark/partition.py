@@ -242,6 +242,29 @@ def _reader(spark: SparkSession, meta: dict):
     return reader
 
 
+_SINK_LOG_IGNORED = "spark.sql.streaming.fileStreamSink.ignoreMetadata"
+
+
+def read_batch_parquet(spark: SparkSession, reader, path: str) -> DataFrame:
+    """reader.parquet(path) for a table written by batch jobs. A
+    one-path read first probes the path for a streaming file sink's
+    metadata log, and on a glob or an absent path that probe logs a WARN
+    with a FileNotFoundException stack although nothing is wrong. Batch
+    tables have no such log, so the probe is switched off for the call
+    and the session's setting restored after it; the read itself (and
+    its PATH_NOT_FOUND for an absent path) is unchanged."""
+    conf = spark.conf
+    prev = conf.get(_SINK_LOG_IGNORED, None)
+    conf.set(_SINK_LOG_IGNORED, "true")
+    try:
+        return reader.parquet(path)
+    finally:
+        if prev is None:
+            conf.unset(_SINK_LOG_IGNORED)
+        else:
+            conf.set(_SINK_LOG_IGNORED, prev)
+
+
 def _fs(spark: SparkSession, path: str, child: Optional[str] = None):
     """(Hadoop FileSystem, Path) for `path` (or its `child`)."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
@@ -309,8 +332,9 @@ def read_cell_partitioned(spark: SparkSession, path: str,
         xs = ",".join(map(str, range(rx0, rx1 + 1)))
         ys = ",".join(map(str, range(ry0, ry1 + 1)))
         try:
-            df = (_reader(spark, meta).option("basePath", path)
-                  .parquet(f"{path}/cell_x={{{xs}}}/cell_y={{{ys}}}"))
+            df = read_batch_parquet(
+                spark, _reader(spark, meta).option("basePath", path),
+                f"{path}/cell_x={{{xs}}}/cell_y={{{ys}}}")
         except AnalysisException as e:
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise

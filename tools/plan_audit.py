@@ -138,29 +138,49 @@ def main():
         f"Filter and Project. MapInPandas count: {n_py}.\n\n```\n"
         + p_wb[:2500] + "\n```\n")
 
-    # 4. pyramid plan: count the exchanges (expect exactly 2 repartitions)
+    # 4. pyramid plan: covered rows are exchanged once by metatile and
+    # rendered in one Python pass; a mixed (salted) range adds the
+    # assemble exchange. The source carries its bbox columns (staged to
+    # parquet), so nothing below the render exchange runs Python.
+    import tempfile
     from tileigi_spark.config import Layer, Layers
     from tileigi_spark.engine import build_tiles
-    feats = em._point_features(spark, SF)
+    staged = os.path.join(tempfile.mkdtemp(prefix="plan_feats_"), "f")
+    with_bbox(em._point_features(spark, SF)).write.parquet(staged)
+    feats = spark.read.parquet(staged)
     layers = Layers(layers=[Layer(id="docs", source="docs", minzoom=0,
                                   maxzoom=14, buffer=2)], global_maxzoom=14)
-    tiles = build_tiles(spark, {"docs": feats}, layers, 0, 3)
-    p = plan_of(tiles)
-    n_exch = p.count("Exchange hashpartitioning")
-    checks.append(("mvt pyramid", "exactly 2 hash exchanges", n_exch == 2))
-    checks.append(("mvt pyramid", "free of ArrowEvalPython (bbox decode "
-                   "is a single mapInPandas, not a doubled pandas_udf)",
-                   "ArrowEvalPython" not in p))
+    p = ""
+    for name, (minz, maxz), n_want in (("mixed z0-3", (0, 3), 2),
+                                       ("salt-free z5-6", (5, 6), 1)):
+        p = plan_of(build_tiles(spark, {"docs": feats}, layers, minz, maxz))
+        lines = p.splitlines()
+        deepest = max(i for i, ln in enumerate(lines)
+                      if "Exchange hashpartitioning" in ln)
+        below = "\n".join(lines[deepest + 1:])
+        checks.append((f"mvt pyramid {name}",
+                       f"exactly {n_want} hash exchange(s)",
+                       p.count("Exchange hashpartitioning") == n_want))
+        checks.append((f"mvt pyramid {name}",
+                       f"exactly {n_want} MapInPandas (render"
+                       + (" + assemble)" if n_want == 2 else ")"),
+                       p.count("MapInPandas") == n_want))
+        checks.append((f"mvt pyramid {name}",
+                       "no Python node below the render exchange",
+                       "Python" not in below and "MapInPandas" not in below))
+        checks.append((f"mvt pyramid {name}", "free of ArrowEvalPython",
+                       "ArrowEvalPython" not in p))
     sections.append(
-        "## mvt pyramid (two shuffles total)\n\n"
-        f"Exchange hashpartitioning count: {n_exch} (cover fan-out is "
-        "narrow arithmetic; the only shuffles are the salted encode and "
-        "the tile assembly).\n\n```\n" + p[:4000] + "\n```\n")
+        "## mvt pyramid (one render exchange of covered rows)\n\n"
+        "The cover fan-out is narrow arithmetic; covered rows are "
+        "exchanged once on (zoom, mtx, mty, salt) and one mapInPandas "
+        "runs geometry, encode and (on salt-free ranges) assembly; a "
+        "mixed range adds the tile-assembly exchange. Salt-free plan:"
+        "\n\n```\n" + p[:4000] + "\n```\n")
 
     # 5. cell-partitioned layout read (partition.py / S12): partition
     # pruning reaches the scan, and the exactly-once survivor rule is
     # pure codegen (no Python nodes anywhere in the read)
-    import tempfile
     from tileigi_spark.mercator import MERC_MAX
     from tileigi_spark.partition import (read_cell_partitioned,
                                          write_cell_partitioned)
