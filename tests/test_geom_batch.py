@@ -16,12 +16,21 @@ import pytest
 
 from tileigi_spark.geom.batch import process_general, _scalar_chain, \
     _rdp_keep
-from tileigi_spark.geom.wkb import geom_to_wkb, wkb_to_geom
+from tileigi_spark.geom.wkb import geom_to_wkb, wkb_to_geom, write_ragged
 from tileigi_spark.geom.remap import remap_geometry
 from tileigi_spark.geom.simplify import _rdp
 from tileigi_spark.mercator import MERC_MAX
 
 WORLD = 2.0 * MERC_MAX
+
+
+def with_wkb(res):
+    """process_general's (frame, Ragged) as one frame with the pieces'
+    WKB in a geom column, as engine.geometry_stage emits them."""
+    if res is None:
+        return None
+    frame, rag = res
+    return frame.assign(geom=write_ragged(rag))
 
 
 def scalar_reference(pdf, prop_names, buffer_units, metatile_scale,
@@ -62,8 +71,8 @@ def run_both(records, prop_names=("tag",), buffer_units=32,
     pdf = pd.DataFrame(records)
     ref = scalar_reference(pdf, list(prop_names), buffer_units,
                            metatile_scale, global_maxzoom, epsilon)
-    got = process_general(pdf, list(prop_names), buffer_units,
-                          metatile_scale, global_maxzoom, epsilon)
+    got = with_wkb(process_general(pdf, list(prop_names), buffer_units,
+                                   metatile_scale, global_maxzoom, epsilon))
     got_rows = [] if got is None else [
         (int(r.zoom), int(r.x), int(r.y), int(r.feature_id),
          bytes(r.geom)) for r in got.itertuples()]
@@ -179,8 +188,8 @@ class TestBatchParityTargeted:
 
     def test_props_carried(self):
         pdf = pd.DataFrame([rec(("Polygon", [ring(0, 0, 4e6, 8)]))])
-        out = process_general(pdf, ["tag"], 32, 8, 14, 8)
-        assert out is not None and set(out["tag"]) == {"t0"}
+        out, rag = process_general(pdf, ["tag"], 32, 8, 14, 8)
+        assert set(out["tag"]) == {"t0"} and len(rag.code) == len(out)
 
 
 def make_rand_geom(rng):
@@ -193,7 +202,7 @@ def make_rand_geom(rng):
     def rand_geom():
         kind = rng.choice(["ls", "poly", "mls", "mp", "concave",
                            "grid", "hole", "closedls", "star",
-                           "dupheavy", "weird", "pinch"])
+                           "dupheavy", "weird", "pinch", "spiky"])
         cx = rng.uniform(-MERC_MAX, MERC_MAX)
         cy = rng.uniform(-MERC_MAX, MERC_MAX)
         s = rng.uniform(1e2, 2e7)
@@ -257,6 +266,21 @@ def make_rand_geom(rng):
                    cy + s * math.sin(4 * math.pi * k / npts))
                   for k in range(npts)]
             r_.append(r_[0])
+            return ("Polygon", [r_])
+        if kind == "spiky":
+            # a long star ring, radius alternating s / inner*s: its
+            # teeth collapse and touch once remapped, so its pieces fail
+            # the certificate and take the scalar make_valid
+            npts = rng.randint(40, 300)
+            inner = rng.uniform(0.5, 0.95)
+            r_ = [(cx + s * (inner if k % 2 else 1.0)
+                   * math.cos(2 * math.pi * k / npts),
+                   cy + s * (inner if k % 2 else 1.0)
+                   * math.sin(2 * math.pi * k / npts))
+                  for k in range(npts)]
+            r_.append(r_[0])
+            if rng.random() < 0.5:
+                r_ = r_[::-1]
             return ("Polygon", [r_])
         if kind == "hole":
             npts = rng.randint(4, 10)
@@ -460,7 +484,7 @@ class TestChunkedBatches:
         def rows(df):
             return sorted((int(r.zoom), int(r.x), int(r.y),
                            int(r.feature_id), bytes(r.geom), r.tag)
-                          for r in df.itertuples())
+                          for r in with_wkb(df).itertuples())
 
         assert rows(whole) == rows(chunked)
 
@@ -476,7 +500,7 @@ class TestChunkedBatches:
         def rows(df):
             return sorted((int(r.zoom), int(r.x), int(r.y),
                            int(r.feature_id), bytes(r.geom), r.tag)
-                          for r in df.itertuples())
+                          for r in with_wkb(df).itertuples())
 
         assert rows(chunked) == rows(scalar)
 
@@ -550,8 +574,10 @@ class TestPinchedRingRepair:
 
 
 class TestBlockedIntersectionScreen:
-    """Rings above _VEC_SEG_CAP segments take the O(m)-memory blocked
-    pair walk; its classification must match the all-pairs path."""
+    """The certificate tests only the segment pairs whose bboxes overlap
+    (validity.segment_pairs, in blocks of at most _PAIR_BLOCK
+    candidates); its classification must match an all-pairs walk at any
+    block size."""
 
     def _recs(self):
         recs = [rec(("Polygon", [ring(0, 0, 3e6, 24,
@@ -566,22 +592,24 @@ class TestBlockedIntersectionScreen:
 
     def test_blocked_equals_allpairs(self, monkeypatch):
         import tileigi_spark.geom.batch as B
+        import tileigi_spark.geom.validity as V
         pdf = pd.DataFrame(self._recs())
         args = (["tag"], 32, 8, 14, 8)
         whole = B.process_general(pdf, *args)
-        monkeypatch.setattr(B, "_VEC_SEG_CAP", 4)  # force blocked walk
+        monkeypatch.setattr(V, "_PAIR_BLOCK", 4)  # many small blocks
         blocked = B.process_general(pdf, *args)
 
         def rows(df):
             return sorted((int(r.zoom), int(r.x), int(r.y),
                            int(r.feature_id), bytes(r.geom))
-                          for r in df.itertuples())
+                          for r in with_wkb(df).itertuples())
 
         assert rows(whole) == rows(blocked) and len(rows(whole)) > 0
 
     def test_flags_equal_on_random_rings(self, monkeypatch):
         import numpy as np
         import tileigi_spark.geom.batch as B
+        import tileigi_spark.geom.validity as V
         rng = random.Random(11)
         us, vs, off = [], [], [0]
         for i in range(30):
@@ -601,14 +629,17 @@ class TestBlockedIntersectionScreen:
         v = np.asarray(vs)
         offa = np.asarray(off, dtype=np.int64)
         check = np.ones(len(offa) - 1, dtype=bool)
-        allpairs = B._self_intersection_flags(u, v, offa, check)
-        monkeypatch.setattr(B, "_VEC_SEG_CAP", 3)
+        # the oracle: every segment pair of every ring
+        allpairs = np.zeros(len(offa) - 1, dtype=bool)
+        for r in range(len(offa) - 1):
+            pi, pj = np.triu_indices(int(offa[r + 1] - offa[r]) - 1, k=1)
+            a, b = pi + offa[r], pj + offa[r]
+            allpairs[r] = B._seg_pairs_bad(u[a], v[a], u[a + 1], v[a + 1],
+                                           u[b], v[b], u[b + 1],
+                                           v[b + 1]).any()
+        assert allpairs.any() and not allpairs.all()
+        swept = B._self_intersection_flags(u, v, offa, check)
+        assert (allpairs == swept).all()
+        monkeypatch.setattr(V, "_PAIR_BLOCK", 3)
         blocked = B._self_intersection_flags(u, v, offa, check)
         assert (allpairs == blocked).all()
-        assert allpairs.any() and not allpairs.all()
-        # chunk-level pair budget: forcing a flush after nearly every
-        # ring must not change any flag
-        monkeypatch.setattr(B, "_VEC_SEG_CAP", 1024)
-        monkeypatch.setattr(B, "_PAIR_BUDGET", 8)
-        budgeted = B._self_intersection_flags(u, v, offa, check)
-        assert (allpairs == budgeted).all()

@@ -218,8 +218,7 @@ class TestMvt:
 
 class TestCohenSutherland:
     """Ports of clip/cohen_sutherland.rs:85-114 (the reference keeps
-    this operator written-but-unused; parity maintained the same way)
-    plus randomized scalar-vs-batch agreement."""
+    this operator written-but-unused; parity maintained the same way)."""
 
     BB = (0.0, 0.0, 4096.0, 4096.0)
 
@@ -245,24 +244,3 @@ class TestCohenSutherland:
         got = cs((-7, 3), (9, 10), 0, 0, 4096, 4096)
         # crossing x=0: y = 3 + tdiv(7 * 7, 16) = 3 + 3
         assert got == ((0, 6), (9, 10))
-
-    def test_batch_matches_scalar(self):
-        import numpy as np
-
-        from tileigi_spark.geom.clip import (cohen_sutherland_clip,
-                                             cohen_sutherland_clip_batch)
-
-        rng = np.random.default_rng(77)
-        n = 4000
-        pts = rng.uniform(-2000, 6000, size=(n, 4))
-        bx = (0.0, 0.0, 4096.0, 4096.0)
-        cx0, cy0, cx1, cy1, acc = cohen_sutherland_clip_batch(
-            pts[:, 0], pts[:, 1], pts[:, 2], pts[:, 3], *bx)
-        for i in range(n):
-            exp = cohen_sutherland_clip(
-                (pts[i, 0], pts[i, 1]), (pts[i, 2], pts[i, 3]), *bx)
-            if exp is None:
-                assert not acc[i], i
-            else:
-                assert acc[i], i
-                assert exp == ((cx0[i], cy0[i]), (cx1[i], cy1[i])), i

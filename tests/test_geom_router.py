@@ -12,7 +12,7 @@ import pytest
 
 import tileigi_spark.geom.batch as B
 from tileigi_spark import engine
-from tileigi_spark.geom.wkb import geom_to_wkb, read_ragged
+from tileigi_spark.geom.wkb import geom_to_wkb, read_ragged, write_ragged
 from tileigi_spark.mercator import MERC_MAX
 
 WORLD = 2.0 * MERC_MAX
@@ -128,10 +128,15 @@ def _batch(zooms=(0, 3, 8)):
     return pd.DataFrame(rows)
 
 
-def _rows(df):
-    return [] if df is None else sorted(
-        (int(r.zoom), int(r.x), int(r.y), int(r.feature_id),
-         bytes(r.geom), r.kind) for r in df.itertuples(index=False))
+def _rows(res):
+    """process_general's (frame, Ragged) as sorted rows with the
+    pieces' WKB."""
+    if res is None:
+        return []
+    df, rag = res
+    return sorted(zip(df["zoom"].tolist(), df["x"].tolist(),
+                      df["y"].tolist(), df["feature_id"].tolist(),
+                      write_ragged(rag), df["kind"].tolist()))
 
 
 def _scalar(pdf, monkeypatch, *args):

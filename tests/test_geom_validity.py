@@ -574,3 +574,89 @@ class TestAxisRectFastPath:
             slow = (validity.make_valid(g),
                     validity.has_self_intersections(g[1][0]))
             assert fast[i] == slow, (i, cases[i], fast[i], slow)
+
+
+# ------------------------------------------------- segment pair sweep
+
+def _all_pairs(pts):
+    """The reference's all-pairs walk (validity.rs:187-219, 606-749):
+    every (i, j), i < j, whose segment bboxes are not disjoint, in loop
+    order — the oracle of validity._bbox_pairs."""
+    out = []
+    for i in range(len(pts) - 1):
+        (x1, y1), (x2, y2) = pts[i], pts[i + 1]
+        for j in range(i + 1, len(pts) - 1):
+            (x3, y3), (x4, y4) = pts[j], pts[j + 1]
+            if (max(x1, x2) < min(x3, x4) or min(x1, x2) > max(x3, x4)
+                    or max(y1, y2) < min(y3, y4)
+                    or min(y1, y2) > max(y3, y4)):
+                continue
+            out.append((i, j))
+    return out
+
+
+def _star(n, r0, r1, c=2048, rot=0.0):
+    """A closed star ring of n vertices, radius alternating r0/r1, in
+    integer tile coordinates."""
+    import math
+    pts = [(round(c + (r0 if k % 2 == 0 else r1)
+                  * math.cos(2 * math.pi * k / n + rot)),
+            round(c + (r0 if k % 2 == 0 else r1)
+                  * math.sin(2 * math.pi * k / n + rot)))
+           for k in range(n)]
+    return pts + [pts[0]]
+
+
+def _rand_ring(rng, n, span):
+    pts = [(rng.randint(-span, span), rng.randint(-span, span))
+           for _ in range(n)]
+    return pts + [pts[0]]
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_bbox_pairs_match_the_all_pairs_walk(seed):
+    """Same pairs in the same (i, j) order, below and above the sweep's
+    size cut, on random rings (many overlaps, collinear and repeated
+    vertices on a small grid) and spiky stars (few overlaps)."""
+    import random
+
+    from tileigi_spark.geom import validity as V
+
+    rng = random.Random(seed)
+    rings = [_rand_ring(rng, n, span) for n in (2, 3, 9, 33, 34, 120, 400)
+             for span in (3, 50, 4000)]
+    rings += [_star(n, rng.randint(100, 2000), rng.randint(50, 1900),
+                    rot=rng.random()) for n in (8, 40, 300, 1000)]
+    for pts in rings:
+        assert V._bbox_pairs(pts) == _all_pairs(pts), len(pts)
+
+
+def test_bbox_pair_blocks_keep_the_order(monkeypatch):
+    from tileigi_spark.geom import validity as V
+
+    pts = _star(600, 2000, 1990)
+    want = _all_pairs(pts)
+    monkeypatch.setattr(V, "_PAIR_BLOCK", 7)
+    assert V._bbox_pairs(pts) == want
+
+
+def test_spiky_star_visits_only_overlapping_pairs(monkeypatch):
+    """A 2k-vertex star (radius alternating 2000/1800 tile units) is
+    simple: has_self_intersections and one add_points_for_all_crossings
+    pass each test only the segment pairs whose bboxes meet (~14 per
+    segment: a tooth's bbox spans its neighbours'), not the ~2M pairs
+    of the ring, which the sweep no longer walks in Python either."""
+    from tileigi_spark.geom import validity as V
+
+    calls = []
+    real = V.intersection
+
+    def counting(*a):
+        calls.append(a)
+        return real(*a)
+
+    monkeypatch.setattr(V, "intersection", counting)
+    pts = _star(2000, 2000, 1800)
+    assert not V.has_self_intersections(pts)
+    assert V.add_points_for_all_crossings(pts) == pts
+    assert len(calls) == 2 * len(_all_pairs(pts)) < 2 * 20 * len(pts)

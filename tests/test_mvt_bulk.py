@@ -435,4 +435,4 @@ def test_multipoint_row_inside_a_framed_run(monkeypatch, caplog):
     rec, = caplog.records
     assert rec.name == "tileigi_spark.engine"
     assert "1 of 9 rows encoded one at a time" in rec.getMessage()
-    assert "unread WKB, code 0: 1" in rec.getMessage()
+    assert "code 0: 1;" in rec.getMessage()

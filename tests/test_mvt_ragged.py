@@ -56,7 +56,7 @@ def parse_run(geoms):
     gtype = int(rag.code[0])
     if gtype not in (2, 3) or not (rag.code == gtype).all():
         return None
-    return (*rag.take(np.arange(len(geoms))), gtype)
+    return (rag.xs, rag.ys, rag.ring_off, rag.row_off, gtype)
 
 
 def perrow(wkbs, props_list, ptypes):
@@ -447,3 +447,80 @@ def test_oversized_row_is_the_only_row_encoded_alone(monkeypatch, caplog,
     assert rec.getMessage().startswith("encode fallback: 1 of ")
     assert rec.getMessage().endswith("framer width bound: 1)")
     assert got == expected
+
+
+# ------------------------------------ render-path fallback to per-row
+
+def _merc(z, tx, ty, pts):
+    """Tile (tx, ty) local coordinates at zoom z -> EPSG:3857."""
+    from tileigi_spark.mercator import MERC_MAX
+
+    n = 4096 << z
+    return [((tx * 4096 + u) / n * 2 * MERC_MAX - MERC_MAX,
+             MERC_MAX - (ty * 4096 + v) / n * 2 * MERC_MAX) for u, v in pts]
+
+
+def _fallback_messages(spark):
+    return [r["msg"] for r in spark.tvf.python_worker_logs()
+            .filter("msg LIKE 'encode fallback:%'").select("msg").collect()]
+
+
+@pytest.mark.parametrize("zoom", [14, 4], ids=["fused", "salted"])
+def test_render_fallback_rows_match_per_row_encoder(spark, zoom):
+    """build_tiles' render pass frames the lanes' Ragged as it is, so its
+    per-row fallback takes each row's geometry from that Ragged: a
+    MultiPoint (code 0 after mvt_rings) and a 3000-vertex polygon past
+    the framers' width bound are encoded one at a time, each counted in
+    an `encode fallback` line of the render worker's log, and the tile
+    equals a per-row LayerEncoder over the geometry stage's pieces."""
+    from tileigi_spark import engine
+    from tileigi_spark.config import Layer, Layers
+    from tileigi_spark.geom.wkb import geom_to_wkb
+
+    tx, ty = 8800 >> (14 - zoom), 5373 >> (14 - zoom)
+    k = 3000
+    star = [(2048 + round((1900 if j % 2 else 1700)
+                          * np.cos(2 * np.pi * j / k)),
+             2048 + round((1900 if j % 2 else 1700)
+                          * np.sin(2 * np.pi * j / k))) for j in range(k)]
+    geoms = [("Point", (900, 700)),
+             ("MultiPoint", [(100, 100), (300, 200)]),
+             ("Polygon", [star + star[:1]])]
+    src = spark.createDataFrame(
+        [(fid, bytearray(geom_to_wkb(
+            (typ, _merc(zoom, tx, ty, [data])[0] if typ == "Point"
+             else _merc(zoom, tx, ty, data) if typ == "MultiPoint"
+             else [_merc(zoom, tx, ty, r) for r in data]))), f"n{fid}")
+         for fid, (typ, data) in enumerate(geoms)],
+        "feature_id long, way binary, name string")
+    layers = Layers(layers=[Layer(id="l", source="s", minzoom=zoom,
+                                  maxzoom=zoom, buffer=2)],
+                    global_minzoom=zoom, global_maxzoom=zoom)
+
+    covered = engine.cover_metatiles(engine.with_bbox(src), [zoom], 2)
+    enc = {}
+    for r in sorted(engine.geometry_stage(covered, "l", 2, zoom).collect(),
+                    key=lambda r: r["feature_id"]):
+        enc.setdefault((r["zoom"], r["x"], r["y"]), mvt.LayerEncoder("l")) \
+            .add_feature(_int_geom(wkb_to_geom(bytes(r["geom"]))),
+                         {"name": r["name"]})
+    want = {key: mvt.encode_tile([e.to_bytes()], compress=False)
+            for key, e in enc.items()}
+    assert list(want) == [(zoom, tx, ty)]
+
+    spark.conf.set("spark.sql.pyspark.worker.logging.enabled", "true")
+    try:
+        before = _fallback_messages(spark)
+        got = {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
+               for r in engine.build_tiles(spark, {"s": src}, layers, zoom,
+                                           zoom, compress=False).collect()}
+        logged = _fallback_messages(spark)
+    finally:
+        spark.conf.unset("spark.sql.pyspark.worker.logging.enabled")
+    assert got == want
+    for m in before:
+        logged.remove(m)
+    counts = np.array([[int(m.split("code 0: ")[1].split(";")[0]),
+                        int(m.split("width bound: ")[1].rstrip(")"))]
+                       for m in logged])
+    assert counts.sum(axis=0).tolist() == [1, 1], logged

@@ -5,7 +5,7 @@ duplication and buffered fan-out."""
 import pytest
 
 from tileigi_spark import engine as eng
-from tileigi_spark.geom.wkb import geom_to_wkb
+from tileigi_spark.geom.wkb import geom_to_wkb, write_ragged
 from tileigi_spark.mercator import MERC_MAX
 
 WORLD = 2.0 * MERC_MAX
@@ -57,11 +57,11 @@ def test_fast_slow_parity(spark, buffer_px, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_FORCE_SCALAR_GEOM", "1")
     monkeypatch.setattr(B, "_points_lane", None)  # must not be reached
     pdf = covered.drop("xmin", "ymin", "xmax", "ymax").toPandas()
-    slow_df = B.process_general(pdf, ["name"], buffer_px * 16, 8, 14, 8)
+    slow_df, rag = B.process_general(pdf, ["name"], buffer_px * 16, 8, 14,
+                                     8)
     slow = sorted(
-        (int(r.zoom), int(r.x), int(r.y), int(r.feature_id), bytes(r.geom),
-         r.name)
-        for r in slow_df.itertuples(index=False))
+        (int(r.zoom), int(r.x), int(r.y), int(r.feature_id), w, r.name)
+        for r, w in zip(slow_df.itertuples(index=False), write_ragged(rag)))
 
     assert len(fast) > 0
     assert fast == slow

@@ -14,7 +14,7 @@ from tileigi_spark.geom.clip import clip_geometry_to_tiles, clip_to_bbox
 from tileigi_spark.geom.simplify import remove_unneeded_points, simplify
 from tileigi_spark.geom.validity import (ensure_polygon_orientation,
                                          is_valid, make_valid)
-from tileigi_spark.geom.wkb import geom_to_wkb, wkb_to_geom
+from tileigi_spark.geom.wkb import geom_to_wkb, wkb_to_geom, write_ragged
 
 
 def scalar_pieces(row, buffer_units, metatile_scale, global_maxzoom):
@@ -69,13 +69,14 @@ def run_parity(rows, buffer_units, metatile_scale=8, global_maxzoom=14):
                                       "feature_id", "kind"])
     is_r5 = pdf["way"].map(_is_ring5_polygon_wkb)
     assert is_r5.all(), "test rows must all be ring5 candidates"
-    frame, leftover = _rects_fast_path(pdf, ["kind"], buffer_units,
-                                       metatile_scale, global_maxzoom)
+    res, leftover = _rects_fast_path(pdf, ["kind"], buffer_units,
+                                     metatile_scale, global_maxzoom)
     got = set()
-    if frame is not None:
-        for r in frame.itertuples(index=False):
+    if res is not None:
+        frame, rag = res
+        for r, w in zip(frame.itertuples(index=False), write_ragged(rag)):
             got.add((int(r.zoom), int(r.x), int(r.y), int(r.feature_id),
-                     bytes(r.geom), r.kind))
+                     w, r.kind))
     # leftover rows (non-axis-rects) go scalar in the engine — here the
     # fixture only generates axis rects, so leftover must be empty
     assert len(leftover) == 0
@@ -248,14 +249,14 @@ def test_rect_chunked_equals_whole(monkeypatch):
         rows, columns=["way", "zoom", "mtx", "mty", "feature_id", "kind"])
 
     monkeypatch.setattr(B, "_CHUNK_FEATURES", 10 ** 9)
-    fw, lw = E._rects_fast_path(pdf, ["kind"], 32, 8, 14)
+    (fw, rw), lw = E._rects_fast_path(pdf, ["kind"], 32, 8, 14)
     monkeypatch.setattr(B, "_CHUNK_FEATURES", 23)
-    fc, lc = E._rects_fast_path(pdf, ["kind"], 32, 8, 14)
+    (fc, rc), lc = E._rects_fast_path(pdf, ["kind"], 32, 8, 14)
 
     assert len(fw) == len(fc)
     for col in ("zoom", "x", "y", "feature_id", "kind"):
         assert fw[col].reset_index(drop=True).equals(
             fc[col].reset_index(drop=True)), col
-    assert all(bytes(a) == bytes(b) for a, b in zip(fw["geom"], fc["geom"]))
+    assert write_ragged(rw) == write_ragged(rc)
     assert list(lw.index) == list(lc.index)
     assert len(lc) == len([r for r in rows if r[4] % 17 == 0])

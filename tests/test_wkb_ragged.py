@@ -1,7 +1,9 @@
 """wkb.read_ragged, the one vectorized WKB reader of the batch paths
 (geometry lane, encode walk, with_bbox), against the scalar reference
 wkb.wkb_to_geom: same coordinates for every row it reads, and code 0 for
-exactly the rows it must leave to wkb_to_geom."""
+exactly the rows it must leave to wkb_to_geom; and wkb.write_ragged, the
+one piece writer, against the scalar writer wkb.geom_to_wkb: every row
+read_ragged reads is written back to its own bytes."""
 
 import struct
 
@@ -13,7 +15,8 @@ from pyspark.sql.types import LongType, StringType
 from tileigi_spark import engine
 from tileigi_spark.engine import _collect_coords, _int_geom, _mvt_value
 from tileigi_spark.geom import mvt
-from tileigi_spark.geom.wkb import geom_to_wkb, read_ragged, wkb_to_geom
+from tileigi_spark.geom.wkb import geom_to_wkb, ragged_of, read_ragged, \
+    wkb_to_geom, write_ragged
 
 CODES = {"Point": 1, "LineString": 2, "Polygon": 3, "MultiPoint": 4,
          "MultiLineString": 5, "MultiPolygon": 6}
@@ -62,7 +65,8 @@ def rings_of(geom):
 def assert_row(rag, i, geom):
     typ = geom[0]
     assert rag.code[i] == CODES[typ]
-    xs, ys, ring_off, row_off = rag.take([i])
+    one = rag.take([i])
+    xs, ys, ring_off, row_off = one.xs, one.ys, one.ring_off, one.row_off
     want = rings_of(geom)
     assert len(row_off) == 2 and row_off[1] == len(want)
     r0 = rag.row_off[i]
@@ -92,6 +96,15 @@ def test_random_rows_match_scalar_reader():
     assert read > 400
     assert rag.row_off[-1] == len(rag.ring_int) == len(rag.ring_off) - 1
     assert rag.ring_off[-1] == len(rag.xs) == len(rag.ys)
+    # the writer round-trips every row read, and writes every geometry
+    # (MultiPoint and Multi-of-one twins included) as geom_to_wkb does
+    ways = [geom_to_wkb(g) for g in geoms]
+    read = np.flatnonzero(rag.code != 0)
+    assert write_ragged(rag.take(read)) == [ways[i] for i in read]
+    twins = [("MultiPolygon", [[SQ]]), ("MultiLineString", [SQ]),
+             ("MultiPoint", [(1.0, 2.0)])]
+    assert write_ragged(ragged_of(geoms + twins)) == \
+        ways + [geom_to_wkb(g) for g in twins]
 
 
 def test_fast_and_walked_rows_agree_in_one_batch():
@@ -108,9 +121,11 @@ def test_fast_and_walked_rows_agree_in_one_batch():
             geoms.append(("Polygon", [_pts(rng, 9), _pts(rng, 4)]))
         else:
             geoms.append(("MultiLineString", [_pts(rng, 3), _pts(rng, 2)]))
-    rag = read_ragged([geom_to_wkb(g) for g in geoms])
+    ways = [geom_to_wkb(g) for g in geoms]
+    rag = read_ragged(ways)
     for i, g in enumerate(geoms):
         assert_row(rag, i, g)
+    assert write_ragged(rag) == ways
 
 
 def _hdr(code, n):
@@ -185,6 +200,7 @@ def test_refuses(name):
     assert rag.row_off[1] == rag.row_off[2]
     assert_row(rag, 0, ("Polygon", [SQ]))
     assert_row(rag, 2, ("LineString", SQ[:2]))
+    assert write_ragged(rag.take([0, 2])) == [GOOD_POLY, GOOD_LINE]
 
 
 def test_refused_rows_are_scalar_readable_or_undecodable():
@@ -242,7 +258,10 @@ def test_bbox_arrays_match_per_row_decode():
     order = rng.permutation(len(ways))
     ways = [ways[i] for i in order]
     col = pd.Series(ways, dtype=object)
-    got = engine._bbox_arrays(col, read_ragged(col))
+    rag = read_ragged(col)
+    read = np.flatnonzero(rag.code != 0)  # NaN and 1-vertex rows too
+    assert write_ragged(rag.take(read)) == [ways[i] for i in read]
+    got = engine._bbox_arrays(col, rag)
     want = old_bbox(ways)
     for k in want:
         np.testing.assert_array_equal(got[k], want[k], err_msg=k)

@@ -62,7 +62,8 @@ from pyspark.sql.types import (
 from .config import Layers
 from .mercator import (MERC_MAX, bbox_metatile_range, bbox_tile_range,
                        cover_slack)
-from .geom.wkb import _cumsum0, _ranges, wkb_to_geom, read_ragged
+from .geom.wkb import _cumsum0, _ranges, concat_ragged, ragged_of, \
+    read_ragged, wkb_to_geom, write_ragged
 from .geom import mvt, ringbulk
 from .sqllit import double as _d
 
@@ -300,7 +301,8 @@ def _points_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
                       metatile_scale: int):
     """The points lane on its own, for the benchmark probes and tools
     that time it: pdf rows are simple points, which process_general
-    routes to its points kernel. Returns the pieces frame or None."""
+    routes to its points kernel. Returns what process_general
+    returns."""
     from .geom.batch import process_general
 
     return process_general(pdf, prop_names, buffer_units, metatile_scale,
@@ -380,7 +382,8 @@ def _rects_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
     """The rect lane on its own, for the benchmark probes and tests that
     time or pin it: the rows of pdf that process_general routes to its
     rect kernel (geom.batch.axis_rect_rows) are run through it; the
-    others are handed back. Returns (frame_or_None, leftover_pdf)."""
+    others are handed back. Returns (what process_general returns,
+    leftover_pdf)."""
     from .geom.batch import axis_rect_rows, process_general
 
     rect = np.zeros(len(pdf), dtype=bool)
@@ -398,14 +401,15 @@ def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
     Input: (zoom, mtx, mty, way, feature_id, props...).
     Output: (zoom, x, y, feature_id, geom, props...) — one row per
     (feature, tile) piece, geometry in tile-local i32 coords serialized as
-    WKB (exact: |coord| < 2^53).
+    WKB (exact: |coord| < 2^53) by wkb.write_ragged, the only place the
+    lanes' pieces are written as WKB.
 
     Not on build_tiles' path: the render pass calls process_general per
     frame of metatile runs inside its one mapInPandas
-    (_make_render_run). This stays the public piece-stream stage for the
-    tile_pieces_z3/poly_pieces_z2 oracles, the tests and tools that
-    take pieces as a DataFrame, and perfbench's tracer, which looks it
-    up by name."""
+    (_make_render_run) and frames the pieces' Ragged as it is. This
+    stays the public piece-stream stage for the tile_pieces_z3/
+    poly_pieces_z2 oracles, the tests and tools that take pieces as a
+    DataFrame, and perfbench's tracer, which looks it up by name."""
     # The bbox columns only feed the JVM cover arithmetic upstream; an
     # opaque mapInPandas ships every input column (Spark cannot see which
     # ones the function reads — guide §4 column-pruning point), so drop
@@ -437,9 +441,11 @@ def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
         from .geom.batch import process_general
 
         for pdf in iterator:
-            f = process_general(pdf, prop_names, buffer_units,
-                                metatile_scale, global_maxzoom, epsilon)
-            if f is not None:
+            res = process_general(pdf, prop_names, buffer_units,
+                                  metatile_scale, global_maxzoom, epsilon)
+            if res is not None:
+                f, rag = res
+                f.insert(4, "geom", write_ragged(rag))
                 yield f
 
     return covered.mapInPandas(run, schema=out_schema)
@@ -522,13 +528,13 @@ def _complete_runs(iterator, keys):
 def _walk_runs(iterator, keys, frame_fn):
     """Drive a sorted-stream walk that only ever handles complete runs
     (_complete_runs). frame_fn(frame) returns a dict of output column
-    lists, the first key column among them; the walk yields them as
-    DataFrames of >= 2000 rows and the rest at the end."""
+    lists, the first key column among them, or no columns; the walk
+    yields them as DataFrames of >= 2000 rows and the rest at the end."""
     out = {}
     for frame in _complete_runs(iterator, keys):
         for k, v in frame_fn(frame).items():
             out.setdefault(k, []).extend(v)
-        if len(out[keys[0]]) >= 2000:
+        if len(out.get(keys[0], ())) >= 2000:
             yield pd.DataFrame(out)
             out = {}
     if out:
@@ -618,31 +624,33 @@ def _intern_tags(pdf, rid, nruns, ly_codes, layer_props):
     return ki.reshape(n, P), vi.reshape(n, P), valid, keys, values
 
 
-def _frame_rows(geoms, ki, vi, valid):
-    """Every row's framed field-2 feature message, in row order: one
-    point framer call for the frame's points, one ragged framer call per
-    line or polygon family, and encode_feature for the rows the framers
-    cannot take — MultiPoint or unread WKB (code 0), and rows whose
-    vertex and ring counts could pass the framers' 2^14-byte feature
-    body bound. Returns (stream, (n + 1,) row byte offsets)."""
+def _frame_rows(rag, ki, vi, valid):
+    """Every row's framed field-2 feature message, in row order, from
+    the rows' geometry as a wkb.Ragged: one point framer call for the
+    frame's points, one ragged framer call per line or polygon family,
+    and encode_feature on Ragged.geom for the rows the framers cannot
+    take — MultiPoint and 1-point lines (code 0 after
+    ringbulk.mvt_rings), and rows whose vertex and ring counts could
+    pass the framers' 2^14-byte feature body bound. Returns (stream,
+    (n + 1,) row byte offsets)."""
     n, P = valid.shape
-    rag = ringbulk.mvt_rings(read_ragged(geoms))
-    nr = np.diff(rag.row_off)
-    unread = rag.code == 0
-    wide = ~unread & (6 * np.diff(rag.ring_off[rag.row_off]) + 5 * nr
+    mr = ringbulk.mvt_rings(rag)
+    nr = np.diff(mr.row_off)
+    unread = mr.code == 0
+    wide = ~unread & (6 * np.diff(mr.ring_off[mr.row_off]) + 5 * nr
                       + 4 * P + 7 >= 1 << 14)
     length = np.zeros(n, dtype=np.int64)
     framed = []
     for gtype in (1, 2, 3):
-        rows = np.flatnonzero((rag.code == gtype) & ~wide)
+        rows = np.flatnonzero((mr.code == gtype) & ~wide)
         if not len(rows):
             continue
-        xs, ys, ring_off, feat_off = rag.take(rows)
+        t = mr.take(rows)
         tags = [(ki[rows, j], vi[rows, j], valid[rows, j])
                 for j in range(P)]
-        res = (mvt.bulk_frame_point_features(xs, ys, tags) if gtype == 1
+        res = (mvt.bulk_frame_point_features(t.xs, t.ys, tags) if gtype == 1
                else ringbulk.bulk_frame_ragged_features(
-                   xs, ys, ring_off, feat_off, gtype, tags))
+                   t.xs, t.ys, t.ring_off, t.row_off, gtype, tags))
         if res is None:
             wide[rows] = True
         else:
@@ -652,15 +660,15 @@ def _frame_rows(geoms, ki, vi, valid):
     for i in single.tolist():
         tags = [t for j in np.flatnonzero(valid[i]).tolist()
                 for t in (int(ki[i, j]), int(vi[i, j]))]
-        f = mvt._len_delim(2, mvt.encode_feature(
-            _int_geom(wkb_to_geom(bytes(geoms[i]))), tags))
+        f = mvt._len_delim(2, mvt.encode_feature(_int_geom(rag.geom(i)),
+                                                 tags))
         length[i] = len(f)
         framed.append(([i], f))
     if len(single):
         _log.warning("encode fallback: %d of %d rows encoded one at a "
-                     "time (unread WKB, code 0: %d; framer width "
-                     "bound: %d)", len(single), n, int(unread.sum()),
-                     int(wide.sum()))
+                     "time (MultiPoint or 1-point line, code 0: %d; "
+                     "framer width bound: %d)", len(single), n,
+                     int(unread.sum()), int(wide.sum()))
     off = _cumsum0(length)
     out = np.empty(int(off[-1]), dtype=np.uint8)
     for rows, stream in framed:
@@ -669,21 +677,32 @@ def _frame_rows(geoms, ki, vi, valid):
     return out.tobytes(), off
 
 
-def _make_encode_run(prop_types: dict[str, dict], all_props):
-    """The sorted-stream partial-layer encode walk as a reusable
-    mapInPandas function (shared by the render pass, encode_layers and
-    encode_assemble_fused — the walk itself is salt-agnostic: salt is
-    just one more run-break column, constant 0 on salt-free zooms).
+def _read_pieces(geoms):
+    """A WKB piece column as one Ragged: read_ragged, with the rows it
+    refuses (MultiPoint, non-canonical WKB) decoded by wkb_to_geom into
+    their places."""
+    rag = read_ragged(geoms)
+    refused = np.flatnonzero(rag.code == 0)
+    if not len(refused):
+        return rag
+    rows = np.arange(len(geoms))
+    rows[refused] = len(geoms) + np.arange(len(refused))
+    return concat_ragged([rag, ragged_of(
+        [wkb_to_geom(bytes(geoms[i])) for i in refused.tolist()])]).take(rows)
 
-    The walk only handles complete runs (_walk_runs), so it carries no
-    encoder state across Arrow batches: it frames each frame's rows
-    once, interns the tags of every run at once and cuts one partial
-    layer message per (tile, salt, layer) run out of the stream by
-    offsets."""
+
+def _make_encoder(prop_types: dict[str, dict], all_props):
+    """The partial-layer encoder of one frame of complete (tile, salt,
+    layer) runs: encode(pdf, rag) returns the output columns, pdf being
+    the runs' rows and rag (a wkb.Ragged) their geometry, row for row.
+    Salt is just one more run-break column, constant 0 on salt-free
+    zooms. It frames the frame's rows once (_frame_rows), interns the
+    tags of every run at once and cuts one partial layer message per run
+    out of the stream by offsets."""
     props = set(all_props)
     ext = mvt._tag(5, 0) + mvt._varint(4096)
 
-    def encode(pdf):
+    def encode(pdf, rag):
         chg = _run_starts(pdf, _ENCODE_KEYS)
         starts = np.flatnonzero(chg)
         ly_codes, ly_uniq = pd.factorize(pdf["layer"])
@@ -691,7 +710,7 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
                         if p in props and p in pdf] for layer in ly_uniq]
         ki, vi, valid, (kblob, kcut), (vblob, vcut) = _intern_tags(
             pdf, np.cumsum(chg) - 1, len(starts), ly_codes, layer_props)
-        stream, off = _frame_rows(pdf["geom"].values, ki, vi, valid)
+        stream, off = _frame_rows(rag, ki, vi, valid)
         heads = [mvt._tag(15, 0) + mvt._varint(2)
                  + mvt._len_delim(1, layer.encode("utf-8"))
                  for layer in ly_uniq]
@@ -705,15 +724,26 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
                        for r, l in enumerate(lay.tolist())]
         return out
 
-    return lambda iterator: _walk_runs(iterator, _ENCODE_KEYS, encode)
+    return encode
+
+
+def _make_encode_run(prop_types: dict[str, dict], all_props):
+    """The sorted-stream partial-layer encode walk over WKB pieces
+    (encode_layers, perfbench's probe) as a mapInPandas function: each
+    frame of complete runs (_walk_runs) is read once (_read_pieces) and
+    encoded whole (_make_encoder), with no state across Arrow batches."""
+    encode = _make_encoder(prop_types, all_props)
+    return lambda iterator: _walk_runs(
+        iterator, _ENCODE_KEYS,
+        lambda pdf: encode(pdf, _read_pieces(pdf["geom"].values)))
 
 
 def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
                   salt_zoom_max: int = 4, n_salts: int = 16,
                   shuffle_parts: Optional[int] = None) -> DataFrame:
     """A1 over a piece stream: salted partial layer encode. Not on
-    build_tiles' path, whose render pass runs the same walk
-    (_make_encode_run) on each metatile frame's pieces without an
+    build_tiles' path, whose render pass runs the same encoder
+    (_make_encoder) on each metatile frame's pieces without an
     exchange of pieces; kept as the public piece-stream stage (tests,
     perfbench's tracer look it up by name). One shuffle: repartition by
     (zoom,x,y,salt) + sortWithinPartitions, then a mapInPandas pass that
@@ -726,13 +756,6 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
 
     pieces: unioned per-layer outputs of geometry_stage with layer /
     layer_order columns. prop_types: layer_id -> {col -> Spark type}.
-
-    The walk (_make_encode_run) frames each Arrow batch's complete runs
-    at once, for every layer, property set and shape: points with
-    mvt.bulk_frame_point_features, polygon- and linestring-family rows
-    with ringbulk.bulk_frame_ragged_features, and only the rows the
-    framers cannot take (MultiPoint or unread WKB, width bounds) one at
-    a time with mvt.encode_feature, logging each such frame.
 
     shuffle_parts: explicit partition count for the exchange, used as
     given (callers clamp it with _python_stage_parts: the walk is
@@ -760,15 +783,10 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
 _TILE_SCHEMA = "zoom int, x long, y long, tile binary, tile_md5 string"
 
 
-def _make_assemble_run(compress: bool = True):
-    """The sorted-partials tile-assembly walk (merge + gzip + md5) as a
-    reusable mapInPandas function — shared by the shuffled assemble and
-    the salt-free render pass (and encode_assemble_fused), where the
-    encode output is already tile-contiguous.
-    Like the encode walk it only handles complete runs (_walk_runs):
-    each frame of whole tiles merges every (layer_order, layer) run's
-    partials and zips each tile's layers, with no tile state carried
-    across Arrow batches."""
+def _make_assembler(compress: bool = True):
+    """The tile assembler of one frame of whole tiles' sorted partials:
+    assemble(pdf) merges every (layer_order, layer) run's partials, zips
+    each tile's layers (gzip + md5) and returns the output columns."""
 
     def assemble(pdf):
         tchg = _run_starts(pdf, _TILE_KEYS)
@@ -787,7 +805,15 @@ def _make_assemble_run(compress: bool = True):
         out["tile_md5"] = [hashlib.md5(t).hexdigest() for t in tiles]
         return out
 
-    return lambda iterator: _walk_runs(iterator, _TILE_KEYS, assemble)
+    return assemble
+
+
+def _make_assemble_run(compress: bool = True):
+    """The sorted-partials tile-assembly walk (assemble_tiles) as a
+    mapInPandas function: _make_assembler on each frame of whole tiles
+    (_walk_runs)."""
+    return lambda iterator: _walk_runs(iterator, _TILE_KEYS,
+                                       _make_assembler(compress))
 
 
 def assemble_tiles(partials: DataFrame, compress: bool = True,
@@ -816,23 +842,18 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
                           shuffle_parts: Optional[int] = None) -> DataFrame:
     """A1+A2 in ONE shuffle for salt-free piece streams (every zoom above
     salt_zoom_max — the overwhelming tile majority of a deep pyramid).
-    Not on build_tiles' path, whose render pass runs the same two walks
-    after the geometry in one pass over exchanged covered rows; kept as
-    the public piece-stream stage (tests, perfbench's tracer look it up
-    by name).
+    Not on build_tiles' path, whose render pass runs the same encoder
+    and assembler after the geometry in one pass over exchanged covered
+    rows; kept as the public piece-stream stage (tests, perfbench's
+    tracer look it up by name).
 
-    With salt constant 0, repartitioning by (zoom, x, y) already lands
-    every piece of a tile in one partition, so the partial-layer encode
-    walk emits exactly one partial per (tile, layer) — and those partial
-    rows leave the encode mapInPandas already tile-contiguous in the
-    canonical order the assembly walk needs. The second exchange + sort
-    of the two-shuffle path exists only to regroup SALTED partials; here
-    it is the identity, so the assembly walk runs on the encode walk's
-    output frames in the same Python pass (one mapInPandas, one worker
-    per task, no partials round trip through the JVM; guide §2.4:
-    remove shuffles outright). Bytes are identical to the salted path's:
-    one partial per layer merges as the identity, and the per-tile
-    feature order (layer_order, feature_id) is unchanged."""
+    With salt constant 0, repartitioning by (zoom, x, y) lands every
+    piece of a tile in one partition, so one walk over frames of whole
+    tiles encodes (one partial per (tile, layer)) and assembles each
+    frame in the same Python pass; the salted path's second exchange
+    would be the identity. Bytes are identical to the salted path's: one
+    partial per layer merges as the identity, and the per-tile feature
+    order (layer_order, feature_id) is unchanged."""
     salted = pieces.withColumn("salt", F.lit(0))
     if shuffle_parts is None:
         ordered = salted.repartition("zoom", "x", "y")
@@ -841,10 +862,12 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
     ordered = ordered.sortWithinPartitions("zoom", "x", "y",
                                            "layer_order", "feature_id")
     all_props = sorted({p for d in prop_types.values() for p in d})
-    encode = _make_encode_run(prop_types, all_props)
-    assemble = _make_assemble_run(compress)
-    return ordered.mapInPandas(lambda it: assemble(encode(it)),
-                               schema=_TILE_SCHEMA)
+    encode = _make_encoder(prop_types, all_props)
+    assemble = _make_assembler(compress)
+    return ordered.mapInPandas(
+        lambda it: _walk_runs(it, _TILE_KEYS, lambda pdf: assemble(
+            pd.DataFrame(encode(pdf, _read_pieces(pdf["geom"].values))))),
+        schema=_TILE_SCHEMA)
 
 
 # the render exchange's key: every tile lies inside one metatile, and a
@@ -880,13 +903,15 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
     """The render pass as one mapInPandas function, over covered rows
     sorted by (zoom, mtx, mty, salt, layer_order, feature_id).
 
-    Each frame of complete metatile runs (_complete_runs) goes through
+    One walk (_walk_runs) hands it frames of complete metatile runs, and
+    each frame holds whole tiles, so it is rendered on its own:
     geom.batch.process_general once per layer (layer_specs: (layer_order,
-    layer id, buffer units) per layer), its pieces are stable-sorted into
-    the canonical piece order and fed to the encode walk; with `fuse`
-    (salt-free zooms only) the assemble walk runs on its output in the
-    same pass, otherwise the pass emits partials. `carry` names the
-    columns every piece keeps (salt and the property columns).
+    layer id, buffer units) per layer), the pieces and their Ragged
+    stable-sorted into the canonical piece order (Ragged.take), the
+    encoder on them and, with `fuse` (salt-free zooms only), the
+    assembler on its partials; otherwise the pass emits partials. No
+    piece is written as WKB. `carry` names the columns every piece keeps
+    (salt and the property columns).
 
     Rows with layer_order -1 are done markers: one per finished (zoom, x,
     y) tile, keyed by its metatile and salt, so they land in the frame of
@@ -898,46 +923,46 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
     names = np.empty(1 + max(o for o, _, _ in layer_specs), dtype=object)
     for order, layer_id, _ in layer_specs:
         names[order] = layer_id
-    encode = _make_encode_run(prop_types,
-                              sorted({p for d in prop_types.values()
-                                      for p in d}))
-    assemble = _make_assemble_run(compress) if fuse else None
+    encode = _make_encoder(prop_types, sorted({p for d in prop_types.values()
+                                              for p in d}))
+    assemble = _make_assembler(compress)
 
-    def pieces(iterator):
-        for pdf in _complete_runs(iterator, _METATILE_KEYS):
-            lo = pdf["layer_order"].to_numpy()
-            marks = pdf[lo < 0]
-            if len(marks):
-                finished = _finished_runs(marks, metatile_scale, tile_ranges)
-                if len(finished):
-                    lo = np.where(pd.MultiIndex.from_arrays(
-                        [pdf[k].to_numpy(np.int64) for k in _METATILE_KEYS])
-                        .isin(finished), -1, lo)
-            frames = []
-            for order, _, buffer_units in layer_specs:
-                rows = pdf[lo == order]
-                f = (process_general(rows, carry, buffer_units,
-                                     metatile_scale, global_maxzoom, 8)
-                     if len(rows) else None)
-                if f is not None:
-                    frames.append(f.assign(layer_order=order))
-            if not frames:
-                continue
-            f = pd.concat(frames, ignore_index=True)
-            if len(marks):
-                done = pd.MultiIndex.from_arrays(
-                    [marks[k].to_numpy(np.int64) for k in _TILE_KEYS])
-                f = f[~pd.MultiIndex.from_arrays(
-                    [f[k].to_numpy(np.int64) for k in _TILE_KEYS])
-                    .isin(done)]
-            f = f.iloc[np.lexsort([f[k].to_numpy()
-                                   for k in reversed(_PIECE_ORDER)])]
-            if len(f):
-                yield f.assign(layer=names[f["layer_order"].to_numpy()])
+    def render(pdf):
+        lo = pdf["layer_order"].to_numpy()
+        marks = pdf[lo < 0]
+        if len(marks):
+            finished = _finished_runs(marks, metatile_scale, tile_ranges)
+            if len(finished):
+                lo = np.where(pd.MultiIndex.from_arrays(
+                    [pdf[k].to_numpy(np.int64) for k in _METATILE_KEYS])
+                    .isin(finished), -1, lo)
+        frames, rags = [], []
+        for order, _, buffer_units in layer_specs:
+            rows = pdf[lo == order]
+            res = (process_general(rows, carry, buffer_units,
+                                   metatile_scale, global_maxzoom, 8)
+                   if len(rows) else None)
+            if res is not None:
+                frames.append(res[0].assign(layer_order=order))
+                rags.append(res[1])
+        if not frames:
+            return {}
+        f = pd.concat(frames, ignore_index=True)
+        at = np.lexsort([f[k].to_numpy() for k in reversed(_PIECE_ORDER)])
+        if len(marks):
+            done = pd.MultiIndex.from_arrays(
+                [marks[k].to_numpy(np.int64) for k in _TILE_KEYS])
+            at = at[~pd.MultiIndex.from_arrays(
+                [f[k].to_numpy(np.int64)[at] for k in _TILE_KEYS])
+                .isin(done)]
+        if not len(at):
+            return {}
+        f = f.iloc[at]
+        parts = encode(f.assign(layer=names[f["layer_order"].to_numpy()]),
+                       concat_ragged(rags).take(at))
+        return assemble(pd.DataFrame(parts)) if fuse else parts
 
-    if fuse:
-        return lambda iterator: assemble(encode(pieces(iterator)))
-    return lambda iterator: encode(pieces(iterator))
+    return lambda iterator: _walk_runs(iterator, _METATILE_KEYS, render)
 
 
 def empty_tile_bytes(layers: Layers, zoom: int, compress: bool = True) -> bytes:

@@ -10,8 +10,11 @@ frame once (remap.metatile_frame) and routes each row from the reader's
 arrays: simple points to the points kernel (_points_lane), axis rects
 to the rect kernel (rectfast.rect_lane), other line/polygon rows to the
 ragged lane below, and the rows the reader refuses to the scalar chain.
-Every lane hands back (row, tile x, tile y, WKB) per piece, and
-_Pieces.frame gathers the output columns once.
+Every lane hands back (row, tile x, tile y) per piece plus its pieces
+as a wkb.Ragged part (int64 tile-local vertices); _Pieces stacks the
+parts once and gathers the output columns once. No piece is written as
+WKB here: the render task frames the Ragged as it is, and
+engine.geometry_stage writes it with wkb.write_ragged.
 
 The ragged lane vectorizes the chain across a batch with numpy on flat
 ("ragged") coordinate arrays + ring offsets, dropping to the
@@ -43,17 +46,18 @@ actually change:
   clip/mod.rs:186-210).
 * quadtree slice (G11/J3) — per-feature tile window from the bbox
   ([t*4096-buf, (t+1)*4096+buf] per tile t, the closed-interval
-  collapse the points kernel uses, _tile_window): fan 1x1 => the recursive
+  collapse the points kernel uses, tile_window): fan 1x1 => the recursive
   slice provably emits exactly one uncut piece (at every bisection the
   geometry is wholly inside one branch's keep half-space and wholly
   outside the other's), so the piece IS the geometry; fan > 1 falls
   back to the recursive _slice_box.
 * make_valid / is_valid / orientation (G13-G16) — vectorized
   CERTIFICATE: the post-RDP despike/dup screen again (make_valid
-  re-runs remove_unneeded_points), an exact all-pairs segment test per
-  ring (the sd/td classification of validity.intersection without the
-  crossing-point math; parallel bbox-overlapping collinear pairs are
-  conservatively flagged), and the wrapped-i32 shoelace winding check
+  re-runs remove_unneeded_points), an exact segment test per ring on
+  the pairs whose bboxes overlap (validity.segment_pairs; the sd/td
+  classification of validity.intersection without the crossing-point
+  math; parallel bbox-overlapping collinear pairs are conservatively
+  flagged), and the wrapped-i32 shoelace winding check
   (strict CW exterior / CCW interior). Certificate-clean polygons are
   provably returned unchanged by make_valid (its is_valid early
   return) and by ensure_polygon_orientation; anything else falls back
@@ -74,22 +78,22 @@ mixed batch (parity is the correctness contract).
 from __future__ import annotations
 
 import os
-import struct
 
 import numpy as np
 import pandas as pd
 
-from .wkb import _cumsum0, _ranges, wkb_to_geom, geom_to_wkb, \
-    read_ragged
+from .wkb import Ragged, _cumsum0, _ranges, concat_ragged, ragged_of, \
+    read_ragged, wkb_to_geom
 from .remap import remap_geometry, shift_geom as _shift, metatile_frame, \
     remap_arrays, round_half_away
-from .rectfast import axis_rect, rect_lane, tile_pairs, wkb_rows
+from .rectfast import axis_rect, rect_lane, tile_pairs, tile_window
 from .simplify import remove_unneeded_points, simplify, \
     remove_duplicate_points
 from .clip import clip_to_bbox, clip_geometry_to_tiles, \
     _clip_ring_to_border, _clip_linestring_to_border, \
     XMIN, XMAX, YMIN, YMAX
-from .validity import make_valid, is_valid, ensure_polygon_orientation
+from .validity import make_valid, is_valid, ensure_polygon_orientation, \
+    segment_pairs
 
 # beyond this magnitude the int64 products in the despike/validity
 # screens could overflow; such features (world-spanning geometry deep in
@@ -101,24 +105,22 @@ _LINE, _POLY = 1, 2  # role codes per feature type
 _ROLE = np.array([0, 0, _LINE, _POLY, 0, _LINE, _POLY], dtype=np.int8)
 
 
+def _piece_code(is_line, multi):
+    """WKB type code of line- or polygon-family pieces."""
+    return np.where(is_line, np.where(multi, 5, 2),
+                    np.where(multi, 6, 3)).astype(np.uint8)
+
+
 # --------------------------------------------------------------- parsing
 
 def _lane_state(rag, rows):
     """Ragged state for the vector lane: rows `rows` (line- and
     polygon-family rows of a wkb.read_ragged batch) gathered into flat
     vertex arrays, their rings tagged with the batch row index."""
-    nr = rag.row_off[rows + 1] - rag.row_off[rows]
-    ring = _ranges(rag.row_off[rows], nr)
-    k = rag.ring_off[ring + 1] - rag.ring_off[ring]
-    pt = _ranges(rag.ring_off[ring], k)
-    return {
-        "px": rag.xs[pt],
-        "py": rag.ys[pt],
-        "off": _cumsum0(k),
-        "ring_feat": np.repeat(rows, nr),
-        "ring_int": rag.ring_int[ring],
-        "role": _ROLE[rag.code],
-    }
+    t = rag.take(rows)
+    return {"px": t.xs, "py": t.ys, "off": t.ring_off,
+            "ring_feat": np.repeat(rows, np.diff(t.row_off)),
+            "ring_int": t.ring_int, "role": _ROLE[rag.code]}
 
 
 # ------------------------------------------------------------ ring utils
@@ -154,41 +156,14 @@ def _drop(st, ring_alive, pt_keep=None):
     return out
 
 
-def _ring_tuples(u, v, s, e):
-    return list(zip(u[s:e].tolist(), v[s:e].tolist()))
-
-
-def _feat_ring_range(ring_feat, f):
-    """[r0, r1) ring span of feature f (ring_feat is sorted — features'
-    rings stay adjacent through every compaction). O(log R), replacing
-    an O(R) scan that went quadratic on fallback-heavy batches."""
-    r0 = int(np.searchsorted(ring_feat, f, side="left"))
-    r1 = int(np.searchsorted(ring_feat, f, side="right"))
-    return range(r0, r1)
-
-
-def _materialize(st, owner, i, is_line, multi):
-    """Rebuild ring owner i's geometry tuple (a feature of the lane
-    state, owner = ring_feat, or a piece of a piece state, owner =
-    ring_piece) with the type the scalar chain would carry."""
-    sel = _feat_ring_range(owner, i)
-    u, v, off = st["u"], st["v"], st["off"]
-    if is_line:
-        lines = [_ring_tuples(u, v, int(off[r]), int(off[r + 1]))
-                 for r in sel]
-        if len(lines) == 1 and not multi:
-            return ("LineString", lines[0])
-        return ("MultiLineString", lines)
-    polys = []
-    for r in sel:
-        ring = _ring_tuples(u, v, int(off[r]), int(off[r + 1]))
-        if not st["ring_int"][r]:
-            polys.append([ring])
-        else:
-            polys[-1].append(ring)
-    if len(polys) == 1 and not multi:
-        return ("Polygon", polys[0])
-    return ("MultiPolygon", polys)
+def _lane_feats(st, role_arr, multi_f):
+    """The lane state's features as a Ragged, one row per batch row,
+    coded with the type the scalar chain carries (rings of a feature
+    stay adjacent through every compaction)."""
+    return Ragged(_piece_code(role_arr == _LINE, multi_f), st["u"],
+                  st["v"], st["off"], st["ring_int"],
+                  _cumsum0(np.bincount(st["ring_feat"],
+                                       minlength=len(multi_f))))
 
 
 def _with_exteriors(ring_ok, ring_int):
@@ -381,39 +356,6 @@ def _rdp_keep_py(xs, ys, e):
 
 # ------------------------------------------------------- validity screen
 
-_PAIR_CACHE: dict = {}
-_PAIR_CACHE_ELEMS = 0
-
-# all-pairs materialization cap: a ring with more segments than this
-# takes the O(m) -memory row-blocked walk instead (the all-pairs arrays
-# are O(m^2) and a single 20k-vertex coastline ring would otherwise
-# allocate ~2e8-element temporaries and OOM the Python worker)
-_VEC_SEG_CAP = 1024
-# concatenated-pair evaluation budget across a chunk's rings: bounds
-# the I/J/R arrays and the eight coordinate gathers regardless of how
-# many sub-cap rings a chunk holds (512 rings x ~1000 segments would
-# otherwise sum to ~2.5e8 pairs in one evaluation)
-_PAIR_BUDGET = 2_000_000
-# total elements the triu-index cache may retain per worker (~64 MB of
-# int64 at this bound); entries past the budget are built uncached
-_PAIR_CACHE_BUDGET = 4_000_000
-
-
-def _pair_idx(m):
-    """Upper-triangle (i < j) index pairs for m segments, cached up to
-    a total element budget (m <= _VEC_SEG_CAP, so one entry is at most
-    ~0.5M pairs)."""
-    global _PAIR_CACHE_ELEMS
-    got = _PAIR_CACHE.get(m)
-    if got is None:
-        pi, pj = np.triu_indices(m, k=1)
-        got = (pi.astype(np.int64), pj.astype(np.int64))
-        if _PAIR_CACHE_ELEMS + len(pi) <= _PAIR_CACHE_BUDGET:
-            _PAIR_CACHE[m] = got
-            _PAIR_CACHE_ELEMS += len(pi)
-    return got
-
-
 def _seg_pairs_bad(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
     """Per-pair 'the scalar classifier might see an intersection' mask
     via the exact sd/td classification of validity.intersection (no
@@ -450,68 +392,23 @@ def _seg_pairs_bad(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
     return bad
 
 
-def _ring_self_intersects_blocked(u, v, base, m):
-    """One huge ring (m > _VEC_SEG_CAP segments): row-blocked pair walk
-    — O(m) temporaries per row instead of the O(m^2) all-pairs arrays,
-    same classification as _seg_pairs_bad."""
-    for i in range(m - 1):
-        s = base + i + 1
-        if _seg_pairs_bad(u[base + i], v[base + i],
-                          u[base + i + 1], v[base + i + 1],
-                          u[s:base + m], v[s:base + m],
-                          u[s + 1:base + m + 1],
-                          v[s + 1:base + m + 1]).any():
-            return True
-    return False
-
-
 def _self_intersection_flags(u, v, off, check):
     """Per-ring conservative 'scalar might see an intersection' flags.
     A ring where every segment pair classifies NONE or END_TO_END
     provably passes has_self_intersections; genuine TOUCHING/CROSSING
     and possible-OVERLAPPING pairs flag the ring. `check` selects
-    rings. Rings above _VEC_SEG_CAP segments take the blocked walk."""
-    nring = len(off) - 1
-    flags = np.zeros(nring, dtype=bool)
+    rings; only pairs whose bboxes overlap can classify otherwise, and
+    validity.segment_pairs finds those for every ring at once."""
+    flags = np.zeros(len(off) - 1, dtype=bool)
     rings = np.flatnonzero(check)
-    if not len(rings):
-        return flags
-    sizes = _sizes(off)
-    ii, jj, rr = [], [], []
-    acc = 0
-
-    def flush():
-        nonlocal acc
-        if not ii:
-            return
-        I = np.concatenate(ii)
-        J = np.concatenate(jj)
-        R = np.concatenate(rr)
-        ii.clear()
-        jj.clear()
-        rr.clear()
-        acc = 0
-        bad = _seg_pairs_bad(u[I], v[I], u[I + 1], v[I + 1],
-                             u[J], v[J], u[J + 1], v[J + 1])
-        if bad.any():
-            flags[np.bincount(R[bad], minlength=nring) > 0] = True
-
-    for r in rings:
-        m = int(sizes[r]) - 1
-        if m < 2:
-            continue
-        base = int(off[r])
-        if m > _VEC_SEG_CAP:
-            flags[r] = _ring_self_intersects_blocked(u, v, base, m)
-            continue
-        pi, pj = _pair_idx(m)
-        ii.append(pi + base)
-        jj.append(pj + base)
-        rr.append(np.full(len(pi), r, dtype=np.int64))
-        acc += len(pi)
-        if acc >= _PAIR_BUDGET:  # bound the concatenated evaluation
-            flush()
-    flush()
+    m = np.maximum(_sizes(off)[rings] - 1, 0)
+    s = _ranges(off[:-1][rings], m)  # segment (s, s + 1) of ring `ring`
+    ring = np.repeat(rings, m)
+    for i, j in segment_pairs(u[s], v[s], u[s + 1], v[s + 1], ring):
+        a, b = s[i], s[j]
+        bad = _seg_pairs_bad(u[a], v[a], u[a + 1], v[a + 1],
+                             u[b], v[b], u[b + 1], v[b + 1])
+        flags[ring[i[bad]]] = True
     return flags
 
 
@@ -535,52 +432,6 @@ def _wrapped_area_sign(u, v, off):
         if nring else np.zeros(0, np.int64)
     safe = (sizes * (2 * mring * mring + 1)) < (1 << 62)
     return np.sign(wrapped), safe
-
-
-# ---------------------------------------------------------------- encode
-
-_PACKI = {n: struct.pack("<I", n) for n in range(64)}
-
-
-def _packi(n):
-    got = _PACKI.get(n)
-    return got if got is not None else struct.pack("<I", n)
-
-
-_H_LS = b"\x01\x02\x00\x00\x00"
-_H_P = b"\x01\x03\x00\x00\x00"
-_H_MLS = b"\x01\x05\x00\x00\x00"
-_H_MP = b"\x01\x06\x00\x00\x00"
-
-
-def _encode_feature_wkb(is_line, multi, ring_slices, ring_int):
-    """Assemble the output WKB from per-ring coord byte slices (16 B per
-    point, already float64 LE — identical bytes to geom_to_wkb)."""
-    if is_line:
-        if not multi and len(ring_slices) == 1:
-            s = ring_slices[0]
-            return _H_LS + _packi(len(s) // 16) + s
-        parts = [_H_MLS, _packi(len(ring_slices))]
-        for s in ring_slices:
-            parts.append(_H_LS + _packi(len(s) // 16) + s)
-        return b"".join(parts)
-    polys = []
-    for s, it in zip(ring_slices, ring_int):
-        if not it:
-            polys.append([s])
-        else:
-            polys[-1].append(s)
-    if not multi and len(polys) == 1:
-        parts = [_H_P, _packi(len(polys[0]))]
-        for s in polys[0]:
-            parts.append(_packi(len(s) // 16) + s)
-        return b"".join(parts)
-    parts = [_H_MP, _packi(len(polys))]
-    for rings in polys:
-        parts.append(_H_P + _packi(len(rings)))
-        for s in rings:
-            parts.append(_packi(len(s) // 16) + s)
-    return b"".join(parts)
 
 
 # -------------------------------------------------- bbox-shortcut slice
@@ -709,24 +560,16 @@ def _boxed_to_geom(is_line, is_mp, members):
     return ("MultiPolygon", polys)
 
 
-def _materialize_boxed(st, f, ring_bbs):
-    """Feature f from ragged state as boxed members + is_line flag."""
-    sel = _feat_ring_range(st["ring_feat"], f)
-    u, v, off = st["u"], st["v"], st["off"]
-    is_line = st["role"][f] == _LINE
-    if is_line:
-        return is_line, [( _ring_tuples(u, v, int(off[r]),
-                                        int(off[r + 1])), ring_bbs[r])
-                         for r in sel]
-    members = []
-    for r in sel:
-        entry = (_ring_tuples(u, v, int(off[r]), int(off[r + 1])),
-                 ring_bbs[r])
-        if not st["ring_int"][r]:
-            members.append([entry])
-        else:
-            members[-1].append(entry)
-    return is_line, members
+def _materialize_boxed(feats, f, ring_bbs):
+    """Feature f of the lane's feature Ragged as boxed members (each
+    ring with its bbox) + is_line flag."""
+    typ, data = feats.geom(f)
+    r = iter(range(int(feats.row_off[f]), int(feats.row_off[f + 1])))
+    members = [data] if typ in ("LineString", "Polygon") else data
+    if typ in ("LineString", "MultiLineString"):
+        return True, [(pts, ring_bbs[next(r)]) for pts in members]
+    return False, [[(ring, ring_bbs[next(r)]) for ring in rings]
+                   for rings in members]
 
 
 # ---------------------------------------------------------------- router
@@ -761,9 +604,11 @@ def process_general(pdf, prop_names, buffer_units, metatile_scale,
     lanes run in _CHUNK_FEATURES-row chunks; the points lane runs
     whole-batch (chunking it at 4096 measured 0.79 -> 1.06 us/row).
 
-    Returns a pieces DataFrame (zoom, x, y, feature_id, geom, props...)
-    or None. Output row order is arbitrary: every piece is a unique
-    (feature, tile) and the encode shuffle sorts by feature_id."""
+    Returns (frame, rag) or None when no piece is left: frame holds
+    (zoom, x, y, feature_id, props...) per piece, rag (a wkb.Ragged) its
+    geometry in tile-local int64 vertices, row for row. Output row order
+    is arbitrary: every piece is a unique (feature, tile), and the
+    render pass sorts the pieces into the canonical order."""
     way = pdf["way"].values
     fr = metatile_frame(pdf["zoom"].to_numpy(np.int64),
                         pdf["mtx"].to_numpy(np.int64),
@@ -834,69 +679,59 @@ def axis_rect_rows(rag, codes=(3,)):
     return rows[ok], x[ok, :4], y[ok, :4]
 
 
-def _tile_window(lo, hi, buf, size_mt):
-    """Inclusive range of a metatile's tiles t whose closed buffered
-    interval [t*4096 - buf, (t+1)*4096 + buf] meets [lo, hi] (tile
-    units, one axis) — the quadtree slice's keep test for a geometry
-    that no cut changes."""
-    return (np.maximum(-(-(lo - buf) // 4096) - 1, 0),
-            np.minimum((hi + buf) // 4096, size_mt - 1))
-
-
 def _points_lane(fr, rows, xs, ys, buf):
     """The points kernel: simple points xs/ys of batch rows `rows`.
     Remap, clip to the buffered metatile, and the quadtree slice
-    collapses to the closed interval per tile (_tile_window), so a
+    collapses to the closed interval per tile (tile_window), so a
     point on a tile border goes to every tile it touches. Returns
-    (row, tile x, tile y, WKB list)."""
+    (row, tile x, tile y, Ragged of Point pieces)."""
     vx, vy = remap_arrays(fr, rows, xs, ys)
     u, v = round_half_away(vx), round_half_away(vy)
     hi = fr.extent[rows] + buf
     keep = (u >= -buf) & (u <= hi) & (v >= -buf) & (v <= hi)
     rows, u, v = rows[keep], u[keep], v[keep]
     sm = fr.size_mt[rows]
-    rep, tx, ty = tile_pairs(*_tile_window(u, u, buf, sm),
-                             *_tile_window(v, v, buf, sm))
+    rep, tx, ty = tile_pairs(*tile_window(u, u, buf, sm),
+                             *tile_window(v, v, buf, sm))
     rows = rows[rep]
-    wb = np.empty((len(rep), 21), dtype=np.uint8)
-    wb[:, :5] = (1, 1, 0, 0, 0)  # little-endian Point
-    for col, c in ((5, u[rep] - tx * 4096), (13, v[rep] - ty * 4096)):
-        wb[:, col:col + 8] = c.astype("<f8").view(np.uint8).reshape(-1, 8)
-    return rows, fr.x0t[rows] + tx, fr.y0t[rows] + ty, wkb_rows(wb)
+    one = np.arange(len(rep) + 1)
+    return rows, fr.x0t[rows] + tx, fr.y0t[rows] + ty, Ragged(
+        np.ones(len(rep), np.uint8), u[rep] - tx * 4096,
+        v[rep] - ty * 4096, one, np.zeros(len(rep), bool), one)
 
 
 class _Pieces:
-    """What every lane hands back, per piece: the batch row it came
-    from, its absolute tile x/y and its WKB."""
+    """What every lane hands back: per piece the batch row it came from
+    and its absolute tile x/y, and the pieces as a Ragged part."""
 
     def __init__(self):
-        self.row, self.x, self.y, self.geom = [], [], [], []
+        self.parts = []
 
-    def add(self, row, x, y, geoms):
-        self.row.append(np.asarray(row, np.int64))
-        self.x.append(np.asarray(x, np.int64))
-        self.y.append(np.asarray(y, np.int64))
-        self.geom.extend(geoms)
+    def add(self, row, x, y, rag):
+        if len(row):
+            self.parts.append((np.asarray(row, np.int64),
+                               np.asarray(x, np.int64),
+                               np.asarray(y, np.int64), rag))
 
     def chain(self, i, pieces):
         """The scalar chain's [(tx, ty, geometry tuple)] for row i."""
         if pieces:
             tx, ty, geoms = zip(*pieces)
-            self.add(np.full(len(pieces), i), tx, ty,
-                     [geom_to_wkb(g) for g in geoms])
+            self.add(np.full(len(pieces), i), tx, ty, ragged_of(geoms))
 
     def frame(self, pdf, prop_names):
-        """The output frame: every column gathered once by row."""
-        if not self.geom:
+        """(frame, rag): every column gathered once by row, and the
+        parts' Ragged stacked once; None without pieces."""
+        if not self.parts:
             return None
-        row = np.concatenate(self.row)
+        row, x, y, rags = zip(*self.parts)
+        row = np.concatenate(row)
         d = {"zoom": pdf["zoom"].to_numpy(np.int64)[row],
-             "x": np.concatenate(self.x), "y": np.concatenate(self.y),
-             "feature_id": pdf["feature_id"].to_numpy(np.int64)[row],
-             "geom": pd.Series(self.geom, dtype=object)}
+             "x": np.concatenate(x), "y": np.concatenate(y),
+             "feature_id": pdf["feature_id"].to_numpy(np.int64)[row]}
         for p in prop_names:
             d[p] = pdf[p].to_numpy()[row]
-        return pd.DataFrame(d, columns=list(d))
+        return pd.DataFrame(d, columns=list(d)), concat_ragged(rags)
 
 
 def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
@@ -963,12 +798,11 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
     # ---- despike screen ----
     spike = _despike_flags(st["u"], st["v"], st["off"])
     spike_feats = np.unique(ring_feat[spike])
+    feats = _lane_feats(st, role_arr, multi_f)
     for f in spike_feats.tolist():
         if alive_f[f]:
-            geom = _materialize(st, st["ring_feat"], f,
-                                role_arr[f] == _LINE, bool(multi_f[f]))
             out.chain(f, _scalar_chain(
-                geom, "unneeded", int(size_mt[f]), int(x0t[f]),
+                feats.geom(f), "unneeded", int(size_mt[f]), int(x0t[f]),
                 int(y0t[f]), int(extent_i[f]), buffer_units,
                 bool(do_simp[f]), epsilon))
             alive_f[f] = False
@@ -1033,8 +867,8 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
     inside = (umin >= -buf) & (umax <= hi) & (vmin >= -buf) & (vmax <= hi)
     alive_f[feat_ids[live & gone]] = False  # fully clipped away (exact)
     sm = size_mt[feat_ids]
-    txl, txh = _tile_window(umin, umax, buf, sm)
-    tyl, tyh = _tile_window(vmin, vmax, buf, sm)
+    txl, txh = tile_window(umin, umax, buf, sm)
+    tyl, tyh = tile_window(vmin, vmax, buf, sm)
     one = (txl == txh) & (tyl == tyh)
     single = live & inside & one
     fb_clip = feat_ids[live & ~gone & ~inside].tolist()
@@ -1048,6 +882,7 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
     if fb_clip or fb_slice:
         # per-ring bboxes from the arrays (cheap reduceat)
         rstarts = np.minimum(off[:-1], len(u) - 1)
+        feats = _lane_feats(st, role_arr, multi_f)
         rbb = list(zip(np.minimum.reduceat(u, rstarts).tolist(),
                        np.minimum.reduceat(v, rstarts).tolist(),
                        np.maximum.reduceat(u, rstarts).tolist(),
@@ -1064,7 +899,7 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
                 pieces_extra.append((f, tx, ty, pg))
 
         for f in fb_clip:
-            is_line, members = _materialize_boxed(st, f, rbb)
+            is_line, members = _materialize_boxed(feats, f, rbb)
             alive_f[f] = False
             hi = int(extent_i[f]) + buf
             for border in ((XMIN, -buf), (XMAX, hi),
@@ -1075,7 +910,7 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
             if members:
                 slice_feature(f, is_line, members)
         for f in fb_slice:
-            is_line, members = _materialize_boxed(st, f, rbb)
+            is_line, members = _materialize_boxed(feats, f, rbb)
             alive_f[f] = False
             slice_feature(f, is_line, members)
 
@@ -1086,82 +921,32 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
         tile_y = np.zeros(F, np.int64)
         tile_x[feat_ids] = x0t[feat_ids] + txl
         tile_y[feat_ids] = y0t[feat_ids] + tyl
-        feat_ids2 = np.unique(ring_feat)
-        ps = {
-            "u": st["u"], "v": st["v"], "off": st["off"],
-            "ring_int": st["ring_int"],
-            "ring_piece": np.searchsorted(feat_ids2, ring_feat),
-            "p_feat": feat_ids2,
-            "p_txa": tile_x[feat_ids2],
-            "p_tya": tile_y[feat_ids2],
-            "p_line": role_arr[feat_ids2] == _LINE,
-            "p_multi": multi_f[feat_ids2],
-        }
-        _validate_emit(ps, fr, buffer_units, epsilon, out)
+        feat_ids2, nring = np.unique(ring_feat, return_counts=True)
+        ps = Ragged(_piece_code(role_arr[feat_ids2] == _LINE,
+                                multi_f[feat_ids2]),
+                    st["u"], st["v"], st["off"], st["ring_int"],
+                    _cumsum0(nring))
+        _validate_emit(ps, feat_ids2, tile_x[feat_ids2], tile_y[feat_ids2],
+                       fr, buffer_units, epsilon, out)
     if pieces_extra:
-        _validate_emit(_ingest_pieces(pieces_extra), fr, buffer_units,
-                       epsilon, out)
+        f, tx, ty, geoms = zip(*pieces_extra)
+        _validate_emit(ragged_of(geoms), np.array(f), np.array(tx),
+                       np.array(ty), fr, buffer_units, epsilon, out)
 
 
-def _ingest_pieces(pieces):
-    """Tuple pieces from the scalar clip/slice -> a piece-state dict for
-    the batched validity certificate."""
-    u_parts, v_parts = [], []
-    off = [0]
-    ring_int, ring_piece = [], []
-    p_feat, p_txa, p_tya, p_line, p_multi = [], [], [], [], []
-    tot = 0
-    for pi, (f, tx, ty, geom) in enumerate(pieces):
-        typ, data = geom
-        p_feat.append(f)
-        p_txa.append(tx)
-        p_tya.append(ty)
-        is_line = typ in ("LineString", "MultiLineString")
-        p_line.append(is_line)
-        p_multi.append(typ.startswith("Multi"))
-        if typ == "LineString":
-            members = [data]
-        elif typ == "MultiLineString":
-            members = data
-        elif typ == "Polygon":
-            members = [data]
-        else:  # MultiPolygon
-            members = data
-        for m in members:
-            rings = [m] if is_line else m
-            for ri, ring in enumerate(rings):
-                arr = np.array(ring, dtype=np.int64)
-                u_parts.append(arr[:, 0])
-                v_parts.append(arr[:, 1])
-                tot += len(arr)
-                off.append(tot)
-                ring_int.append((not is_line) and ri > 0)
-                ring_piece.append(pi)
-    return {
-        "u": np.concatenate(u_parts),
-        "v": np.concatenate(v_parts),
-        "off": np.asarray(off, dtype=np.int64),
-        "ring_int": np.asarray(ring_int, dtype=bool),
-        "ring_piece": np.asarray(ring_piece, dtype=np.int64),
-        "p_feat": np.asarray(p_feat, dtype=np.int64),
-        "p_txa": np.asarray(p_txa, dtype=np.int64),
-        "p_tya": np.asarray(p_tya, dtype=np.int64),
-        "p_line": np.asarray(p_line, dtype=bool),
-        "p_multi": np.asarray(p_multi, dtype=bool),
-    }
-
-
-def _validate_emit(ps, fr, buffer_units, epsilon, out):
-    """Batched make_valid/is_valid/orientation certificate over a piece
-    state; certificate-clean pieces are emitted directly (make_valid is
-    provably the identity up to the Multi-of-1 collapse), flagged pieces
-    take the scalar make_valid machinery."""
-    u, v, off = ps["u"], ps["v"], ps["off"]
-    ring_int = ps["ring_int"]
-    ring_piece = ps["ring_piece"]
-    P = len(ps["p_feat"])
+def _validate_emit(ps, feat, txa, tya, fr, buffer_units, epsilon, out):
+    """Batched make_valid/is_valid/orientation certificate over pieces
+    ps (a Ragged in metatile coordinates, coded with the type the scalar
+    chain carries into make_valid) of batch rows feat at absolute tiles
+    txa/tya; certificate-clean pieces are emitted directly (make_valid
+    is provably the identity up to the Multi-of-1 collapse), flagged
+    pieces take the scalar make_valid machinery."""
+    u, v, off, ring_int = ps.xs, ps.ys, ps.ring_off, ps.ring_int
+    P = len(feat)
+    ring_piece = np.repeat(np.arange(P), np.diff(ps.row_off))
     sizes = _sizes(off)
-    line_r = ps["p_line"][ring_piece]
+    p_line = (ps.code == 2) | (ps.code == 5)
+    line_r = p_line[ring_piece]
     poly_r = ~line_r
 
     spike = _despike_flags(u, v, off)  # make_valid re-runs the despike
@@ -1225,50 +1010,23 @@ def _validate_emit(ps, fr, buffer_units, epsilon, out):
         piece_bad = np.bincount(ring_piece[ring_bad], minlength=P) > 0
 
     for pi in np.flatnonzero(piece_bad).tolist():
-        f = int(ps["p_feat"][pi])
-        geom = _materialize(ps, ps["ring_piece"], pi, ps["p_line"][pi],
-                            ps["p_multi"][pi])
+        f = int(feat[pi])
         out.chain(f, _scalar_chain(
-            geom, "valid", int(fr.size_mt[f]), int(fr.x0t[f]),
+            ps.geom(pi), "valid", int(fr.size_mt[f]), int(fr.x0t[f]),
             int(fr.y0t[f]), int(fr.extent[f]), buffer_units, False, epsilon,
-            txy=(int(ps["p_txa"][pi]), int(ps["p_tya"][pi]))))
+            txy=(int(txa[pi]), int(tya[pi]))))
 
-    good = ~piece_bad
-    if not good.any():
+    good = np.flatnonzero(~piece_bad)
+    if not len(good):
         return
-    # shift + encode the clean pieces (vectorized coords)
-    fpt_piece = np.repeat(ring_piece, sizes)
-    f_of_piece = ps["p_feat"]
-    xsh = (ps["p_txa"] - fr.x0t[f_of_piece]) * 4096
-    ysh = (ps["p_tya"] - fr.y0t[f_of_piece]) * 4096
-    uvf = np.empty((len(u), 2), dtype="<f8")
-    uvf[:, 0] = u - xsh[fpt_piece]
-    uvf[:, 1] = v - ysh[fpt_piece]
-    raw = uvf.tobytes()
-
     # final output type: make_valid's internal remove_unneeded_points
     # collapses ANY single-member Multi*, so the emitted type depends
-    # only on the CURRENT member count (p_multi is the pre-make_valid
+    # only on the CURRENT member count (ps.code is the pre-make_valid
     # carry type, used only for flagged-piece materialization)
     n_memb = np.bincount(ring_piece[line_r | ~ring_int], minlength=P)
-    pids, first = np.unique(ring_piece, return_index=True)
-    last = np.concatenate((first[1:], [len(sizes)]))
-    goodk = np.flatnonzero(~piece_bad[pids])
-    # byte offsets once (avoids int() casts in the hot loop)
-    boff = (off * 16).tolist()
-    ring_int_l = ring_int.tolist()
-    is_line_l = ps["p_line"].tolist()
-    multi_l = ((n_memb >= 2) | p_force_multi).tolist()
-    first_l = first.tolist()
-    last_l = last.tolist()
-    wkbs = []
-    for k in goodk.tolist():
-        pi = pids[k]
-        r0, r1 = first_l[k], last_l[k]
-        wkbs.append(_encode_feature_wkb(
-            is_line_l[pi], multi_l[pi],
-            [raw[boff[r]:boff[r + 1]] for r in range(r0, r1)],
-            ring_int_l[r0:r1]))
-    sel = pids[goodk]
-    out.add(ps["p_feat"][sel], ps["p_txa"][sel], ps["p_tya"][sel],
-              wkbs)
+    fpt = np.repeat(ring_piece, sizes)
+    xsh = (txa - fr.x0t[feat]) * 4096
+    ysh = (tya - fr.y0t[feat]) * 4096
+    out.add(feat[good], txa[good], tya[good], Ragged(
+        _piece_code(p_line, (n_memb >= 2) | p_force_multi),
+        u - xsh[fpt], v - ysh[fpt], off, ring_int, ps.row_off).take(good))

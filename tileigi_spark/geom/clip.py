@@ -355,59 +355,3 @@ def cohen_sutherland_clip(p0, p1, xmin, ymin, xmax, ymax):
         else:
             x1, y1 = x, y
             oc1 = _outcode(x1, y1, xmin, ymin, xmax, ymax)
-
-
-def cohen_sutherland_clip_batch(x0, y0, x1, y1, xmin, ymin, xmax, ymax,
-                                max_iters: int = 8):
-    """Vectorized float64 twin of cohen_sutherland_clip over numpy
-    arrays of segments: returns (cx0, cy0, cx1, cy1, accept) with the
-    same iteration order as the scalar loop (endpoint-0 preferred, TOP
-    before BOTTOM before RIGHT before LEFT), so results are identical
-    where both run in floats. The loop converges in <= 4 clips per
-    endpoint; max_iters bounds it defensively."""
-    import numpy as np
-
-    x0 = np.asarray(x0, dtype=np.float64).copy()
-    y0 = np.asarray(y0, dtype=np.float64).copy()
-    x1 = np.asarray(x1, dtype=np.float64).copy()
-    y1 = np.asarray(y1, dtype=np.float64).copy()
-
-    def oc(x, y):
-        return ((x < xmin) * LEFT + ((x > xmax) & ~(x < xmin)) * RIGHT
-                + (y < ymin) * BOTTOM
-                + ((y > ymax) & ~(y < ymin)) * TOP).astype(np.int64)
-
-    oc0 = oc(x0, y0)
-    oc1 = oc(x1, y1)
-    accept = np.zeros(len(x0), dtype=bool)
-    dead = np.zeros(len(x0), dtype=bool)
-    for _ in range(max_iters):
-        accept |= ~dead & ((oc0 | oc1) == 0)
-        dead |= (oc0 & oc1) != 0
-        live = ~accept & ~dead
-        if not live.any():
-            break
-        use0 = live & (oc0 != 0)
-        ocx = np.where(use0, oc0, oc1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t_top = x0 + (x1 - x0) * (ymax - y0) / (y1 - y0)
-            t_bot = x0 + (x1 - x0) * (ymin - y0) / (y1 - y0)
-            t_rgt = y0 + (y1 - y0) * (xmax - x0) / (x1 - x0)
-            t_lft = y0 + (y1 - y0) * (xmin - x0) / (x1 - x0)
-        is_top = (ocx & TOP) != 0
-        is_bot = ~is_top & ((ocx & BOTTOM) != 0)
-        is_rgt = ~is_top & ~is_bot & ((ocx & RIGHT) != 0)
-        is_lft = ~is_top & ~is_bot & ~is_rgt
-        nx = np.where(is_top, t_top,
-                      np.where(is_bot, t_bot,
-                               np.where(is_rgt, xmax, xmin)))
-        ny = np.where(is_top, ymax,
-                      np.where(is_bot, ymin,
-                               np.where(is_rgt, t_rgt, t_lft)))
-        x0 = np.where(live & use0, nx, x0)
-        y0 = np.where(live & use0, ny, y0)
-        x1 = np.where(live & ~use0, nx, x1)
-        y1 = np.where(live & ~use0, ny, y1)
-        oc0 = oc(x0, y0)
-        oc1 = oc(x1, y1)
-    return x0, y0, x1, y1, accept

@@ -2,7 +2,7 @@
 
 The scalar per-feature pipeline (remap → remove_unneeded_points →
 simplify → clip_to_bbox → quadtree slice → make_valid → is_valid →
-orient → shift → WKB) is exact-integer Rust-ported code
+orient → shift) is exact-integer Rust-ported code
 (lib.rs:559-728) that runs at Python interpreter speed. For the
 rectangle case — clipped boxes, bboxes, the dominant shape of
 box-layer workloads — every stage has a closed form:
@@ -28,10 +28,10 @@ box-layer workloads — every stage has a closed form:
   itself property-pinned against the dissolve repair).
 
 Everything runs as numpy array ops over (feature, tile) pairs; the
-output WKB is assembled as byte matrices. rect_lane is the kernel's
-entry: the geometry router (geom/batch.process_general) hands it the
-corner arrays of the rows axis_rect accepts, already read by
-wkb.read_ragged. Byte parity with the scalar path is pinned by
+pieces come out as one wkb.Ragged of closed 5-vertex rings. rect_lane
+is the kernel's entry: the geometry router (geom/batch.process_general)
+hands it the corner arrays of the rows axis_rect accepts, already read
+by wkb.read_ragged. Byte parity with the scalar path is pinned by
 tests/test_rect_fast_path.py over randomized rects/zooms/buffers, by
 tests/test_geom_router.py and by the golden-tile fixtures.
 """
@@ -42,7 +42,7 @@ import numpy as np
 
 from .clip import XMAX, XMIN, YMAX, YMIN, _clip_ring_to_border
 from .remap import remap_arrays, round_half_away
-from .wkb import _ranges
+from .wkb import Ragged, _ranges
 
 # canonical corner cycle of a rect (x0,y0,x1,y1), tile space (y down):
 #   C0=(x0,y0) C1=(x1,y0) C2=(x1,y1) C3=(x0,y1)
@@ -182,16 +182,11 @@ def rect_pieces(x0, y0, x1, y1, state, zooms, size_mt, x0t, y0t,
 
     # tile fan-out: tile t STRICTLY overlaps iff t*4096 - buf < hi and
     # (t+1)*4096 + buf > lo (zero-width touches produce degenerate
-    # pieces the scalar path always drops), so
-    #   t_min = ceil((lo - buf + 1)/4096) - 1, t_max = floor((hi+buf-1)/4096)
-    tx_lo = np.maximum(_div_ceil(lx - buffer_units + 1, 4096) - 1, 0)
-    tx_hi = np.minimum(_div_floor(hx + buffer_units - 1, 4096),
-                       size_mt - 1)
-    ty_lo = np.maximum(_div_ceil(ly - buffer_units + 1, 4096) - 1, 0)
-    ty_hi = np.minimum(_div_floor(hy + buffer_units - 1, 4096),
-                       size_mt - 1)
-
-    rep, ptx, pty = tile_pairs(tx_lo, tx_hi, ty_lo, ty_hi)
+    # pieces the scalar path always drops): the closed window of the
+    # integer interval [lo + 1, hi - 1]
+    rep, ptx, pty = tile_pairs(
+        *tile_window(lx + 1, hx - 1, buffer_units, size_mt),
+        *tile_window(ly + 1, hy - 1, buffer_units, size_mt))
 
     ps = s[rep]
     plx, phx = lx[rep], hx[rep]
@@ -262,12 +257,13 @@ def rect_pieces(x0, y0, x1, y1, state, zooms, size_mt, x0t, y0t,
             out_state, as_multi)
 
 
-def _div_floor(a, b):
-    return np.floor_divide(a, b)
-
-
-def _div_ceil(a, b):
-    return -np.floor_divide(-a, b)
+def tile_window(lo, hi, buf, size_mt):
+    """Inclusive range of a metatile's tiles t whose closed buffered
+    interval [t*4096 - buf, (t+1)*4096 + buf] meets [lo, hi] (tile
+    units, one axis) — the quadtree slice's keep test for a geometry
+    that no cut changes."""
+    return (np.maximum(-(-(lo - buf) // 4096) - 1, 0),
+            np.minimum((hi + buf) // 4096, size_mt - 1))
 
 
 def tile_pairs(tx_lo, tx_hi, ty_lo, ty_hi):
@@ -278,50 +274,6 @@ def tile_pairs(tx_lo, tx_hi, ty_lo, ty_hi):
     rep = np.repeat(np.arange(len(fan)), fan)
     k = _ranges(np.zeros(len(fan), np.int64), fan)
     return rep, tx_lo[rep] + k // fany[rep], ty_lo[rep] + k % fany[rep]
-
-
-def wkb_rows(mat):
-    """The rows of a uint8 byte matrix as a list of bytes objects."""
-    raw, w = mat.tobytes(), mat.shape[1]
-    return [raw[i:i + w] for i in range(0, len(raw), w)]
-
-
-_RING5_HEAD = np.array([1, 3, 0, 0, 0, 1, 0, 0, 0, 5, 0, 0, 0], np.uint8)
-_MULTI_HEAD = np.array([1, 6, 0, 0, 0, 1, 0, 0, 0], np.uint8)
-
-
-def rings_wkb(px0, py0, px1, py1, state, as_multi):
-    """Assemble WKB bytes per piece: 93-byte Polygon or 102-byte
-    MultiPolygon-of-one, ring per the canonical cycle state, closed.
-    Returns a list of bytes objects."""
-    n = len(px0)
-    corner_x = np.stack([px0, px1, px1, px0], axis=1)  # C0..C3
-    corner_y = np.stack([py0, py0, py1, py1], axis=1)
-    start = (state >> 1).astype(np.int64)
-    d = np.where((state & 1) == 1, 1, -1)
-    k = np.arange(4)
-    order = (start[:, None] + d[:, None] * k[None, :]) % 4
-    rx = np.take_along_axis(corner_x, order, axis=1)
-    ry = np.take_along_axis(corner_y, order, axis=1)
-
-    pts = np.empty((n, 5, 2), dtype="<f8")
-    pts[:, :4, 0] = rx
-    pts[:, :4, 1] = ry
-    pts[:, 4, 0] = rx[:, 0]
-    pts[:, 4, 1] = ry[:, 0]
-
-    poly = np.empty((n, 93), dtype=np.uint8)
-    poly[:, :13] = _RING5_HEAD
-    poly[:, 13:93] = pts.reshape(n, 10).view(np.uint8)
-    sp, mp = np.flatnonzero(~as_multi), np.flatnonzero(as_multi)
-    multi = np.empty((len(mp), 102), dtype=np.uint8)
-    multi[:, :9] = _MULTI_HEAD
-    multi[:, 9:] = poly[mp]
-    out = [None] * n
-    for idx, mat in ((sp, poly[sp]), (mp, multi)):
-        for i, w in zip(idx.tolist(), wkb_rows(mat)):
-            out[i] = w
-    return out
 
 
 def axis_rect(x, y):
@@ -337,7 +289,9 @@ def rect_lane(fr, rows, x, y, buffer_units, global_maxzoom):
     """The rect kernel: rows `rows` of metatile frame fr are axis rects
     with EPSG:3857 corners x, y (n, 4), in ring order. Remaps the
     corners, derives each rect's bounds and ring state, and returns its
-    pieces as (row, tile x, tile y, WKB list)."""
+    pieces as (row, tile x, tile y, Ragged): a Polygon, or the
+    MultiPolygon-of-one make_valid wraps a repaired ring in, per piece,
+    its ring walked from the state's start corner and closed."""
     f = np.repeat(rows, 4)
     vx, vy = remap_arrays(fr, f, x.ravel(), y.ravel())
     u = round_half_away(vx).reshape(-1, 4)
@@ -363,5 +317,14 @@ def rect_lane(fr, rows, x, y, buffer_units, global_maxzoom):
         rx0[k], ry0[k], rx1[k], ry1[k], state[k], fr.zoom[g],
         fr.size_mt[g], fr.x0t[g], fr.y0t[g], buffer_units, global_maxzoom)
     src = g[pf]
-    return (src, fr.x0t[src] + ptx, fr.y0t[src] + pty,
-            rings_wkb(px0, py0, px1, py1, out_state, as_multi))
+    # ring vertex j is corner (start + d*j) % 4 of the canonical cycle
+    order = ((out_state >> 1)[:, None]
+             + np.where(out_state & 1, 1, -1)[:, None] * np.arange(5)) % 4
+    cx = np.stack([px0, px1, px1, px0], axis=1)
+    cy = np.stack([py0, py0, py1, py1], axis=1)
+    n = np.arange(len(src) + 1)
+    return (src, fr.x0t[src] + ptx, fr.y0t[src] + pty, Ragged(
+        np.where(as_multi, 6, 3).astype(np.uint8),
+        np.take_along_axis(cx, order, axis=1).ravel(),
+        np.take_along_axis(cy, order, axis=1).ravel(),
+        5 * n, np.zeros(len(src), bool), n))

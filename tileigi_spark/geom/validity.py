@@ -9,7 +9,10 @@ are all part of the observable contract and preserved.
 
 from __future__ import annotations
 
+import numpy as np
+
 from .types import tdiv, trem, wrap_i32
+from .wkb import _cumsum0, _ranges
 from .simplify import remove_unneeded_points as _remove_unneeded_points
 from .simplify import remove_spikes_linestring as _remove_spikes_linestring
 
@@ -285,6 +288,61 @@ def _is_axis_rect_ring(r):
     return True
 
 
+# candidate pairs per segment_pairs block: bounds the sweep's index
+# temporaries whatever a ring's shape
+_PAIR_BLOCK = 1 << 20
+
+
+def segment_pairs(x1, y1, x2, y2, group):
+    """Blocks (i, j) of index arrays, i < j, of the segments (x1, y1) -
+    (x2, y2) of one group (a ring) whose closed bboxes overlap: a sweep
+    on x (a segment meets the ones of its group that start inside its
+    x-span, at most _PAIR_BLOCK candidates a block) and a filter on y,
+    so the work follows a ring's overlapping pairs, not its size
+    squared."""
+    m = len(x1)
+    if not m:
+        return
+    lox, hix = np.minimum(x1, x2), np.maximum(x1, x2)
+    loy, hiy = np.minimum(y1, y2), np.maximum(y1, y2)
+    span = hix.max() - lox.min() + 1  # groups laid out along one axis
+    key = group * span + lox
+    order = np.argsort(key, kind="stable")
+    cnt = (np.searchsorted(key[order], (group * span + hix)[order],
+                           side="right") - np.arange(1, m + 1))
+    cum = _cumsum0(cnt)
+    k0 = 0
+    while k0 < m:
+        k1 = max(int(np.searchsorted(cum, cum[k0] + _PAIR_BLOCK,
+                                     side="right")) - 1, k0 + 1)
+        ks = np.arange(k0, k1)
+        a = order[np.repeat(ks, cnt[k0:k1])]
+        b = order[_ranges(ks + 1, cnt[k0:k1])]
+        hit = (hiy[a] >= loy[b]) & (loy[a] <= hiy[b])
+        yield np.minimum(a, b)[hit], np.maximum(a, b)[hit]
+        k0 = k1
+
+
+def _bbox_pairs(pts):
+    """The (i, j), i < j, of the segments pts[i]-pts[i + 1] whose closed
+    bboxes overlap, in (i, j) order: exactly the pairs the reference's
+    all-pairs loops (validity.rs:187-219, 606-749) do not skip. Rings of
+    up to 32 segments take the plain double loop (numpy's setup costs
+    more there), longer ones segment_pairs."""
+    m = len(pts) - 1
+    if m <= 32:
+        box = [(min(a[0], b[0]), max(a[0], b[0]), min(a[1], b[1]),
+                max(a[1], b[1])) for a, b in zip(pts, pts[1:])]
+        return [(i, j) for i in range(m) for j in range(i + 1, m)
+                if box[i][1] >= box[j][0] and box[i][0] <= box[j][1]
+                and box[i][3] >= box[j][2] and box[i][2] <= box[j][3]]
+    p = np.asarray(pts)
+    i, j = (np.concatenate(c) for c in zip(*segment_pairs(
+        p[:-1, 0], p[:-1, 1], p[1:, 0], p[1:, 1], np.zeros(m, np.int64))))
+    at = np.lexsort((j, i))
+    return list(zip(i[at].tolist(), j[at].tolist()))
+
+
 def has_self_intersections(pts):
     """validity.rs:187-219."""
     n = len(pts)
@@ -292,19 +350,12 @@ def has_self_intersections(pts):
         return False
     if n == 5 and _is_axis_rect_ring(pts):
         return False
-    for i in range(n - 1):
-        p1, p2 = pts[i], pts[i + 1]
-        maxx12, minx12 = max(p1[0], p2[0]), min(p1[0], p2[0])
-        maxy12, miny12 = max(p1[1], p2[1]), min(p1[1], p2[1])
-        for j in range(i + 1, n - 1):
-            p3, p4 = pts[j], pts[j + 1]
-            if (maxx12 < min(p3[0], p4[0]) or minx12 > max(p3[0], p4[0])
-                    or maxy12 < min(p3[1], p4[1]) or miny12 > max(p3[1], p4[1])):
-                continue
-            tag, _ = intersection(p1[0], p1[1], p2[0], p2[1],
-                                  p3[0], p3[1], p4[0], p4[1])
-            if tag in (CROSSING, OVERLAPPING, TOUCHING):
-                return True
+    for i, j in _bbox_pairs(pts):
+        (x1, y1), (x2, y2) = pts[i], pts[i + 1]
+        (x3, y3), (x4, y4) = pts[j], pts[j + 1]
+        tag, _ = intersection(x1, y1, x2, y2, x3, y3, x4, y4)
+        if tag in (CROSSING, OVERLAPPING, TOUCHING):
+            return True
     return False
 
 
@@ -360,43 +411,34 @@ def add_points_for_all_crossings(pts):
         passes += 1
         coords_to_insert = {}
 
-        n = len(pts)
-        for i in range(n - 1):
-            p1, p2 = pts[i], pts[i + 1]
-            x1, y1 = p1
-            x2, y2 = p2
-            for j in range(i + 1, n - 1):
-                p3, p4 = pts[j], pts[j + 1]
-                x3, y3 = p3
-                x4, y4 = p4
-                if (max(x1, x2) < min(x3, x4) or min(x1, x2) > max(x3, x4)
-                        or max(y1, y2) < min(y3, y4) or min(y1, y2) > max(y3, y4)):
-                    continue
-                tag, payload = intersection(x1, y1, x2, y2, x3, y3, x4, y4)
-                if tag == CROSSING:
-                    cp = payload
-                    if (x1, y1) != cp and (x2, y2) != cp:
-                        coords_to_insert.setdefault(i, []).append(cp)
-                    if (x3, y3) != cp and (x4, y4) != cp:
-                        coords_to_insert.setdefault(j, []).append(cp)
-                elif tag == OVERLAPPING:
-                    o1, o2 = payload
-                    if (x1, y1) != o1 and (x2, y2) != o1:
-                        coords_to_insert.setdefault(i, []).append(o1)
-                    if (x1, y1) != o2 and (x2, y2) != o2:
-                        coords_to_insert.setdefault(i, []).append(o2)
-                    if (x3, y3) != o1 and (x4, y4) != o1:
-                        coords_to_insert.setdefault(j, []).append(o1)
-                    if (x3, y3) != o2 and (x4, y4) != o2:
-                        coords_to_insert.setdefault(j, []).append(o2)
-                elif tag == TOUCHING:
-                    t = payload
-                    if (x1, y1) == t or (x2, y2) == t:
-                        coords_to_insert.setdefault(j, []).append(t)
-                    elif (x3, y3) == t or (x4, y4) == t:
-                        coords_to_insert.setdefault(i, []).append(t)
-                    else:
-                        raise AssertionError("touch point not at any end")
+        for i, j in _bbox_pairs(pts):
+            (x1, y1), (x2, y2) = pts[i], pts[i + 1]
+            (x3, y3), (x4, y4) = pts[j], pts[j + 1]
+            tag, payload = intersection(x1, y1, x2, y2, x3, y3, x4, y4)
+            if tag == CROSSING:
+                cp = payload
+                if (x1, y1) != cp and (x2, y2) != cp:
+                    coords_to_insert.setdefault(i, []).append(cp)
+                if (x3, y3) != cp and (x4, y4) != cp:
+                    coords_to_insert.setdefault(j, []).append(cp)
+            elif tag == OVERLAPPING:
+                o1, o2 = payload
+                if (x1, y1) != o1 and (x2, y2) != o1:
+                    coords_to_insert.setdefault(i, []).append(o1)
+                if (x1, y1) != o2 and (x2, y2) != o2:
+                    coords_to_insert.setdefault(i, []).append(o2)
+                if (x3, y3) != o1 and (x4, y4) != o1:
+                    coords_to_insert.setdefault(j, []).append(o1)
+                if (x3, y3) != o2 and (x4, y4) != o2:
+                    coords_to_insert.setdefault(j, []).append(o2)
+            elif tag == TOUCHING:
+                t = payload
+                if (x1, y1) == t or (x2, y2) == t:
+                    coords_to_insert.setdefault(j, []).append(t)
+                elif (x3, y3) == t or (x4, y4) == t:
+                    coords_to_insert.setdefault(i, []).append(t)
+                else:
+                    raise AssertionError("touch point not at any end")
 
         if not coords_to_insert:
             break

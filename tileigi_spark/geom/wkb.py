@@ -10,11 +10,18 @@ Two readers share the format:
 * wkb_to_geom — the scalar reference: one row -> geometry tuple, any
   byte order, EWKB SRID accepted.
 * read_ragged — the vectorized reader the engine's batch paths use (the
-  ragged geometry lane, the encode walk, with_bbox): a whole column ->
-  flat float64 vertex arrays with ring and row offsets. It reads only
-  little-endian 2-D ISO Point/LineString/Polygon/MultiLineString/
-  MultiPolygon rows of exact length and refuses everything else (code
-  0), so every caller keeps wkb_to_geom as its fallback for those rows.
+  geometry router, the WKB encode walk, with_bbox): a whole column ->
+  a Ragged, flat float64 vertex arrays with ring and row offsets. It
+  reads only little-endian 2-D ISO Point/LineString/Polygon/
+  MultiLineString/MultiPolygon rows of exact length and refuses
+  everything else (code 0), so every caller keeps wkb_to_geom as its
+  fallback for those rows.
+
+Ragged is also the one piece format inside the render task: the
+geometry lanes emit their pieces as Ragged rows (int64 tile-local
+vertices) and the MVT framers take them as they are. Pieces become WKB
+only where they leave Python as a piece stream (engine.geometry_stage),
+through write_ragged, byte-identical to geom_to_wkb.
 """
 
 from __future__ import annotations
@@ -139,13 +146,18 @@ def _ranges(start, count):
 
 
 class Ragged(NamedTuple):
-    """A WKB column as ragged arrays (see read_ragged).
+    """Geometry rows as ragged arrays.
 
     code     : (n,) uint8 WKB type code per row, 0 = refused
-    xs, ys   : flat float64 vertices, rows and rings in order
+    xs, ys   : flat vertices, rows and rings in order (float64 as
+               read_ragged reads them, int64 as the geometry lanes emit)
     ring_off : (nr + 1,) vertex offsets per ring
     ring_int : (nr,) True for a polygon's interior rings
     row_off  : (n + 1,) ring offsets per row (refused rows have none)
+
+    A Point is one ring of one vertex; a MultiLineString, and a
+    MultiPoint (code 4, which read_ragged refuses but the scalar chain
+    emits), hold one ring per member.
     """
     code: np.ndarray
     xs: np.ndarray
@@ -155,13 +167,73 @@ class Ragged(NamedTuple):
     row_off: np.ndarray
 
     def take(self, rows):
-        """The given rows (ascending row numbers) as (xs, ys, ring_off,
-        row_off), offsets rebased to the selection."""
+        """The given rows, in the given order, as a Ragged."""
         nr = np.diff(self.row_off)[rows]
         rings = _ranges(self.row_off[rows], nr)
         k = np.diff(self.ring_off)[rings]
         v = _ranges(self.ring_off[rings], k)
-        return self.xs[v], self.ys[v], _cumsum0(k), _cumsum0(nr)
+        return Ragged(self.code[rows], self.xs[v], self.ys[v], _cumsum0(k),
+                      self.ring_int[rings], _cumsum0(nr))
+
+    def geom(self, i):
+        """Row i (not refused) as a geometry tuple, as wkb_to_geom
+        returns it."""
+        a, b = self.row_off[i:i + 2].tolist()
+        cut = self.ring_off[a:b + 1].tolist()
+        rings = [list(zip(self.xs[s:e].tolist(), self.ys[s:e].tolist()))
+                 for s, e in zip(cut, cut[1:])]
+        typ = _TYPES[int(self.code[i])]
+        if typ == "Point":
+            return (typ, rings[0][0])
+        if typ == "LineString":
+            return (typ, rings[0])
+        if typ == "MultiPoint":
+            return (typ, [r[0] for r in rings])
+        if typ == "MultiLineString":
+            return (typ, rings)
+        polys = []
+        for ring, interior in zip(rings, self.ring_int[a:b].tolist()):
+            if interior:
+                polys[-1].append(ring)
+            else:
+                polys.append([ring])
+        return (typ, (polys or [[]])[0] if typ == "Polygon" else polys)
+
+
+def ragged_of(geoms) -> Ragged:
+    """Geometry tuples as one Ragged (the inverse of Ragged.geom)."""
+    code, rings, ring_int, nrings = [], [], [], []
+    for typ, data in geoms:
+        if typ in ("Polygon", "MultiPolygon"):
+            polys = [data] if typ == "Polygon" else data
+            rr = [r for p in polys for r in p]
+            ring_int.extend(j > 0 for p in polys for j in range(len(p)))
+        else:
+            rr = {"Point": [[data]], "LineString": [data],
+                  "MultiPoint": [[p] for p in data]}.get(typ, data)
+            ring_int.extend([False] * len(rr))
+        code.append(_CODES[typ])
+        nrings.append(len(rr))
+        rings.extend(rr)
+    xy = np.array([p for r in rings for p in r]).reshape(-1, 2)
+    return Ragged(np.array(code, np.uint8), xy[:, 0], xy[:, 1],
+                  _cumsum0([len(r) for r in rings]),
+                  np.array(ring_int, bool), _cumsum0(nrings))
+
+
+def concat_ragged(parts) -> Ragged:
+    """Ragged parts (at least one) stacked row after row."""
+    cat = np.concatenate
+    vbase = _cumsum0([len(p.xs) for p in parts])
+    rbase = _cumsum0([len(p.ring_int) for p in parts])
+    return Ragged(
+        cat([p.code for p in parts]), cat([p.xs for p in parts]),
+        cat([p.ys for p in parts]),
+        cat([p.ring_off[:-1] + b for p, b in zip(parts, vbase)]
+            + [vbase[-1:]]),
+        cat([p.ring_int for p in parts]),
+        cat([p.row_off[:-1] + b for p, b in zip(parts, rbase)]
+            + [rbase[-1:]]))
 
 
 def _walk(buf, p, end, typ):
@@ -309,6 +381,62 @@ def read_ragged(ways) -> Ragged:
     at = (np.repeat(ring_at - 16 * ring_off[:-1], ring_k)
           + 16 * np.arange(tot, dtype=np.int64))
     return Ragged(typ, f64[at], f64[at + 8], ring_off, ring_int, row_off)
+
+
+def _u32(v):
+    return np.asarray(v, "<u4").view(np.uint8).reshape(-1, 4)
+
+
+def write_ragged(rag: Ragged) -> list:
+    """Every row of a Ragged as WKB bytes, identical to geom_to_wkb of
+    its geometry (Ragged.geom): little-endian ISO, float64 vertices,
+    Multi-of-one twins and empty rows kept (refused rows are not
+    written). A row is its header (byte order, type, ring or member
+    count), then per ring its member header (Multi*: byte order, type,
+    a MultiPolygon member's ring count) and vertex count (lines and
+    rings), then its vertices; headers come out of masked byte matrices
+    and are scattered with the vertices in one pass."""
+    c = rag.code.astype(np.int64)
+    nring = np.diff(rag.row_off)
+    row = np.repeat(np.arange(len(c)), nring)
+    cr = c[row]
+    ext = ~rag.ring_int
+    poly = np.cumsum(ext) - 1
+    mp_ext = (cr == 6) & ext
+    k = np.diff(rag.ring_off)
+
+    P = np.zeros((len(c), 9), np.uint8)
+    P[:, 0] = 1
+    P[:, 1] = c
+    P[:, 5:] = _u32(np.where(c == 6, np.bincount(row[ext],
+                                                 minlength=len(c)), nring))
+    PM = np.zeros(P.shape, bool)
+    PM[:, :5] = True
+    PM[:, 5:] = (c >= 3)[:, None]
+    R = np.zeros((len(cr), 13), np.uint8)
+    R[:, 0] = 1
+    R[:, 1] = np.maximum(cr - 3, 0)
+    R[:, 5:9] = _u32(np.bincount(poly)[poly])
+    R[:, 9:] = _u32(k)
+    RM = np.zeros(R.shape, bool)
+    RM[:, :5] = ((cr == 4) | (cr == 5) | mp_ext)[:, None]
+    RM[:, 5:9] = mp_ext[:, None]
+    RM[:, 9:] = ((cr != 1) & (cr != 4))[:, None]
+    V = np.empty((len(rag.xs), 2), "<f8")
+    V[:, 0] = rag.xs
+    V[:, 1] = rag.ys
+
+    plen, hl = PM.sum(axis=1), RM.sum(axis=1)
+    pcum, rcum = _cumsum0(plen), _cumsum0(hl + 16 * k)
+    row_at = rcum[rag.row_off] + pcum
+    ring_at = rcum[:-1] + pcum[row + 1]
+    out = np.empty(int(row_at[-1]), np.uint8)
+    out[_ranges(row_at[:-1], plen)] = P[PM]
+    out[_ranges(ring_at, hl)] = R[RM]
+    out[_ranges(ring_at + hl, 16 * k)] = V.view(np.uint8).ravel()
+    raw = out.tobytes()
+    cut = row_at.tolist()
+    return [raw[a:b] for a, b in zip(cut, cut[1:])]
 
 
 def _w_coords(out, pts):

@@ -118,13 +118,11 @@ def _init(kind):
     if kind == "geom_concave":
         _STATE["cc"] = _concave_batch()
     if kind in ("encode", "assemble"):
-        from tileigi_spark.engine import geometry_stage  # noqa: F401
-        from tileigi_spark.geom.batch import process_general
-        pdf = _STATE["pts"]
-        # precompute pieces once; the kernel then measures encode+gzip
         from tileigi_spark.engine import _points_fast_path
-        _STATE["pieces"] = _points_fast_path(
-            pdf, ["lang"], 32, 8)
+        from tileigi_spark.geom.wkb import write_ragged
+        # precompute pieces once; the kernel then measures encode+gzip
+        pieces, rag = _points_fast_path(_STATE["pts"], ["lang"], 32, 8)
+        _STATE["pieces"] = pieces.assign(geom=write_ragged(rag))
     if kind == "assemble":
         # pre-encode each tile's layer message once; the kernel then
         # measures ONLY the A2 work (tile frame + gzip + md5), the
@@ -148,14 +146,14 @@ def _kernel_geom_points(_):
     from tileigi_spark.engine import _points_fast_path
     n = 0
     for _rep in range(40):  # ~1s/task: pool overhead must not dominate
-        f = _points_fast_path(_STATE["pts"], ["lang"], 32, 8)
+        f, _ = _points_fast_path(_STATE["pts"], ["lang"], 32, 8)
         n += len(f)
     return n
 
 
 def _kernel_geom_concave(_):
     from tileigi_spark.geom.batch import process_general
-    f = process_general(_STATE["cc"], ["kind"], 32, 8, 14, 8)
+    f, _ = process_general(_STATE["cc"], ["kind"], 32, 8, 14, 8)
     return len(f)
 
 
