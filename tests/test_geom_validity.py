@@ -581,7 +581,7 @@ class TestAxisRectFastPath:
 def _all_pairs(pts):
     """The reference's all-pairs walk (validity.rs:187-219, 606-749):
     every (i, j), i < j, whose segment bboxes are not disjoint, in loop
-    order — the oracle of validity._bbox_pairs."""
+    order — the oracle of validity._ring_pairs."""
     out = []
     for i in range(len(pts) - 1):
         (x1, y1), (x2, y2) = pts[i], pts[i + 1]
@@ -595,9 +595,22 @@ def _all_pairs(pts):
     return out
 
 
+def _swept(pts):
+    """validity._ring_pairs, its blocks joined, in (i, j) order."""
+    import numpy as np
+
+    from tileigi_spark.geom import validity as V
+
+    blocks = list(V._ring_pairs(pts))
+    i = np.concatenate([a for a, _ in blocks]).tolist()
+    j = np.concatenate([b for _, b in blocks]).tolist()
+    return sorted(zip(i, j))
+
+
 def _star(n, r0, r1, c=2048, rot=0.0):
     """A closed star ring of n vertices, radius alternating r0/r1, in
-    integer tile coordinates."""
+    integer tile coordinates. With r0 much smaller than r1 it is a
+    sunburst of long spokes whose bboxes mostly overlap."""
     import math
     pts = [(round(c + (r0 if k % 2 == 0 else r1)
                   * math.cos(2 * math.pi * k / n + rot)),
@@ -608,55 +621,113 @@ def _star(n, r0, r1, c=2048, rot=0.0):
 
 
 def _rand_ring(rng, n, span):
-    pts = [(rng.randint(-span, span), rng.randint(-span, span))
-           for _ in range(n)]
+    """A closed ring of up to n random vertices, no two consecutive ones
+    equal (make_valid's dedup runs before its pair walks)."""
+    pts = []
+    for _ in range(n):
+        p = (rng.randint(-span, span), rng.randint(-span, span))
+        if not pts or p != pts[-1]:
+            pts.append(p)
+    while len(pts) > 1 and pts[-1] == pts[0]:
+        pts.pop()
     return pts + [pts[0]]
+
+
+def _rings(seed):
+    import random
+
+    rng = random.Random(seed)
+    rings = [_rand_ring(rng, n, span) for n in (3, 9, 33, 34, 120, 400)
+             for span in (3, 50, 4000)]
+    rings += [_star(n, rng.randint(100, 2000), rng.randint(50, 1900),
+                    rot=rng.random()) for n in (8, 40, 300, 1000)]
+    rings += [_star(n, rng.randint(0, 30), 2000, rot=rng.random())
+              for n in (40, 400)]
+    return [r for r in rings if len(r) > 2]
 
 
 @pytest.mark.parametrize("seed", range(6))
 def test_bbox_pairs_match_the_all_pairs_walk(seed):
-    """Same pairs in the same (i, j) order, below and above the sweep's
-    size cut, on random rings (many overlaps, collinear and repeated
-    vertices on a small grid) and spiky stars (few overlaps)."""
+    """The same pairs, each once: random rings (many overlaps, collinear
+    vertices on a small grid), spiky stars (few overlaps) and long-spoke
+    sunbursts (most segment bboxes overlap)."""
+    for pts in _rings(seed):
+        assert _swept(pts) == _all_pairs(pts), len(pts)
+
+
+def test_bbox_pair_blocks_cover_the_pairs_once(monkeypatch):
+    from tileigi_spark.geom import validity as V
+
+    for pts in (_star(600, 2000, 1990), _star(300, 10, 2000)):
+        want = _all_pairs(pts)
+        monkeypatch.setattr(V, "_PAIR_BLOCK", 7)
+        assert len(list(V._ring_pairs(pts))) > 1
+        assert _swept(pts) == want
+        monkeypatch.undo()
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_pair_walks_match_the_all_pairs_order(seed, monkeypatch):
+    """has_self_intersections, add_points_for_all_crossings and
+    make_valid on the sweep's pairs (in sweep order, in small blocks)
+    equal the same walks over every pair in the reference's (i, j)
+    order: the inserted vertices and their order do not depend on the
+    order the pairs are found in."""
     import random
 
+    import numpy as np
+
     from tileigi_spark.geom import validity as V
 
+    def walks(pts):
+        return (V.has_self_intersections(pts),
+                V.add_points_for_all_crossings(pts),
+                V.make_valid(("Polygon", [pts])))
+
+    def every_pair(pts):
+        i, j = np.triu_indices(len(pts) - 1, k=1)
+        yield i, j
+
+    # small random rings: noding a long one on a small grid can take
+    # minutes (its overlap inserts multiply the vertices each pass)
     rng = random.Random(seed)
-    rings = [_rand_ring(rng, n, span) for n in (2, 3, 9, 33, 34, 120, 400)
-             for span in (3, 50, 4000)]
+    rings = [_rand_ring(rng, n, span) for n in (4, 6, 9, 12)
+             for span in (3, 50, 4000) for _ in range(4)]
     rings += [_star(n, rng.randint(100, 2000), rng.randint(50, 1900),
-                    rot=rng.random()) for n in (8, 40, 300, 1000)]
-    for pts in rings:
-        assert V._bbox_pairs(pts) == _all_pairs(pts), len(pts)
+                    rot=rng.random()) for n in (8, 40, 300)]
+    rings += [_star(40, rng.randint(0, 30), 2000, rot=rng.random())]
+    monkeypatch.setattr(V, "_PAIR_BLOCK", 5)
+    swept = [walks(pts) for pts in rings]
+    monkeypatch.setattr(V, "_ring_pairs", every_pair)
+    for pts, got in zip(rings, swept):
+        assert got == walks(pts), pts
+    assert any(len(g[1]) > len(r) for r, g in zip(rings, swept))
 
 
-def test_bbox_pair_blocks_keep_the_order(monkeypatch):
-    from tileigi_spark.geom import validity as V
-
-    pts = _star(600, 2000, 1990)
-    want = _all_pairs(pts)
-    monkeypatch.setattr(V, "_PAIR_BLOCK", 7)
-    assert V._bbox_pairs(pts) == want
-
-
-def test_spiky_star_visits_only_overlapping_pairs(monkeypatch):
+def test_spiky_star_enumerates_only_overlapping_pairs(monkeypatch):
     """A 2k-vertex star (radius alternating 2000/1800 tile units) is
     simple: has_self_intersections and one add_points_for_all_crossings
-    pass each test only the segment pairs whose bboxes meet (~14 per
-    segment: a tooth's bbox spans its neighbours'), not the ~2M pairs
-    of the ring, which the sweep no longer walks in Python either."""
+    pass each enumerate only the segment pairs whose bboxes meet (~14
+    per segment: a tooth's bbox spans its neighbours'), not the ~2M
+    pairs of the ring, and test each of them once."""
     from tileigi_spark.geom import validity as V
 
-    calls = []
-    real = V.intersection
+    found, calls = [], []
+    sweep, real = V.segment_pairs, V.intersection
+
+    def counting_sweep(*a):
+        for i, j in sweep(*a):
+            found.append(len(i))
+            yield i, j
 
     def counting(*a):
         calls.append(a)
         return real(*a)
 
+    monkeypatch.setattr(V, "segment_pairs", counting_sweep)
     monkeypatch.setattr(V, "intersection", counting)
     pts = _star(2000, 2000, 1800)
     assert not V.has_self_intersections(pts)
     assert V.add_points_for_all_crossings(pts) == pts
-    assert len(calls) == 2 * len(_all_pairs(pts)) < 2 * 20 * len(pts)
+    assert len(calls) == sum(found) == 2 * len(_all_pairs(pts))
+    assert sum(found) < 2 * 20 * len(pts)

@@ -288,8 +288,8 @@ def _is_axis_rect_ring(r):
     return True
 
 
-# candidate pairs per segment_pairs block: bounds the sweep's index
-# temporaries whatever a ring's shape
+# candidate pairs per segment_pairs block (or one segment's candidates,
+# if more): bounds the sweep's index temporaries whatever a ring's shape
 _PAIR_BLOCK = 1 << 20
 
 
@@ -323,24 +323,14 @@ def segment_pairs(x1, y1, x2, y2, group):
         k0 = k1
 
 
-def _bbox_pairs(pts):
-    """The (i, j), i < j, of the segments pts[i]-pts[i + 1] whose closed
-    bboxes overlap, in (i, j) order: exactly the pairs the reference's
-    all-pairs loops (validity.rs:187-219, 606-749) do not skip. Rings of
-    up to 32 segments take the plain double loop (numpy's setup costs
-    more there), longer ones segment_pairs."""
-    m = len(pts) - 1
-    if m <= 32:
-        box = [(min(a[0], b[0]), max(a[0], b[0]), min(a[1], b[1]),
-                max(a[1], b[1])) for a, b in zip(pts, pts[1:])]
-        return [(i, j) for i in range(m) for j in range(i + 1, m)
-                if box[i][1] >= box[j][0] and box[i][0] <= box[j][1]
-                and box[i][3] >= box[j][2] and box[i][2] <= box[j][3]]
+def _ring_pairs(pts):
+    """segment_pairs of the segments pts[i]-pts[i + 1] of one ring: the
+    (i, j) the reference's all-pairs loops (validity.rs:187-219,
+    606-749) do not skip as bbox-disjoint, in sweep order, a block at a
+    time."""
     p = np.asarray(pts)
-    i, j = (np.concatenate(c) for c in zip(*segment_pairs(
-        p[:-1, 0], p[:-1, 1], p[1:, 0], p[1:, 1], np.zeros(m, np.int64))))
-    at = np.lexsort((j, i))
-    return list(zip(i[at].tolist(), j[at].tolist()))
+    return segment_pairs(p[:-1, 0], p[:-1, 1], p[1:, 0], p[1:, 1],
+                         np.zeros(len(p) - 1, np.int64))
 
 
 def has_self_intersections(pts):
@@ -350,12 +340,13 @@ def has_self_intersections(pts):
         return False
     if n == 5 and _is_axis_rect_ring(pts):
         return False
-    for i, j in _bbox_pairs(pts):
-        (x1, y1), (x2, y2) = pts[i], pts[i + 1]
-        (x3, y3), (x4, y4) = pts[j], pts[j + 1]
-        tag, _ = intersection(x1, y1, x2, y2, x3, y3, x4, y4)
-        if tag in (CROSSING, OVERLAPPING, TOUCHING):
-            return True
+    for a, b in _ring_pairs(pts):
+        for i, j in zip(a.tolist(), b.tolist()):
+            (x1, y1), (x2, y2) = pts[i], pts[i + 1]
+            (x3, y3), (x4, y4) = pts[j], pts[j + 1]
+            tag, _ = intersection(x1, y1, x2, y2, x3, y3, x4, y4)
+            if tag in (CROSSING, OVERLAPPING, TOUCHING):
+                return True
     return False
 
 
@@ -411,34 +402,41 @@ def add_points_for_all_crossings(pts):
         passes += 1
         coords_to_insert = {}
 
-        for i, j in _bbox_pairs(pts):
-            (x1, y1), (x2, y2) = pts[i], pts[i + 1]
-            (x3, y3), (x4, y4) = pts[j], pts[j + 1]
-            tag, payload = intersection(x1, y1, x2, y2, x3, y3, x4, y4)
-            if tag == CROSSING:
-                cp = payload
-                if (x1, y1) != cp and (x2, y2) != cp:
-                    coords_to_insert.setdefault(i, []).append(cp)
-                if (x3, y3) != cp and (x4, y4) != cp:
-                    coords_to_insert.setdefault(j, []).append(cp)
-            elif tag == OVERLAPPING:
-                o1, o2 = payload
-                if (x1, y1) != o1 and (x2, y2) != o1:
-                    coords_to_insert.setdefault(i, []).append(o1)
-                if (x1, y1) != o2 and (x2, y2) != o2:
-                    coords_to_insert.setdefault(i, []).append(o2)
-                if (x3, y3) != o1 and (x4, y4) != o1:
-                    coords_to_insert.setdefault(j, []).append(o1)
-                if (x3, y3) != o2 and (x4, y4) != o2:
-                    coords_to_insert.setdefault(j, []).append(o2)
-            elif tag == TOUCHING:
-                t = payload
-                if (x1, y1) == t or (x2, y2) == t:
-                    coords_to_insert.setdefault(j, []).append(t)
-                elif (x3, y3) == t or (x4, y4) == t:
-                    coords_to_insert.setdefault(i, []).append(t)
-                else:
-                    raise AssertionError("touch point not at any end")
+        def put(k, p):
+            # keyed by the pair: the reference's (i, j) loop order fixes
+            # each segment's insert order, kept by order_points' ties
+            coords_to_insert.setdefault(k, []).append((i, j, p))
+
+        for a, b in _ring_pairs(pts):
+            for i, j in zip(a.tolist(), b.tolist()):
+                (x1, y1), (x2, y2) = pts[i], pts[i + 1]
+                (x3, y3), (x4, y4) = pts[j], pts[j + 1]
+                tag, payload = intersection(x1, y1, x2, y2,
+                                            x3, y3, x4, y4)
+                if tag == CROSSING:
+                    cp = payload
+                    if (x1, y1) != cp and (x2, y2) != cp:
+                        put(i, cp)
+                    if (x3, y3) != cp and (x4, y4) != cp:
+                        put(j, cp)
+                elif tag == OVERLAPPING:
+                    o1, o2 = payload
+                    if (x1, y1) != o1 and (x2, y2) != o1:
+                        put(i, o1)
+                    if (x1, y1) != o2 and (x2, y2) != o2:
+                        put(i, o2)
+                    if (x3, y3) != o1 and (x4, y4) != o1:
+                        put(j, o1)
+                    if (x3, y3) != o2 and (x4, y4) != o2:
+                        put(j, o2)
+                elif tag == TOUCHING:
+                    t = payload
+                    if (x1, y1) == t or (x2, y2) == t:
+                        put(j, t)
+                    elif (x3, y3) == t or (x4, y4) == t:
+                        put(i, t)
+                    else:
+                        raise AssertionError("touch point not at any end")
 
         if not coords_to_insert:
             break
@@ -447,7 +445,8 @@ def add_points_for_all_crossings(pts):
         for idx in range(len(pts) - 1):
             if idx in coords_to_insert:
                 point1, point2 = pts[idx], pts[idx + 1]
-                new_points = coords_to_insert[idx]
+                new_points = [p for *_, p in sorted(coords_to_insert[idx],
+                                                    key=lambda t: t[:2])]
                 new_points.sort(key=functools.cmp_to_key(
                     lambda a, b: order_points((point1, point2), a, b)))
                 deduped = []

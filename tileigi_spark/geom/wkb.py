@@ -21,7 +21,7 @@ Ragged is also the one piece format inside the render task: the
 geometry lanes emit their pieces as Ragged rows (int64 tile-local
 vertices) and the MVT framers take them as they are. Pieces become WKB
 only where they leave Python as a piece stream (engine.geometry_stage),
-through write_ragged, byte-identical to geom_to_wkb.
+through write_ragged, geom_to_wkb of each row.
 """
 
 from __future__ import annotations
@@ -383,60 +383,10 @@ def read_ragged(ways) -> Ragged:
     return Ragged(typ, f64[at], f64[at + 8], ring_off, ring_int, row_off)
 
 
-def _u32(v):
-    return np.asarray(v, "<u4").view(np.uint8).reshape(-1, 4)
-
-
 def write_ragged(rag: Ragged) -> list:
-    """Every row of a Ragged as WKB bytes, identical to geom_to_wkb of
-    its geometry (Ragged.geom): little-endian ISO, float64 vertices,
-    Multi-of-one twins and empty rows kept (refused rows are not
-    written). A row is its header (byte order, type, ring or member
-    count), then per ring its member header (Multi*: byte order, type,
-    a MultiPolygon member's ring count) and vertex count (lines and
-    rings), then its vertices; headers come out of masked byte matrices
-    and are scattered with the vertices in one pass."""
-    c = rag.code.astype(np.int64)
-    nring = np.diff(rag.row_off)
-    row = np.repeat(np.arange(len(c)), nring)
-    cr = c[row]
-    ext = ~rag.ring_int
-    poly = np.cumsum(ext) - 1
-    mp_ext = (cr == 6) & ext
-    k = np.diff(rag.ring_off)
-
-    P = np.zeros((len(c), 9), np.uint8)
-    P[:, 0] = 1
-    P[:, 1] = c
-    P[:, 5:] = _u32(np.where(c == 6, np.bincount(row[ext],
-                                                 minlength=len(c)), nring))
-    PM = np.zeros(P.shape, bool)
-    PM[:, :5] = True
-    PM[:, 5:] = (c >= 3)[:, None]
-    R = np.zeros((len(cr), 13), np.uint8)
-    R[:, 0] = 1
-    R[:, 1] = np.maximum(cr - 3, 0)
-    R[:, 5:9] = _u32(np.bincount(poly)[poly])
-    R[:, 9:] = _u32(k)
-    RM = np.zeros(R.shape, bool)
-    RM[:, :5] = ((cr == 4) | (cr == 5) | mp_ext)[:, None]
-    RM[:, 5:9] = mp_ext[:, None]
-    RM[:, 9:] = ((cr != 1) & (cr != 4))[:, None]
-    V = np.empty((len(rag.xs), 2), "<f8")
-    V[:, 0] = rag.xs
-    V[:, 1] = rag.ys
-
-    plen, hl = PM.sum(axis=1), RM.sum(axis=1)
-    pcum, rcum = _cumsum0(plen), _cumsum0(hl + 16 * k)
-    row_at = rcum[rag.row_off] + pcum
-    ring_at = rcum[:-1] + pcum[row + 1]
-    out = np.empty(int(row_at[-1]), np.uint8)
-    out[_ranges(row_at[:-1], plen)] = P[PM]
-    out[_ranges(ring_at, hl)] = R[RM]
-    out[_ranges(ring_at + hl, 16 * k)] = V.view(np.uint8).ravel()
-    raw = out.tobytes()
-    cut = row_at.tolist()
-    return [raw[a:b] for a, b in zip(cut, cut[1:])]
+    """Every row of a Ragged (none refused) as WKB bytes: geom_to_wkb of
+    its geometry, Multi-of-one twins and empty rows kept."""
+    return [geom_to_wkb(rag.geom(i)) for i in range(len(rag.code))]
 
 
 def _w_coords(out, pts):
