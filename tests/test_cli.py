@@ -120,9 +120,12 @@ def test_cli_bbox_invalid_is_an_error(spark, tmp_path):
                       "--dest", str(tmp_path / "s"), "--bbox", bad])
 
 
-def test_cli_tile_list(spark, tmp_path):
+def test_cli_tile_list(spark, tmp_path, capsys):
     """--tile-list renders exactly the listed metatiles
-    (bin/tileigi.rs:80-84: one 'SCALE Z/X/Y' metatile per line)."""
+    (bin/tileigi.rs:80-84: one 'SCALE Z/X/Y' metatile per line), and the
+    run prints one progress line per zoom batch to stderr."""
+    import logging
+
     from tileigi_spark.io import TileStore
 
     src, cfg = _write_inputs(spark, tmp_path)
@@ -138,6 +141,10 @@ def test_cli_tile_list(spark, tmp_path):
            TileStore(dest).read_tiles(spark).collect()}
     assert got, "listed metatile must produce tiles"
     assert all(z == 4 and 0 <= x <= 7 and 8 <= y <= 15 for z, x, y in got)
+    err = capsys.readouterr().err
+    assert f"pyramid z4: {len(got)} tiles in " in err, err
+    # the stderr handler lives for the run only
+    assert not logging.getLogger("tileigi_spark").handlers
 
     # malformed lines and scale mismatches are hard errors
     bad = tmp_path / "bad.list"

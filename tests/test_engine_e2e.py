@@ -148,6 +148,22 @@ def test_single_metatile_matches_full_build(spark):
     assert one == expected
 
 
+def test_metatile_keys_are_a_local_relation(spark):
+    """single_metatile's key row and the CLI's --tile-list keys reach the
+    JVM as a LocalRelation (no Python worker unpickles them), typed as
+    build_tiles' metatile_keys expects."""
+    from tileigi_spark.engine import metatile_keys
+
+    keys = metatile_keys(spark, 4, [(0, 1), (3, 2)])
+    assert keys.schema.simpleString() == \
+        "struct<zoom:int,mtx:bigint,mty:bigint>"
+    plan = str(keys._jdf.queryExecution().optimizedPlan())
+    assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan, \
+        plan
+    assert [tuple(r) for r in keys.collect()] == [(4, 0, 1), (4, 3, 2)]
+    assert metatile_keys(spark, 4, []).count() == 0
+
+
 def test_shuffle_parts_byte_invariant(spark, feats):
     """Explicit wave-packed exchange partitioning (shuffle_parts) must
     not change a single tile byte vs the default AQE-coalesced plan —

@@ -302,6 +302,166 @@ def test_resume_loop_job_descriptions_and_tiles_per_s(spark, tmp_path):
         assert r.rows > 0 and tps == pytest.approx(r.rows / r.secs)
 
 
+def _staging_dirs(root):
+    return [p for p in os.listdir(root) if p.startswith("staging_z")] \
+        if os.path.isdir(root) else []
+
+
+def test_resume_loop_overlaps_two_batches(spark, tmp_path):
+    """Batch z+1 builds while batch z commits (its build_fn starts
+    before z's mark_done returns), but never more than two batches are
+    in flight: at most two staging tables exist at any time and a
+    batch's build starts only once the batch two before it committed."""
+    import threading
+
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    root = str(tmp_path / "overlap")
+    store = TileStore(root)
+    tiles = _anti_build(_pyramid_tiles(spark))
+    zooms = [0, 1, 2, 3]
+    started = {z: threading.Event() for z in zooms}
+    events, staging_seen = [], []
+    lock = threading.Lock()
+
+    def log(*ev):
+        with lock:
+            events.append(ev)
+            staging_seen.append(len(_staging_dirs(root)))
+
+    def build(zoom, done):
+        log("build", zoom)
+        started[zoom].set()
+        return tiles(zoom, done) if zoom < 3 else None
+
+    real_write, real_mark = store.write_staging, store.mark_done
+
+    def write_staging(df, zoom):
+        n = real_write(df, zoom)
+        log("staged", zoom)
+        return n
+
+    def mark_done(keys):
+        zoom = keys.select("zoom").first().zoom
+        # the next batch is building while this one commits
+        next_started = started[zoom + 1].wait(30)
+        real_mark(keys)
+        log("marked", zoom, next_started)
+
+    store.write_staging, store.mark_done = write_staging, mark_done
+    run_pyramid_with_checkpoint(spark, store, build, zooms, run_id="ovl")
+
+    marked = [e for e in events if e[0] == "marked"]
+    assert [e[1] for e in marked] == [0, 1, 2]      # zoom order
+    assert all(e[2] for e in marked), events
+    at = {e[:2]: i for i, e in enumerate(events)}
+    for z in (2, 3):
+        assert at[("build", z)] > at[("marked", z - 2)], events
+    assert max(staging_seen) <= 2, (staging_seen, events)
+    assert not _staging_dirs(root)
+    assert sorted((r.zoom, r.rows) for r in _metrics(spark, root, "ovl")) \
+        == [(0, 1), (1, 2), (2, 4)]
+
+
+def test_resume_loop_error_at_the_next_zoom_while_committing(spark,
+                                                             tmp_path):
+    """build_fn raises at z+1 while z commits: z's checkpoint keys and
+    metrics row land, no later zoom is built, the error propagates and
+    no staging table is left behind."""
+    import threading
+
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    root = str(tmp_path / "err")
+    store = TileStore(root)
+    tiles = _anti_build(_pyramid_tiles(spark))
+    failed = threading.Event()
+    calls = []
+
+    def build(zoom, done):
+        calls.append(zoom)
+        if zoom == 1:
+            failed.set()
+            raise RuntimeError("source vanished at z1")
+        return tiles(zoom, done)
+
+    real_mark = store.mark_done
+
+    def mark_done(keys):
+        assert failed.wait(30)
+        real_mark(keys)
+
+    store.mark_done = mark_done
+    with pytest.raises(RuntimeError, match="vanished at z1"):
+        run_pyramid_with_checkpoint(spark, store, build, [0, 1, 2, 3],
+                                    run_id="err")
+    assert sorted(calls) == [0, 1]
+    assert [tuple(r) for r in store.done_keys(spark).collect()] == \
+        [(0, 0, 0)]
+    assert [(r.zoom, r.rows) for r in _metrics(spark, root, "err")] == \
+        [(0, 1)]
+    assert not _staging_dirs(root)
+    assert spark.sparkContext.getLocalProperty(
+        "spark.job.description") is None
+
+
+def test_resume_loop_failing_staging_drops_every_staging_table(spark,
+                                                               tmp_path):
+    """A staging write that fails after the batch before it staged
+    leaves no staging table of either batch behind."""
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    root = str(tmp_path / "stagefail")
+    store = TileStore(root)
+    tiles = _anti_build(_pyramid_tiles(spark))
+    real_write = store.write_staging
+
+    def write_staging(df, zoom):
+        n = real_write(df, zoom)
+        if zoom == 2:
+            raise OSError("disk full at z2")
+        return n
+
+    store.write_staging = write_staging
+    with pytest.raises(OSError, match="disk full at z2"):
+        run_pyramid_with_checkpoint(spark, store, tiles, [0, 1, 2, 3],
+                                    run_id="sf")
+    assert not _staging_dirs(root)
+    assert sorted(tuple(r) for r in store.done_keys(spark).collect()) == \
+        [(0, 0, 0), (1, 0, 0), (1, 1, 0)]
+
+
+def test_resume_loop_logs_one_progress_line_per_batch(spark, tmp_path,
+                                                      caplog):
+    """One INFO line per batch on tileigi_spark.io, with the numbers of
+    the batch's metrics row (zoom, rows, secs, tiles/s)."""
+    import json
+    import logging
+    import re
+
+    from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
+
+    root = str(tmp_path / "progress")
+    caplog.set_level(logging.INFO, logger="tileigi_spark.io")
+    run_pyramid_with_checkpoint(spark, TileStore(root),
+                                _anti_build(_pyramid_tiles(spark)),
+                                [0, 1, 2], run_id="prog")
+    lines = [r.getMessage() for r in caplog.records
+             if r.name == "tileigi_spark.io" and r.levelno == logging.INFO]
+    got = []
+    for line in lines:
+        m = re.fullmatch(r"pyramid z(\d+): (\d+) tiles in ([\d.]+) s "
+                         r"\(([\d.]+) tiles/s\)", line)
+        assert m, line
+        got.append((int(m[1]), int(m[2]), float(m[3]), float(m[4])))
+    rows = sorted(_metrics(spark, root, "prog"), key=lambda r: r.zoom)
+    assert [g[:2] for g in got] == [(r.zoom, r.rows) for r in rows]
+    for (_, _, secs, tps), r in zip(got, rows):
+        assert secs == pytest.approx(r.secs, abs=0.005)
+        assert tps == pytest.approx(json.loads(r.extra)["tiles_per_s"],
+                                    abs=0.05)
+
+
 def test_mbtiles_export(spark, tmp_path):
     from tileigi_spark.io import export_mbtiles
 

@@ -524,3 +524,76 @@ def test_batch_table_reads_log_no_sink_probe_warning(spark, table,
         appender.stop()
     assert "Assume no metadata directory" not in str(log.toString())
     assert spark.conf.get(_SINK_LOG_IGNORED, None) is None
+
+
+def test_concurrent_batch_reads_leave_the_sink_switch_unset(spark):
+    """Two threads reading at once take turns on the session-wide probe
+    switch: thread B must not save A's temporary `true` and restore it
+    after A unset it. Here A's read waits (up to 2 s) for B to enter its
+    read and B's read waits for A to finish; without the lock B restores
+    `true` for good."""
+    import threading
+
+    from tileigi_spark.partition import _SINK_LOG_IGNORED, read_batch_parquet
+
+    a_inside, b_inside, a_done = (threading.Event() for _ in range(3))
+
+    class Reader:
+        def __init__(self, signal, wait_for):
+            self.signal, self.wait_for = signal, wait_for
+
+        def parquet(self, path):
+            self.signal.set()
+            self.wait_for.wait(2)
+            return path
+
+    def run_a():
+        read_batch_parquet(spark, Reader(a_inside, b_inside), "a")
+        a_done.set()
+
+    assert spark.conf.get(_SINK_LOG_IGNORED, None) is None
+    a = threading.Thread(target=run_a)
+    b = threading.Thread(target=read_batch_parquet,
+                         args=(spark, Reader(b_inside, a_done), "b"))
+    a.start()
+    assert a_inside.wait(30)
+    b.start()
+    for t in (a, b):
+        t.join(30)
+        assert not t.is_alive()
+    assert spark.conf.get(_SINK_LOG_IGNORED, None) is None
+
+
+def test_many_threads_reading_leave_the_sink_switch_unset(spark):
+    """Stress: 8 threads (more than cores) each make 10 reads with a
+    short switch interval; the switch is `true` inside every read and
+    unset once all are done."""
+    import sys
+    import threading
+
+    from tileigi_spark.partition import _SINK_LOG_IGNORED, read_batch_parquet
+
+    seen = []
+
+    class Reader:
+        def parquet(self, path):
+            seen.append(spark.conf.get(_SINK_LOG_IGNORED, None))
+            return path
+
+    def reads():
+        for i in range(10):
+            read_batch_parquet(spark, Reader(), str(i))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reads) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert seen == ["true"] * 80
+    assert spark.conf.get(_SINK_LOG_IGNORED, None) is None

@@ -327,10 +327,10 @@ def _reader_jobs(spark, after: int):
 
 def test_resume_loop_over_cells_runs_no_per_zoom_inference(spark, cells,
                                                            tmp_path):
-    """Over a cell layout, the loop's only reader jobs are the eager
-    `done` re-reads after each commit (kept: a corrupt checkpoint must
-    raise there); the layout read and the staging read-back take their
-    schemas from the sidecar and the staging write."""
+    """Over a cell layout, the loop runs no reader job: the checkpoint is
+    read once, before the loop (absent here), and the layout read and
+    the staging read-back take their schemas from the sidecar and the
+    staging write."""
     from tileigi_spark.mercator import bbox_lonlat_to_merc
 
     store = TileStore(str(tmp_path / "store"))
@@ -349,7 +349,7 @@ def test_resume_loop_over_cells_runs_no_per_zoom_inference(spark, cells,
     metrics = spark.read.parquet(str(tmp_path / "store" / "metrics"))
     commits = metrics.filter(F.col("rows") > 0).count()
     assert commits == len(zooms)
-    assert reads == commits
+    assert reads == 0
     # and the loop wrote what a single build renders
     one = build_tiles(spark, {"feats": read_cell_partitioned(
         spark, cells, bbox_merc=bbox_lonlat_to_merc(BBOX), minzoom=6)},

@@ -316,6 +316,41 @@ def test_pip_non_axis_quad_takes_the_exact_refine(spark):
     _assert_points_probe_a_broadcast_cover(plan)
 
 
+@pytest.mark.parametrize("quad", [False, True], ids=["rects", "quad"])
+def test_pip_polygon_relation_is_a_local_relation(spark, quad):
+    """The one-row-per-polygon relation reaches the JVM as a
+    LocalRelation (no Python worker unpickles it) and carries string,
+    int, bigint and double attributes, NULLs included, unchanged."""
+    import pyarrow as pa
+
+    _, prows = _point_grid(spark, 400)
+    # points as an Arrow table too, so any Python-RDD scan in the plan
+    # would be the polygon relation's
+    points = spark.createDataFrame(pa.table(
+        dict(zip(("pid", "mx", "my"), map(list, zip(*prows))))))
+    _, rows = _pip_table(spark, quad)
+    attrs = [("name'" + str(aid) if aid % 3 else None,
+              None if aid % 4 == 1 else aid - 100,
+              None if aid % 5 == 2 else aid * 2 ** 33,
+              None if aid % 3 == 1 else aid / 7.0)
+             for aid, _ in rows]
+    polys = spark.createDataFrame(
+        [(aid, *a, w) for (aid, w), a in zip(rows, attrs)],
+        "area_id long, name string, rank int, big bigint, score double, "
+        "way binary")
+    got = point_in_polygon_join(points, polys, index_zoom=5)
+    plan = str(got._jdf.queryExecution().optimizedPlan())
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert got.columns == ["pid", "mx", "my", "area_id", "name", "rank",
+                           "big", "score"]
+    expected = sorted(
+        (pid, mx, my, aid, *a) for pid, mx, my in prows
+        for (aid, w), a in zip(rows, attrs)
+        if point_in_polygon(mx, my, wkb_to_geom(w)))
+    assert sorted(tuple(r) for r in got.collect()) == expected
+    assert len(expected) > 20
+
+
 def test_knn_staging_cleanup_failure_logs_a_named_fallback(spark, tmp_path,
                                                            caplog):
     """_fs_delete is best effort: a round directory the FileSystem API

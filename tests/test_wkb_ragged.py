@@ -16,7 +16,7 @@ from tileigi_spark import engine
 from tileigi_spark.engine import _collect_coords, _int_geom, _mvt_value
 from tileigi_spark.geom import mvt
 from tileigi_spark.geom.wkb import geom_to_wkb, ragged_of, read_ragged, \
-    wkb_to_geom, write_ragged
+    wkb_to_geom, write_points, write_ragged
 
 CODES = {"Point": 1, "LineString": 2, "Polygon": 3, "MultiPoint": 4,
          "MultiLineString": 5, "MultiPolygon": 6}
@@ -351,3 +351,24 @@ def test_encode_walk_reads_each_batch_once(monkeypatch):
                  for p, t in ptypes[layer].items()})
         expected[(z, x, y, layer)] = enc.to_bytes()
     assert got == expected
+
+
+def test_write_points_matches_the_scalar_writer():
+    """write_points, the vectorized point writer, is byte-identical to
+    geom_to_wkb(("Point", (x, y))) for random doubles, signed zeros,
+    subnormals, the extremes and non-finite values, and reads back."""
+    rng = np.random.default_rng(11)
+    special = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308 / 3,
+               2.2250738585072014e-308, 1.7976931348623157e308, -1e-300,
+               np.inf, -np.inf]
+    xs = np.concatenate([rng.normal(0, 2e7, 200), special,
+                         rng.permutation(special)])
+    ys = np.concatenate([rng.normal(0, 2e7, 200), rng.permutation(special),
+                         special])
+    got = write_points(xs, ys)
+    assert got == [geom_to_wkb(("Point", (x, y)))
+                   for x, y in zip(xs.tolist(), ys.tolist())]
+    back = read_ragged(got)
+    assert (back.code == 1).all()
+    assert back.xs.view(np.uint64).tolist() == xs.view(np.uint64).tolist()
+    assert write_points(np.array([]), np.array([])) == []

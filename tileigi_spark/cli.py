@@ -17,6 +17,9 @@ bin/tileigi.rs:80-84), destination type, metatile scale, resume
 from __future__ import annotations
 
 import argparse
+import contextlib
+import logging
+import sys
 
 
 def parse_tile_list(path: str, metatile_scale: int):
@@ -77,11 +80,34 @@ def main(argv=None):
                         "wall time). Default: spark.sql.shuffle.partitions"
                         " + AQE")
     args = p.parse_args(argv)
+    with _progress_to_stderr():
+        _run(p, args)
 
+
+@contextlib.contextmanager
+def _progress_to_stderr():
+    """The package's INFO lines (one per zoom batch from the resume loop,
+    as the reference's printer.rs prints per-zoom progress) go to stderr
+    for the length of one CLI run."""
+    log = logging.getLogger("tileigi_spark")
+    handler = logging.StreamHandler(sys.stderr)
+    handler.setLevel(logging.INFO)
+    level = log.level
+    log.addHandler(handler)
+    if log.getEffectiveLevel() > logging.INFO:
+        log.setLevel(logging.INFO)
+    try:
+        yield
+    finally:
+        log.removeHandler(handler)
+        log.setLevel(level)
+
+
+def _run(p: argparse.ArgumentParser, args: argparse.Namespace) -> None:
     from pyspark.sql import SparkSession
 
     from .config import layers_from_file
-    from .engine import build_tiles
+    from .engine import build_tiles, metatile_keys
     from .io import (TileStore, export_mbtiles, run_pyramid_with_checkpoint,
                      write_tilejson)
 
@@ -144,9 +170,7 @@ def main(argv=None):
     def build_zoom(zoom, done):
         mt_keys = None
         if tile_list is not None:
-            mt_keys = spark.createDataFrame(
-                [(zoom, mx, my) for (mx, my) in sorted(tile_list[zoom])],
-                "zoom int, mtx long, mty long")
+            mt_keys = metatile_keys(spark, zoom, sorted(tile_list[zoom]))
         return build_tiles(
             spark, sources, layers, zoom, zoom,
             metatile_scale=args.metatile_scale,

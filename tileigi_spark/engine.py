@@ -53,6 +53,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -982,11 +983,22 @@ def single_metatile(spark: SparkSession, sources: dict[str, DataFrame],
     workflows. Same plan as the full pyramid, restricted by a one-row
     broadcast semi-join; identical bytes to the full build (guaranteed by
     the partitioning-independent canonical encode order)."""
-    keys = spark.createDataFrame([(zoom, mtx, mty)],
-                                 "zoom int, mtx long, mty long")
     return build_tiles(spark, sources, layers, zoom, zoom,
                        metatile_scale=metatile_scale, compress=compress,
-                       metatile_keys=keys)
+                       metatile_keys=metatile_keys(spark, zoom,
+                                                   [(mtx, mty)]))
+
+
+def metatile_keys(spark: SparkSession, zoom: int, mts) -> DataFrame:
+    """build_tiles' `metatile_keys` frame (zoom int, mtx long, mty long):
+    one row per (mtx, mty) of `mts` at `zoom`. It goes to the JVM as an
+    Arrow table, so the plan reads a LocalRelation and no Python worker
+    runs to unpickle the rows."""
+    mts = list(mts)
+    return spark.createDataFrame(pa.table({
+        "zoom": pa.array([zoom] * len(mts), pa.int32()),
+        "mtx": pa.array([x for x, _ in mts], pa.int64()),
+        "mty": pa.array([y for _, y in mts], pa.int64())}))
 
 
 def tile_driver(spark: SparkSession, zoom: int,

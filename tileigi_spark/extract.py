@@ -163,7 +163,7 @@ def geotag_pages(pages_df, text_col: str = "text", url_col: str = "url"):
     """
     from pyspark.sql import functions as F
     from .mercator import lonlat_to_merc
-    from .geom.wkb import geom_to_wkb
+    from .geom.wkb import write_points
 
     # JVM-side prefilter: every coordinate mention contains a
     # digit.digit token, so the no-match majority of a real crawl is
@@ -192,19 +192,6 @@ def geotag_pages(pages_df, text_col: str = "text", url_col: str = "url"):
             lat = ext["lat"][mask].values
             lon = ext["lon"][mask].values
             mx, my = lonlat_to_merc(lon, lat)
-            # vectorized WKB assembly (little-endian point, 21 bytes) —
-            # byte-identical to geom_to_wkb(("Point", (x, y)))
-            m = len(mx)
-            buf = np.empty((m, 21), dtype=np.uint8)
-            buf[:, 0] = 1   # little-endian
-            buf[:, 1] = 1   # wkbPoint
-            buf[:, 2:5] = 0
-            buf[:, 5:13] = (np.ascontiguousarray(mx, dtype="<f8")
-                            .view(np.uint8).reshape(-1, 8))
-            buf[:, 13:21] = (np.ascontiguousarray(my, dtype="<f8")
-                             .view(np.uint8).reshape(-1, 8))
-            raw = buf.tobytes()
-            ways = [raw[i * 21:(i + 1) * 21] for i in range(m)]
             yield pd.DataFrame({
                 "url": sub[url_col].values,
                 "lang": sub["lang"].values if "lang" in sub else None,
@@ -213,7 +200,7 @@ def geotag_pages(pages_df, text_col: str = "text", url_col: str = "url"):
                 "mx": mx,
                 "my": my,
                 "span": ext["span"][mask].values,
-                "way": ways,
+                "way": write_points(mx, my),
             })
 
     return pages_df.mapInPandas(run, schema=out_schema)

@@ -22,6 +22,10 @@ geometry lanes emit their pieces as Ragged rows (int64 tile-local
 vertices) and the MVT framers take them as they are. Pieces become WKB
 only where they leave Python as a piece stream (engine.geometry_stage),
 through write_ragged, geom_to_wkb of each row.
+
+Two writers share the format: geom_to_wkb (one geometry, any type) and
+write_points, its vectorized twin for a column of points (the extract
+front-end's geotagged pages).
 """
 
 from __future__ import annotations
@@ -387,6 +391,23 @@ def write_ragged(rag: Ragged) -> list:
     """Every row of a Ragged (none refused) as WKB bytes: geom_to_wkb of
     its geometry, Multi-of-one twins and empty rows kept."""
     return [geom_to_wkb(rag.geom(i)) for i in range(len(rag.code))]
+
+
+def write_points(xs, ys) -> list:
+    """Points (xs[i], ys[i]) as 21-byte little-endian WKB, one bytes per
+    row, assembled as one byte matrix: byte-identical to
+    geom_to_wkb(("Point", (x, y))) for every double, -0.0, NaN and
+    subnormals included."""
+    xs = np.ascontiguousarray(xs, dtype="<f8")
+    ys = np.ascontiguousarray(ys, dtype="<f8")
+    n = len(xs)
+    buf = np.zeros((n, 21), dtype=np.uint8)
+    buf[:, 0] = 1   # little-endian
+    buf[:, 1] = 1   # wkbPoint
+    buf[:, 5:13] = xs.view(np.uint8).reshape(-1, 8)
+    buf[:, 13:21] = ys.view(np.uint8).reshape(-1, 8)
+    raw = buf.tobytes()
+    return [raw[i:i + 21] for i in range(0, 21 * n, 21)]
 
 
 def _w_coords(out, pts):

@@ -13,20 +13,37 @@ that writes its staging table: the batch's row count is observed on that
 write, so an empty batch reads nothing back and commits nothing, and
 its metrics row waits to be appended with the next commit's row (or at
 the end of the loop) as one JVM-built append.
+
+The resume loop keeps two zoom batches in flight: while batch z stages
+and commits, batch z+1 already builds its plan and renders into its own
+staging table on a helper thread, so each batch's fixed driver and job
+cost overlaps the batch before it. The checkpoint is read once, before
+the loop (zoom batches are disjoint, so no batch needs a key this run
+commits). Commits stay in zoom order and checkpoint-last, so a crash
+loses at most the two uncommitted batches. The window is two deep, not
+every zoom at once: under FIFO scheduling a commit queues behind every
+later zoom's tasks, so unbounded submission would let a crash lose
+every zoom.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from . import sqllit
 from .partition import read_batch_parquet
+
+_log = logging.getLogger(__name__)
 
 # the TileStore `metrics` table's columns, in order
 _METRICS_SCHEMA = (("run_id", "string"), ("stage", "string"),
@@ -187,53 +204,104 @@ def run_pyramid_with_checkpoint(spark: SparkSession, store: TileStore,
     keys, stage the batch to storage in ONE pass (which also counts
     it), then derive the map/images writes and the checkpoint keys FROM
     the staged table (never from a re-execution or an executor-memory
-    cache of tile bytes). The checkpoint append is last, so a crash
-    anywhere re-renders at most one batch; duplicate rows from the crash
-    window are collapsed by read_tiles (content-addressed tiles make any
-    copy correct).
+    cache of tile bytes). The checkpoint append is last in each commit;
+    duplicate rows from the crash window are collapsed by read_tiles
+    (content-addressed tiles make any copy correct).
+
+    The finished keys are read once, before the loop, and every batch's
+    `build_fn(zoom, done)` gets that frame: the `zooms` are distinct, so
+    no batch needs a key this run commits. Two batches are in flight:
+    while this thread waits for batch z's render+stage and commits it,
+    batch z+1 builds and stages on a helper thread (which inherits the
+    caller's local properties), and batch z+2 starts only once z has
+    committed or staged 0 rows. Commits run in zoom order on this
+    thread, so a crash loses at most two uncommitted batches. The depth
+    is two, not every zoom at once: under FIFO scheduling a commit
+    queues behind every later zoom's tasks, so unbounded submission
+    would let a crash lose every zoom. An error in a batch (from
+    build_fn or its staging write) surfaces once the batches before it
+    have committed; no later batch starts, the in-flight one is waited
+    for, and every staging table the loop wrote is dropped.
 
     A batch whose staging write counted no rows commits nothing: no
-    staging read-back, tile write, checkpoint mark or `done` re-read.
-    Its metrics row is held and appended together with the next
-    commit's row, or at the end of the loop. A crash can therefore only
-    lose the rows of batches that checkpointed nothing, and the resume
-    renders those batches again and records them then.
+    staging read-back, tile write or checkpoint mark. Its metrics row
+    is held and appended together with the next commit's row, or at the
+    end of the loop. A crash can therefore only lose the rows of batches
+    that checkpointed nothing, and the resume renders those batches
+    again and records them then.
 
     Each step runs under a job description (`pyramid z{zoom}: render+
-    stage`, `... commit`, `... metrics`), and each metrics row's `extra`
-    carries the batch's `tiles_per_s`; the caller's job description is
-    restored afterwards."""
+    stage` on the helper thread, `... commit` and `... metrics` here),
+    and each metrics row's `extra` carries the batch's `tiles_per_s`
+    (rows over the seconds from its build to its commit); the same
+    numbers go to one INFO line per batch on this module's logger. The
+    caller's job description is restored afterwards."""
     sc = spark.sparkContext
     caller_desc = sc.getLocalProperty("spark.job.description")
+
+    def render_stage(zoom, done):
+        t0 = time.time()
+        sc.setJobDescription(f"pyramid z{zoom}: render+stage")
+        tiles = build_fn(zoom, done)
+        return t0, None if tiles is None else store.write_staging(tiles, zoom)
+
     held: list[dict] = []
+    staged: set[int] = set()   # zooms whose staging table may exist
+    inflight: deque = deque()  # (zoom, future) in zoom order, at most 2
+    todo = iter(zooms)
     try:
         sc.setJobDescription("pyramid: read checkpoint")
         done = store.done_keys(spark)
-        for zoom in zooms:
-            t0 = time.time()
-            sc.setJobDescription(f"pyramid z{zoom}: render+stage")
-            tiles = build_fn(zoom, done)
-            if tiles is None:
-                continue
-            n = store.write_staging(tiles, zoom)
-            if n:
-                sc.setJobDescription(f"pyramid z{zoom}: commit")
-                staged = store.read_staging(spark, zoom)
-                store.write_tiles(staged)
-                store.mark_done(staged)
-                done = store.done_keys(spark)
-            secs = time.time() - t0
-            held.append({"run_id": run_id, "stage": "pyramid",
-                         "zoom": zoom, "rows": n, "secs": secs,
-                         "extra": {"tiles_per_s": n / secs if secs else 0.0}})
-            if n:
-                sc.setJobDescription(f"pyramid z{zoom}: metrics")
-                store.append_metrics(spark, held)
-                held = []
-            store.drop_staging(zoom, spark)
+        with ThreadPoolExecutor(max_workers=2,
+                                thread_name_prefix="pyramid") as pool:
+            def start_next():
+                zoom = next(todo, None)
+                if zoom is not None:
+                    staged.add(zoom)
+                    inflight.append((zoom, pool.submit(
+                        inheritable_thread_target(spark)(render_stage),
+                        zoom, done)))
+
+            start_next()
+            start_next()
+            while inflight:
+                zoom, fut = inflight.popleft()
+                t0, n = fut.result()
+                if n is not None:
+                    if n:
+                        sc.setJobDescription(f"pyramid z{zoom}: commit")
+                        staged_tiles = store.read_staging(spark, zoom)
+                        store.write_tiles(staged_tiles)
+                        store.mark_done(staged_tiles)
+                    secs = time.time() - t0
+                    tps = n / secs if secs else 0.0
+                    _log.info("pyramid z%d: %d tiles in %.2f s "
+                              "(%.1f tiles/s)", zoom, n, secs, tps)
+                    held.append({"run_id": run_id, "stage": "pyramid",
+                                 "zoom": zoom, "rows": n, "secs": secs,
+                                 "extra": {"tiles_per_s": tps}})
+                    if n:
+                        sc.setJobDescription(f"pyramid z{zoom}: metrics")
+                        store.append_metrics(spark, held)
+                        held = []
+                    store.drop_staging(zoom, spark)
+                staged.discard(zoom)
+                # a batch already failed: start nothing after it
+                if not any(f.done() and f.exception() is not None
+                           for _, f in inflight):
+                    start_next()
         if held:
             sc.setJobDescription(f"pyramid z{held[-1]['zoom']}: metrics")
             store.append_metrics(spark, held)
+    except BaseException:
+        # the pool has waited for the in-flight batch; no writer is left
+        for zoom, fut in inflight:
+            if fut.exception() is not None:
+                _log.warning("pyramid z%d failed as well: %r", zoom,
+                             fut.exception())
+        for zoom in staged:
+            store.drop_staging(zoom, spark)
+        raise
     finally:
         sc.setJobDescription(caller_desc)
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import math
+import threading
 from typing import Optional
 
 from pyspark.errors import AnalysisException
@@ -243,6 +244,7 @@ def _reader(spark: SparkSession, meta: dict):
 
 
 _SINK_LOG_IGNORED = "spark.sql.streaming.fileStreamSink.ignoreMetadata"
+_SINK_LOG_LOCK = threading.Lock()
 
 
 def read_batch_parquet(spark: SparkSession, reader, path: str) -> DataFrame:
@@ -252,17 +254,21 @@ def read_batch_parquet(spark: SparkSession, reader, path: str) -> DataFrame:
     with a FileNotFoundException stack although nothing is wrong. Batch
     tables have no such log, so the probe is switched off for the call
     and the session's setting restored after it; the read itself (and
-    its PATH_NOT_FOUND for an absent path) is unchanged."""
+    its PATH_NOT_FOUND for an absent path) is unchanged. The setting is
+    session-wide, so concurrent reads (the resume loop reads from two
+    threads) take turns: one thread's restore must not land inside
+    another's read."""
     conf = spark.conf
-    prev = conf.get(_SINK_LOG_IGNORED, None)
-    conf.set(_SINK_LOG_IGNORED, "true")
-    try:
-        return reader.parquet(path)
-    finally:
-        if prev is None:
-            conf.unset(_SINK_LOG_IGNORED)
-        else:
-            conf.set(_SINK_LOG_IGNORED, prev)
+    with _SINK_LOG_LOCK:
+        prev = conf.get(_SINK_LOG_IGNORED, None)
+        conf.set(_SINK_LOG_IGNORED, "true")
+        try:
+            return reader.parquet(path)
+        finally:
+            if prev is None:
+                conf.unset(_SINK_LOG_IGNORED)
+            else:
+                conf.set(_SINK_LOG_IGNORED, prev)
 
 
 def _fs(spark: SparkSession, path: str, child: Optional[str] = None):

@@ -17,6 +17,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, Window, functions as F
@@ -146,8 +147,8 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     # single driver action: collect capped at the broadcast limit + 1 —
     # the sentinel row both detects the over-limit case and avoids a
     # separate count() job over the polygon table
-    rows = polygons.limit(max_broadcast_polys + 1).collect()
-    if len(rows) > max_broadcast_polys:
+    table = polygons.limit(max_broadcast_polys + 1).toArrow()
+    if table.num_rows > max_broadcast_polys:
         return (_pip_join_streamed(points, polygons, index_zoom,
                                    px_col, py_col)
                 .select(*points.columns, *poly_cols))
@@ -157,32 +158,38 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     # rect-ness from the geometry router's axis-rect predicate on
     # one-ring Polygon / MultiPolygon-of-one rows (rows it refuses are
     # not rects and take the exact Python refine)
-    ways = [None if r["way"] is None else bytes(r["way"]) for r in rows]
+    ways = table.column("way").to_pylist()
     rag = read_ragged(ways)
     bb = _bbox_arrays(ways, rag)
     rects, rx, ry = axis_rect_rows(rag, (3, 6))
-    rect_of = dict(zip(rects.tolist(), zip(
-        rx.min(axis=1).tolist(), ry.min(axis=1).tolist(),
-        rx.max(axis=1).tolist(), ry.max(axis=1).tolist())))
-    pids = np.flatnonzero(~np.isnan(bb["xmin"])).tolist()
+    is_rect = np.zeros(len(ways), dtype=bool)
+    is_rect[rects] = True
+    corner = {}
+    for c, v in (("_rx0", rx.min(axis=1)), ("_ry0", ry.min(axis=1)),
+                 ("_rx1", rx.max(axis=1)), ("_ry1", ry.max(axis=1))):
+        corner[c] = np.full(len(ways), np.nan)
+        corner[c][rects] = v
+    pids = np.flatnonzero(~np.isnan(bb["xmin"]))
     bbox = ("_xmin", "_ymin", "_xmax", "_ymax")
-    corners = ("_rx0", "_ry0", "_rx1", "_ry1")
     schema = StructType(
         [StructField("_pid", IntegerType(), False)]
         + [StructField(c, DoubleType(), False) for c in bbox]
-        + [StructField(c, DoubleType()) for c in corners]
+        + [StructField(c, DoubleType()) for c in corner]
         + [polygons.schema[c] for c in poly_cols])
-    bounds = np.column_stack(
-        [bb[k] for k in ("xmin", "ymin", "xmax", "ymax")]).tolist()
-    poly_df = spark.createDataFrame(
-        [(pid, *bounds[pid], *rect_of.get(pid, (None,) * 4),
-          *(rows[pid][c] for c in poly_cols)) for pid in pids], schema)
+    # an Arrow table reaches the JVM as a LocalRelation: no Python
+    # worker runs to unpickle the rows when the broadcast is built
+    attrs = table.select(poly_cols).take(pa.array(pids))
+    poly_df = spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(pids, pa.int32())]
+        + [pa.array(bb[k][pids]) for k in ("xmin", "ymin", "xmax", "ymax")]
+        + [pa.array(v[pids], mask=~is_rect[pids]) for v in corner.values()]
+        + attrs.columns, names=schema.names), schema)
     cover = bbox_cover_cells(poly_df, index_zoom, *bbox).drop(*bbox)
     px, py = F.col(px_col), F.col(py_col)
     cand = (points.withColumn("cell", cell_col(px, py, index_zoom))
             .join(F.broadcast(cover), on="cell", how="inner"))
 
-    if all(pid in rect_of for pid in pids):
+    if is_rect[pids].all():
         # Every polygon is a single axis-aligned rectangle ring (the
         # admin-box / tile-bounds norm): the even-odd refine collapses to
         # a pure-JVM half-open interval test and the whole join runs as
@@ -195,7 +202,8 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
         inside = (((F.col("_ry0") > py) != (F.col("_ry1") > py))
                   & ((F.col("_rx0") > px) != (F.col("_rx1") > px)))
     else:
-        bc = spark.sparkContext.broadcast({pid: ways[pid] for pid in pids})
+        bc = spark.sparkContext.broadcast(
+            {pid: ways[pid] for pid in pids.tolist()})
 
         @F.pandas_udf(BooleanType())
         def refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:
