@@ -62,6 +62,39 @@ Layer:
     assert all(v in ("Number", "String", "Boolean") for v in fields.values())
 
 
+def test_cli_tilejson_fields_match_tile_tags(spark, tmp_path):
+    """TileJSON lists, per layer, exactly the properties its tiles carry:
+    a source's precomputed bbox columns feed the cover and are not
+    fields, and a SQL layer's fields come from its query."""
+    from tileigi_spark.engine import with_bbox
+    from tileigi_spark.geom import mvt
+    from tileigi_spark.io import TileStore
+
+    src = str(tmp_path / "features")
+    with_bbox(features_df(spark, 60)).write.parquet(src)
+    cfg = tmp_path / "layers.yml"
+    cfg.write_text(_CFG + """
+  - id: labels
+    properties: {minzoom: 0, maxzoom: 14, buffer-size: 2}
+    Datasource:
+      table: "(SELECT feature_id, way, name AS label, population FROM feats) AS data"
+""")
+    dest, tj = str(tmp_path / "store"), tmp_path / "metadata.json"
+    cli_main(["--config", str(cfg), "--source", f"feats={src}",
+              "--dest", dest, "--minzoom", "0", "--maxzoom", "1",
+              "--no-compress", "--tilejson", str(tj)])
+
+    fields = {layer["id"]: set(layer["fields"]) for layer in
+              json.loads(tj.read_text())["vector_layers"]}
+    keys = {}
+    for r in TileStore(dest).read_tiles(spark).collect():
+        for layer in mvt.decode_tile(bytes(r["tile"])):
+            keys.setdefault(layer["name"], set()).update(layer["keys"])
+    assert fields == keys
+    assert fields["labels"] == {"label", "population"}
+    assert not fields["base"] & {"xmin", "ymin", "xmax", "ymax"}
+
+
 _CFG = """
 minzoom: 0
 maxzoom: 14

@@ -229,6 +229,20 @@ def test_reserved_source_column_fails_by_name(spark, name):
         build_tiles(spark, {"features": feats}, sql, 0, 0)
 
 
+def test_partial_bbox_columns_fail_by_name(spark):
+    """A source with some but not all of the bbox columns would get a
+    second column of the same name from with_bbox (the plan then failed
+    with an ambiguous reference): build_tiles refuses it by name."""
+    from pyspark.sql import functions as F
+
+    one = Layers(layers=[Layer(id="base", source="features", minzoom=0,
+                               maxzoom=2, buffer=2)], global_maxzoom=14)
+    feats = features_df(spark, 6).withColumn("xmin", F.lit(1.5))
+    with pytest.raises(ValueError,
+                       match=r"source columns \['xmin'\] are a partial bbox"):
+        build_tiles(spark, {"features": feats}, one, 0, 0)
+
+
 @pytest.fixture(scope="module")
 def resume_src(spark, feats):
     """The fixture with a long property past 2^53, so a done-marker row

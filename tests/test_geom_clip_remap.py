@@ -215,32 +215,3 @@ class TestMvt:
         enc.add_feature(("Point", (0, 0)), {"a": None, "b": 1})
         assert enc.keys == ["b"]
 
-
-class TestCohenSutherland:
-    """Ports of clip/cohen_sutherland.rs:85-114 (the reference keeps
-    this operator written-but-unused; parity maintained the same way)."""
-
-    BB = (0.0, 0.0, 4096.0, 4096.0)
-
-    def test_reference_cases(self):
-        from tileigi_spark.geom.clip import cohen_sutherland_clip as cs
-
-        bb = self.BB
-        assert cs((10., 10.), (20., 20.), *bb) == ((10., 10.), (20., 20.))
-        assert cs((5000., 5000.), (5000., 6000.), *bb) is None
-        assert cs((10., 100.), (10., 10000.), *bb) == \
-            ((10., 100.), (10., 4096.))
-        assert cs((10., -100.), (10., 100.), *bb) == ((10., 0.), (10., 100.))
-        assert cs((-100., 10.), (100., 10.), *bb) == ((0., 10.), (100., 10.))
-        assert cs((100., 10.), (10000., 10.), *bb) == \
-            ((100., 10.), (4096., 10.))
-        assert cs((-1000., 2000.), (2000., -1000.), *bb) == \
-            ((0., 1000.), (1000., 0.))
-
-    def test_int_truncating_division(self):
-        from tileigi_spark.geom.clip import cohen_sutherland_clip as cs
-
-        # int inputs use Rust-style truncating division
-        got = cs((-7, 3), (9, 10), 0, 0, 4096, 4096)
-        # crossing x=0: y = 3 + tdiv(7 * 7, 16) = 3 + 3
-        assert got == ((0, 6), (9, 10))

@@ -1,7 +1,7 @@
 """Byte parity of the encode walk (engine._make_encode_run) vs the
-per-row LayerEncoder reference. The walk frames each frame's points with
-the vectorized point framer and its lines and polygons with the ragged
-framer, interns tags for every (tile, salt, layer) run at once and cuts
+per-row LayerEncoder reference. The walk frames each frame's points,
+lines and polygons with the ragged framer (one call per geometry
+family), interns tags for every (tile, salt, layer) run at once and cuts
 each run's layer message out of one stream; it must produce
 bit-identical layer messages — including key/value table order — for
 every run, at any batch cut, because golden-tile fixtures and the
@@ -15,8 +15,8 @@ from pyspark.sql.types import (BooleanType, DoubleType, FloatType,
                                IntegerType, LongType, StringType)
 
 from tileigi_spark.engine import _int_geom, _make_encode_run, _mvt_value
-from tileigi_spark.geom import mvt
-from tileigi_spark.geom.wkb import geom_to_wkb, wkb_to_geom
+from tileigi_spark.geom import mvt, ringbulk
+from tileigi_spark.geom.wkb import geom_to_wkb, ragged_of, wkb_to_geom
 
 _DTYPES = {FloatType: "float32", DoubleType: "float64"}
 
@@ -216,7 +216,48 @@ def test_width_overflow_falls_back():
     # zigzag >= 2^21 exceeds the 3-byte budget -> framer refuses
     xs = np.array([1 << 21], dtype=np.int64)
     ys = np.array([0], dtype=np.int64)
-    assert mvt.bulk_frame_point_features(xs, ys, []) is None
+    off = np.array([0, 1])
+    assert ringbulk.bulk_frame_ragged_features(xs, ys, off, off, 1,
+                                               []) is None
+    # a point feature of no points has no vertex slot for its MoveTo
+    assert ringbulk.bulk_frame_ragged_features(
+        xs[:0], ys[:0], off[:1], np.array([0, 0]), 1, []) is None
+
+
+def test_randomized_point_and_multipoint_parity():
+    """Mixed Point/MultiPoint runs through the ragged framer's point
+    branch (one MoveTo per feature, the delta cursor carried across a
+    MultiPoint's points), untagged and tagged, frame as the per-row
+    encoder does, and through the walk as LayerEncoder does."""
+    rng = np.random.default_rng(3)
+    langs = ["en", "de", None, "fr"]
+    for _ in range(20):
+        geoms = []
+        for _ in range(int(rng.integers(1, 60))):
+            k = int(rng.integers(1, 6 if rng.random() < 0.8 else 40))
+            pts = [(int(rng.integers(-64, 4161)),
+                    int(rng.integers(-64, 4161))) for _ in range(k)]
+            geoms.append(("Point", pts[0]) if rng.random() < 0.4
+                         else ("MultiPoint", pts))
+        n = len(geoms)
+        ki = rng.integers(0, 3, (n, 2))
+        vi = rng.integers(0, 300, (n, 2))
+        valid = rng.random((n, 2)) < 0.7
+        rag = ringbulk.mvt_rings(ragged_of(geoms))
+        assert (rag.code == 1).all()
+        for P in (0, 2):
+            want = [mvt._len_delim(2, mvt.encode_feature(g, [
+                t for j in range(P) if valid[i, j]
+                for t in (int(ki[i, j]), int(vi[i, j]))]))
+                for i, g in enumerate(geoms)]
+            stream, rowlen = ringbulk.bulk_frame_ragged_features(
+                rag.xs, rag.ys, rag.ring_off, rag.row_off, 1,
+                [(ki[:, j], vi[:, j], valid[:, j]) for j in range(P)])
+            assert stream == b"".join(want)
+            assert rowlen.tolist() == list(map(len, want))
+        assert_parity([(0, "l", g, {"lang": langs[i % 4]})
+                       for i, g in enumerate(geoms)],
+                      {"l": {"lang": StringType()}})
 
 
 # ------------------------------- boxes and quads via the ragged framer
@@ -409,30 +450,53 @@ def test_every_batch_cut_of_a_small_input():
                     list(range(0, n, size)) + [n]) == want, size
 
 
+def _spy_framer(monkeypatch):
+    """Record (gtype, features) for every ragged framer call."""
+    calls = []
+    real = ringbulk.bulk_frame_ragged_features
+
+    def spy(xs, ys, ring_off, feat_off, gtype, prop_tags):
+        calls.append((gtype, len(feat_off) - 1))
+        return real(xs, ys, ring_off, feat_off, gtype, prop_tags)
+
+    monkeypatch.setattr(ringbulk, "bulk_frame_ragged_features", spy)
+    return calls
+
+
 def test_multipoint_row_inside_a_framed_run(monkeypatch, caplog):
-    """A MultiPoint (code 0) is encoded on its own with the run's
-    interned tags; the run's other points still go to the point framer,
-    and the frame logs one named fallback event. A clean frame logs
-    none."""
-    framed = []
-    real = mvt.bulk_frame_point_features
-
-    def spy(xs, ys, prop_tags):
-        framed.append(len(xs))
-        return real(xs, ys, prop_tags)
-
-    monkeypatch.setattr(mvt, "bulk_frame_point_features", spy)
+    """A MultiPoint is framed with the run's points, in the same point
+    family call, with the run's interned tags; neither frame logs a
+    fallback event."""
+    framed = _spy_framer(monkeypatch)
     ptypes = {"l": {"lang": StringType()}}
     rows = points([(i, i, {"lang": ["en", "de"][i % 2]}) for i in range(9)])
     with caplog.at_level(logging.WARNING, logger="tileigi_spark.engine"):
         assert_parity(rows, ptypes)
-    assert framed == [9]
-    assert not caplog.records
-    rows[4] = (0, "l", ("MultiPoint", [(5, 5), (7, 9)]), {"lang": "fr"})
-    with caplog.at_level(logging.WARNING, logger="tileigi_spark.engine"):
+        rows[4] = (0, "l", ("MultiPoint", [(5, 5), (7, 9)]), {"lang": "fr"})
         assert_parity(rows, ptypes)
-    assert framed == [9, 8]
-    rec, = caplog.records
-    assert rec.name == "tileigi_spark.engine"
-    assert "1 of 9 rows encoded one at a time" in rec.getMessage()
-    assert "code 0: 1;" in rec.getMessage()
+    assert framed == [(1, 9), (1, 9)]
+    assert not caplog.records
+
+
+def test_one_point_line_and_empty_multipoint_encoded_alone(monkeypatch,
+                                                          caplog):
+    """The rows with no vertex slot for a command — a 1-point
+    LineString and a MultiPoint of no points, whose MoveTo(0) the
+    per-row encoder writes — take the per-row path (code 0 after
+    mvt_rings) with the run's interned tags, and each frame logs one
+    named fallback event; the other rows are still framed."""
+    framed = _spy_framer(monkeypatch)
+    ptypes = {"l": {"lang": StringType()}}
+    for odd in (("LineString", [(3, 3)]), ("MultiPoint", [])):
+        rows = points([(i, i, {"lang": ["en", "de"][i % 2]})
+                       for i in range(9)])
+        rows[4] = (0, "l", odd, {"lang": "fr"})
+        caplog.clear()
+        with caplog.at_level(logging.WARNING,
+                             logger="tileigi_spark.engine"):
+            assert_parity(rows, ptypes)
+        assert framed.pop() == (1, 8)
+        rec, = caplog.records
+        assert rec.name == "tileigi_spark.engine"
+        assert "1 of 9 rows encoded one at a time" in rec.getMessage()
+        assert "code 0: 1;" in rec.getMessage()

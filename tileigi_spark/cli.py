@@ -74,10 +74,10 @@ def main(argv=None):
     p.add_argument("--salt-zoom-max", type=int, default=4)
     p.add_argument("--n-salts", type=int, default=16)
     p.add_argument("--shuffle-parts", type=int, default=None,
-                   help="explicit partition count for the two encode "
-                        "exchanges (recommend total-cores*8; the encode "
-                        "walk is Python-bound, so wave packing decides "
-                        "wall time). Default: spark.sql.shuffle.partitions"
+                   help="partition count for the render exchange and, "
+                        "at salted zooms, the assemble exchange; capped "
+                        "at one task per core (each Python task has a "
+                        "fixed cost). Default: spark.sql.shuffle.partitions"
                         " + AQE")
     args = p.parse_args(argv)
     with _progress_to_stderr():
@@ -191,30 +191,23 @@ def _run(p: argparse.ArgumentParser, args: argparse.Namespace) -> None:
                                  "minzoom": args.minzoom,
                                  "maxzoom": args.maxzoom})
     if args.tilejson:
-        # per-layer field dictionaries from the source schemas, mapped to
-        # TileJSON type names like the reference derives them from pg
-        # column types (lib.rs:424-458)
-        from pyspark.sql.types import (BooleanType, DoubleType, FloatType,
-                                       IntegerType, LongType, StringType)
+        # per-layer field dictionaries: the properties build_tiles encodes
+        # (engine.layer_fields), mapped to TileJSON type names like the
+        # reference derives them from pg column types (lib.rs:424-458)
+        from pyspark.sql.types import BooleanType, StringType
 
-        from .engine import _prop_columns
+        from .engine import layer_fields
 
         def tj_type(dt):
             if isinstance(dt, BooleanType):
                 return "Boolean"
-            if isinstance(dt, (LongType, IntegerType, DoubleType, FloatType)):
-                return "Number"
             if isinstance(dt, StringType):
                 return "String"
-            return "String"
+            return "Number"
 
-        prop_types = {}
-        for layer in layers.layers:
-            src = sources.get(layer.source)
-            if src is None:
-                continue
-            prop_types[layer.id] = {name: tj_type(dt)
-                                    for name, dt in _prop_columns(src)}
+        prop_types = {lid: {name: tj_type(dt) for name, dt in props.items()}
+                      for lid, props in layer_fields(spark, sources,
+                                                     layers).items()}
         write_tilejson(layers, args.tilejson, prop_types=prop_types)
 
     if owns_session:

@@ -84,6 +84,10 @@ _RESERVED_COLS = ("zoom", "mtx", "mty", "x", "y", "geom", "salt", "layer",
                   "layer_order")
 
 
+# a source's precomputed bbox: it feeds the cover and is never encoded
+_BBOX_COLS = ("xmin", "ymin", "xmax", "ymax")
+
+
 def _prop_columns(df: DataFrame, exclude=("way", "feature_id")):
     out = []
     for f in df.schema.fields:
@@ -92,6 +96,69 @@ def _prop_columns(df: DataFrame, exclude=("way", "feature_id")):
         if isinstance(f.dataType, _PROP_TYPES):
             out.append((f.name, f.dataType))
     return out
+
+
+def _layer_props(layer_id: str, src: DataFrame) -> dict:
+    """The properties a layer's tiles carry, {column: Spark type} in
+    source order: every column of an encodable type but `way`,
+    `feature_id` and the bbox columns. The one per-layer property
+    decision: build_tiles encodes these and carries them across the
+    render exchange, the CLI writes them as TileJSON fields.
+
+    Raises ValueError, naming the columns, for a source column the tile
+    plan reserves (it would be silently replaced) and for a source with
+    some but not all of the bbox columns (with_bbox would add a second
+    column of the same name)."""
+    fields = src.schema.fields
+    names = [f.name for f in fields]
+    clash = [c for c in names if c in _RESERVED_COLS]
+    if clash:
+        raise ValueError(
+            f"layer {layer_id!r}: source columns {clash} use names the "
+            f"tile plan reserves ({', '.join(_RESERVED_COLS)}); "
+            f"rename them")
+    bbox = [c for c in names if c in _BBOX_COLS]
+    if bbox and sorted(bbox) != sorted(_BBOX_COLS):
+        raise ValueError(
+            f"layer {layer_id!r}: source columns {bbox} are a partial bbox; "
+            f"give all of ({', '.join(_BBOX_COLS)}) or none of them")
+    return {f.name: f.dataType for f in fields
+            if f.name not in ("way", "feature_id") + _BBOX_COLS
+            and isinstance(f.dataType, _PROP_TYPES)}
+
+
+def _layer_source(spark: SparkSession, sources: dict[str, DataFrame],
+                  layer, zoom: int) -> DataFrame:
+    """A layer's source at one zoom: its SQL, template tokens
+    substituted, over the sources registered as temp views
+    (_register_views), or else its named source."""
+    from .config import substitute_sql_tokens
+
+    sql = getattr(layer, "sql", None)
+    if sql:
+        return spark.sql(substitute_sql_tokens(sql, zoom))
+    return sources[layer.source]
+
+
+def _register_views(sources: dict[str, DataFrame], layers: Layers) -> None:
+    """Register every source as a temp view when a layer reads them
+    through SQL (TableSQL, input/mod.rs:88-123)."""
+    if any(getattr(layer, "sql", None) for layer in layers.layers):
+        for name, df in sources.items():
+            df.createOrReplaceTempView(name)
+
+
+def layer_fields(spark: SparkSession, sources: dict[str, DataFrame],
+                 layers: Layers) -> dict[str, dict]:
+    """{layer id: {column: Spark type}}: the properties each layer's
+    tiles carry (_layer_props), its source resolved as build_tiles
+    resolves it (a SQL layer's query at the layer's minzoom). Layers
+    naming a source that is not given are left out."""
+    _register_views(sources, layers)
+    return {layer.id: _layer_props(layer.id, _layer_source(
+                spark, sources, layer, layer.minzoom))
+            for layer in layers.layers
+            if getattr(layer, "sql", None) or layer.source in sources}
 
 
 def _bbox_arrays(ways, rag):
@@ -627,13 +694,12 @@ def _intern_tags(pdf, rid, nruns, ly_codes, layer_props):
 
 def _frame_rows(rag, ki, vi, valid):
     """Every row's framed field-2 feature message, in row order, from
-    the rows' geometry as a wkb.Ragged: one point framer call for the
-    frame's points, one ragged framer call per line or polygon family,
-    and encode_feature on Ragged.geom for the rows the framers cannot
-    take — MultiPoint and 1-point lines (code 0 after
-    ringbulk.mvt_rings), and rows whose vertex and ring counts could
-    pass the framers' 2^14-byte feature body bound. Returns (stream,
-    (n + 1,) row byte offsets)."""
+    the rows' geometry as a wkb.Ragged: one ringbulk framer call per
+    geometry family (point, line, polygon), and encode_feature on
+    Ragged.geom for the rows the framer cannot take — 1-point lines and
+    empty MultiPoints (code 0 after ringbulk.mvt_rings), and rows whose
+    vertex and ring counts could pass the framer's 2^14-byte feature
+    body bound. Returns (stream, (n + 1,) row byte offsets)."""
     n, P = valid.shape
     mr = ringbulk.mvt_rings(rag)
     nr = np.diff(mr.row_off)
@@ -649,9 +715,8 @@ def _frame_rows(rag, ki, vi, valid):
         t = mr.take(rows)
         tags = [(ki[rows, j], vi[rows, j], valid[rows, j])
                 for j in range(P)]
-        res = (mvt.bulk_frame_point_features(t.xs, t.ys, tags) if gtype == 1
-               else ringbulk.bulk_frame_ragged_features(
-                   t.xs, t.ys, t.ring_off, t.row_off, gtype, tags))
+        res = ringbulk.bulk_frame_ragged_features(
+            t.xs, t.ys, t.ring_off, t.row_off, gtype, tags)
         if res is None:
             wide[rows] = True
         else:
@@ -667,7 +732,7 @@ def _frame_rows(rag, ki, vi, valid):
         framed.append(([i], f))
     if len(single):
         _log.warning("encode fallback: %d of %d rows encoded one at a "
-                     "time (MultiPoint or 1-point line, code 0: %d; "
+                     "time (1-point line or empty MultiPoint, code 0: %d; "
                      "framer width bound: %d)", len(single), n,
                      int(unread.sum()), int(wide.sum()))
     off = _cumsum0(length)
@@ -1092,11 +1157,11 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
         # sources may carry precomputed bbox columns (geo-table practice;
         # keeps the whole pre-shuffle pipeline JVM-side for point tables);
         # otherwise one Arrow pass decodes WKB
-        if not {"xmin", "ymin", "xmax", "ymax"} <= set(src.columns):
+        if not set(_BBOX_COLS) <= set(src.columns):
             src = with_bbox(src)
         return src
 
-    sql_views_made = False
+    _register_views(sources, layers)
     for order, layer in enumerate(layers.layers):
         layer_zooms = [z for z in zooms
                        if layer.minzoom <= z <= min(layer.maxzoom,
@@ -1105,21 +1170,16 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
             continue
         zoom_filter = getattr(layer, "zoom_filter", None)
         layer_sql = getattr(layer, "sql", None)
-        if layer_sql and not sql_views_made:
-            for name, df in sources.items():
-                df.createOrReplaceTempView(name)
-            sql_views_made = True
 
         def _covered_for(zs):
-            """(first source DF, covered DF) for a zoom subset."""
+            """(the layer's properties, covered DF) for a zoom subset;
+            every source it reads is checked by _layer_props."""
             # SQL-template table source (TableSQL, input/mod.rs:88-123):
             # the layer's SQL runs over the registered source tables.
             # With !zoom!/!scale_denominator! tokens the query is
             # re-resolved per zoom (the reference substitutes per
             # metatile; the value set is per-zoom), otherwise once for
             # the whole zoom range.
-            from .config import substitute_sql_tokens
-
             if layer_sql and "!" in layer_sql:
                 # Token substitution yields one resolved query per zoom,
                 # but after constant folding many zooms share the SAME
@@ -1137,7 +1197,7 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                 grouped: dict[str, tuple] = {}
                 order_keys = []
                 for z in zs:
-                    src_z = spark.sql(substitute_sql_tokens(layer_sql, z))
+                    src_z = _layer_source(spark, sources, layer, z)
                     key = _re.sub(r"#\d+", "#",
                                   str(src_z._jdf.queryExecution()
                                       .optimizedPlan()))
@@ -1145,46 +1205,34 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                         grouped[key] = (src_z, [])
                         order_keys.append(key)
                     grouped[key][1].append(z)
+                props = [_layer_props(layer.id, grouped[key][0])
+                         for key in order_keys]
                 cov = None
-                src0 = None
                 for key in order_keys:
                     src_z, zlist = grouped[key]
-                    if src0 is None:
-                        src0 = src_z
                     cov_z = cover_metatiles(_prep(src_z), zlist,
                                             layer.buffer, metatile_scale,
                                             zoom_filter=zoom_filter,
                                             bbox_merc=bbox_merc)
                     cov = cov_z if cov is None else cov.unionByName(cov_z)
-                return src0, cov
-            src0 = (spark.sql(layer_sql) if layer_sql
-                    else sources[layer.source])
-            return src0, cover_metatiles(_prep(src0), zs, layer.buffer,
-                                         metatile_scale,
-                                         zoom_filter=zoom_filter,
-                                         bbox_merc=bbox_merc)
+                return props[0], cov
+            src0 = _layer_source(spark, sources, layer, zs[0])
+            return (_layer_props(layer.id, src0),
+                    cover_metatiles(_prep(src0), zs, layer.buffer,
+                                    metatile_scale, zoom_filter=zoom_filter,
+                                    bbox_merc=bbox_merc))
 
-        src, covered = _covered_for(layer_zooms)
-        clash = [c for c in src.columns if c in _RESERVED_COLS]
-        if clash:
-            raise ValueError(
-                f"layer {layer.id!r}: source columns {clash} use names the "
-                f"tile plan reserves ({', '.join(_RESERVED_COLS)}); "
-                f"rename them")
+        prop_types[layer.id], covered = _covered_for(layer_zooms)
         if metatile_keys is not None:
             covered = covered.join(F.broadcast(metatile_keys),
                                    on=["zoom", "mtx", "mty"],
                                    how="left_semi")
-        prop_types[layer.id] = dict(_prop_columns(
-            src, exclude=("way", "feature_id")))
         # only what the render reads crosses the exchange: the bbox
         # columns fed the cover, other-typed columns are never encoded
-        props = _prop_columns(covered, exclude=(
-            "way", "feature_id", "zoom", "mtx", "mty",
-            "xmin", "ymin", "xmax", "ymax"))
         per_layer.append(covered.selectExpr(
             "zoom", "mtx", "mty", "way", "feature_id",
-            *(f"`{p}`" for p, _ in props), f"{order} AS layer_order"))
+            *(f"`{p}`" for p in prop_types[layer.id]),
+            f"{order} AS layer_order"))
         layer_specs.append((order, layer.id, layer.buffer * 16))
 
     if not per_layer:
@@ -1196,9 +1244,9 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     rows = per_layer[0]
     for other in per_layer[1:]:
         rows = rows.unionByName(other, allowMissingColumns=True)
-    cols = _prop_columns(rows, exclude=("way", "zoom", "mtx", "mty",
-                                        "layer_order"))
-    carry = ["salt"] + [p for p, _ in cols if p != "feature_id"]
+    # unionByName's column order: the first layer's, then each new one
+    carry = ["salt"] + list(dict.fromkeys(
+        p for props in prop_types.values() for p in props))
     rows = rows.withColumn("salt", F.expr(
         f"CAST(IF(zoom <= {salt_zoom_max}, pmod(feature_id, {n_salts}),"
         f" 0) AS INT)"))
@@ -1206,8 +1254,10 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
         # one marker row per done tile (inside the bbox) and salt, in its
         # metatile's run; integer columns get 0, not NULL, so the
         # render's pandas frames keep them int64
-        ints = [f"CAST(0 AS {t.simpleString()}) AS `{p}`"
-                for p, t in cols if isinstance(t, (LongType, IntegerType))]
+        ints = [f"CAST(0 AS {f.dataType.simpleString()}) AS `{f.name}`"
+                for f in rows.schema.fields
+                if f.name not in ("zoom", "mtx", "mty", "layer_order", "salt")
+                and isinstance(f.dataType, (LongType, IntegerType))]
         size = f"least({metatile_scale}L, shiftleft(1L, zoom))"
         keep = (f"zoom IN ({', '.join(map(str, zooms))})"
                 if tile_ranges is None

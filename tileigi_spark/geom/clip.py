@@ -290,68 +290,3 @@ def clip_geometry_to_tiles(geom, metatile_size, metatile_x, metatile_y, buffer):
                         0, 0, metatile_size * 4096, buffer)
     return [(txy, remove_duplicate_points(g)) for txy, g in pieces]
 
-
-# ------------------------------------------------- Cohen-Sutherland
-
-LEFT, RIGHT, BOTTOM, TOP = 1, 2, 4, 8
-
-
-def _outcode(x, y, xmin, ymin, xmax, ymax):
-    code = 0
-    if x < xmin:
-        code |= LEFT
-    elif x > xmax:
-        code |= RIGHT
-    if y < ymin:
-        code |= BOTTOM
-    elif y > ymax:
-        code |= TOP
-    return code
-
-
-def cohen_sutherland_clip(p0, p1, xmin, ymin, xmax, ymax):
-    """clip/cohen_sutherland.rs:1-83 — classic outcode segment clip.
-
-    Present in the reference crate but unused by its pipeline (the
-    linestring path uses the Sutherland-Hodgman border walk instead);
-    ported for parity with the same semantics: y grows DOWN, so the
-    TOP outcode (y > ymax) intersects at ymax and BOTTOM at ymin
-    (cohen_sutherland.rs:49 comment). Returns ((x0, y0), (x1, y1)) or
-    None. Division matches the reference's generic CoordinateType
-    arithmetic: true division for floats, Rust-style truncating
-    division when every input is an int (types.tdiv).
-    """
-    x0, y0 = p0
-    x1, y1 = p1
-    is_int = all(isinstance(v, int) for v in (x0, y0, x1, y1,
-                                              xmin, ymin, xmax, ymax))
-
-    def div(a, b):
-        return tdiv(a, b) if is_int else a / b
-
-    oc0 = _outcode(x0, y0, xmin, ymin, xmax, ymax)
-    oc1 = _outcode(x1, y1, xmin, ymin, xmax, ymax)
-    while True:
-        if oc0 | oc1 == 0:
-            return ((x0, y0), (x1, y1))
-        if oc0 & oc1 != 0:
-            return None
-        oc = oc0 if oc0 != 0 else oc1
-        if oc & TOP:
-            x = x0 + div((x1 - x0) * (ymax - y0), (y1 - y0))
-            y = ymax
-        elif oc & BOTTOM:
-            x = x0 + div((x1 - x0) * (ymin - y0), (y1 - y0))
-            y = ymin
-        elif oc & RIGHT:
-            y = y0 + div((y1 - y0) * (xmax - x0), (x1 - x0))
-            x = xmax
-        else:
-            y = y0 + div((y1 - y0) * (xmin - x0), (x1 - x0))
-            x = xmin
-        if oc == oc0:
-            x0, y0 = x, y
-            oc0 = _outcode(x0, y0, xmin, ymin, xmax, ymax)
-        else:
-            x1, y1 = x, y
-            oc1 = _outcode(x1, y1, xmin, ymin, xmax, ymax)

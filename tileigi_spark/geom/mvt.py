@@ -132,8 +132,8 @@ def _varint3_parts(v):
 
 
 def _tag_field(prop_tags, n):
-    """The tags field (field 2) of n bulk-framed features, shared by both
-    bulk framers (this module's point framer and ringbulk's ragged one).
+    """The tags field (field 2) of n features framed by
+    ringbulk.bulk_frame_ragged_features.
 
     prop_tags: one (ki, vi, valid) triple of (n,) arrays per property
     slot, in the order the per-row path visits a row's properties: key
@@ -185,84 +185,6 @@ def _tag_field(prop_tags, n):
     return T, U, has_tags * (2 + pair_len)
 
 
-def bulk_frame_point_features(xs, ys, prop_tags):
-    """Vectorized framing of a run of single-point features.
-
-    xs, ys: int64 arrays of tile-local coords, one point per feature.
-    prop_tags: as in _tag_field.
-
-    Returns (stream, per_feature_frame_lengths): the concatenation of
-    ``_len_delim(2, encode_feature(("Point", (x, y)), tags))`` for every
-    row — byte-identical to the per-row path — and each row's framed
-    length, or None when a value exceeds the vectorized varint widths
-    (caller falls back to per-row). Same contract as
-    ringbulk.bulk_frame_ragged_features.
-
-    Strategy: write every potential byte of every frame into an
-    (n, W) uint8 matrix with a parallel used-byte mask; masked row-major
-    flattening emits the whole stream in one pass. This is the encode
-    analog of the geometry stage's points kernel — the per-row
-    encoder costs ~20µs/feature, almost all interpreter overhead.
-    """
-    import numpy as np
-
-    n = len(xs)
-    zzx = ((xs << 1) ^ (xs >> 63)).astype(np.uint64)
-    zzy = ((ys << 1) ^ (ys >> 63)).astype(np.uint64)
-    if n and max(int(zzx.max()), int(zzy.max())) >= (1 << 21):
-        return None
-    tags = _tag_field(prop_tags, n)
-    if tags is None:
-        return None
-    T, U, tag_len = tags
-
-    xb0, xb1, xb2, xnb = _varint3_parts(zzx)
-    yb0, yb1, yb2, ynb = _varint3_parts(zzy)
-
-    geom_len = 1 + xnb + ynb
-    body_len = tag_len + 2 + 2 + geom_len
-    if n and int(body_len.max()) >= (1 << 14):
-        return None
-    fb0, fb1, _, fnb = _varint3_parts(body_len.astype(np.uint64))
-
-    c = 3 + T.shape[1]
-    W = c + 11
-    M = np.zeros((n, W), dtype=np.uint8)
-    B = np.zeros((n, W), dtype=bool)
-    M[:, 0] = 0x12                      # frame: field 2, wire 2
-    B[:, 0] = True
-    M[:, 1] = fb0
-    B[:, 1] = True
-    M[:, 2] = fb1
-    B[:, 2] = fnb > 1
-    M[:, 3:c] = T
-    B[:, 3:c] = U
-    M[:, c] = 0x18                      # type: field 3, wire 0
-    B[:, c] = True
-    M[:, c + 1] = 0x01                  # POINT
-    B[:, c + 1] = True
-    M[:, c + 2] = 0x22                  # geometry: field 4, wire 2
-    B[:, c + 2] = True
-    M[:, c + 3] = geom_len.astype(np.uint8)
-    B[:, c + 3] = True
-    M[:, c + 4] = 0x09                  # MoveTo, count 1
-    B[:, c + 4] = True
-    c += 5
-    M[:, c] = xb0
-    B[:, c] = True
-    M[:, c + 1] = xb1
-    B[:, c + 1] = xnb > 1
-    M[:, c + 2] = xb2
-    B[:, c + 2] = xnb > 2
-    M[:, c + 3] = yb0
-    B[:, c + 3] = True
-    M[:, c + 4] = yb1
-    B[:, c + 4] = ynb > 1
-    M[:, c + 5] = yb2
-    B[:, c + 5] = ynb > 2
-    return M[B].tobytes(), 1 + fnb + body_len
-
-
 def encode_feature(geom, tags) -> bytes:
     cmds = _geometry_commands(geom)
     body = b""
@@ -281,7 +203,7 @@ class LayerEncoder:
 
     The per-row reference for the engine's encode walk
     (engine._make_encode_run), which frames whole Arrow batches with the
-    bulk framers and must produce the bytes this class does for every
+    bulk framer and must produce the bytes this class does for every
     run (tests/test_mvt_bulk.py, tests/test_mvt_ragged.py)."""
 
     def __init__(self, name: str, extent: int = 4096):

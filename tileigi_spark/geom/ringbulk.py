@@ -1,14 +1,14 @@
-"""Ragged bulk MVT framing for polygon- and linestring-family features.
+"""Ragged bulk MVT framing for every geometry family.
 
 The encoder (engine._frame_rows) frames each frame's complete runs at
-once: its single points go to mvt.bulk_frame_point_features, and EVERY
-polygon-family (Polygon, MultiPolygon) or linestring-family
-(LineString, MultiLineString) row comes here, one call per family —
-clipped boxes and 2-4 point road pieces as well as irregular rings,
-rings with holes, MultiPolygons and long polylines, of any layer and
-property set. Only rows the framers
-cannot take (MultiPoint, 1-point lines, rows past a width bound) are
-encoded one at a time with mvt.encode_feature.
+once: every point-family (Point, MultiPoint), linestring-family
+(LineString, MultiLineString) or polygon-family (Polygon,
+MultiPolygon) row comes here, one call per family — single points and
+MultiPoints, clipped boxes and 2-4 point road pieces as well as
+irregular rings, rings with holes, MultiPolygons and long polylines, of
+any layer and property set. Only rows the framer cannot take (1-point
+lines, empty MultiPoints, rows past a width bound) are encoded one at a
+time with mvt.encode_feature.
 
 Features are held in a RAGGED formulation: all features' emit-order
 vertices live in one flat (xs, ys) pair plus two offset arrays
@@ -17,17 +17,17 @@ vertices live in one flat (xs, ys) pair plus two offset arrays
     feat_off : (n + 1,)  ring offsets per feature
 
 so every per-vertex quantity (zigzag delta, varint width) and every
-per-ring quantity (LineTo count) vectorizes across the batch, and the
-final byte stream is assembled with one ragged scatter instead of a
-Python loop. The frame's rows arrive as one wkb.Ragged: in the render
+command count (a ring's LineTo, a point feature's MoveTo) vectorizes
+across the batch, and the final byte stream is assembled with one
+ragged scatter instead of a Python loop. The frame's rows arrive as one wkb.Ragged: in the render
 pass the geometry lanes' pieces as they emit them, in the WKB
 piece-stream walk one wkb.read_ragged read per frame; mvt_rings applies
 the MVT ring rules to the whole frame, so a family's rows are one
 gather (Ragged.take).
 Byte output is pinned identical to the per-row path
 (mvt._geometry_commands semantics: per-ring closing-vertex drop,
-degenerate rings skipped, the delta cursor carrying across rings and
-polygons within a feature) by tests/test_mvt_ragged.py,
+degenerate rings skipped, the delta cursor carrying across points,
+rings and polygons within a feature) by tests/test_mvt_ragged.py,
 tests/test_mvt_bulk.py and the golden tile fixtures.
 """
 
@@ -40,16 +40,16 @@ from .wkb import Ragged, _cumsum0
 
 
 # WKB type code -> MVT geometry type (Point, LineString and Polygon
-# families; 0 = MultiPoint or refused)
-_GTYPE = np.array([0, 1, 2, 3, 0, 2, 3], dtype=np.uint8)
+# families; 0 = refused)
+_GTYPE = np.array([0, 1, 2, 3, 1, 2, 3], dtype=np.uint8)
 
 
 def mvt_rings(rag):
     """A wkb.Ragged (the lanes' pieces or a read_ragged batch) shaped
-    for the bulk framers once for all its rows, so any set of rows is
+    for the bulk framer once for all its rows, so any set of rows is
     then one gather (Ragged.take): code becomes the MVT geometry type (1
-    point, 2 linestring family, 3 polygon family, 0 = encoded on its
-    own), the vertices are cast to int64 and mvt._geometry_commands'
+    point family, 2 linestring family, 3 polygon family, 0 = encoded on
+    its own), the vertices are cast to int64 and mvt._geometry_commands'
     ring rules are applied.
 
     Polygon-family rows: drop a ring's closing vertex when first ==
@@ -57,8 +57,9 @@ def mvt_rings(rag):
     cast, as the per-row path compares). Line-family rows are kept
     verbatim, but a row holding a line of < 2 points gets code 0 (its
     rings stay; the row is encoded on its own): the LineTo command
-    byte rides on the second vertex slot in the ragged writer. Points
-    keep their one vertex."""
+    byte rides on the second vertex slot in the ragged writer. A point
+    or MultiPoint row keeps one one-vertex ring per point; a MultiPoint
+    of no points gets code 0 (its MoveTo(0) has no vertex slot)."""
     xs = rag.xs.astype(np.int64)
     ys = rag.ys.astype(np.int64)
     code = _GTYPE[rag.code]
@@ -67,6 +68,7 @@ def mvt_rings(rag):
     ring_row = np.repeat(np.arange(len(code)), np.diff(row_off))
     poly = code[ring_row] == 3
     code[ring_row[(code[ring_row] == 2) & (k < 2)]] = 0
+    code[(code == 1) & (np.diff(row_off) == 0)] = 0
     first = ring_off[:-1]
     last = ring_off[1:] - 1
     closed = poly & (xs[first] == xs[last]) & (ys[first] == ys[last]) \
@@ -84,8 +86,10 @@ def mvt_rings(rag):
 
 def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
                                prop_tags):
-    """Frame a run of polygon-family (gtype 3, ClosePath per ring) or
-    linestring-family (gtype 2) features from ragged vertex arrays.
+    """Frame a run of point-family (gtype 1: one MoveTo per feature,
+    its count the feature's points), linestring-family (gtype 2: MoveTo
+    and LineTo per ring) or polygon-family (gtype 3: ClosePath too)
+    features from ragged vertex arrays.
 
     xs, ys: flat int64 emit-order vertices. ring_off: (nr + 1,) vertex
     offsets per ring. feat_off: (n + 1,) ring offsets per feature.
@@ -93,21 +97,30 @@ def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
 
     Returns (stream_bytes, per_feature_frame_lengths) — byte-identical
     to concatenating ``_len_delim(2, encode_feature(...))`` per row —
-    or None when a varint-width bound is exceeded (delta or value index
-    >= 2^21, feature body >= 2^14 bytes, > 31 properties)."""
+    or None when a row has no slot for its command (a line or polygon
+    ring of < 2 vertices, a point feature of none) or a varint-width
+    bound is exceeded (delta, command or value index >= 2^21, feature
+    body >= 2^14 bytes, > 31 properties)."""
     n = len(feat_off) - 1
-    nr = len(ring_off) - 1
     npts = len(xs)
     tags = _tag_field(prop_tags, n)
     if tags is None:
         return None
     T, U, tag_len = tags
     k = np.diff(ring_off)
-    if nr and int(k.min()) < 2:
-        return None  # LineTo command rides on the second vertex slot
-
-    # vertex deltas: cursor carries across rings, resets per feature
     fpt_off = ring_off[feat_off]
+    if gtype == 1:
+        # one MoveTo per feature, on its first vertex slot
+        cnt, cmd_at, op = np.diff(fpt_off), fpt_off[:-1], 1
+    else:
+        # one LineTo per ring, on its second vertex slot
+        cnt, cmd_at, op = k - 1, ring_off[:-1] + 1, 2
+    if len(cnt) and int(cnt.min()) < 1:
+        return None  # no vertex slot for the command
+    cmd = cnt << 3 | op
+
+    # vertex deltas: cursor carries across points and rings, resets per
+    # feature
     dx = xs.copy()
     dy = ys.copy()
     if npts:
@@ -124,26 +137,22 @@ def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
     xb0, xb1, xb2, xnb = _varint3_parts(zx)
     yb0, yb1, yb2, ynb = _varint3_parts(zy)
 
-    cmd2 = ((k - 1) << 3 | 2).astype(np.uint64)
-    if nr and int(cmd2.max()) >= (1 << 21):
+    if len(cmd) and int(cmd.max()) >= (1 << 21):
         return None
-    cb0, cb1, cb2, cnb = _varint3_parts(cmd2)
+    cb0, cb1, cb2, cnb = _varint3_parts(cmd.astype(np.uint64))
 
-    ring_first = ring_off[:-1]
-    ring_second = ring_first + 1
-    ring_last = ring_off[1:] - 1
-
-    # per-vertex byte matrix: [MoveTo][LineTo cmd x3][x x3][y x3][Close]
+    # per-vertex byte matrix: [MoveTo(1)][cmd x3][x x3][y x3][Close]
     M = np.zeros((npts, 11), dtype=np.uint8)
     B = np.zeros((npts, 11), dtype=bool)
-    M[ring_first, 0] = 0x09
-    B[ring_first, 0] = True
-    M[ring_second, 1] = cb0
-    B[ring_second, 1] = True
-    M[ring_second, 2] = cb1
-    B[ring_second, 2] = cnb > 1
-    M[ring_second, 3] = cb2
-    B[ring_second, 3] = cnb > 2
+    if gtype != 1:
+        M[ring_off[:-1], 0] = 0x09
+        B[ring_off[:-1], 0] = True
+    M[cmd_at, 1] = cb0
+    B[cmd_at, 1] = True
+    M[cmd_at, 2] = cb1
+    B[cmd_at, 2] = cnb > 1
+    M[cmd_at, 3] = cb2
+    B[cmd_at, 3] = cnb > 2
     M[:, 4] = xb0
     B[:, 4] = True
     M[:, 5] = xb1
@@ -157,8 +166,8 @@ def bulk_frame_ragged_features(xs, ys, ring_off, feat_off, gtype,
     M[:, 9] = yb2
     B[:, 9] = ynb > 2
     if gtype == 3:
-        M[ring_last, 10] = 0x0F
-        B[ring_last, 10] = True
+        M[ring_off[1:] - 1, 10] = 0x0F
+        B[ring_off[1:] - 1, 10] = True
     geom_flat = M[B]
     pb = B.sum(axis=1).astype(np.int64)
     pcs = _cumsum0(pb)

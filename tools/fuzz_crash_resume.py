@@ -4,8 +4,9 @@ The fixed-crash-point tests (tests/test_io_and_ops.py) pin the two known
 windows (write-before-mark, rerun-after-done). This sweep validates the
 resume contract against ARBITRARY interruption: a child process runs the
 real CLI (`--if-not-exists`) over a fixture feature table; the parent
-SIGKILLs it at a random wall-clock moment (possibly several times),
-then lets a final run complete, and asserts the store's read view —
+SIGKILLs it at a random wall-clock moment inside the measured length of
+an uninterrupted control run (possibly several times), then lets a final
+run complete, and asserts the store's read view —
 the full {(zoom,x,y): md5} map — is byte-identical to an uninterrupted
 control build of the same input. Exercises staging write-once,
 checkpoint-last ordering, crash-window duplicate collapse, and staging
@@ -13,7 +14,8 @@ cleanup, end-to-end through a real JVM death (io.py:104-160; the north
 rule's "resumable from checkpoint" claim).
 
 Usage: python tools/fuzz_crash_resume.py [--seeds 6] [--maxzoom 3]
-Prints one line per seed and a summary; exit 1 on any divergence.
+Prints the control run's length, one line per seed with its kill count,
+and a summary; exit 1 on any divergence.
 """
 
 from __future__ import annotations
@@ -92,11 +94,13 @@ def main():
 
     # uninterrupted control
     control_dest = os.path.join(workdir, "control")
+    t0 = time.monotonic()
     subprocess.run(cli_cmd(cfg, feats, control_dest, args.maxzoom),
                    env=env, cwd=REPO, check=True,
                    stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    control_s = time.monotonic() - t0
     control = store_map(control_dest)
-    print(f"control: {len(control)} tiles", flush=True)
+    print(f"control: {len(control)} tiles in {control_s:.1f} s", flush=True)
 
     fails = 0
     for seed in range(args.seeds):
@@ -109,8 +113,10 @@ def main():
                                  stdout=subprocess.DEVNULL,
                                  stderr=subprocess.DEVNULL)
             if attempt < rng.randint(1, 3):
-                # kill somewhere between JVM start and likely completion
-                t_kill = rng.uniform(6.0, 30.0)
+                # kill inside the control run's length, after about a
+                # third of it (JVM start): a fresh run dies mid-pyramid,
+                # a resumed one may finish first
+                t_kill = rng.uniform(0.3, 0.95) * control_s
                 try:
                     p.wait(timeout=t_kill)
                     break  # finished before the axe fell
