@@ -2,6 +2,7 @@
 invariants from FIXTURES.md §6."""
 
 import gzip
+import hashlib
 
 import pytest
 
@@ -113,6 +114,56 @@ def test_include_empty_full_pyramid(spark, feats):
     assert counts == {0: 1, 1: 4, 2: 16}
 
 
+def test_include_empty_renders_once(spark, feats, tmp_path):
+    """include_empty left-joins the tile keys to the one render: a
+    salt-free two-zoom range keeps its one render MapInPandas, a mixed
+    range its render and assemble pair, with a bbox and done keys too;
+    the empties fill exactly the keys the render left out."""
+    from tileigi_spark.engine import with_bbox
+
+    path = str(tmp_path / "feats")
+    with_bbox(feats).write.parquet(path)
+    src = {"features": spark.read.parquet(path)}
+    done = spark.createDataFrame([(5, 0, 0), (6, 1, 1)],
+                                 "zoom int, x long, y long")
+    for minz, maxz, n_py in ((5, 6, 1), (3, 6, 2)):
+        tiles = build_tiles(spark, src, LAYERS, minz, maxz, shuffle_parts=8,
+                            include_empty=True, done_keys=done,
+                            bbox=(-20.0, -62.0, 0.0, -58.0))
+        _, got, _ = _plan_shape(tiles)
+        assert got == n_py, (minz, maxz)
+    rendered = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
+                for r in build_tiles(spark, src, LAYERS, 3, 4).collect()}
+    full = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
+            for r in build_tiles(spark, src, LAYERS, 3, 4,
+                                 include_empty=True).collect()}
+    assert len(full) == 64 + 256 and rendered.keys() <= full.keys()
+    empty = {z: hashlib.md5(empty_tile_bytes(LAYERS, z)).hexdigest()
+             for z in (3, 4)}
+    for k, md5 in full.items():
+        assert md5 == rendered.get(k, empty[k[0]]), k
+
+
+def test_include_empty_stays_inside_the_listed_metatile(spark, feats):
+    """With metatile_keys, include_empty returns exactly the listed
+    metatile's tiles: the rendered ones byte for byte, empties for the
+    rest, and nothing outside it."""
+    from tileigi_spark.engine import metatile_keys, single_metatile
+
+    keys = metatile_keys(spark, 5, [(1, 2)])
+    got = {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
+           for r in build_tiles(spark, {"features": feats}, LAYERS, 5, 5,
+                                include_empty=True,
+                                metatile_keys=keys).collect()}
+    assert set(got) == {(5, x, y) for x in range(8, 16) for y in range(16, 24)}
+    one = {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
+           for r in single_metatile(spark, {"features": feats}, LAYERS,
+                                    5, 1, 2).collect()}
+    assert one and {k: got[k] for k in one} == one
+    assert {v for k, v in got.items() if k not in one} == \
+        {empty_tile_bytes(LAYERS, 5)}
+
+
 def test_resume_anti_join(spark, feats):
     full = _build(spark, feats, 2, 2, 4)
     done = spark.createDataFrame(
@@ -179,7 +230,7 @@ def test_shuffle_parts_byte_invariant(spark, feats):
 
 def test_fused_encode_matches_two_shuffle(spark, feats):
     """build_tiles takes the one-shuffle encode_assemble_fused whenever
-    minzoom > salt_zoom_max. On salt-free (z >= 5) pieces it must give
+    minzoom > _SALT_ZOOM_MAX. On salt-free (z >= 5) pieces it must give
     exactly the tiles of the salted two-shuffle path,
     assemble_tiles(encode_layers(pieces))."""
     from pyspark.sql import functions as F

@@ -1,4 +1,4 @@
-"""Tests: TileStore checkpoint/resume, MBTiles export, config readers,
+"""Tests: TileStore resume, MBTiles export, config readers,
 text/dedup/similarity operators."""
 
 import gzip
@@ -21,12 +21,28 @@ def _tiny_tiles(spark):
 
 
 def test_tilestore_roundtrip_and_checkpoint(spark, tmp_path):
+    """write_tiles writes the deduplicated images, then the map rows;
+    done_keys are the map's keys. mark_done still appends its
+    `checkpoint` table (perfbench's rerender_resume base counts it),
+    which nothing in the package reads."""
     from tileigi_spark.io import TileStore
 
     store = TileStore(str(tmp_path / "store"))
     tiles = _tiny_tiles(spark)
+    written = []
+    real_write = store._write
+
+    def _write(df, name, **kw):
+        written.append(name)
+        return real_write(df, name, **kw)
+
+    store._write = _write
     store.write_tiles(tiles)
+    assert written == ["images", "map"]
+    assert store.done_keys(spark).count() == 3   # before any mark_done
     store.mark_done(tiles.select("zoom", "x", "y"))
+    assert spark.read.parquet(str(tmp_path / "store" / "checkpoint")) \
+        .count() == 3
 
     back = store.read_tiles(spark)
     got = {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
@@ -57,24 +73,38 @@ def test_resume_skips_done(spark, tmp_path):
 
     run_pyramid_with_checkpoint(spark, store, build, [0, 1])
     assert store.done_keys(spark).count() == 3
-    # rerun: anti-join leaves nothing new; checkpoint unchanged
+    # rerun: anti-join leaves nothing new; the map is unchanged
     run_pyramid_with_checkpoint(spark, store, build, [0, 1])
     assert store.done_keys(spark).count() == 3
     n_tiles = spark.read.parquet(str(tmp_path / "ck" / "map")).count()
     assert n_tiles == 3  # no duplicates written on resume
 
 
-def test_crash_between_write_and_mark_is_safe(spark, tmp_path):
-    """A crash after write_tiles but before mark_done leaves duplicate
-    map/images rows after the resume re-render; read_tiles must collapse
-    them (content-addressed tiles, any copy correct)."""
+def test_crash_between_images_and_map_is_safe(spark, tmp_path):
+    """A crash after a batch's images write but before its map write
+    leaves orphan images: nothing is done, the resume renders the batch
+    again, and read_tiles collapses the duplicate image rows
+    (content-addressed tiles, any copy correct)."""
     from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
 
     store = TileStore(str(tmp_path / "crash"))
     tiles = _tiny_tiles(spark)
-    # simulate the crash window: tiles written, checkpoint never marked
-    store.write_tiles(tiles)
+    # simulate the crash window: images written, map never written
+    real_write = store._write
+
+    def _write(df, name, **kw):
+        if name == "map":
+            raise RuntimeError("killed before the map write")
+        return real_write(df, name, **kw)
+
+    store._write = _write
+    with pytest.raises(RuntimeError, match="before the map write"):
+        store.write_tiles(tiles)
+    del store._write
+    assert spark.read.parquet(str(tmp_path / "crash" / "images")) \
+        .count() == 2
     assert store.done_keys(spark) is None
+    assert store.read_tiles(spark) is None
 
     def build(zoom, done):
         df = tiles.filter(F.col("zoom") == zoom)
@@ -83,8 +113,10 @@ def test_crash_between_write_and_mark_is_safe(spark, tmp_path):
         return df
 
     run_pyramid_with_checkpoint(spark, store, build, [0, 1])
-    # raw map table has the duplicates; the read view does not
-    assert spark.read.parquet(str(tmp_path / "crash" / "map")).count() == 6
+    # raw images table has the duplicates; the map and read view do not
+    assert spark.read.parquet(str(tmp_path / "crash" / "images")) \
+        .count() == 4
+    assert spark.read.parquet(str(tmp_path / "crash" / "map")).count() == 3
     back = store.read_tiles(spark)
     assert back.count() == 3
     got = {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
@@ -96,21 +128,32 @@ def test_crash_between_write_and_mark_is_safe(spark, tmp_path):
     assert not glob.glob(str(tmp_path / "crash" / "staging_z*"))
 
 
-def test_tilestore_absent_vs_corrupt_table(spark, tmp_path):
-    """A missing or empty table reads as absent (None); a corrupt
-    checkpoint file raises instead of passing for "nothing done", which
+def test_tilestore_absent_vs_corrupt_table(spark, tmp_path,
+                                          monkeypatch):
+    """A missing table (a path or a catalog table) reads as absent
+    (None) without a read being tried, an empty one as no keys; a
+    corrupt map file raises instead of passing for "nothing done", which
     would make a resume silently re-render everything."""
+    from tileigi_spark import io as tio
     from tileigi_spark.io import TileStore
 
     store = TileStore(str(tmp_path / "store"))
+
+    def no_read(*args):
+        raise AssertionError("an absent table must not be read")
+
+    monkeypatch.setattr(tio, "read_batch_parquet", no_read)
     assert store.done_keys(spark) is None        # no directory
     assert store.read_tiles(spark) is None
-    os.makedirs(tmp_path / "store" / "checkpoint")
-    assert store.done_keys(spark) is None        # empty directory
-    (tmp_path / "store" / "checkpoint" / "part-0.parquet").write_bytes(
+    # the catalog path: no table yet
+    assert TileStore("fresh_ns", use_iceberg=True).done_keys(spark) is None
+    monkeypatch.undo()
+    os.makedirs(tmp_path / "store" / "map" / "zoom=0")
+    assert store.done_keys(spark).count() == 0   # empty directory
+    (tmp_path / "store" / "map" / "zoom=0" / "part-0.parquet").write_bytes(
         b"not a parquet file")
     with pytest.raises(Exception, match="part-0.parquet"):
-        store.done_keys(spark)
+        store.done_keys(spark).collect()
 
 
 # -------------------------------------------------- resume loop (S11, A3)
@@ -150,9 +193,9 @@ def _metrics(spark, root, run_id):
 
 def test_resume_of_a_finished_store_commits_nothing(spark, tmp_path):
     """Every zoom already done: the resume renders each batch once and
-    does nothing else — no staging read-back, tile write or checkpoint
-    mark, and the map/images/checkpoint files stay as they were. Each
-    zoom still gets its metrics row (rows = 0), all in one append."""
+    does nothing else — no staging read-back or tile write, and the
+    map/images files stay as they were. Each zoom still gets its
+    metrics row (rows = 0), all in one append."""
     from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
 
     root = str(tmp_path / "finished")
@@ -160,7 +203,7 @@ def test_resume_of_a_finished_store_commits_nothing(spark, tmp_path):
     build = _anti_build(_pyramid_tiles(spark))
     run_pyramid_with_checkpoint(spark, store, build, [0, 1, 2],
                                 run_id="first")
-    tables = ("map", "images", "checkpoint")
+    tables = ("map", "images")
     before = {t: _files(root, t) for t in tables}
     assert all(before.values())
 
@@ -174,8 +217,7 @@ def test_resume_of_a_finished_store_commits_nothing(spark, tmp_path):
             return real(*args)
         setattr(store, name, wrapped)
 
-    for name in ("read_staging", "write_tiles", "mark_done",
-                 "append_metrics"):
+    for name in ("read_staging", "write_tiles", "append_metrics"):
         spy(name)
     run_pyramid_with_checkpoint(spark, store, build, [0, 1, 2],
                                 run_id="resume")
@@ -202,7 +244,6 @@ def test_mixed_resume_metrics_match_the_map(spark, tmp_path):
     base = tiles.filter((F.col("zoom") == 0) | (
         (F.col("zoom") == 2) & (F.pmod(F.col("x"), F.lit(2)) == 0)))
     store.write_tiles(base)
-    store.mark_done(base)
     parent_rows = spark.createDataFrame(
         [("base", "pyramid", 0, 1, 0.5, "{}"),
          ("base", "pyramid", 2, 2, 0.5, "{}")], METRICS_DDL)
@@ -227,7 +268,7 @@ def test_resume_loop_empty_build_and_failing_build(spark, tmp_path):
     """A build_fn returning the empty tiles frame (no layer covers the
     zoom) completes and commits nothing; a build_fn that raises at a
     later zoom propagates the error, and the zooms committed before it
-    keep their checkpoint keys and metrics rows (the empty z1's row
+    keep their map keys and metrics rows (the empty z1's row
     rode with z2's commit)."""
     from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
 
@@ -262,9 +303,10 @@ def test_resume_loop_empty_build_and_failing_build(spark, tmp_path):
 
 def test_resume_loop_job_descriptions_and_tiles_per_s(spark, tmp_path):
     """Every job the loop runs is named after its step in the status
-    store, the description is cleared afterwards, and each metrics row
-    carries its batch's tiles_per_s."""
+    store, the description is cleared afterwards, each commit runs 3
+    jobs, and each metrics row carries its batch's tiles_per_s."""
     import json
+    from collections import Counter
 
     from tileigi_spark.io import TileStore, run_pyramid_with_checkpoint
 
@@ -296,6 +338,11 @@ def test_resume_loop_job_descriptions_and_tiles_per_s(spark, tmp_path):
     assert all(d and d.startswith("pyramid") for d in loop_jobs.values()), \
         loop_jobs
     assert after and set(after.values()) == {None}
+    # a commit is the deduplicated images write (its exchange is a job of
+    # its own) and the map write: 3 jobs, with no checkpoint append
+    commits = Counter(d for d in loop_jobs.values() if d.endswith("commit"))
+    assert commits == {f"pyramid z{z}: commit": 3 for z in (0, 1)}, \
+        loop_jobs
 
     for r in _metrics(spark, root, "obs"):
         tps = json.loads(r.extra)["tiles_per_s"]
@@ -309,7 +356,7 @@ def _staging_dirs(root):
 
 def test_resume_loop_overlaps_two_batches(spark, tmp_path):
     """Batch z+1 builds while batch z commits (its build_fn starts
-    before z's mark_done returns), but never more than two batches are
+    before z's write_tiles returns), but never more than two batches are
     in flight: at most two staging tables exist at any time and a
     batch's build starts only once the batch two before it committed."""
     import threading
@@ -334,29 +381,29 @@ def test_resume_loop_overlaps_two_batches(spark, tmp_path):
         started[zoom].set()
         return tiles(zoom, done) if zoom < 3 else None
 
-    real_write, real_mark = store.write_staging, store.mark_done
+    real_stage, real_write = store.write_staging, store.write_tiles
 
     def write_staging(df, zoom):
-        n = real_write(df, zoom)
+        n = real_stage(df, zoom)
         log("staged", zoom)
         return n
 
-    def mark_done(keys):
-        zoom = keys.select("zoom").first().zoom
+    def write_tiles(tiles):
+        zoom = tiles.select("zoom").first().zoom
         # the next batch is building while this one commits
         next_started = started[zoom + 1].wait(30)
-        real_mark(keys)
-        log("marked", zoom, next_started)
+        real_write(tiles)
+        log("committed", zoom, next_started)
 
-    store.write_staging, store.mark_done = write_staging, mark_done
+    store.write_staging, store.write_tiles = write_staging, write_tiles
     run_pyramid_with_checkpoint(spark, store, build, zooms, run_id="ovl")
 
-    marked = [e for e in events if e[0] == "marked"]
-    assert [e[1] for e in marked] == [0, 1, 2]      # zoom order
-    assert all(e[2] for e in marked), events
+    committed = [e for e in events if e[0] == "committed"]
+    assert [e[1] for e in committed] == [0, 1, 2]   # zoom order
+    assert all(e[2] for e in committed), events
     at = {e[:2]: i for i, e in enumerate(events)}
     for z in (2, 3):
-        assert at[("build", z)] > at[("marked", z - 2)], events
+        assert at[("build", z)] > at[("committed", z - 2)], events
     assert max(staging_seen) <= 2, (staging_seen, events)
     assert not _staging_dirs(root)
     assert sorted((r.zoom, r.rows) for r in _metrics(spark, root, "ovl")) \
@@ -365,7 +412,7 @@ def test_resume_loop_overlaps_two_batches(spark, tmp_path):
 
 def test_resume_loop_error_at_the_next_zoom_while_committing(spark,
                                                              tmp_path):
-    """build_fn raises at z+1 while z commits: z's checkpoint keys and
+    """build_fn raises at z+1 while z commits: z's map keys and
     metrics row land, no later zoom is built, the error propagates and
     no staging table is left behind."""
     import threading
@@ -385,13 +432,13 @@ def test_resume_loop_error_at_the_next_zoom_while_committing(spark,
             raise RuntimeError("source vanished at z1")
         return tiles(zoom, done)
 
-    real_mark = store.mark_done
+    real_write = store.write_tiles
 
-    def mark_done(keys):
+    def write_tiles(tiles):
         assert failed.wait(30)
-        real_mark(keys)
+        real_write(tiles)
 
-    store.mark_done = mark_done
+    store.write_tiles = write_tiles
     with pytest.raises(RuntimeError, match="vanished at z1"):
         run_pyramid_with_checkpoint(spark, store, build, [0, 1, 2, 3],
                                     run_id="err")
@@ -1123,7 +1170,7 @@ def test_decode_geometry_roundtrip():
 
 
 def test_tilestore_iceberg_roundtrip(spark, tmp_path):
-    """Iceberg TileStore path: write/read/mark_done/drop_staging through
+    """Iceberg TileStore path: write/read/done_keys/drop_staging through
     a real Iceberg catalog when the runtime jars are on the classpath;
     SKIPPED (not silently passed) in environments without them — the
     parquet path is the behavioral twin and covers the logic, this test
@@ -1153,7 +1200,6 @@ def test_tilestore_iceberg_roundtrip(spark, tmp_path):
     staged = store.read_staging(spark, 0)
     assert staged.count() == 2
     store.write_tiles(staged)
-    store.mark_done(staged.select("zoom", "x", "y"))
     store.drop_staging(0, spark)
     assert spark.catalog.tableExists("vfy_ice.ts.staging_z0") is False
     back = store.read_tiles(spark)

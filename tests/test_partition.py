@@ -482,9 +482,9 @@ def test_batch_table_reads_log_no_sink_probe_warning(spark, table,
     """One-path reads of the package's own tables (a TileStore table, a
     cell glob) log no `FileStreamSink: Assume no metadata directory`
     WARN with its FileNotFoundException stack, and keep their meaning:
-    an absent or empty table reads as None, an empty rectangle as an
-    empty frame, a corrupt file still fails; the session's setting of
-    the probe's switch is restored."""
+    an absent table reads as None, an empty one as no keys, an empty
+    rectangle as an empty frame, a corrupt file still fails; the
+    session's setting of the probe's switch is restored."""
     from tileigi_spark.io import TileStore
     from tileigi_spark.partition import _SINK_LOG_IGNORED
 
@@ -509,16 +509,16 @@ def test_batch_table_reads_log_no_sink_probe_warning(spark, table,
     root.addAppender(appender)
     try:
         assert store.done_keys(spark) is None            # no directory
-        os.makedirs(tmp_path / "store" / "checkpoint")
-        assert store.done_keys(spark) is None            # empty directory
+        os.makedirs(tmp_path / "store" / "map" / "zoom=0")
+        assert store.done_keys(spark).count() == 0       # empty directory
         assert read_cell_partitioned(spark, path,
                                      bbox_merc=empty_bbox).count() == 0
         assert read_cell_partitioned(spark, path,
                                      bbox_merc=some_bbox).count() > 0
-        (tmp_path / "store" / "checkpoint" / "part-0.parquet").write_bytes(
-            b"not a parquet file")
+        (tmp_path / "store" / "map" / "zoom=0" / "part-0.parquet") \
+            .write_bytes(b"not a parquet file")
         with pytest.raises(Exception, match="part-0.parquet"):
-            store.done_keys(spark)
+            store.done_keys(spark).collect()
     finally:
         root.removeAppender(appender)
         appender.stop()

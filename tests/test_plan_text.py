@@ -9,6 +9,7 @@ Contracts pinned here:
   operations in the same order, on borders exactly at metatile edges,
   +-MERC_MAX, zero-area points, a zoom filter and bbox renders at z0
   and z14;
+* with_bbox is one Python pass (one MapInPandas, no ArrowEvalPython);
 * building a one-zoom bbox plan and a cell-layout read stays within a
   py4j round-trip budget, and the resume loop over a cell layout runs
   no per-zoom schema-inference job;
@@ -223,6 +224,16 @@ def test_cover_matches_numpy_reference_on_edges(spark, case):
         assert zs == set(args["zooms"])
 
 
+def test_with_bbox_is_one_python_pass(spark):
+    """with_bbox decodes each feature's WKB once: one MapInPandas and no
+    ArrowEvalPython (a pandas_udf + isNotNull filter is instantiated in
+    both the Filter and the Project, decoding every WKB twice)."""
+    plan = with_bbox(features_df(spark, 60))._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
 # ------------------------------------------------------ round-trip budget
 
 
@@ -327,10 +338,10 @@ def _reader_jobs(spark, after: int):
 
 def test_resume_loop_over_cells_runs_no_per_zoom_inference(spark, cells,
                                                            tmp_path):
-    """Over a cell layout, the loop runs no reader job: the checkpoint is
-    read once, before the loop (absent here), and the layout read and
-    the staging read-back take their schemas from the sidecar and the
-    staging write."""
+    """Over a cell layout, the loop runs no reader job: the map's done
+    keys are read once, before the loop (absent here), and the layout
+    read and the staging read-back take their schemas from the sidecar
+    and the staging write."""
     from tileigi_spark.mercator import bbox_lonlat_to_merc
 
     store = TileStore(str(tmp_path / "store"))

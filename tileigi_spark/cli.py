@@ -11,7 +11,8 @@ Usage:
 Mirrors the reference CLI surface: zoom range, bbox-restricted rendering,
 explicit metatile lists (--tile-list, 'SCALE Z/X/Y' lines,
 bin/tileigi.rs:80-84), destination type, metatile scale, resume
-(--if-not-exists -> checkpointed tiles left out), compression toggle.
+(--if-not-exists -> tiles already in the store's map left out),
+compression toggle.
 """
 
 from __future__ import annotations
@@ -66,13 +67,13 @@ def main(argv=None):
     p.add_argument("--metatile-scale", type=int, default=8)
     p.add_argument("--no-compress", action="store_true")
     p.add_argument("--if-not-exists", action="store_true",
-                   help="resume: skip tiles already in the checkpoint")
+                   help="resume: skip tiles already in the store's map "
+                        "table (a zoom batch writes its images, then its "
+                        "map rows, so a mapped tile is readable)")
     p.add_argument("--include-empty", action="store_true")
     p.add_argument("--mbtiles", default=None,
                    help="also export an MBTiles file (driver-side)")
     p.add_argument("--tilejson", default=None)
-    p.add_argument("--salt-zoom-max", type=int, default=4)
-    p.add_argument("--n-salts", type=int, default=16)
     p.add_argument("--shuffle-parts", type=int, default=None,
                    help="partition count for the render exchange and, "
                         "at salted zooms, the assemble exchange; capped "
@@ -174,7 +175,6 @@ def _run(p: argparse.ArgumentParser, args: argparse.Namespace) -> None:
         return build_tiles(
             spark, sources, layers, zoom, zoom,
             metatile_scale=args.metatile_scale,
-            salt_zoom_max=args.salt_zoom_max, n_salts=args.n_salts,
             compress=not args.no_compress,
             shuffle_parts=args.shuffle_parts,
             include_empty=args.include_empty,

@@ -202,9 +202,9 @@ def with_bbox(features_df: DataFrame, way_col: str = "way") -> DataFrame:
     mapInPandas pass. A pandas_udf + isNotNull filter looks equivalent but
     is 2× the work: Catalyst instantiates the UDF in both the Filter and
     the Project, so every feature of a 100-TB scan crosses the Arrow
-    boundary and decodes its WKB twice (two ArrowEvalPython nodes,
-    verified by tools/plan_audit.py; the audit now pins this to one
-    Python pass)."""
+    boundary and decodes its WKB twice (two ArrowEvalPython nodes;
+    tests/test_plan_text.py::test_with_bbox_is_one_python_pass pins the
+    one Python pass)."""
     import numpy as np
     from pyspark.sql.types import StructType, StructField
 
@@ -553,6 +553,11 @@ _PARTIAL_SCHEMA = ("zoom int, x long, y long, salt int, layer_order int, "
 # a partial layer message covers one run of equal encode keys; a tile
 # one run of equal tile keys
 _ENCODE_KEYS = ("zoom", "x", "y", "salt", "layer_order", "layer")
+# zooms <= _SALT_ZOOM_MAX split each tile's features over _N_SALTS salts
+# (feature_id mod _N_SALTS), so a hot low-zoom tile is encoded by many
+# tasks and its partials merged (O13); deeper zooms have salt 0
+_SALT_ZOOM_MAX = 4
+_N_SALTS = 16
 _TILE_KEYS = ("zoom", "x", "y")
 
 
@@ -805,7 +810,6 @@ def _make_encode_run(prop_types: dict[str, dict], all_props):
 
 
 def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
-                  salt_zoom_max: int = 4, n_salts: int = 16,
                   shuffle_parts: Optional[int] = None) -> DataFrame:
     """A1 over a piece stream: salted partial layer encode. Not on
     build_tiles' path, whose render pass runs the same encoder
@@ -828,8 +832,8 @@ def encode_layers(pieces: DataFrame, prop_types: dict[str, dict],
     Python-bound and each task pays a fixed Arrow/worker cost). None
     keeps the spark.sql.shuffle.partitions + AQE behavior.
     """
-    salt_col = (F.when(F.col("zoom") <= F.lit(salt_zoom_max),
-                       F.pmod(F.col("feature_id"), F.lit(n_salts))
+    salt_col = (F.when(F.col("zoom") <= F.lit(_SALT_ZOOM_MAX),
+                       F.pmod(F.col("feature_id"), F.lit(_N_SALTS))
                        .cast("int"))
                 .otherwise(F.lit(0)))
     salted = pieces.withColumn("salt", salt_col)
@@ -891,7 +895,7 @@ def assemble_tiles(partials: DataFrame, compress: bool = True,
     given (build_tiles passes the same _python_stage_parts clamp as for
     its render exchange); None keeps the AQE behavior. build_tiles calls
     it on the partials of ranges with salted zooms; salt-free pyramids
-    (minzoom > salt_zoom_max) skip this shuffle: their render pass
+    (minzoom > _SALT_ZOOM_MAX) skip this shuffle: their render pass
     assembles the tiles itself."""
     if shuffle_parts is None:
         ordered = partials.repartition("zoom", "x", "y")
@@ -907,7 +911,7 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
                           compress: bool = True,
                           shuffle_parts: Optional[int] = None) -> DataFrame:
     """A1+A2 in ONE shuffle for salt-free piece streams (every zoom above
-    salt_zoom_max — the overwhelming tile majority of a deep pyramid).
+    _SALT_ZOOM_MAX — the overwhelming tile majority of a deep pyramid).
     Not on build_tiles' path, whose render pass runs the same encoder
     and assembler after the geometry in one pass over exchanged covered
     rows; kept as the public piece-stream stage (tests, perfbench's
@@ -1108,8 +1112,7 @@ def _python_stage_parts(spark: SparkSession,
 
 def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                 layers: Layers, minzoom: int, maxzoom: int, *,
-                metatile_scale: int = 8, salt_zoom_max: int = 4,
-                n_salts: int = 16, compress: bool = True,
+                metatile_scale: int = 8, compress: bool = True,
                 shuffle_parts: Optional[int] = None,
                 include_empty: bool = False,
                 done_keys: Optional[DataFrame] = None,
@@ -1129,8 +1132,12 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     the cover keeps the bbox's metatiles, a filter on the render output
     its tiles).
     metatile_keys: optional (zoom, mtx, mty) DataFrame naming exactly the
-    metatiles to render (--tile-list re-render-dirty workflows,
-    bin/tileigi.rs:80-84); broadcast semi-joined — the list is small.
+    metatiles to render, one row each (--tile-list re-render-dirty
+    workflows, bin/tileigi.rs:80-84); broadcast semi-joined — the list
+    is small.
+    include_empty: also return each tile of that extent (the zooms, the
+    bbox, the listed metatiles) that no feature reached and is not done,
+    as its zoom's empty tile; the render still runs once.
     """
     from .mercator import bbox_lonlat_to_merc
 
@@ -1138,7 +1145,7 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     bbox_merc = bbox_lonlat_to_merc(bbox) if bbox is not None else None
     tile_ranges = ({z: bbox_tile_range(bbox_merc, z) for z in zooms}
                    if bbox_merc is not None else None)
-    # A pyramid whose zooms all sit above salt_zoom_max never salts, so
+    # A pyramid whose zooms all sit above _SALT_ZOOM_MAX never salts, so
     # every tile's pieces meet in one render task, which assembles the
     # tiles too (one exchange) — the deep-zoom re-render workflow.
     # Splitting a MIXED range into salted/salt-free buckets was tried
@@ -1146,7 +1153,7 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     # extra branch cost more than the saved exchange (4.22 s vs 4.01 s
     # best-of-3 on the z0-10 leg), so mixed ranges emit partials and
     # keep assemble_tiles' exchange and merge.
-    fuse = minzoom > salt_zoom_max
+    fuse = minzoom > _SALT_ZOOM_MAX
     per_layer = []
     layer_specs = []
     prop_types: dict[str, dict] = {}
@@ -1248,7 +1255,7 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     carry = ["salt"] + list(dict.fromkeys(
         p for props in prop_types.values() for p in props))
     rows = rows.withColumn("salt", F.expr(
-        f"CAST(IF(zoom <= {salt_zoom_max}, pmod(feature_id, {n_salts}),"
+        f"CAST(IF(zoom <= {_SALT_ZOOM_MAX}, pmod(feature_id, {_N_SALTS}),"
         f" 0) AS INT)"))
     if done_keys is not None:
         # one marker row per done tile (inside the bbox) and salt, in its
@@ -1267,8 +1274,8 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                      "CAST(zoom AS INT) AS zoom",
                      f"CAST(x DIV {size} AS BIGINT) AS mtx",
                      f"CAST(y DIV {size} AS BIGINT) AS mty",
-                     f"explode(IF(zoom <= {salt_zoom_max},"
-                     f" sequence(0, {n_salts - 1}), array(0))) AS salt",
+                     f"explode(IF(zoom <= {_SALT_ZOOM_MAX},"
+                     f" sequence(0, {_N_SALTS - 1}), array(0))) AS salt",
                      "-1 AS layer_order", "CAST(x AS BIGINT) AS x",
                      "CAST(y AS BIGINT) AS y", *ints))
         rows = rows.unionByName(marks, allowMissingColumns=True)
@@ -1288,28 +1295,39 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                                shuffle_parts=parts_n)
 
     if include_empty:
-        full = None
-        for z in zooms:
-            drv = tile_driver(spark, z,
-                              tile_ranges[z] if tile_ranges else None)
-            full = drv if full is None else full.unionByName(drv)
-        eb = {z: empty_tile_bytes(layers, z, compress) for z in zooms}
-        empty_col = F.lit(bytearray(eb[zooms[0]]))
-        for z in zooms[1:]:
-            empty_col = F.when(F.col("zoom") == z,
-                               F.lit(bytearray(eb[z]))).otherwise(empty_col)
-        md5_col = F.lit(hashlib.md5(eb[zooms[0]]).hexdigest())
-        for z in zooms[1:]:
-            md5_col = F.when(F.col("zoom") == z,
-                             F.lit(hashlib.md5(eb[z]).hexdigest())) \
-                .otherwise(md5_col)
-        empties = (full.join(tiles.select("zoom", "x", "y"),
-                             on=["zoom", "x", "y"], how="left_anti")
-                   .withColumn("tile", empty_col)
-                   .withColumn("tile_md5", md5_col))
+        # every key of the render's extent (each zoom's bbox window, or
+        # the listed metatiles' tiles, never a whole zoom's), less the
+        # done keys, left-joined once to the rendered tiles: a key no
+        # feature reached gets its zoom's empty tile
+        if metatile_keys is None:
+            keys = None
+            for z in zooms:
+                drv = tile_driver(spark, z,
+                                  tile_ranges[z] if tile_ranges else None)
+                keys = drv if keys is None else keys.unionByName(drv)
+        else:
+            size = f"least({metatile_scale}L, shiftleft(1L, zoom))"
+            keys = (metatile_keys
+                    .filter(f"zoom IN ({', '.join(map(str, zooms))})")
+                    .selectExpr("CAST(zoom AS INT) AS zoom", "mty",
+                                f"explode(sequence(mtx * {size},"
+                                f" mtx * {size} + {size} - 1)) AS x")
+                    .selectExpr("zoom", "x",
+                                f"explode(sequence(mty * {size},"
+                                f" mty * {size} + {size} - 1)) AS y"))
+            if tile_ranges is not None:
+                keys = keys.filter(_zoom_xy_filter(tile_ranges, "x", "y"))
         if done_keys is not None:
-            empties = empties.join(done_keys, on=["zoom", "x", "y"],
-                                   how="left_anti")
-        tiles = tiles.unionByName(empties)
-
+            keys = keys.join(done_keys, on=["zoom", "x", "y"],
+                             how="left_anti")
+        empty = {z: empty_tile_bytes(layers, z, compress) for z in zooms}
+        tile = " ".join(f"WHEN {z} THEN X'{b.hex()}'"
+                        for z, b in empty.items())
+        md5 = " ".join(f"WHEN {z} THEN '{hashlib.md5(b).hexdigest()}'"
+                       for z, b in empty.items())
+        tiles = (keys.join(tiles, on=["zoom", "x", "y"], how="left")
+                 .selectExpr("zoom", "x", "y",
+                             f"coalesce(tile, CASE zoom {tile} END) AS tile",
+                             f"coalesce(tile_md5, CASE zoom {md5} END)"
+                             " AS tile_md5"))
     return tiles

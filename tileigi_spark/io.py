@@ -1,12 +1,12 @@
-"""Sinks + checkpoint/resume (reference fileio.rs, lib.rs:265-281 S11).
+"""Sinks + resume (reference fileio.rs, lib.rs:265-281 S11).
 
 Primary sink is a table written through `TileStore`, which abstracts the
 catalog: in production this is an Iceberg table (`spark.table`/`writeTo`),
 in the sandbox (no Iceberg jars baked in) a parquet path with identical
-semantics. The checkpoint protocol is storage-agnostic: finished tile keys
-are appended after each zoom-batch commit and left out on restart — a
-distributed version of the reference's does_metatile_exist file probe
-(fileio.rs:62-66).
+semantics. The store is its own checkpoint: a zoom batch commits its
+images, then its map rows, so a row in `map` means a readable tile, and
+a restart leaves out the keys of `map` — a distributed version of the
+reference's does_metatile_exist probe of its sink (fileio.rs:62-66).
 
 A zoom batch with nothing left to write costs one Spark job, the render
 that writes its staging table: the batch's row count is observed on that
@@ -17,10 +17,10 @@ the end of the loop) as one JVM-built append.
 The resume loop keeps two zoom batches in flight: while batch z stages
 and commits, batch z+1 already builds its plan and renders into its own
 staging table on a helper thread, so each batch's fixed driver and job
-cost overlaps the batch before it. The checkpoint is read once, before
+cost overlaps the batch before it. The done keys are read once, before
 the loop (zoom batches are disjoint, so no batch needs a key this run
-commits). Commits stay in zoom order and checkpoint-last, so a crash
-loses at most the two uncommitted batches. The window is two deep, not
+commits). Commits stay in zoom order, map rows last, so a crash loses
+at most the two uncommitted batches. The window is two deep, not
 every zoom at once: under FIFO scheduling a commit queues behind every
 later zoom's tasks, so unbounded submission would let a crash lose
 every zoom.
@@ -35,13 +35,13 @@ import time
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (BinaryType, IntegerType, LongType,
+                               StringType, StructField, StructType)
 from pyspark.util import inheritable_thread_target
 
 from . import sqllit
-from .partition import read_batch_parquet
+from .partition import _fs, read_batch_parquet
 
 _log = logging.getLogger(__name__)
 
@@ -54,6 +54,13 @@ _METRICS_LITERAL = {"string": lambda v: sqllit.string(str(v)),
                     "int": lambda v: str(int(v)),
                     "long": lambda v: str(int(v)),
                     "double": sqllit.double}
+# the `map` and `images` tables as write_tiles writes them (a parquet
+# `map` holds zoom as its partition column)
+_MAP_SCHEMA = StructType([
+    StructField("zoom", IntegerType()), StructField("x", LongType()),
+    StructField("y", LongType()), StructField("tile_id", StringType())])
+_IMAGES_SCHEMA = StructType([StructField("tile_id", StringType()),
+                             StructField("tile_data", BinaryType())])
 
 
 class TileStore:
@@ -81,41 +88,46 @@ class TileStore:
 
     def _read(self, spark: SparkSession, name: str,
               schema: StructType | None = None) -> DataFrame | None:
-        """The table, or None when it is absent. A parquet table read
-        with a known `schema` runs no schema-inference job."""
+        """The table, or None when it is absent: the catalog or the path
+        is probed first, so a fresh store's read fails no query (a
+        failed read logs an error stack). A parquet table read with a
+        known `schema` runs no schema-inference job; an empty directory
+        then reads as an empty frame, and a corrupt file fails the job
+        that reads it."""
         if self.use_iceberg:
-            return spark.table(f"{self.base}.{name}")
+            table = f"{self.base}.{name}"
+            return (spark.table(table) if spark.catalog.tableExists(table)
+                    else None)
         path = os.path.join(self.base, name)
+        fs, hpath = _fs(spark, path)
+        if not fs.exists(hpath):
+            return None
         reader = spark.read if schema is None else spark.read.schema(schema)
-        try:
-            return read_batch_parquet(spark, reader, path)
-        except AnalysisException as e:
-            # an absent table: no directory yet, or an empty one; a
-            # corrupt file must fail the read, not pass for "absent" (a
-            # resume would silently re-render everything)
-            if e.getCondition() in ("PATH_NOT_FOUND",
-                                    "UNABLE_TO_INFER_SCHEMA"):
-                return None
-            raise
+        return read_batch_parquet(spark, reader, path)
 
     def write_tiles(self, tiles: DataFrame, dedup: bool = True):
-        """tiles: (zoom,x,y,tile,tile_md5)."""
-        mapping = tiles.select("zoom", "x", "y",
-                               F.col("tile_md5").alias("tile_id"))
-        self._write(mapping, "map", partition_cols=("zoom",))
+        """tiles: (zoom,x,y,tile,tile_md5). The images are written first
+        and the map rows second, so a map row exists only once its image
+        is durable: a row in `map` means a readable tile, and `map` is
+        the resume record (done_keys). A crash between the two writes
+        leaves orphan images, which no map row reaches."""
         images = tiles.select(F.col("tile_md5").alias("tile_id"),
                               F.col("tile").alias("tile_data"))
         if dedup:
             images = images.dropDuplicates(["tile_id"])
         self._write(images, "images")
+        mapping = tiles.select("zoom", "x", "y",
+                               F.col("tile_md5").alias("tile_id"))
+        self._write(mapping, "map", partition_cols=("zoom",))
 
     def read_tiles(self, spark: SparkSession) -> DataFrame | None:
-        """Duplicate (zoom,x,y) map rows and duplicate tile_id image rows
-        can exist after a crash between a tile write and its checkpoint
-        mark; tiles are content-addressed and deterministic, so keeping
-        any one copy is correct."""
-        m = self._read(spark, "map")
-        i = self._read(spark, "images")
+        """Duplicate image rows can exist after a crash between a batch's
+        images write and its map write (the resume writes them again),
+        and duplicate (zoom,x,y) map rows in a store that an older writer
+        committed map-first; tiles are content-addressed and
+        deterministic, so keeping any one copy is correct."""
+        m = self._read(spark, "map", _MAP_SCHEMA)
+        i = self._read(spark, "images", _IMAGES_SCHEMA)
         if m is None or i is None:
             return None
         return (m.dropDuplicates(["zoom", "x", "y"])
@@ -162,16 +174,21 @@ class TileStore:
             shutil.rmtree(os.path.join(self.base, f"staging_z{zoom}"),
                           ignore_errors=True)
 
-    # ------------------------------------------------------ checkpointing
+    # ------------------------------------------------------------ resume
 
     def done_keys(self, spark: SparkSession) -> DataFrame | None:
-        """Finished (zoom,x,y) keys, which a resume leaves out (S11)."""
-        df = self._read(spark, "checkpoint")
-        if df is None:
-            return None
-        return df.select("zoom", "x", "y")
+        """Finished (zoom,x,y) keys, which a resume leaves out (S11): the
+        keys of `map`, read with its fixed schema (no inference job).
+        write_tiles writes a map row only after its image, so every key
+        is a readable tile."""
+        df = self._read(spark, "map", _MAP_SCHEMA)
+        return None if df is None else df.select("zoom", "x", "y")
 
     def mark_done(self, keys: DataFrame):
+        """Append (zoom,x,y) keys to a `checkpoint` table. Nothing in this
+        package reads it (`map` is the resume record, see done_keys); it
+        stays for perfbench/workloads.py, whose RerenderResume.prepare
+        marks its base store and counts `<base>/checkpoint`."""
         self._write(keys.select("zoom", "x", "y"), "checkpoint")
 
     def append_metrics(self, spark: SparkSession, rows: list[dict]):
@@ -202,10 +219,13 @@ def run_pyramid_with_checkpoint(spark: SparkSession, store: TileStore,
                                 run_id: str = "run") -> None:
     """Resumable driver loop: per zoom-batch, build without the finished
     keys, stage the batch to storage in ONE pass (which also counts
-    it), then derive the map/images writes and the checkpoint keys FROM
-    the staged table (never from a re-execution or an executor-memory
-    cache of tile bytes). The checkpoint append is last in each commit;
-    duplicate rows from the crash window are collapsed by read_tiles
+    it), then commit it: write_tiles derives the images write, then the
+    map write, FROM the staged table (never from a re-execution or an
+    executor-memory cache of tile bytes), and the metrics append
+    follows. The map rows are the commit record: a crash after the
+    images write leaves orphan image rows, a crash inside the map
+    append leaves only rows whose images exist, and the resume renders
+    whatever `map` lacks; read_tiles collapses the duplicate images
     (content-addressed tiles make any copy correct).
 
     The finished keys are read once, before the loop, and every batch's
@@ -224,11 +244,11 @@ def run_pyramid_with_checkpoint(spark: SparkSession, store: TileStore,
     for, and every staging table the loop wrote is dropped.
 
     A batch whose staging write counted no rows commits nothing: no
-    staging read-back, tile write or checkpoint mark. Its metrics row
-    is held and appended together with the next commit's row, or at the
-    end of the loop. A crash can therefore only lose the rows of batches
-    that checkpointed nothing, and the resume renders those batches
-    again and records them then.
+    staging read-back or tile write. Its metrics row is held and
+    appended together with the next commit's row, or at the end of the
+    loop. A crash can therefore only lose the rows of batches that
+    wrote no tiles, and the resume renders those batches again and
+    records them then.
 
     Each step runs under a job description (`pyramid z{zoom}: render+
     stage` on the helper thread, `... commit` and `... metrics` here),
@@ -250,7 +270,7 @@ def run_pyramid_with_checkpoint(spark: SparkSession, store: TileStore,
     inflight: deque = deque()  # (zoom, future) in zoom order, at most 2
     todo = iter(zooms)
     try:
-        sc.setJobDescription("pyramid: read checkpoint")
+        sc.setJobDescription("pyramid: read map")
         done = store.done_keys(spark)
         with ThreadPoolExecutor(max_workers=2,
                                 thread_name_prefix="pyramid") as pool:
@@ -270,9 +290,7 @@ def run_pyramid_with_checkpoint(spark: SparkSession, store: TileStore,
                 if n is not None:
                     if n:
                         sc.setJobDescription(f"pyramid z{zoom}: commit")
-                        staged_tiles = store.read_staging(spark, zoom)
-                        store.write_tiles(staged_tiles)
-                        store.mark_done(staged_tiles)
+                        store.write_tiles(store.read_staging(spark, zoom))
                     secs = time.time() - t0
                     tps = n / secs if secs else 0.0
                     _log.info("pyramid z%d: %d tiles in %.2f s "

@@ -288,8 +288,8 @@ JVMs is the deployment target). The {n}->{4 * n} span is the widest
 this sandbox can measure without the single-JVM artifact dominating;
 the engine plan itself (two hash-partitioned shuffles, salted hot keys,
 narrow everything else) has no serial section and every stage runs
->= 7.6/8 cores busy at local[8] (BENCH/PLANS.md + profile) — see
-README "Scale design".
+>= 7.6/8 cores busy at local[8] (tests/test_engine_e2e.py plan shape +
+profile) — see README "Scale design".
 
 Raw bench lines (all reps, interleaved; folded earlier-session lines
 last):

@@ -1,17 +1,18 @@
-"""Kill-anywhere crash/resume sweep over the checkpointed CLI pyramid.
+"""Kill-anywhere crash/resume sweep over the CLI pyramid's --if-not-exists.
 
 The fixed-crash-point tests (tests/test_io_and_ops.py) pin the two known
-windows (write-before-mark, rerun-after-done). This sweep validates the
+windows (images-before-map, rerun-after-done). This sweep validates the
 resume contract against ARBITRARY interruption: a child process runs the
 real CLI (`--if-not-exists`) over a fixture feature table; the parent
 SIGKILLs it at a random wall-clock moment inside the measured length of
 an uninterrupted control run (possibly several times), then lets a final
 run complete, and asserts the store's read view —
 the full {(zoom,x,y): md5} map — is byte-identical to an uninterrupted
-control build of the same input. Exercises staging write-once,
-checkpoint-last ordering, crash-window duplicate collapse, and staging
-cleanup, end-to-end through a real JVM death (io.py:104-160; the north
-rule's "resumable from checkpoint" claim).
+control build of the same input. Exercises staging write-once, the
+images-then-map commit (`map` is the resume record: a mapped tile's
+image is durable), orphan-image collapse in read_tiles, and staging
+cleanup, end-to-end through a real JVM death (io.py's
+run_pyramid_with_checkpoint and TileStore).
 
 Usage: python tools/fuzz_crash_resume.py [--seeds 6] [--maxzoom 3]
 Prints the control run's length, one line per seed with its kill count,
