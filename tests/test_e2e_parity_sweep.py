@@ -3,10 +3,11 @@
 The probe builds z0-z4 tiles from a random mixed geometry set and
 compares the {(zoom, x, y): tile_md5} maps of a 1-part and a 13-part
 input, the 13-part build with 7-row Arrow batches (batch cuts inside
-the encode and assemble walks' runs) and a child whose geometry stage
-sends every row to the scalar chain. Run `--seeds 4` (maxzoom 6) by
-hand before changing the encode walk, the assemble walk or a geometry
-lane.
+the render walk's runs), the 13-part build on the split plan (salted
+exchange + assemble_tiles, forced; the others take the fused plan) and
+a child whose geometry stage sends every row to the scalar chain. Run
+`--seeds 4` (maxzoom 6) by hand before changing the encode walk, the
+assemble walk, the render plan or a geometry lane.
 """
 
 import os

@@ -1,6 +1,7 @@
 """End-to-end engine tests: pyramid build, determinism across partitioning,
 invariants from FIXTURES.md §6."""
 
+import contextlib
 import gzip
 import hashlib
 
@@ -114,11 +115,12 @@ def test_include_empty_full_pyramid(spark, feats):
     assert counts == {0: 1, 1: 4, 2: 16}
 
 
-def test_include_empty_renders_once(spark, feats, tmp_path):
+def test_include_empty_renders_once(spark, feats, tmp_path, forced_split):
     """include_empty left-joins the tile keys to the one render: a
-    salt-free two-zoom range keeps its one render MapInPandas, a mixed
-    range its render and assemble pair, with a bbox and done keys too;
-    the empties fill exactly the keys the render left out."""
+    salt-free two-zoom range and a small mixed one keep their one render
+    MapInPandas, a mixed range on the split plan its render and assemble
+    pair, with a bbox and done keys too; the empties fill exactly the
+    keys the render left out."""
     from tileigi_spark.engine import with_bbox
 
     path = str(tmp_path / "feats")
@@ -126,12 +128,15 @@ def test_include_empty_renders_once(spark, feats, tmp_path):
     src = {"features": spark.read.parquet(path)}
     done = spark.createDataFrame([(5, 0, 0), (6, 1, 1)],
                                  "zoom int, x long, y long")
-    for minz, maxz, n_py in ((5, 6, 1), (3, 6, 2)):
-        tiles = build_tiles(spark, src, LAYERS, minz, maxz, shuffle_parts=8,
-                            include_empty=True, done_keys=done,
-                            bbox=(-20.0, -62.0, 0.0, -58.0))
+    for minz, maxz, split, n_py in ((5, 6, False, 1), (3, 6, False, 1),
+                                    (5, 6, True, 1), (3, 6, True, 2)):
+        with forced_split() if split else contextlib.nullcontext():
+            tiles = build_tiles(spark, src, LAYERS, minz, maxz,
+                                shuffle_parts=8, include_empty=True,
+                                done_keys=done,
+                                bbox=(-20.0, -62.0, 0.0, -58.0))
         _, got, _ = _plan_shape(tiles)
-        assert got == n_py, (minz, maxz)
+        assert got == n_py, (minz, maxz, split)
     rendered = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
                 for r in build_tiles(spark, src, LAYERS, 3, 4).collect()}
     full = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
@@ -331,17 +336,11 @@ def _cut_polygon_bbox(feats):
     return (float(lon0), float(lat0), float(lon1), float(lat1))
 
 
-@pytest.mark.parametrize("seed", [3, 11])
-def test_resume_and_bbox_match_full_render_minus_tiles(spark, resume_src,
-                                                       full_z0_6, seed):
-    """A render with done_keys and/or bbox is byte-identical to the full
-    render with those tiles taken out. The random done set always holds
-    half of a salted-zoom metatile (z3: one metatile of 8x8 tiles, every
-    salt's partials dropped) and half of a salt-free z6 metatile, plus
-    whole metatiles the render skips (z2's, a z5 one, and the tiles
-    inside the bbox of the z5 metatile its east edge cuts), for a mixed
-    range (z0-z6, partials + assemble) and a salt-free range (z5-z6, one
-    pass); the bbox cuts a polygon in two."""
+def _resume_and_bbox_match(spark, resume_src, full_z0_6, seed, plan,
+                            n_exchanges, hash_exchanges):
+    """The resume and bbox renders of a seed's done set, built under
+    `plan` (a context manager) with n_exchanges hash exchanges on the
+    mixed range, against the full render."""
     import random
 
     from tileigi_spark.mercator import bbox_lonlat_to_merc, bbox_tile_range
@@ -368,9 +367,12 @@ def test_resume_and_bbox_match_full_render_minus_tiles(spark, resume_src,
     src = {"features": resume_src}
 
     def render(minz, maxz, **kw):
+        with plan():
+            tiles = build_tiles(spark, src, LAYERS, minz, maxz,
+                                shuffle_parts=7, **kw)
+        assert hash_exchanges(tiles) == (1 if minz > 4 else n_exchanges)
         return {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
-                for r in build_tiles(spark, src, LAYERS, minz, maxz,
-                                     shuffle_parts=7, **kw).collect()}
+                for r in tiles.collect()}
 
     done_df = spark.createDataFrame(sorted(done), "zoom int, x long, y long")
     assert render(0, 6, done_keys=done_df) == {
@@ -395,6 +397,32 @@ def test_resume_and_bbox_match_full_render_minus_tiles(spark, resume_src,
     assert any(k[0] == 6 for k in got)
 
 
+@pytest.mark.parametrize("seed", [3, 11])
+def test_resume_and_bbox_match_full_render_minus_tiles(spark, resume_src,
+                                                       full_z0_6, seed,
+                                                       hash_exchanges):
+    """A render with done_keys and/or bbox is byte-identical to the full
+    render with those tiles taken out. The random done set always holds
+    half of a salted-zoom metatile (z3: one metatile of 8x8 tiles) and
+    half of a salt-free z6 metatile, plus whole metatiles the render
+    skips (z2's, a z5 one, and the tiles inside the bbox of the z5
+    metatile its east edge cuts), for a mixed range (z0-z6) and a
+    salt-free range (z5-z6); the bbox cuts a polygon in two. Both ranges
+    render in one pass: the fixture fits one advisory partition."""
+    _resume_and_bbox_match(spark, resume_src, full_z0_6, seed,
+                           contextlib.nullcontext, 1, hash_exchanges)
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_resume_and_bbox_match_full_render_minus_tiles_split(
+        spark, resume_src, full_z0_6, seed, forced_split, hash_exchanges):
+    """The same on the split plan, against the fused full render: the
+    mixed range emits salted partials (a done z3 tile's markers reach
+    every salt's run) and assemble_tiles merges them."""
+    _resume_and_bbox_match(spark, resume_src, full_z0_6, seed,
+                           forced_split, 2, hash_exchanges)
+
+
 def _plan_shape(tiles):
     """(hash exchanges, MapInPandas nodes, the plan text below the
     deepest exchange) of a build_tiles result's physical plan."""
@@ -406,13 +434,15 @@ def _plan_shape(tiles):
             plan.count("MapInPandas"), "\n".join(lines[last + 1:]))
 
 
-def test_render_plan_shape(spark, feats, tmp_path):
+def test_render_plan_shape(spark, feats, tmp_path, forced_split):
     """Covered rows are exchanged once, by metatile: below that exchange
     the plan runs no Python (the sources carry their bbox columns, so
     with_bbox adds no pass), and one MapInPandas renders. A salt-free
     range has one hash exchange, with done keys and a bbox too (no
-    anti-join exchange); a mixed range adds assemble_tiles' exchange and
-    MapInPandas."""
+    anti-join exchange), and so has a mixed range that fits one
+    advisory partition; on the split plan a mixed range adds
+    assemble_tiles' exchange and MapInPandas. Choosing the plan starts
+    no Spark job."""
     from tileigi_spark.engine import with_bbox
 
     path = str(tmp_path / "feats")
@@ -426,8 +456,20 @@ def test_render_plan_shape(spark, feats, tmp_path):
         bbox=(-20.0, -62.0, 0.0, -58.0)))
     assert (n_ex, n_py) == (1, 1)
     assert "Python" not in below and "MapInPandas" not in below
-    n_ex, n_py, below = _plan_shape(build_tiles(spark, src, LAYERS, 0, 6,
-                                                shuffle_parts=8))
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-only", "build_tiles without an action")
+    try:
+        fused = build_tiles(spark, src, LAYERS, 0, 6, shuffle_parts=8)
+        with forced_split():
+            split = build_tiles(spark, src, LAYERS, 0, 6, shuffle_parts=8)
+        assert list(sc.statusTracker().getJobIdsForGroup("plan-only")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_ex, n_py, below = _plan_shape(fused)
+    assert (n_ex, n_py) == (1, 1)
+    assert "Python" not in below and "MapInPandas" not in below
+    n_ex, n_py, below = _plan_shape(split)
     assert (n_ex, n_py) == (2, 2)
     assert "Python" not in below and "MapInPandas" not in below
 
@@ -436,10 +478,12 @@ def test_finished_runs_count_each_wanted_tile_once():
     """A metatile run is skipped only when every tile it could render is
     done: all size x size tiles of the metatile (size = min(8, 2^zoom)),
     or those inside the bbox's tile range; duplicate done keys count
-    once, and each salt's run counts its own markers."""
+    once, and on the split plan each salt's run counts its own
+    markers."""
     import pandas as pd
 
-    from tileigi_spark.engine import _finished_runs
+    from tileigi_spark.engine import (_METATILE_KEYS, _SALTED_KEYS,
+                                      _finished_runs)
 
     def marks(tiles, salt=0):
         return pd.DataFrame(
@@ -447,8 +491,8 @@ def test_finished_runs_count_each_wanted_tile_once():
               float(x), float(y)) for z, x, y in tiles],
             columns=["zoom", "mtx", "mty", "salt", "x", "y"])
 
-    def runs(frame, ranges=None):
-        return sorted(_finished_runs(frame, 8, ranges).tolist())
+    def runs(frame, ranges=None, keys=_SALTED_KEYS):
+        return sorted(_finished_runs(frame, keys, 8, ranges).tolist())
 
     z1 = [(1, x, y) for x in range(2) for y in range(2)]
     assert runs(marks(z1)) == [(1, 0, 0, 0)]
@@ -462,3 +506,12 @@ def test_finished_runs_count_each_wanted_tile_once():
     assert runs(marks(inside), ranges) == [(5, 1, 2, 0)]
     assert runs(marks(inside[1:]), ranges) == []
     assert runs(marks(inside), {5: (9, 20, 12, 21)}) == []
+    # keyed by metatile alone (the fused plan): one marker per done tile,
+    # and markers of one metatile in different salts count together
+    fused = marks(z5).drop(columns="salt")
+    assert runs(fused, keys=_METATILE_KEYS) == [(5, 1, 2)]
+    assert runs(fused[1:], keys=_METATILE_KEYS) == []
+    assert runs(pd.concat([marks(z5[:10], salt=3), marks(z5[10:])]),
+                keys=_METATILE_KEYS) == [(5, 1, 2)]
+    assert runs(marks(inside).drop(columns="salt"), ranges,
+                keys=_METATILE_KEYS) == [(5, 1, 2)]

@@ -62,17 +62,15 @@ def concave_df(spark, n=300):
     return spark.createDataFrame(pdf)
 
 
-def _build_md5s(spark, n_parts):
+def _build_md5s(spark, n_parts, n_exchanges, hash_exchanges):
     feats = concave_df(spark).repartition(n_parts)
     tiles = build_tiles(spark, {"concave": feats}, LAYERS, 0, 4)
+    assert hash_exchanges(tiles) == n_exchanges
     return {f"{r['zoom']}/{r['x']}/{r['y']}": r["tile_md5"]
             for r in tiles.collect()}
 
 
-def test_golden_concave_tiles(spark):
-    got = _build_md5s(spark, 3)
-    assert len(got) > 50  # the layer must actually cover the pyramid
-    assert got == _build_md5s(spark, 9), "bytes depend on parallelism"
+def _check_golden(got):
     if not os.path.exists(GOLDEN_PATH):
         os.makedirs(os.path.dirname(GOLDEN_PATH), exist_ok=True)
         with open(GOLDEN_PATH, "w") as f:
@@ -83,3 +81,19 @@ def test_golden_concave_tiles(spark):
     assert got == golden, (
         "concave tile bytes changed vs committed golden — if intentional, "
         f"delete {GOLDEN_PATH} and rerun to regenerate")
+
+
+def test_golden_concave_tiles(spark, hash_exchanges):
+    """The fused render (the fixture is a pandas frame of known size)."""
+    got = _build_md5s(spark, 3, 1, hash_exchanges)
+    assert len(got) > 50  # the layer must actually cover the pyramid
+    assert got == _build_md5s(spark, 9, 1, hash_exchanges), \
+        "bytes depend on parallelism"
+    _check_golden(got)
+
+
+def test_golden_concave_tiles_split(spark, forced_split, hash_exchanges):
+    """The split render gives the same bytes."""
+    with forced_split():
+        got = _build_md5s(spark, 9, 2, hash_exchanges)
+    _check_golden(got)

@@ -21,15 +21,14 @@ LAYERS = Layers(layers=[
 ], global_minzoom=0, global_maxzoom=14)
 
 
-def _build_md5s(spark):
-    feats = features_df(spark, 120)
+def _build_md5s(spark, feats, n_exchanges, hash_exchanges):
     tiles = build_tiles(spark, {"features": feats}, LAYERS, 0, 4)
+    assert hash_exchanges(tiles) == n_exchanges
     return {f"{r['zoom']}/{r['x']}/{r['y']}": r["tile_md5"]
             for r in tiles.collect()}
 
 
-def test_golden_tiles(spark):
-    got = _build_md5s(spark)
+def _check_golden(got):
     if not os.path.exists(GOLDEN_PATH):
         os.makedirs(os.path.dirname(GOLDEN_PATH), exist_ok=True)
         with open(GOLDEN_PATH, "w") as f:
@@ -40,6 +39,21 @@ def test_golden_tiles(spark):
     assert got == golden, (
         "tile bytes changed vs committed golden — if intentional, delete "
         f"{GOLDEN_PATH} and rerun to regenerate")
+
+
+def test_golden_tiles(spark, known_size, hash_exchanges):
+    """The fused render: the fixture, of known size, fits one advisory
+    partition."""
+    _check_golden(_build_md5s(spark, known_size(features_df(spark, 120)),
+                              1, hash_exchanges))
+
+
+def test_golden_tiles_split(spark, forced_split, hash_exchanges):
+    """The split render (salted exchange + assemble_tiles) gives the
+    same bytes."""
+    with forced_split():
+        got = _build_md5s(spark, features_df(spark, 120), 2, hash_exchanges)
+    _check_golden(got)
 
 
 # --------------------------------------------------- multi-layer golden
@@ -59,17 +73,15 @@ ML_LAYERS = Layers(layers=[
 ], global_minzoom=0, global_maxzoom=14)
 
 
-def _build_ml(spark, n_parts):
-    feats = features_df(spark, 90).repartition(n_parts)
-    tiles = build_tiles(spark, {"features": feats}, ML_LAYERS, 0, 4)
+def _build_ml(spark, feats, n_parts, n_exchanges, hash_exchanges):
+    tiles = build_tiles(spark, {"features": feats.repartition(n_parts)},
+                        ML_LAYERS, 0, 4)
+    assert hash_exchanges(tiles) == n_exchanges
     return {f"{r['zoom']}/{r['x']}/{r['y']}": r["tile_md5"]
             for r in tiles.collect()}
 
 
-def test_golden_multilayer(spark):
-    got = _build_ml(spark, 1)
-    # byte parity across partitionings (A2 merge order independence)
-    assert got == _build_ml(spark, 11)
+def _check_golden_ml(got):
     if not os.path.exists(GOLDEN_ML_PATH):
         with open(GOLDEN_ML_PATH, "w") as f:
             json.dump(got, f, indent=0, sort_keys=True)
@@ -79,3 +91,22 @@ def test_golden_multilayer(spark):
     assert got == golden, (
         "multilayer tile bytes changed vs committed golden — if "
         f"intentional, delete {GOLDEN_ML_PATH} and rerun to regenerate")
+
+
+def test_golden_multilayer(spark, known_size, hash_exchanges):
+    """The fused render, at two partitionings."""
+    feats = known_size(features_df(spark, 90))
+    got = _build_ml(spark, feats, 1, 1, hash_exchanges)
+    # byte parity across partitionings (A2 merge order independence)
+    assert got == _build_ml(spark, feats, 11, 1, hash_exchanges)
+    _check_golden_ml(got)
+
+
+def test_golden_multilayer_split(spark, forced_split, hash_exchanges):
+    """The split render, at two partitionings: each layer's salted
+    partials merge to the fused bytes."""
+    feats = features_df(spark, 90)
+    with forced_split():
+        got = _build_ml(spark, feats, 1, 2, hash_exchanges)
+        assert got == _build_ml(spark, feats, 11, 2, hash_exchanges)
+    _check_golden_ml(got)

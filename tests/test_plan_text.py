@@ -13,7 +13,9 @@ Contracts pinned here:
 * building a one-zoom bbox plan and a cell-layout read stays within a
   py4j round-trip budget, and the resume loop over a cell layout runs
   no per-zoom schema-inference job;
-* metrics rows carry quotes and backslashes through the SQL text.
+* metrics rows carry quotes and backslashes through the SQL text;
+* building and writing a render, and a resume-loop commit, capture no
+  Python call site (no F.col, no Column method).
 """
 
 import contextlib
@@ -369,6 +371,60 @@ def test_resume_loop_over_cells_runs_no_per_zoom_inference(spark, cells,
     got = sorted((r.zoom, r.x, r.y, r.tile_md5)
                  for r in store.read_tiles(spark).collect())
     assert got == want
+
+
+@contextlib.contextmanager
+def _call_sites():
+    """Counts PySpark's call-site captures while the block runs: F.col
+    and every Column method record the Python caller's stack for error
+    messages (spark.python.sql.dataFrameDebugging.enabled), at 3-4 py4j
+    round trips a call."""
+    import pyspark.errors.utils as eu
+
+    real = eu._capture_call_site
+    n = [0]
+
+    def counting(depth):
+        n[0] += 1
+        return real(depth)
+
+    eu._capture_call_site = counting
+    try:
+        yield n
+    finally:
+        eu._capture_call_site = real
+
+
+def test_render_and_commit_capture_no_call_site(spark, cells, tmp_path):
+    """Building and writing a render (split from an RDD source, fused
+    from the cell layout) and a one-zoom loop commit build their plans
+    from SQL text and F.expr, and capture no call site."""
+    from tileigi_spark.mercator import bbox_lonlat_to_merc
+
+    with _call_sites() as n:
+        F.col("zoom")
+    assert n[0] == 1   # the spy sees a capture
+    feats = features_df(spark, 60)
+    with _call_sites() as n:
+        build_tiles(spark, {"feats": feats}, LAYER, 0, 2).write.parquet(
+            str(tmp_path / "split"))
+        build_tiles(spark, {"feats": spark.read.parquet(cells)}, LAYER, 0,
+                    2, include_empty=True).write.parquet(
+            str(tmp_path / "fused"))
+    assert n[0] == 0
+
+    def build(zoom, done):
+        src = read_cell_partitioned(spark, cells,
+                                    bbox_merc=bbox_lonlat_to_merc(BBOX),
+                                    minzoom=zoom)
+        return build_tiles(spark, {"feats": src}, LAYER, zoom, zoom,
+                           bbox=BBOX, done_keys=done, shuffle_parts=8)
+
+    store = TileStore(str(tmp_path / "store"))
+    with _call_sites() as n:
+        run_pyramid_with_checkpoint(spark, store, build, [8], run_id="cs")
+        store.read_tiles(spark).collect()
+    assert n[0] == 0
 
 
 def test_metrics_rows_escape_strings(spark, tmp_path):

@@ -10,8 +10,10 @@ from tileigi_spark.engine import build_tiles
 from tileigi_spark.fixtures import features_df
 
 
-def _tiles_md5(spark, zoom_ranges, n_feats=40):
+def _tiles_md5(spark, zoom_ranges, n_feats=40, arrow=False):
     feats = features_df(spark, n_feats)
+    if arrow:
+        feats = spark.createDataFrame(feats.toArrow())
     feats.createOrReplaceTempView("tgrp_feats")
     layers = Layers(layers=[
         Layer(id="base", source="tgrp_feats", minzoom=0, maxzoom=14,
@@ -32,3 +34,14 @@ def test_template_zoom_grouping_byte_invariant(spark):
     ungrouped = _tiles_md5(spark, [(z, z) for z in range(4)])
     assert grouped == ungrouped
     assert len(grouped) > 0
+
+
+def test_template_zoom_grouping_over_in_memory_source(spark):
+    """Over an in-memory Arrow relation the optimizer applies each
+    zoom's filter to the rows themselves, and the plan prints as the
+    relation's columns alone: zooms whose queries keep different rows
+    still form their own groups."""
+    grouped = _tiles_md5(spark, [(0, 3)], arrow=True)
+    assert grouped == _tiles_md5(spark, [(z, z) for z in range(4)],
+                                 arrow=True)
+    assert grouped == _tiles_md5(spark, [(0, 3)])

@@ -54,6 +54,8 @@ def rings_of(geom):
     typ, data = geom
     if typ == "Point":
         return [(False, [data])]
+    if typ == "MultiPoint":
+        return [(False, [p]) for p in data]
     if typ == "LineString":
         return [(False, data)]
     if typ == "MultiLineString":
@@ -87,13 +89,9 @@ def test_random_rows_match_scalar_reader():
     for i, g in enumerate(geoms):
         w = geom_to_wkb(g)
         assert wkb_to_geom(w) == g
-        if g[0] == "MultiPoint":
-            assert rag.code[i] == 0
-            assert rag.row_off[i] == rag.row_off[i + 1]
-            continue
         assert_row(rag, i, g)
         read += 1
-    assert read > 400
+    assert read == len(geoms)
     assert rag.row_off[-1] == len(rag.ring_int) == len(rag.ring_off) - 1
     assert rag.ring_off[-1] == len(rag.xs) == len(rag.ys)
     # the writer round-trips every row read, and writes every geometry
@@ -157,7 +155,16 @@ REFUSED = {
     "iso_z": struct.pack("<BIddd", 1, 1001, 1.0, 2.0, 3.0),
     "iso_m_line": struct.pack("<BII", 1, 2002, 1) + bytes(24),
     "iso_zm_poly": struct.pack("<BII", 1, 3003, 0),
-    "multipoint": geom_to_wkb(("MultiPoint", [(1.0, 2.0)])),
+    "multipoint_big_endian_member": (
+        _hdr(4, 2) + geom_to_wkb(("Point", (1.0, 2.0)))
+        + struct.pack(">BIdd", 0, 1, 3.0, 4.0)),
+    "multipoint_of_line": _hdr(4, 1) + GOOD_LINE,
+    "multipoint_member_z": (
+        _hdr(4, 1) + struct.pack("<BIddd", 1, 1001, 1.0, 2.0, 3.0)),
+    "truncated_multipoint": geom_to_wkb(("MultiPoint", [(1.0, 2.0)]))[:-1],
+    "trailing_multipoint": (geom_to_wkb(("MultiPoint", [(1.0, 2.0)]))
+                            + b"\x00"),
+    "zero_member_multipoint": _hdr(4, 0),
     "truncated_poly": GOOD_POLY[:-8],
     "truncated_header": GOOD_POLY[:7],
     "truncated_point": geom_to_wkb(("Point", (1.0, 2.0)))[:-1],
@@ -201,6 +208,30 @@ def test_refuses(name):
     assert_row(rag, 0, ("Polygon", [SQ]))
     assert_row(rag, 2, ("LineString", SQ[:2]))
     assert write_ragged(rag.take([0, 2])) == [GOOD_POLY, GOOD_LINE]
+
+
+def test_multipoints_read_as_one_ring_per_point():
+    """MultiPoints of 1-50 members, NaN coordinates among them, read as
+    ragged_of lays them out (one one-vertex ring per point), interleaved
+    with Points and refused rows."""
+    rng = np.random.default_rng(41)
+    geoms = []
+    for i in range(300):
+        pts = _pts(rng, int(rng.integers(1, 51)))
+        nan = rng.random(len(pts)) < 0.1
+        pts = [(float("nan"), y) if m else (x, y)
+               for (x, y), m in zip(pts, nan)]
+        geoms.append(("MultiPoint", pts) if i % 3 else ("Point", pts[0]))
+    ways = [geom_to_wkb(g) for g in geoms]
+    bad = REFUSED["multipoint_big_endian_member"]
+    rag = read_ragged(ways[:150] + [bad] + ways[150:])
+    assert rag.code[150] == 0
+    keep = np.r_[0:150, 151:len(ways) + 1]
+    got = rag.take(keep)
+    want = ragged_of([wkb_to_geom(w) for w in ways])
+    for a, b in zip(got, want):
+        np.testing.assert_array_equal(a, b)
+    assert write_ragged(got) == ways
 
 
 def test_refused_rows_are_scalar_readable_or_undecodable():

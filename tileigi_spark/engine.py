@@ -8,28 +8,35 @@ then process, encode and write them):
   features ──(bbox cover explode = J1, no shuffle)──▶ (zoom, metatile) rows
       │ every layer's covered rows, unioned (+ done-tile marker rows)
       ▼
-  repartition(zoom,mtx,mty,salt) + sortWithinPartitions + mapInPandas:
+  repartition(zoom,mtx,mty[,salt]) + sortWithinPartitions + mapInPandas:
       per frame of complete metatile runs, per layer,
       geom.batch.process_general — remap → dedup/spikes → exact-int RDP
       → buffered clip → quadtree tile split (J3) → make_valid → winding
       → per-tile shift (G2-G16) on the points, axis-rect, ragged or
       scalar lane — then the pieces in canonical order through the
-      partial MVT layer encode (A1; salt breaks z0-z4 hot tiles, O13)
-      and, on salt-free ranges, the tile assembly (A2)
-  repartition(z,x,y) + sortWithinPartitions + mapInPandas
-      — salted ranges only: merge partials per layer + tile assembly +
-        gzip + md5 (A2, assemble_tiles)
+      MVT layer encode (A1) and the tile assembly + gzip + md5 (A2)
+  split plan only (salted exchange key; z0-z4 hot tiles, O13): the
+      render emits partial layers, and assemble_tiles' repartition(z,x,y)
+      + sortWithinPartitions + mapInPandas merges them and assembles
 
-Shuffles: one repartition of covered rows, plus assemble_tiles' on a
-range with salted zooms. No piece enters the JVM: a covered row is
-exchanged once, and every tile lies inside exactly one metatile, so the
-task that holds a metatile's rows renders its tiles whole. Everything
-upstream is narrow — the cover "join" is arithmetic + explode on the
-feature side, which Catalyst keeps in one stage with the scan (predicate
-pushdown + column pruning intact; no Python there unless a source lacks
-bbox columns and with_bbox decodes them). Sorted-stream mapInPandas (not
-per-group applyInPandas) amortizes per-tile overhead across whole Arrow
-batches.
+Shuffles: one repartition of covered rows. A range with salted zooms
+(z <= 4) whose covered rows are estimated larger than one advisory
+partition (spark.sql.adaptive.advisoryPartitionSizeInBytes, or of
+unknown size) takes the split plan instead: the salt joins the exchange
+key, so a hot low-zoom tile's features spread over up to 16 tasks, and
+assemble_tiles adds a second exchange to merge their partials. An
+unsplit run holds at most the whole input, so below that bound one
+exchange is the whole plan. Tile bytes are the same on both plans: a
+layer's features come in (salt, feature_id) order, and the merge of
+in-order partials equals one encode pass. No piece enters the JVM: a
+covered row is exchanged once, and every tile lies inside exactly one
+metatile, so the task that holds a metatile's rows renders its tiles
+whole (split: one salt of them). Everything upstream is narrow — the
+cover "join" is arithmetic + explode on the feature side, which Catalyst
+keeps in one stage with the scan (predicate pushdown + column pruning
+intact; no Python there unless a source lacks bbox columns and with_bbox
+decodes them). Sorted-stream mapInPandas (not per-group applyInPandas)
+amortizes per-tile overhead across whole Arrow batches.
 
 geometry_stage, encode_layers and encode_assemble_fused are the same
 steps as separate DataFrame stages over a piece stream. The render does
@@ -42,7 +49,10 @@ hands PostGIS one parameterized query per batch: each Column operator is
 a py4j round trip, and a resume loop rebuilds this plan once per zoom
 batch. Driver-side float constants enter as exact double literals (_d),
 and AND/OR chains are nested left-deep (_chain), so the optimized plan
-is the one the Column operators built.
+is the one the Column operators built. Sort keys are F.expr columns, not
+names or F.col: PySpark wraps F.col and every Column method to capture
+the Python call site (spark.python.sql.dataFrameDebugging.enabled), at
+3-4 py4j round trips a call.
 """
 
 from __future__ import annotations
@@ -164,8 +174,8 @@ def layer_fields(spark: SparkSession, sources: dict[str, DataFrame],
 def _bbox_arrays(ways, rag):
     """Per-row bbox arrays of a WKB column (NaN = undecodable) that
     wkb.read_ragged read as `rag`. Rows it read take min/max from its
-    vertex arrays; the rows it refuses (big-endian, EWKB, MultiPoint,
-    malformed) are decoded by wkb_to_geom. Both follow Python's min/max:
+    vertex arrays; the rows it refuses (big-endian, EWKB, malformed)
+    are decoded by wkb_to_geom. Both follow Python's min/max:
     a NaN first coordinate gives NaN, later NaNs are skipped."""
     ways = list(ways)
     out = {k: np.full(len(ways), np.nan)
@@ -750,8 +760,8 @@ def _frame_rows(rag, ki, vi, valid):
 
 def _read_pieces(geoms):
     """A WKB piece column as one Ragged: read_ragged, with the rows it
-    refuses (MultiPoint, non-canonical WKB) decoded by wkb_to_geom into
-    their places."""
+    refuses (non-canonical WKB) decoded by wkb_to_geom into their
+    places."""
     rag = read_ragged(geoms)
     refused = np.flatnonzero(rag.code == 0)
     if not len(refused):
@@ -901,8 +911,8 @@ def assemble_tiles(partials: DataFrame, compress: bool = True,
         ordered = partials.repartition("zoom", "x", "y")
     else:
         ordered = partials.repartition(shuffle_parts, "zoom", "x", "y")
-    ordered = ordered.sortWithinPartitions("zoom", "x", "y", "layer_order",
-                                           "layer", "salt")
+    ordered = ordered.sortWithinPartitions(*map(F.expr, (
+        "zoom", "x", "y", "layer_order", "layer", "salt")))
     return ordered.mapInPandas(_make_assemble_run(compress),
                                schema=_TILE_SCHEMA)
 
@@ -940,19 +950,24 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
         schema=_TILE_SCHEMA)
 
 
-# the render exchange's key: every tile lies inside one metatile, and a
-# salt splits a low-zoom metatile's features across tasks
-_METATILE_KEYS = ("zoom", "mtx", "mty", "salt")
-# the canonical piece order inside a tile: the encode walk's input order
-_PIECE_ORDER = ("zoom", "x", "y", "salt", "layer_order", "feature_id")
+# the render exchange's key: every tile lies inside one metatile; the
+# split plan adds the salt, so a low-zoom metatile's features spread
+# over tasks
+_METATILE_KEYS = ("zoom", "mtx", "mty")
+_SALTED_KEYS = _METATILE_KEYS + ("salt",)
+# the canonical piece order inside a tile: the encode walk's input order.
+# A layer's features come in (salt, feature_id) order whether the salts
+# are encoded in one run or as partials merged later (O13)
+_PIECE_ORDER = ("zoom", "x", "y", "layer_order", "salt", "feature_id")
 
 
-def _finished_runs(marks, metatile_scale: int, tile_ranges):
-    """The (zoom, mtx, mty, salt) runs of done-marker rows `marks` whose
-    every wanted tile is done: all tiles of the metatile, or those inside
-    the zoom's bbox tile range (tile_ranges; markers lie inside it)."""
-    n = (marks.drop_duplicates(list(_METATILE_KEYS + ("x", "y")))
-         .groupby(list(_METATILE_KEYS), sort=False).size())
+def _finished_runs(marks, keys, metatile_scale: int, tile_ranges):
+    """The runs of equal `keys` (the render walk's: (zoom, mtx, mty),
+    plus salt on the split plan) of done-marker rows `marks` whose every
+    wanted tile is done: all tiles of the metatile, or those inside the
+    zoom's bbox tile range (tile_ranges; markers lie inside it)."""
+    n = (marks.drop_duplicates(list(keys) + ["x", "y"])
+         .groupby(list(keys), sort=False).size())
     z = n.index.get_level_values("zoom").to_numpy(np.int64)
     size = np.minimum(metatile_scale, np.left_shift(1, z))
     x0 = n.index.get_level_values("mtx").to_numpy(np.int64) * size
@@ -971,24 +986,30 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
                      metatile_scale: int, global_maxzoom: int, fuse: bool,
                      compress: bool = True, tile_ranges=None):
     """The render pass as one mapInPandas function, over covered rows
-    sorted by (zoom, mtx, mty, salt, layer_order, feature_id).
+    sorted by their run keys, layer_order and feature_id. The run keys
+    are (zoom, mtx, mty) with `fuse` and (zoom, mtx, mty, salt) on the
+    split plan, whose runs each hold one salt of a metatile.
 
-    One walk (_walk_runs) hands it frames of complete metatile runs, and
-    each frame holds whole tiles, so it is rendered on its own:
-    geom.batch.process_general once per layer (layer_specs: (layer_order,
-    layer id, buffer units) per layer), the pieces and their Ragged
-    stable-sorted into the canonical piece order (Ragged.take), the
-    encoder on them and, with `fuse` (salt-free zooms only), the
-    assembler on its partials; otherwise the pass emits partials. No
-    piece is written as WKB. `carry` names the columns every piece keeps
-    (salt and the property columns).
+    One walk (_walk_runs) hands it frames of complete runs, and each
+    frame holds whole tiles (or, split, whole salts of them), so it is
+    rendered on its own: geom.batch.process_general once per layer
+    (layer_specs: (layer_order, layer id, buffer units) per layer), the
+    pieces and their Ragged stable-sorted into the canonical piece order
+    (Ragged.take), the encoder on them and, with `fuse`, the assembler on
+    its partials: salt is then an order key only, so each (tile, layer)
+    is one partial. Split, the pass emits one partial per (tile, salt,
+    layer) for assemble_tiles to merge. No piece is written as WKB.
+    `carry` names the columns every piece keeps (salt and the property
+    columns).
 
     Rows with layer_order -1 are done markers: one per finished (zoom, x,
-    y) tile, keyed by its metatile and salt, so they land in the frame of
-    that tile's run; the tile's pieces are dropped before the encode, and
-    a run whose wanted tiles (_finished_runs) are all done is not
-    rendered at all — a resume's finished zooms cost no geometry."""
+    y) tile and run, so they land in the frame of that tile's run; the
+    tile's pieces are dropped before the encode, and a run whose wanted
+    tiles (_finished_runs) are all done is not rendered at all — a
+    resume's finished zooms cost no geometry."""
     from .geom.batch import process_general
+
+    run_keys = _METATILE_KEYS if fuse else _SALTED_KEYS
 
     names = np.empty(1 + max(o for o, _, _ in layer_specs), dtype=object)
     for order, layer_id, _ in layer_specs:
@@ -1001,10 +1022,11 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
         lo = pdf["layer_order"].to_numpy()
         marks = pdf[lo < 0]
         if len(marks):
-            finished = _finished_runs(marks, metatile_scale, tile_ranges)
+            finished = _finished_runs(marks, run_keys, metatile_scale,
+                                      tile_ranges)
             if len(finished):
                 lo = np.where(pd.MultiIndex.from_arrays(
-                    [pdf[k].to_numpy(np.int64) for k in _METATILE_KEYS])
+                    [pdf[k].to_numpy(np.int64) for k in run_keys])
                     .isin(finished), -1, lo)
         frames, rags = [], []
         for order, _, buffer_units in layer_specs:
@@ -1028,11 +1050,14 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
         if not len(at):
             return {}
         f = f.iloc[at]
-        parts = encode(f.assign(layer=names[f["layer_order"].to_numpy()]),
-                       concat_ragged(rags).take(at))
-        return assemble(pd.DataFrame(parts)) if fuse else parts
+        f = f.assign(layer=names[f["layer_order"].to_numpy()])
+        rag = concat_ragged(rags).take(at)
+        if not fuse:
+            return encode(f, rag)
+        # salt only ordered the features: one partial per (tile, layer)
+        return assemble(pd.DataFrame(encode(f.assign(salt=0), rag)))
 
-    return lambda iterator: _walk_runs(iterator, _METATILE_KEYS, render)
+    return lambda iterator: _walk_runs(iterator, run_keys, render)
 
 
 def empty_tile_bytes(layers: Layers, zoom: int, compress: bool = True) -> bytes:
@@ -1083,11 +1108,10 @@ def tile_driver(spark: SparkSession, zoom: int,
     else:
         x0, y0, x1, y1 = tile_range
         w, h = x1 - x0 + 1, y1 - y0 + 1
-    return (spark.range(w * h)
-            .select(F.lit(zoom).cast("int").alias("zoom"),
-                    (F.lit(x0) + (F.col("id") / h).cast("long")).alias("x"),
-                    (F.lit(y0) + F.pmod(F.col("id"), F.lit(h))).cast("long")
-                    .alias("y")))
+    return spark.range(w * h).selectExpr(
+        f"CAST({zoom} AS INT) AS zoom",
+        f"({x0} + CAST((id / {h}) AS BIGINT)) AS x",
+        f"CAST(({y0} + pmod(id, {h})) AS BIGINT) AS y")
 
 
 def _python_stage_parts(spark: SparkSession,
@@ -1110,6 +1134,20 @@ def _python_stage_parts(spark: SparkSession,
     return max(1, min(shuffle_parts, cores * _TASKS_PER_CORE))
 
 
+def _larger_than_advisory(spark: SparkSession, df: DataFrame) -> bool:
+    """True when df's size estimate is larger than spark.sql.adaptive.
+    advisoryPartitionSizeInBytes. The estimate is the optimized plan's
+    statistics (a union's is the sum of its branches'), so no Spark job
+    runs. A relation whose size Spark does not know (an RDD source)
+    reads as spark.sql.defaultSizeInBytes, Long.MaxValue unless set, so
+    it counts as larger, as it does for the planner's broadcast bound."""
+    entry = (spark._jvm.org.apache.spark.sql.internal.SQLConf
+             .ADVISORY_PARTITION_SIZE_IN_BYTES())
+    advisory = spark._jsparkSession.sessionState().conf().getConf(entry)
+    return (df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            > advisory)
+
+
 def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                 layers: Layers, minzoom: int, maxzoom: int, *,
                 metatile_scale: int = 8, compress: bool = True,
@@ -1124,8 +1162,8 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     + `feature_id` (stable long) + property columns.
     done_keys: optional (zoom, x, y) DataFrame of already-written tiles,
     left out for checkpoint resume (S11): each key rides the render
-    exchange as a marker row of its metatile (one per salt at salted
-    zooms), and the render task drops that tile's pieces.
+    exchange as a marker row of its metatile (on the split plan, one per
+    salt at salted zooms), and the render task drops that tile's pieces.
     bbox: optional (minlon, minlat, maxlon, maxlat) restricting generation
     to tiles intersecting it (bin/tileigi.rs:110-126; tighter than the
     reference's metatile granularity — tiles outside the bbox are absent:
@@ -1145,22 +1183,13 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     bbox_merc = bbox_lonlat_to_merc(bbox) if bbox is not None else None
     tile_ranges = ({z: bbox_tile_range(bbox_merc, z) for z in zooms}
                    if bbox_merc is not None else None)
-    # A pyramid whose zooms all sit above _SALT_ZOOM_MAX never salts, so
-    # every tile's pieces meet in one render task, which assembles the
-    # tiles too (one exchange) — the deep-zoom re-render workflow.
-    # Splitting a MIXED range into salted/salt-free buckets was tried
-    # and rejected with numbers: the duplicated scan+cover work of the
-    # extra branch cost more than the saved exchange (4.22 s vs 4.01 s
-    # best-of-3 on the z0-10 leg), so mixed ranges emit partials and
-    # keep assemble_tiles' exchange and merge.
-    fuse = minzoom > _SALT_ZOOM_MAX
     per_layer = []
     layer_specs = []
     prop_types: dict[str, dict] = {}
 
     def _prep(src: DataFrame) -> DataFrame:
         if "feature_id" not in src.columns:
-            src = src.withColumn("feature_id", F.xxhash64(F.col("way")))
+            src = src.withColumn("feature_id", F.expr("xxhash64(way)"))
         # sources may carry precomputed bbox columns (geo-table practice;
         # keeps the whole pre-shuffle pipeline JVM-side for point tables);
         # otherwise one Arrow pass decodes WKB
@@ -1191,32 +1220,30 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                 # Token substitution yields one resolved query per zoom,
                 # but after constant folding many zooms share the SAME
                 # source plan (e.g. "WHERE !zoom! >= 5 OR k" folds to
-                # plain scans for every z >= 5). Group zooms by the
-                # normalized optimized plan (expression ids stripped —
-                # the only per-instance noise) so each distinct source
-                # is scanned and cover-exploded ONCE for its whole zoom
-                # group instead of once per zoom: a z2-z7 template layer
-                # drops from 6 scan branches to 2. Equal optimized plans
-                # produce equal source rows, so tile bytes are unchanged
-                # (pinned by test_template_zoom_grouping).
-                import re as _re
-
-                grouped: dict[str, tuple] = {}
-                order_keys = []
+                # plain scans for every z >= 5). Group zooms whose
+                # optimized plans give the same result (sameResult: the
+                # canonicalized plans are equal, expression ids aside)
+                # so each distinct source is scanned and cover-exploded
+                # ONCE for its whole zoom group instead of once per
+                # zoom: a z2-z7 template layer drops from 6 scan
+                # branches to 2. Plan text is no key: a filtered
+                # in-memory relation prints as its columns alone, so
+                # every zoom's query over it would read alike (pinned by
+                # tests/test_template_group.py).
+                groups = []   # [optimized plan, source, zooms]
                 for z in zs:
                     src_z = _layer_source(spark, sources, layer, z)
-                    key = _re.sub(r"#\d+", "#",
-                                  str(src_z._jdf.queryExecution()
-                                      .optimizedPlan()))
-                    if key not in grouped:
-                        grouped[key] = (src_z, [])
-                        order_keys.append(key)
-                    grouped[key][1].append(z)
-                props = [_layer_props(layer.id, grouped[key][0])
-                         for key in order_keys]
+                    plan = src_z._jdf.queryExecution().optimizedPlan()
+                    same = next((g for g in groups if g[0].sameResult(plan)),
+                                None)
+                    if same is None:
+                        groups.append([plan, src_z, [z]])
+                    else:
+                        same[2].append(z)
+                props = [_layer_props(layer.id, src_z)
+                         for _, src_z, _ in groups]
                 cov = None
-                for key in order_keys:
-                    src_z, zlist = grouped[key]
+                for _, src_z, zlist in groups:
                     cov_z = cover_metatiles(_prep(src_z), zlist,
                                             layer.buffer, metatile_scale,
                                             zoom_filter=zoom_filter,
@@ -1251,6 +1278,20 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     rows = per_layer[0]
     for other in per_layer[1:]:
         rows = rows.unionByName(other, allowMissingColumns=True)
+    # One plan renders every tile whole, in one exchange and one Python
+    # pass, as the reference renders a metatile (lib.rs:543-559). The
+    # split plan adds the salt to the exchange key and assemble_tiles'
+    # exchange, so a hot low-zoom tile's features spread over up to
+    # _N_SALTS tasks whose partials are merged (O13); the bytes are the
+    # same, since a layer's features come in (salt, feature_id) order
+    # either way. It is taken only for a range with salted zooms whose
+    # covered rows are estimated larger than one advisory partition
+    # (_larger_than_advisory): an unsplit run holds at most the whole
+    # input, so below that bound the split only costs a second exchange
+    # and Python stage.
+    fuse = (minzoom > _SALT_ZOOM_MAX
+            or not _larger_than_advisory(spark, rows))
+    run_keys = _METATILE_KEYS if fuse else _SALTED_KEYS
     # unionByName's column order: the first layer's, then each new one
     carry = ["salt"] + list(dict.fromkeys(
         p for props in prop_types.values() for p in props))
@@ -1258,9 +1299,9 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
         f"CAST(IF(zoom <= {_SALT_ZOOM_MAX}, pmod(feature_id, {_N_SALTS}),"
         f" 0) AS INT)"))
     if done_keys is not None:
-        # one marker row per done tile (inside the bbox) and salt, in its
-        # metatile's run; integer columns get 0, not NULL, so the
-        # render's pandas frames keep them int64
+        # one marker row per done tile (inside the bbox) and run (split:
+        # one per salt), in its metatile's run; integer columns get 0,
+        # not NULL, so the render's pandas frames keep them int64
         ints = [f"CAST(0 AS {f.dataType.simpleString()}) AS `{f.name}`"
                 for f in rows.schema.fields
                 if f.name not in ("zoom", "mtx", "mty", "layer_order", "salt")
@@ -1274,16 +1315,17 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                      "CAST(zoom AS INT) AS zoom",
                      f"CAST(x DIV {size} AS BIGINT) AS mtx",
                      f"CAST(y DIV {size} AS BIGINT) AS mty",
+                     "0 AS salt" if fuse else
                      f"explode(IF(zoom <= {_SALT_ZOOM_MAX},"
                      f" sequence(0, {_N_SALTS - 1}), array(0))) AS salt",
                      "-1 AS layer_order", "CAST(x AS BIGINT) AS x",
                      "CAST(y AS BIGINT) AS y", *ints))
         rows = rows.unionByName(marks, allowMissingColumns=True)
     parts_n = _python_stage_parts(spark, shuffle_parts)
-    rows = (rows.repartition(*_METATILE_KEYS) if parts_n is None
-            else rows.repartition(parts_n, *_METATILE_KEYS))
-    rows = rows.sortWithinPartitions(*_METATILE_KEYS, "layer_order",
-                                     "feature_id")
+    rows = (rows.repartition(*run_keys) if parts_n is None
+            else rows.repartition(parts_n, *run_keys))
+    rows = rows.sortWithinPartitions(
+        *map(F.expr, run_keys + ("layer_order", "feature_id")))
     tiles = rows.mapInPandas(
         _make_render_run(layer_specs, carry, prop_types, metatile_scale,
                          layers.global_maxzoom, fuse, compress, tile_ranges),

@@ -596,8 +596,8 @@ def process_general(pdf, prop_names, buffer_units, metatile_scale,
       simplify wipe is derived for eps2 = 64);
     * every other line/polygon-family row -> the ragged lane
       (_vector_lane);
-    * rows the reader refuses (code 0: big-endian, EWKB, MultiPoint,
-      malformed) -> the scalar chain.
+    * MultiPoints (code 4) and the rows the reader refuses (code 0:
+      big-endian, EWKB, malformed) -> the scalar chain.
 
     SPARK_GRAFT_FORCE_SCALAR_GEOM=1 sends every row to the scalar chain,
     the reference the lanes are pinned against. The rect and ragged
@@ -651,7 +651,7 @@ def process_general(pdf, prop_names, buffer_units, metatile_scale,
             c = slice(s, s + _CHUNK_FEATURES)
             out.add(*rect_lane(fr, rects[c], x[c], y[c], buffer_units,
                                global_maxzoom))
-    for i in np.flatnonzero(rag.code == 0).tolist():
+    for i in np.flatnonzero((rag.code == 0) | (rag.code == 4)).tolist():
         scalar_row(i)
     rows = np.flatnonzero(ragged)
     for s in range(0, len(rows), _CHUNK_FEATURES):

@@ -291,16 +291,17 @@ def _walk(buf, p, end, typ):
 def read_ragged(ways) -> Ragged:
     """Read a column of WKB rows (bytes-like or None) into one Ragged.
 
-    Rows read: little-endian, 2-D, ISO type codes 1/2/3/5/6, every ring
-    and member non-empty, no trailing bytes; their coordinates equal
-    wkb_to_geom's. A Point is one ring of one vertex, a MultiLineString
-    one ring per member. Every other row (big-endian, EWKB or Z/M codes,
-    MultiPoint, malformed, None) gets code 0 and no rings.
+    Rows read: little-endian, 2-D, ISO type codes 1-6, every ring and
+    member non-empty, no trailing bytes; their coordinates equal
+    wkb_to_geom's. A Point is one ring of one vertex, a MultiPoint one
+    such ring per member, a MultiLineString one ring per member. Every
+    other row (big-endian, EWKB or Z/M codes, a member not a
+    little-endian 2-D Point, malformed, None) gets code 0 and no rings.
 
     The common single-ring shapes (Point, LineString, one-ring Polygon
-    and the MultiPolygon-of-one twin make_valid emits) are recognized
-    from their headers in numpy; the rest take one struct walk per row
-    (_walk)."""
+    and the MultiPolygon-of-one twin make_valid emits) and MultiPoints
+    are recognized from their headers in numpy; the rest take one struct
+    walk per row (_walk)."""
     n = len(ways)
     try:
         buf = b"".join(ways)
@@ -326,8 +327,7 @@ def read_ragged(ways) -> Ragged:
     fc = f[c]
     tc = b[fc + 1]
     ok = ((b[fc] == 1) & ((b[fc + 2] | b[fc + 3] | b[fc + 4]) == 0)
-          & (tc >= 1) & (tc <= 6) & (tc != 4)
-          & ((tc != 1) | (lens[c] == 21)))
+          & (tc >= 1) & (tc <= 6) & ((tc != 1) | (lens[c] == 21)))
     typ[c[ok]] = tc[ok]
     # single-ring fast patterns: (rows, count of their one ring, byte
     # offset of its first coordinate)
@@ -353,9 +353,28 @@ def read_ragged(ways) -> Ragged:
         k[c] = kc[ok]
         head[c] = h
 
+    # MultiPoint: m members of 21 bytes, each a little-endian 2-D Point
+    c = np.flatnonzero((typ == 4) & (lens >= 9))
+    m = u32_at(f[c] + 5)
+    ok = (m >= 1) & (lens[c] == 9 + 21 * m)
+    c, m = c[ok], m[ok]
+    # each member's first byte
+    member = (np.repeat(f[c] + 9 - 21 * _cumsum0(m)[:-1], m)
+              + 21 * np.arange(m.sum(), dtype=np.int64))
+    good = ((b[member] == 1) & (b[member + 1] == 1)
+            & ((b[member + 2] | b[member + 3] | b[member + 4]) == 0))
+    good = np.minimum.reduceat(good, _cumsum0(m)[:-1]) if len(c) else good
+    typ[typ == 4] = 0
+    multi = np.zeros(n, bool)
+    multi[c[good]] = True
+    typ[multi] = 4
+    member = member[np.repeat(good, m)]
+    m = m[good]
+
     nrings = fast.astype(np.int64)
+    nrings[multi] = m
     walked = []
-    for i in np.flatnonzero((typ != 0) & ~fast).tolist():
+    for i in np.flatnonzero((typ != 0) & ~fast & ~multi).tolist():
         rings = _walk(buf, int(f[i]), int(foff[i + 1]), int(typ[i]))
         if rings is None:
             typ[i] = 0
@@ -371,8 +390,11 @@ def read_ragged(ways) -> Ragged:
     at = row_off[:-1][fast]
     ring_k[at] = k[fast]
     ring_at[at] = f[fast] + head[fast]
+    at = _ranges(row_off[:-1][multi], m)
+    ring_k[at] = 1
+    ring_at[at] = member + 5
     if walked:
-        slow = (typ != 0) & ~fast
+        slow = (typ != 0) & ~fast & ~multi
         m = nrings[slow]
         at = _ranges(row_off[:-1][slow], m)
         w_int, w_k, w_at = zip(*walked)

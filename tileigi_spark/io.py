@@ -111,13 +111,11 @@ class TileStore:
         is durable: a row in `map` means a readable tile, and `map` is
         the resume record (done_keys). A crash between the two writes
         leaves orphan images, which no map row reaches."""
-        images = tiles.select(F.col("tile_md5").alias("tile_id"),
-                              F.col("tile").alias("tile_data"))
+        images = tiles.selectExpr("tile_md5 AS tile_id", "tile AS tile_data")
         if dedup:
             images = images.dropDuplicates(["tile_id"])
         self._write(images, "images")
-        mapping = tiles.select("zoom", "x", "y",
-                               F.col("tile_md5").alias("tile_id"))
+        mapping = tiles.selectExpr("zoom", "x", "y", "tile_md5 AS tile_id")
         self._write(mapping, "map", partition_cols=("zoom",))
 
     def read_tiles(self, spark: SparkSession) -> DataFrame | None:
@@ -132,9 +130,8 @@ class TileStore:
             return None
         return (m.dropDuplicates(["zoom", "x", "y"])
                 .join(i.dropDuplicates(["tile_id"]), on="tile_id")
-                .select("zoom", "x", "y",
-                        F.col("tile_data").alias("tile"),
-                        F.col("tile_id").alias("tile_md5")))
+                .selectExpr("zoom", "x", "y", "tile_data AS tile",
+                            "tile_id AS tile_md5"))
 
     # --------------------------------------------------------- staging
 
@@ -147,7 +144,7 @@ class TileStore:
         the two derive scans (map keys + deduped images) read them back
         columnar."""
         obs = Observation()
-        self._write(tiles.observe(obs, F.count(F.lit(1)).alias("rows")),
+        self._write(tiles.observe(obs, F.expr("count(1) AS rows")),
                     f"staging_z{zoom}", mode="overwrite")
         self._staged_schema[zoom] = tiles.schema
         return int(obs.get["rows"])

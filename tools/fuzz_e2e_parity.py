@@ -15,9 +15,14 @@ IDENTICAL across
     salted assembly / partial-merge order-independence on arbitrary
     shapes, not just the golden fixtures;
   * the 13-part build rerun with spark.sql.execution.arrow.
-    maxRecordsPerBatch = 7, so Arrow batch cuts fall inside the encode
-    walk's (tile, salt, layer) runs and the assemble walk's tiles —
-    proves the walks' bytes do not depend on where batches end;
+    maxRecordsPerBatch = 7, so Arrow batch cuts fall inside the render
+    walk's metatile runs — proves the walks' bytes do not depend on
+    where batches end;
+  * the 13-part build rerun on the split plan (salted render exchange,
+    partial layers merged by assemble_tiles), forced by an advisory
+    partition size of 1 byte: the input is an in-memory Arrow relation
+    of known size, so the other builds take the fused plan — proves
+    both plans give the same bytes;
   * the router's vector lanes vs SPARK_GRAFT_FORCE_SCALAR_GEOM=1, which
     sends every row (points and rects included) to the scalar chain
     (child process — the flag is read in the Python workers, whose env
@@ -41,6 +46,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+ADVISORY_CONF = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
@@ -86,20 +92,34 @@ def rows_for_seed(seed: int, n: int):
     return rows
 
 
-def tile_map(spark, rows, parts: int, maxzoom: int, buffer_px: int = 2,
-             gmax: int = 14, metatile_scale: int = 8):
+def _tile_map(spark, rows, parts: int, maxzoom: int, buffer_px: int = 2,
+              gmax: int = 14, metatile_scale: int = 8):
     from tileigi_spark.config import Layer, Layers
     from tileigi_spark.engine import build_tiles
 
-    feats = spark.createDataFrame(
-        rows, "feature_id long, way binary, tag string").repartition(parts)
+    import pyarrow as pa
+
+    fid, way, tag = zip(*rows)
+    feats = spark.createDataFrame(pa.table({
+        "feature_id": pa.array(fid, pa.int64()),
+        "way": pa.array([bytes(w) for w in way], pa.binary()),
+        "tag": pa.array(tag, pa.string())})).repartition(parts)
     layers = Layers(layers=[Layer(id="fuzz", source="s", minzoom=0,
                                   maxzoom=14, buffer=buffer_px)],
                     global_maxzoom=gmax)
     tiles = build_tiles(spark, {"s": feats}, layers, 0, maxzoom,
                         metatile_scale=metatile_scale)
-    return {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
-            for r in tiles.select("zoom", "x", "y", "tile_md5").collect()}
+    plan = tiles._jdf.queryExecution().executedPlan().toString()
+    got = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
+           for r in tiles.select("zoom", "x", "y", "tile_md5").collect()}
+    return got, plan.count("Exchange hashpartitioning")
+
+
+def tile_map(spark, rows, parts: int, maxzoom: int, **cfg):
+    """{(zoom, x, y): tile_md5} of a fused build (one hash exchange)."""
+    got, exchanges = _tile_map(spark, rows, parts, maxzoom, **cfg)
+    assert exchanges == 1, exchanges
+    return got
 
 
 def _cfg_for_seed(seed: int) -> dict:
@@ -157,6 +177,12 @@ def main():
             d = tile_map(spark, rows, 13, args.maxzoom, **cfg)
         finally:
             spark.conf.unset(BATCH_CONF)
+        spark.conf.set(ADVISORY_CONF, "1b")
+        try:
+            e, exchanges = _tile_map(spark, rows, 13, args.maxzoom, **cfg)
+        finally:
+            spark.conf.unset(ADVISORY_CONF)
+        assert exchanges == 2, exchanges
         env = dict(os.environ, SPARK_GRAFT_FORCE_SCALAR_GEOM="1",
                    PYTHONPATH=REPO)
         out = subprocess.run(
@@ -169,21 +195,22 @@ def main():
             if line.startswith("TILEMAP "):
                 c = {tuple(int(v) for v in k.split("/")): h
                      for k, h in json.loads(line[8:]).items()}
-        ok = a == b == c == d
+        ok = a == b == c == d == e
         if not ok:
             fails += 1
-            diffs = {k for k in set(a) | set(b) | set(d) | set(c or {})
-                     if not (a.get(k) == b.get(k) == d.get(k)
+            diffs = {k for k in set(a) | set(b) | set(d) | set(e)
+                     | set(c or {})
+                     if not (a.get(k) == b.get(k) == d.get(k) == e.get(k)
                              == (c or {}).get(k))}
             print(f"FAIL seed={seed} tiles={len(a)}/{len(b)}/{len(d)}/"
-                  f"{len(c) if c else 'child-err'} first_diffs="
+                  f"{len(e)}/{len(c) if c else 'child-err'} first_diffs="
                   f"{sorted(diffs)[:5]}")
             if c is None:
                 print(out.stderr[-800:])
         else:
             print(f"PASS seed={seed} tiles={len(a)} cfg={cfg} "
-                  f"(1-part == 13-part == 7-row batches == forced-scalar "
-                  f"child)")
+                  f"(1-part == 13-part == 7-row batches == split plan == "
+                  f"forced-scalar child)")
     print(f"e2e parity: {args.seeds - fails}/{args.seeds} seeds clean")
     spark.stop()
     sys.exit(1 if fails else 0)
