@@ -29,8 +29,9 @@ def forced_split(spark):
     """A context manager under which build_tiles plans the split render
     (salted exchange + assemble_tiles) for every range with salted
     zooms: it takes that plan when the covered rows' size estimate is
-    larger than the advisory partition size, here 1 byte. The plan is
-    chosen when build_tiles builds it."""
+    larger than the advisory partition size / 16, and at 1 byte every
+    nonempty estimate is. The plan is chosen when build_tiles builds
+    it."""
     @contextlib.contextmanager
     def split():
         old = spark.conf.get(ADVISORY)

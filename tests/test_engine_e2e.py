@@ -408,7 +408,7 @@ def test_resume_and_bbox_match_full_render_minus_tiles(spark, resume_src,
     skips (z2's, a z5 one, and the tiles inside the bbox of the z5
     metatile its east edge cuts), for a mixed range (z0-z6) and a
     salt-free range (z5-z6); the bbox cuts a polygon in two. Both ranges
-    render in one pass: the fixture fits one advisory partition."""
+    render in one pass: the fixture is estimated under the split bound."""
     _resume_and_bbox_match(spark, resume_src, full_z0_6, seed,
                            contextlib.nullcontext, 1, hash_exchanges)
 
@@ -434,13 +434,35 @@ def _plan_shape(tiles):
             plan.count("MapInPandas"), "\n".join(lines[last + 1:]))
 
 
+def test_fuse_bound_is_one_salt_of_advisory_size(spark):
+    """A range with salted zooms fuses while the covered rows' size
+    estimate is at most advisory size / _N_SALTS; a relation of unknown
+    size (an RDD) never does."""
+    from tileigi_spark.engine import _N_SALTS, _fits_one_salt
+
+    conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    known = spark.range(1000)
+    size = int(str(known._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
+    unknown = spark.createDataFrame([(1,)], "a long")
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, str(size * _N_SALTS))
+        assert _fits_one_salt(spark, known)
+        assert not _fits_one_salt(spark, unknown)
+        spark.conf.set(conf, str(size * _N_SALTS - 1))
+        assert not _fits_one_salt(spark, known)
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_render_plan_shape(spark, feats, tmp_path, forced_split):
     """Covered rows are exchanged once, by metatile: below that exchange
     the plan runs no Python (the sources carry their bbox columns, so
     with_bbox adds no pass), and one MapInPandas renders. A salt-free
     range has one hash exchange, with done keys and a bbox too (no
-    anti-join exchange), and so has a mixed range that fits one
-    advisory partition; on the split plan a mixed range adds
+    anti-join exchange), and so has a mixed range estimated under the
+    split bound (advisory size / 16); on the split plan a mixed range adds
     assemble_tiles' exchange and MapInPandas. Choosing the plan starts
     no Spark job."""
     from tileigi_spark.engine import with_bbox

@@ -42,8 +42,8 @@ def _check_golden(got):
 
 
 def test_golden_tiles(spark, known_size, hash_exchanges):
-    """The fused render: the fixture, of known size, fits one advisory
-    partition."""
+    """The fused render: the fixture, of known size, is estimated under
+    the split bound (advisory size / 16)."""
     _check_golden(_build_md5s(spark, known_size(features_df(spark, 120)),
                               1, hash_exchanges))
 

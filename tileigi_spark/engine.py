@@ -20,13 +20,15 @@ then process, encode and write them):
       + sortWithinPartitions + mapInPandas merges them and assembles
 
 Shuffles: one repartition of covered rows. A range with salted zooms
-(z <= 4) whose covered rows are estimated larger than one advisory
-partition (spark.sql.adaptive.advisoryPartitionSizeInBytes, or of
-unknown size) takes the split plan instead: the salt joins the exchange
-key, so a hot low-zoom tile's features spread over up to 16 tasks, and
-assemble_tiles adds a second exchange to merge their partials. An
-unsplit run holds at most the whole input, so below that bound one
-exchange is the whole plan. Tile bytes are the same on both plans: a
+(z <= 4) whose covered rows are estimated larger than one salt's share
+of an advisory partition (spark.sql.adaptive.advisoryPartitionSizeInBytes
+/ 16, or of unknown size) takes the split plan instead: the salt joins
+the exchange key, so a hot low-zoom tile's features spread over up to 16
+tasks, and assemble_tiles adds a second exchange to merge their
+partials. A fused low-zoom run holds the whole input, so below that
+bound no fused run is larger than a salted run of an input one advisory
+partition large, and one exchange is the whole plan. Tile bytes are the
+same on both plans: a
 layer's features come in (salt, feature_id) order, and the merge of
 in-order partials equals one encode pass. No piece enters the JVM: a
 covered row is exchanged once, and every tile lies inside exactly one
@@ -1134,18 +1136,19 @@ def _python_stage_parts(spark: SparkSession,
     return max(1, min(shuffle_parts, cores * _TASKS_PER_CORE))
 
 
-def _larger_than_advisory(spark: SparkSession, df: DataFrame) -> bool:
-    """True when df's size estimate is larger than spark.sql.adaptive.
-    advisoryPartitionSizeInBytes. The estimate is the optimized plan's
-    statistics (a union's is the sum of its branches'), so no Spark job
-    runs. A relation whose size Spark does not know (an RDD source)
-    reads as spark.sql.defaultSizeInBytes, Long.MaxValue unless set, so
-    it counts as larger, as it does for the planner's broadcast bound."""
+def _fits_one_salt(spark: SparkSession, df: DataFrame) -> bool:
+    """True when df's size estimate is at most one salt's share of an
+    advisory partition: spark.sql.adaptive.advisoryPartitionSizeInBytes
+    / _N_SALTS. The estimate is the optimized plan's statistics (a
+    union's is the sum of its branches'), so no Spark job runs. A
+    relation whose size Spark does not know (an RDD source) reads as
+    spark.sql.defaultSizeInBytes, Long.MaxValue unless set, so it does
+    not fit, as it does not for the planner's broadcast bound."""
     entry = (spark._jvm.org.apache.spark.sql.internal.SQLConf
              .ADVISORY_PARTITION_SIZE_IN_BYTES())
     advisory = spark._jsparkSession.sessionState().conf().getConf(entry)
-    return (df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            > advisory)
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(str(size)) * _N_SALTS <= advisory
 
 
 def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
@@ -1284,13 +1287,17 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     # exchange, so a hot low-zoom tile's features spread over up to
     # _N_SALTS tasks whose partials are merged (O13); the bytes are the
     # same, since a layer's features come in (salt, feature_id) order
-    # either way. It is taken only for a range with salted zooms whose
-    # covered rows are estimated larger than one advisory partition
-    # (_larger_than_advisory): an unsplit run holds at most the whole
-    # input, so below that bound the split only costs a second exchange
-    # and Python stage.
-    fuse = (minzoom > _SALT_ZOOM_MAX
-            or not _larger_than_advisory(spark, rows))
+    # either way. A fused low-zoom run holds the whole input, so the
+    # plan fuses a range with salted zooms only while the covered rows
+    # are estimated at most advisory size / _N_SALTS (_fits_one_salt):
+    # no fused run is then larger than a salted run of an input one
+    # advisory partition large. Below that bound the split only costs a
+    # second exchange and Python stage, and assemble_tiles' per-feature
+    # merge; above it a fused run's Python memory grows with the whole
+    # input (points, z0-z6, 4 cores: 300k rows, an estimate of 6.7 MB,
+    # render in 7.4 s at 2.5 GB peak RSS fused, 13.6 s at 1.9 GB split;
+    # tools/render_plan_bound.py).
+    fuse = minzoom > _SALT_ZOOM_MAX or _fits_one_salt(spark, rows)
     run_keys = _METATILE_KEYS if fuse else _SALTED_KEYS
     # unionByName's column order: the first layer's, then each new one
     carry = ["salt"] + list(dict.fromkeys(

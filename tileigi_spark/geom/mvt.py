@@ -374,8 +374,10 @@ def merge_partial_layers(partials):
     first = decode_layer(partials[0])
     out_keys, out_vals = [], []
     key_idx, val_idx = {}, {}
-    body = _tag(15, 0) + _varint(2)
-    body += _len_delim(1, first["name"].encode("utf-8"))
+    # one join at the end: appending to a bytes body copies it every
+    # time, quadratic in a hot tile's feature count
+    body = [_tag(15, 0) + _varint(2),
+            _len_delim(1, first["name"].encode("utf-8"))]
     feature_frames = []
     for pb in partials:
         lay = decode_layer(pb)
@@ -403,14 +405,11 @@ def merge_partial_layers(partials):
             fbody += _tag(3, 0) + _varint(ftype)
             fbody += _len_delim(4, geom)
             feature_frames.append(fbody)
-    for f in feature_frames:
-        body += _len_delim(2, f)
-    for k in out_keys:
-        body += _len_delim(3, k.encode("utf-8"))
-    for v in out_vals:
-        body += _len_delim(4, _encode_value(v))
-    body += _tag(5, 0) + _varint(first["extent"])
-    return body
+    body.extend(_len_delim(2, f) for f in feature_frames)
+    body.extend(_len_delim(3, k.encode("utf-8")) for k in out_keys)
+    body.extend(_len_delim(4, _encode_value(v)) for v in out_vals)
+    body.append(_tag(5, 0) + _varint(first["extent"]))
+    return b"".join(body)
 
 
 def _unzigzag(v: int) -> int:

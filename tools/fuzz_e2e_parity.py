@@ -23,6 +23,9 @@ IDENTICAL across
     partition size of 1 byte: the input is an in-memory Arrow relation
     of known size, so the other builds take the fused plan — proves
     both plans give the same bytes;
+  * the split build rerun with 7-row Arrow batches, so batch cuts fall
+    inside the split plan's walks too: the salted render's (metatile,
+    salt) runs and assemble_tiles' tile runs;
   * the router's vector lanes vs SPARK_GRAFT_FORCE_SCALAR_GEOM=1, which
     sends every row (points and rects included) to the scalar chain
     (child process — the flag is read in the Python workers, whose env
@@ -180,9 +183,13 @@ def main():
         spark.conf.set(ADVISORY_CONF, "1b")
         try:
             e, exchanges = _tile_map(spark, rows, 13, args.maxzoom, **cfg)
+            assert exchanges == 2, exchanges
+            spark.conf.set(BATCH_CONF, "7")
+            f, exchanges = _tile_map(spark, rows, 13, args.maxzoom, **cfg)
+            assert exchanges == 2, exchanges
         finally:
             spark.conf.unset(ADVISORY_CONF)
-        assert exchanges == 2, exchanges
+            spark.conf.unset(BATCH_CONF)
         env = dict(os.environ, SPARK_GRAFT_FORCE_SCALAR_GEOM="1",
                    PYTHONPATH=REPO)
         out = subprocess.run(
@@ -195,22 +202,22 @@ def main():
             if line.startswith("TILEMAP "):
                 c = {tuple(int(v) for v in k.split("/")): h
                      for k, h in json.loads(line[8:]).items()}
-        ok = a == b == c == d == e
+        ok = a == b == c == d == e == f
         if not ok:
             fails += 1
-            diffs = {k for k in set(a) | set(b) | set(d) | set(e)
+            diffs = {k for k in set(a) | set(b) | set(d) | set(e) | set(f)
                      | set(c or {})
                      if not (a.get(k) == b.get(k) == d.get(k) == e.get(k)
-                             == (c or {}).get(k))}
+                             == f.get(k) == (c or {}).get(k))}
             print(f"FAIL seed={seed} tiles={len(a)}/{len(b)}/{len(d)}/"
-                  f"{len(e)}/{len(c) if c else 'child-err'} first_diffs="
-                  f"{sorted(diffs)[:5]}")
+                  f"{len(e)}/{len(f)}/{len(c) if c else 'child-err'} "
+                  f"first_diffs={sorted(diffs)[:5]}")
             if c is None:
                 print(out.stderr[-800:])
         else:
             print(f"PASS seed={seed} tiles={len(a)} cfg={cfg} "
                   f"(1-part == 13-part == 7-row batches == split plan == "
-                  f"forced-scalar child)")
+                  f"split plan, 7-row batches == forced-scalar child)")
     print(f"e2e parity: {args.seeds - fails}/{args.seeds} seeds clean")
     spark.stop()
     sys.exit(1 if fails else 0)
