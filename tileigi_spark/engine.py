@@ -28,17 +28,17 @@ tasks, and assemble_tiles adds a second exchange to merge their
 partials. A fused low-zoom run holds the whole input, so below that
 bound no fused run is larger than a salted run of an input one advisory
 partition large, and one exchange is the whole plan. Tile bytes are the
-same on both plans: a
-layer's features come in (salt, feature_id) order, and the merge of
-in-order partials equals one encode pass. No piece enters the JVM: a
-covered row is exchanged once, and every tile lies inside exactly one
-metatile, so the task that holds a metatile's rows renders its tiles
-whole (split: one salt of them). Everything upstream is narrow — the
-cover "join" is arithmetic + explode on the feature side, which Catalyst
-keeps in one stage with the scan (predicate pushdown + column pruning
-intact; no Python there unless a source lacks bbox columns and with_bbox
-decodes them). Sorted-stream mapInPandas (not per-group applyInPandas)
-amortizes per-tile overhead across whole Arrow batches.
+same on both plans: a layer's features come in (salt, feature_id)
+order, and the merge of in-order partials equals one encode pass. No
+piece enters the JVM: a covered row is exchanged once, and every tile
+lies inside exactly one metatile, so the task that holds a metatile's
+rows renders its tiles whole (split: one salt of them). Everything
+upstream is narrow — the cover "join" is arithmetic + explode on the
+feature side, which Catalyst keeps in one stage with the scan (predicate
+pushdown + column pruning intact; no Python there unless a source lacks
+bbox columns and with_bbox decodes them). Sorted-stream mapInPandas (not
+per-group applyInPandas) amortizes per-tile overhead across whole Arrow
+batches.
 
 geometry_stage, encode_layers and encode_assemble_fused are the same
 steps as separate DataFrame stages over a piece stream. The render does
@@ -1294,9 +1294,10 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     # advisory partition large. Below that bound the split only costs a
     # second exchange and Python stage, and assemble_tiles' per-feature
     # merge; above it a fused run's Python memory grows with the whole
-    # input (points, z0-z6, 4 cores: 300k rows, an estimate of 6.7 MB,
-    # render in 7.4 s at 2.5 GB peak RSS fused, 13.6 s at 1.9 GB split;
-    # tools/render_plan_bound.py).
+    # input (tools/render_plan_bound.py, random points, z0-z6, 4 cores:
+    # 170k rows, an estimate of 3.9 MB, render in a median 6.9 s at
+    # 1.9 GB peak RSS fused, 10.2 s at 1.7 GB split; at 300k rows the
+    # largest Python worker holds ~470 MB fused, ~200 MB split).
     fuse = minzoom > _SALT_ZOOM_MAX or _fits_one_salt(spark, rows)
     run_keys = _METATILE_KEYS if fuse else _SALTED_KEYS
     # unionByName's column order: the first layer's, then each new one
