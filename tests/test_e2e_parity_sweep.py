@@ -2,12 +2,12 @@
 
 The probe builds z0-z4 tiles from a random mixed geometry set and
 compares the {(zoom, x, y): tile_md5} maps of a 1-part and a 13-part
-input, the 13-part build with 7-row Arrow batches (batch cuts inside
-the render walk's runs), the 13-part build on the split plan (salted
-exchange + assemble_tiles, forced; the others take the fused plan) and
-a child whose geometry stage sends every row to the scalar chain. Run
-`--seeds 4` (maxzoom 6) by hand before changing the encode walk, the
-assemble walk, the render plan or a geometry lane.
+input, the 13-part build with 7-row and with 1-row Arrow batches (batch
+cuts inside the render walk's metatile runs; at 1 row every run is cut)
+and a child whose geometry stage sends every row to the scalar chain.
+Every side's plan has one hash exchange. Run `--seeds 4` (maxzoom 6) by
+hand before changing the encode walk, the assemble walk, the render
+plan or a geometry lane.
 """
 
 import os

@@ -1,7 +1,6 @@
 """End-to-end engine tests: pyramid build, determinism across partitioning,
 invariants from FIXTURES.md §6."""
 
-import contextlib
 import gzip
 import hashlib
 
@@ -115,12 +114,11 @@ def test_include_empty_full_pyramid(spark, feats):
     assert counts == {0: 1, 1: 4, 2: 16}
 
 
-def test_include_empty_renders_once(spark, feats, tmp_path, forced_split):
+def test_include_empty_renders_once(spark, feats, tmp_path):
     """include_empty left-joins the tile keys to the one render: a
-    salt-free two-zoom range and a small mixed one keep their one render
-    MapInPandas, a mixed range on the split plan its render and assemble
-    pair, with a bbox and done keys too; the empties fill exactly the
-    keys the render left out."""
+    salt-free two-zoom range and a mixed one keep their one render
+    MapInPandas, with a bbox and done keys too; the empties fill exactly
+    the keys the render left out."""
     from tileigi_spark.engine import with_bbox
 
     path = str(tmp_path / "feats")
@@ -128,15 +126,12 @@ def test_include_empty_renders_once(spark, feats, tmp_path, forced_split):
     src = {"features": spark.read.parquet(path)}
     done = spark.createDataFrame([(5, 0, 0), (6, 1, 1)],
                                  "zoom int, x long, y long")
-    for minz, maxz, split, n_py in ((5, 6, False, 1), (3, 6, False, 1),
-                                    (5, 6, True, 1), (3, 6, True, 2)):
-        with forced_split() if split else contextlib.nullcontext():
-            tiles = build_tiles(spark, src, LAYERS, minz, maxz,
-                                shuffle_parts=8, include_empty=True,
-                                done_keys=done,
-                                bbox=(-20.0, -62.0, 0.0, -58.0))
+    for minz, maxz in ((5, 6), (3, 6), (0, 6)):
+        tiles = build_tiles(spark, src, LAYERS, minz, maxz,
+                            shuffle_parts=8, include_empty=True,
+                            done_keys=done, bbox=(-20.0, -62.0, 0.0, -58.0))
         _, got, _ = _plan_shape(tiles)
-        assert got == n_py, (minz, maxz, split)
+        assert got == 1, (minz, maxz)
     rendered = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
                 for r in build_tiles(spark, src, LAYERS, 3, 4).collect()}
     full = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
@@ -336,11 +331,10 @@ def _cut_polygon_bbox(feats):
     return (float(lon0), float(lat0), float(lon1), float(lat1))
 
 
-def _resume_and_bbox_match(spark, resume_src, full_z0_6, seed, plan,
-                            n_exchanges, hash_exchanges):
-    """The resume and bbox renders of a seed's done set, built under
-    `plan` (a context manager) with n_exchanges hash exchanges on the
-    mixed range, against the full render."""
+def _resume_and_bbox_match(spark, resume_src, full_z0_6, seed,
+                            hash_exchanges):
+    """The resume and bbox renders of a seed's done set against the full
+    render."""
     import random
 
     from tileigi_spark.mercator import bbox_lonlat_to_merc, bbox_tile_range
@@ -367,10 +361,9 @@ def _resume_and_bbox_match(spark, resume_src, full_z0_6, seed, plan,
     src = {"features": resume_src}
 
     def render(minz, maxz, **kw):
-        with plan():
-            tiles = build_tiles(spark, src, LAYERS, minz, maxz,
-                                shuffle_parts=7, **kw)
-        assert hash_exchanges(tiles) == (1 if minz > 4 else n_exchanges)
+        tiles = build_tiles(spark, src, LAYERS, minz, maxz,
+                            shuffle_parts=7, **kw)
+        assert hash_exchanges(tiles) == 1
         return {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
                 for r in tiles.collect()}
 
@@ -408,19 +401,60 @@ def test_resume_and_bbox_match_full_render_minus_tiles(spark, resume_src,
     skips (z2's, a z5 one, and the tiles inside the bbox of the z5
     metatile its east edge cuts), for a mixed range (z0-z6) and a
     salt-free range (z5-z6); the bbox cuts a polygon in two. Both ranges
-    render in one pass: the fixture is estimated under the split bound."""
+    render in one pass."""
     _resume_and_bbox_match(spark, resume_src, full_z0_6, seed,
-                           contextlib.nullcontext, 1, hash_exchanges)
+                           hash_exchanges)
 
 
-@pytest.mark.parametrize("seed", [3, 11])
-def test_resume_and_bbox_match_full_render_minus_tiles_split(
-        spark, resume_src, full_z0_6, seed, forced_split, hash_exchanges):
-    """The same on the split plan, against the fused full render: the
-    mixed range emits salted partials (a done z3 tile's markers reach
-    every salt's run) and assemble_tiles merges them."""
-    _resume_and_bbox_match(spark, resume_src, full_z0_6, seed,
-                           forced_split, 2, hash_exchanges)
+@pytest.mark.parametrize("batch", [1, 7])
+def test_arrow_batch_cuts_keep_tile_bytes(spark, resume_src, full_z0_6,
+                                          batch):
+    """The render makes pieces per Arrow batch and holds only the open
+    metatile run's pieces and done markers across batches. At 1- and
+    7-row batches the cuts fall inside runs, inside a run's markers and
+    between its markers and its pieces; the tiles of both layers at
+    z0-z5, with done keys and a bbox, equal the default-batch render
+    byte for byte."""
+    import random
+    from collections import Counter
+
+    from tileigi_spark.mercator import bbox_lonlat_to_merc, bbox_tile_range
+
+    bbox = (-60.0, -60.0, 60.0, 60.0)
+    keys = [k for k in sorted(full_z0_6) if k[0] <= 5]
+    rng = random.Random(batch)
+    done = set(rng.sample(keys, len(keys) // 2))
+    # whole metatiles, so finished runs are skipped too
+    done |= {(2, x, y) for x in range(4) for y in range(4)}
+    done_df = spark.createDataFrame(sorted(done), "zoom int, x long, y long")
+
+    def render():
+        tiles = build_tiles(spark, {"features": resume_src}, LAYERS, 0, 5,
+                            shuffle_parts=3, done_keys=done_df, bbox=bbox)
+        return {(r["zoom"], r["x"], r["y"]): bytes(r["tile"])
+                for r in tiles.collect()}
+
+    want = render()
+    assert want and not want.keys() & done
+    # liveness: a run holds several done markers and several pieces
+    ranges = {z: bbox_tile_range(bbox_lonlat_to_merc(bbox), z)
+              for z in range(6)}
+
+    def runs(tiles):
+        return Counter((z, x // min(8, 1 << z), y // min(8, 1 << z))
+                       for z, x, y in tiles
+                       if ranges[z][0] <= x <= ranges[z][2]
+                       and ranges[z][1] <= y <= ranges[z][3])
+
+    marked = runs(done)
+    assert any(n > 1 and marked[r] > 1 for r, n in runs(want).items())
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(conf, str(batch))
+    try:
+        got = render()
+    finally:
+        spark.conf.unset(conf)
+    assert got == want
 
 
 def _plan_shape(tiles):
@@ -434,37 +468,14 @@ def _plan_shape(tiles):
             plan.count("MapInPandas"), "\n".join(lines[last + 1:]))
 
 
-def test_fuse_bound_is_one_salt_of_advisory_size(spark):
-    """A range with salted zooms fuses while the covered rows' size
-    estimate is at most advisory size / _N_SALTS; a relation of unknown
-    size (an RDD) never does."""
-    from tileigi_spark.engine import _N_SALTS, _fits_one_salt
-
-    conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    known = spark.range(1000)
-    size = int(str(known._jdf.queryExecution().optimizedPlan().stats()
-                   .sizeInBytes()))
-    unknown = spark.createDataFrame([(1,)], "a long")
-    old = spark.conf.get(conf)
-    try:
-        spark.conf.set(conf, str(size * _N_SALTS))
-        assert _fits_one_salt(spark, known)
-        assert not _fits_one_salt(spark, unknown)
-        spark.conf.set(conf, str(size * _N_SALTS - 1))
-        assert not _fits_one_salt(spark, known)
-    finally:
-        spark.conf.set(conf, old)
-
-
-def test_render_plan_shape(spark, feats, tmp_path, forced_split):
+def test_render_plan_shape(spark, feats, tmp_path):
     """Covered rows are exchanged once, by metatile: below that exchange
     the plan runs no Python (the sources carry their bbox columns, so
-    with_bbox adds no pass), and one MapInPandas renders. A salt-free
-    range has one hash exchange, with done keys and a bbox too (no
-    anti-join exchange), and so has a mixed range estimated under the
-    split bound (advisory size / 16); on the split plan a mixed range adds
-    assemble_tiles' exchange and MapInPandas. Choosing the plan starts
-    no Spark job."""
+    with_bbox adds no pass), and one MapInPandas renders. Every range has
+    one hash exchange: salt-free with done keys and a bbox (no anti-join
+    exchange), mixed, and mixed over an RDD source (with_bbox's pass
+    below the exchange) at an advisory partition size of 1 byte.
+    Building the plan starts no Spark job."""
     from tileigi_spark.engine import with_bbox
 
     path = str(tmp_path / "feats")
@@ -472,68 +483,61 @@ def test_render_plan_shape(spark, feats, tmp_path, forced_split):
     src = {"features": spark.read.parquet(path)}
     done = spark.read.parquet(path).selectExpr(
         "6 AS zoom", "feature_id % 64 AS x", "feature_id % 32 AS y")
-
-    n_ex, n_py, below = _plan_shape(build_tiles(
-        spark, src, LAYERS, 5, 6, shuffle_parts=8, done_keys=done,
-        bbox=(-20.0, -62.0, 0.0, -58.0)))
-    assert (n_ex, n_py) == (1, 1)
-    assert "Python" not in below and "MapInPandas" not in below
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(advisory)
     sc = spark.sparkContext
     sc.setJobGroup("plan-only", "build_tiles without an action")
     try:
-        fused = build_tiles(spark, src, LAYERS, 0, 6, shuffle_parts=8)
-        with forced_split():
-            split = build_tiles(spark, src, LAYERS, 0, 6, shuffle_parts=8)
+        plans = [build_tiles(spark, src, LAYERS, 5, 6, shuffle_parts=8,
+                             done_keys=done,
+                             bbox=(-20.0, -62.0, 0.0, -58.0)),
+                 build_tiles(spark, src, LAYERS, 0, 6, shuffle_parts=8)]
+        spark.conf.set(advisory, "1b")
+        rdd = build_tiles(spark, {"features": features_df(spark, 120)},
+                          LAYERS, 0, 6, shuffle_parts=8)
         assert list(sc.statusTracker().getJobIdsForGroup("plan-only")) == []
     finally:
+        spark.conf.set(advisory, old)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    n_ex, n_py, below = _plan_shape(fused)
-    assert (n_ex, n_py) == (1, 1)
-    assert "Python" not in below and "MapInPandas" not in below
-    n_ex, n_py, below = _plan_shape(split)
-    assert (n_ex, n_py) == (2, 2)
-    assert "Python" not in below and "MapInPandas" not in below
+    for tiles in plans:
+        n_ex, n_py, below = _plan_shape(tiles)
+        assert (n_ex, n_py) == (1, 1)
+        assert "Python" not in below and "MapInPandas" not in below
+    n_ex, n_py, below = _plan_shape(rdd)
+    # one render above the exchange; each layer's with_bbox below it
+    assert n_ex == 1 and below.count("MapInPandas") == len(LAYERS.layers)
+    assert n_py == 1 + len(LAYERS.layers)
 
 
 def test_finished_runs_count_each_wanted_tile_once():
     """A metatile run is skipped only when every tile it could render is
     done: all size x size tiles of the metatile (size = min(8, 2^zoom)),
     or those inside the bbox's tile range; duplicate done keys count
-    once, and on the split plan each salt's run counts its own
-    markers."""
+    once."""
     import pandas as pd
 
-    from tileigi_spark.engine import (_METATILE_KEYS, _SALTED_KEYS,
-                                      _finished_runs)
+    from tileigi_spark.engine import _finished_runs
 
-    def marks(tiles, salt=0):
+    def marks(tiles):
         return pd.DataFrame(
-            [(z, x // min(8, 1 << z), y // min(8, 1 << z), salt,
-              float(x), float(y)) for z, x, y in tiles],
-            columns=["zoom", "mtx", "mty", "salt", "x", "y"])
+            [(z, x // min(8, 1 << z), y // min(8, 1 << z), float(x),
+              float(y)) for z, x, y in tiles],
+            columns=["zoom", "mtx", "mty", "x", "y"])
 
-    def runs(frame, ranges=None, keys=_SALTED_KEYS):
-        return sorted(_finished_runs(frame, keys, 8, ranges).tolist())
+    def runs(frame, ranges=None):
+        return sorted(_finished_runs(frame, 8, ranges).tolist())
 
     z1 = [(1, x, y) for x in range(2) for y in range(2)]
-    assert runs(marks(z1)) == [(1, 0, 0, 0)]
+    assert runs(marks(z1)) == [(1, 0, 0)]
     assert runs(marks(z1[:3] + z1[:3])) == []
     z5 = [(5, x, y) for x in range(8, 16) for y in range(16, 24)]
-    both = pd.concat([marks(z5), marks(z5[1:], salt=1)])
-    assert runs(both) == [(5, 1, 2, 0)]
+    assert runs(marks(z5)) == [(5, 1, 2)]
+    assert runs(marks(z5[1:])) == []
+    assert runs(pd.concat([marks(z5[:10]), marks(z5)])) == [(5, 1, 2)]
     # bbox tile range x 10-12, y 20-21 at z5: 6 of the metatile's tiles
     inside = [(5, x, y) for x in range(10, 13) for y in range(20, 22)]
     ranges = {5: (10, 20, 12, 21)}
-    assert runs(marks(inside), ranges) == [(5, 1, 2, 0)]
+    assert runs(marks(inside), ranges) == [(5, 1, 2)]
     assert runs(marks(inside[1:]), ranges) == []
     assert runs(marks(inside), {5: (9, 20, 12, 21)}) == []
-    # keyed by metatile alone (the fused plan): one marker per done tile,
-    # and markers of one metatile in different salts count together
-    fused = marks(z5).drop(columns="salt")
-    assert runs(fused, keys=_METATILE_KEYS) == [(5, 1, 2)]
-    assert runs(fused[1:], keys=_METATILE_KEYS) == []
-    assert runs(pd.concat([marks(z5[:10], salt=3), marks(z5[10:])]),
-                keys=_METATILE_KEYS) == [(5, 1, 2)]
-    assert runs(marks(inside).drop(columns="salt"), ranges,
-                keys=_METATILE_KEYS) == [(5, 1, 2)]

@@ -84,16 +84,8 @@ def _check_golden(got):
 
 
 def test_golden_concave_tiles(spark, hash_exchanges):
-    """The fused render (the fixture is a pandas frame of known size)."""
     got = _build_md5s(spark, 3, 1, hash_exchanges)
     assert len(got) > 50  # the layer must actually cover the pyramid
     assert got == _build_md5s(spark, 9, 1, hash_exchanges), \
         "bytes depend on parallelism"
-    _check_golden(got)
-
-
-def test_golden_concave_tiles_split(spark, forced_split, hash_exchanges):
-    """The split render gives the same bytes."""
-    with forced_split():
-        got = _build_md5s(spark, 9, 2, hash_exchanges)
     _check_golden(got)

@@ -41,19 +41,9 @@ def _check_golden(got):
         f"{GOLDEN_PATH} and rerun to regenerate")
 
 
-def test_golden_tiles(spark, known_size, hash_exchanges):
-    """The fused render: the fixture, of known size, is estimated under
-    the split bound (advisory size / 16)."""
-    _check_golden(_build_md5s(spark, known_size(features_df(spark, 120)),
-                              1, hash_exchanges))
-
-
-def test_golden_tiles_split(spark, forced_split, hash_exchanges):
-    """The split render (salted exchange + assemble_tiles) gives the
-    same bytes."""
-    with forced_split():
-        got = _build_md5s(spark, features_df(spark, 120), 2, hash_exchanges)
-    _check_golden(got)
+def test_golden_tiles(spark, hash_exchanges):
+    _check_golden(_build_md5s(spark, features_df(spark, 120), 1,
+                              hash_exchanges))
 
 
 # --------------------------------------------------- multi-layer golden
@@ -93,20 +83,10 @@ def _check_golden_ml(got):
         f"intentional, delete {GOLDEN_ML_PATH} and rerun to regenerate")
 
 
-def test_golden_multilayer(spark, known_size, hash_exchanges):
-    """The fused render, at two partitionings."""
-    feats = known_size(features_df(spark, 90))
+def test_golden_multilayer(spark, hash_exchanges):
+    """At two partitionings."""
+    feats = features_df(spark, 90)
     got = _build_ml(spark, feats, 1, 1, hash_exchanges)
     # byte parity across partitionings (A2 merge order independence)
     assert got == _build_ml(spark, feats, 11, 1, hash_exchanges)
-    _check_golden_ml(got)
-
-
-def test_golden_multilayer_split(spark, forced_split, hash_exchanges):
-    """The split render, at two partitionings: each layer's salted
-    partials merge to the fused bytes."""
-    feats = features_df(spark, 90)
-    with forced_split():
-        got = _build_ml(spark, feats, 1, 2, hash_exchanges)
-        assert got == _build_ml(spark, feats, 11, 2, hash_exchanges)
     _check_golden_ml(got)

@@ -500,3 +500,20 @@ def test_one_point_line_and_empty_multipoint_encoded_alone(monkeypatch,
         assert rec.name == "tileigi_spark.engine"
         assert "1 of 9 rows encoded one at a time" in rec.getMessage()
         assert "code 0: 1;" in rec.getMessage()
+
+
+def test_framing_chunks_stitch_back_in_row_order(monkeypatch):
+    """The encoder frames _CHUNK_FEATURES rows at a time and stitches
+    each chunk's per-family streams and per-row messages back into row
+    order: at 1-, 2- and 5-row chunks, points, lines, polygons and a
+    1-point line (encoded alone) in mixed layers give the per-row
+    bytes."""
+    from tileigi_spark import engine
+
+    rows = mixed_rows(5, tiles=3)
+    rows.insert(7, (rows[7][0], rows[7][1], ("LineString", [(3, 3)]),
+                    rows[7][3]))
+    want = assert_parity(rows, MIXED_TYPES)
+    for chunk in (1, 2, 5):
+        monkeypatch.setattr(engine, "_CHUNK_FEATURES", chunk)
+        assert assert_parity(rows, MIXED_TYPES) == want

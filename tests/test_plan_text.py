@@ -226,6 +226,20 @@ def test_cover_matches_numpy_reference_on_edges(spark, case):
         assert zs == set(args["zooms"])
 
 
+def test_cover_is_one_select_per_explode(spark):
+    """cover_metatiles adds its columns with one selectExpr per explode
+    (zoom, mtx, mty): three Generates with no Project between them, and
+    each cell bound appears once in the plan (no lambda, no arithmetic
+    that repeats a bound per derived column)."""
+    df = spark.createDataFrame(
+        _edge_features(), "feature_id long, xmin double, ymin double, "
+                          "xmax double, ymax double")
+    plan = cover_metatiles(df, [0, 5], 2)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    assert plan.count("Generate ") == 3, plan
+    assert "lambda" not in plan and plan.count("FLOOR(") == 4, plan
+
+
 def test_with_bbox_is_one_python_pass(spark):
     """with_bbox decodes each feature's WKB once: one MapInPandas and no
     ArrowEvalPython (a pandas_udf + isNotNull filter is instantiated in

@@ -1,5 +1,5 @@
-"""The tile-pyramid plan builder: DataFrame-native J1/J3 joins, salted
-groupBys, per-metatile rendering as one Arrow-batched Python pass.
+"""The tile-pyramid plan builder: DataFrame-native J1/J3 joins and
+per-metatile rendering as one Arrow-batched Python pass.
 
 Spark-first re-expression of the reference lifecycle (lib.rs:464-736),
 which renders one metatile at a time (lib.rs:543-559: fetch its rows,
@@ -8,42 +8,34 @@ then process, encode and write them):
   features ──(bbox cover explode = J1, no shuffle)──▶ (zoom, metatile) rows
       │ every layer's covered rows, unioned (+ done-tile marker rows)
       ▼
-  repartition(zoom,mtx,mty[,salt]) + sortWithinPartitions + mapInPandas:
-      per frame of complete metatile runs, per layer,
-      geom.batch.process_general — remap → dedup/spikes → exact-int RDP
-      → buffered clip → quadtree tile split (J3) → make_valid → winding
-      → per-tile shift (G2-G16) on the points, axis-rect, ragged or
-      scalar lane — then the pieces in canonical order through the
-      MVT layer encode (A1) and the tile assembly + gzip + md5 (A2)
-  split plan only (salted exchange key; z0-z4 hot tiles, O13): the
-      render emits partial layers, and assemble_tiles' repartition(z,x,y)
-      + sortWithinPartitions + mapInPandas merges them and assembles
+  repartition(zoom,mtx,mty) + sortWithinPartitions + mapInPandas:
+      per Arrow batch, per layer, geom.batch.process_general — remap →
+      dedup/spikes → exact-int RDP → buffered clip → quadtree tile split
+      (J3) → make_valid → winding → per-tile shift (G2-G16) on the
+      points, axis-rect, ragged or scalar lane; per closed metatile run,
+      the pieces in canonical order through the MVT layer encode (A1)
+      and the tile assembly + gzip + md5 (A2)
 
-Shuffles: one repartition of covered rows. A range with salted zooms
-(z <= 4) whose covered rows are estimated larger than one salt's share
-of an advisory partition (spark.sql.adaptive.advisoryPartitionSizeInBytes
-/ 16, or of unknown size) takes the split plan instead: the salt joins
-the exchange key, so a hot low-zoom tile's features spread over up to 16
-tasks, and assemble_tiles adds a second exchange to merge their
-partials. A fused low-zoom run holds the whole input, so below that
-bound no fused run is larger than a salted run of an input one advisory
-partition large, and one exchange is the whole plan. Tile bytes are the
-same on both plans: a layer's features come in (salt, feature_id)
-order, and the merge of in-order partials equals one encode pass. No
-piece enters the JVM: a covered row is exchanged once, and every tile
-lies inside exactly one metatile, so the task that holds a metatile's
-rows renders its tiles whole (split: one salt of them). Everything
-upstream is narrow — the cover "join" is arithmetic + explode on the
-feature side, which Catalyst keeps in one stage with the scan (predicate
-pushdown + column pruning intact; no Python there unless a source lacks
-bbox columns and with_bbox decodes them). Sorted-stream mapInPandas (not
-per-group applyInPandas) amortizes per-tile overhead across whole Arrow
-batches.
+Shuffles: one repartition of covered rows, for every zoom range and
+source. Every tile lies inside exactly one metatile, so the task that
+holds a metatile's rows renders its tiles whole, and no piece enters
+the JVM. A hot low-zoom metatile (every feature reaches z0) is one run
+in one task: the walk makes each batch's pieces as it arrives and holds
+the open run's pieces, not its covered rows (_make_render_run). At z <=
+_SALT_ZOOM_MAX a layer's features are encoded in (feature_id mod
+_N_SALTS, feature_id) order: the salt is an order key only, kept
+because the golden bytes pin that order. Everything upstream is narrow —
+the cover "join" is arithmetic + explode on the feature side, which
+Catalyst keeps in one stage with the scan (predicate pushdown + column
+pruning intact; no Python there unless a source lacks bbox columns and
+with_bbox decodes them). Sorted-stream mapInPandas (not per-group
+applyInPandas) amortizes per-tile overhead across whole Arrow batches.
 
-geometry_stage, encode_layers and encode_assemble_fused are the same
-steps as separate DataFrame stages over a piece stream. The render does
-not call them; they stay public for the oracles and tools that take
-pieces as a DataFrame.
+geometry_stage, encode_layers, assemble_tiles and encode_assemble_fused
+are the same steps as separate DataFrame stages over a piece stream
+(encode_layers + assemble_tiles split a salted tile over tasks and merge
+its partials, O13). The render does not call them; they stay public for
+the oracles and tools that take pieces as a DataFrame.
 
 The cover arithmetic, the bbox filters and the per-layer columns are
 built as SQL text (one filter or column per step), the way the reference
@@ -75,9 +67,10 @@ from pyspark.sql.types import (
 from .config import Layers
 from .mercator import (MERC_MAX, bbox_metatile_range, bbox_tile_range,
                        cover_slack)
-from .geom.wkb import _cumsum0, _ranges, concat_ragged, ragged_of, \
-    read_ragged, wkb_to_geom, write_ragged
+from .geom.wkb import _cumsum0, concat_ragged, ragged_of, read_ragged, \
+    wkb_to_geom, write_ragged
 from .geom import mvt, ringbulk
+from .geom.batch import _CHUNK_FEATURES, process_general
 from .sqllit import double as _d
 
 WORLD = 2.0 * MERC_MAX
@@ -300,8 +293,9 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
     — a planet scan with a city bbox prunes at the source), then the exact
     integer metatile-range filter after.
 
-    The plan is written as SQL text, one filter or column per step, so
-    building it costs a few py4j calls instead of one per operator; the
+    The plan is written as SQL text, one filter or selectExpr per step
+    (the zoom, mtx and mty explodes), so building it costs a few py4j
+    calls instead of one per operator and column; the
     driver-side float constants enter as exact double literals (_d)."""
     if bbox_merc is not None:
         # In-range tiles are rendered with their FULL extent (the
@@ -325,8 +319,8 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
             MERC_MAX - (mty1 + 1) * span - slack,
             -MERC_MAX + (mtx1 + 1) * span + slack,
             MERC_MAX - mty0 * span + slack)))
-    df = feats.withColumn("zoom", F.expr(
-        f"explode(array({', '.join(str(z) for z in zooms)}))"))
+    df = feats.selectExpr(
+        "*", f"explode(array({', '.join(str(z) for z in zooms)})) AS zoom")
     if zoom_filter:
         df = df.filter(zoom_filter)
     if bbox_merc is not None:
@@ -367,9 +361,11 @@ def cover_metatiles(feats: DataFrame, zooms: list[int], buffer_px: int,
     my0 = cell(f"{merc_max} - (ymax + {buf_m})")
     my1 = cell(f"{merc_max} - (ymin - {buf_m})")
 
-    covered = (df
-               .withColumn("mtx", F.expr(f"explode(sequence({mx0}, {mx1}))"))
-               .withColumn("mty", F.expr(f"explode(sequence({my0}, {my1}))")))
+    # one explode per axis: deriving (mtx, mty) from one explode over
+    # the cell index range, as tile_driver does, inlines each cell bound
+    # into both columns' arithmetic and made a cold render slower
+    covered = (df.selectExpr("*", f"explode(sequence({mx0}, {mx1})) AS mtx")
+               .selectExpr("*", f"explode(sequence({my0}, {my1})) AS mty"))
     if bbox_merc is not None:
         ranges = {z: bbox_metatile_range(bbox_merc, z, metatile_scale)
                   for z in zooms}
@@ -383,8 +379,6 @@ def _points_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
     that time it: pdf rows are simple points, which process_general
     routes to its points kernel. Returns what process_general
     returns."""
-    from .geom.batch import process_general
-
     return process_general(pdf, prop_names, buffer_units, metatile_scale,
                            0, 8)
 
@@ -446,8 +440,8 @@ def _is_ring5_geom_wkb(w) -> bool:
             and w[22:38] == w[86:102])
 
 
-# Python-bound stages (the render pass and the assemble exchange) run one
-# task per core: each mapInPandas task carries ~55 ms of fixed
+# Python-bound stages (the render pass, and the piece-stream stages'
+# exchanges) run one task per core: each mapInPandas task carries ~55 ms of fixed
 # worker/Arrow cost, and with geometry, encode and assembly in one pass
 # a second wave cost more than the straggler tail it saved. perfbench
 # seed 0, 4 cores, trace-0 wall_s medians of 3 interleaved pairs, 2 -> 1
@@ -464,7 +458,7 @@ def _rects_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
     rect kernel (geom.batch.axis_rect_rows) are run through it; the
     others are handed back. Returns (what process_general returns,
     leftover_pdf)."""
-    from .geom.batch import axis_rect_rows, process_general
+    from .geom.batch import axis_rect_rows
 
     rect = np.zeros(len(pdf), dtype=bool)
     rect[axis_rect_rows(read_ragged(pdf["way"].values))[0]] = True
@@ -518,8 +512,6 @@ def geometry_stage(covered: DataFrame, layer_id: str, buffer_px: int,
     buffer_units = buffer_px * 16  # lib.rs:508
 
     def run(iterator):
-        from .geom.batch import process_general
-
         for pdf in iterator:
             res = process_general(pdf, prop_names, buffer_units,
                                   metatile_scale, global_maxzoom, epsilon)
@@ -565,9 +557,10 @@ _PARTIAL_SCHEMA = ("zoom int, x long, y long, salt int, layer_order int, "
 # a partial layer message covers one run of equal encode keys; a tile
 # one run of equal tile keys
 _ENCODE_KEYS = ("zoom", "x", "y", "salt", "layer_order", "layer")
-# zooms <= _SALT_ZOOM_MAX split each tile's features over _N_SALTS salts
-# (feature_id mod _N_SALTS), so a hot low-zoom tile is encoded by many
-# tasks and its partials merged (O13); deeper zooms have salt 0
+# zooms <= _SALT_ZOOM_MAX order each tile layer's features by salt
+# (feature_id mod _N_SALTS), then feature_id; encode_layers also splits
+# a tile's features over its salts, so a hot low-zoom tile is encoded
+# by many tasks and its partials merged (O13); deeper zooms have salt 0
 _SALT_ZOOM_MAX = 4
 _N_SALTS = 16
 _TILE_KEYS = ("zoom", "x", "y")
@@ -610,20 +603,26 @@ def _complete_runs(iterator, keys):
         yield joined(held)
 
 
+def _batched(outs, key):
+    """The output column dicts `outs` (each holding `key`, or no
+    columns) as DataFrames of >= 2000 rows, and the rest at the end."""
+    out = {}
+    for cols in outs:
+        for k, v in cols.items():
+            out.setdefault(k, []).extend(v)
+        if len(out.get(key, ())) >= 2000:
+            yield pd.DataFrame(out)
+            out = {}
+    if out:
+        yield pd.DataFrame(out)
+
+
 def _walk_runs(iterator, keys, frame_fn):
     """Drive a sorted-stream walk that only ever handles complete runs
     (_complete_runs). frame_fn(frame) returns a dict of output column
     lists, the first key column among them, or no columns; the walk
     yields them as DataFrames of >= 2000 rows and the rest at the end."""
-    out = {}
-    for frame in _complete_runs(iterator, keys):
-        for k, v in frame_fn(frame).items():
-            out.setdefault(k, []).extend(v)
-        if len(out.get(keys[0], ())) >= 2000:
-            yield pd.DataFrame(out)
-            out = {}
-    if out:
-        yield pd.DataFrame(out)
+    return _batched(map(frame_fn, _complete_runs(iterator, keys)), keys[0])
 
 
 def _factorize(col):
@@ -711,53 +710,65 @@ def _intern_tags(pdf, rid, nruns, ly_codes, layer_props):
 
 def _frame_rows(rag, ki, vi, valid):
     """Every row's framed field-2 feature message, in row order, from
-    the rows' geometry as a wkb.Ragged: one ringbulk framer call per
-    geometry family (point, line, polygon), and encode_feature on
-    Ragged.geom for the rows the framer cannot take — 1-point lines and
-    empty MultiPoints (code 0 after ringbulk.mvt_rings), and rows whose
-    vertex and ring counts could pass the framer's 2^14-byte feature
-    body bound. Returns (stream, (n + 1,) row byte offsets)."""
+    the rows' geometry as a wkb.Ragged, framed _CHUNK_FEATURES rows at a
+    time so the framers' per-vertex and per-byte temporaries stay one
+    chunk's, not a hot tile's. Per chunk:
+    one ringbulk framer call per geometry family (point, line, polygon),
+    and encode_feature on Ragged.geom for the rows the framer cannot
+    take — 1-point lines and empty MultiPoints (code 0 after
+    ringbulk.mvt_rings), and rows whose vertex and ring counts could
+    pass the framer's 2^14-byte feature body bound. Each run of rows
+    framed into one stream is then one slice of it. Returns (stream,
+    (n + 1,) row byte offsets)."""
     n, P = valid.shape
-    mr = ringbulk.mvt_rings(rag)
-    nr = np.diff(mr.row_off)
-    unread = mr.code == 0
-    wide = ~unread & (6 * np.diff(mr.ring_off[mr.row_off]) + 5 * nr
-                      + 4 * P + 7 >= 1 << 14)
     length = np.zeros(n, dtype=np.int64)
-    framed = []
-    for gtype in (1, 2, 3):
-        rows = np.flatnonzero((mr.code == gtype) & ~wide)
-        if not len(rows):
-            continue
-        t = mr.take(rows)
-        tags = [(ki[rows, j], vi[rows, j], valid[rows, j])
-                for j in range(P)]
-        res = ringbulk.bulk_frame_ragged_features(
-            t.xs, t.ys, t.ring_off, t.row_off, gtype, tags)
-        if res is None:
-            wide[rows] = True
-        else:
-            length[rows] = res[1]
-            framed.append((rows, res[0]))
-    single = np.flatnonzero(unread | wide)
-    for i in single.tolist():
-        tags = [t for j in np.flatnonzero(valid[i]).tolist()
-                for t in (int(ki[i, j]), int(vi[i, j]))]
-        f = mvt._len_delim(2, mvt.encode_feature(_int_geom(rag.geom(i)),
-                                                 tags))
-        length[i] = len(f)
-        framed.append(([i], f))
-    if len(single):
+    src = np.zeros(n, dtype=np.int64)    # the stream a row is framed in
+    pos = np.zeros(n, dtype=np.int64)    # and its byte offset there
+    streams = []
+    n_unread = n_wide = 0
+    for s in range(0, n, _CHUNK_FEATURES):
+        mr = ringbulk.mvt_rings(rag.take(np.arange(
+            s, min(n, s + _CHUNK_FEATURES))))
+        nr = np.diff(mr.row_off)
+        unread = mr.code == 0
+        wide = ~unread & (6 * np.diff(mr.ring_off[mr.row_off]) + 5 * nr
+                          + 4 * P + 7 >= 1 << 14)
+        for gtype in (1, 2, 3):
+            rows = np.flatnonzero((mr.code == gtype) & ~wide)
+            if not len(rows):
+                continue
+            t = mr.take(rows)
+            tags = [(ki[s + rows, j], vi[s + rows, j], valid[s + rows, j])
+                    for j in range(P)]
+            res = ringbulk.bulk_frame_ragged_features(
+                t.xs, t.ys, t.ring_off, t.row_off, gtype, tags)
+            if res is None:
+                wide[rows] = True
+                continue
+            length[s + rows] = res[1]
+            src[s + rows] = len(streams)
+            pos[s + rows] = _cumsum0(res[1])[:-1]
+            streams.append(res[0])
+        for i in (s + np.flatnonzero(unread | wide)).tolist():
+            tags = [t for j in np.flatnonzero(valid[i]).tolist()
+                    for t in (int(ki[i, j]), int(vi[i, j]))]
+            f = mvt._len_delim(2, mvt.encode_feature(_int_geom(rag.geom(i)),
+                                                     tags))
+            length[i] = len(f)
+            src[i] = len(streams)
+            streams.append(f)
+        n_unread += int(unread.sum())
+        n_wide += int(wide.sum())
+    if n_unread or n_wide:
         _log.warning("encode fallback: %d of %d rows encoded one at a "
                      "time (1-point line or empty MultiPoint, code 0: %d; "
-                     "framer width bound: %d)", len(single), n,
-                     int(unread.sum()), int(wide.sum()))
+                     "framer width bound: %d)", n_unread + n_wide, n,
+                     n_unread, n_wide)
     off = _cumsum0(length)
-    out = np.empty(int(off[-1]), dtype=np.uint8)
-    for rows, stream in framed:
-        out[_ranges(off[rows], length[rows])] = np.frombuffer(stream,
-                                                              np.uint8)
-    return out.tobytes(), off
+    a = np.flatnonzero(np.diff(src, prepend=-1))
+    stop = pos[a] + off[np.append(a, n)[1:]] - off[a]
+    return b"".join(memoryview(streams[g])[p:q] for g, p, q in zip(
+        src[a].tolist(), pos[a].tolist(), stop.tolist())), off
 
 
 def _read_pieces(geoms):
@@ -904,11 +915,10 @@ def assemble_tiles(partials: DataFrame, compress: bool = True,
     per-tile MVT tiles + gzip + md5 (content-address for O12 dedup,
     fileio.rs:136-148). One shuffle: repartition (zoom,x,y) + sorted
     mapInPandas walk. shuffle_parts: explicit partition count, used as
-    given (build_tiles passes the same _python_stage_parts clamp as for
-    its render exchange); None keeps the AQE behavior. build_tiles calls
-    it on the partials of ranges with salted zooms; salt-free pyramids
-    (minzoom > _SALT_ZOOM_MAX) skip this shuffle: their render pass
-    assembles the tiles itself."""
+    given (callers clamp it with _python_stage_parts); None keeps the
+    AQE behavior. Not on build_tiles' path, whose render pass assembles
+    each tile whole; kept as the public piece-stream stage with
+    encode_layers (tests, perfbench's tracer look it up by name)."""
     if shuffle_parts is None:
         ordered = partials.repartition("zoom", "x", "y")
     else:
@@ -952,24 +962,28 @@ def encode_assemble_fused(pieces: DataFrame, prop_types: dict[str, dict],
         schema=_TILE_SCHEMA)
 
 
-# the render exchange's key: every tile lies inside one metatile; the
-# split plan adds the salt, so a low-zoom metatile's features spread
-# over tasks
+# the render exchange's key: every tile lies inside one metatile
 _METATILE_KEYS = ("zoom", "mtx", "mty")
-_SALTED_KEYS = _METATILE_KEYS + ("salt",)
 # the canonical piece order inside a tile: the encode walk's input order.
-# A layer's features come in (salt, feature_id) order whether the salts
-# are encoded in one run or as partials merged later (O13)
+# At zooms <= _SALT_ZOOM_MAX a layer's features come in (salt,
+# feature_id) order, the order the golden bytes pin (O13: salted
+# partials of a tile merge to these bytes)
 _PIECE_ORDER = ("zoom", "x", "y", "layer_order", "salt", "feature_id")
 
 
-def _finished_runs(marks, keys, metatile_scale: int, tile_ranges):
-    """The runs of equal `keys` (the render walk's: (zoom, mtx, mty),
-    plus salt on the split plan) of done-marker rows `marks` whose every
-    wanted tile is done: all tiles of the metatile, or those inside the
-    zoom's bbox tile range (tile_ranges; markers lie inside it)."""
-    n = (marks.drop_duplicates(list(keys) + ["x", "y"])
-         .groupby(list(keys), sort=False).size())
+def _keys_index(df, keys):
+    return pd.MultiIndex.from_arrays([df[k].to_numpy(np.int64)
+                                      for k in keys])
+
+
+def _finished_runs(marks, metatile_scale: int, tile_ranges):
+    """The metatiles (zoom, mtx, mty) of done-marker rows `marks` whose
+    every wanted tile is done: all tiles of the metatile, or those
+    inside the zoom's bbox tile range (tile_ranges; markers lie inside
+    it)."""
+    keys = list(_METATILE_KEYS)
+    n = marks.drop_duplicates(keys + ["x", "y"]).groupby(keys,
+                                                         sort=False).size()
     z = n.index.get_level_values("zoom").to_numpy(np.int64)
     size = np.minimum(metatile_scale, np.left_shift(1, z))
     x0 = n.index.get_level_values("mtx").to_numpy(np.int64) * size
@@ -985,81 +999,130 @@ def _finished_runs(marks, keys, metatile_scale: int, tile_ranges):
 
 
 def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
-                     metatile_scale: int, global_maxzoom: int, fuse: bool,
+                     metatile_scale: int, global_maxzoom: int,
                      compress: bool = True, tile_ranges=None):
     """The render pass as one mapInPandas function, over covered rows
-    sorted by their run keys, layer_order and feature_id. The run keys
-    are (zoom, mtx, mty) with `fuse` and (zoom, mtx, mty, salt) on the
-    split plan, whose runs each hold one salt of a metatile.
+    sorted by metatile (zoom, mtx, mty), layer_order and feature_id.
 
-    One walk (_walk_runs) hands it frames of complete runs, and each
-    frame holds whole tiles (or, split, whole salts of them), so it is
-    rendered on its own: geom.batch.process_general once per layer
-    (layer_specs: (layer_order, layer id, buffer units) per layer), the
-    pieces and their Ragged stable-sorted into the canonical piece order
-    (Ragged.take), the encoder on them and, with `fuse`, the assembler on
-    its partials: salt is then an order key only, so each (tile, layer)
-    is one partial. Split, the pass emits one partial per (tile, salt,
-    layer) for assemble_tiles to merge. No piece is written as WKB.
-    `carry` names the columns every piece keeps (salt and the property
-    columns).
+    Each Arrow batch becomes pieces as it arrives: geom.batch.
+    process_general once per layer (layer_specs: (layer_order, layer id,
+    buffer units) per layer) on the batch's rows. Geometry is row-local,
+    so a batch cut anywhere gives the same pieces. Across batches the
+    walk holds only the open metatile run's pieces (a frame and its
+    wkb.Ragged) and its done markers, never its input rows, so a hot
+    metatile costs its pieces (~85 B a point piece), not its covered
+    rows. When runs close, their pieces are stable-sorted into the
+    canonical piece order (_PIECE_ORDER), encoded and assembled: each
+    (tile, layer) is one layer message, salt only ordered its features.
+    No piece is written as WKB. `carry` names the columns every piece
+    keeps (salt and the property columns).
 
-    Rows with layer_order -1 are done markers: one per finished (zoom, x,
-    y) tile and run, so they land in the frame of that tile's run; the
-    tile's pieces are dropped before the encode, and a run whose wanted
-    tiles (_finished_runs) are all done is not rendered at all — a
-    resume's finished zooms cost no geometry."""
-    from .geom.batch import process_general
-
-    run_keys = _METATILE_KEYS if fuse else _SALTED_KEYS
-
+    Rows with layer_order -1 are done markers, one per finished (zoom,
+    x, y) tile, and sort ahead of their metatile's feature rows, so a
+    run's markers are all seen before its first feature row. A done
+    tile's pieces are dropped as they are made, and a run whose wanted
+    tiles (_finished_runs) are all done runs no geometry: a resume's
+    finished zooms cost none."""
     names = np.empty(1 + max(o for o, _, _ in layer_specs), dtype=object)
     for order, layer_id, _ in layer_specs:
         names[order] = layer_id
+    props = [p for p in carry if p != "salt"]
     encode = _make_encoder(prop_types, sorted({p for d in prop_types.values()
                                               for p in d}))
     assemble = _make_assembler(compress)
 
-    def render(pdf):
+    def pieces(pdf, marks):
+        """[(frame, rag)]: the pieces of pdf's feature rows, per layer,
+        less the done tiles of `marks`."""
         lo = pdf["layer_order"].to_numpy()
-        marks = pdf[lo < 0]
         if len(marks):
-            finished = _finished_runs(marks, run_keys, metatile_scale,
-                                      tile_ranges)
+            finished = _finished_runs(marks, metatile_scale, tile_ranges)
             if len(finished):
-                lo = np.where(pd.MultiIndex.from_arrays(
-                    [pdf[k].to_numpy(np.int64) for k in run_keys])
-                    .isin(finished), -1, lo)
-        frames, rags = [], []
+                lo = np.where(_keys_index(pdf, _METATILE_KEYS).isin(finished),
+                              -1, lo)
+            done = _keys_index(marks, _TILE_KEYS)
+        out = []
         for order, _, buffer_units in layer_specs:
             rows = pdf[lo == order]
             res = (process_general(rows, carry, buffer_units,
                                    metatile_scale, global_maxzoom, 8)
                    if len(rows) else None)
-            if res is not None:
-                frames.append(res[0].assign(layer_order=order))
-                rags.append(res[1])
-        if not frames:
-            return {}
-        f = pd.concat(frames, ignore_index=True)
-        at = np.lexsort([f[k].to_numpy() for k in reversed(_PIECE_ORDER)])
-        if len(marks):
-            done = pd.MultiIndex.from_arrays(
-                [marks[k].to_numpy(np.int64) for k in _TILE_KEYS])
-            at = at[~pd.MultiIndex.from_arrays(
-                [f[k].to_numpy(np.int64)[at] for k in _TILE_KEYS])
-                .isin(done)]
-        if not len(at):
-            return {}
-        f = f.iloc[at]
-        f = f.assign(layer=names[f["layer_order"].to_numpy()])
-        rag = concat_ragged(rags).take(at)
-        if not fuse:
-            return encode(f, rag)
-        # salt only ordered the features: one partial per (tile, layer)
-        return assemble(pd.DataFrame(encode(f.assign(salt=0), rag)))
+            if res is None:
+                continue
+            f, rag = res
+            if len(marks):
+                keep = np.flatnonzero(~_keys_index(f, _TILE_KEYS).isin(done))
+                if not len(keep):
+                    continue
+                if len(keep) < len(f):
+                    f, rag = f.iloc[keep], rag.take(keep)
+            out.append((f.assign(layer_order=order), rag))
+        return out
 
-    return lambda iterator: _walk_runs(iterator, run_keys, render)
+    def render(parts):
+        """The tile columns of whole runs' pieces; empties `parts`."""
+        rag = concat_ragged([r for _, r in parts])
+        frames = [f for f, _ in parts]
+        parts.clear()
+
+        def col(k):
+            return np.concatenate([f[k].to_numpy() for f in frames])
+
+        order = {k: col(k) for k in _PIECE_ORDER}
+        at = np.lexsort([order[k] for k in reversed(_PIECE_ORDER)])
+        rag = rag.take(at)
+        lo = order["layer_order"][at]
+        # salt only ordered the features: one partial per (tile, layer)
+        cols = {"zoom": order["zoom"][at], "x": order["x"][at],
+                "y": order["y"][at], "salt": np.zeros(len(at), np.int8),
+                "layer_order": lo, "layer": names[lo]}
+        del order
+        for p in props:
+            cols[p] = col(p)[at]
+        del frames
+        return assemble(pd.DataFrame(encode(pd.DataFrame(cols, copy=False),
+                                            rag)))
+
+    def walk(iterator):
+        held, marks, key = [], None, None    # the open run
+        for pdf in iterator:
+            if not len(pdf):
+                continue
+            chg = _run_starts(pdf, _METATILE_KEYS)
+            chg[0] = tuple(int(pdf[k].values[0])
+                           for k in _METATILE_KEYS) != key
+            m = pdf[pdf["layer_order"].to_numpy() < 0]
+            if not chg[0] and len(marks):
+                m = pd.concat([marks, m]) if len(m) else marks
+            new = pieces(pdf, m)
+            key = tuple(int(pdf[k].values[-1]) for k in _METATILE_KEYS)
+            if not chg.any():
+                held.extend(new)
+                marks = m
+                continue
+            # the open run closed in this batch; the batch's last run is
+            # the new open run
+            z, mx, my = key
+            size = min(metatile_scale, 1 << z)
+            closed, held = held, []
+            for f, rag in new:
+                tail = ((f["zoom"].to_numpy() == z)
+                        & (f["x"].to_numpy() // size == mx)
+                        & (f["y"].to_numpy() // size == my))
+                for part, rows in ((held, np.flatnonzero(tail)),
+                                   (closed, np.flatnonzero(~tail))):
+                    if len(rows) == len(f):
+                        part.append((f, rag))
+                    elif len(rows):
+                        part.append((f.iloc[rows], rag.take(rows)))
+            marks = m[(m["zoom"].to_numpy() == z) & (m["mtx"].to_numpy() == mx)
+                      & (m["mty"].to_numpy() == my)]
+            if closed:
+                yield render(closed)
+        if held:
+            yield render(held)
+
+    return lambda iterator: _batched(walk(iterator), "zoom")
 
 
 def empty_tile_bytes(layers: Layers, zoom: int, compress: bool = True) -> bytes:
@@ -1136,21 +1199,6 @@ def _python_stage_parts(spark: SparkSession,
     return max(1, min(shuffle_parts, cores * _TASKS_PER_CORE))
 
 
-def _fits_one_salt(spark: SparkSession, df: DataFrame) -> bool:
-    """True when df's size estimate is at most one salt's share of an
-    advisory partition: spark.sql.adaptive.advisoryPartitionSizeInBytes
-    / _N_SALTS. The estimate is the optimized plan's statistics (a
-    union's is the sum of its branches'), so no Spark job runs. A
-    relation whose size Spark does not know (an RDD source) reads as
-    spark.sql.defaultSizeInBytes, Long.MaxValue unless set, so it does
-    not fit, as it does not for the planner's broadcast bound."""
-    entry = (spark._jvm.org.apache.spark.sql.internal.SQLConf
-             .ADVISORY_PARTITION_SIZE_IN_BYTES())
-    advisory = spark._jsparkSession.sessionState().conf().getConf(entry)
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return int(str(size)) * _N_SALTS <= advisory
-
-
 def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                 layers: Layers, minzoom: int, maxzoom: int, *,
                 metatile_scale: int = 8, compress: bool = True,
@@ -1159,14 +1207,17 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                 done_keys: Optional[DataFrame] = None,
                 bbox: Optional[tuple] = None,
                 metatile_keys: Optional[DataFrame] = None) -> DataFrame:
-    """Entry point 1 (lib.rs:177-310): full pyramid as one lazy plan.
+    """Entry point 1 (lib.rs:177-310): full pyramid as one lazy plan,
+    the same for every zoom range and source: every layer's covered rows
+    cross one hash exchange keyed by metatile, and one mapInPandas
+    (_make_render_run) renders each metatile's tiles whole.
 
     sources: source name -> features DataFrame with `way` (WKB 3857 binary)
     + `feature_id` (stable long) + property columns.
     done_keys: optional (zoom, x, y) DataFrame of already-written tiles,
     left out for checkpoint resume (S11): each key rides the render
-    exchange as a marker row of its metatile (on the split plan, one per
-    salt at salted zooms), and the render task drops that tile's pieces.
+    exchange as a marker row of its metatile, and the render task drops
+    that tile's pieces.
     bbox: optional (minlon, minlat, maxlon, maxlat) restricting generation
     to tiles intersecting it (bin/tileigi.rs:110-126; tighter than the
     reference's metatile granularity — tiles outside the bbox are absent:
@@ -1282,24 +1333,12 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     for other in per_layer[1:]:
         rows = rows.unionByName(other, allowMissingColumns=True)
     # One plan renders every tile whole, in one exchange and one Python
-    # pass, as the reference renders a metatile (lib.rs:543-559). The
-    # split plan adds the salt to the exchange key and assemble_tiles'
-    # exchange, so a hot low-zoom tile's features spread over up to
-    # _N_SALTS tasks whose partials are merged (O13); the bytes are the
-    # same, since a layer's features come in (salt, feature_id) order
-    # either way. A fused low-zoom run holds the whole input, so the
-    # plan fuses a range with salted zooms only while the covered rows
-    # are estimated at most advisory size / _N_SALTS (_fits_one_salt):
-    # no fused run is then larger than a salted run of an input one
-    # advisory partition large. Below that bound the split only costs a
-    # second exchange and Python stage, and assemble_tiles' per-feature
-    # merge; above it a fused run's Python memory grows with the whole
-    # input (tools/render_plan_bound.py, random points, z0-z6, 4 cores:
-    # 170k rows, an estimate of 3.9 MB, render in a median 6.9 s at
-    # 1.9 GB peak RSS fused, 10.2 s at 1.7 GB split; at 300k rows the
-    # largest Python worker holds ~470 MB fused, ~200 MB split).
-    fuse = minzoom > _SALT_ZOOM_MAX or _fits_one_salt(spark, rows)
-    run_keys = _METATILE_KEYS if fuse else _SALTED_KEYS
+    # pass, as the reference renders a metatile (lib.rs:543-559). Salt is
+    # an order key only: at zooms <= _SALT_ZOOM_MAX a layer's features
+    # are encoded in (feature_id mod _N_SALTS, feature_id) order, the
+    # bytes the goldens pin. A hot low-zoom metatile is one run in one
+    # task; the render holds its pieces, not its covered rows
+    # (_make_render_run).
     # unionByName's column order: the first layer's, then each new one
     carry = ["salt"] + list(dict.fromkeys(
         p for props in prop_types.values() for p in props))
@@ -1307,9 +1346,9 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
         f"CAST(IF(zoom <= {_SALT_ZOOM_MAX}, pmod(feature_id, {_N_SALTS}),"
         f" 0) AS INT)"))
     if done_keys is not None:
-        # one marker row per done tile (inside the bbox) and run (split:
-        # one per salt), in its metatile's run; integer columns get 0,
-        # not NULL, so the render's pandas frames keep them int64
+        # one marker row per done tile (inside the bbox), in its
+        # metatile's run; integer columns get 0, not NULL, so the
+        # render's pandas frames keep them int64
         ints = [f"CAST(0 AS {f.dataType.simpleString()}) AS `{f.name}`"
                 for f in rows.schema.fields
                 if f.name not in ("zoom", "mtx", "mty", "layer_order", "salt")
@@ -1322,27 +1361,21 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                  .selectExpr(
                      "CAST(zoom AS INT) AS zoom",
                      f"CAST(x DIV {size} AS BIGINT) AS mtx",
-                     f"CAST(y DIV {size} AS BIGINT) AS mty",
-                     "0 AS salt" if fuse else
-                     f"explode(IF(zoom <= {_SALT_ZOOM_MAX},"
-                     f" sequence(0, {_N_SALTS - 1}), array(0))) AS salt",
+                     f"CAST(y DIV {size} AS BIGINT) AS mty", "0 AS salt",
                      "-1 AS layer_order", "CAST(x AS BIGINT) AS x",
                      "CAST(y AS BIGINT) AS y", *ints))
         rows = rows.unionByName(marks, allowMissingColumns=True)
     parts_n = _python_stage_parts(spark, shuffle_parts)
-    rows = (rows.repartition(*run_keys) if parts_n is None
-            else rows.repartition(parts_n, *run_keys))
+    rows = (rows.repartition(*_METATILE_KEYS) if parts_n is None
+            else rows.repartition(parts_n, *_METATILE_KEYS))
     rows = rows.sortWithinPartitions(
-        *map(F.expr, run_keys + ("layer_order", "feature_id")))
+        *map(F.expr, _METATILE_KEYS + ("layer_order", "feature_id")))
     tiles = rows.mapInPandas(
         _make_render_run(layer_specs, carry, prop_types, metatile_scale,
-                         layers.global_maxzoom, fuse, compress, tile_ranges),
-        schema=_TILE_SCHEMA if fuse else _PARTIAL_SCHEMA)
+                         layers.global_maxzoom, compress, tile_ranges),
+        schema=_TILE_SCHEMA)
     if tile_ranges is not None:
         tiles = tiles.filter(_zoom_xy_filter(tile_ranges, "x", "y"))
-    if not fuse:
-        tiles = assemble_tiles(tiles, compress=compress,
-                               shuffle_parts=parts_n)
 
     if include_empty:
         # every key of the render's extent (each zoom's bbox window, or

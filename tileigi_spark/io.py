@@ -105,16 +105,16 @@ class TileStore:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return read_batch_parquet(spark, reader, path)
 
-    def write_tiles(self, tiles: DataFrame, dedup: bool = True):
-        """tiles: (zoom,x,y,tile,tile_md5). The images are written first
-        and the map rows second, so a map row exists only once its image
-        is durable: a row in `map` means a readable tile, and `map` is
-        the resume record (done_keys). A crash between the two writes
-        leaves orphan images, which no map row reaches."""
-        images = tiles.selectExpr("tile_md5 AS tile_id", "tile AS tile_data")
-        if dedup:
-            images = images.dropDuplicates(["tile_id"])
-        self._write(images, "images")
+    def write_tiles(self, tiles: DataFrame):
+        """tiles: (zoom,x,y,tile,tile_md5). The images, deduplicated by
+        md5 (O12), are written first and the map rows second, so a map
+        row exists only once its image is durable: a row in `map` means a
+        readable tile, and `map` is the resume record (done_keys). A crash
+        between the two writes leaves orphan images, which no map row
+        reaches."""
+        self._write(tiles.selectExpr("tile_md5 AS tile_id",
+                                     "tile AS tile_data")
+                    .dropDuplicates(["tile_id"]), "images")
         mapping = tiles.selectExpr("zoom", "x", "y", "tile_md5 AS tile_id")
         self._write(mapping, "map", partition_cols=("zoom",))
 

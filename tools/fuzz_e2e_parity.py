@@ -12,20 +12,13 @@ router's rect and points kernels) through
 IDENTICAL across
 
   * two input partitionings (1 vs 13 parts, same session) — proves the
-    salted assembly / partial-merge order-independence on arbitrary
+    canonical piece order is independent of partitioning on arbitrary
     shapes, not just the golden fixtures;
   * the 13-part build rerun with spark.sql.execution.arrow.
-    maxRecordsPerBatch = 7, so Arrow batch cuts fall inside the render
-    walk's metatile runs — proves the walks' bytes do not depend on
-    where batches end;
-  * the 13-part build rerun on the split plan (salted render exchange,
-    partial layers merged by assemble_tiles), forced by an advisory
-    partition size of 1 byte: the input is an in-memory Arrow relation
-    of known size, so the other builds take the fused plan — proves
-    both plans give the same bytes;
-  * the split build rerun with 7-row Arrow batches, so batch cuts fall
-    inside the split plan's walks too: the salted render's (metatile,
-    salt) runs and assemble_tiles' tile runs;
+    maxRecordsPerBatch = 7 and = 1, so Arrow batch cuts fall inside the
+    render walk's metatile runs (at 1, between every two rows of every
+    run) — proves the pieces made batch by batch, and the open run held
+    across batches, do not depend on where batches end;
   * the router's vector lanes vs SPARK_GRAFT_FORCE_SCALAR_GEOM=1, which
     sends every row (points and rects included) to the scalar chain
     (child process — the flag is read in the Python workers, whose env
@@ -49,7 +42,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
-ADVISORY_CONF = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
@@ -95,8 +87,10 @@ def rows_for_seed(seed: int, n: int):
     return rows
 
 
-def _tile_map(spark, rows, parts: int, maxzoom: int, buffer_px: int = 2,
-              gmax: int = 14, metatile_scale: int = 8):
+def tile_map(spark, rows, parts: int, maxzoom: int, buffer_px: int = 2,
+             gmax: int = 14, metatile_scale: int = 8):
+    """{(zoom, x, y): tile_md5} of a build, whose plan has one hash
+    exchange."""
     from tileigi_spark.config import Layer, Layers
     from tileigi_spark.engine import build_tiles
 
@@ -113,16 +107,10 @@ def _tile_map(spark, rows, parts: int, maxzoom: int, buffer_px: int = 2,
     tiles = build_tiles(spark, {"s": feats}, layers, 0, maxzoom,
                         metatile_scale=metatile_scale)
     plan = tiles._jdf.queryExecution().executedPlan().toString()
-    got = {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
-           for r in tiles.select("zoom", "x", "y", "tile_md5").collect()}
-    return got, plan.count("Exchange hashpartitioning")
-
-
-def tile_map(spark, rows, parts: int, maxzoom: int, **cfg):
-    """{(zoom, x, y): tile_md5} of a fused build (one hash exchange)."""
-    got, exchanges = _tile_map(spark, rows, parts, maxzoom, **cfg)
+    exchanges = plan.count("Exchange hashpartitioning")
     assert exchanges == 1, exchanges
-    return got
+    return {(r["zoom"], r["x"], r["y"]): r["tile_md5"]
+            for r in tiles.select("zoom", "x", "y", "tile_md5").collect()}
 
 
 def _cfg_for_seed(seed: int) -> dict:
@@ -175,20 +163,12 @@ def main():
         cfg = _cfg_for_seed(seed)
         a = tile_map(spark, rows, 1, args.maxzoom, **cfg)
         b = tile_map(spark, rows, 13, args.maxzoom, **cfg)
-        spark.conf.set(BATCH_CONF, "7")
         try:
-            d = tile_map(spark, rows, 13, args.maxzoom, **cfg)
-        finally:
-            spark.conf.unset(BATCH_CONF)
-        spark.conf.set(ADVISORY_CONF, "1b")
-        try:
-            e, exchanges = _tile_map(spark, rows, 13, args.maxzoom, **cfg)
-            assert exchanges == 2, exchanges
             spark.conf.set(BATCH_CONF, "7")
-            f, exchanges = _tile_map(spark, rows, 13, args.maxzoom, **cfg)
-            assert exchanges == 2, exchanges
+            d = tile_map(spark, rows, 13, args.maxzoom, **cfg)
+            spark.conf.set(BATCH_CONF, "1")
+            e = tile_map(spark, rows, 13, args.maxzoom, **cfg)
         finally:
-            spark.conf.unset(ADVISORY_CONF)
             spark.conf.unset(BATCH_CONF)
         env = dict(os.environ, SPARK_GRAFT_FORCE_SCALAR_GEOM="1",
                    PYTHONPATH=REPO)
@@ -202,22 +182,22 @@ def main():
             if line.startswith("TILEMAP "):
                 c = {tuple(int(v) for v in k.split("/")): h
                      for k, h in json.loads(line[8:]).items()}
-        ok = a == b == c == d == e == f
+        ok = a == b == c == d == e
         if not ok:
             fails += 1
-            diffs = {k for k in set(a) | set(b) | set(d) | set(e) | set(f)
+            diffs = {k for k in set(a) | set(b) | set(d) | set(e)
                      | set(c or {})
                      if not (a.get(k) == b.get(k) == d.get(k) == e.get(k)
-                             == f.get(k) == (c or {}).get(k))}
+                             == (c or {}).get(k))}
             print(f"FAIL seed={seed} tiles={len(a)}/{len(b)}/{len(d)}/"
-                  f"{len(e)}/{len(f)}/{len(c) if c else 'child-err'} "
+                  f"{len(e)}/{len(c) if c else 'child-err'} "
                   f"first_diffs={sorted(diffs)[:5]}")
             if c is None:
                 print(out.stderr[-800:])
         else:
             print(f"PASS seed={seed} tiles={len(a)} cfg={cfg} "
-                  f"(1-part == 13-part == 7-row batches == split plan == "
-                  f"split plan, 7-row batches == forced-scalar child)")
+                  f"(1-part == 13-part == 7-row batches == 1-row batches "
+                  f"== forced-scalar child)")
     print(f"e2e parity: {args.seeds - fails}/{args.seeds} seeds clean")
     spark.stop()
     sys.exit(1 if fails else 0)
