@@ -431,25 +431,59 @@ class TestWindOnlyRepairProperty:
 
 
 class TestRdpNumpyTwin:
+    """_rdp_keep walks every ring of a batch at once; each ring's mask
+    must keep exactly simplify._rdp's vertices."""
+
+    @staticmethod
+    def _ring(rng, n, grid, closed):
+        pts = []
+        while len(pts) < n:
+            p = (rng.randrange(-40000, 40000, grid),
+                 rng.randrange(-40000, 40000, grid))
+            if not pts or p != pts[-1]:
+                pts.append(p)
+        return pts + [pts[0]] if closed else pts
+
+    @staticmethod
+    def _ties(rng, n, eps):
+        """A zigzag of equal amplitude: every interior vertex of the
+        first span is equally far from the chord, so the last wins; at
+        amplitude eps the distance sits on the wipe's strict bound."""
+        a = rng.choice([eps, eps + 1, rng.randrange(20, 200)])
+        return [(10 * k, a * (k % 2)) for k in range(n)]
+
     @pytest.mark.parametrize("seed", range(20))
     def test_rdp_mask_matches_scalar(self, seed):
         rng = random.Random(seed)
-        n = rng.randint(3, 60)
-        pts = []
-        last = None
-        while len(pts) < n:
-            p = (rng.randint(-40000, 40000), rng.randint(-40000, 40000))
-            if p != last:
-                pts.append(p)
-                last = p
-        if rng.random() < 0.5:
-            pts.append(pts[0])  # closed
-        ref = _rdp(list(pts), 8)
-        xs = np.array([p[0] for p in pts], dtype=np.int64)
-        ys = np.array([p[1] for p in pts], dtype=np.int64)
-        keep = _rdp_keep(xs, ys, 64)
-        got = [p for p, k in zip(pts, keep) if k]
-        assert ref == got
+        eps = rng.choice([1, 4, 8, 30])
+        rings = []
+        for _ in range(40):
+            n = rng.choice([3, 4, 7, 20, 60, 300, 2000])
+            kind = rng.random()
+            if kind < 0.2:
+                rings.append(self._ties(rng, n, eps))
+            else:
+                # a coarse grid makes equal distances (ties) common
+                rings.append(self._ring(rng, n, rng.choice([1, 5000]),
+                                        kind < 0.6))
+        want = []
+        for pts in rings:
+            try:
+                want.append(_rdp(list(pts), eps))
+            except ZeroDivisionError:  # all-collinear span: not lane input
+                want.append(None)
+        xs = np.array([x for r in rings for x, _ in r], np.int64)
+        ys = np.array([y for r in rings for _, y in r], np.int64)
+        off = np.cumsum([0] + [len(r) for r in rings])
+        keep = _rdp_keep(xs, ys, off, np.arange(len(rings)), eps * eps)
+        checked = 0
+        for k, pts in enumerate(rings):
+            if want[k] is not None:
+                got = [p for p, kp in zip(pts, keep[off[k]:off[k + 1]])
+                       if kp]
+                assert got == want[k], k
+                checked += 1
+        assert checked >= 30
 
 
 class TestChunkedBatches:

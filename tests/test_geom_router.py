@@ -1,6 +1,6 @@
 """The geometry-stage router (geom/batch.py:process_general): one read of
-each batch, each row routed to the points, rect, ragged or scalar lane
-from the reader's arrays. The contract is the scalar chain: a mixed batch
+each batch, each row routed to the points lane, the ragged lane or the
+scalar chain from the reader's arrays. The contract is the scalar chain: a mixed batch
 must give the same sorted rows as SPARK_GRAFT_FORCE_SCALAR_GEOM=1."""
 
 import math
@@ -149,13 +149,17 @@ class _LaneSpy:
     """Counts the batch rows each lane receives."""
 
     def __init__(self, monkeypatch):
-        self.rows = {"points": [], "rect": [], "ragged": [], "scalar": []}
+        self.rows = {"points": [], "ragged": [], "scalar": []}
         self.decoded = []
         self.reads = []
-        for name, lane in (("_points_lane", "points"),
-                           ("rect_lane", "rect")):
-            monkeypatch.setattr(B, name, self._wrap(getattr(B, name), lane))
+        monkeypatch.setattr(B, "_points_lane",
+                            self._wrap(B._points_lane, "points"))
         vector_lane = B._vector_lane
+        chain = B._Pieces.chain
+
+        def spy_chain(pieces, i, *a, **k):
+            self.rows["scalar"].append(i)
+            return chain(pieces, i, *a, **k)
 
         def spy_vector(st, *a, **k):
             self.rows["ragged"].extend(np.unique(st["ring_feat"]).tolist())
@@ -172,6 +176,7 @@ class _LaneSpy:
             return read(ways)
 
         monkeypatch.setattr(B, "_vector_lane", spy_vector)
+        monkeypatch.setattr(B._Pieces, "chain", spy_chain)
         monkeypatch.setattr(B, "wkb_to_geom", spy_decode)
         monkeypatch.setattr(B, "read_ragged", spy_read)
 
@@ -195,11 +200,13 @@ def test_mixed_batch_equals_scalar_chain(buffer_units, monkeypatch):
     assert got == scalar and len(got) > 100
     assert spy.kinds(pdf, "points") == {"point", "corner", "half"}
     assert (pdf["kind"] == "half").sum() >= 3
-    assert spy.kinds(pdf, "rect") == {"box"}
-    assert len(spy.rows["rect"]) == (pdf["kind"] == "box").sum()
-    assert spy.kinds(pdf, "ragged") == {"quad", "mp_box", "holed_box",
-                                        "concave", "line", "mline",
-                                        "outside", "orphan"}
+    # axis rects take the ragged lane like any polygon, and its
+    # certificate and winding repair keep them off the scalar chain
+    assert spy.kinds(pdf, "ragged") == {"box", "quad", "mp_box",
+                                        "holed_box", "concave", "line",
+                                        "mline", "outside", "orphan"}
+    assert "box" not in spy.kinds(pdf, "scalar")
+    assert "ewkb" in spy.kinds(pdf, "scalar")
     assert "outside" not in {r[5] for r in got}
     # the corner point at z3 lands in all four tiles around it
     corner = [r for r in got if r[0] == 3 and r[5] == "corner"]
@@ -207,16 +214,15 @@ def test_mixed_batch_equals_scalar_chain(buffer_units, monkeypatch):
         [(2, 4), (2, 5), (3, 4), (3, 5)]
 
 
-def test_epsilon_4_takes_no_rect_kernel(monkeypatch):
-    """The rect kernel's simplify wipe is derived for epsilon 8; with
-    any other epsilon the boxes take the ragged lane."""
+def test_epsilon_4_equals_scalar_chain(monkeypatch):
+    """Another epsilon runs the same lanes; the RDP's wipe is exact for
+    it too."""
     pdf = _batch()
     args = (32, 8, 14, 4)
     scalar = _scalar(pdf, monkeypatch, *args)
     spy = _LaneSpy(monkeypatch)
     got = _rows(B.process_general(pdf, ["kind"], *args))
     assert got == scalar and len(got) > 100
-    assert spy.rows["rect"] == []
     assert "box" in spy.kinds(pdf, "ragged")
 
 
@@ -232,7 +238,7 @@ def test_each_row_is_read_once(monkeypatch):
 
 
 def test_chunking_keeps_pieces_and_points_whole(monkeypatch):
-    """Rect and ragged rows run in _CHUNK_FEATURES chunks with the same
+    """Line and polygon rows run in _CHUNK_FEATURES chunks with the same
     piece set; the points lane is called once for the whole batch."""
     pdf = _batch()
     args = (32, 8, 14, 8)
@@ -250,7 +256,8 @@ def test_chunking_keeps_pieces_and_points_whole(monkeypatch):
 def test_probe_classifiers_agree_with_the_router():
     """engine._is_simple_point_wkb / _is_ring5_polygon_wkb are per-row
     classifiers kept for the benchmark probes; they must accept exactly
-    the router's points rows and its ring5 rect candidates."""
+    the router's points rows and the ring5 candidates of its axis-rect
+    test (axis_rect_rows, the rows _rects_fast_path times)."""
     pdf = _batch()
     ways = list(pdf["way"]) + [None, b"", b"\x01\x01\x00\x00\x00"]
     rag = read_ragged(ways)
@@ -264,7 +271,8 @@ def test_probe_classifiers_agree_with_the_router():
 
 def test_fast_path_shims_delegate(monkeypatch):
     """_points_fast_path / _rects_fast_path run the router's own
-    kernels: the rect shim hands back exactly the non-rect rows."""
+    lanes: the rect shim runs the axis rects through the ragged lane and
+    hands back exactly the other rows."""
     pdf = _batch()
     pts = pdf[pdf["kind"].isin(["point", "corner"])]
     assert _rows(engine._points_fast_path(pts, ["kind"], 32, 8)) == \

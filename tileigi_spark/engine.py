@@ -401,9 +401,9 @@ def _is_ring5_polygon_wkb(w) -> bool:
     """Single-ring 5-point closed polygon WKB (93 bytes) — the shape of
     every clipped box/rectangle piece. Closure check compares the first
     and last point bytes directly. One row's test for the candidates of
-    the router's rect route (geom.batch.axis_rect_rows adds the axis
-    test), kept for the benchmark probes and pinned to the router like
-    _is_simple_point_wkb."""
+    geom.batch.axis_rect_rows (which adds the axis test; those rows are
+    what _rects_fast_path times), kept for the benchmark probes and
+    pinned to the router's reader like _is_simple_point_wkb."""
     return (w is not None and len(w) == 93
             and w[:13] == _RING5_HEADER and w[13:29] == w[77:93])
 
@@ -426,7 +426,7 @@ def _is_short_line_wkb(w) -> bool:
 
 def _is_ring5_geom_wkb(w) -> bool:
     """_is_ring5_polygon_wkb, or its MultiPolygon-of-one twin (102
-    bytes — what make_valid emits for repaired-winding rects). Both
+    bytes — what the winding repair emits for a reversed rect). Both
     produce the identical MVT command stream (MVT has one POLYGON type;
     a single-member MultiPolygon frames exactly like the Polygon). A
     classifier only: the encode walk frames these boxes with the ragged
@@ -453,11 +453,11 @@ _TASKS_PER_CORE = 1
 
 def _rects_fast_path(pdf: pd.DataFrame, prop_names, buffer_units: int,
                      metatile_scale: int, global_maxzoom: int):
-    """The rect lane on its own, for the benchmark probes and tests that
-    time or pin it: the rows of pdf that process_general routes to its
-    rect kernel (geom.batch.axis_rect_rows) are run through it; the
-    others are handed back. Returns (what process_general returns,
-    leftover_pdf)."""
+    """The ragged lane on axis rects, for the benchmark probes and tests
+    that time or pin it: the rows of pdf that geom.batch.axis_rect_rows
+    accepts run through process_general (which sends them to its ragged
+    lane, like every other polygon); the others are handed back.
+    Returns (what process_general returns, leftover_pdf)."""
     from .geom.batch import axis_rect_rows
 
     rect = np.zeros(len(pdf), dtype=bool)
@@ -644,6 +644,7 @@ def _intern(run, ids, width, item_bytes, items, nruns):
     runs are contiguous. Returns each entry's index in its run's table,
     and every run's table — item_bytes of the `items` of the entries
     that introduced its ids — as one blob with nruns + 1 byte cuts."""
+    # run is int64, so the combined key is int64 whatever ids' dtype
     u, first, inv = np.unique(run * width + ids, return_index=True,
                               return_inverse=True)
     intro = np.sort(first)
@@ -665,14 +666,16 @@ def _intern_tags(pdf, rid, nruns, ly_codes, layer_props):
     across all columns, so 1, True, f32 1.5 and double 1.5 stay apart
     while a string two columns share is one table entry.
 
-    Returns (ki, vi, valid, keys, values): (n, P) key and value index
-    matrices with their mask (False on NULL and absent slots), and each
-    run's key and value table bytes as (blob, cuts) from _intern."""
+    Returns (ki, vi, valid, keys, values): (n, P) int32 key and value
+    index matrices with their mask (False on NULL and absent slots), and
+    each run's key and value table bytes as (blob, cuts) from _intern.
+    The id matrices are int32 (ids count distinct keys and values): they
+    are the render close's memory peak on a hot run."""
     n = len(pdf)
     P = max(map(len, layer_props), default=0)
-    kid = np.full((n, P), -1, dtype=np.int64)   # key id
-    cid = np.full((n, P), -1, dtype=np.int64)   # value id (identity)
-    fid = np.full((n, P), -1, dtype=np.int64)   # value id (bytes)
+    kid = np.full((n, P), -1, dtype=np.int32)   # key id
+    cid = np.full((n, P), -1, dtype=np.int32)   # value id (identity)
+    fid = np.full((n, P), -1, dtype=np.int32)   # value id (bytes)
     key_ids, val_ids, val_bytes, cols = {}, {}, [], {}
     for lay, props in enumerate(layer_props):
         rows = np.flatnonzero(ly_codes == lay)
@@ -698,8 +701,8 @@ def _intern_tags(pdf, rid, nruns, ly_codes, layer_props):
     cells = np.flatnonzero(valid)            # (row, column) order
     run = rid[cells // max(P, 1)]
     kid = kid.ravel()[cells]
-    ki = np.zeros(n * P, dtype=np.int64)
-    vi = np.zeros(n * P, dtype=np.int64)
+    ki = np.zeros(n * P, dtype=np.int32)
+    vi = np.zeros(n * P, dtype=np.int32)
     ki[cells], keys = _intern(
         run, kid, len(key_ids), [mvt._len_delim(3, k.encode("utf-8"))
                                  for k in key_ids], kid, nruns)
@@ -1013,9 +1016,9 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
     metatile costs its pieces (~85 B a point piece), not its covered
     rows. When runs close, their pieces are stable-sorted into the
     canonical piece order (_PIECE_ORDER), encoded and assembled: each
-    (tile, layer) is one layer message, salt only ordered its features.
-    No piece is written as WKB. `carry` names the columns every piece
-    keeps (salt and the property columns).
+    (tile, layer) is one layer message, salt only ordered its features;
+    the salt is computed here from zoom and feature_id, not shipped. No piece is written
+    as WKB. `carry` names the property columns every piece keeps.
 
     Rows with layer_order -1 are done markers, one per finished (zoom,
     x, y) tile, and sort ahead of their metatile's feature rows, so a
@@ -1026,7 +1029,6 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
     names = np.empty(1 + max(o for o, _, _ in layer_specs), dtype=object)
     for order, layer_id, _ in layer_specs:
         names[order] = layer_id
-    props = [p for p in carry if p != "salt"]
     encode = _make_encoder(prop_types, sorted({p for d in prop_types.values()
                                               for p in d}))
     assemble = _make_assembler(compress)
@@ -1068,7 +1070,11 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
         def col(k):
             return np.concatenate([f[k].to_numpy() for f in frames])
 
-        order = {k: col(k) for k in _PIECE_ORDER}
+        order = {k: col(k) for k in _PIECE_ORDER if k != "salt"}
+        # the salt, as pmod gives it (numpy's % of a positive divisor
+        # is non-negative too)
+        order["salt"] = np.where(order["zoom"] <= _SALT_ZOOM_MAX,
+                                 order["feature_id"] % _N_SALTS, 0)
         at = np.lexsort([order[k] for k in reversed(_PIECE_ORDER)])
         rag = rag.take(at)
         lo = order["layer_order"][at]
@@ -1077,7 +1083,7 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
                 "y": order["y"][at], "salt": np.zeros(len(at), np.int8),
                 "layer_order": lo, "layer": names[lo]}
         del order
-        for p in props:
+        for p in carry:
             cols[p] = col(p)[at]
         del frames
         return assemble(pd.DataFrame(encode(pd.DataFrame(cols, copy=False),
@@ -1336,22 +1342,20 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
     # pass, as the reference renders a metatile (lib.rs:543-559). Salt is
     # an order key only: at zooms <= _SALT_ZOOM_MAX a layer's features
     # are encoded in (feature_id mod _N_SALTS, feature_id) order, the
-    # bytes the goldens pin. A hot low-zoom metatile is one run in one
+    # bytes the goldens pin; the render computes it from the pieces'
+    # zoom and feature_id. A hot low-zoom metatile is one run in one
     # task; the render holds its pieces, not its covered rows
     # (_make_render_run).
     # unionByName's column order: the first layer's, then each new one
-    carry = ["salt"] + list(dict.fromkeys(
+    carry = list(dict.fromkeys(
         p for props in prop_types.values() for p in props))
-    rows = rows.withColumn("salt", F.expr(
-        f"CAST(IF(zoom <= {_SALT_ZOOM_MAX}, pmod(feature_id, {_N_SALTS}),"
-        f" 0) AS INT)"))
     if done_keys is not None:
         # one marker row per done tile (inside the bbox), in its
         # metatile's run; integer columns get 0, not NULL, so the
         # render's pandas frames keep them int64
         ints = [f"CAST(0 AS {f.dataType.simpleString()}) AS `{f.name}`"
                 for f in rows.schema.fields
-                if f.name not in ("zoom", "mtx", "mty", "layer_order", "salt")
+                if f.name not in ("zoom", "mtx", "mty", "layer_order")
                 and isinstance(f.dataType, (LongType, IntegerType))]
         size = f"least({metatile_scale}L, shiftleft(1L, zoom))"
         keep = (f"zoom IN ({', '.join(map(str, zooms))})"
@@ -1361,7 +1365,7 @@ def build_tiles(spark: SparkSession, sources: dict[str, DataFrame],
                  .selectExpr(
                      "CAST(zoom AS INT) AS zoom",
                      f"CAST(x DIV {size} AS BIGINT) AS mtx",
-                     f"CAST(y DIV {size} AS BIGINT) AS mty", "0 AS salt",
+                     f"CAST(y DIV {size} AS BIGINT) AS mty",
                      "-1 AS layer_order", "CAST(x AS BIGINT) AS x",
                      "CAST(y AS BIGINT) AS y", *ints))
         rows = rows.unionByName(marks, allowMissingColumns=True)

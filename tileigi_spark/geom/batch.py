@@ -7,8 +7,8 @@ lib.rs:559-728). process_general, the only entry of
 engine.geometry_stage, reads each Arrow batch once with wkb.read_ragged
 (the reader the encode walk and with_bbox share), computes its metatile
 frame once (remap.metatile_frame) and routes each row from the reader's
-arrays: simple points to the points kernel (_points_lane), axis rects
-to the rect kernel (rectfast.rect_lane), other line/polygon rows to the
+arrays on one of three routes: simple points to the points kernel
+(_points_lane), every line and polygon row (axis rects included) to the
 ragged lane below, and the rows the reader refuses to the scalar chain.
 Every lane hands back (row, tile x, tile y) per piece plus its pieces
 as a wkb.Ragged part (int64 tile-local vertices); _Pieces stacks the
@@ -16,10 +16,11 @@ parts once and gathers the output columns once. No piece is written as
 WKB here: the render task frames the Ragged as it is, and
 engine.geometry_stage writes it with wkb.write_ragged.
 
-The ragged lane vectorizes the chain across a batch with numpy on flat
-("ragged") coordinate arrays + ring offsets, dropping to the
-authoritative scalar kernels ONLY for the features a stage would
-actually change:
+The ragged lane runs the chain across a batch with numpy on flat
+("ragged") coordinate arrays + ring offsets. Each step is an exact
+twin of the scalar kernel it replaces; a feature drops to the scalar
+kernels only where a screen cannot certify a step (a despike that
+would change it, a make_valid repair, non-finite or huge coordinates):
 
 * parse — _lane_state gathers the lane's rows from the batch's one
   read_ragged result.
@@ -33,35 +34,37 @@ actually change:
   => the last_kept chain never diverges from the plain triple scan =>
   the loop breaks), so screen-clean features skip it; flagged features
   fall back to the scalar chain from remove_unneeded_points.
-* exact-int RDP (G6, simplify.rs:38-155) — per-ring, but the O(n)
-  max-distance scan is one numpy expression (int64-safe because the
-  lane guards |coord| < 2^26; larger coords route the whole feature to
-  the scalar lane's Python bigints). The tie-break (LAST max index, the
-  tuple-compare in simplify._rdp) and the overflow-guard ladder are
-  preserved; this_e//max_num and max_num**2 run on Python ints.
-* clip to the buffered bbox (G7-G10) — vectorized early-exits on the
-  per-feature bbox: all-inside => identity, all-outside-one-border =>
-  dropped (both exact); a bbox that straddles a border falls back to
-  the scalar border walk ("most features pass clip untouched",
-  clip/mod.rs:186-210).
-* quadtree slice (G11/J3) — per-feature tile window from the bbox
-  ([t*4096-buf, (t+1)*4096+buf] per tile t, the closed-interval
-  collapse the points kernel uses, tile_window): fan 1x1 => the recursive
-  slice provably emits exactly one uncut piece (at every bisection the
-  geometry is wholly inside one branch's keep half-space and wholly
-  outside the other's), so the piece IS the geometry; fan > 1 falls
-  back to the recursive _slice_box.
+* exact-int RDP (G6, simplify.rs:38-155) — _rdp_keep walks the span
+  tree of every ring at once, one depth per pass, with simplify._rdp's
+  tie-break (the LAST farthest vertex) and wipe ladder in int64 (the
+  lane guards |coord| < 2^26, and lower for a large epsilon; larger
+  coords route the whole feature to the scalar lane's Python bigints).
+* clip to the buffered bbox (G7-G10) — four border cuts (_cut) over
+  every feature at once: a feature wholly inside a border passes, one
+  wholly outside is dropped, and only the straddling ones take _clip,
+  the array twin of the scalar Sutherland-Hodgman ring clip and
+  linestring border clip (clip/mod.rs:184-322,
+  sutherland_hodgeman.rs:7-105), crossings on the same truncating
+  integer ladder.
+* quadtree slice (G11/J3) — _slice walks clip._slice_box breadth-first,
+  one level (an x cut, then a y cut) for every piece at once, copying a
+  piece to each child its bbox reaches; a piece whose bbox reaches one
+  tile (tile_window) takes it without a cut. _dedup then removes
+  consecutive duplicates per part (clip_geometry_to_tiles).
 * make_valid / is_valid / orientation (G13-G16) — vectorized
   CERTIFICATE: the post-RDP despike/dup screen again (make_valid
   re-runs remove_unneeded_points), an exact segment test per ring on
   the pairs whose bboxes overlap (validity.segment_pairs; the sd/td
   classification of validity.intersection without the crossing-point
   math; parallel bbox-overlapping collinear pairs are conservatively
-  flagged), and the wrapped-i32 shoelace winding check
-  (strict CW exterior / CCW interior). Certificate-clean polygons are
-  provably returned unchanged by make_valid (its is_valid early
-  return) and by ensure_polygon_orientation; anything else falls back
-  to the scalar make_valid machinery on that single piece.
+  flagged; axis rects have no such pair and skip it), and the
+  wrapped-i32 shoelace winding check (strict CW exterior / CCW
+  interior). Certificate-clean polygons are provably returned unchanged
+  by make_valid (its is_valid early return) and by
+  ensure_polygon_orientation; a one-ring piece whose only defect is a
+  CCW, pinch-free exterior is reversed in place (one lexsort finds the
+  pinches, one gather reverses); anything else falls back to the scalar
+  make_valid machinery on that single piece.
 
 Type-collapse bookkeeping matches the scalar chain's observable rules:
 Multi* that drop to one member at remap/despike collapse to the single
@@ -78,6 +81,7 @@ mixed batch (parity is the correctness contract).
 from __future__ import annotations
 
 import os
+from math import isqrt
 
 import numpy as np
 import pandas as pd
@@ -86,18 +90,16 @@ from .wkb import Ragged, _cumsum0, _ranges, concat_ragged, ragged_of, \
     read_ragged, wkb_to_geom
 from .remap import remap_geometry, shift_geom as _shift, metatile_frame, \
     remap_arrays, round_half_away
-from .rectfast import axis_rect, rect_lane, tile_pairs, tile_window
-from .simplify import remove_unneeded_points, simplify, \
-    remove_duplicate_points
-from .clip import clip_to_bbox, clip_geometry_to_tiles, \
-    _clip_ring_to_border, _clip_linestring_to_border, \
-    XMIN, XMAX, YMIN, YMAX
+from .rectfast import axis_rect, tile_pairs, tile_window
+from .simplify import remove_unneeded_points, simplify
+from .clip import clip_to_bbox, clip_geometry_to_tiles
 from .validity import make_valid, is_valid, ensure_polygon_orientation, \
     segment_pairs
 
-# beyond this magnitude the int64 products in the despike/validity
-# screens could overflow; such features (world-spanning geometry deep in
-# the pyramid) take the scalar lane's exact Python bigints
+# beyond this magnitude the int64 products of the despike/validity
+# screens, the RDP and the clip's crossing ladder could overflow; such
+# features (world-spanning geometry deep in the pyramid) take the scalar
+# lane's exact Python bigints
 _COORD_LIMIT = 1 << 26
 
 _LINE, _POLY = 1, 2  # role codes per feature type
@@ -157,13 +159,14 @@ def _drop(st, ring_alive, pt_keep=None):
 
 
 def _lane_feats(st, role_arr, multi_f):
-    """The lane state's features as a Ragged, one row per batch row,
-    coded with the type the scalar chain carries (rings of a feature
-    stay adjacent through every compaction)."""
-    return Ragged(_piece_code(role_arr == _LINE, multi_f), st["u"],
-                  st["v"], st["off"], st["ring_int"],
-                  _cumsum0(np.bincount(st["ring_feat"],
-                                       minlength=len(multi_f))))
+    """(rows, Ragged): the batch rows the lane state still holds and
+    their features, coded with the type the scalar chain carries (rings
+    of a feature stay adjacent and in row order through every
+    compaction)."""
+    rows, nring = np.unique(st["ring_feat"], return_counts=True)
+    return rows, Ragged(
+        _piece_code(role_arr[rows] == _LINE, multi_f[rows]), st["u"],
+        st["v"], st["off"], st["ring_int"], _cumsum0(nring))
 
 
 def _with_exteriors(ring_ok, ring_int):
@@ -261,97 +264,44 @@ def _despike_flags(u, v, off):
 
 # ------------------------------------------------------------------- RDP
 
-def _rdp_keep(xs, ys, e):
-    """Exact twin of simplify._rdp on int64 arrays: returns keep mask.
-    Caller guarantees |coord| < 2^26 and despiked input (no span is
-    fully collinear, so max_num > 0)."""
-    n = len(xs)
-    keep = np.ones(n, dtype=bool)
-    if n <= 2:
-        return keep
-    stack = [(0, n - 1)]
-    while stack:
-        s, t = stack.pop()
-        if t - s <= 1:
-            continue
-        x1 = int(xs[s]); y1 = int(ys[s])
-        x2 = int(xs[t]); y2 = int(ys[t])
-        seg_x = xs[s + 1:t]
-        seg_y = ys[s + 1:t]
-        if x1 == x2 and y1 == y2:
-            num = (seg_x - x1) ** 2 + (seg_y - y2) ** 2
-            rel = len(num) - 1 - int(np.argmax(num[::-1]))
-            max_num = int(num[rel])
-            wipe = max_num < e
-        else:
-            dx = x2 - x1
-            dy = y2 - y1
-            exsy = x2 * y1
-            eysx = y2 * x1
-            num = np.abs((dy * seg_x + exsy) - (dx * seg_y + eysx))
-            rel = len(num) - 1 - int(np.argmax(num[::-1]))
-            max_num = int(num[rel])
-            this_e = e * (dx * dx + dy * dy)
-            # truncating division matches Rust i64 `/` (operands >= 0)
-            wipe = (max_num < this_e
-                    and max_num < (this_e // max_num + 1)
-                    and max_num * max_num < this_e)
-        index = rel + s + 1
-        if wipe:
-            keep[s + 1:t] = False
-        else:
-            stack.append((s, index))
-            stack.append((index, t))
-    return keep
-
-
-def _rdp_keep_py(xs, ys, e):
-    """Pure-Python twin of _rdp_keep for SMALL rings, where per-call
-    numpy overhead exceeds the scan cost. xs/ys are Python int lists;
-    arithmetic is exact (bigints). Returns a keep list."""
-    n = len(xs)
-    keep = [True] * n
-    if n <= 2:
-        return keep
-    stack = [(0, n - 1)]
-    while stack:
-        s, t = stack.pop()
-        if t - s <= 1:
-            continue
-        x1, y1 = xs[s], ys[s]
-        x2, y2 = xs[t], ys[t]
-        best_num = -1
-        best_i = s
-        if x1 == x2 and y1 == y2:
-            for i in range(s + 1, t):
-                num = (xs[i] - x1) ** 2 + (ys[i] - y2) ** 2
-                if num >= best_num:
-                    best_num = num
-                    best_i = i
-            wipe = best_num < e
-        else:
-            dx = x2 - x1
-            dy = y2 - y1
-            exsy = x2 * y1
-            eysx = y2 * x1
-            for i in range(s + 1, t):
-                num = (dy * xs[i] + exsy) - (dx * ys[i] + eysx)
-                if num < 0:
-                    num = -num
-                if num >= best_num:
-                    best_num = num
-                    best_i = i
-            this_e = e * (dx * dx + dy * dy)
-            wipe = (best_num < this_e
-                    and best_num < (this_e // best_num + 1)
-                    and best_num * best_num < this_e)
-        if wipe:
-            for i in range(s + 1, t):
-                keep[i] = False
-        else:
-            stack.append((s, best_i))
-            stack.append((best_i, t))
-    return keep
+def _rdp_keep(u, v, off, rings, e):
+    """Exact twin of simplify._rdp over the rings `rings` of (u, v, off)
+    at once (e = epsilon**2): returns the keep mask over vertices. Each
+    pass walks every open span (s, t) of every ring; its farthest
+    interior vertex (the last one on ties, _rdp's tuple compare) splits
+    it, or its interior is wiped. _rdp's ladder `max < this_e and max <
+    this_e // max + 1 and max**2 < this_e`: the second clause is
+    max**2 <= this_e, so the third only decides where it holds, and
+    every product is exact in int64 under the lane's coordinate guard.
+    Despiked input has no all-collinear span, so max > 0."""
+    keep = np.ones(len(u), dtype=bool)
+    s, t = off[rings], off[rings + 1] - 1
+    while True:
+        s, t = s[t - s > 1], t[t - s > 1]
+        if not len(s):
+            return keep
+        m = t - s - 1
+        first = _cumsum0(m)[:-1]
+        i = _ranges(s + 1, m)
+        sp = np.repeat(np.arange(len(s)), m)
+        x1, y1, x2, y2 = u[s], v[s], u[t], v[t]
+        dx, dy = x2 - x1, y2 - y1
+        same = (dx == 0) & (dy == 0)
+        px, py = u[i], v[i]
+        num = np.where(same[sp],
+                       (px - x1[sp]) ** 2 + (py - y2[sp]) ** 2,
+                       np.abs((dy[sp] * px + (x2 * y1)[sp])
+                              - (dx[sp] * py + (y2 * x1)[sp])))
+        top = np.maximum.reduceat(num, first)
+        at = np.maximum.reduceat(np.where(num == top[sp], i, -1), first)
+        this_e = e * (dx * dx + dy * dy)
+        sq = top <= this_e // np.maximum(top, 1)
+        wipe = np.where(same, top < e,
+                        (top < this_e) & sq
+                        & (np.where(sq, top, 0) ** 2 < this_e))
+        keep[_ranges(s[wipe] + 1, m[wipe])] = False
+        s, t, at = s[~wipe], t[~wipe], at[~wipe]
+        s, t = np.concatenate([s, at]), np.concatenate([at, t])
 
 
 # ------------------------------------------------------- validity screen
@@ -434,149 +384,173 @@ def _wrapped_area_sign(u, v, off):
     return np.sign(wrapped), safe
 
 
-# -------------------------------------------------- bbox-shortcut slice
-#
-# The scalar quadtree (_slice_box) re-walks every coordinate of the
-# geometry at every recursion node even when a cut leaves it untouched.
-# These helpers carry a bbox per ring so all-inside / all-outside
-# half-space decisions are O(1); the exact scalar ring/linestring clip
-# runs ONLY when a border actually straddles a ring's bbox (a half-space
-# is convex, so the bbox tests are exact, not heuristic). Member
-# collapse typing is reproduced: lines re-collapse by count at every
-# materialization (clip collapses MultiLineString-of-1 at each border),
-# polygons carry the incoming Multi-ness (clip never collapses
-# MultiPolygon-of-1).
+# ------------------------------------------------------ clip and slice
 
-def _bbox_of(pts):
-    xs, ys = zip(*pts)  # C-level transpose; 2x the two list comps
-    return (min(xs), min(ys), max(xs), max(ys))
+def _tdiv(a, b):
+    """types.tdiv (division truncating toward zero) on int64 arrays."""
+    q = a // b
+    return q + ((q < 0) & (q * b != a))
 
 
-def _bbox_vs_border(bbox, border):
-    """-1 fully outside, 1 fully inside, 0 straddles (exact)."""
-    kind, val = border
-    mnx, mny, mxx, mxy = bbox
-    if kind == XMAX:
-        return 1 if mxx <= val else (-1 if mnx > val else 0)
-    if kind == XMIN:
-        return 1 if mnx >= val else (-1 if mxx < val else 0)
-    if kind == YMAX:
-        return 1 if mxy <= val else (-1 if mny > val else 0)
-    return 1 if mny >= val else (-1 if mxy < val else 0)
+def _clip(u, v, off, ring, on_y, le, val):
+    """Clip every part p of flat (u, v, off) to its own border at once:
+    keep y (on_y[p]) or x <= val[p] (le[p]) or >= val[p]. Rings
+    (ring[p]) follow clip._clip_ring_to_border, lines
+    clip._clip_linestring_to_border, as per-vertex masks; crossings are
+    clip.border_intersection's truncating ladder (exact in int64 under
+    the lane's coordinate guard). Parts must be non-empty. Returns
+    (u, v, off, src), src[k] the input part of output part k: a line may
+    leave several parts, a ring one or none (interior rings are not
+    tied to their exterior here)."""
+    n = _sizes(off)
+    p = np.repeat(np.arange(len(n)), n)
+    rv, yv, bv = ring[p], on_y[p], val[p]
+    w = np.where(yv, v, u)
+    ins = np.where(le[p], w <= bv, w >= bv) & ~(rv & (n[p] < 3))
+    last = np.zeros(len(u), dtype=bool)
+    last[off[1:] - 1] = True
+    nxt = np.roll(ins, -1)
+    # segment j -> j + 1 emits its crossing where the flags differ; a
+    # line leaving the border from a vertex on it does not
+    cross = ~last & (ins != nxt) & (rv | ~ins | (w != bv))
+    # a line breaks after an exit, at two outside vertices in a row and
+    # at its end
+    brk = last | (~rv & ((cross & ins) | (~ins & ~nxt)))
+    # a ring's last vertex is replaced by its first emitted one
+    close = rv & last
+    slot = np.empty(2 * len(u), dtype=bool)
+    slot[0::2] = ins | close
+    slot[1::2] = cross
+    xs = np.repeat(u, 2)
+    ys = np.repeat(v, 2)
+    c = np.flatnonzero(cross)
+    o = np.where(yv, u, v)
+    a, b, d = o[c + 1] - o[c], bv[c] - w[c], w[c + 1] - w[c]
+    delta = _tdiv(a, d) * b
+    delta = np.where(delta == 0, _tdiv(b, d) * a, delta)
+    delta = np.where(delta == 0, _tdiv(a * b, d), delta)
+    xo = o[c] + delta
+    xs[2 * c + 1] = np.where(yv[c], xo, bv[c])
+    ys[2 * c + 1] = np.where(yv[c], bv[c], xo)
+    sel = np.flatnonzero(slot)
+    g = (np.cumsum(brk) - brk)[sel >> 1]
+    xs, ys = xs[sel], ys[sel]
+    start = np.flatnonzero(np.r_[True, g[1:] != g[:-1]]) if len(g) else g
+    cnt = np.diff(np.r_[start, len(g)])
+    cl = np.flatnonzero(close[sel >> 1])
+    at = start[np.repeat(np.arange(len(start)), cnt)[cl]]
+    xs[cl], ys[cl] = xs[at], ys[at]
+    ok = cnt >= 2
+    keep = np.repeat(ok, cnt)
+    return (xs[keep], ys[keep], _cumsum0(cnt[ok]),
+            p[sel[start[ok]] >> 1])
 
 
-def _clip_boxed(is_line, members, border):
-    """members: lines -> [(pts, bbox)]; polys -> [[(ring, bbox), ...]].
-    Returns the clipped members list ([] == geometry gone)."""
-    out = []
-    if is_line:
-        for pts, bb in members:
-            s = _bbox_vs_border(bb, border)
-            if s == 1:
-                out.append((pts, bb))
-            elif s == 0:
-                r = _clip_linestring_to_border(pts, border)
-                if r is None:
-                    continue
-                if r[0] == "LineString":
-                    out.append((r[1], _bbox_of(r[1])))
-                else:
-                    for l in r[1]:
-                        out.append((l, _bbox_of(l)))
-        return out
-    for rings in members:
-        ext, ebb = rings[0]
-        s = _bbox_vs_border(ebb, border)
-        if s == -1:
-            continue
-        if s == 0:
-            ext = _clip_ring_to_border(ext, border)
-            if ext is None:
-                continue
-            ebb = _bbox_of(ext)
-        newp = [(ext, ebb)]
-        for ring, rbb in rings[1:]:
-            si = _bbox_vs_border(rbb, border)
-            if si == 1:
-                newp.append((ring, rbb))
-            elif si == 0:
-                r = _clip_ring_to_border(ring, border)
-                if r is not None:
-                    newp.append((r, _bbox_of(r)))
-        out.append(newp)
-    return out
+def _clip_pieces(ps, on_y, le, val):
+    """Pieces ps (a Ragged of line and polygon pieces) each clipped to
+    its own border (on_y, le[i], val[i], as _clip): an interior ring dies
+    with its exterior and a piece with no part left is dropped. A line
+    piece's type follows its part count, a polygon piece keeps its
+    Multi-ness (clip.clip_to_border). Returns (Ragged, source piece of
+    each)."""
+    pp = np.repeat(np.arange(len(ps.code)), np.diff(ps.row_off))
+    poly = (ps.code == 3) | (ps.code == 6)
+    u, v, off, src = _clip(ps.xs, ps.ys, ps.ring_off, poly[pp],
+                           np.full(len(pp), on_y), le[pp], val[pp])
+    nr = len(ps.ring_int)
+    ext = np.maximum.accumulate(np.where(ps.ring_int, -1, np.arange(nr)))
+    alive = np.zeros(nr, dtype=bool)
+    alive[src] = True
+    ok = alive[ext[src]]
+    size = _sizes(off)
+    u, v = u[np.repeat(ok, size)], v[np.repeat(ok, size)]
+    src = src[ok]
+    piece = pp[src]
+    first = np.flatnonzero(np.r_[True, piece[1:] != piece[:-1]]) \
+        if len(piece) else piece
+    keep = piece[first]
+    row_off = np.r_[first, len(piece)]
+    code = np.where(poly[keep], ps.code[keep],
+                    np.where(np.diff(row_off) > 1, 5, 2)).astype(np.uint8)
+    return Ragged(code, u, v, _cumsum0(size[ok]), ps.ring_int[src],
+                  row_off), keep
 
 
-def _slice_boxed(is_line, members, metatile_scale, tile_x0, tile_y0,
-                 x0, y0, size, buffer):
-    """Exact twin of clip._slice_box over boxed members."""
-    if metatile_scale == 1:
-        return [((tile_x0, tile_y0), members)]
-    results = []
-    half = size // 2
-    tile_half = metatile_scale // 2
-
-    left = _clip_boxed(is_line, members, (XMAX, x0 + half + buffer))
-    if left:
-        topleft = _clip_boxed(is_line, left, (YMAX, y0 + half + buffer))
-        if topleft:
-            results.extend(_slice_boxed(is_line, topleft, tile_half,
-                                        tile_x0, tile_y0, x0, y0, half,
-                                        buffer))
-        botleft = _clip_boxed(is_line, left, (YMIN, y0 + half - buffer))
-        if botleft:
-            results.extend(_slice_boxed(is_line, botleft, tile_half,
-                                        tile_x0, tile_y0 + tile_half,
-                                        x0, y0 + half, half, buffer))
-    right = _clip_boxed(is_line, members, (XMIN, x0 + half - buffer))
-    if right:
-        topright = _clip_boxed(is_line, right,
-                               (YMAX, y0 + half + buffer))
-        if topright:
-            results.extend(_slice_boxed(is_line, topright, tile_half,
-                                        tile_x0 + tile_half, tile_y0,
-                                        x0 + half, y0, half, buffer))
-        botright = _clip_boxed(is_line, right,
-                               (YMIN, y0 + half - buffer))
-        if botright:
-            results.extend(_slice_boxed(is_line, botright, tile_half,
-                                        tile_x0 + tile_half,
-                                        tile_y0 + tile_half,
-                                        x0 + half, y0 + half, half,
-                                        buffer))
-    return results
+def _bounds(ps, on_y):
+    """Per piece of ps (non-empty) its (min, max) x, or y when on_y."""
+    w = ps.ys if on_y else ps.xs
+    at = ps.ring_off[ps.row_off[:-1]]
+    return np.minimum.reduceat(w, at), np.maximum.reduceat(w, at)
 
 
-def _boxed_to_geom(is_line, is_mp, members):
-    """Boxed members -> plain geometry tuple with the type the scalar
-    recursion would carry (lines collapse by count; polys keep is_mp)."""
-    if is_line:
-        if len(members) == 1:
-            return ("LineString", members[0][0])
-        return ("MultiLineString", [m[0] for m in members])
-    polys = [[ring for ring, _bb in rings] for rings in members]
-    if len(polys) == 1 and not is_mp:
-        return ("Polygon", polys[0])
-    return ("MultiPolygon", polys)
+def _cut(ps, meta, sel, on_y, le, val):
+    """The copies `sel` of ps's pieces (meta: their rows of (batch row,
+    tile x, tile y, tiles per node side)), copy k clipped to border
+    (on_y, le[k], val[k]): a copy wholly inside its border passes
+    unchanged, a copy wholly outside is dropped, and only the ones whose
+    bbox straddles it are clipped. Returns (Ragged, meta) of the
+    survivors, in no particular order."""
+    lo, hi = (b[sel] for b in _bounds(ps, on_y))
+    inside = np.where(le, hi <= val, lo >= val)
+    part = ~inside & ~np.where(le, lo > val, hi < val)
+    got, src = _clip_pieces(ps.take(sel[part]), on_y, le[part], val[part])
+    return (concat_ragged([ps.take(sel[inside]), got]),
+            np.concatenate([meta[inside], meta[part][src]]))
 
 
-def _materialize_boxed(feats, f, ring_bbs):
-    """Feature f of the lane's feature Ragged as boxed members (each
-    ring with its bbox) + is_line flag."""
-    typ, data = feats.geom(f)
-    r = iter(range(int(feats.row_off[f]), int(feats.row_off[f + 1])))
-    members = [data] if typ in ("LineString", "Polygon") else data
-    if typ in ("LineString", "MultiLineString"):
-        return True, [(pts, ring_bbs[next(r)]) for pts in members]
-    return False, [[(ring, ring_bbs[next(r)]) for ring in rings]
-                   for rings in members]
+def _slice(ps, meta, buf):
+    """clip._slice_box breadth-first over every piece at once: per
+    quadtree level an x cut, then a y cut. A piece is copied to each
+    child its bbox reaches; the left or top child keeps <= mid + buf,
+    the right or bottom one >= mid - buf, and a child with no part left
+    is dropped. meta as _cut's; pieces whose node is one tile pass.
+    A piece whose bbox reaches one tile (tile_window) is wholly inside
+    every cut on its path, so it takes that tile without a cut."""
+    (xl, xh), (yl, yh) = (tile_window(*_bounds(ps, on_y), buf, meta[:, 3])
+                          for on_y in (False, True))
+    one = (xl == xh) & (yl == yh)
+    meta[one, 1], meta[one, 2], meta[one, 3] = xl[one], yl[one], 1
+    while len(meta) and (meta[:, 3] > 1).any():
+        for on_y, col in ((False, 1), (True, 2)):
+            lo, hi = _bounds(ps, on_y)
+            nt = meta[:, 3]
+            act = nt > 1
+            mid = meta[:, col] * 4096 + nt * 2048
+            left = np.flatnonzero(~act | (lo <= mid + buf))
+            right = np.flatnonzero(act & (hi >= mid - buf))
+            moved = meta[right].copy()
+            moved[:, col] += nt[right] // 2
+            ps, meta = _cut(
+                ps, np.concatenate([meta[left], moved]),
+                np.concatenate([left, right]), on_y,
+                np.r_[np.ones(len(left), bool), np.zeros(len(right), bool)],
+                np.concatenate([np.where(act[left], mid[left] + buf,
+                                         np.iinfo(np.int64).max),
+                                mid[right] - buf]))
+            if not len(meta):
+                break
+        meta[:, 3] = np.maximum(meta[:, 3] // 2, 1)
+    return ps, meta
+
+
+def _dedup(ps):
+    """simplify.remove_duplicate_points per part of ps: consecutive
+    duplicates collapse to the first (the trailing rule of
+    _dedup_linestring never fires after that)."""
+    u, v, off = ps.xs, ps.ys, ps.ring_off
+    keep = np.ones(len(u), dtype=bool)
+    keep[1:] = (u[1:] != u[:-1]) | (v[1:] != v[:-1])
+    keep[off[:-1]] = True
+    return ps._replace(xs=u[keep], ys=v[keep], ring_off=_cumsum0(
+        np.add.reduceat(keep.astype(np.int64), off[:-1])))
 
 
 # ---------------------------------------------------------------- router
 
-# rows per rect/ragged lane call: the lanes' temporaries scale with the
-# chunk, and keeping them cache-resident measured 1.5x faster on a
-# 40k-feature concave batch and ~1.3x on 20k boxes (identical output)
+# rows per ragged lane call: the lane's temporaries scale with the
+# chunk; at 1024/4096/16384/65536 rows a 20k-box z0-z8 batch took
+# 3.9/3.0/2.9/3.1 s and a 6k concave z8 batch 1.17/1.11/1.13/1.15 s
+# (4 cores, identical output)
 _CHUNK_FEATURES = 4096
 
 
@@ -590,19 +564,14 @@ def process_general(pdf, prop_names, buffer_units, metatile_scale,
     once, and each row routed from the reader's arrays:
 
     * code 1 (Point) -> the points kernel (_points_lane);
-    * a one-ring Polygon of 5 vertices, first and last bit-identical,
-      edges axis-parallel with alternating axes (axis_rect_rows), when
-      epsilon == 8 -> the rect kernel (rectfast.rect_lane, whose
-      simplify wipe is derived for eps2 = 64);
-    * every other line/polygon-family row -> the ragged lane
-      (_vector_lane);
+    * every line/polygon-family row -> the ragged lane (_vector_lane);
     * MultiPoints (code 4) and the rows the reader refuses (code 0:
       big-endian, EWKB, malformed) -> the scalar chain.
 
     SPARK_GRAFT_FORCE_SCALAR_GEOM=1 sends every row to the scalar chain,
-    the reference the lanes are pinned against. The rect and ragged
-    lanes run in _CHUNK_FEATURES-row chunks; the points lane runs
-    whole-batch (chunking it at 4096 measured 0.79 -> 1.06 us/row).
+    the reference the lanes are pinned against. The ragged lane runs in
+    _CHUNK_FEATURES-row chunks; the points lane runs whole-batch
+    (chunking it at 4096 measured 0.79 -> 1.06 us/row).
 
     Returns (frame, rag) or None when no piece is left: frame holds
     (zoom, x, y, feature_id, props...) per piece, rag (a wkb.Ragged) its
@@ -643,17 +612,9 @@ def process_general(pdf, prop_names, buffer_units, metatile_scale,
         at = rag.ring_off[rag.row_off[pts]]
         out.add(*_points_lane(fr, pts, rag.xs[at], rag.ys[at],
                               buffer_units))
-    ragged = _ROLE[rag.code] != 0
-    if epsilon == 8:
-        rects, x, y = axis_rect_rows(rag)
-        ragged[rects] = False
-        for s in range(0, len(rects), _CHUNK_FEATURES):
-            c = slice(s, s + _CHUNK_FEATURES)
-            out.add(*rect_lane(fr, rects[c], x[c], y[c], buffer_units,
-                               global_maxzoom))
     for i in np.flatnonzero((rag.code == 0) | (rag.code == 4)).tolist():
         scalar_row(i)
-    rows = np.flatnonzero(ragged)
+    rows = np.flatnonzero(_ROLE[rag.code] != 0)
     for s in range(0, len(rows), _CHUNK_FEATURES):
         _vector_lane(_lane_state(rag, rows[s:s + _CHUNK_FEATURES]), fr,
                      do_simp, buffer_units, epsilon, out, scalar_row)
@@ -750,8 +711,10 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
     fpt = np.repeat(ring_feat, sizes)
     vx, vy = remap_arrays(fr, fpt, st["px"], st["py"])
 
+    # RDP's this_e = epsilon**2 * (dx**2 + dy**2) must fit int64 too
+    lim = min(_COORD_LIMIT, isqrt((1 << 60) // max(epsilon * epsilon, 1)))
     finite = (np.isfinite(vx) & np.isfinite(vy)
-              & (np.abs(vx) < _COORD_LIMIT) & (np.abs(vy) < _COORD_LIMIT))
+              & (np.abs(vx) < lim) & (np.abs(vy) < lim))
     bad_feats = set(fpt[~finite].tolist()) if not finite.all() else set()
     u = round_half_away(np.where(finite, vx, 0.0))
     v = round_half_away(np.where(finite, vy, 0.0))
@@ -798,140 +761,51 @@ def _vector_lane(st, fr, do_simp, buffer_units, epsilon, out, scalar_row):
     # ---- despike screen ----
     spike = _despike_flags(st["u"], st["v"], st["off"])
     spike_feats = np.unique(ring_feat[spike])
-    feats = _lane_feats(st, role_arr, multi_f)
-    for f in spike_feats.tolist():
-        if alive_f[f]:
+    if len(spike_feats):
+        rows, feats = _lane_feats(st, role_arr, multi_f)
+        for k in np.flatnonzero(np.isin(rows, spike_feats)).tolist():
+            f = int(rows[k])
             out.chain(f, _scalar_chain(
-                feats.geom(f), "unneeded", int(size_mt[f]), int(x0t[f]),
+                feats.geom(k), "unneeded", int(size_mt[f]), int(x0t[f]),
                 int(y0t[f]), int(extent_i[f]), buffer_units,
                 bool(do_simp[f]), epsilon))
             alive_f[f] = False
-    if len(spike_feats):
         st = _drop(st, alive_f[ring_feat])
         ring_feat = st["ring_feat"]
         if len(ring_feat) == 0:
             return
 
-    # ---- RDP (per ring, exact; lines never die here, rings can) ----
-    off = st["off"]
-    sizes = _sizes(off)
-    is_line_r = role_arr[ring_feat] == _LINE
+    # ---- RDP (exact; lines never die here, rings can) ----
     need = do_simp[ring_feat]
     if need.any():
-        e2 = epsilon * epsilon
-        u, v = st["u"], st["v"]
-        keeppt = np.ones(len(u), dtype=bool)
-        ring_ok = np.ones(len(sizes), dtype=bool)
-        for r in np.flatnonzero(need):
-            s, e = int(off[r]), int(off[r + 1])
-            if e - s <= 2:
-                continue
-            if e - s < 64:
-                # small rings: numpy per-call overhead loses to a plain
-                # int loop (exact either way); boxed only per-slice —
-                # a whole-chunk tolist would allocate millions of ints
-                # even when every eligible ring takes the numpy path
-                km = _rdp_keep_py(u[s:e].tolist(), v[s:e].tolist(), e2)
-                cnt = sum(km)
-            else:
-                km = _rdp_keep(u[s:e], v[s:e], e2)
-                cnt = int(km.sum())
-            keeppt[s:e] = km
-            # endpoints always kept => closure preserved for rings
-            ring_ok[r] = cnt >= 2 if is_line_r[r] else cnt >= 4
+        keeppt = _rdp_keep(st["u"], st["v"], st["off"], np.flatnonzero(need),
+                           epsilon * epsilon)
+        cnt = np.add.reduceat(keeppt.astype(np.int64), st["off"][:-1])
+        # endpoints always kept => closure preserved for rings
+        ring_ok = cnt >= np.where(role_arr[ring_feat] == _LINE, 2, 4)
         st = _drop(st, _with_exteriors(ring_ok, st["ring_int"]), keeppt)
         ring_feat = st["ring_feat"]
-        # refresh feature aliveness (NO multi re-collapse at RDP)
-        is_line_r = role_arr[ring_feat] == _LINE
-        n_memb2 = np.bincount(
-            ring_feat[is_line_r | ~st["ring_int"]], minlength=F)
-        alive_f = alive_f & (n_memb2 > 0)
         if len(ring_feat) == 0:
             return
 
-    # ---- clip + slice screens on the per-feature bbox ----
-    off = st["off"]
-    u, v = st["u"], st["v"]
-    feat_ids, first_ring = np.unique(ring_feat, return_index=True)
-    f_lo = off[first_ring]
-    starts = np.minimum(f_lo, len(u) - 1)
-    umin = np.minimum.reduceat(u, starts)
-    umax = np.maximum.reduceat(u, starts)
-    vmin = np.minimum.reduceat(v, starts)
-    vmax = np.maximum.reduceat(v, starts)
-
-    buf = buffer_units
-    hi = extent_i[feat_ids] + buf
-    live = alive_f[feat_ids]
-    gone = (umax < -buf) | (umin > hi) | (vmax < -buf) | (vmin > hi)
-    inside = (umin >= -buf) & (umax <= hi) & (vmin >= -buf) & (vmax <= hi)
-    alive_f[feat_ids[live & gone]] = False  # fully clipped away (exact)
-    sm = size_mt[feat_ids]
-    txl, txh = tile_window(umin, umax, buf, sm)
-    tyl, tyh = tile_window(vmin, vmax, buf, sm)
-    one = (txl == txh) & (tyl == tyh)
-    single = live & inside & one
-    fb_clip = feat_ids[live & ~gone & ~inside].tolist()
-    fb_slice = feat_ids[live & inside & ~one].tolist()
-
-    # fallback clip/slice: boxed twins of the scalar machinery (bbox
-    # shortcuts, O(1) per untouched ring per cut); per-piece validity
-    # work rejoins the batched certificate below (the per-pair Python
-    # intersection kernel was the dominant cost of the old fallback)
-    pieces_extra = []  # (feat, tx_abs, ty_abs, geom_tuple)
-    if fb_clip or fb_slice:
-        # per-ring bboxes from the arrays (cheap reduceat)
-        rstarts = np.minimum(off[:-1], len(u) - 1)
-        feats = _lane_feats(st, role_arr, multi_f)
-        rbb = list(zip(np.minimum.reduceat(u, rstarts).tolist(),
-                       np.minimum.reduceat(v, rstarts).tolist(),
-                       np.maximum.reduceat(u, rstarts).tolist(),
-                       np.maximum.reduceat(v, rstarts).tolist()))
-
-        def slice_feature(f, is_line, members):
-            is_mp = bool(multi_f[f]) and not is_line
-            sm = int(size_mt[f])
-            for (tx, ty), mm in _slice_boxed(
-                    is_line, members, sm, int(x0t[f]), int(y0t[f]),
-                    0, 0, sm * 4096, buf):
-                pg = remove_duplicate_points(
-                    _boxed_to_geom(is_line, is_mp, mm))
-                pieces_extra.append((f, tx, ty, pg))
-
-        for f in fb_clip:
-            is_line, members = _materialize_boxed(feats, f, rbb)
-            alive_f[f] = False
-            hi = int(extent_i[f]) + buf
-            for border in ((XMIN, -buf), (XMAX, hi),
-                           (YMIN, -buf), (YMAX, hi)):
-                members = _clip_boxed(is_line, members, border)
-                if not members:
-                    break
-            if members:
-                slice_feature(f, is_line, members)
-        for f in fb_slice:
-            is_line, members = _materialize_boxed(feats, f, rbb)
-            alive_f[f] = False
-            slice_feature(f, is_line, members)
-
-    if single.any():
-        st = _drop(st, alive_f[ring_feat])
-        ring_feat = st["ring_feat"]
-        tile_x = np.zeros(F, np.int64)
-        tile_y = np.zeros(F, np.int64)
-        tile_x[feat_ids] = x0t[feat_ids] + txl
-        tile_y[feat_ids] = y0t[feat_ids] + tyl
-        feat_ids2, nring = np.unique(ring_feat, return_counts=True)
-        ps = Ragged(_piece_code(role_arr[feat_ids2] == _LINE,
-                                multi_f[feat_ids2]),
-                    st["u"], st["v"], st["off"], st["ring_int"],
-                    _cumsum0(nring))
-        _validate_emit(ps, feat_ids2, tile_x[feat_ids2], tile_y[feat_ids2],
-                       fr, buffer_units, epsilon, out)
-    if pieces_extra:
-        f, tx, ty, geoms = zip(*pieces_extra)
-        _validate_emit(ragged_of(geoms), np.array(f), np.array(tx),
-                       np.array(ty), fr, buffer_units, epsilon, out)
+    # ---- clip to the buffered metatile, slice, dedup ----
+    rows, ps = _lane_feats(st, role_arr, multi_f)
+    meta = np.stack([rows, np.zeros_like(rows), np.zeros_like(rows),
+                     size_mt[rows]], axis=1)
+    for on_y, le in ((False, False), (False, True), (True, False),
+                     (True, True)):
+        val = extent_i[meta[:, 0]] + buffer_units if le else \
+            np.full(len(meta), -buffer_units)
+        ps, meta = _cut(ps, meta, np.arange(len(meta)), on_y,
+                        np.full(len(meta), le), val)
+        if not len(meta):
+            return
+    ps, meta = _slice(ps, meta, buffer_units)
+    if len(meta):
+        feat = meta[:, 0]
+        _validate_emit(_dedup(ps), feat, x0t[feat] + meta[:, 1],
+                       y0t[feat] + meta[:, 2], fr, buffer_units, epsilon,
+                       out)
 
 
 def _validate_emit(ps, feat, txa, tya, fr, buffer_units, epsilon, out):
@@ -967,7 +841,12 @@ def _validate_emit(ps, feat, txa, tya, fr, buffer_units, epsilon, out):
         (sizes < 2) | ((sizes == 2) & (distinct < 2)),
         ~closed | (distinct < 4))
 
-    xbad = _self_intersection_flags(u, v, off, poly_r & (sizes >= 5))
+    check = poly_r & (sizes >= 5)
+    # an axis rect's only bbox-overlapping pairs meet end to end
+    r5 = np.flatnonzero(check & (sizes == 5))
+    at = off[r5][:, None] + np.arange(4)
+    check[r5[axis_rect(u[at], v[at])]] = False
+    xbad = _self_intersection_flags(u, v, off, check)
     sign, safe = _wrapped_area_sign(u, v, off)
     wind_bad = poly_r & (~safe | np.where(ring_int, sign != 1,
                                           sign != -1))
@@ -987,23 +866,25 @@ def _validate_emit(ps, feat, txa, tya, fr, buffer_units, epsilon, out):
         # endpoint and classify END_TO_END — but make_valid's dissolve
         # SPLITS a pinched ring into multiple polygons, which the
         # reverse-in-place shortcut below cannot reproduce. Route
-        # pinched rings to the scalar machinery instead.
-        for r in np.flatnonzero(only_wind).tolist():
-            s, e = int(off[r]), int(off[r + 1])
-            pts = u[s:e - 1] + 1j * v[s:e - 1]  # closing vertex excluded
-            if len(np.unique(pts)) != e - 1 - s:
-                only_wind[r] = False
-    if only_wind.any():
+        # pinched rings to the scalar machinery instead: one lexsort
+        # over (ring, u, v), closing vertices excluded.
+        r = np.flatnonzero(only_wind)
+        at = _ranges(off[r], sizes[r] - 1)
+        rr = np.repeat(r, sizes[r] - 1)
+        o = np.lexsort((v[at], u[at], rr))
+        rr, uo, vo = rr[o], u[at][o], v[at][o]
+        pinch = ((rr[1:] == rr[:-1]) & (uo[1:] == uo[:-1])
+                 & (vo[1:] == vo[:-1]))
+        only_wind[rr[1:][pinch]] = False
         nring_of = np.bincount(ring_piece, minlength=P)
         fixable = only_wind & (nring_of[ring_piece] == 1)
-        if fixable.any():
-            for r in np.flatnonzero(fixable).tolist():
-                s, e = int(off[r]), int(off[r + 1])
-                u[s + 1:e - 1] = u[s + 1:e - 1][::-1].copy()
-                v[s + 1:e - 1] = v[s + 1:e - 1][::-1].copy()
-            ring_bad = ring_bad & ~fixable
-            p_force_multi = np.bincount(ring_piece[fixable],
-                                        minlength=P) > 0
+        # reverse each fixable ring in place between its fixed ends
+        r = np.flatnonzero(fixable)
+        at = _ranges(off[r] + 1, sizes[r] - 2)
+        rev = np.repeat(off[r] + off[r + 1] - 1, sizes[r] - 2) - at
+        u[at], v[at] = u[rev], v[rev]
+        ring_bad = ring_bad & ~fixable
+        p_force_multi = np.bincount(ring_piece[fixable], minlength=P) > 0
 
     piece_bad = np.zeros(P, dtype=bool)
     if ring_bad.any():

@@ -21,8 +21,8 @@ operators (index.py):
   (array<long> of res*res) with map_from_entries + transform — JVM-side
   HOFs, no UDF — for sinks that want raster tiles.
 * `rects_to_wkb` turns the rectangles back into axis-rect polygon WKB,
-  the exact shape class the engine's closed-form fast path
-  (geom/rectfast.py) consumes, closing the raster -> vector -> MVT loop.
+  which the engine's ragged geometry lane (geom/batch.py) tiles like any
+  polygon, closing the raster -> vector -> MVT loop.
 
 Reference parity note: tileigi itself is vector-only (lib.rs renders
 vector tiles); raster<->vector is north-rule surface beyond the

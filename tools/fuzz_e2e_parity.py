@@ -6,8 +6,9 @@ two partitionings. This probe binds the whole pipeline together on the
 fuzz diet: for each seed it feeds the same random mixed geometry set
 (make_rand_geom's thirteen shape classes — spiky 40-300-vertex stars
 among them, whose pieces fail the certificate and take the scalar
-make_valid — plus axis boxes of both windings and simple points for the
-router's rect and points kernels) through
+make_valid — plus axis boxes of both windings, whose reversed rings
+take the ragged lane's in-place winding repair, and simple points for
+the router's points kernel) through
 `build_tiles` z0-z6 and asserts the full {(zoom,x,y): tile_md5} map is
 IDENTICAL across
 
