@@ -1017,8 +1017,9 @@ def _make_render_run(layer_specs, carry, prop_types: dict[str, dict],
     rows. When runs close, their pieces are stable-sorted into the
     canonical piece order (_PIECE_ORDER), encoded and assembled: each
     (tile, layer) is one layer message, salt only ordered its features;
-    the salt is computed here from zoom and feature_id, not shipped. No piece is written
-    as WKB. `carry` names the property columns every piece keeps.
+    the salt is computed here from zoom and feature_id, not shipped. No
+    piece is written as WKB. `carry` names the property columns every
+    piece keeps.
 
     Rows with layer_order -1 are done markers, one per finished (zoom,
     x, y) tile, and sort ahead of their metatile's feature rows, so a

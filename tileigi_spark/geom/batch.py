@@ -663,10 +663,13 @@ def _points_lane(fr, rows, xs, ys, buf):
 
 class _Pieces:
     """What every lane hands back: per piece the batch row it came from
-    and its absolute tile x/y, and the pieces as a Ragged part."""
+    and its absolute tile x/y, and the pieces as a Ragged part. The
+    scalar chain's pieces are gathered as tuples and read as one part
+    when the frame is built."""
 
     def __init__(self):
         self.parts = []
+        self.scalar = []
 
     def add(self, row, x, y, rag):
         if len(row):
@@ -676,13 +679,15 @@ class _Pieces:
 
     def chain(self, i, pieces):
         """The scalar chain's [(tx, ty, geometry tuple)] for row i."""
-        if pieces:
-            tx, ty, geoms = zip(*pieces)
-            self.add(np.full(len(pieces), i), tx, ty, ragged_of(geoms))
+        self.scalar.extend((i, tx, ty, g) for tx, ty, g in pieces)
 
     def frame(self, pdf, prop_names):
         """(frame, rag): every column gathered once by row, and the
         parts' Ragged stacked once; None without pieces."""
+        if self.scalar:
+            row, x, y, geoms = zip(*self.scalar)
+            self.add(row, x, y, ragged_of(geoms))
+            self.scalar = []
         if not self.parts:
             return None
         row, x, y, rags = zip(*self.parts)
