@@ -1,7 +1,8 @@
 """The geometry-stage router (geom/batch.py:process_general): one read of
 each batch, each row routed to the points lane, the ragged lane or the
-scalar chain from the reader's arrays. The contract is the scalar chain: a mixed batch
-must give the same sorted rows as SPARK_GRAFT_FORCE_SCALAR_GEOM=1."""
+scalar chain from the reader's arrays. The contract is the scalar chain:
+a mixed batch must give the same sorted rows as
+SPARK_GRAFT_FORCE_SCALAR_GEOM=1."""
 
 import math
 import struct
